@@ -466,77 +466,62 @@ object Graft {
       pred: org.apache.spark.sql.Column): DataFrame =
     VectorOps.filterSelectivityAudit(corpus, pred)
 
-  /** Persist the IVF index under `path` (centroids + cluster-partitioned
-    * posting lists) — build once, query many with [[annSearchIndex]].
+  /** Persist a vector index under `path` — build once, query many with
+    * [[annSearchIndex]]. `tiers`: "ivf" (centroids + cluster-partitioned
+    * raw posting lists), "pq" (codebook + 8 small codes per vector, the
+    * RAM-resident compressed tier), "both" (ivf + pq under one root, the
+    * input to the rerank route) or "ivfpq" (residual IVF-PQ, the FAISS
+    * IndexIVFPQ shape: cell pruning AND code compression).
     */
-  def annBuildIndex(corpus: DataFrame, path: String): Unit =
-    VectorOps.buildIvfIndex(corpus, path)
+  def annBuildIndex(corpus: DataFrame, path: String,
+      tiers: String = "ivf"): Unit =
+    VectorOps.buildVecIndex(corpus, path, tiers)
 
-  /** Search a persisted index without touching the corpus: probed cell ids
-    * become a static partition filter, so only those directories are read.
-    * Bit-identical to [[annIvfTopK]] on the same corpus.
+  /** The serving planner: search a persisted index without touching the
+    * corpus, routed by `tier` — "ivf" (raw probed cells, bit-identical to
+    * [[annIvfTopK]]), "pq" (code-only ADC), "rerank" (codes nominate, raw
+    * vectors rerank), "ivfpq" (residual ADC) or "auto" (best the root's
+    * layout supports). Probed cell ids become a static partition filter,
+    * so only those directories are read.
     */
   def annSearchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, k: Int = 3, probes: Int = 2,
-      excludeSelf: Boolean = true): DataFrame =
-    VectorOps.searchIvfIndex(spark, path, queries, k, probes, excludeSelf)
+      queries: DataFrame, k: Int = 3, probes: Int = 2, tier: String = "auto",
+      rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame =
+    VectorOps.searchVecIndex(spark, path, queries, k, probes, tier,
+      rerankCandidates, excludeSelf)
 
-  /** Append new vectors to a persisted index against its FROZEN centroids
-    * (stream-safe, order-independent; rebuild offline when
-    * [[graft.operators.VectorOps.ivfIncremental]] flags cell splits).
+  /** Append new vectors to every tier of a persisted index, each encoded
+    * against its FROZEN geometry (stream-safe, order-independent; rebuild
+    * offline when [[annRebuildAdvisor]] says retrain).
     */
   def annAppendIndex(batch: DataFrame, path: String): Unit =
-    VectorOps.appendToIvfIndex(batch, path)
+    VectorOps.appendToVecIndex(batch, path)
 
   /** Logical delete (right-to-be-forgotten): tombstoned ids stop being
-    * served at the next query; reclaim space with [[annCompactIndex]].
+    * served on every route at the next query; reclaim space with
+    * [[annCompactIndex]].
     */
   def annDeleteFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, ids: DataFrame): Unit =
-    VectorOps.deleteFromIvfIndex(spark, path, ids)
+    VectorOps.deleteFromVecIndex(spark, path, ids)
 
-  /** Offline compaction: rewrite posting lists minus tombstones and swap —
+  /** Offline compaction of every tier: rewrite minus tombstones and swap —
     * search results are identical before and after.
     */
   def annCompactIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    VectorOps.compactIvfIndex(spark, path)
+    VectorOps.compactVecIndex(spark, path)
 
-  /** Persist the COMPRESSED (product-quantization) index: 8 small codes
-    * per vector instead of raw floats — the RAM-resident serving tier.
+  /** Offline recenter/rebuild of every tier from the current alive corpus
+    * (the root's own raw vectors, or the source-of-truth `corpus` a lossy
+    * codes-only root needs); the result is bit-indistinguishable from a
+    * fresh build on the current data.
     */
-  def annBuildPqIndex(corpus: DataFrame, path: String): Unit =
-    VectorOps.buildPqIndex(corpus, path)
+  def annRebuildIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String, corpus: Option[DataFrame] = None): Unit =
+    VectorOps.rebuildVecIndex(spark, path, corpus)
 
-  /** ADC search over [[annBuildPqIndex]]'s stored codes — raw embeddings
-    * are never read at serving time: (q_id, neighbor_id, adc).
-    */
-  def annSearchPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int = 3): DataFrame =
-    VectorOps.searchPqIndex(spark, path, queries, k)
-
-  /** Append new vectors to a persisted PQ index, encoded against the
-    * FROZEN stored codebook (stream-safe, order-independent; retrain
-    * offline when [[annPqDriftAudit]] raises needs_retrain).
-    */
-  def annAppendPqIndex(batch: DataFrame, path: String): Unit =
-    VectorOps.appendToPqIndex(batch, path)
-
-  /** Logical delete on the PQ tier — same contract as
-    * [[annDeleteFromIndex]]; reclaim space with [[annCompactPqIndex]].
-    */
-  def annDeleteFromPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame): Unit =
-    VectorOps.deleteFromPqIndex(spark, path, ids)
-
-  /** Offline compaction of the PQ codes (rewrite minus tombstones,
-    * crash-safe swap) — search results are identical before and after.
-    */
-  def annCompactPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    VectorOps.compactPqIndex(spark, path)
-
-  /** Codebook-drift report for a persisted PQ index: build-time
+  /** Codebook-drift report for a persisted PQ tier: build-time
     * reconstruction distortion vs the corpus served now; one row with
     * needs_retrain = the drop in mean reconstruction cosine exceeding
     * `margin` — the offline-retrain trigger for the frozen codebook.
@@ -545,110 +530,26 @@ object Graft {
       path: String, corpus: DataFrame, margin: Double = 0.05): DataFrame =
     VectorOps.pqDriftAudit(spark, path, corpus, margin)
 
-  /** Offline recenter/rebuild of the IVF tier — the consumer of
-    * [[ivfIncremental]]'s needs_split signal: re-derive centroids from
-    * the current alive corpus, re-assign, crash-safe swap; the result is
-    * bit-indistinguishable from a fresh build on the current data.
+  /** Drift-to-action decision table over a persisted index root: one row
+    * per (tier, metric) — v18's 2x occupancy rule on the stored cells,
+    * v42's codebook-drift audit on the PQ tier — with integer-exact
+    * value/threshold and a keep/retrain verdict.
     */
-  def annRebuildIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    VectorOps.rebuildIvfIndex(spark, path)
-
-  /** Build BOTH persisted serving tiers (IVF raw + PQ codes) under one
-    * index root — the input to [[annSearchVecIndex]]'s routing.
-    */
-  def annBuildVecIndex(corpus: DataFrame, path: String): Unit =
-    VectorOps.buildVecIndex(corpus, path)
-
-  /** The serving planner: route a query set through the persisted index
-    * by tier — "ivf" (raw probed cells), "pq" (code-only ADC), "rerank"
-    * (codes nominate, raw vectors rerank), or "auto" (best available).
-    */
-  def annSearchVecIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int, probes: Int = 2,
-      tier: String = "auto", rerankCandidates: Int = 32,
-      excludeSelf: Boolean = true): DataFrame =
-    VectorOps.searchVecIndex(spark, path, queries, k, probes, tier,
-      rerankCandidates, excludeSelf)
-
-  /** Right-to-be-forgotten across every tier under one index root. */
-  def annDeleteFromVecIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame): Unit =
-    VectorOps.deleteFromVecIndex(spark, path, ids)
-
-  /** Persist the residual IVF-PQ composition (FAISS IndexIVFPQ shape):
-    * cell pruning AND code compression in one self-contained index root
-    * — a probed query reads only its cells' directories, stored as M
-    * small ints per vector. Own root; do not mix with
-    * [[annBuildVecIndex]] roots (the codes layouts differ).
-    */
-  def annBuildIvfPqIndex(corpus: DataFrame, path: String): Unit =
-    VectorOps.buildIvfPqIndex(corpus, path)
-
-  /** Append to a residual IVF-PQ index against its frozen two-level
-    * geometry (stream-safe, order-independent).
-    */
-  def annAppendIvfPqIndex(batch: DataFrame, path: String): Unit =
-    VectorOps.appendToIvfPqIndex(batch, path)
-
-  /** ADC search over a residual IVF-PQ index: probed-cell partition
-    * pruning + per-cell residual lookup tables; (q_id, neighbor_id, adc).
-    */
-  def annSearchIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int, probes: Int = 2): DataFrame =
-    VectorOps.searchIvfPqIndex(spark, path, queries, k, probes)
-
-  /** Logical delete from a residual IVF-PQ root: the serving-path
-    * tombstone file THAT tier anti-joins ([[annDeleteFromVecIndex]]
-    * dispatches here automatically when the root is residual).
-    */
-  def annDeleteFromIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame): Unit =
-    VectorOps.deleteFromIvfPqIndex(spark, path, ids)
-
-  /** Offline compaction of a residual IVF-PQ root — rewrites the codes
-    * minus tombstones while KEEPING the cluster partitioning serving
-    * prunes on ([[annCompactVecIndex]] dispatches here automatically).
-    */
-  def annCompactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    VectorOps.compactIvfPqIndex(spark, path)
-
-  /** Offline compaction of every tier under one index root. */
-  def annCompactVecIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    VectorOps.compactVecIndex(spark, path)
+  def annRebuildAdvisor(spark: org.apache.spark.sql.SparkSession,
+      path: String, margin: Double = 0.05): DataFrame =
+    VectorOps.rebuildAdvisor(spark, path, margin)
 
   /** Create a VERSIONED index: version 1 built under `roots/`, published
     * by an atomic manifest pointer. Readers resolve the pointer once per
-    * request, so rebuilds can never serve empty or mixed-geometry results
-    * — the structural close of the in-place rebuild's race window.
-    * `tiers`: "ivf" (raw probed cells), "both" (IVF + flat PQ), "ivfpq"
-    * (residual).
+    * request, so rebuilds and compactions can never serve empty or
+    * mixed-geometry results. `tiers` as on [[annBuildIndex]].
     */
   def annInitVersionedVecIndex(corpus: DataFrame, root: String,
       tiers: String = "ivf"): String =
     VectorOps.initVersionedVecIndex(corpus, root, tiers)
 
-  /** Rebuild into version N+1 from the current version's alive rows and
-    * atomically flip the pointer; concurrent reads stay fully-old, the
-    * next resolution is fully-new. Returns the new version directory.
-    */
-  def annRebuildVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String): String =
-    VectorOps.rebuildVersionedVecIndex(spark, root)
-
-  /** Retrain version N+1 from an EXTERNAL source-of-truth corpus (the
-    * FAISS posture, and the only rebuild a lossy residual root can
-    * have); current-version tombstones are honored so deleted ids never
-    * resurrect. Same atomic pointer flip.
-    */
-  def annRebuildVersionedVecIndexFrom(spark: org.apache.spark.sql.SparkSession,
-      root: String, corpus: DataFrame): String =
-    VectorOps.rebuildVersionedVecIndexFrom(spark, root, corpus)
-
   /** Serve through the version pointer (resolved once per request), then
-    * route tiers exactly like [[annSearchVecIndex]].
+    * route tiers exactly like [[annSearchIndex]].
     */
   def annSearchVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, queries: DataFrame, k: Int, probes: Int = 2,
@@ -657,8 +558,8 @@ object Graft {
     VectorOps.searchVersionedVecIndex(spark, root, queries, k, probes,
       tier, rerankCandidates, excludeSelf)
 
-  /** Append to / delete from / compact the CURRENT version (same frozen-
-    * geometry contracts as the unversioned entry points).
+  /** Append to / delete from the CURRENT version (same frozen-geometry
+    * contracts as the unversioned verbs).
     */
   def annAppendVersionedVecIndex(batch: DataFrame, root: String): Unit =
     VectorOps.appendToVersionedVecIndex(batch, root)
@@ -667,9 +568,21 @@ object Graft {
       root: String, ids: DataFrame): Unit =
     VectorOps.deleteFromVersionedVecIndex(spark, root, ids)
 
+  /** Compact by publishing version N+1 (pinned readers keep the old one). */
   def annCompactVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
       root: String): Unit =
     VectorOps.compactVersionedVecIndex(spark, root)
+
+  /** Rebuild into version N+1 and atomically flip the pointer; concurrent
+    * reads stay fully-old, the next resolution is fully-new. Source: the
+    * current version's alive rows, or the source-of-truth `corpus` (the
+    * FAISS retrain posture, and the only rebuild a lossy residual root can
+    * have); tombstones are honored so deleted ids never resurrect. Returns
+    * the new version directory.
+    */
+  def annRebuildVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
+      root: String, corpus: Option[DataFrame] = None): String =
+    VectorOps.rebuildVersionedVecIndex(spark, root, corpus)
 
   /** Reclaim versions older than the newest `keepLast` (the grace window
     * for readers pinned to a predecessor). Returns removed versions.
@@ -677,15 +590,6 @@ object Graft {
   def annVacuumVecIndexVersions(spark: org.apache.spark.sql.SparkSession,
       root: String, keepLast: Int = 2): Seq[Long] =
     VectorOps.vacuumVecIndexVersions(spark, root, keepLast)
-
-  /** Drift-to-action decision table over a persisted index root: one row
-    * per (tier, metric) — v18's 2x occupancy rule on the stored IVF tier,
-    * v42's codebook-drift audit on the PQ tier — with integer-exact
-    * value/threshold and a keep/retrain verdict.
-    */
-  def annRebuildAdvisor(spark: org.apache.spark.sql.SparkSession,
-      path: String, margin: Double = 0.05): DataFrame =
-    VectorOps.rebuildAdvisor(spark, path, margin)
 
   /** Advisor-gated versioned rebuild: publishes a successor version only
     * when a tier's verdict is retrain; Some(newVersionDir) when it acted.

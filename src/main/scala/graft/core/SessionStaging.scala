@@ -75,34 +75,42 @@ object SessionStaging {
   }
 
   /** Build-once-per-JVM, copy-per-caller: the first caller for `key` runs
-    * `build` into a staging directory; every caller (including the first)
-    * gets a recursive copy of it at `target`. `target` must not exist yet
-    * (the UUID scratch/version directories these builds create) — an
-    * existing non-empty target fails loudly rather than merging.
+    * `build` into a private temp directory that is renamed into place and
+    * recorded only once the build returned — a build that throws partway
+    * leaves nothing a retry could inherit. Every caller (including the
+    * first) then gets a recursive copy at `target`. Targets are
+    * directories only their caller writes (a VersionedStore-claimed
+    * version directory or a UUID scratch root), so anything already there
+    * is debris of a crashed earlier attempt — VersionedStore's retry
+    * contract — and is cleared rather than merged into.
     */
   def into(s: SparkSession, key: String, target: String)
       (build: String => Unit): Unit = {
     hook
+    val conf = s.sparkContext.hadoopConfiguration
     val src = key.intern.synchronized {
       staged.getOrElse(key, {
-        val dir = s"$stagingRoot/${md5hex(key)}"
-        build(dir)
-        staged.put(key, dir)
-        dir
+        val dir = new Path(s"$stagingRoot/${md5hex(key)}")
+        val tmp = new Path(s"$stagingRoot/_building_${java.util.UUID.randomUUID()}")
+        val fs = dir.getFileSystem(conf)
+        try {
+          fs.mkdirs(tmp)
+          build(tmp.toString)
+          fs.delete(dir, true)
+          require(fs.rename(tmp, dir),
+            s"SessionStaging.into: publishing the build of $key failed")
+        } finally { fs.delete(tmp, true); () }
+        staged.put(key, dir.toString)
+        dir.toString
       })
     }
-    val conf = s.sparkContext.hadoopConfiguration
     val srcPath = new Path(src)
     val dstPath = new Path(target)
     val fs = dstPath.getFileSystem(conf)
-    if (fs.exists(dstPath)) {
-      require(fs.listStatus(dstPath).isEmpty,
-        s"SessionStaging.into: target $target exists and is non-empty")
-      fs.delete(dstPath, true)
-    }
+    fs.delete(dstPath, true)
     val parent = dstPath.getParent
     if (parent != null) fs.mkdirs(parent)
-    require(FileUtil.copy(fs, srcPath, fs, dstPath,
+    require(FileUtil.copy(srcPath.getFileSystem(conf), srcPath, fs, dstPath,
         false /* deleteSource */, true /* overwrite */, conf),
       s"SessionStaging.into: copy $src -> $target failed")
   }

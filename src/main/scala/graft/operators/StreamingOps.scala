@@ -1420,11 +1420,35 @@ object StreamingOps {
            |QUALIFY doc_id = min(doc_id) OVER (PARTITION BY h)""".stripMargin),
     bench = false)
 
+  /** The t38/t40/t41/t42 ingest shape: a persisted `tiers` index built
+    * once on the base corpus (vec_id % 10 != 0), then the rest streamed
+    * in and appended per micro-batch against the FROZEN geometry
+    * ([[VectorOps.appendToVecIndex]]). Returns the index root.
+    */
+  private def streamGrownIndex(s: SparkSession, d: String, name: String,
+      tiers: String): String = {
+    val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/${name}_${java.util.UUID.randomUUID()}"
+    VectorOps.buildVecIndex(
+      graft.core.Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 0), path, tiers)
+    val schema = s.read.parquet(s"$d/embeddings.parquet").schema
+    s.readStream.schema(schema)
+      .option("pathGlobFilter", "embeddings.parquet")
+      .parquet(d)
+      .writeStream
+      .option("checkpointLocation", checkpoint())
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        VectorOps.appendToVecIndex(batch.filter(col("vec_id") % 10 === 0), path)
+      }
+      .trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+    path
+  }
+
   /** T38 (beyond reference): CONTINUOUS vector-index ingestion — the
     * serving-side twin of t32's corpus refresh: a persisted IVF index is
-    * built once on the base corpus ([[VectorOps.buildIvfIndex]]), tonight's
+    * built once on the base corpus ([[VectorOps.buildVecIndex]]), tonight's
     * new vectors stream in and are assigned + appended per micro-batch
-    * against the FROZEN centroids ([[VectorOps.appendToIvfIndex]] — the
+    * against the FROZEN centroids ([[VectorOps.appendToVecIndex]] — the
     * index geometry never moves under running queries; v18's needs_split
     * diagnostic decides offline rebuilds), and queries are then answered
     * from the index alone with partition-pruned probes. Assignment is
@@ -1435,24 +1459,9 @@ object StreamingOps {
   val t38: GraftQuery = GraftQuery(
     "t38_stream_index_append",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t38_index_$id"
       val emb = graft.core.Tables.embeddings(s, d)
-      VectorOps.buildIvfIndex(emb.filter(col("vec_id") % 10 =!= 0), path)
-      val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          VectorOps.appendToIvfIndex(
-            batch.filter(col("vec_id") % 10 === 0), path)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      VectorOps.searchIvfIndex(s, path,
-        emb.filter(col("vec_id") < 10), k = 3, probes = 2)
+      VectorOps.searchVecIndex(s, streamGrownIndex(s, d, "t38_index", "ivf"),
+        emb.filter(col("vec_id") < 10), k = 3, tier = "ivf")
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
            |base AS (SELECT * FROM v WHERE vec_id % 10 != 0),
@@ -1513,7 +1522,7 @@ object StreamingOps {
   /** T40 (beyond reference): CONTINUOUS ingestion into the COMPRESSED
     * index tier — t38's streaming append applied to the PQ index: codes
     * are encoded per micro-batch against the FROZEN persisted codebook
-    * ([[VectorOps.appendToPqIndex]]; [[VectorOps.pqDriftAudit]] decides
+    * ([[VectorOps.appendToVecIndex]]; [[VectorOps.pqDriftAudit]] decides
     * offline retrains), and queries are then answered from the stored
     * codes alone. Encoding is per-row and stateless, so any batch
     * decomposition yields the identical index — which is why the oracle
@@ -1523,24 +1532,9 @@ object StreamingOps {
   val t40: GraftQuery = GraftQuery(
     "t40_stream_pq_append",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t40_pqidx_$id"
       val emb = graft.core.Tables.embeddings(s, d)
-      VectorOps.buildPqIndex(emb.filter(col("vec_id") % 10 =!= 0), path)
-      val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          VectorOps.appendToPqIndex(
-            batch.filter(col("vec_id") % 10 === 0), path)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      VectorOps.searchPqIndex(s, path,
-        emb.filter(col("vec_id") < 10), k = 3)
+      VectorOps.searchVecIndex(s, streamGrownIndex(s, d, "t40_pqidx", "pq"),
+        emb.filter(col("vec_id") < 10), k = 3, tier = "pq")
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
            |cb AS (SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS j, e
@@ -1580,23 +1574,8 @@ object StreamingOps {
   val t41: GraftQuery = GraftQuery(
     "t41_stream_drift_audit",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t41_pqidx_$id"
       val emb = graft.core.Tables.embeddings(s, d)
-      VectorOps.buildPqIndex(emb.filter(col("vec_id") % 10 =!= 0), path)
-      val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          VectorOps.appendToPqIndex(
-            batch.filter(col("vec_id") % 10 === 0), path)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      VectorOps.pqDriftAudit(s, path, emb)
+      VectorOps.pqDriftAudit(s, streamGrownIndex(s, d, "t41_pqidx", "pq"), emb)
     },
     VectorOps.v42.oracle,
     bench = false)
@@ -1611,67 +1590,11 @@ object StreamingOps {
   val t42: GraftQuery = GraftQuery(
     "t42_stream_ivfpq_append",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t42_ivfpq_$id"
       val emb = graft.core.Tables.embeddings(s, d)
-      VectorOps.buildIvfPqIndex(emb.filter(col("vec_id") % 10 =!= 0), path)
-      val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          VectorOps.appendToIvfPqIndex(
-            batch.filter(col("vec_id") % 10 === 0), path)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      VectorOps.searchIvfPqIndex(s, path,
-        emb.filter(col("vec_id") < 10), k = 3, probes = 2)
+      VectorOps.searchVecIndex(s, streamGrownIndex(s, d, "t42_ivfpq", "ivfpq"),
+        emb.filter(col("vec_id") < 10), k = 3, tier = "ivfpq")
     },
-    Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-           |base AS (SELECT * FROM v WHERE vec_id % 10 != 0),
-           |cents AS (SELECT vec_id AS k_id, e AS ke FROM base
-           |          ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
-           |assign AS (SELECT vec_id, e, k_id AS cluster FROM (
-           |  SELECT v.vec_id, v.e, c.k_id, row_number() OVER (PARTITION BY v.vec_id
-           |    ORDER BY list_cosine_similarity(v.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM v CROSS JOIN cents c) WHERE rk = 1),
-           |res AS (SELECT a.vec_id, a.cluster,
-           |  list_transform(generate_series(1, len(a.e)), i -> a.e[i] - c.ke[i]) AS r
-           |  FROM assign a JOIN cents c ON c.k_id = a.cluster),
-           |cb AS (SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS j, r AS e
-           |       FROM res WHERE vec_id % 10 != 0
-           |       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-           |m AS (SELECT unnest(generate_series(0, 7)) AS m),
-           |codes AS (SELECT vec_id, cluster, m, j AS code FROM (
-           |  SELECT r.vec_id, r.cluster, m.m, cb.j, row_number() OVER (PARTITION BY r.vec_id, m.m
-           |    ORDER BY list_reduce(list_transform(generate_series(1, 8),
-           |      i -> (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i])),
-           |      (a, b) -> a + b) ASC, cb.j) AS rk
-           |  FROM res r CROSS JOIN m CROSS JOIN cb) WHERE rk = 1),
-           |q AS (SELECT * FROM v WHERE vec_id < 10),
-           |probes AS (SELECT vec_id AS q_id, qe, cluster FROM (
-           |  SELECT q.vec_id, q.e AS qe, c.k_id AS cluster,
-           |    row_number() OVER (PARTITION BY q.vec_id
-           |      ORDER BY list_cosine_similarity(q.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM q CROSS JOIN cents c) WHERE rk <= 2),
-           |qres AS (SELECT p.q_id, p.cluster,
-           |  list_transform(generate_series(1, len(p.qe)), i -> p.qe[i] - c.ke[i]) AS qr
-           |  FROM probes p JOIN cents c ON c.k_id = p.cluster),
-           |qd AS (SELECT qr.q_id, qr.cluster, m.m, cb.j,
-           |  list_reduce(list_transform(generate_series(1, 8),
-           |    i -> (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i])),
-           |    (a, b) -> a + b) AS dd
-           |  FROM qres qr CROSS JOIN m CROSS JOIN cb),
-           |scored AS (SELECT qd.q_id, c.vec_id AS neighbor_id,
-           |  list_reduce(list(qd.dd ORDER BY qd.m), (a, b) -> a + b) AS adc
-           |  FROM codes c JOIN qd ON qd.cluster = c.cluster AND qd.m = c.m AND qd.j = c.code
-           |  WHERE c.vec_id != qd.q_id
-           |  GROUP BY qd.q_id, c.vec_id)
-           |SELECT q_id, neighbor_id, adc FROM scored
-           |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc ASC, neighbor_id) <= 3""".stripMargin),
+    Some(VectorOps.ivfPqOracle(Some("vec_id % 10 != 0"), None)),
     bench = false)
 
   /** T43 (beyond reference): embedding-distribution drift monitored ON

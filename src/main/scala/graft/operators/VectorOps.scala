@@ -2544,36 +2544,348 @@ object VectorOps {
            |    // count(*) AS BIGINT) AS match_ppm
            |FROM assign GROUP BY cluster""".stripMargin))
 
-  /** Public DataFrame-in API (see graft.api.Graft): PERSIST the IVF index
+  // ---------------------------------------------------- persisted indexes
+
+  /** Public DataFrame-in API (see graft.api.Graft): PERSIST a vector index
     * — the build-once / query-many shape every production vector store
-    * has, which none of the in-memory ops (v2/v4) demonstrate: `centroids/`
-    * (K rows) plus `postings/` PARTITIONED BY cluster, so the posting
-    * lists are directory-separated on disk and a probe reads only its
-    * cells' files. Index build cost (one corpus scan + one cluster-keyed
-    * write) is paid once; every subsequent [[searchIvfIndex]] call pays
-    * only centroid broadcast + probed-partition reads.
+    * has, which none of the in-memory ops (v2/v4/v8/v9) demonstrate. An
+    * index ROOT holds one or more [[Tier]]s next to ONE `tombstones/`
+    * table (vec_id), and every lifecycle verb is written once over them:
+    * [[buildVecIndex]], [[appendToVecIndex]], [[deleteFromVecIndex]],
+    * [[compactVecIndex]], [[rebuildVecIndex]] and the route planner
+    * [[searchVecIndex]]. Layouts (`tiers`): "ivf", "pq", "both" (ivf + pq
+    * under one root — the rerank route's input) and "ivfpq" (residual).
+    * The versioned-root verbs further down publish the same builds
+    * through [[graft.core.VersionedStore]].
     */
-  def buildIvfIndex(corpus: DataFrame, path: String): Unit = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
-    val cents = centroidsOf(corpus)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    assign(withNorm(corpus, "c"), cents)
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/postings")
+  private sealed abstract class Tier(val name: String, val dirs: Seq[String],
+      val data: String, val key: String, val payload: String,
+      val partitioned: Boolean) {
+
+    /** Write this tier's geometry and its encoding of `corpus` under
+      * `path` (every directory mode=overwrite).
+      */
+    def build(corpus: DataFrame, path: String): Unit
+
+    /** `batch` encoded against the PERSISTED geometry under `path` — the
+      * append kernel: per-row and stateless, so any batch decomposition
+      * of the same vectors yields the identical index.
+      */
+    def encode(batch: DataFrame, path: String): DataFrame
+
+    /** Write data rows, keeping the `cluster` partitioning serving prunes
+      * on when the tier has it.
+      */
+    def write(rows: DataFrame, dir: String, mode: String): Unit = {
+      val w = rows.write.mode(mode)
+      (if (partitioned) w.partitionBy("cluster") else w).parquet(dir)
+    }
   }
 
-  /** Search a [[buildIvfIndex]] index without touching the corpus: probe
-    * cells come from the K-row centroid table, and the probed cell ids —
-    * bounded by #queries × probes under the same small-query-side contract
-    * that lets v1 broadcast queries — become a STATIC `IN` partition
-    * filter on the postings scan, so only the probed directories are read
-    * (VectorOpsSpec pins the PartitionFilters). Result is bit-identical to
-    * [[ivfTopK]]: centroids and double-cast posting vectors round-trip
-    * parquet exactly.
+  /** Raw IVF: `centroids/` (K rows) plus `postings/` PARTITIONED BY
+    * cluster, so the posting lists are directory-separated on disk and a
+    * probe reads only its cells' files. Build = one corpus scan + one
+    * cluster-keyed write; the probed search is bit-identical to
+    * [[ivfTopK]] (centroids and double-cast posting vectors round-trip
+    * parquet exactly).
     */
-  def searchIvfIndex(s: SparkSession, path: String, queries: DataFrame,
-      k: Int, probes: Int = 2, excludeSelf: Boolean = true): DataFrame =
-    searchIvfIndexPlanned(s, path, collectQueryVectors(queries),
-      loadIvfCentroids(s, path), k, probes, excludeSelf)
+  private object IvfTier extends Tier("ivf", Seq("centroids", "postings"),
+      "postings", "c_id", "c_e", partitioned = true) {
+    def build(corpus: DataFrame, path: String): Unit = {
+      centroidsOf(corpus).write.mode("overwrite").parquet(s"$path/centroids")
+      write(encode(corpus, path), s"$path/postings", "overwrite")
+    }
+    def encode(batch: DataFrame, path: String): DataFrame =
+      assign(withNorm(batch, "c"),
+        batch.sparkSession.read.parquet(s"$path/centroids"))
+  }
+
+  /** PQ — the COMPRESSED tier: `codebook/` (PqKs rows, explicitly
+    * j-indexed so codeword identity survives storage), `codes/` (vec_id,
+    * codes: array<int> — M=dim/8 small codes per vector, the
+    * representation that keeps a billion-vector index in RAM) and
+    * `stats/`, the build-time distortion baseline [[pqDriftAudit]]
+    * compares against (frozen at build, never touched by appends). The
+    * serving scan reads codes only, never a float.
+    */
+  private object PqTier extends Tier("pq", Seq("codebook", "codes", "stats"),
+      "codes", "vec_id", "codes", partitioned = false) {
+    def build(corpus: DataFrame, path: String): Unit = {
+      val cb = writeCodebook(
+        corpus.select(col("vec_id").as("id"), toDoubles.as("e")), path)
+      write(encodeAgainst(corpus, cb), s"$path/codes", "overwrite")
+      pqReconStats(corpus.sparkSession, path, corpus)
+        .write.mode("overwrite").parquet(s"$path/stats")
+    }
+    def encode(batch: DataFrame, path: String): DataFrame =
+      encodeAgainst(batch, loadPqCodebook(batch.sparkSession, path))
+  }
+
+  /** Residual IVF-PQ — the storage shape production vector stores ship
+    * (FAISS IndexIVFPQ): `centroids/` (cell geometry), `codebook/` (PqKs
+    * RESIDUAL codewords — quantizing x − centroid instead of x
+    * concentrates the codebook on within-cell variation) and `codes/`
+    * PARTITIONED BY cluster. Pruning and compression COMPOSE at serving
+    * time: a query reads only its probed cells' directories, and those
+    * hold M small ints per vector — at 100 TB the scan is ~probes/K of
+    * the corpus as codes, never a float. Lossy: a residual root stores
+    * no raw vectors, so it can only be rebuilt from a source corpus.
+    */
+  private object ResidualTier extends Tier("ivfpq",
+      Seq("centroids", "codebook", "codes"), "codes", "vec_id", "codes",
+      partitioned = true) {
+    def build(corpus: DataFrame, path: String): Unit = {
+      centroidsOf(corpus).write.mode("overwrite").parquet(s"$path/centroids")
+      // residuals, pinned once: reused by the codebook sample AND the encode
+      val res = residualsOf(corpus, path).localCheckpoint()
+      val cb = writeCodebook(res.select(col("c_id").as("id"), col("r").as("e")), path)
+      write(encodeResiduals(res, cb), s"$path/codes", "overwrite")
+    }
+    def encode(batch: DataFrame, path: String): DataFrame =
+      encodeResiduals(residualsOf(batch, path),
+        loadPqCodebook(batch.sparkSession, path))
+  }
+
+  private val layouts: Map[String, Seq[Tier]] = Map(
+    "ivf" -> Seq(IvfTier), "pq" -> Seq(PqTier),
+    "both" -> Seq(IvfTier, PqTier), "ivfpq" -> Seq(ResidualTier))
+
+  /** The tiers each search route reads. */
+  private val routes: Map[String, Seq[Tier]] = Map(
+    "ivf" -> Seq(IvfTier), "pq" -> Seq(PqTier),
+    "rerank" -> Seq(IvfTier, PqTier), "ivfpq" -> Seq(ResidualTier))
+
+  private def tiersNamed(tiers: String): Seq[Tier] = layouts.getOrElse(tiers,
+    sys.error(s"unknown tiers '$tiers' (ivf | pq | both | ivfpq)"))
+
+  private val toDoubles: Column = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
+
+  private def fsOf(s: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+
+  private def exists(s: SparkSession, dir: String): Boolean =
+    fsOf(s, dir).exists(new org.apache.hadoop.fs.Path(dir))
+
+  /** The tiers present under an index root — THE layout probe every verb
+    * routes on, so maintenance and serving can never disagree about what
+    * a root is. Self-heals first: a crash between [[swapAside]]'s two
+    * renames leaves a directory at `<dir>_old`, and without recovery the
+    * probe would see that tier as absent ("auto" silently rerouting
+    * rerank -> pq, ADC scores instead of exact cosine). Raw `postings/`
+    * mark the IVF tier; `codes/` are the residual tier when `centroids/`
+    * sit next to them without postings, the flat PQ tier otherwise.
+    */
+  private def layoutOf(s: SparkSession, path: String): Seq[Tier] = {
+    val has = Seq("postings", "codes", "centroids").map { d =>
+      recoverAside(s, s"$path/$d")
+      d -> exists(s, s"$path/$d")
+    }.toMap
+    if (has("postings")) IvfTier +: (if (has("codes")) Seq(PqTier) else Nil)
+    else if (!has("codes")) Nil
+    else if (has("centroids")) Seq(ResidualTier)
+    else Seq(PqTier)
+  }
+
+  private def requireLayout(s: SparkSession, path: String, verb: String): Seq[Tier] = {
+    val tiers = layoutOf(s, path)
+    require(tiers.nonEmpty, s"$verb: no index tier found under $path")
+    tiers
+  }
+
+  /** `rows` minus tombstoned ids — the ONE alive filter every read path
+    * (serving routes, compaction, rebuild, audits) applies: a keyed
+    * anti-join against the root's `tombstones/` table (vec_id), matched
+    * on `key` (postings carry c_id, codes vec_id). Deleted ids stop being
+    * served at the NEXT query with zero data-file rewrites on the serving
+    * path; [[compactVecIndex]] reclaims the space offline.
+    */
+  private def aliveRows(s: SparkSession, path: String, rows: DataFrame,
+      key: String): DataFrame =
+    if (!exists(s, s"$path/tombstones")) rows
+    else rows.join(s.read.parquet(s"$path/tombstones")
+      .withColumnRenamed("vec_id", key), Seq(key), "left_anti")
+
+  private def buildTiers(corpus: DataFrame, path: String, tiers: Seq[Tier]): Unit = {
+    graft.plans.GraftExtensions.register(corpus.sparkSession)
+    tiers.foreach(_.build(corpus, path))
+  }
+
+  /** Persist `corpus` as an index root of layout `tiers` ("ivf" | "pq" |
+    * "both" | "ivfpq"). Index build cost (one corpus scan + one write per
+    * tier) is paid once; every [[searchVecIndex]] call then pays only the
+    * tiny geometry reads plus probed-partition / code scans. Use a fresh
+    * root per layout.
+    */
+  def buildVecIndex(corpus: DataFrame, path: String, tiers: String): Unit =
+    buildTiers(corpus, path, tiersNamed(tiers))
+
+  /** Append new vectors to EVERY tier of the root, each encoded against
+    * its PERSISTED geometry — centroids and codebooks never move under
+    * running queries; recentering/retraining is an offline rebuild that
+    * [[rebuildAdvisor]] decides. Stream-safe and order-independent (t38,
+    * t40, t42 gate it on the ingest stream). A REDELIVERED batch
+    * (foreachBatch at-least-once) duplicates deterministic rows, which
+    * serving collapses (see [[searchIvfIndexPlanned]]) and compaction
+    * physically reclaims.
+    */
+  def appendToVecIndex(batch: DataFrame, path: String): Unit = {
+    graft.plans.GraftExtensions.register(batch.sparkSession)
+    requireLayout(batch.sparkSession, path, "appendToVecIndex").foreach(t =>
+      t.write(t.encode(batch, path), s"$path/${t.data}", "append"))
+    noteMutation(path)
+  }
+
+  /** LOGICAL delete — the right-to-be-forgotten path: `ids` (a vec_id
+    * column) land in the root's one tombstone table and every route stops
+    * serving them at the NEXT query, with zero interruption and zero
+    * data-file rewrites. Geometry is not data: a deleted centroid- or
+    * codeword-source vector still anchors its cell/codeword. Space is
+    * reclaimed by [[compactVecIndex]].
+    */
+  def deleteFromVecIndex(s: SparkSession, path: String, ids: DataFrame): Unit = {
+    requireLayout(s, path, "deleteFromVecIndex")
+    ids.select(col("vec_id")).write.mode("append").parquet(s"$path/tombstones")
+    noteMutation(path)
+  }
+
+  /** Tier `t`'s data rows minus tombstones and minus the rows a
+    * redelivered append doubled — what compaction keeps. ADVICE r12: the
+    * serving lag-collapse (see [[searchIvfIndexPlanned]]) is exactly-once
+    * only under the immutable-vec_id contract (equal ids carry bit-equal
+    * payloads). Compaction scans the data anyway, so this is where a
+    * contract violation SURFACES instead of silently double-serving a
+    * mutated id: duplicated ALIVE ids must agree — tombstoned ids are
+    * excluded, since a delete-then-reappend under a recycled id is the
+    * documented mutation path and compaction itself reclaims the old rows.
+    */
+  private def compacted(s: SparkSession, path: String, t: Tier): DataFrame = {
+    val alive = aliveRows(s, path, s.read.parquet(s"$path/${t.data}"), t.key)
+    val mutated = alive
+      .groupBy(t.key)
+      .agg(countDistinct(hash(col(t.payload))).as("nv"))
+      .filter(col("nv") > 1).limit(1).count()
+    require(mutated == 0L,
+      s"compactVecIndex: $path holds re-appended ids with CHANGED " +
+        "payloads — vec_id is an immutable key (mutation = delete + new " +
+        "id); the serving dedup assumes bit-identical duplicates")
+    alive.dropDuplicates(t.key)
+  }
+
+  /** OFFLINE compaction of an unversioned root: rewrite every tier's data
+    * directory via [[compacted]] into a fresh directory, [[swapAside]] it
+    * in, then drop the tombstones — the production rewrite-and-swap shape
+    * (never an in-place overwrite of a table being read; at scale one
+    * index scan + one write per tier, amortized across many deletes). A
+    * partitioned tier keeps `partitionBy("cluster")`, the layout serving
+    * prunes on. Results on every route are IDENTICAL before and after
+    * (VectorOpsSpec pins it). Versioned roots compact through
+    * [[compactVersionedVecIndex]], which never rewrites a published
+    * version.
+    */
+  def compactVecIndex(s: SparkSession, path: String): Unit = {
+    val tiers = layoutOf(s, path)
+    noteMutation(path) // aside recovery and the rewrite both reshape files
+    if (!exists(s, s"$path/tombstones")) return // no-op stays one probe cheap
+    tiers.foreach { t =>
+      t.write(compacted(s, path, t), s"$path/${t.data}_compacting", "overwrite")
+      swapAside(s, s"$path/${t.data}_compacting", s"$path/${t.data}")
+    }
+    remove(s, s"$path/tombstones")
+  }
+
+  /** Crash-safe directory swap for UNVERSIONED roots: `live` is renamed
+    * ASIDE before `fresh` moves in, so no failure ordering ever leaves
+    * the DATA missing — a delete-then-rename (the naive swap) destroys
+    * the serving copy the instant the delete lands. A failure between the
+    * two renames leaves the old data intact at `live_old`;
+    * [[recoverAside]] (called by every reader and maintenance entry
+    * point) renames it back, so the index self-heals at the next touch.
+    * Only after `fresh` is fully in place does the old copy get dropped.
+    */
+  private def swapAside(s: SparkSession, fresh: String, live: String): Unit = {
+    val fs = fsOf(s, live)
+    val Seq(freshP, liveP, aside) =
+      Seq(fresh, live, live + "_old").map(new org.apache.hadoop.fs.Path(_))
+    if (fs.exists(aside)) fs.delete(aside, true) // leftover of a prior crash
+    require(fs.rename(liveP, aside), s"swap step 1 (aside) failed for $live")
+    require(fs.rename(freshP, liveP),
+      s"swap step 2 failed for $live — previous data preserved at $aside")
+    fs.delete(aside, true): Unit
+  }
+
+  private def remove(s: SparkSession, dir: String): Unit =
+    fsOf(s, dir).delete(new org.apache.hadoop.fs.Path(dir), true): Unit
+
+  /** Self-heal after a crash BETWEEN [[swapAside]]'s two renames: if the
+    * live directory is missing but its `_old` aside copy exists, restore
+    * it. Idempotent, one exists() probe on the healthy path — cheap
+    * enough for every reader to call.
+    */
+  private def recoverAside(s: SparkSession, live: String): Unit = {
+    val livePath = new org.apache.hadoop.fs.Path(live)
+    val fs = fsOf(s, live)
+    val aside = new org.apache.hadoop.fs.Path(live + "_old")
+    if (!fs.exists(livePath) && fs.exists(aside)) {
+      require(fs.rename(aside, livePath), s"aside recovery failed for $live")
+      (): Unit
+    }
+  }
+
+  /** The corpus a rebuild re-derives geometry from, tombstones applied so
+    * a deleted id never resurrects: the external source-of-truth
+    * `corpus` when given (the FAISS retrain posture), else the root's own
+    * raw postings — the stored vectors ARE the corpus; redelivered-append
+    * duplicates collapsed, and double arrays pass [[withNorm]]'s cast
+    * unchanged, so builds on this reconstruction are bit-identical to
+    * builds on the original corpus. A codes-only root is lossy and needs
+    * the external corpus.
+    */
+  private def aliveCorpus(s: SparkSession, dir: String, tiers: Seq[Tier],
+      corpus: Option[DataFrame]): DataFrame = corpus match {
+    case Some(c) => aliveRows(s, dir, c, "vec_id")
+    case None =>
+      require(tiers.contains(IvfTier),
+        s"rebuild: $dir has no raw postings tier to rebuild from — a " +
+          "codes-only root is lossy; retrain it from the source-of-truth " +
+          "corpus (corpus = Some(df))")
+      aliveRows(s, dir, s.read.parquet(s"$dir/postings").select("c_id", "c_e"), "c_id")
+        .dropDuplicates("c_id")
+        .select(col("c_id").as("vec_id"), col("c_e").as("embedding"))
+  }
+
+  /** OFFLINE recenter/rebuild of an unversioned root — the consumer of
+    * the drift diagnostics (v18's needs_split, [[pqDriftAudit]],
+    * [[rebuildAdvisor]]): re-derive every tier's geometry from the
+    * [[aliveCorpus]], re-encode every vector into `_rebuilding/`, then
+    * [[swapAside]] each directory in. Tombstoned rows are dropped as a
+    * side effect.
+    *
+    * Contract (v43's oracle pins it): after rebuild the index is
+    * BIT-INDISTINGUISHABLE from one freshly built on the current corpus —
+    * same centroid rule, same assignment, same serving results — so
+    * recall can only move toward the fresh-index recall, never below it
+    * (VectorOpsSpec gates non-regression under planted cluster drift).
+    *
+    * The directory swaps are individually crash-safe, but a query racing
+    * BETWEEN them sees mixed geometry: old centroids probing NEW cell
+    * directories (valid exact scores over whatever it scanned, recall
+    * may shift). The versioned-root layout ([[rebuildVersionedVecIndex]])
+    * closes this window structurally; here production serializes
+    * rebuilds behind the scheduler that triggers them. A CRASH between
+    * swaps leaves mixed geometry durably, and the standard retry repairs
+    * it completely, because the rebuild derives everything from the
+    * alive data, which every mixed state preserves in full.
+    */
+  def rebuildVecIndex(s: SparkSession, path: String,
+      corpus: Option[DataFrame] = None): Unit = {
+    val tiers = requireLayout(s, path, "rebuildVecIndex")
+    val stage = s"$path/_rebuilding"
+    remove(s, stage)
+    buildTiers(aliveCorpus(s, path, tiers, corpus), stage, tiers)
+    tiers.flatMap(_.dirs).distinct.foreach(d => swapAside(s, s"$stage/$d", s"$path/$d"))
+    Seq(stage, s"$path/tombstones").foreach(remove(s, _))
+    noteMutation(path)
+  }
 
   /** The K-row centroid table as a driver array — tiny by contract.
     * PUBLIC so a serving layer can load it ONCE per immutable index root
@@ -2589,6 +2901,16 @@ object VectorOps {
       .collect().map { case (i, e) => (i, e.toArray) }
   }
 
+  /** The PqKs-row codebook as a driver array — PUBLIC for the same
+    * serve-layer caching contract as [[loadIvfCentroids]].
+    */
+  def loadPqCodebook(s: SparkSession, path: String): Array[Array[Double]] = {
+    import s.implicits._
+    s.read.parquet(s"$path/codebook")
+      .orderBy("j").select(col("j"), col("e")).as[(Int, Seq[Double])]
+      .collect().map(_._2.toArray)
+  }
+
   /** Collect a (vec_id, embedding) query set to the driver in the exact
     * form every planned search consumes: double-cast, id-sorted. Bounded
     * by the same small-query-side contract that lets v1 broadcast
@@ -2598,21 +2920,79 @@ object VectorOps {
   def collectQueryVectors(queries: DataFrame): Array[(Long, Array[Double])] = {
     val s = queries.sparkSession
     import s.implicits._
-    val toD = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-    queries.select(col("vec_id"), toD).as[(Long, Seq[Double])]
+    queries.select(col("vec_id"), toDoubles).as[(Long, Seq[Double])]
       .collect().map { case (id, e) => (id, e.toArray) }.sortBy(_._1)
   }
 
-  /** [[searchIvfIndex]] with the driver-side planning inputs supplied by
-    * the caller — the warm serving path: probe planning is DRIVER-SIDE
-    * (the searchIvfPqIndex discipline): both inputs are tiny by
-    * contract — K centroids and the broadcastable query set — so ranking
-    * cells in Scala (cosArr == graft_cosine == list_cosine_similarity,
-    * ties to smallest k_id: the exact v2 rule) replaces a join + window +
-    * checkpoint + collect chain, and a caller caching `cents`/`qsArr`
-    * (QueryService) pays ONE Spark job per poll: the pruned postings
-    * scan. The probed rows re-enter the plan as a broadcast local
-    * relation. Results are bit-identical to [[searchIvfIndex]].
+  /** The SERVING PLANNER over the persisted tiers — one entry point that
+    * picks a route per query budget, the way a production vector store
+    * fronts its index files:
+    *
+    *   - `"ivf"`    — raw-vector probed-cell search: exact scores inside
+    *                  the probed cells, reads floats.
+    *   - `"pq"`     — code-only ADC scan: cheapest IO (8 ints/vector),
+    *                  approximate scores.
+    *   - `"rerank"` — two-stage (the v15 shape): PQ codes nominate
+    *                  `rerankCandidates` ids per query, raw vectors are
+    *                  fetched BY ID from the postings tier for exact
+    *                  cosine rerank — code-scan IO with exact final
+    *                  scores; the fetch touches |Q| x candidates rows,
+    *                  never the corpus.
+    *   - `"ivfpq"`  — residual ADC over probed-cell code directories.
+    *   - `"auto"`   — the route the root's layout supports best: rerank
+    *                  when both flat tiers exist, otherwise the one tier.
+    *
+    * Each route is its planned variant fed the driver-side inputs this
+    * call collects (query batch, centroids, codebook). Output: (q_id,
+    * neighbor_id, cos) for ivf/rerank; (q_id, neighbor_id, adc) for
+    * pq/ivfpq — native scores per route, each oracle-gated
+    * (serve_vec_search / _pq / _rerank, v44) with a recall eval next to
+    * them (serve_vec_recall).
+    */
+  def searchVecIndex(s: SparkSession, path: String, queries: DataFrame,
+      k: Int, probes: Int = 2, tier: String = "auto",
+      rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame = {
+    graft.plans.GraftExtensions.register(s)
+    val tiers = layoutOf(s, path)
+    val route = tier match {
+      case "auto" => tiers match {
+        case Seq(IvfTier, PqTier) => "rerank"
+        case Seq(t) => t.name
+        case _ => sys.error(s"searchVecIndex: no index tier found under $path")
+      }
+      case t if routes.contains(t) => t
+      case other => sys.error(
+        s"searchVecIndex: unknown tier '$other' (ivf | pq | rerank | ivfpq | auto)")
+    }
+    val needs = routes(route)
+    require(needs.forall(tiers.contains), s"searchVecIndex: the $route route " +
+      s"needs the ${needs.map(_.name).mkString(" + ")} tier(s) under $path, " +
+      s"found [${tiers.map(_.name).mkString(", ")}]")
+    val qs = collectQueryVectors(queries)
+    route match {
+      case "ivf" => searchIvfIndexPlanned(s, path, qs, loadIvfCentroids(s, path),
+        k, probes, excludeSelf)
+      case "pq" => searchPqIndexPlanned(s, path, qs, loadPqCodebook(s, path),
+        k, excludeSelf)
+      case "rerank" => searchRerankPlanned(s, path, qs, loadPqCodebook(s, path),
+        k, rerankCandidates, excludeSelf)
+      case _ => searchIvfPqPlanned(s, path, qs, loadIvfCentroids(s, path),
+        loadPqCodebook(s, path), k, probes, excludeSelf)
+    }
+  }
+
+  /** The ivf route with the driver-side planning inputs supplied by the
+    * caller — the warm serving path: probe planning is DRIVER-SIDE: both
+    * inputs are tiny by contract — K centroids and the broadcastable
+    * query set — so ranking cells in Scala (cosArr == graft_cosine ==
+    * list_cosine_similarity, ties to smallest k_id: the exact v2 rule)
+    * replaces a join + window + checkpoint + collect chain, and a caller
+    * caching `cents`/`qsArr` (QueryService) pays ONE Spark job per poll:
+    * the pruned postings scan. The probed cell ids — bounded by #queries
+    * × probes — become a STATIC `IN` partition filter on the postings
+    * scan, so only the probed directories are read (VectorOpsSpec pins
+    * the PartitionFilters). The probed rows re-enter the plan as a
+    * broadcast local relation.
     */
   def searchIvfIndexPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cents: Array[(Long, Array[Double])],
@@ -2622,10 +3002,7 @@ object VectorOps {
     graft.plans.GraftExtensions.register(s)
     import s.implicits._
     val probedRows: Seq[(Long, Seq[Double], Long)] = qsArr.toSeq.flatMap {
-      case (qid, qa) =>
-        cents.map { case (kid, ke) => (kid, cosArr(qa, ke)) }
-          .sortBy { case (kid, c) => (-c, kid) }.take(probes)
-          .map { case (kid, _) => (qid, qa.toSeq, kid) }
+      case (qid, qa) => probedCells(qa, cents, probes).map(c => (qid, qa.toSeq, c._1))
     }
     val probed = s.createDataset(probedRows).toDF("q_id", "q_e", "cluster")
     // the probed cell ids (bounded by #queries × probes) become a static
@@ -2638,25 +3015,10 @@ object VectorOps {
       recoverAside(s, s"$path/postings")
       s.read.parquet(s"$path/postings")
     }
-    // partition-dir values read back via type inference (INT for small
-    // ids); the IN-list literals must match that dtype EXACTLY — a cast on
-    // the attribute side would defeat partition pruning
-    val cells: Seq[Any] = postingsRaw.schema("cluster").dataType match {
-      case org.apache.spark.sql.types.IntegerType => cellIds.toSeq.map(_.toInt)
-      case _ => cellIds.toSeq
-    }
-    val pruned = postingsRaw.filter(col("cluster").isInCollection(cells))
-    // logical deletes: rows tombstoned by deleteFromIvfIndex stop being
-    // served immediately via a keyed anti-join (never a scan rewrite on
-    // the serving path); compactIvfIndex reclaims the space offline
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val tombFs = tombPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val alive =
-      if (tombFs.exists(tombPath))
-        pruned.join(s.read.parquet(tombPath.toString), Seq("c_id"), "left_anti")
-      else pruned
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    val scoredRows = alive.join(broadcast(probed), Seq("cluster"))
+    val pruned = postingsRaw.filter(col("cluster").isInCollection(
+      cellLiterals(postingsRaw, cellIds.toSeq)))
+    val scoredRows = aliveRows(s, path, pruned, "c_id")
+      .join(broadcast(probed), Seq("cluster"))
       .filter(if (excludeSelf) col("c_id") =!= col("q_id") else lit(true))
       .withColumn("cos", cosine("q_e", "c_e"))
     // compactForServe: a SERVING caller's per-poll work is bounded by
@@ -2670,391 +3032,245 @@ object VectorOps {
     // hot-cell poll must stay inside the dashboard's 3 s budget — the
     // exponent rule can't bind on sub-0.3 s polls). NEVER the default:
     // at pipeline scale the parallel scan + shuffle is the right plan.
-    (if (compactForServe) scoredRows.coalesce(1) else scoredRows)
-      // a neighbor counts once: an at-least-once APPEND redelivery (t38)
-      // can leave physically duplicated posting rows until the next
-      // compaction; rows are deterministic per c_id, so duplicated scored
-      // pairs are BIT-IDENTICAL and ADJACENT in the window order (cos,
-      // then c_id) — a lag comparison inside the ranking window collapses
-      // them without the extra (q_id, c_id) shuffle dropDuplicates would
-      // add (one exchange per serve query, and per 100-TB candidate set).
-      // CONTRACT this leans on: vec_id is an immutable key — a vector is
-      // never re-appended with CHANGED values (mutation = delete + new
-      // id), so equal ids always carry equal scores; out-of-contract
-      // mutated duplicates would not be adjacent and would not collapse
-      .withColumn("prev_c", lag("c_id", 1).over(w))
+    rankCos(if (compactForServe) scoredRows.coalesce(1) else scoredRows, k)
+  }
+
+  /** Per-query exact-cosine top-k over scored (q_id, c_id, cos) rows. A
+    * neighbor counts once: an at-least-once APPEND redelivery (t38) can
+    * leave physically duplicated posting rows until the next compaction
+    * (and the rerank route's id join multiplies them); rows are
+    * deterministic per c_id, so duplicated scored pairs are BIT-IDENTICAL
+    * and ADJACENT in the window order (cos, then c_id) — a lag comparison
+    * inside the ranking window collapses them without the extra (q_id,
+    * c_id) shuffle dropDuplicates would add (one exchange per serve
+    * query, and per 100-TB candidate set). CONTRACT this leans on: vec_id
+    * is an immutable key — a vector is never re-appended with CHANGED
+    * values (mutation = delete + new id), so equal ids always carry equal
+    * scores; out-of-contract mutated duplicates would not be adjacent and
+    * would not collapse.
+    */
+  private def rankCos(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
+    scored.withColumn("prev_c", lag("c_id", 1).over(w))
       .filter(col("prev_c").isNull || col("prev_c") =!= col("c_id"))
       .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
       .select(col("q_id"), col("c_id").as("neighbor_id"), col("cos"))
   }
 
-  /** LOGICAL delete from a persisted index — the right-to-be-forgotten
-    * path: the ids land in a tombstone table and [[searchIvfIndex]] stops
-    * serving them at the NEXT query (one keyed anti-join), with zero
-    * interruption and zero posting-file rewrites on the serving path.
-    * Space is reclaimed later by [[compactIvfIndex]].
+  /** The `probes` cells query `qa` probes: centroids ranked by cosArr
+    * (== graft_cosine == list_cosine_similarity), ties to the smallest
+    * k_id — the exact v2 rule.
     */
-  def deleteFromIvfIndex(s: SparkSession, path: String,
-      ids: DataFrame): Unit = {
-    ids.select(col("vec_id").as("c_id"))
-      .write.mode("append").parquet(s"$path/tombstones")
-    noteMutation(path)
-  }
+  private def probedCells(qa: Array[Double], cents: Array[(Long, Array[Double])],
+      probes: Int): Seq[(Long, Array[Double])] =
+    cents.map { case (kid, ke) => (kid, ke, cosArr(qa, ke)) }
+      .sortBy { case (kid, _, c) => (-c, kid) }.take(probes)
+      .map { case (kid, ke, _) => (kid, ke) }.toSeq
 
-  /** OFFLINE compaction: rewrite the posting lists minus tombstoned rows
-    * into a fresh directory, then atomically swap it in and drop the
-    * tombstones — the production rewrite-and-swap shape (never an
-    * in-place overwrite of a table being read; at scale this is a
-    * distributed job whose cost is one index scan + one partitioned
-    * write, amortized across many logical deletes). Search results are
-    * IDENTICAL before and after (VectorOpsSpec pins it).
+  /** Probed cell ids as `IN`-list literals of the partition column's
+    * dtype: partition-dir values read back via type inference (INT for
+    * small ids), and the literals must match that dtype EXACTLY — a cast
+    * on the attribute side would defeat partition pruning.
     */
-  def compactIvfIndex(s: SparkSession, path: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    noteMutation(path) // aside recovery and the rewrite both reshape files
-    recoverAside(s, s"$path/postings")
-    val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tomb.getFileSystem(conf)
-    if (!fs.exists(tomb)) return // no-op stays one exists() probe cheap
-    val postings = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val alive = s.read.parquet(postings.toString)
-      .join(s.read.parquet(tomb.toString), Seq("c_id"), "left_anti")
-    // ADVICE r12: the serving lag-collapse (see [[searchIvfIndexPlanned]])
-    // is exactly-once only under the immutable-vec_id contract (equal ids
-    // carry bit-equal payloads). Compaction scans the postings anyway, so
-    // this is where a contract violation SURFACES instead of silently
-    // double-serving a mutated id: duplicated ALIVE c_ids must agree —
-    // tombstoned ids are excluded, since a delete-then-reappend under a
-    // recycled id is the documented mutation path and compaction itself
-    // reclaims the old rows.
-    val mutated = alive
-      .groupBy("c_id")
-      .agg(countDistinct(hash(col("c_e"))).as("nv"))
-      .filter(col("nv") > 1).limit(1).count()
-    require(mutated == 0L,
-      s"compactIvfIndex: $path holds re-appended c_ids with CHANGED " +
-        "payloads — vec_id is an immutable key (mutation = delete + new " +
-        "id); the serving dedup assumes bit-identical duplicates")
-    val fresh = new org.apache.hadoop.fs.Path(s"$path/postings_compacting")
-    alive
-      .dropDuplicates("c_id") // reclaim rows a redelivered append doubled
-      .write.mode("overwrite").partitionBy("cluster").parquet(fresh.toString)
-    swapAside(fs, fresh, postings)
-    fs.delete(tomb, true)
-  }
-
-  /** Crash-safe directory swap: `live` is renamed ASIDE before `fresh`
-    * moves in, so no failure ordering ever leaves the DATA missing —
-    * a delete-then-rename (the naive swap) destroys the serving copy the
-    * instant the delete lands. A failure between the two renames leaves
-    * the old data intact at `live_old`; [[recoverAside]] (called by every
-    * reader and maintenance entry point) renames it back, so the index
-    * self-heals at the next touch. Only after `fresh` is fully in place
-    * does the old copy get dropped.
-    */
-  private def swapAside(fs: org.apache.hadoop.fs.FileSystem,
-      fresh: org.apache.hadoop.fs.Path,
-      live: org.apache.hadoop.fs.Path): Unit = {
-    val aside = new org.apache.hadoop.fs.Path(live.toString + "_old")
-    if (fs.exists(aside)) fs.delete(aside, true) // leftover of a prior crash
-    require(fs.rename(live, aside), s"swap step 1 (aside) failed for $live")
-    require(fs.rename(fresh, live),
-      s"swap step 2 failed for $live — previous data preserved at $aside")
-    fs.delete(aside, true): Unit
-  }
-
-  /** Self-heal after a crash BETWEEN [[swapAside]]'s two renames: if the
-    * live directory is missing but its `_old` aside copy exists, restore
-    * it. Idempotent, one exists() probe on the healthy path — cheap
-    * enough for every reader to call.
-    */
-  private def recoverAside(s: SparkSession, live: String): Unit = {
-    val livePath = new org.apache.hadoop.fs.Path(live)
-    val fs = livePath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val aside = new org.apache.hadoop.fs.Path(live + "_old")
-    if (!fs.exists(livePath) && fs.exists(aside)) {
-      require(fs.rename(aside, livePath), s"aside recovery failed for $live")
-      (): Unit
+  private def cellLiterals(rel: DataFrame, cellIds: Seq[Long]): Seq[Any] =
+    rel.schema("cluster").dataType match {
+      case org.apache.spark.sql.types.IntegerType => cellIds.map(_.toInt)
+      case _ => cellIds
     }
+
+  /** The rerank route with caller-supplied planning inputs (cached
+    * codebook + query batch — see [[loadIvfCentroids]]'s serving
+    * contract): PQ codes nominate `rerankCandidates` ids per query
+    * (stage 1), raw vectors are fetched BY ID from the postings tier for
+    * exact cosine rerank (stage 2). The query vectors re-enter stage 2 as
+    * a broadcast local relation — same doubles [[withNorm]] would
+    * produce.
+    */
+  def searchRerankPlanned(s: SparkSession, path: String,
+      qsArr: Array[(Long, Array[Double])], cb: Array[Array[Double]],
+      k: Int, rerankCandidates: Int = 32, excludeSelf: Boolean = true,
+      codes: Option[DataFrame] = None,
+      postings: Option[DataFrame] = None,
+      compactForServe: Boolean = false): DataFrame = {
+    import s.implicits._
+    graft.plans.GraftExtensions.register(s)
+    // stage 1: code-only candidate generation
+    val cand = searchPqIndexPlanned(s, path, qsArr, cb, rerankCandidates,
+      excludeSelf, codes, compactForServe).select("q_id", "neighbor_id")
+    // stage 2: fetch raw vectors for candidate ids only — a broadcast
+    // id join against the alive postings, then exact cosine + per-query
+    // rank
+    val postingsDf = postings.getOrElse {
+      recoverAside(s, s"$path/postings")
+      s.read.parquet(s"$path/postings")
+    }
+    val qLocal = s.createDataset(qsArr.toSeq.map { case (id, e) => (id, e.toSeq) })
+      .toDF("q_id", "q_e")
+    val fetched = broadcast(cand)
+      .join(aliveRows(s, path, postingsDf, "c_id"), col("neighbor_id") === col("c_id"))
+      .join(broadcast(qLocal), "q_id")
+      .withColumn("cos", cosine("q_e", "c_e"))
+    // the serving posture: see searchIvfIndexPlanned's compactForServe
+    rankCos(if (compactForServe) fetched.coalesce(1) else fetched, k)
   }
 
-  /** Append a batch of new vectors to a [[buildIvfIndex]] index: assign
-    * against the PERSISTED centroids (the index geometry never moves under
-    * running queries — recentering is an offline rebuild, v18's
-    * needs_split diagnostic says when) and append to the cluster-
-    * partitioned posting lists. Assignment is per-row and stateless, so
-    * this is stream-safe and order-independent: any batch decomposition
-    * of the same vectors yields the identical index (t38 gates this).
-    * A REDELIVERED batch duplicates deterministic rows — serving
-    * collapses them (see [[searchIvfIndex]]), compaction reclaims them.
+  /** The pq route with caller-supplied planning inputs (cached codebook +
+    * query batch): the codebook (PqKs tiny rows) and query vectors build
+    * per-query lookup tables driver-side, and the corpus-side scan reads
+    * ONLY the alive stored codes — M table lookups per (query, vector),
+    * no float vectors, no shuffle before the per-query top-k; one
+    * code-scan Spark job per poll, bit-identical to the in-memory v8 path.
     */
-  def appendToIvfIndex(batch: DataFrame, path: String): Unit = {
-    graft.plans.GraftExtensions.register(batch.sparkSession)
+  def searchPqIndexPlanned(s: SparkSession, path: String,
+      qs: Array[(Long, Array[Double])], cb: Array[Array[Double]],
+      k: Int, excludeSelf: Boolean = true,
+      codes: Option[DataFrame] = None,
+      compactForServe: Boolean = false): DataFrame = {
+    import s.implicits._
+    val bc = s.sparkContext.broadcast((cb, qs, excludeSelf))
+    val scored0 = aliveCodes(s, path, codes).as[(Long, Seq[Int])]
+      .mapPartitions { it =>
+        val (cbL, qL, exclSelf) = bc.value
+        val pqM = cbL(0).length / PqS
+        val qtab = qL.map { case (qid, qa) => (qid, pqTable(qa, cbL, pqM)) }
+        it.flatMap { case (cid, codes) =>
+          val ca = codes.toArray
+          qtab.iterator.filter(t => !exclSelf || t._1 != cid).map { case (qid, tab) =>
+            (qid, cid, pqAdc(tab, ca))
+          }
+        }
+      }.toDF("q_id", "neighbor_id", "adc")
+    // the serving posture: see searchIvfIndexPlanned's compactForServe
+    val scored = if (compactForServe) scored0.coalesce(1) else scored0
+    rankAdc(scored, k)
+  }
+
+  /** Per-query ADC top-k. Exactly-once serving over at-least-once
+    * appends (see [[searchIvfIndexPlanned]]): duplicated scored pairs are
+    * bit-identical and adjacent in the ranking order — collapse them
+    * inside the window instead of paying a second exchange.
+    */
+  private def rankAdc(scored: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(col("adc").asc, col("neighbor_id"))
+    scored.withColumn("prev_n", lag("neighbor_id", 1).over(w))
+      .filter(col("prev_n").isNull || col("prev_n") =!= col("neighbor_id"))
+      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
+      .select("q_id", "neighbor_id", "adc")
+  }
+
+  /** The ivfpq route — both scale levers at once: per query, rank cells
+    * by centroid cosine (the v2 probe rule), build ONE residual lookup
+    * table per probed cell from q − centroid, turn the probed cell ids
+    * into a STATIC `IN` partition filter (the ivf route's file-pruning
+    * discipline), and score the pruned alive code scan with M table
+    * lookups per (query, vector). The driver-side state is K centroids +
+    * PqKs codewords + |Q| × probes tables — all tiny and broadcast.
+    */
+  private def searchIvfPqPlanned(s: SparkSession, path: String,
+      qs: Array[(Long, Array[Double])], cents: Array[(Long, Array[Double])],
+      cb: Array[Array[Double]], k: Int, probes: Int,
+      excludeSelf: Boolean): DataFrame = {
+    import s.implicits._
+    val pqM = cb(0).length / PqS
+    // per (query, probed cell): the residual ADC table
+    val qcell: Seq[(Long, Long, Array[Array[Double]])] = qs.toSeq.flatMap {
+      case (qid, qa) => probedCells(qa, cents, probes).map { case (kid, ke) =>
+        (qid, kid, pqTable(Array.tabulate(qa.length)(i => qa(i) - ke(i)), cb, pqM))
+      }
+    }
+    recoverAside(s, s"$path/codes")
+    val codesRaw = s.read.parquet(s"$path/codes")
+    val byCell: Map[Long, Seq[(Long, Array[Array[Double]])]] =
+      qcell.groupBy(_._2).map { case (cell, rows) =>
+        cell -> rows.map(r => (r._1, r._3))
+      }
+    val bc = s.sparkContext.broadcast((byCell, excludeSelf))
+    val pruned = codesRaw.filter(col("cluster").isInCollection(
+      cellLiterals(codesRaw, qcell.map(_._2).distinct)))
+    val scored = aliveRows(s, path, pruned, "vec_id")
+      .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
+        col("codes"))
+      .as[(Long, Long, Seq[Int])]
+      .mapPartitions { it =>
+        val (m, exclSelf) = bc.value
+        it.flatMap { case (cid, cell, codes) =>
+          val ca = codes.toArray
+          m.getOrElse(cell, Nil).iterator.filter(t => !exclSelf || t._1 != cid)
+            .map { case (qid, tab) => (qid, cid, pqAdc(tab, ca)) }
+        }
+      }.toDF("q_id", "neighbor_id", "adc")
+    rankAdc(scored, k)
+  }
+
+  /** Sample, guard and persist a PQ codebook from `rows` (id, e): the
+    * PqKs smallest md5(id) vectors, j-indexed. Input guards: a short
+    * corpus would make pqEncode index past the collected codebook (AIOOBE
+    * deep in an executor), and a dim not divisible by the subspace width
+    * would SILENTLY drop trailing dims from every code — both must fail
+    * loudly at the public API edge.
+    */
+  private def writeCodebook(rows: DataFrame, path: String): Array[Array[Double]] = {
+    val s = rows.sparkSession
+    import s.implicits._
+    val cb: Array[Seq[Double]] = rows
+      .orderBy(md5(col("id").cast("string")), col("id")).limit(PqKs)
+      .select(col("e")).as[Seq[Double]].collect()
+    require(cb.length == PqKs,
+      s"buildVecIndex: corpus has only ${cb.length} rows — a $PqKs-codeword " +
+        s"codebook needs at least $PqKs vectors")
+    require(cb(0).length % PqS == 0,
+      s"buildVecIndex: embedding dim ${cb(0).length} is not divisible by " +
+        s"the PQ subspace width $PqS — trailing dims would be dropped from every code")
+    s.createDataset(cb.toSeq.zipWithIndex.map { case (e, j) => (j, e) })
+      .toDF("j", "e").write.mode("overwrite").parquet(s"$path/codebook")
+    cb.map(_.toArray)
+  }
+
+  /** The PQ encode kernel of both code tiers' build and append: a vector
+    * column -> its M codeword ids against the broadcast codebook `cb`.
+    * Per-row and stateless, so any batch decomposition of the same
+    * vectors yields identical codes.
+    */
+  private def pqCodes(s: SparkSession,
+      cb: Array[Array[Double]]): org.apache.spark.sql.expressions.UserDefinedFunction = {
+    val bc = s.sparkContext.broadcast(cb)
+    udf((e: Seq[Double]) => pqEncode(e.toArray, bc.value, bc.value(0).length / PqS).toSeq)
+  }
+
+  /** (vec_id, codes) rows of `batch` against the flat codebook `cb`. */
+  private def encodeAgainst(batch: DataFrame, cb: Array[Array[Double]]): DataFrame =
+    batch.select(col("vec_id").cast("long").as("vec_id"),
+      pqCodes(batch.sparkSession, cb)(toDoubles).as("codes"))
+
+  /** (c_id, cluster, r = x − centroid) rows of `batch` against the
+    * persisted centroids — the residual tier's encode input.
+    */
+  private def residualsOf(batch: DataFrame, path: String): DataFrame = {
     val cents = batch.sparkSession.read.parquet(s"$path/centroids")
     assign(withNorm(batch, "c"), cents)
-      .write.mode("append").partitionBy("cluster").parquet(s"$path/postings")
-    noteMutation(path)
+      .join(cents.select(col("k_id").as("cluster"), col("k_e")), "cluster")
+      .select(col("c_id"), col("cluster"),
+        expr("zip_with(c_e, k_e, (x, y) -> x - y)").as("r"))
   }
 
-  /** OFFLINE recenter/rebuild — the consumer of v18's `needs_split`
-    * diagnostic: when appended data has drifted the occupancy (cells
-    * holding the growth the frozen centroids never saw), re-derive the
-    * centroid sample from the CURRENT alive corpus (postings minus
-    * tombstones — the stored vectors ARE the corpus, no external rescan),
-    * re-assign every vector, and crash-safe-swap both `centroids/` and
-    * `postings/` in. Tombstoned rows are compacted away as a side effect.
-    *
-    * Contract (v43's oracle pins it): after rebuild the index is
-    * BIT-INDISTINGUISHABLE from one freshly built on the current corpus —
-    * same centroid rule, same assignment, same serving results — so
-    * recall can only move toward the fresh-index recall, never below it
-    * (VectorOpsSpec gates non-regression under planted cluster drift).
-    *
-    * Scale: one index scan + K-row broadcast re-assignment + one
-    * partitioned write — the compactIvfIndex cost paid once per drift
-    * event, never on the serving path. The rebuild is an OFFLINE job:
-    * the two directory swaps are individually crash-safe (swapAside),
-    * but a query racing BETWEEN them sees mixed geometry: old centroids
-    * probing the NEW cell directories. Because the md5 centroid re-sample
-    * over a mostly-unchanged corpus typically re-selects the same vector
-    * ids, stale centroid ids usually DO name live partitions — the probe
-    * reads possibly-reshaped cells and serves valid exact-cosine scores
-    * over whatever it scanned (recall may shift; results are never
-    * fabricated, but not "empty" either). The versioned-root layout
-    * ([[initVersionedVecIndex]]) closes this window structurally.
-    * Production serializes rebuilds behind the scheduler
-    * that triggers them, exactly like compaction. A CRASH between the two
-    * swaps leaves mixed geometry durably — and the standard retry of the
-    * failed job repairs it completely, because the rebuild derives
-    * everything from the alive postings, which every mixed state
-    * preserves in full.
+  /** (vec_id, cluster, codes) rows of residual rows (c_id, cluster, r)
+    * against the residual codebook `cb`.
     */
-  def rebuildIvfIndex(s: SparkSession, path: String): Unit = {
-    graft.plans.GraftExtensions.register(s)
-    recoverAside(s, s"$path/postings")
-    recoverAside(s, s"$path/centroids")
-    val conf = s.sparkContext.hadoopConfiguration
-    val postingsPath = new org.apache.hadoop.fs.Path(s"$path/postings")
-    val centsPath = new org.apache.hadoop.fs.Path(s"$path/centroids")
-    val fs = postingsPath.getFileSystem(conf)
-    val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val postings = s.read.parquet(postingsPath.toString)
-    val alive =
-      (if (fs.exists(tomb))
-        postings.join(s.read.parquet(tomb.toString), Seq("c_id"), "left_anti")
-      else postings).select(col("c_id"), col("c_e"))
-    // the build-time centroid rule replayed over the alive corpus: the K
-    // smallest md5(id) — deterministic, so the rebuilt index equals a
-    // fresh build on the same data in any engine
-    val freshCents = new org.apache.hadoop.fs.Path(s"$path/centroids_rebuilding")
-    alive.orderBy(md5(col("c_id").cast("string"))).limit(K)
-      .select(col("c_id").as("k_id"), col("c_e").as("k_e"))
-      .write.mode("overwrite").parquet(freshCents.toString)
-    val freshPost = new org.apache.hadoop.fs.Path(s"$path/postings_rebuilding")
-    assign(alive, s.read.parquet(freshCents.toString))
-      .write.mode("overwrite").partitionBy("cluster").parquet(freshPost.toString)
-    swapAside(fs, freshPost, postingsPath)
-    swapAside(fs, freshCents, centsPath)
-    if (fs.exists(tomb)) fs.delete(tomb, true)
-    noteMutation(path)
-  }
+  private def encodeResiduals(res: DataFrame, cb: Array[Array[Double]]): DataFrame =
+    res.select(col("c_id").cast("long").as("vec_id"),
+      col("cluster").cast("long").as("cluster"),
+      pqCodes(res.sparkSession, cb)(col("r")).as("codes"))
 
-  /** The lifecycle queries' staged-build seam (optimization round 14,
-    * VERDICT r13 #3): each v37–v52 query used to rebuild the SAME
-    * deterministic index-of-a-fixed-corpus-slice from scratch into its
-    * private UUID directory — ~15 mostly-identical full builds per
-    * bench/verify sweep. [[graft.core.SessionStaging]] builds each
-    * distinct (kind, slice, dataset) artifact once per JVM and byte-copies
-    * it into every query's private root; everything a query DISTINCTIVELY
-    * exercises — appends, tombstones, compaction swaps, rebuilds,
-    * advisors, version pointers, leases, vacuum, every search — still
-    * runs live against its own copy, and keys never encode mutable root
-    * state. Nothing survives the JVM (the staging root is deleted on
-    * exit), so every bench/oracle invocation still computes the artifact
-    * from the parquet inputs.
+  /** Alive (vec_id, codes) rows of a flat PQ tier — `base` lets a serving
+    * layer pass its cached relation.
     */
-  private def stagedEmbIdent(d: String): String =
-    graft.core.SessionStaging.datasetIdent(d, "embeddings.parquet")
-
-  /** V37 (beyond reference): build the persisted IVF index, then answer
-    * v2's query from the index alone — same semantics, storage-backed, so
-    * v2's oracle gates it verbatim. The corpus is scanned once at build;
-    * the search touches only centroids + probed posting partitions.
-    */
-  val v37: GraftQuery = GraftQuery(
-    "v37_persisted_ivf_index",
-    (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v37_index_$id"
-      val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"ivf:full:${stagedEmbIdent(d)}",
-        path)(buildIvfIndex(emb, _))
-      searchIvfIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, probes = 2)
-    },
-    v2.oracle)
-
-  /** V38 (beyond reference): right-to-be-forgotten on the persisted index
-    * — tombstone every 7th vector, then serve: the deleted ids vanish from
-    * results at the next query while the posting files stay untouched
-    * (centroids are geometry, not data — a deleted centroid-source vector
-    * still anchors its cell). The oracle replays full-corpus centroids
-    * with the deleted rows absent from assignment.
-    */
-  val v38: GraftQuery = GraftQuery(
-    "v38_index_tombstone_delete",
-    (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v38_index_$id"
-      val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"ivf:full:${stagedEmbIdent(d)}",
-        path)(buildIvfIndex(emb, _))
-      deleteFromIvfIndex(s, path, emb.filter(col("vec_id") % 7 === 0))
-      searchIvfIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, probes = 2)
-    },
-    Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-           |cents AS (SELECT vec_id AS k_id, e AS ke FROM v
-           |          ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
-           |assign AS (SELECT vec_id, e, k_id AS cluster FROM (
-           |  SELECT a.vec_id, a.e, c.k_id, row_number() OVER (PARTITION BY a.vec_id
-           |    ORDER BY list_cosine_similarity(a.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM (SELECT * FROM v WHERE vec_id % 7 != 0) a CROSS JOIN cents c)
-           |  WHERE rk = 1),
-           |q AS (SELECT * FROM v WHERE vec_id < 10),
-           |probes AS (SELECT vec_id AS q_id, e AS qe, k_id AS cluster FROM (
-           |  SELECT q.vec_id, q.e, c.k_id, row_number() OVER (PARTITION BY q.vec_id
-           |    ORDER BY list_cosine_similarity(q.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM q CROSS JOIN cents c) WHERE rk <= 2)
-           |SELECT q_id, neighbor_id, cos FROM (
-           |  SELECT p.q_id, a.vec_id AS neighbor_id, list_cosine_similarity(p.qe, a.e) AS cos
-           |  FROM probes p JOIN assign a USING (cluster) WHERE a.vec_id != p.q_id)
-           |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) <= 3""".stripMargin))
-
-  /** Persist the PQ index — the COMPRESSED tier of the persisted-index
-    * family (v37 stores raw vectors; this stores M=8 small codes per
-    * vector, the representation that keeps a billion-vector index in
-    * RAM): `codebook/` (PqKs rows, explicitly j-indexed so codeword
-    * identity survives storage) + `codes/` (vec_id, codes: array<int>).
-    * [[searchPqIndex]] then scores ADC against the CODES alone — raw
-    * embeddings are never read again at serving time.
-    */
-  def buildPqIndex(corpus: DataFrame, path: String): Unit = {
-    val s = corpus.sparkSession
-    import s.implicits._
-    val toD = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-    val cbRows: Array[Seq[Double]] = corpus
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(PqKs)
-      .select(toD).as[Seq[Double]].collect()
-    // input guards: a short corpus would make pqEncode index past the
-    // collected codebook (AIOOBE deep in an executor), and a dim not
-    // divisible by the subspace width would SILENTLY drop trailing dims
-    // from every code — both must fail loudly at the public API edge
-    require(cbRows.length == PqKs,
-      s"buildPqIndex: corpus has only ${cbRows.length} rows — a $PqKs-codeword " +
-        s"codebook needs at least $PqKs vectors")
-    require(cbRows(0).length % PqS == 0,
-      s"buildPqIndex: embedding dim ${cbRows(0).length} is not divisible by " +
-        s"the PQ subspace width $PqS — trailing dims would be dropped from every code")
-    s.createDataset(cbRows.toSeq.zipWithIndex.map { case (e, j) => (j, e) })
-      .toDF("j", "e").write.mode("overwrite").parquet(s"$path/codebook")
-    encodeAgainst(corpus, cbRows.map(_.toArray))
-      .write.mode("overwrite").parquet(s"$path/codes")
-    // build-time distortion baseline (one aggregate row): the reference
-    // point [[pqDriftAudit]] compares appended data against — frozen at
-    // build, never touched by appends
-    pqReconStats(s, path, corpus)
-      .write.mode("overwrite").parquet(s"$path/stats")
-  }
-
-  /** Encode (vec_id, embedding) rows to (vec_id, codes) against a fixed
-    * codebook — the shared kernel of [[buildPqIndex]] and
-    * [[appendToPqIndex]]. Per-row, stateless, broadcast-only: any batch
-    * decomposition of the same vectors yields identical codes.
-    */
-  private def encodeAgainst(batch: DataFrame,
-      cb: Array[Array[Double]]): DataFrame = {
-    val s = batch.sparkSession
-    import s.implicits._
-    val toD = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-    val bc = s.sparkContext.broadcast(cb)
-    batch.select(col("vec_id"), toD.as("e")).as[(Long, Seq[Double])]
-      .mapPartitions { it =>
-        val cbL = bc.value
-        val pqM = cbL(0).length / PqS
-        it.map { case (id, e) => (id, pqEncode(e.toArray, cbL, pqM).toSeq) }
-      }
-      .toDF("vec_id", "codes")
-  }
-
-  private def readPqCodebook(s: SparkSession, path: String): Array[Array[Double]] = {
-    import s.implicits._
-    s.read.parquet(s"$path/codebook")
-      .orderBy("j").select(col("j"), col("e")).as[(Int, Seq[Double])]
-      .collect().map(_._2.toArray)
-  }
-
-  /** Stored codes minus tombstoned rows — every PQ read path (search,
-    * drift audit, compaction) serves only alive vectors, the
-    * [[searchIvfIndex]] keyed-anti-join discipline on the compressed tier.
-    */
-  private def alivePqCodes(s: SparkSession, path: String,
+  private def aliveCodes(s: SparkSession, path: String,
       base: Option[DataFrame] = None): DataFrame = {
     val codes = base.getOrElse {
       recoverAside(s, s"$path/codes")
       s.read.parquet(s"$path/codes")
     }.select("vec_id", "codes")
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path/pq_tombstones")
-    val fs = tombPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (fs.exists(tombPath))
-      codes.join(s.read.parquet(tombPath.toString), Seq("vec_id"), "left_anti")
-    else codes
-  }
-
-  /** Append new vectors to a [[buildPqIndex]] index: encode against the
-    * PERSISTED codebook (codewords are geometry and never move under
-    * running queries — [[pqDriftAudit]] says when the frozen codebook has
-    * drifted far enough from the data to warrant an offline rebuild) and
-    * append the codes. Stream-safe and order-independent exactly like
-    * [[appendToIvfIndex]] (t40 gates it on the ingest stream); a
-    * REDELIVERED batch (foreachBatch at-least-once) merely duplicates
-    * deterministic rows, which serving collapses (see [[searchPqIndex]])
-    * and compaction physically reclaims.
-    */
-  def appendToPqIndex(batch: DataFrame, path: String): Unit = {
-    encodeAgainst(batch, readPqCodebook(batch.sparkSession, path))
-      .write.mode("append").parquet(s"$path/codes")
-    noteMutation(path)
-  }
-
-  /** LOGICAL delete from the PQ index — ids land in a tombstone table and
-    * [[searchPqIndex]] stops serving them at the next query via one keyed
-    * anti-join; space is reclaimed offline by [[compactPqIndex]]. Same
-    * right-to-be-forgotten contract as [[deleteFromIvfIndex]].
-    */
-  def deleteFromPqIndex(s: SparkSession, path: String, ids: DataFrame): Unit = {
-    ids.select(col("vec_id"))
-      .write.mode("append").parquet(s"$path/pq_tombstones")
-    noteMutation(path)
-  }
-
-  /** OFFLINE compaction of the PQ codes: rewrite minus tombstones into a
-    * fresh directory, crash-safe [[swapAside]] swap, drop the tombstones.
-    * Search results are IDENTICAL before and after (VectorOpsSpec pins it).
-    */
-  def compactPqIndex(s: SparkSession, path: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    noteMutation(path) // aside recovery and the rewrite both reshape files
-    recoverAside(s, s"$path/codes")
-    val tomb = new org.apache.hadoop.fs.Path(s"$path/pq_tombstones")
-    val fs = tomb.getFileSystem(conf)
-    if (!fs.exists(tomb)) return
-    val codes = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fresh = new org.apache.hadoop.fs.Path(s"$path/codes_compacting")
-    s.read.parquet(codes.toString)
-      .join(s.read.parquet(tomb.toString), Seq("vec_id"), "left_anti")
-      .dropDuplicates("vec_id") // reclaim rows a redelivered append doubled
-      .write.mode("overwrite").parquet(fresh.toString)
-    swapAside(fs, fresh, codes)
-    fs.delete(tomb, true): Unit
+    aliveRows(s, path, codes, "vec_id")
   }
 
   /** Index-order cosine — bit-identical to DuckDB's
@@ -3079,10 +3295,9 @@ object VectorOps {
   private def pqReconStats(s: SparkSession, path: String,
       corpus: DataFrame): DataFrame = {
     import s.implicits._
-    val toD = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-    val bc = s.sparkContext.broadcast(readPqCodebook(s, path))
-    alivePqCodes(s, path)
-      .join(corpus.select(col("vec_id"), toD.as("e")), "vec_id")
+    val bc = s.sparkContext.broadcast(loadPqCodebook(s, path))
+    aliveCodes(s, path)
+      .join(corpus.select(col("vec_id"), toDoubles.as("e")), "vec_id")
       .select(col("codes"), col("e")).as[(Seq[Int], Seq[Double])]
       .mapPartitions { it =>
         val cbL = bc.value
@@ -3103,8 +3318,8 @@ object VectorOps {
 
   /** Codebook-drift diagnostic — the signal that says WHEN to retrain the
     * frozen PQ codebook: reconstruction distortion of the corpus served
-    * NOW (base + everything [[appendToPqIndex]] added) vs the build-time
-    * baseline persisted in `stats/`. A corpus that drifted away from the
+    * NOW (base + everything appended) vs the build-time baseline
+    * persisted in `stats/`. A corpus that drifted away from the
     * codebook's training distribution encodes worse, the mean
     * reconstruction cosine falls, and once the drop exceeds `margin` the
     * report raises needs_retrain — the PQ twin of v18's needs_split.
@@ -3128,244 +3343,105 @@ object VectorOps {
         (bMean - cMean > margin).as("needs_retrain"))
   }
 
-  // ------------------------------------------------------------- facade
+  /** The lifecycle queries' staged-build seam (optimization round 14,
+    * VERDICT r13 #3): each v37–v52 query used to rebuild the SAME
+    * deterministic index-of-a-fixed-corpus-slice from scratch into its
+    * private UUID directory — ~15 mostly-identical full builds per
+    * bench/verify sweep. [[graft.core.SessionStaging]] builds each
+    * distinct (kind, slice, dataset) artifact once per JVM and byte-copies
+    * it into every query's private root; everything a query DISTINCTIVELY
+    * exercises — appends, tombstones, compaction swaps, rebuilds,
+    * advisors, version pointers, leases, vacuum, every search — still
+    * runs live against its own copy, and keys never encode mutable root
+    * state. Nothing survives the JVM (the staging root is deleted on
+    * exit), so every bench/oracle invocation still computes the artifact
+    * from the parquet inputs.
+    */
+  private def stagedEmbIdent(d: String): String =
+    graft.core.SessionStaging.datasetIdent(d, "embeddings.parquet")
 
-  private def tierExists(s: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p)
+  /** A fresh private scratch root for one lifecycle query run. */
+  private def scratchRoot(name: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft-scratch/${name}_${java.util.UUID.randomUUID()}"
+
+  /** The corpus slices the lifecycle queries build on, by staging-key name. */
+  private val slices: Map[String, Column] = Map("full" -> lit(true),
+    "sub23" -> (col("vec_id") % 3 =!= 0), "sub90" -> (col("vec_id") % 10 =!= 0))
+
+  /** Staging key of the `tiers` index over `slice` of `d`'s embeddings. */
+  private def stageKeyOf(d: String, tiers: String, slice: String): String =
+    s"$tiers:$slice:${stagedEmbIdent(d)}"
+
+  /** A private copy of the staged `tiers` index over `slice`, at a fresh
+    * scratch root `name_<uuid>`.
+    */
+  private def stagedIndex(s: SparkSession, d: String, name: String,
+      tiers: String, slice: String): String = {
+    val path = scratchRoot(name)
+    graft.core.SessionStaging.into(s, stageKeyOf(d, tiers, slice), path)(
+      buildVecIndex(Tables.embeddings(s, d).filter(slices(slice)), _, tiers))
+    path
   }
 
-  /** Build BOTH persisted tiers under one index root: `postings/` (raw
-    * vectors, cluster-partitioned — the IVF tier) and `codebook/` +
-    * `codes/` (the compressed PQ tier). One root, one lifecycle — the
-    * facade routes per-query ([[searchVecIndex]]), deletes fan out to
-    * both tiers ([[deleteFromVecIndex]]).
+  /** A fresh versioned root: v1 = the staged `tiers` build over the 90%
+    * slice, then the other 10% appended against v1's frozen geometry.
     */
-  def buildVecIndex(corpus: DataFrame, path: String): Unit = {
-    buildIvfIndex(corpus, path)
-    buildPqIndex(corpus, path)
+  private def grownVersionedRoot(s: SparkSession, d: String, name: String,
+      tiers: String): String = {
+    val root = scratchRoot(name)
+    val emb = Tables.embeddings(s, d)
+    initVersionedVecIndex(emb.filter(slices("sub90")), root, tiers,
+      stageKey = Some(stageKeyOf(d, tiers, "sub90")))
+    appendToVersionedVecIndex(emb.filter(col("vec_id") % 10 === 0), root)
+    root
   }
 
-  /** The SERVING PLANNER over the persisted tiers — one entry point that
-    * picks a route per query budget, the way a production vector store
-    * fronts its index files:
-    *
-    *   - `"ivf"`    — raw-vector probed-cell search ([[searchIvfIndex]]):
-    *                  exact scores inside the probed cells, reads floats.
-    *   - `"pq"`     — code-only ADC scan ([[searchPqIndex]]): cheapest IO
-    *                  (8 ints/vector), approximate scores.
-    *   - `"rerank"` — two-stage (the v15 shape): PQ codes nominate
-    *                  `rerankCandidates` ids per query, raw vectors are
-    *                  fetched BY ID from the postings tier for exact
-    *                  cosine rerank — code-scan IO with exact final
-    *                  scores; the fetch touches |Q| x candidates rows,
-    *                  never the corpus.
-    *   - `"auto"`   — both tiers present -> "rerank" (the best
-    *                  quality/IO point); otherwise whichever tier exists.
-    *
-    * Output: (q_id, neighbor_id, cos) for ivf/rerank; (q_id, neighbor_id,
-    * adc) for pq — native scores per route, each oracle-gated
-    * (serve_vec_search / _pq / _rerank) with a recall eval next to them
-    * (serve_vec_recall).
+  /** V37 (beyond reference): build the persisted IVF index, then answer
+    * v2's query from the index alone — same semantics, storage-backed, so
+    * v2's oracle gates it verbatim. The corpus is scanned once at build;
+    * the search touches only centroids + probed posting partitions.
     */
-  def searchVecIndex(s: SparkSession, path: String, queries: DataFrame,
-      k: Int, probes: Int = 2, tier: String = "auto",
-      rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
-    // self-heal BEFORE tier detection: a crash between swapAside's two
-    // renames leaves a tier at `<dir>_old` — without recovery here, tier
-    // probes would see it as absent and "auto" would silently reroute
-    // (e.g. rerank -> pq, ADC scores instead of exact cosine) instead of
-    // serving the intact data
-    recoverAside(s, s"$path/postings")
-    recoverAside(s, s"$path/codes")
-    recoverAside(s, s"$path/centroids")
-    val hasIvf = tierExists(s, s"$path/postings")
-    val hasPq = tierExists(s, s"$path/codes")
-    // a residual (IVF-PQ) root is self-describing: its codes carry the
-    // cluster partition column, which the flat PQ tier's codes never do
-    def residualLayout: Boolean = hasPq && !hasIvf &&
-      s.read.parquet(s"$path/codes").schema.fieldNames.contains("cluster")
-    val resolved = tier match {
-      case "auto" =>
-        if (hasIvf && hasPq) "rerank"
-        else if (hasIvf) "ivf"
-        else if (residualLayout) "ivfpq"
-        else if (hasPq) "pq"
-        else sys.error(s"searchVecIndex: no index tier found under $path")
-      case t @ ("ivf" | "pq" | "rerank" | "ivfpq") => t
-      case other => sys.error(
-        s"searchVecIndex: unknown tier '$other' (ivf | pq | rerank | ivfpq | auto)")
-    }
-    resolved match {
-      case "ivf" =>
-        require(hasIvf, s"ivf route needs $path/postings")
-        searchIvfIndex(s, path, queries, k, probes, excludeSelf)
-      case "ivfpq" =>
-        require(hasPq && s.read.parquet(s"$path/codes")
-            .schema.fieldNames.contains("cluster"),
-          s"ivfpq route needs cluster-partitioned codes under $path " +
-            "(a buildIvfPqIndex root, not a flat PQ tier)")
-        searchIvfPqIndex(s, path, queries, k, probes, excludeSelf)
-      case "pq" =>
-        require(hasPq, s"pq route needs $path/codes")
-        searchPqIndex(s, path, queries, k, excludeSelf)
-      case "rerank" =>
-        require(hasIvf && hasPq, s"rerank route needs both tiers under $path")
-        searchRerankPlanned(s, path, collectQueryVectors(queries),
-          loadPqCodebook(s, path), k, rerankCandidates, excludeSelf)
-    }
-  }
+  val v37: GraftQuery = GraftQuery(
+    "v37_persisted_ivf_index",
+    (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val path = stagedIndex(s, d, "v37_index", "ivf", "full")
+      searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "ivf")
+    },
+    v2.oracle)
 
-  /** The two-stage rerank route with caller-supplied planning inputs
-    * (cached codebook + query batch — see [[loadIvfCentroids]]'s serving
-    * contract): PQ codes nominate `rerankCandidates` ids per query
-    * (stage 1), raw vectors are fetched BY ID from the postings tier for
-    * exact cosine rerank (stage 2). The query vectors re-enter stage 2 as
-    * a broadcast local relation — same doubles [[withNorm]] would
-    * produce, so results are bit-identical to the unplanned route.
+  /** V38 (beyond reference): right-to-be-forgotten on the persisted index
+    * — tombstone every 7th vector, then serve: the deleted ids vanish from
+    * results at the next query while the posting files stay untouched
+    * (centroids are geometry, not data — a deleted centroid-source vector
+    * still anchors its cell). The oracle replays full-corpus centroids
+    * with the deleted rows absent from assignment.
     */
-  def searchRerankPlanned(s: SparkSession, path: String,
-      qsArr: Array[(Long, Array[Double])], cb: Array[Array[Double]],
-      k: Int, rerankCandidates: Int = 32, excludeSelf: Boolean = true,
-      codes: Option[DataFrame] = None,
-      postings: Option[DataFrame] = None,
-      compactForServe: Boolean = false): DataFrame = {
-    import s.implicits._
-    graft.plans.GraftExtensions.register(s)
-    // stage 1: code-only candidate generation
-    val cand = searchPqIndexPlanned(s, path, qsArr, cb, rerankCandidates,
-      excludeSelf, codes, compactForServe).select("q_id", "neighbor_id")
-    // stage 2: fetch raw vectors for candidate ids only — a broadcast
-    // id join against the postings tier (IVF tombstones respected),
-    // then exact cosine + per-query rank
-    val postingsDf = postings.getOrElse {
-      recoverAside(s, s"$path/postings")
-      s.read.parquet(s"$path/postings")
-    }
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tombPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val alive =
-      if (fs.exists(tombPath))
-        postingsDf.join(s.read.parquet(tombPath.toString), Seq("c_id"), "left_anti")
-      else postingsDf
-    val qLocal = s.createDataset(qsArr.toSeq.map { case (id, e) => (id, e.toSeq) })
-      .toDF("q_id", "q_e")
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    val fetched = broadcast(cand)
-      .join(alive, col("neighbor_id") === col("c_id"))
-      .join(broadcast(qLocal), "q_id")
-      .withColumn("cos", cosine("q_e", "c_e"))
-    // the serving posture: see searchIvfIndexPlanned's compactForServe
-    (if (compactForServe) fetched.coalesce(1) else fetched)
-      // duplicated posting rows from a redelivered append would multiply
-      // through the id join — the duplicates are bit-identical and
-      // adjacent in the ranking order, so collapse them inside the
-      // window (no extra exchange)
-      .withColumn("prev_c", lag("c_id", 1).over(w))
-      .filter(col("prev_c").isNull || col("prev_c") =!= col("c_id"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("c_id").as("neighbor_id"), col("cos"))
-  }
-
-  /** The layout probe shared by every facade maintenance entry point —
-    * the SAME rule [[searchVecIndex]] routes on, so maintenance and
-    * serving can never disagree about what a root is: a residual
-    * ([[buildIvfPqIndex]]) root has cluster-partitioned `codes/` and no
-    * raw-vector `postings/` tier.
-    */
-  private def isResidualRoot(s: SparkSession, path: String): Boolean =
-    !tierExists(s, s"$path/postings") && tierExists(s, s"$path/codes") &&
-      s.read.parquet(s"$path/codes").schema.fieldNames.contains("cluster")
-
-  /** Right-to-be-forgotten across the whole index root: tombstone `ids`
-    * (a vec_id column) in every tier present. Serving stops at the next
-    * query on all routes; space is reclaimed by [[compactVecIndex]].
-    * A residual IVF-PQ root dispatches to [[deleteFromIvfPqIndex]]
-    * (its serving path anti-joins `tombstones/`, not the flat tier's
-    * `pq_tombstones/` — writing the wrong file would silently keep
-    * serving deleted ids on the very route "auto" picks for such roots).
-    */
-  def deleteFromVecIndex(s: SparkSession, path: String, ids: DataFrame): Unit = {
-    recoverAside(s, s"$path/postings")
-    recoverAside(s, s"$path/codes")
-    val pinned = ids.select(col("vec_id")).localCheckpoint()
-    if (isResidualRoot(s, path)) deleteFromIvfPqIndex(s, path, pinned)
-    else {
-      if (tierExists(s, s"$path/postings")) deleteFromIvfIndex(s, path, pinned)
-      if (tierExists(s, s"$path/codes")) deleteFromPqIndex(s, path, pinned)
-    }
-  }
-
-  /** Offline compaction of every tier present (each a crash-safe
-    * rewrite-and-swap); results on every route are identical before and
-    * after. A residual root dispatches to [[compactIvfPqIndex]], whose
-    * rewrite keeps `partitionBy("cluster")` — the flat-tier compactor
-    * would silently flatten the partition-pruned layout serving depends
-    * on.
-    */
-  def compactVecIndex(s: SparkSession, path: String): Unit = {
-    recoverAside(s, s"$path/postings")
-    recoverAside(s, s"$path/codes")
-    if (isResidualRoot(s, path)) compactIvfPqIndex(s, path)
-    else {
-      if (tierExists(s, s"$path/postings")) compactIvfIndex(s, path)
-      if (tierExists(s, s"$path/codes")) compactPqIndex(s, path)
-    }
-  }
-
-  /** ADC search over a [[buildPqIndex]] index: the codebook (PqKs tiny
-    * rows) and query vectors build per-query lookup tables driver-side,
-    * and the corpus-side scan reads ONLY the stored codes — M table
-    * lookups per (query, vector), no float vectors, no shuffle before
-    * the per-query top-k. Bit-identical to the in-memory v8 path.
-    */
-  def searchPqIndex(s: SparkSession, path: String, queries: DataFrame,
-      k: Int, excludeSelf: Boolean = true): DataFrame =
-    searchPqIndexPlanned(s, path, collectQueryVectors(queries),
-      loadPqCodebook(s, path), k, excludeSelf)
-
-  /** The PqKs-row codebook as a driver array — PUBLIC for the same
-    * serve-layer caching contract as [[loadIvfCentroids]].
-    */
-  def loadPqCodebook(s: SparkSession, path: String): Array[Array[Double]] =
-    readPqCodebook(s, path)
-
-  /** [[searchPqIndex]] with caller-supplied planning inputs (cached
-    * codebook + query batch): one code-scan Spark job per poll,
-    * bit-identical results.
-    */
-  def searchPqIndexPlanned(s: SparkSession, path: String,
-      qs: Array[(Long, Array[Double])], cb: Array[Array[Double]],
-      k: Int, excludeSelf: Boolean = true,
-      codes: Option[DataFrame] = None,
-      compactForServe: Boolean = false): DataFrame = {
-    import s.implicits._
-    val bc = s.sparkContext.broadcast((cb, qs, excludeSelf))
-    val scored0 = alivePqCodes(s, path, codes).as[(Long, Seq[Int])]
-      .mapPartitions { it =>
-        val (cbL, qL, exclSelf) = bc.value
-        val pqM = cbL(0).length / PqS
-        val qtab = qL.map { case (qid, qa) => (qid, pqTable(qa, cbL, pqM)) }
-        it.flatMap { case (cid, codes) =>
-          val ca = codes.toArray
-          qtab.iterator.filter(t => !exclSelf || t._1 != cid).map { case (qid, tab) =>
-            (qid, cid, pqAdc(tab, ca))
-          }
-        }
-      }.toDF("q_id", "neighbor_id", "adc")
-    // the serving posture: see searchIvfIndexPlanned's compactForServe
-    val scored = if (compactForServe) scored0.coalesce(1) else scored0
-    // exactly-once serving over at-least-once appends (see
-    // searchIvfIndex): duplicated scored pairs are bit-identical and
-    // adjacent in the ranking order — collapse them inside the window
-    // instead of paying a second exchange
-    val w = Window.partitionBy("q_id").orderBy(col("adc").asc, col("neighbor_id"))
-    scored.withColumn("prev_n", lag("neighbor_id", 1).over(w))
-      .filter(col("prev_n").isNull || col("prev_n") =!= col("neighbor_id"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select("q_id", "neighbor_id", "adc")
-  }
+  val v38: GraftQuery = GraftQuery(
+    "v38_index_tombstone_delete",
+    (s, d) => {
+      val emb = Tables.embeddings(s, d)
+      val path = stagedIndex(s, d, "v38_index", "ivf", "full")
+      deleteFromVecIndex(s, path, emb.filter(col("vec_id") % 7 === 0))
+      searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "ivf")
+    },
+    Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+           |cents AS (SELECT vec_id AS k_id, e AS ke FROM v
+           |          ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
+           |assign AS (SELECT vec_id, e, k_id AS cluster FROM (
+           |  SELECT a.vec_id, a.e, c.k_id, row_number() OVER (PARTITION BY a.vec_id
+           |    ORDER BY list_cosine_similarity(a.e, c.ke) DESC, c.k_id) AS rk
+           |  FROM (SELECT * FROM v WHERE vec_id % 7 != 0) a CROSS JOIN cents c)
+           |  WHERE rk = 1),
+           |q AS (SELECT * FROM v WHERE vec_id < 10),
+           |probes AS (SELECT vec_id AS q_id, e AS qe, k_id AS cluster FROM (
+           |  SELECT q.vec_id, q.e, c.k_id, row_number() OVER (PARTITION BY q.vec_id
+           |    ORDER BY list_cosine_similarity(q.e, c.ke) DESC, c.k_id) AS rk
+           |  FROM q CROSS JOIN cents c) WHERE rk <= 2)
+           |SELECT q_id, neighbor_id, cos FROM (
+           |  SELECT p.q_id, a.vec_id AS neighbor_id, list_cosine_similarity(p.qe, a.e) AS cos
+           |  FROM probes p JOIN assign a USING (cluster) WHERE a.vec_id != p.q_id)
+           |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) <= 3""".stripMargin))
 
   /** V39 (beyond reference): the persisted PQ index answering v8's query
     * from stored codes alone — same semantics, so v8's oracle gates it
@@ -3374,12 +3450,9 @@ object VectorOps {
   val v39: GraftQuery = GraftQuery(
     "v39_persisted_pq_index",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v39_pqidx_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"pq:full:${stagedEmbIdent(d)}",
-        path)(buildPqIndex(emb, _))
-      searchPqIndex(s, path, emb.filter(col("vec_id") < 10), k = 3)
+      val path = stagedIndex(s, d, "v39_pqidx", "pq", "full")
+      searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "pq")
     },
     v8.oracle)
 
@@ -3392,14 +3465,11 @@ object VectorOps {
   val v40: GraftQuery = GraftQuery(
     "v40_pq_index_append",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v40_pqidx_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"pq:sub23:${stagedEmbIdent(d)}",
-        path)(buildPqIndex(emb.filter(col("vec_id") % 3 =!= 0), _))
-      appendToPqIndex(emb.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 === 0), path)
-      appendToPqIndex(emb.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 =!= 0), path)
-      searchPqIndex(s, path, emb.filter(col("vec_id") < 10), k = 3)
+      val path = stagedIndex(s, d, "v40_pqidx", "pq", "sub23")
+      appendToVecIndex(emb.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 === 0), path)
+      appendToVecIndex(emb.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 =!= 0), path)
+      searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "pq")
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
            |cb AS (SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS j, e
@@ -3437,14 +3507,11 @@ object VectorOps {
   val v41: GraftQuery = GraftQuery(
     "v41_pq_tombstone_compact",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v41_pqidx_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"pq:full:${stagedEmbIdent(d)}",
-        path)(buildPqIndex(emb, _))
-      deleteFromPqIndex(s, path, emb.filter(col("vec_id") % 7 === 0))
-      compactPqIndex(s, path)
-      searchPqIndex(s, path, emb.filter(col("vec_id") < 10), k = 3)
+      val path = stagedIndex(s, d, "v41_pqidx", "pq", "full")
+      deleteFromVecIndex(s, path, emb.filter(col("vec_id") % 7 === 0))
+      compactVecIndex(s, path)
+      searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "pq")
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
            |cb AS (SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS j, e
@@ -3484,12 +3551,9 @@ object VectorOps {
   val v42: GraftQuery = GraftQuery(
     "v42_pq_drift_audit",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v42_pqidx_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"pq:sub90:${stagedEmbIdent(d)}",
-        path)(buildPqIndex(emb.filter(col("vec_id") % 10 =!= 0), _))
-      appendToPqIndex(emb.filter(col("vec_id") % 10 === 0), path)
+      val path = stagedIndex(s, d, "v42_pqidx", "pq", "sub90")
+      appendToVecIndex(emb.filter(col("vec_id") % 10 === 0), path)
       pqDriftAudit(s, path, emb)
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -3524,218 +3588,75 @@ object VectorOps {
   /** V43 (beyond reference): the offline RECENTER consuming v18's signal
     * — build on "yesterday's" corpus, append "today's" batch against the
     * frozen geometry (occupancy drifts; v18 reports it), then
-    * [[rebuildIvfIndex]]: the index must come out BIT-INDISTINGUISHABLE
+    * [[rebuildVecIndex]]: the index must come out BIT-INDISTINGUISHABLE
     * from a fresh build on the current corpus, which is why v2's oracle
     * (fresh-index search over the full table) gates it verbatim.
     */
   val v43: GraftQuery = GraftQuery(
     "v43_ivf_rebuild",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v43_index_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"ivf:sub90:${stagedEmbIdent(d)}",
-        path)(buildIvfIndex(emb.filter(col("vec_id") % 10 =!= 0), _))
-      appendToIvfIndex(emb.filter(col("vec_id") % 10 === 0), path)
-      rebuildIvfIndex(s, path)
-      searchIvfIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, probes = 2)
+      val path = stagedIndex(s, d, "v43_index", "ivf", "sub90")
+      appendToVecIndex(emb.filter(col("vec_id") % 10 === 0), path)
+      rebuildVecIndex(s, path)
+      searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "ivf")
     },
     v2.oracle)
 
-  // ------------------------------------------------- residual IVF-PQ tier
-
-  /** Persist the FULL IVF-PQ composition — the storage shape production
-    * vector stores ship (FAISS IndexIVFPQ): `centroids/` (cell geometry),
-    * `codebook/` (PqKs RESIDUAL codewords — quantizing x − centroid
-    * instead of x concentrates the codebook on within-cell variation,
-    * which is why real indexes encode residuals), `codes/` (vec_id,
-    * codes) PARTITIONED BY cluster. Pruning and compression COMPOSE at
-    * serving time: a query reads only its probed cells' directories, and
-    * those directories hold M small ints per vector — at 100 TB the scan
-    * is ~probes/K of the corpus as codes, never a float.
-    *
-    * Use its OWN index root: its `codes/` layout (cluster-partitioned)
-    * differs from [[buildPqIndex]]'s flat codes, so a residual index must
-    * not share a root with a [[buildVecIndex]] two-tier root.
+  /** The residual IVF-PQ oracle (v44/v45/v46, t42): cell assignment,
+    * residuals, the residual codebook, per-cell query tables and the ADC
+    * rank replayed bit-for-bit. `base` = the predicate of the slice the
+    * geometry was trained on (None = the whole corpus; the rest arrived
+    * by append against it); `alive` = the predicate codes survive
+    * deletion by.
     */
-  def buildIvfPqIndex(corpus: DataFrame, path: String): Unit = {
-    val s = corpus.sparkSession
-    import s.implicits._
-    graft.plans.GraftExtensions.register(s)
-    val cents = centroidsOf(corpus)
-    cents.write.mode("overwrite").parquet(s"$path/centroids")
-    // residuals, pinned once: reused by the codebook sample AND the encode
-    val residuals = assign(withNorm(corpus, "c"), cents)
-      .join(cents.select(col("k_id").as("cluster"), col("k_e")), "cluster")
-      .select(col("c_id"), col("cluster"),
-        expr("zip_with(c_e, k_e, (x, y) -> x - y)").as("r"))
-      .localCheckpoint()
-    val cbRows: Array[Seq[Double]] = residuals
-      .orderBy(md5(col("c_id").cast("string")), col("c_id")).limit(PqKs)
-      .select(col("r")).as[Seq[Double]].collect()
-    require(cbRows.length == PqKs,
-      s"buildIvfPqIndex: corpus has only ${cbRows.length} rows — a $PqKs-codeword " +
-        s"codebook needs at least $PqKs vectors")
-    require(cbRows(0).length % PqS == 0,
-      s"buildIvfPqIndex: embedding dim ${cbRows(0).length} is not divisible " +
-        s"by the PQ subspace width $PqS")
-    s.createDataset(cbRows.toSeq.zipWithIndex.map { case (e, j) => (j, e) })
-      .toDF("j", "e").write.mode("overwrite").parquet(s"$path/codebook")
-    encodeResiduals(residuals, cbRows.map(_.toArray))
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/codes")
-  }
-
-  /** The shared residual-encode kernel of [[buildIvfPqIndex]] and
-    * [[appendToIvfPqIndex]] (the [[encodeAgainst]] twin for the fused
-    * tier): (c_id, cluster, r) rows → (vec_id, cluster, codes). Factored
-    * so the order-independence contract (v45/t42) cannot drift between
-    * the two call sites.
-    */
-  private def encodeResiduals(res: DataFrame,
-      cb: Array[Array[Double]]): DataFrame = {
-    val s = res.sparkSession
-    import s.implicits._
-    val bc = s.sparkContext.broadcast(cb)
-    res.select(col("c_id"), col("cluster"), col("r"))
-      .as[(Long, Long, Seq[Double])]
-      .mapPartitions { it =>
-        val cbL = bc.value
-        val pqM = cbL(0).length / PqS
-        it.map { case (id, cl, r) =>
-          (id, cl, pqEncode(r.toArray, cbL, pqM).toSeq)
-        }
-      }
-      .toDF("vec_id", "cluster", "codes")
-  }
-
-  /** Append to a [[buildIvfPqIndex]] index: assign against the persisted
-    * centroids and residual-encode against the persisted codebook — both
-    * frozen geometry, so the append is per-row, stateless and
-    * order-independent like [[appendToIvfIndex]]/[[appendToPqIndex]].
-    */
-  def appendToIvfPqIndex(batch: DataFrame, path: String): Unit = {
-    val s = batch.sparkSession
-    graft.plans.GraftExtensions.register(s)
-    val cents = s.read.parquet(s"$path/centroids")
-    val residuals = assign(withNorm(batch, "c"), cents)
-      .join(cents.select(col("k_id").as("cluster"), col("k_e")), "cluster")
-      .select(col("c_id"), col("cluster"),
-        expr("zip_with(c_e, k_e, (x, y) -> x - y)").as("r"))
-    encodeResiduals(residuals, readPqCodebook(s, path))
-      .write.mode("append").partitionBy("cluster").parquet(s"$path/codes")
-    noteMutation(path)
-  }
-
-  /** LOGICAL delete from a residual IVF-PQ index — same tombstone
-    * contract as the other tiers; space reclaimed by
-    * [[compactIvfPqIndex]].
-    */
-  def deleteFromIvfPqIndex(s: SparkSession, path: String,
-      ids: DataFrame): Unit = {
-    ids.select(col("vec_id"))
-      .write.mode("append").parquet(s"$path/tombstones")
-    noteMutation(path)
-  }
-
-  /** OFFLINE compaction of the residual tier: rewrite the
-    * cluster-partitioned codes minus tombstones, crash-safe
-    * [[swapAside]] swap, drop the tombstones. Results identical before
-    * and after (VectorOpsSpec pins it).
-    */
-  def compactIvfPqIndex(s: SparkSession, path: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    noteMutation(path) // aside recovery and the rewrite both reshape files
-    recoverAside(s, s"$path/codes")
-    val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val fs = tomb.getFileSystem(conf)
-    if (!fs.exists(tomb)) return
-    val codes = new org.apache.hadoop.fs.Path(s"$path/codes")
-    val fresh = new org.apache.hadoop.fs.Path(s"$path/codes_compacting")
-    s.read.parquet(codes.toString)
-      .join(s.read.parquet(tomb.toString), Seq("vec_id"), "left_anti")
-      .dropDuplicates("vec_id") // reclaim rows a redelivered append doubled
-      .write.mode("overwrite").partitionBy("cluster").parquet(fresh.toString)
-    swapAside(fs, fresh, codes)
-    fs.delete(tomb, true): Unit
-  }
-
-  /** ADC search over a [[buildIvfPqIndex]] index — both scale levers at
-    * once: per query, rank cells by centroid cosine (the v2 probe rule),
-    * build ONE residual lookup table per probed cell from q − centroid,
-    * turn the probed cell ids into a STATIC `IN` partition filter (the
-    * [[searchIvfIndex]] file-pruning discipline), and score the pruned
-    * code scan with M table lookups per (query, vector). The driver-side
-    * state is K centroids + PqKs codewords + |Q| × probes tables — all
-    * tiny and broadcast.
-    */
-  def searchIvfPqIndex(s: SparkSession, path: String, queries: DataFrame,
-      k: Int, probes: Int = 2, excludeSelf: Boolean = true): DataFrame = {
-    import s.implicits._
-    graft.plans.GraftExtensions.register(s)
-    recoverAside(s, s"$path/codes")
-    recoverAside(s, s"$path/centroids")
-    val toD = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
-    val centRows: Array[(Long, Array[Double])] = s.read
-      .parquet(s"$path/centroids")
-      .select(col("k_id"), col("k_e")).as[(Long, Seq[Double])]
-      .collect().map { case (i, e) => (i, e.toArray) }
-    val cb = readPqCodebook(s, path)
-    val qs: Array[(Long, Array[Double])] = queries
-      .select(col("vec_id"), toD).as[(Long, Seq[Double])]
-      .collect().map { case (id, e) => (id, e.toArray) }.sortBy(_._1)
-    val pqM = cb(0).length / PqS
-    // per (query, probed cell): the residual ADC table
-    val qcell: Seq[(Long, Long, Array[Array[Double]])] = qs.toSeq.flatMap {
-      case (qid, qa) =>
-        centRows.map { case (kid, ke) => (kid, ke, cosArr(qa, ke)) }
-          .sortBy { case (kid, _, c) => (-c, kid) }.take(probes)
-          .map { case (kid, ke, _) =>
-            val res = Array.tabulate(qa.length)(i => qa(i) - ke(i))
-            (qid, kid, pqTable(res, cb, pqM))
-          }
-    }
-    val cellIds = qcell.map(_._2).distinct
-    val codesRaw = s.read.parquet(s"$path/codes")
-    // partition-dir dtype contract — see searchIvfIndex
-    val cells: Seq[Any] = codesRaw.schema("cluster").dataType match {
-      case org.apache.spark.sql.types.IntegerType => cellIds.map(_.toInt)
-      case _ => cellIds
-    }
-    val byCell: Map[Long, Seq[(Long, Array[Array[Double]])]] =
-      qcell.groupBy(_._2).map { case (cell, rows) =>
-        cell -> rows.map(r => (r._1, r._3))
-      }
-    val bc = s.sparkContext.broadcast((byCell, excludeSelf))
-    val pruned = codesRaw.filter(col("cluster").isInCollection(cells))
-    // logical deletes (deleteFromIvfPqIndex): keyed anti-join on the
-    // serving path, reclaimed offline by compactIvfPqIndex
-    val tombPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    val tombFs = tombPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val alive =
-      if (tombFs.exists(tombPath))
-        pruned.join(s.read.parquet(tombPath.toString), Seq("vec_id"), "left_anti")
-      else pruned
-    val scored = alive
-      .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
-        col("codes"))
-      .as[(Long, Long, Seq[Int])]
-      .mapPartitions { it =>
-        val (m, exclSelf) = bc.value
-        it.flatMap { case (cid, cell, codes) =>
-          val ca = codes.toArray
-          m.getOrElse(cell, Nil).iterator.filter(t => !exclSelf || t._1 != cid)
-            .map { case (qid, tab) => (qid, cid, pqAdc(tab, ca)) }
-        }
-      }.toDF("q_id", "neighbor_id", "adc")
-    // exactly-once serving over at-least-once appends (see
-    // searchIvfIndex): duplicated scored pairs are bit-identical and
-    // adjacent in the ranking order — collapse them inside the window
-    // instead of paying a second exchange
-    val w = Window.partitionBy("q_id").orderBy(col("adc").asc, col("neighbor_id"))
-    scored.withColumn("prev_n", lag("neighbor_id", 1).over(w))
-      .filter(col("prev_n").isNull || col("prev_n") =!= col("neighbor_id"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select("q_id", "neighbor_id", "adc")
+  private[graft] def ivfPqOracle(base: Option[String],
+      alive: Option[String]): String = {
+    val baseCte = base.fold("")(w => s"base AS (SELECT * FROM v WHERE $w),\n")
+    val geometry = if (base.isDefined) "base" else "v"
+    val cbWhere = base.fold("")(w => s"WHERE $w\n       ")
+    val aliveCte = alive.fold("")(w => s"alive AS (SELECT * FROM codes WHERE $w),\n")
+    val scan = if (alive.isDefined) "alive" else "codes"
+    s"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+           |${baseCte}cents AS (SELECT vec_id AS k_id, e AS ke FROM $geometry
+           |          ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
+           |assign AS (SELECT vec_id, e, k_id AS cluster FROM (
+           |  SELECT v.vec_id, v.e, c.k_id, row_number() OVER (PARTITION BY v.vec_id
+           |    ORDER BY list_cosine_similarity(v.e, c.ke) DESC, c.k_id) AS rk
+           |  FROM v CROSS JOIN cents c) WHERE rk = 1),
+           |res AS (SELECT a.vec_id, a.cluster,
+           |  list_transform(generate_series(1, len(a.e)), i -> a.e[i] - c.ke[i]) AS r
+           |  FROM assign a JOIN cents c ON c.k_id = a.cluster),
+           |cb AS (SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS j, r AS e
+           |       FROM res ${cbWhere}ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
+           |m AS (SELECT unnest(generate_series(0, 7)) AS m),
+           |codes AS (SELECT vec_id, cluster, m, j AS code FROM (
+           |  SELECT r.vec_id, r.cluster, m.m, cb.j, row_number() OVER (PARTITION BY r.vec_id, m.m
+           |    ORDER BY list_reduce(list_transform(generate_series(1, 8),
+           |      i -> (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i])),
+           |      (a, b) -> a + b) ASC, cb.j) AS rk
+           |  FROM res r CROSS JOIN m CROSS JOIN cb) WHERE rk = 1),
+           |${aliveCte}q AS (SELECT * FROM v WHERE vec_id < 10),
+           |probes AS (SELECT vec_id AS q_id, qe, cluster FROM (
+           |  SELECT q.vec_id, q.e AS qe, c.k_id AS cluster,
+           |    row_number() OVER (PARTITION BY q.vec_id
+           |      ORDER BY list_cosine_similarity(q.e, c.ke) DESC, c.k_id) AS rk
+           |  FROM q CROSS JOIN cents c) WHERE rk <= 2),
+           |qres AS (SELECT p.q_id, p.cluster,
+           |  list_transform(generate_series(1, len(p.qe)), i -> p.qe[i] - c.ke[i]) AS qr
+           |  FROM probes p JOIN cents c ON c.k_id = p.cluster),
+           |qd AS (SELECT qr.q_id, qr.cluster, m.m, cb.j,
+           |  list_reduce(list_transform(generate_series(1, 8),
+           |    i -> (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i])),
+           |    (a, b) -> a + b) AS dd
+           |  FROM qres qr CROSS JOIN m CROSS JOIN cb),
+           |scored AS (SELECT qd.q_id, c.vec_id AS neighbor_id,
+           |  list_reduce(list(qd.dd ORDER BY qd.m), (a, b) -> a + b) AS adc
+           |  FROM $scan c JOIN qd ON qd.cluster = c.cluster AND qd.m = c.m AND qd.j = c.code
+           |  WHERE c.vec_id != qd.q_id
+           |  GROUP BY qd.q_id, c.vec_id)
+           |SELECT q_id, neighbor_id, adc FROM scored
+           |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc ASC, neighbor_id) <= 3""".stripMargin
   }
 
   /** V44 (beyond reference): the persisted residual IVF-PQ index — build,
@@ -3747,53 +3668,11 @@ object VectorOps {
   val v44: GraftQuery = GraftQuery(
     "v44_ivfpq_persisted",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v44_ivfpq_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"ivfpq:full:${stagedEmbIdent(d)}",
-        path)(buildIvfPqIndex(emb, _))
-      searchIvfPqIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, probes = 2)
+      val path = stagedIndex(s, d, "v44_ivfpq", "ivfpq", "full")
+      searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "ivfpq")
     },
-    Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-           |cents AS (SELECT vec_id AS k_id, e AS ke FROM v
-           |          ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
-           |assign AS (SELECT vec_id, e, k_id AS cluster FROM (
-           |  SELECT v.vec_id, v.e, c.k_id, row_number() OVER (PARTITION BY v.vec_id
-           |    ORDER BY list_cosine_similarity(v.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM v CROSS JOIN cents c) WHERE rk = 1),
-           |res AS (SELECT a.vec_id, a.cluster,
-           |  list_transform(generate_series(1, len(a.e)), i -> a.e[i] - c.ke[i]) AS r
-           |  FROM assign a JOIN cents c ON c.k_id = a.cluster),
-           |cb AS (SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS j, r AS e
-           |       FROM res ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-           |m AS (SELECT unnest(generate_series(0, 7)) AS m),
-           |codes AS (SELECT vec_id, cluster, m, j AS code FROM (
-           |  SELECT r.vec_id, r.cluster, m.m, cb.j, row_number() OVER (PARTITION BY r.vec_id, m.m
-           |    ORDER BY list_reduce(list_transform(generate_series(1, 8),
-           |      i -> (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i])),
-           |      (a, b) -> a + b) ASC, cb.j) AS rk
-           |  FROM res r CROSS JOIN m CROSS JOIN cb) WHERE rk = 1),
-           |q AS (SELECT * FROM v WHERE vec_id < 10),
-           |probes AS (SELECT vec_id AS q_id, qe, cluster FROM (
-           |  SELECT q.vec_id, q.e AS qe, c.k_id AS cluster,
-           |    row_number() OVER (PARTITION BY q.vec_id
-           |      ORDER BY list_cosine_similarity(q.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM q CROSS JOIN cents c) WHERE rk <= 2),
-           |qres AS (SELECT p.q_id, p.cluster,
-           |  list_transform(generate_series(1, len(p.qe)), i -> p.qe[i] - c.ke[i]) AS qr
-           |  FROM probes p JOIN cents c ON c.k_id = p.cluster),
-           |qd AS (SELECT qr.q_id, qr.cluster, m.m, cb.j,
-           |  list_reduce(list_transform(generate_series(1, 8),
-           |    i -> (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i])),
-           |    (a, b) -> a + b) AS dd
-           |  FROM qres qr CROSS JOIN m CROSS JOIN cb),
-           |scored AS (SELECT qd.q_id, c.vec_id AS neighbor_id,
-           |  list_reduce(list(qd.dd ORDER BY qd.m), (a, b) -> a + b) AS adc
-           |  FROM codes c JOIN qd ON qd.cluster = c.cluster AND qd.m = c.m AND qd.j = c.code
-           |  WHERE c.vec_id != qd.q_id
-           |  GROUP BY qd.q_id, c.vec_id)
-           |SELECT q_id, neighbor_id, adc FROM scored
-           |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc ASC, neighbor_id) <= 3""".stripMargin))
+    Some(ivfPqOracle(None, None)))
 
   /** V45 (beyond reference): appends on the residual tier — build on
     * two-thirds, append the rest in two batches against the frozen
@@ -3803,57 +3682,13 @@ object VectorOps {
   val v45: GraftQuery = GraftQuery(
     "v45_ivfpq_append",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v45_ivfpq_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"ivfpq:sub23:${stagedEmbIdent(d)}",
-        path)(buildIvfPqIndex(emb.filter(col("vec_id") % 3 =!= 0), _))
-      appendToIvfPqIndex(emb.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 === 0), path)
-      appendToIvfPqIndex(emb.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 =!= 0), path)
-      searchIvfPqIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, probes = 2)
+      val path = stagedIndex(s, d, "v45_ivfpq", "ivfpq", "sub23")
+      appendToVecIndex(emb.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 === 0), path)
+      appendToVecIndex(emb.filter(col("vec_id") % 3 === 0 && col("vec_id") % 2 =!= 0), path)
+      searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "ivfpq")
     },
-    Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-           |base AS (SELECT * FROM v WHERE vec_id % 3 != 0),
-           |cents AS (SELECT vec_id AS k_id, e AS ke FROM base
-           |          ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
-           |assign AS (SELECT vec_id, e, k_id AS cluster FROM (
-           |  SELECT v.vec_id, v.e, c.k_id, row_number() OVER (PARTITION BY v.vec_id
-           |    ORDER BY list_cosine_similarity(v.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM v CROSS JOIN cents c) WHERE rk = 1),
-           |res AS (SELECT a.vec_id, a.cluster,
-           |  list_transform(generate_series(1, len(a.e)), i -> a.e[i] - c.ke[i]) AS r
-           |  FROM assign a JOIN cents c ON c.k_id = a.cluster),
-           |cb AS (SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS j, r AS e
-           |       FROM res WHERE vec_id % 3 != 0
-           |       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-           |m AS (SELECT unnest(generate_series(0, 7)) AS m),
-           |codes AS (SELECT vec_id, cluster, m, j AS code FROM (
-           |  SELECT r.vec_id, r.cluster, m.m, cb.j, row_number() OVER (PARTITION BY r.vec_id, m.m
-           |    ORDER BY list_reduce(list_transform(generate_series(1, 8),
-           |      i -> (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i])),
-           |      (a, b) -> a + b) ASC, cb.j) AS rk
-           |  FROM res r CROSS JOIN m CROSS JOIN cb) WHERE rk = 1),
-           |q AS (SELECT * FROM v WHERE vec_id < 10),
-           |probes AS (SELECT vec_id AS q_id, qe, cluster FROM (
-           |  SELECT q.vec_id, q.e AS qe, c.k_id AS cluster,
-           |    row_number() OVER (PARTITION BY q.vec_id
-           |      ORDER BY list_cosine_similarity(q.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM q CROSS JOIN cents c) WHERE rk <= 2),
-           |qres AS (SELECT p.q_id, p.cluster,
-           |  list_transform(generate_series(1, len(p.qe)), i -> p.qe[i] - c.ke[i]) AS qr
-           |  FROM probes p JOIN cents c ON c.k_id = p.cluster),
-           |qd AS (SELECT qr.q_id, qr.cluster, m.m, cb.j,
-           |  list_reduce(list_transform(generate_series(1, 8),
-           |    i -> (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i])),
-           |    (a, b) -> a + b) AS dd
-           |  FROM qres qr CROSS JOIN m CROSS JOIN cb),
-           |scored AS (SELECT qd.q_id, c.vec_id AS neighbor_id,
-           |  list_reduce(list(qd.dd ORDER BY qd.m), (a, b) -> a + b) AS adc
-           |  FROM codes c JOIN qd ON qd.cluster = c.cluster AND qd.m = c.m AND qd.j = c.code
-           |  WHERE c.vec_id != qd.q_id
-           |  GROUP BY qd.q_id, c.vec_id)
-           |SELECT q_id, neighbor_id, adc FROM scored
-           |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc ASC, neighbor_id) <= 3""".stripMargin))
+    Some(ivfPqOracle(Some("vec_id % 3 != 0"), None)))
 
   /** V46 (beyond reference): right-to-be-forgotten on the residual tier
     * — tombstone every 7th vector, compact (crash-safe swap of the
@@ -3863,61 +3698,18 @@ object VectorOps {
   val v46: GraftQuery = GraftQuery(
     "v46_ivfpq_tombstone_compact",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v46_ivfpq_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"ivfpq:full:${stagedEmbIdent(d)}",
-        path)(buildIvfPqIndex(emb, _))
-      deleteFromIvfPqIndex(s, path, emb.filter(col("vec_id") % 7 === 0))
-      compactIvfPqIndex(s, path)
-      searchIvfPqIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, probes = 2)
+      val path = stagedIndex(s, d, "v46_ivfpq", "ivfpq", "full")
+      deleteFromVecIndex(s, path, emb.filter(col("vec_id") % 7 === 0))
+      compactVecIndex(s, path)
+      searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "ivfpq")
     },
-    Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-           |cents AS (SELECT vec_id AS k_id, e AS ke FROM v
-           |          ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT 16),
-           |assign AS (SELECT vec_id, e, k_id AS cluster FROM (
-           |  SELECT v.vec_id, v.e, c.k_id, row_number() OVER (PARTITION BY v.vec_id
-           |    ORDER BY list_cosine_similarity(v.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM v CROSS JOIN cents c) WHERE rk = 1),
-           |res AS (SELECT a.vec_id, a.cluster,
-           |  list_transform(generate_series(1, len(a.e)), i -> a.e[i] - c.ke[i]) AS r
-           |  FROM assign a JOIN cents c ON c.k_id = a.cluster),
-           |cb AS (SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) - 1 AS j, r AS e
-           |       FROM res ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 16),
-           |m AS (SELECT unnest(generate_series(0, 7)) AS m),
-           |codes AS (SELECT vec_id, cluster, m, j AS code FROM (
-           |  SELECT r.vec_id, r.cluster, m.m, cb.j, row_number() OVER (PARTITION BY r.vec_id, m.m
-           |    ORDER BY list_reduce(list_transform(generate_series(1, 8),
-           |      i -> (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (r.r[m.m * 8 + i] - cb.e[m.m * 8 + i])),
-           |      (a, b) -> a + b) ASC, cb.j) AS rk
-           |  FROM res r CROSS JOIN m CROSS JOIN cb) WHERE rk = 1),
-           |alive AS (SELECT * FROM codes WHERE vec_id % 7 != 0),
-           |q AS (SELECT * FROM v WHERE vec_id < 10),
-           |probes AS (SELECT vec_id AS q_id, qe, cluster FROM (
-           |  SELECT q.vec_id, q.e AS qe, c.k_id AS cluster,
-           |    row_number() OVER (PARTITION BY q.vec_id
-           |      ORDER BY list_cosine_similarity(q.e, c.ke) DESC, c.k_id) AS rk
-           |  FROM q CROSS JOIN cents c) WHERE rk <= 2),
-           |qres AS (SELECT p.q_id, p.cluster,
-           |  list_transform(generate_series(1, len(p.qe)), i -> p.qe[i] - c.ke[i]) AS qr
-           |  FROM probes p JOIN cents c ON c.k_id = p.cluster),
-           |qd AS (SELECT qr.q_id, qr.cluster, m.m, cb.j,
-           |  list_reduce(list_transform(generate_series(1, 8),
-           |    i -> (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i]) * (qr.qr[m.m * 8 + i] - cb.e[m.m * 8 + i])),
-           |    (a, b) -> a + b) AS dd
-           |  FROM qres qr CROSS JOIN m CROSS JOIN cb),
-           |scored AS (SELECT qd.q_id, c.vec_id AS neighbor_id,
-           |  list_reduce(list(qd.dd ORDER BY qd.m), (a, b) -> a + b) AS adc
-           |  FROM alive c JOIN qd ON qd.cluster = c.cluster AND qd.m = c.m AND qd.j = c.code
-           |  WHERE c.vec_id != qd.q_id
-           |  GROUP BY qd.q_id, c.vec_id)
-           |SELECT q_id, neighbor_id, adc FROM scored
-           |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc ASC, neighbor_id) <= 3""".stripMargin))
+    Some(ivfPqOracle(None, Some("vec_id % 7 != 0"))))
 
   // ---------------------------------------------------- versioned roots
 
-  /** Versioned index layout — the structural close of the rebuild race
-    * [[rebuildIvfIndex]] documents (and handles only by offline policy).
+  /* Versioned index layout — the structural close of the rebuild race
+    * [[rebuildVecIndex]] documents (and handles only by offline policy).
     * The manifest/roots mechanics (atomic pointer publish, numeric
     * resolution, single-writer claims, grace-window vacuum) live in
     * [[graft.core.VersionedStore]], shared with the BM25 serving snapshot;
@@ -3931,23 +3723,22 @@ object VectorOps {
     * }}}
     *
     * A reader resolves the pointer ONCE per request and pins that
-    * version's directory for its whole plan, so a rebuild publishing
-    * v{N+1} mid-query cannot reshape or vanish the files the plan reads:
-    * concurrent searches return fully-old or fully-new results, never
-    * empty and never mixed-geometry. [[swapAside]] survives only INSIDE a
-    * version directory (append-path compaction); whole-geometry changes
-    * go through a new version. Old versions are reclaimed AFTER a grace
-    * window by [[vacuumVecIndexVersions]] — the s32 retention discipline:
-    * in-flight readers pinned to the previous version stay valid until
-    * the vacuum horizon passes them.
+    * version's directory for its whole plan, so a rebuild or compaction
+    * publishing v{N+1} mid-query cannot reshape or vanish the files the
+    * plan reads: concurrent searches return fully-old or fully-new
+    * results, never empty and never mixed-geometry. Only appends and
+    * tombstones land inside a published version (new files, none
+    * removed); every rewrite goes through a new version — [[swapAside]]
+    * serves unversioned roots only. Old versions are reclaimed AFTER a
+    * grace window by [[vacuumVecIndexVersions]] — the s32 retention
+    * discipline: in-flight readers pinned to the previous version stay
+    * valid until the vacuum horizon passes them.
     *
     * Scale: the manifest is O(versions) tiny files and one list call per
     * request; version roots share nothing, so a rebuild is the same
-    * one-scan job as [[rebuildIvfIndex]] writing to a fresh directory —
+    * one-scan job as [[rebuildVecIndex]] writing to a fresh directory —
     * no serving-path cost moves at 100 TB.
     */
-  private def versionName(n: Long): String =
-    graft.core.VersionedStore.versionName(n)
 
   /** Writers that crash mid-rebuild hold their version lease until this
     * TTL passes; a successor rebuild then takes the lease over (see
@@ -3962,26 +3753,24 @@ object VectorOps {
 
   /** The pinned directory of the current version — resolve ONCE per
     * request; every read of the returned path is immune to later flips.
+    * Fails when `root` has no published version.
     */
-  def resolveVecIndexRoot(s: SparkSession, root: String): String = {
-    require(currentVecIndexVersion(s, root).isDefined,
-      s"resolveVecIndexRoot: no published version under $root")
+  def resolveVecIndexRoot(s: SparkSession, root: String): String =
     graft.core.VersionedStore.resolve(s, root)
-  }
 
   // ------------------------------------------------------ mutation epochs
 
-  /** In-JVM mutation counter per index directory, bumped by every entry
-    * point that changes files INSIDE an existing directory — the bump
-    * lives in the LOW-LEVEL tier appends/deletes/compactors, so both the
-    * versioned wrappers and a direct unversioned call on a served
-    * directory re-key. Serving layers that cache resolved relations or
-    * constructed plans fold [[mutationEpochOf]] into their cache keys, so
-    * a same-process mutation through any package-visible entry point
-    * invalidates them — closing the gap where "immutable once built"
-    * roots are in fact appended to or compacted by maintenance code in
-    * the same JVM (cross-process mutations are covered by the versioned
-    * flip re-keying the path itself). Reads cost one TrieMap lookup.
+  /** In-JVM mutation counter per index directory, bumped by every verb
+    * that changes files INSIDE an existing directory — the bump lives in
+    * the unversioned verbs, so both the versioned wrappers and a direct
+    * unversioned call on a served directory re-key. Serving layers that
+    * cache resolved relations or constructed plans fold
+    * [[mutationEpochOf]] into their cache keys, so a same-process
+    * mutation through any entry point invalidates them — closing the gap
+    * where "immutable once built" roots are in fact appended to or
+    * compacted by maintenance code in the same JVM (cross-process
+    * mutations are covered by the versioned flip re-keying the path
+    * itself). Reads cost one TrieMap lookup.
     */
   private val mutationEpochs =
     scala.collection.concurrent.TrieMap.empty[String, Long]
@@ -3997,147 +3786,81 @@ object VectorOps {
     (): Unit
   }
 
-  private def buildTiers(corpus: DataFrame, dir: String, tiers: String): Unit =
-    tiers match {
-      case "ivf"   => buildIvfIndex(corpus, dir)
-      case "both"  => buildVecIndex(corpus, dir)
-      case "ivfpq" => buildIvfPqIndex(corpus, dir)
-      case other => sys.error(
-        s"initVersionedVecIndex: unknown tiers '$other' (ivf | both | ivfpq)")
+  /** Build `tiers` for `corpus` into an unpublished version directory the
+    * caller holds the lease on. Debris a crashed predecessor left there is
+    * cleared first (the lease makes this caller its only writer).
+    * `stageKey` (lifecycle-query callers only) routes the build through
+    * [[graft.core.SessionStaging]]: the deterministic artifact is built
+    * once per JVM and byte-copied in, while the claim/publish mechanics
+    * stay live. The key must name the corpus slice, the tier layout AND
+    * the dataset fingerprint — never mutable root state.
+    */
+  private def buildVersion(corpus: DataFrame, dir: String, tiers: Seq[Tier],
+      stageKey: Option[String]): Unit = {
+    val s = corpus.sparkSession
+    stageKey match {
+      case Some(k) =>
+        graft.core.SessionStaging.into(s, k, dir)(buildTiers(corpus, _, tiers))
+      case None =>
+        remove(s, dir)
+        buildTiers(corpus, dir, tiers)
     }
+  }
 
   /** Create a versioned index at `root`: build version 1 under
     * `roots/v00000001`, then publish the pointer. A crash before publish
     * leaves only unpublished debris (readers see "no version"); the retry
-    * rebuilds over it — mode=overwrite all the way down. First-build is
-    * single-writer like every other version: the claim makes a
-    * cross-process double-init (two pollers cold-starting the same
-    * scratch root) build once — the loser waits for the winner's publish
-    * instead of interleaving writes under the same roots/v1.
-    *
-    * `stageKey` (lifecycle-query callers only) routes the v1 build
-    * through [[graft.core.SessionStaging]]: the deterministic artifact is
-    * built once per JVM and byte-copied in, while the claim/publish
-    * mechanics stay live. The key must name the corpus slice, the tier
-    * layout AND the dataset fingerprint — never mutable root state.
+    * rebuilds over it. First-build is single-writer like every other
+    * version: the claim makes a cross-process double-init (two pollers
+    * cold-starting the same scratch root) build once — the loser waits
+    * for the winner's publish instead of interleaving writes under the
+    * same roots/v1. `stageKey` as on [[buildVersion]].
     */
   def initVersionedVecIndex(corpus: DataFrame, root: String,
       tiers: String = "ivf",
       leaseTtlMs: Long = DefaultRebuildLeaseMs,
-      stageKey: Option[String] = None): String =
+      stageKey: Option[String] = None): String = {
+    val ts = tiersNamed(tiers)
     graft.core.VersionedStore.init(corpus.sparkSession, root, leaseTtlMs)(
-      dir => stageKey match {
-        case Some(k) => graft.core.SessionStaging.into(
-          corpus.sparkSession, k, dir)(buildTiers(corpus, _, tiers))
-        case None => buildTiers(corpus, dir, tiers)
-      })
-
-  /** The alive raw corpus of one version directory, reconstructed from
-    * its postings tier: postings minus BOTH tombstone files (the facade
-    * writes the IVF one; a direct flat-PQ delete writes the other),
-    * redelivered-append duplicates collapsed. Double arrays pass
-    * [[withNorm]]'s cast unchanged, so builds on this reconstruction are
-    * bit-identical to builds on the original corpus.
-    */
-  private def aliveRawCorpus(s: SparkSession, dir: String): DataFrame = {
-    recoverAside(s, s"$dir/postings")
-    val conf = s.sparkContext.hadoopConfiguration
-    var df = s.read.parquet(s"$dir/postings").select("c_id", "c_e")
-    val ivfTomb = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    if (ivfTomb.getFileSystem(conf).exists(ivfTomb))
-      df = df.join(s.read.parquet(ivfTomb.toString).select("c_id"),
-        Seq("c_id"), "left_anti")
-    val pqTomb = new org.apache.hadoop.fs.Path(s"$dir/pq_tombstones")
-    if (pqTomb.getFileSystem(conf).exists(pqTomb))
-      df = df.join(s.read.parquet(pqTomb.toString)
-          .select(col("vec_id").as("c_id")), Seq("c_id"), "left_anti")
-    df.dropDuplicates("c_id")
-      .select(col("c_id").as("vec_id"), col("c_e").as("embedding"))
+      buildVersion(corpus, _, ts, stageKey))
   }
 
-  /** Rebuild into version N+1 and flip the pointer — the versioned
-    * successor of [[rebuildIvfIndex]]: derive the alive corpus from the
-    * CURRENT version's raw postings (tombstones applied, duplicates
-    * collapsed), run the ordinary fresh-build path into `roots/v{N+1}`,
+  /** Rebuild into version N+1 and flip the pointer — [[rebuildVecIndex]]'s
+    * build, published instead of swapped: derive the [[aliveCorpus]] of
+    * the CURRENT version (its own raw postings, or the source-of-truth
+    * `corpus` — the only source a lossy codes-only root has; tombstones
+    * honored either way, so a deleted id never resurrects), run the
+    * ordinary fresh build of the same tier layout into `roots/v{N+1}`,
     * publish. The current version is never touched, so a search running
     * concurrently serves fully-old results; the publish is atomic, so the
     * next request serves fully-new. Tombstoned rows are gone from the new
-    * version by construction. Requires a raw-vector tier (a residual-only
-    * root stores no vectors to re-derive geometry from). Returns the new
-    * version directory.
+    * version by construction. Returns the new version directory.
     *
     * SINGLE-WRITER: the rebuild claims an exclusive lease on v{N+1} before
     * touching roots/ — a concurrent rebuild (a second maintenance job, or
     * a retry racing its zombie) fails loudly instead of interleaving tier
     * overwrites inside the same unpublished directory. A lease left by a
     * crashed writer expires after `leaseTtlMs` and the retry takes over.
+    * `stageKey` is honored only for an external corpus no tombstones
+    * filtered — anything else depends on mutable root state, which
+    * staging keys must never encode, so the staged route switches itself
+    * off rather than trusting the caller.
     */
   def rebuildVersionedVecIndex(s: SparkSession, root: String,
-      leaseTtlMs: Long = DefaultRebuildLeaseMs): String = {
-    graft.plans.GraftExtensions.register(s)
-    val cur = currentVecIndexVersion(s, root).getOrElse(
-      sys.error(s"rebuildVersionedVecIndex: no published version under $root"))
-    val curDir = s"$root/roots/${versionName(cur)}"
-    require(tierExists(s, s"$curDir/postings"),
-      s"rebuildVersionedVecIndex: $curDir has no raw postings tier to rebuild " +
-        "from — a residual (codes-only) root is lossy; retrain it from the " +
-        "source-of-truth corpus with rebuildVersionedVecIndexFrom")
-    val alive = aliveRawCorpus(s, curDir)
-    val tiers = if (tierExists(s, s"$curDir/codes")) "both" else "ivf"
-    graft.core.VersionedStore.buildNext(s, root, leaseTtlMs)(
-      buildTiers(alive, _, tiers))
-  }
-
-  /** Rebuild version N+1 from an EXTERNAL source-of-truth corpus — the
-    * production retrain path (FAISS-style: geometry retrains from data,
-    * not from the index), and the ONLY rebuild a residual (codes-only)
-    * root can have, since its stored codes are lossy. The current
-    * version's tombstones are honored (a deleted id absent from serving
-    * must not resurrect through the retrain); the tier layout is
-    * preserved. Same atomicity story as [[rebuildVersionedVecIndex]]:
-    * build under roots/v{N+1}, one-file publish, concurrent readers stay
-    * fully-old — and the same single-writer lease as
-    * [[rebuildVersionedVecIndex]].
-    */
-  def rebuildVersionedVecIndexFrom(s: SparkSession, root: String,
-      corpus: DataFrame,
+      corpus: Option[DataFrame] = None,
       leaseTtlMs: Long = DefaultRebuildLeaseMs,
       stageKey: Option[String] = None): String = {
-    graft.plans.GraftExtensions.register(s)
-    val cur = currentVecIndexVersion(s, root).getOrElse(
-      sys.error(s"rebuildVersionedVecIndexFrom: no published version under $root"))
-    val curDir = s"$root/roots/${versionName(cur)}"
-    val conf = s.sparkContext.hadoopConfiguration
-    var alive = corpus
-    var tombstoned = false
-    for (tomb <- Seq("tombstones", "pq_tombstones")) {
-      val p = new org.apache.hadoop.fs.Path(s"$curDir/$tomb")
-      if (p.getFileSystem(conf).exists(p)) {
-        tombstoned = true
-        val ids = s.read.parquet(p.toString)
-        val key = if (ids.schema.fieldNames.contains("c_id"))
-          ids.select(col("c_id").as("vec_id")) else ids.select("vec_id")
-        alive = alive.join(key, Seq("vec_id"), "left_anti")
-      }
-    }
-    val tiers =
-      if (isResidualRoot(s, curDir)) "ivfpq"
-      else if (tierExists(s, s"$curDir/codes")) "both"
-      else "ivf"
-    // the retrain kernel is a pure function of (corpus, tiers) ONLY when
-    // no tombstones filtered it — a tombstoned alive set depends on
-    // mutable root state, which staging keys must never encode, so the
-    // staged route switches itself off rather than trusting the caller
+    val cur = resolveVecIndexRoot(s, root)
+    val tiers = requireLayout(s, cur, "rebuildVersionedVecIndex")
+    val alive = aliveCorpus(s, cur, tiers, corpus)
+    val key = stageKey.filter(_ =>
+      corpus.isDefined && !exists(s, s"$cur/tombstones"))
     graft.core.VersionedStore.buildNext(s, root, leaseTtlMs)(
-      dir => stageKey.filter(_ => !tombstoned) match {
-        case Some(k) => graft.core.SessionStaging.into(s, k, dir)(
-          buildTiers(alive, _, tiers))
-        case None => buildTiers(alive, dir, tiers)
-      })
+      buildVersion(alive, _, tiers, key))
   }
 
   /** Serve through the versioned pointer: resolve once, then route via
-    * the [[searchVecIndex]] facade against the pinned version directory.
+    * [[searchVecIndex]] against the pinned version directory.
     */
   def searchVersionedVecIndex(s: SparkSession, root: String,
       queries: DataFrame, k: Int, probes: Int = 2, tier: String = "auto",
@@ -4145,33 +3868,48 @@ object VectorOps {
     searchVecIndex(s, resolveVecIndexRoot(s, root), queries, k, probes,
       tier, rerankCandidates, excludeSelf)
 
-  /** Append to the CURRENT version's tiers (per-row, frozen geometry —
-    * the same stream-safe contract as the unversioned appends).
+  /** Append to the CURRENT version's tiers ([[appendToVecIndex]]: per-row,
+    * frozen geometry — new files only, so pinned readers are unaffected).
     */
-  def appendToVersionedVecIndex(batch: DataFrame, root: String): Unit = {
-    val s = batch.sparkSession
-    val dir = resolveVecIndexRoot(s, root)
-    val hasIvf = tierExists(s, s"$dir/postings")
-    if (hasIvf) appendToIvfIndex(batch, dir)
-    if (tierExists(s, s"$dir/codes")) {
-      if (!hasIvf && isResidualRoot(s, dir)) appendToIvfPqIndex(batch, dir)
-      else appendToPqIndex(batch, dir)
-    }
-  }
+  def appendToVersionedVecIndex(batch: DataFrame, root: String): Unit =
+    appendToVecIndex(batch, resolveVecIndexRoot(batch.sparkSession, root))
 
-  /** Tombstone in the current version (layout-dispatched like
-    * [[deleteFromVecIndex]]); a later [[rebuildVersionedVecIndex]] drops
-    * the rows physically in the successor version.
+  /** Tombstone in the current version ([[deleteFromVecIndex]]); a later
+    * compaction or rebuild drops the rows physically in the successor
+    * version.
     */
   def deleteFromVersionedVecIndex(s: SparkSession, root: String,
       ids: DataFrame): Unit =
     deleteFromVecIndex(s, resolveVecIndexRoot(s, root), ids)
 
-  /** Compact the current version in place ([[swapAside]] stays INSIDE the
-    * version directory — the one place it remains).
+  /** Compact by publishing v{N+1}: the current version's geometry
+    * directories are byte-copied and each tier's data is rewritten via
+    * [[compacted]] — the same rows [[compactVecIndex]] keeps — under the
+    * single-writer lease. The pinned version is never rewritten, so a
+    * search resolved before the compaction still reads its files (an
+    * in-place swap would pull them from under it), and results after the
+    * flip are identical. No tombstones = nothing to reclaim = no new
+    * version.
     */
-  def compactVersionedVecIndex(s: SparkSession, root: String): Unit =
-    compactVecIndex(s, resolveVecIndexRoot(s, root))
+  def compactVersionedVecIndex(s: SparkSession, root: String): Unit = {
+    val cur = resolveVecIndexRoot(s, root)
+    if (!exists(s, s"$cur/tombstones")) return
+    val tiers = requireLayout(s, cur, "compactVersionedVecIndex")
+    graft.core.VersionedStore.buildNext(s, root, DefaultRebuildLeaseMs) { dir =>
+      val fs = fsOf(s, dir)
+      remove(s, dir)
+      tiers.flatMap(_.dirs).distinct.filterNot(d => tiers.exists(_.data == d))
+        .foreach { d =>
+          require(org.apache.hadoop.fs.FileUtil.copy(
+              fs, new org.apache.hadoop.fs.Path(s"$cur/$d"),
+              fs, new org.apache.hadoop.fs.Path(s"$dir/$d"),
+              false, true, s.sparkContext.hadoopConfiguration),
+            s"compactVersionedVecIndex: copy of $cur/$d failed")
+        }
+      tiers.foreach(t => t.write(compacted(s, cur, t), s"$dir/${t.data}", "overwrite"))
+    }
+    (): Unit
+  }
 
   /** Reclaim versions older than the newest `keepLast` (grace window for
     * in-flight readers pinned to a predecessor — keepLast >= 2 keeps the
@@ -4194,10 +3932,14 @@ object VectorOps {
     *   - `ivf` row: the v18 2x-rule applied to the STORED index — a cell
     *     holding more than twice the mean alive occupancy means the
     *     frozen geometry has drifted (value = max_cell_n x cells,
-    *     threshold = 2 x total; pure longs, cross-engine exact).
-    *   - `pq` row (when a codebook tier exists): [[pqDriftAudit]]'s
-    *     reconstruction-quality drop vs build time, quantized to 1e-9
-    *     (value = round(drift x 1e9), threshold = margin x 1e9).
+    *     threshold = 2 x total; pure longs, cross-engine exact). Read from
+    *     the cluster-partitioned tier: raw postings, or a residual root's
+    *     codes (one row per alive vector per cell — the same signal).
+    *   - `pq` row (when a flat codebook tier sits next to raw postings):
+    *     [[pqDriftAudit]]'s reconstruction-quality drop vs build time,
+    *     quantized to 1e-9 (value = round(drift x 1e9), threshold =
+    *     margin x 1e9). A residual root's drift audit needs the raw
+    *     corpus, so it runs [[pqDriftAudit]] with an external corpus.
     *   - `embedding` row (when `sigStore` names a t43-style signature
     *     accumulator of (key, is_ref, sig) rows): the [[embeddingDrift]]
     *     PSI over the deduped store — the STREAMED distribution monitor's
@@ -4207,38 +3949,23 @@ object VectorOps {
     *
     * Consumed by [[rebuildVersionedIfAdvised]] — advisor says retrain,
     * the versioned rebuild publishes the successor. Scale: occupancy is
-    * one cluster-keyed count over the postings (map-side combinable, K
-    * rows out); the pq row re-scans codes once (the v42 cost); the
-    * embedding row reduces the signature store to 2^bits cells — all
-    * off the serving path.
+    * one cluster-keyed count over the data (map-side combinable, K rows
+    * out); the pq row re-scans codes once (the v42 cost); the embedding
+    * row reduces the signature store to 2^bits cells — all off the
+    * serving path.
     */
   def rebuildAdvisor(s: SparkSession, path: String,
       margin: Double = 0.05, sigStore: Option[String] = None,
       psiMargin: Double = 0.2): DataFrame = {
     graft.plans.GraftExtensions.register(s)
-    recoverAside(s, s"$path/postings")
-    recoverAside(s, s"$path/codes")
-    recoverAside(s, s"$path/centroids")
-    val conf = s.sparkContext.hadoopConfiguration
-    // a residual root has no raw postings — its cluster-partitioned codes
-    // carry the same occupancy signal (one row per alive vector per cell)
-    val residual = isResidualRoot(s, path)
-    require(residual || tierExists(s, s"$path/postings"),
+    val tiers = layoutOf(s, path)
+    val cells = tiers.find(_.partitioned).getOrElse(sys.error(
       s"rebuildAdvisor: $path has neither a raw postings tier nor " +
         "cluster-partitioned codes — a flat PQ-only root carries no cell " +
-        "geometry to audit; run annPqDriftAudit with the source corpus instead")
-    var posts =
-      if (residual) s.read.parquet(s"$path/codes")
-        .select(col("vec_id").as("c_id"), col("cluster"))
-      else s.read.parquet(s"$path/postings").select("c_id", "cluster")
-    val tomb = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-    if (tomb.getFileSystem(conf).exists(tomb)) {
-      val ids = s.read.parquet(tomb.toString)
-      val key = if (ids.schema.fieldNames.contains("c_id")) ids.select("c_id")
-        else ids.select(col("vec_id").as("c_id"))
-      posts = posts.join(key, Seq("c_id"), "left_anti")
-    }
-    posts = posts.dropDuplicates("c_id")
+        "geometry to audit; run annPqDriftAudit with the source corpus instead"))
+    val posts = aliveRows(s, path, s.read.parquet(s"$path/${cells.data}")
+        .select(col(cells.key).as("c_id"), col("cluster")), "c_id")
+      .dropDuplicates("c_id")
     val cents = s.read.parquet(s"$path/centroids")
       .select(col("k_id").as("cluster"))
     val occ = cents
@@ -4252,13 +3979,10 @@ object VectorOps {
         col("threshold").cast("long").as("threshold"),
         when(col("value") > col("threshold"), "retrain").otherwise("keep")
           .as("verdict"))
-    // the drift row needs the raw tier to reconstruct against — a
-    // residual root's drift audit runs against the source corpus
-    // directly (pqDriftAudit with an external corpus), not here
     val tiersOut =
-      if (residual || !tierExists(s, s"$path/codebook")) ivfRow
+      if (!tiers.contains(PqTier)) ivfRow
       else {
-        val pqRow = pqDriftAudit(s, path, aliveRawCorpus(s, path), margin)
+        val pqRow = pqDriftAudit(s, path, aliveCorpus(s, path, tiers, None), margin)
           .select(lit("pq").as("tier"), lit("codebook_drift_x1e9").as("metric"),
             floor(col("drift") * 1e9 + 0.5).cast("long").as("value"),
             lit(math.round(margin * 1e9)).as("threshold"),
@@ -4273,12 +3997,10 @@ object VectorOps {
     // the monitor stream's first batch commits, or after a checkpoint
     // reset) is NO EVIDENCE, not an error: skip the embedding row rather
     // than aborting the verdicts whose inputs are valid
-    sigStore.filter { store =>
-      val p = new org.apache.hadoop.fs.Path(store)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.exists(p) && fs.listStatus(p).exists(f =>
-        f.getPath.getName.endsWith(".parquet"))
-    }.fold(tiersOut) { store =>
+    sigStore.filter(store => exists(s, store) && fsOf(s, store)
+      .listStatus(new org.apache.hadoop.fs.Path(store))
+      .exists(_.getPath.getName.endsWith(".parquet"))
+    ).fold(tiersOut) { store =>
       val sigs = s.read.parquet(store)
         .groupBy("key").agg(max(struct(col("is_ref"), col("sig"))).as("m"))
         .select(col("m.is_ref").as("is_ref"), col("m.sig").as("sig"))
@@ -4295,10 +4017,10 @@ object VectorOps {
 
   /** Advisor-gated versioned rebuild: publish a successor version only
     * when some tier's verdict is `retrain`; returns the new version
-    * directory when it acted. The measured diagnostics now DECIDE.
-    * A residual (codes-only) root is lossy and can only retrain from a
-    * source-of-truth corpus — pass one via `corpus`; omitting it on such
-    * a root fails loudly BEFORE any rebuild starts, naming the fix.
+    * directory when it acted. The measured diagnostics now DECIDE. A root
+    * with raw postings retrains from its own alive vectors; a lossy
+    * codes-only root only from the source-of-truth `corpus` — omitting
+    * it there fails loudly BEFORE any rebuild starts, naming the fix.
     */
   def rebuildVersionedIfAdvised(s: SparkSession, root: String,
       margin: Double = 0.05,
@@ -4309,13 +4031,10 @@ object VectorOps {
     val verdicts = rebuildAdvisor(s, cur, margin, sigStore, psiMargin)
       .select("verdict").collect().map(_.getString(0))
     if (!verdicts.contains("retrain")) None
-    else if (isResidualRoot(s, cur)) {
-      val src = corpus.getOrElse(sys.error(
-        "rebuildVersionedIfAdvised: retrain verdict on a residual " +
-          s"(codes-only) root $cur — its codes are lossy, so pass the " +
-          "source-of-truth corpus (corpus = Some(df)) to retrain from"))
-      Some(rebuildVersionedVecIndexFrom(s, root, src))
-    } else Some(rebuildVersionedVecIndex(s, root))
+    else {
+      val lossy = !layoutOf(s, cur).contains(IvfTier)
+      Some(rebuildVersionedVecIndex(s, root, corpus.filter(_ => lossy)))
+    }
   }
 
   /** V49 (beyond reference): the advisor's decision table as an
@@ -4326,12 +4045,9 @@ object VectorOps {
   val v49: GraftQuery = GraftQuery(
     "v49_rebuild_advisor",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v49_advidx_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"ivf:sub90:${stagedEmbIdent(d)}",
-        path)(buildIvfIndex(emb.filter(col("vec_id") % 10 =!= 0), _))
-      appendToIvfIndex(emb.filter(col("vec_id") % 10 === 0), path)
+      val path = stagedIndex(s, d, "v49_advidx", "ivf", "sub90")
+      appendToVecIndex(emb.filter(col("vec_id") % 10 === 0), path)
       rebuildAdvisor(s, path)
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -4362,12 +4078,8 @@ object VectorOps {
   val v47: GraftQuery = GraftQuery(
     "v47_versioned_pinned_read",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v47_vroot_$id"
       val emb = Tables.embeddings(s, d)
-      initVersionedVecIndex(emb.filter(col("vec_id") % 10 =!= 0), root,
-        stageKey = Some(s"ivf:sub90:${stagedEmbIdent(d)}"))
-      appendToVersionedVecIndex(emb.filter(col("vec_id") % 10 === 0), root)
+      val root = grownVersionedRoot(s, d, "v47_vroot", "ivf")
       // the concurrent reader: pointer resolved NOW (v1)...
       val pinned = searchVersionedVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2, tier = "ivf")
@@ -4402,12 +4114,8 @@ object VectorOps {
   val v48: GraftQuery = GraftQuery(
     "v48_versioned_flip_vacuum",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v48_vroot_$id"
       val emb = Tables.embeddings(s, d)
-      initVersionedVecIndex(emb.filter(col("vec_id") % 10 =!= 0), root,
-        stageKey = Some(s"ivf:sub90:${stagedEmbIdent(d)}"))
-      appendToVersionedVecIndex(emb.filter(col("vec_id") % 10 === 0), root)
+      val root = grownVersionedRoot(s, d, "v48_vroot", "ivf")
       rebuildVersionedVecIndex(s, root)
       val removed = vacuumVecIndexVersions(s, root, keepLast = 1)
       require(removed == Seq(1L), s"vacuum must reclaim exactly v1, got $removed")
@@ -4418,7 +4126,7 @@ object VectorOps {
 
   /** V50 (beyond reference): the versioned RESIDUAL root's retrain path —
     * codes are lossy, so the rebuild retrains from the source-of-truth
-    * corpus ([[rebuildVersionedVecIndexFrom]], the FAISS posture) behind
+    * corpus ([[rebuildVersionedVecIndex]] with `corpus`, the FAISS posture) behind
     * the same atomic pointer flip. After init-on-subset, append, and
     * retrain-from-source, serving equals a fresh residual build on the
     * full corpus — v44's oracle verbatim.
@@ -4426,18 +4134,13 @@ object VectorOps {
   val v50: GraftQuery = GraftQuery(
     "v50_versioned_ivfpq_retrain",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v50_vroot_$id"
       val emb = Tables.embeddings(s, d)
-      initVersionedVecIndex(emb.filter(col("vec_id") % 10 =!= 0), root,
-        tiers = "ivfpq",
-        stageKey = Some(s"ivfpq:sub90:${stagedEmbIdent(d)}"))
-      appendToVersionedVecIndex(emb.filter(col("vec_id") % 10 === 0), root)
-      // the retrain kernel is buildIvfPqIndex over the FULL external
+      val root = grownVersionedRoot(s, d, "v50_vroot", "ivfpq")
+      // the retrain kernel is the ivfpq build over the FULL external
       // corpus (no tombstones here) — the exact artifact v44/v46 stage,
       // so the staged route reuses it; the lease/publish stays live
-      rebuildVersionedVecIndexFrom(s, root, emb,
-        stageKey = Some(s"ivfpq:full:${stagedEmbIdent(d)}"))
+      rebuildVersionedVecIndex(s, root, corpus = Some(emb),
+        stageKey = Some(stageKeyOf(d, "ivfpq", "full")))
       searchVersionedVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2)
     },
@@ -4455,12 +4158,8 @@ object VectorOps {
   val v51: GraftQuery = GraftQuery(
     "v51_rebuild_lease_takeover",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v51_vroot_$id"
       val emb = Tables.embeddings(s, d)
-      initVersionedVecIndex(emb.filter(col("vec_id") % 10 =!= 0), root,
-        stageKey = Some(s"ivf:sub90:${stagedEmbIdent(d)}"))
-      appendToVersionedVecIndex(emb.filter(col("vec_id") % 10 === 0), root)
+      val root = grownVersionedRoot(s, d, "v51_vroot", "ivf")
       // writer A claims v2 and "crashes" (never builds, never releases)
       require(graft.core.VersionedStore.claim(s, root, 2L,
         ttlMs = 60L * 60 * 1000), "test setup: claim on v2 must succeed")
@@ -4475,7 +4174,7 @@ object VectorOps {
       // A's lease is now stale (ttl 0): the retry takes it over and is
       // the ONE writer of v2
       val nextDir = rebuildVersionedVecIndex(s, root, leaseTtlMs = 0L)
-      require(nextDir.endsWith(versionName(2L)) &&
+      require(nextDir.endsWith(graft.core.VersionedStore.versionName(2L)) &&
         currentVecIndexVersion(s, root) == Some(2L),
         "takeover must publish exactly v2")
       searchVersionedVecIndex(s, root,
@@ -4494,12 +4193,9 @@ object VectorOps {
   val v52: GraftQuery = GraftQuery(
     "v52_advisor_embedding_drift",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v52_advidx_$id"
-      val sigPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/v52_sigs_$id"
       val emb = Tables.embeddings(s, d)
-      graft.core.SessionStaging.into(s, s"ivf:full:${stagedEmbIdent(d)}",
-        path)(buildIvfIndex(emb, _))
+      val path = stagedIndex(s, d, "v52_advidx", "ivf", "full")
+      val sigPath = scratchRoot("v52_sigs")
       embeddingSignatures(
           emb.withColumn("is_ref", expr("vec_id % 2 = 0")), "vec_id", "is_ref")
         .write.mode("overwrite").parquet(sigPath)

@@ -449,7 +449,7 @@ object QueryService {
   // resolved base relations (file listing + footer schema live inside the
   // DataFrame) — reusable per poll because version directories are
   // immutable under SERVING; the maintenance entry points that do mutate
-  // one in place (versioned append/delete/compact) bump the directory's
+  // one in place (versioned append/delete) bump the directory's
   // mutation epoch, which [[epoched]] folds into every relation and plan
   // key, so a same-JVM mutation re-keys these caches instead of serving
   // stale file listings (ADVICE r12)
@@ -489,7 +489,7 @@ object QueryService {
   }
 
   // centroids/codebook keys fold the mutation epoch like the relation and
-  // plan caches: an in-place geometry rewrite (rebuildIvfIndex's swap)
+  // plan caches: an in-place geometry rewrite (rebuildVecIndex's swap)
   // must not leave polls scoring new postings against stale centroids
   private def centsOf(s: SparkSession, path: String) =
     capped(servedCents).getOrElseUpdate(epoched(path),
@@ -526,11 +526,11 @@ object QueryService {
     * planned searches make at construction; serving scratch roots never
     * see deletes, but if one ever does (vecIndexRoot is visible inside
     * the package), bypass the cache so the delete contract — gone at
-    * the NEXT query — holds. One or two File.exists per poll.
+    * the NEXT query — holds. One File.exists per poll: every route reads
+    * the root's one tombstone table.
     */
   private def tombstoned(path: String): Boolean =
-    new java.io.File(s"$path/tombstones").exists() ||
-      new java.io.File(s"$path/pq_tombstones").exists()
+    new java.io.File(s"$path/tombstones").exists()
 
   def vecSearch(s: SparkSession, d: String, k: Int = 3,
       tier: String = "ivf"): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.core.Sessions
+import org.apache.spark.Success
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 
 /** Dev measurement tool for the optimization rounds: per-query wall time
@@ -13,10 +14,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   */
 object OptProbe {
 
-  private class Counts extends SparkListener {
+  private[graft] class Counts extends SparkListener {
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0
+    @volatile var retried = 0
     @volatile var shuffleRead = 0L
     @volatile var shuffleWrite = 0L
     override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
@@ -25,11 +27,16 @@ object OptProbe {
       shuffleRead += s.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead
       shuffleWrite += s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
     }
-    // counted per FIRST-attempt completed task (ADVICE r13): accumulating
-    // stageInfo.numTasks would double-count retried stages, inflating the
-    // probe numbers the optimization evidence tables cite
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null && t.taskInfo.attemptNumber == 0) tasks += 1
+    // `tasks` = SUCCESSFUL task ends, so the evidence tables count
+    // completed work once however it was scheduled (accumulating
+    // stageInfo.numTasks would double-count retried stages, and counting
+    // first attempts would count failures while missing work a retry
+    // finished); `retried` = task ends of retry attempts, whatever their
+    // outcome — the scheduling noise beside the work
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+      if (t.reason == Success) tasks += 1
+      if (t.taskInfo != null && t.taskInfo.attemptNumber > 0) retried += 1
+    }
   }
 
   def main(args: Array[String]): Unit = {
@@ -96,13 +103,13 @@ object OptProbe {
           val sec = (System.nanoTime() - t0) / 1e9
           Thread.sleep(120)
           spark.sparkContext.removeSparkListener(c)
-          (sec, c.jobs, c.stages, c.tasks)
+          (sec, c.jobs, c.stages, c.tasks, c.retried)
         }
         val ts = samples.map(_._1).sorted
         println(f"[polls] $name%-18s p50=${ts(9)}%.3fs p95=${ts(18)}%.3fs " +
           f"min=${ts.head}%.3fs max=${ts.last}%.3fs " +
           f"jobs=${samples.map(_._2).max}%d stages=${samples.map(_._3).max}%d " +
-          f"tasks=${samples.map(_._4).max}%d")
+          f"tasks=${samples.map(_._4).max}%d retried=${samples.map(_._5).max}%d")
       }
       pollArm("rides", () => graft.serve.QueryService.ridesWindow(spark, sfDir,
         "2024-01-02 06:00:00", "2024-01-02 12:00:00", 365))
@@ -199,7 +206,7 @@ object OptProbe {
         if (tot < best) {
           best = tot
           bestLine = f"[probe] ${q.name}%-34s build=${(t1 - t0) / 1e9}%6.2fs exec=${(t2 - t1) / 1e9}%6.2fs " +
-            f"jobs=${c.jobs}%3d stages=${c.stages}%3d tasks=${c.tasks}%4d " +
+            f"jobs=${c.jobs}%3d stages=${c.stages}%3d tasks=${c.tasks}%4d retried=${c.retried}%d " +
             f"shufR=${c.shuffleRead / 1024}%7dKB shufW=${c.shuffleWrite / 1024}%7dKB"
         }
       }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Operational latency probe for the serving arms — the bench's poll
   * section as a standalone tool, so a serving change can be measured in
@@ -11,13 +10,9 @@ object PollProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val n = if (args.length > 1) args(1).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the session Bench and the serving layer run (graft.core.Sessions)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.core.Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     def probe(name: String, mk: () => org.apache.spark.sql.DataFrame): Unit = {
       mk().write.format("noop").mode("overwrite").save() // seed + warm

@@ -152,8 +152,8 @@ class GraftTourSpec extends SparkSpec {
     assert(afterCompact == afterDel)
     // the compressed tier: PQ codes served without ever re-reading floats
     val pqPath = s"$dir/pq"
-    Graft.annBuildPqIndex(emb, pqPath)
-    val adc = Graft.annSearchPqIndex(spark, pqPath, qs, k = 3)
+    Graft.annBuildIndex(emb, pqPath, tiers = "pq")
+    val adc = Graft.annSearchIndex(spark, pqPath, qs, k = 3, tier = "pq")
     assert(adc.select("q_id").distinct().count() == 5)
     // filtered search + its planner signal on the raw corpus
     val filtered = Graft.annFilteredTopK(emb, qs, col("label") === 1, k = 3)
@@ -171,37 +171,36 @@ class GraftTourSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-tour-srv").toString
     val path = s"$dir/idx"
     // one root, both tiers; the facade routes per query budget
-    Graft.annBuildVecIndex(emb.filter(vid % 10 =!= 0), path)
+    Graft.annBuildIndex(emb.filter(vid % 10 =!= 0), path, tiers = "both")
     val qs = emb.filter(vid < 5)
     for (tier <- Seq("ivf", "pq", "rerank", "auto")) {
-      val hits = Graft.annSearchVecIndex(spark, path, qs, k = 3, tier = tier)
+      val hits = Graft.annSearchIndex(spark, path, qs, k = 3, tier = tier)
       assert(hits.select("q_id").distinct().count() == 5, s"tier $tier")
     }
-    // the PQ tier has the same append lifecycle as the raw tier — encode
-    // against the frozen codebook, then ask the drift audit whether that
-    // codebook still fits the corpus being served
+    // one append grows every tier — the PQ codes are encoded against the
+    // frozen codebook, then the drift audit asks whether that codebook
+    // still fits the corpus being served
     Graft.annAppendIndex(emb.filter(vid % 10 === 0), path)
-    Graft.annAppendPqIndex(emb.filter(vid % 10 === 0), path)
     val drift = Graft.annPqDriftAudit(spark, path, emb).collect()(0)
     assert(drift.getAs[Long]("cur_n") > drift.getAs[Long]("build_n"))
     // unified delete + compaction hit every tier; routes agree afterwards
-    Graft.annDeleteFromVecIndex(spark, path, emb.filter(vid === 1L))
-    Graft.annCompactVecIndex(spark, path)
+    Graft.annDeleteFromIndex(spark, path, emb.filter(vid === 1L))
+    Graft.annCompactIndex(spark, path)
     for (tier <- Seq("ivf", "pq", "rerank")) {
-      val got = Graft.annSearchVecIndex(spark, path, qs, k = 3, tier = tier)
+      val got = Graft.annSearchIndex(spark, path, qs, k = 3, tier = tier)
         .collect().map(_.getLong(1)).toSet
       assert(!got.contains(1L), s"tier $tier still serves the deleted id")
     }
     // offline recenter when the occupancy diagnostic says so — after it,
     // the raw tier is indistinguishable from a fresh build
     Graft.annRebuildIndex(spark, path)
-    assert(Graft.annSearchVecIndex(spark, path, qs, k = 3, tier = "ivf")
+    assert(Graft.annSearchIndex(spark, path, qs, k = 3, tier = "ivf")
       .select("q_id").distinct().count() == 5)
     // the fused residual tier lives in its own root (cluster-partitioned
     // codes) — the facade's auto detection routes it without being told
     val rPath = s"$dir/ivfpq"
-    Graft.annBuildIvfPqIndex(emb, rPath)
-    val fused = Graft.annSearchVecIndex(spark, rPath, qs, k = 3)
+    Graft.annBuildIndex(emb, rPath, tiers = "ivfpq")
+    val fused = Graft.annSearchIndex(spark, rPath, qs, k = 3)
     assert(fused.select("q_id").distinct().count() == 5)
     assert(fused.columns.contains("adc"), "residual route scores by ADC")
   }

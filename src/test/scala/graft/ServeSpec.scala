@@ -131,7 +131,7 @@ class ServeSpec extends SparkSpec {
     // flip must be invisible in results while the pointer advances
     val root = QueryService.serveRootOf(sf)
     val v2 = graft.operators.VectorOps
-      .rebuildVersionedVecIndexFrom(spark, root, emb)
+      .rebuildVersionedVecIndex(spark, root, corpus = Some(emb))
     assert(QueryService.vecIndexRoot(spark, sf) === v2)
     assert(v2 !== v1)
     assert(rows() === before,
@@ -213,7 +213,7 @@ class ServeSpec extends SparkSpec {
     // the bump lives in the LOW-LEVEL entry points, so a direct
     // UNVERSIONED append on the resolved version directory re-keys too
     val dir = graft.operators.VectorOps.resolveVecIndexRoot(spark, root)
-    graft.operators.VectorOps.appendToIvfIndex(clones, dir)
+    graft.operators.VectorOps.appendToVecIndex(clones, dir)
     assert(rows().exists(_.contains("9000000")),
       "a direct unversioned append must also surface at the next poll")
     graft.operators.VectorOps.deleteFromVecIndex(spark, dir,
@@ -246,6 +246,31 @@ class ServeSpec extends SparkSpec {
     // the serving refresh derives the window from observed polls
     QueryService.notePollMillis(20000L)
     assert(QueryService.vacuumGraceMs === 80000L)
+  }
+
+  test("a crashed first build's debris under an unpublished BM25 root does " +
+    "not block the staged init: it is replaced and the oracle page serves") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-sdoc-debris").toString + "/bm25"
+    // a crash mid-copy of roots/v1: partial files, nothing published
+    val debris = new java.io.File(s"$root/roots/v00000001/scores")
+    assert(debris.mkdirs())
+    java.nio.file.Files.write(new java.io.File(debris, "part-0.parquet").toPath,
+      "torn".getBytes)
+    val dir = QueryService.initVersionedDocIndex(
+      graft.core.Tables.documents(spark, sf), root,
+      stageKey = Some("bm25:full:" +
+        graft.core.SessionStaging.datasetIdent(sf, "documents.parquet")))
+    assert(dir === QueryService.resolveDocIndexRoot(spark, root))
+    assert(!new java.io.File(debris, "part-0.parquet").exists())
+    val page = spark.read.parquet(s"$dir/head")
+      .orderBy(col("bm25").desc, col("doc_id")).limit(10).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("bm25")))
+    val oracle = graft.operators.TextOps.x31.build(spark, sf).collect()
+      .sortBy(r => (-r.getAs[Double]("bm25"), r.getAs[Long]("doc_id")))
+      .take(10).map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("bm25")))
+    assert(page.toSeq === oracle.toSeq)
   }
 
   test("doc search serves the exact BM25 top-10, score-descending") {

@@ -4,9 +4,9 @@ import graft.core.SessionStaging
 
 /** The session-staging seam the r14 optimization round introduced for the
   * v-family / serve-trio from-scratch builds: build-once-per-key, every
-  * caller gets a byte-equal private copy, distinct keys never share, and
-  * a non-empty target is refused loudly (the copy must never merge into a
-  * directory some other writer already touched).
+  * caller gets a byte-equal private copy, distinct keys never share, a
+  * leftover target (crash debris) is replaced instead of merged into, and
+  * a build that throws leaves nothing its retry could inherit.
   */
 class SessionStagingSpec extends SparkSpec {
 
@@ -61,19 +61,43 @@ class SessionStagingSpec extends SparkSpec {
     assert(readRows(s"$t2/data") == Seq(2L))
   }
 
-  test("a non-empty target is refused, an empty one is replaced") {
+  test("a non-empty target is cleared, never merged into; an empty one is replaced") {
     val key = s"spec:${java.util.UUID.randomUUID()}"
     val occupied = fresh("occupied")
     writeRows(s"$occupied/data", Seq(5L))
-    intercept[IllegalArgumentException] {
-      SessionStaging.into(spark, key, occupied)(d =>
-        writeRows(s"$d/data", Seq(1L)))
-    }
+    writeRows(s"$occupied/debris", Seq(6L))
+    SessionStaging.into(spark, key, occupied)(d =>
+      writeRows(s"$d/data", Seq(1L)))
+    assert(readRows(s"$occupied/data") == Seq(1L))
+    assert(!new java.io.File(s"$occupied/debris").exists(),
+      "crash debris must not survive into the copy")
     val empty = fresh("empty")
     assert(new java.io.File(empty).mkdirs())
     SessionStaging.into(spark, key, empty)(d =>
       writeRows(s"$d/data", Seq(1L)))
     assert(readRows(s"$empty/data") == Seq(1L))
+  }
+
+  test("a build that throws is not recorded and leaves no partial output " +
+    "for the retry") {
+    val key = s"spec:${java.util.UUID.randomUUID()}"
+    val t1 = fresh("a")
+    intercept[IllegalStateException] {
+      SessionStaging.into(spark, key, t1) { d =>
+        writeRows(s"$d/partial", Seq(9L))
+        throw new IllegalStateException("crash mid-build")
+      }
+    }
+    var builds = 0
+    SessionStaging.into(spark, key, t1) { d =>
+      builds += 1
+      assert(!new java.io.File(s"$d/partial").exists(),
+        "the retry must start from an empty build directory")
+      writeRows(s"$d/data", Seq(3L))
+    }
+    assert(builds == 1, "a failed build must not be recorded as staged")
+    assert(readRows(s"$t1/data") == Seq(3L))
+    assert(!new java.io.File(s"$t1/partial").exists())
   }
 
   test("datasetIdent re-keys when the source file changes") {

@@ -593,8 +593,8 @@ class VectorOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val qs = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10)
     val path = java.nio.file.Files.createTempDirectory("graft-ivf").toString + "/idx"
-    VectorOps.buildIvfIndex(emb, path)
-    val fromIndex = VectorOps.searchIvfIndex(spark, path, qs, k = 3, probes = 2)
+    VectorOps.buildVecIndex(emb, path, "ivf")
+    val fromIndex = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf")
     val got = fromIndex.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inMem = VectorOps.ivfTopK(emb, qs, k = 3, probes = 2).collect()
@@ -628,9 +628,9 @@ class VectorOpsSpec extends SparkSpec {
     def searchAfter(chunks: Seq[org.apache.spark.sql.DataFrame]) = {
       val path = java.nio.file.Files
         .createTempDirectory("graft-ivf-app").toString + "/idx"
-      VectorOps.buildIvfIndex(base, path)
-      chunks.foreach(VectorOps.appendToIvfIndex(_, path))
-      VectorOps.searchIvfIndex(spark, path, qs, k = 3, probes = 2).collect()
+      VectorOps.buildVecIndex(base, path, "ivf")
+      chunks.foreach(VectorOps.appendToVecIndex(_, path))
+      VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     }
     val oneShot = searchAfter(Seq(rest))
@@ -654,14 +654,14 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(vid < 10)
     val path = java.nio.file.Files
       .createTempDirectory("graft-ivf-del").toString + "/idx"
-    VectorOps.buildIvfIndex(emb, path)
-    val before = VectorOps.searchIvfIndex(spark, path, qs, 3, 2).collect()
+    VectorOps.buildVecIndex(emb, path, "ivf")
+    val before = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // delete the two nearest neighbors of query 0 — they must vanish
     val victims = before.filter(_._1 == 0L).map(_._2).toSeq.take(2)
-    VectorOps.deleteFromIvfIndex(spark, path,
+    VectorOps.deleteFromVecIndex(spark, path,
       emb.filter(vid.isin(victims: _*)))
-    val after = VectorOps.searchIvfIndex(spark, path, qs, 3, 2).collect()
+    val after = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(victims.forall(v => !after.exists(_._2 == v)),
       "tombstoned ids must stop being served immediately")
@@ -669,14 +669,14 @@ class VectorOpsSpec extends SparkSpec {
       "every query still gets answers (k refills from the cell)")
     // compaction: identical results, tombstones gone, postings shrunk
     val rowsBefore = spark.read.parquet(s"$path/postings").count()
-    VectorOps.compactIvfIndex(spark, path)
-    val compacted = VectorOps.searchIvfIndex(spark, path, qs, 3, 2).collect()
+    VectorOps.compactVecIndex(spark, path)
+    val compacted = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(compacted === after, "compaction must not change a single bit")
     assert(!new java.io.File(s"$path/tombstones").exists())
     assert(spark.read.parquet(s"$path/postings").count() === rowsBefore - 2)
     // compacting an index with no tombstones is a no-op
-    VectorOps.compactIvfIndex(spark, path)
+    VectorOps.compactVecIndex(spark, path)
     assert(spark.read.parquet(s"$path/postings").count() === rowsBefore - 2)
   }
 
@@ -687,8 +687,8 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10)
     val path = java.nio.file.Files
       .createTempDirectory("graft-pqidx").toString + "/idx"
-    VectorOps.buildPqIndex(emb, path)
-    val fromIndex = VectorOps.searchPqIndex(spark, path, qs, k = 3).collect()
+    VectorOps.buildVecIndex(emb, path, "pq")
+    val fromIndex = VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inMem = VectorOps.v8.build(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -714,9 +714,9 @@ class VectorOpsSpec extends SparkSpec {
     def searchAfter(chunks: Seq[org.apache.spark.sql.DataFrame]): Set[(Long, Long, Double)] = {
       val path = java.nio.file.Files
         .createTempDirectory("graft-pq-app").toString + "/idx"
-      VectorOps.buildPqIndex(base, path)
-      chunks.foreach(VectorOps.appendToPqIndex(_, path))
-      VectorOps.searchPqIndex(spark, path, qs, k = 3).collect()
+      VectorOps.buildVecIndex(base, path, "pq")
+      chunks.foreach(VectorOps.appendToVecIndex(_, path))
+      VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     }
     val oneShot = searchAfter(Seq(rest))
@@ -744,28 +744,28 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(vid < 10)
     val path = java.nio.file.Files
       .createTempDirectory("graft-pq-del").toString + "/idx"
-    VectorOps.buildPqIndex(emb, path)
-    val before = VectorOps.searchPqIndex(spark, path, qs, 3).collect()
+    VectorOps.buildVecIndex(emb, path, "pq")
+    val before = VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val victims = before.filter(_._1 == 0L).map(_._2).toSeq.take(2)
-    VectorOps.deleteFromPqIndex(spark, path, emb.filter(vid.isin(victims: _*)))
-    val after = VectorOps.searchPqIndex(spark, path, qs, 3).collect()
+    VectorOps.deleteFromVecIndex(spark, path, emb.filter(vid.isin(victims: _*)))
+    val after = VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(victims.forall(v => !after.exists(_._2 == v)),
       "tombstoned ids must stop being served immediately")
     assert(after.map(_._1).toSeq.distinct.length === 10)
     val rowsBefore = spark.read.parquet(s"$path/codes").count()
-    VectorOps.compactPqIndex(spark, path)
-    val compacted = VectorOps.searchPqIndex(spark, path, qs, 3).collect()
+    VectorOps.compactVecIndex(spark, path)
+    val compacted = VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(compacted === after, "compaction must not change a single bit")
-    assert(!new java.io.File(s"$path/pq_tombstones").exists())
+    assert(!new java.io.File(s"$path/tombstones").exists())
     assert(!new java.io.File(s"$path/codes_old").exists(),
       "swap-aside must clean up after itself")
     assert(!new java.io.File(s"$path/codes_compacting").exists())
     assert(spark.read.parquet(s"$path/codes").count() === rowsBefore - 2)
     // compacting with no tombstones is a no-op
-    VectorOps.compactPqIndex(spark, path)
+    VectorOps.compactVecIndex(spark, path)
     assert(spark.read.parquet(s"$path/codes").count() === rowsBefore - 2)
   }
 
@@ -776,14 +776,14 @@ class VectorOpsSpec extends SparkSpec {
       .map(i => (i.toLong, Seq.fill(16)(i.toFloat)))
       .toDF("vec_id", "embedding")
     val short = intercept[IllegalArgumentException] {
-      VectorOps.buildPqIndex(tiny, s"$dir/short")
+      VectorOps.buildVecIndex(tiny, s"$dir/short", "pq")
     }
     assert(short.getMessage.contains("needs at least"))
     val odd = (0 until 20)
       .map(i => (i.toLong, Seq.fill(12)(i.toFloat + 1f)))
       .toDF("vec_id", "embedding")
     val dim = intercept[IllegalArgumentException] {
-      VectorOps.buildPqIndex(odd, s"$dir/odd")
+      VectorOps.buildVecIndex(odd, s"$dir/odd", "pq")
     }
     assert(dim.getMessage.contains("not divisible"))
   }
@@ -794,7 +794,7 @@ class VectorOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val path = java.nio.file.Files
       .createTempDirectory("graft-pq-drift").toString + "/idx"
-    VectorOps.buildPqIndex(emb, path)
+    VectorOps.buildVecIndex(emb, path, "pq")
     // no appends: current corpus == build corpus, drift is exactly 0.0
     val same = VectorOps.pqDriftAudit(spark, path, emb).collect()(0)
     assert(same.getAs[Long]("build_n") === 500L)
@@ -807,7 +807,7 @@ class VectorOpsSpec extends SparkSpec {
       (org.apache.spark.sql.functions.col("vec_id") + 1000L).as("vec_id"),
       org.apache.spark.sql.functions
         .expr("transform(embedding, x -> -x)").as("embedding"))
-    VectorOps.appendToPqIndex(shifted, path)
+    VectorOps.appendToVecIndex(shifted, path)
     val drifted = VectorOps.pqDriftAudit(spark, path,
       emb.select("vec_id", "embedding").unionByName(shifted)).collect()(0)
     assert(drifted.getAs[Long]("cur_n") === 1000L)
@@ -827,16 +827,19 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(vid < 10)
     val path = java.nio.file.Files
       .createTempDirectory("graft-facade").toString + "/idx"
-    VectorOps.buildVecIndex(emb, path)
+    VectorOps.buildVecIndex(emb, path, "both")
     def ids(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // explicit tiers == the underlying native searches, bit for bit
+    // explicit tiers == the underlying planned searches, bit for bit
+    val qArr = VectorOps.collectQueryVectors(qs)
     assert(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "ivf")
       .collect().toSeq ===
-      VectorOps.searchIvfIndex(spark, path, qs, 3, 2).collect().toSeq)
+      VectorOps.searchIvfIndexPlanned(spark, path, qArr,
+        VectorOps.loadIvfCentroids(spark, path), 3, 2).collect().toSeq)
     assert(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq")
       .collect().toSeq ===
-      VectorOps.searchPqIndex(spark, path, qs, 3).collect().toSeq)
+      VectorOps.searchPqIndexPlanned(spark, path, qArr,
+        VectorOps.loadPqCodebook(spark, path), 3).collect().toSeq)
     // auto = rerank when both tiers exist
     val auto = ids(VectorOps.searchVecIndex(spark, path, qs, 3))
     val rr = ids(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "rerank"))
@@ -874,7 +877,8 @@ class VectorOpsSpec extends SparkSpec {
         s"tier $t changed across compaction")
     }
     assert(!new java.io.File(s"$path/tombstones").exists())
-    assert(!new java.io.File(s"$path/pq_tombstones").exists())
+    assert(!new java.io.File(path).list().exists(_.contains("tombstones")),
+      "compaction must leave no tombstone table of any name")
     // unknown tier fails loudly
     val bad = intercept[RuntimeException] {
       VectorOps.searchVecIndex(spark, path, qs, 3, tier = "hnsw")
@@ -891,7 +895,7 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(vid < 10)
     val path = java.nio.file.Files
       .createTempDirectory("graft-facade-ivfpq").toString + "/idx"
-    VectorOps.buildIvfPqIndex(emb, path)
+    VectorOps.buildVecIndex(emb, path, "ivfpq")
     def serve(): Set[(Long, Long, Double)] =
       VectorOps.searchVecIndex(spark, path, qs, 3, tier = "auto").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -902,8 +906,9 @@ class VectorOpsSpec extends SparkSpec {
     val victims = before.filter(_._1 == 0L).map(_._2).toSeq.take(2)
     VectorOps.deleteFromVecIndex(spark, path, emb.filter(vid.isin(victims: _*)))
     assert(new java.io.File(s"$path/tombstones").exists(),
-      "residual root must tombstone into tombstones/, not pq_tombstones/")
-    assert(!new java.io.File(s"$path/pq_tombstones").exists())
+      "residual root must tombstone into the root's one tombstones/ table")
+    assert(new java.io.File(path).list().filter(_.contains("tombstones")).toSeq ===
+      Seq("tombstones"), "one tombstone table per root")
     val afterDel = serve()
     assert(victims.forall(v => !afterDel.exists(_._2 == v)),
       "facade delete must stop serving victims on the auto (ivfpq) route")
@@ -931,7 +936,7 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(vid < 10)
     val root = java.nio.file.Files
       .createTempDirectory("graft-facade-heal").toString + "/idx"
-    VectorOps.buildVecIndex(emb, root)
+    VectorOps.buildVecIndex(emb, root, "both")
     val want = VectorOps.searchVecIndex(spark, root, qs, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // simulate the crash window between swapAside's two renames: the live
@@ -949,6 +954,107 @@ class VectorOpsSpec extends SparkSpec {
     assert(!new java.io.File(s"$root/postings_old").exists())
   }
 
+  test("every verb over every layout: appends and deletes reach every " +
+    "route, compaction and rebuild leave served results bit-identical") {
+    import org.apache.spark.sql.functions.{col, md5}
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    // the geometry samples (K centroids, PqKs codewords) are the smallest
+    // md5(vec_id) rows of whatever corpus they are drawn from; keeping
+    // them out of the appended and deleted sets makes the rebuild's
+    // alive corpus re-select the SAME geometry, so its results must not
+    // move a bit
+    val anchors = emb.orderBy(md5(vid.cast("string"))).limit(16)
+      .select(vid).collect().map(_.getLong(0)).toSet
+    val appended = (0L until 500L).filter(i => i % 10 == 3 && !anchors(i))
+    val base = emb.filter(!vid.isin(appended: _*))
+    val qIds = appended.take(6)
+    val qs = emb.filter(vid.isin(qIds: _*))
+    val routesOf = Map(
+      "ivf" -> Seq("ivf"), "both" -> Seq("ivf", "pq", "rerank"),
+      "ivfpq" -> Seq("ivfpq"))
+    for ((layout, routes) <- routesOf) {
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft-verbs-$layout").toString + "/idx"
+      // self-inclusive queries: an appended vector must find ITSELF on
+      // every route (k and the rerank budget cover a whole cluster, so
+      // ADC ties inside a cluster cannot crowd it out)
+      def serve(tier: String): Set[(Long, Long, Double)] =
+        VectorOps.searchVecIndex(spark, path, qs, k = 60, probes = 2,
+          tier = tier, rerankCandidates = 120, excludeSelf = false).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      def serveAll(): Map[String, Set[(Long, Long, Double)]] =
+        (routes :+ "auto").map(t => t -> serve(t)).toMap
+      VectorOps.buildVecIndex(base, path, layout)
+      VectorOps.appendToVecIndex(emb.filter(vid.isin(appended: _*)), path)
+      val served = serveAll()
+      for ((t, rows) <- served; q <- qIds)
+        assert(rows.exists(r => r._1 == q && r._2 == q),
+          s"$layout/$t: appended id $q is not served")
+      assert(served("auto") === served(if (layout == "both") "rerank" else routes.head))
+      val victims = qIds.take(2) ++ Seq(1L, 2L).filterNot(anchors)
+      VectorOps.deleteFromVecIndex(spark, path, emb.filter(vid.isin(victims: _*)))
+      val afterDel = serveAll()
+      for ((t, rows) <- afterDel)
+        assert(!rows.exists(r => victims.contains(r._2)),
+          s"$layout/$t still serves a deleted id")
+      VectorOps.compactVecIndex(spark, path)
+      assert(serveAll() === afterDel, s"$layout: compaction changed results")
+      // a codes-only root retrains from the source of truth, which by
+      // now reflects the deletes (compaction dropped the tombstones)
+      VectorOps.rebuildVecIndex(spark, path,
+        if (layout == "ivfpq") Some(emb.filter(!vid.isin(victims: _*))) else None)
+      assert(serveAll() === afterDel, s"$layout: rebuild changed results")
+      assert(!new java.io.File(path).list().exists(_.contains("tombstones")))
+    }
+    // the search-route contract: a route the layout lacks fails loudly
+    val ivfOnly = java.nio.file.Files
+      .createTempDirectory("graft-verbs-route").toString + "/idx"
+    VectorOps.buildVecIndex(emb, ivfOnly, "ivf")
+    val noPq = intercept[IllegalArgumentException] {
+      VectorOps.searchVecIndex(spark, ivfOnly, qs, 3, tier = "pq")
+    }
+    assert(noPq.getMessage.contains("pq route"))
+  }
+
+  test("versioned compaction publishes a successor: a search resolved " +
+    "before it still reads the pre-compaction files") {
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = org.apache.spark.sql.functions.col("vec_id")
+    val qs = emb.filter(vid < 10)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-vcompact").toString + "/vidx"
+    def ids(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    VectorOps.initVersionedVecIndex(emb, root, tiers = "both")
+    VectorOps.deleteFromVersionedVecIndex(spark, root, emb.filter(vid % 7 === 0))
+    val want = Seq("ivf", "pq", "rerank").map(t =>
+      t -> ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3, tier = t))).toMap
+    // the in-flight reader: resolved (file listing taken) before compaction
+    val pinned = Seq("ivf", "pq", "rerank").map(t =>
+      t -> VectorOps.searchVersionedVecIndex(spark, root, qs, 3, tier = t)).toMap
+    VectorOps.compactVersionedVecIndex(spark, root)
+    assert(VectorOps.currentVecIndexVersion(spark, root) === Some(2L),
+      "compaction must publish the compacted tiers as a new version")
+    pinned.foreach { case (t, df) =>
+      assert(ids(df) === want(t), s"pinned $t read changed under compaction")
+    }
+    val v2 = VectorOps.resolveVecIndexRoot(spark, root)
+    assert(!new java.io.File(s"$v2/tombstones").exists())
+    assert(spark.read.parquet(s"$v2/postings").count() ===
+      emb.filter(vid % 7 =!= 0).count())
+    Seq("ivf", "pq", "rerank").foreach(t =>
+      assert(ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3, tier = t)) ===
+        want(t), s"compacted $t results moved"))
+    // the published v1 was never rewritten
+    assert(new java.io.File(s"$root/roots/v00000001/tombstones").exists())
+    // nothing to reclaim -> no new version
+    VectorOps.compactVersionedVecIndex(spark, root)
+    assert(VectorOps.currentVecIndexVersion(spark, root) === Some(2L))
+  }
+
   test("v43 rebuild under planted cluster drift: the diagnostic fires, " +
     "recall does not regress, and the rebuilt index equals a fresh build") {
     val dir = clusteredDir()
@@ -960,8 +1066,8 @@ class VectorOpsSpec extends SparkSpec {
     val drifted = emb.filter(vid >= 250)
     val path = java.nio.file.Files
       .createTempDirectory("graft-ivf-reb").toString + "/idx"
-    VectorOps.buildIvfIndex(base, path)
-    VectorOps.appendToIvfIndex(drifted, path)
+    VectorOps.buildVecIndex(base, path, "ivf")
+    VectorOps.appendToVecIndex(drifted, path)
     // v18's signal: half the corpus crowded into cells sampled from the
     // other half must overflow somewhere
     val diag = VectorOps.ivfIncremental(base, drifted).collect()
@@ -972,12 +1078,12 @@ class VectorOpsSpec extends SparkSpec {
     val truth = VectorOps.bruteForceTopK(emb, qs, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     def recallNow(): Double = {
-      val got = VectorOps.searchIvfIndex(spark, path, qs, 3, 2).collect()
+      val got = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       truth.count(got.contains).toDouble / truth.size
     }
     val before = recallNow()
-    VectorOps.rebuildIvfIndex(spark, path)
+    VectorOps.rebuildVecIndex(spark, path)
     val after = recallNow()
     assert(after >= before,
       s"rebuild must not regress recall: before=$before after=$after")
@@ -986,12 +1092,13 @@ class VectorOpsSpec extends SparkSpec {
     // the current corpus
     val freshPath = java.nio.file.Files
       .createTempDirectory("graft-ivf-fresh").toString + "/idx"
-    VectorOps.buildIvfIndex(emb, freshPath)
-    val rebuilt = VectorOps.searchIvfIndex(spark, path, qs, 3, 2).collect()
+    VectorOps.buildVecIndex(emb, freshPath, "ivf")
+    val rebuilt = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fresh = VectorOps.searchIvfIndex(spark, freshPath, qs, 3, 2).collect()
+    val fresh = VectorOps.searchVecIndex(spark, freshPath, qs, 3, 2, tier = "ivf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rebuilt === fresh)
+    assert(!new java.io.File(s"$path/_rebuilding").exists())
     assert(!new java.io.File(s"$path/postings_rebuilding").exists())
     assert(!new java.io.File(s"$path/centroids_rebuilding").exists())
     assert(!new java.io.File(s"$path/postings_old").exists())
@@ -1006,8 +1113,8 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(vid < 10)
     val path = java.nio.file.Files
       .createTempDirectory("graft-ivfpq").toString + "/idx"
-    VectorOps.buildIvfPqIndex(emb, path)
-    val got = VectorOps.searchIvfPqIndex(spark, path, qs, k = 3, probes = 2)
+    VectorOps.buildVecIndex(emb, path, "ivfpq")
+    val got = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivfpq")
     // the code scan must be partition-pruned to the probed cells (the
     // v37/s26 convention: PartitionFilters, not inputFiles)
     val plan = got.queryExecution.executedPlan.toString
@@ -1054,9 +1161,9 @@ class VectorOpsSpec extends SparkSpec {
     def searchAfter(chunks: Seq[org.apache.spark.sql.DataFrame]): Set[(Long, Long, Double)] = {
       val p = java.nio.file.Files
         .createTempDirectory("graft-ivfpq-app").toString + "/idx"
-      VectorOps.buildIvfPqIndex(base, p)
-      chunks.foreach(VectorOps.appendToIvfPqIndex(_, p))
-      VectorOps.searchIvfPqIndex(spark, p, qs, k = 3, probes = 2).collect()
+      VectorOps.buildVecIndex(base, p, "ivfpq")
+      chunks.foreach(VectorOps.appendToVecIndex(_, p))
+      VectorOps.searchVecIndex(spark, p, qs, 3, 2, tier = "ivfpq").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     }
     val oneShot = searchAfter(Seq(rest))
@@ -1069,12 +1176,12 @@ class VectorOpsSpec extends SparkSpec {
     val before = got.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val victims = before.filter(_._1 == 0L).map(_._2).toSeq.take(2)
-    VectorOps.deleteFromIvfPqIndex(spark, path, emb.filter(vid.isin(victims: _*)))
-    val afterDel = VectorOps.searchIvfPqIndex(spark, path, qs, 3, 2).collect()
+    VectorOps.deleteFromVecIndex(spark, path, emb.filter(vid.isin(victims: _*)))
+    val afterDel = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivfpq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(victims.forall(v => !afterDel.exists(_._2 == v)))
-    VectorOps.compactIvfPqIndex(spark, path)
-    val afterCompact = VectorOps.searchIvfPqIndex(spark, path, qs, 3, 2).collect()
+    VectorOps.compactVecIndex(spark, path)
+    val afterCompact = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivfpq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(afterCompact === afterDel, "compaction must not change a bit")
     assert(!new java.io.File(s"$path/tombstones").exists())
@@ -1114,9 +1221,9 @@ class VectorOpsSpec extends SparkSpec {
     // a fresh resolution = fully-new geometry = a fresh build, bit for bit
     val freshPath = java.nio.file.Files
       .createTempDirectory("graft-vroot-fresh").toString + "/idx"
-    VectorOps.buildIvfIndex(emb, freshPath)
+    VectorOps.buildVecIndex(emb, freshPath, "ivf")
     val newResults = ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3))
-    assert(newResults === ids(VectorOps.searchIvfIndex(spark, freshPath, qs, 3, 2)))
+    assert(newResults === ids(VectorOps.searchVecIndex(spark, freshPath, qs, 3, 2, tier = "ivf")))
     // tombstones flow into the successor version physically
     val victims = newResults.filter(_._1 == 250L).map(_._2).toSeq.take(2)
     VectorOps.deleteFromVersionedVecIndex(spark, root,
@@ -1169,11 +1276,11 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(vid >= 250 && vid < 260)
     val freshPath = java.nio.file.Files
       .createTempDirectory("graft-lease-fresh").toString + "/idx"
-    VectorOps.buildIvfIndex(emb, freshPath)
+    VectorOps.buildVecIndex(emb, freshPath, "ivf")
     def ids(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3)) ===
-      ids(VectorOps.searchIvfIndex(spark, freshPath, qs, 3, 2)))
+      ids(VectorOps.searchVecIndex(spark, freshPath, qs, 3, 2, tier = "ivf")))
     // crashed-lease takeover: a zombie claim on v3 blocks a fresh-lease
     // rebuild but not one whose TTL has passed
     assert(graft.core.VersionedStore.claim(spark, root, 3L,
@@ -1298,7 +1405,7 @@ class VectorOpsSpec extends SparkSpec {
     val noRaw = intercept[IllegalArgumentException] {
       VectorOps.rebuildVersionedVecIndex(spark, root)
     }
-    assert(noRaw.getMessage.contains("rebuildVersionedVecIndexFrom"))
+    assert(noRaw.getMessage.contains("corpus = Some"))
     // advisor on a residual root: occupancy row from the codes layout
     val adv = VectorOps.rebuildAdvisor(
       spark, VectorOps.resolveVecIndexRoot(spark, root)).collect()
@@ -1320,7 +1427,7 @@ class VectorOpsSpec extends SparkSpec {
     val victims = serve().filter(_._1 == 0L).map(_._2).toSeq.take(2)
     VectorOps.deleteFromVersionedVecIndex(spark, root,
       emb.filter(vid.isin(victims: _*)))
-    val v3dir = VectorOps.rebuildVersionedVecIndexFrom(spark, root, emb)
+    val v3dir = VectorOps.rebuildVersionedVecIndex(spark, root, corpus = Some(emb))
     assert(v3dir.endsWith("v00000003"))
     val after = serve()
     assert(victims.forall(v => !after.exists(_._2 == v)),
