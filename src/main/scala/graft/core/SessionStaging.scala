@@ -67,11 +67,16 @@ object SessionStaging {
 
   /** Content fingerprint of one source file of dataset `d` — the key
     * component that ties every staged artifact to the exact bytes it was
-    * derived from (same identity rule as QueryService.scratchIdent).
+    * derived from: path, size and the modification time in nanoseconds
+    * (as fine as the filesystem records it). A missing file fails here:
+    * fingerprinting it as "0:0" would key every missing dataset alike.
     */
   def datasetIdent(d: String, file: String): String = {
     val f = new java.io.File(d, file)
-    md5hex(s"${f.getAbsolutePath}:${f.length}:${f.lastModified}").take(16)
+    require(f.exists(), s"datasetIdent: ${f.getAbsolutePath} does not exist")
+    val mtime = java.nio.file.Files.getLastModifiedTime(f.toPath)
+      .to(java.util.concurrent.TimeUnit.NANOSECONDS)
+    md5hex(s"${f.getAbsolutePath}:${f.length}:$mtime").take(16)
   }
 
   /** Build-once-per-JVM, copy-per-caller: the first caller for `key` runs

@@ -5,6 +5,8 @@ import graft.core.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
+  StructField, StructType}
 
 /** Similarity search over the embeddings table (Array[Float] column):
   * brute-force cosine top-k as the correctness baseline, and an IVF
@@ -2560,7 +2562,20 @@ object VectorOps {
     */
   private sealed abstract class Tier(val name: String, val dirs: Seq[String],
       val data: String, val key: String, val payload: String,
-      val partitioned: Boolean) {
+      val partitioned: Boolean, columns: Seq[StructField]) {
+
+    /** The declared schema of the `data` directory: the columns [[encode]]
+      * writes, then — for a partitioned tier — `cluster` in the type
+      * partition inference would give it (INT while every cell id fits,
+      * BIGINT otherwise; cell ids are the centroid ids, so the type is read
+      * off the cached centroids). Every read of the data passes it, so no
+      * read runs a footer-inference job.
+      */
+    def schema(s: SparkSession, path: String): StructType =
+      if (!partitioned) StructType(columns)
+      else StructType(columns :+ StructField("cluster",
+        if (loadIvfCentroids(s, path).forall(_._1.isValidInt)) IntegerType
+        else LongType))
 
     /** Write this tier's geometry and its encoding of `corpus` under
       * `path` (every directory mode=overwrite).
@@ -2590,14 +2605,14 @@ object VectorOps {
     * parquet exactly).
     */
   private object IvfTier extends Tier("ivf", Seq("centroids", "postings"),
-      "postings", "c_id", "c_e", partitioned = true) {
+      "postings", "c_id", "c_e", partitioned = true,
+      Seq(StructField("c_id", LongType), StructField("c_e", Doubles))) {
     def build(corpus: DataFrame, path: String): Unit = {
       centroidsOf(corpus).write.mode("overwrite").parquet(s"$path/centroids")
       write(encode(corpus, path), s"$path/postings", "overwrite")
     }
     def encode(batch: DataFrame, path: String): DataFrame =
-      assign(withNorm(batch, "c"),
-        batch.sparkSession.read.parquet(s"$path/centroids"))
+      assign(withNorm(batch, "c"), centroidRows(batch.sparkSession, path))
   }
 
   /** PQ — the COMPRESSED tier: `codebook/` (PqKs rows, explicitly
@@ -2609,7 +2624,7 @@ object VectorOps {
     * serving scan reads codes only, never a float.
     */
   private object PqTier extends Tier("pq", Seq("codebook", "codes", "stats"),
-      "codes", "vec_id", "codes", partitioned = false) {
+      "codes", "vec_id", "codes", partitioned = false, CodeColumns) {
     def build(corpus: DataFrame, path: String): Unit = {
       val cb = writeCodebook(
         corpus.select(col("vec_id").as("id"), toDoubles.as("e")), path)
@@ -2633,7 +2648,7 @@ object VectorOps {
     */
   private object ResidualTier extends Tier("ivfpq",
       Seq("centroids", "codebook", "codes"), "codes", "vec_id", "codes",
-      partitioned = true) {
+      partitioned = true, CodeColumns) {
     def build(corpus: DataFrame, path: String): Unit = {
       centroidsOf(corpus).write.mode("overwrite").parquet(s"$path/centroids")
       // residuals, pinned once: reused by the codebook sample AND the encode
@@ -2645,6 +2660,44 @@ object VectorOps {
       encodeResiduals(residualsOf(batch, path),
         loadPqCodebook(batch.sparkSession, path))
   }
+
+  private val Doubles = ArrayType(DoubleType)
+
+  private val CodeColumns =
+    Seq(StructField("vec_id", LongType), StructField("codes", ArrayType(IntegerType)))
+
+  /** `tombstones/` — the one delete table of a root. */
+  private val TombstoneSchema = StructType(Seq(StructField("vec_id", LongType)))
+
+  private val CentroidSchema =
+    StructType(Seq(StructField("k_id", LongType), StructField("k_e", Doubles)))
+
+  private val CodebookSchema =
+    StructType(Seq(StructField("j", IntegerType), StructField("e", Doubles)))
+
+  /** Tier `t`'s data rows under `path`, read with its declared schema. The
+    * file listing is taken fresh, so files any process added since the
+    * last read (appends, compaction output) are served.
+    */
+  private def tierRows(s: SparkSession, path: String, t: Tier): DataFrame = {
+    recoverAside(s, s"$path/${t.data}")
+    s.read.schema(t.schema(s, path)).parquet(s"$path/${t.data}")
+  }
+
+  /** The persisted centroid table (k_id, k_e) — the assignment input of
+    * the IVF and residual encoders.
+    */
+  private def centroidRows(s: SparkSession, path: String): DataFrame =
+    s.read.schema(CentroidSchema).parquet(s"$path/centroids")
+
+  /** The declared schema of every directory under the root at `path`
+    * that a reader passes one for: each tier's data directory, the
+    * geometry tables and `tombstones/`, those present.
+    */
+  private[graft] def declaredSchemas(s: SparkSession, path: String): Map[String, StructType] =
+    (layoutOf(s, path).map(t => t.data -> t.schema(s, path)) ++
+      Seq("centroids" -> CentroidSchema, "codebook" -> CodebookSchema,
+        "tombstones" -> TombstoneSchema).filter(d => exists(s, s"$path/${d._1}"))).toMap
 
   private val layouts: Map[String, Seq[Tier]] = Map(
     "ivf" -> Seq(IvfTier), "pq" -> Seq(PqTier),
@@ -2702,12 +2755,21 @@ object VectorOps {
   private def aliveRows(s: SparkSession, path: String, rows: DataFrame,
       key: String): DataFrame =
     if (!exists(s, s"$path/tombstones")) rows
-    else rows.join(s.read.parquet(s"$path/tombstones")
+    else rows.join(s.read.schema(TombstoneSchema).parquet(s"$path/tombstones")
       .withColumnRenamed("vec_id", key), Seq(key), "left_anti")
+
+  /** `df` with its vec_id as BIGINT — every id a tier or the tombstone
+    * table persists goes through this, so the files of one directory never
+    * mix INT and BIGINT ids (a reader would fail on whichever file
+    * disagrees with the schema it reads with).
+    */
+  private def longIds(df: DataFrame): DataFrame =
+    df.withColumn("vec_id", col("vec_id").cast("long"))
 
   private def buildTiers(corpus: DataFrame, path: String, tiers: Seq[Tier]): Unit = {
     graft.plans.GraftExtensions.register(corpus.sparkSession)
-    tiers.foreach(_.build(corpus, path))
+    val rows = longIds(corpus)
+    tiers.foreach(_.build(rows, path))
   }
 
   /** Persist `corpus` as an index root of layout `tiers` ("ivf" | "pq" |
@@ -2731,7 +2793,7 @@ object VectorOps {
   def appendToVecIndex(batch: DataFrame, path: String): Unit = {
     graft.plans.GraftExtensions.register(batch.sparkSession)
     requireLayout(batch.sparkSession, path, "appendToVecIndex").foreach(t =>
-      t.write(t.encode(batch, path), s"$path/${t.data}", "append"))
+      t.write(t.encode(longIds(batch), path), s"$path/${t.data}", "append"))
     noteMutation(path)
   }
 
@@ -2744,7 +2806,7 @@ object VectorOps {
     */
   def deleteFromVecIndex(s: SparkSession, path: String, ids: DataFrame): Unit = {
     requireLayout(s, path, "deleteFromVecIndex")
-    ids.select(col("vec_id")).write.mode("append").parquet(s"$path/tombstones")
+    longIds(ids.select(col("vec_id"))).write.mode("append").parquet(s"$path/tombstones")
     noteMutation(path)
   }
 
@@ -2759,7 +2821,7 @@ object VectorOps {
     * documented mutation path and compaction itself reclaims the old rows.
     */
   private def compacted(s: SparkSession, path: String, t: Tier): DataFrame = {
-    val alive = aliveRows(s, path, s.read.parquet(s"$path/${t.data}"), t.key)
+    val alive = aliveRows(s, path, tierRows(s, path, t), t.key)
     val mutated = alive
       .groupBy(t.key)
       .agg(countDistinct(hash(col(t.payload))).as("nv"))
@@ -2848,7 +2910,7 @@ object VectorOps {
         s"rebuild: $dir has no raw postings tier to rebuild from — a " +
           "codes-only root is lossy; retrain it from the source-of-truth " +
           "corpus (corpus = Some(df))")
-      aliveRows(s, dir, s.read.parquet(s"$dir/postings").select("c_id", "c_e"), "c_id")
+      aliveRows(s, dir, tierRows(s, dir, IvfTier).select("c_id", "c_e"), "c_id")
         .dropDuplicates("c_id")
         .select(col("c_id").as("vec_id"), col("c_e").as("embedding"))
   }
@@ -2887,29 +2949,75 @@ object VectorOps {
     noteMutation(path)
   }
 
-  /** The K-row centroid table as a driver array — tiny by contract.
-    * PUBLIC so a serving layer can load it ONCE per immutable index root
-    * and reuse it across polls ([[searchIvfIndexPlanned]]): the
-    * per-request parquet read (a whole Spark job at serving latencies)
-    * drops off the warm path.
+  /** Frozen index geometry (centroid tables, codebooks) as driver arrays,
+    * one entry per geometry directory, stamped with the directory's
+    * [[listingOf]]. Geometry is written once per build and never touched
+    * by appends or deletes; every rewrite ([[swapAside]], an overwrite, a
+    * rebuild in another process) replaces the part files, whose names
+    * carry a per-write UUID, so a stale stamp cannot match. Bounded by
+    * [[DriverCacheEntries]] like the serving layer's caches.
     */
-  def loadIvfCentroids(s: SparkSession, path: String): Array[(Long, Array[Double])] = {
-    import s.implicits._
-    recoverAside(s, s"$path/centroids")
-    s.read.parquet(s"$path/centroids")
-      .select(col("k_id"), col("k_e")).as[(Long, Seq[Double])]
-      .collect().map { case (i, e) => (i, e.toArray) }
+  private val geometry = scala.collection.concurrent.TrieMap
+    .empty[String, (Seq[(String, Long, Long)], AnyRef)]
+
+  /** Backstop bound on every driver-side cache: a serving JVM touches a
+    * handful of roots, so the caches stay tiny; one grown past this (a
+    * test harness minting hundreds of roots in one JVM) is dropped
+    * wholesale — a refill costs one read, a leak costs the JVM.
+    */
+  private[graft] val DriverCacheEntries = 64
+
+  /** (name, size, mtime) of every file directly under `dir`, sorted — one
+    * filesystem call, no Spark job. None when `dir` does not exist.
+    */
+  private def listingOf(s: SparkSession, dir: String): Option[Seq[(String, Long, Long)]] =
+    try Some(fsOf(s, dir).listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** `load` of the geometry under `dir`, served from [[geometry]] while the
+    * directory's listing is unchanged. The listing is taken before the
+    * load, so a rewrite racing the load can only leave an entry that
+    * misses at the next call. A missing directory is never cached — the
+    * loader raises its usual error.
+    */
+  private def cachedGeometry[T <: AnyRef](s: SparkSession, dir: String)(load: => T): T = {
+    recoverAside(s, dir)
+    listingOf(s, dir) match {
+      case None => load
+      case Some(stamp) => geometry.get(dir) match {
+        case Some((`stamp`, hit)) => hit.asInstanceOf[T]
+        case _ =>
+          val fresh = load
+          if (geometry.size > DriverCacheEntries) geometry.clear()
+          geometry.put(dir, (stamp, fresh))
+          fresh
+      }
+    }
   }
 
-  /** The PqKs-row codebook as a driver array — PUBLIC for the same
-    * serve-layer caching contract as [[loadIvfCentroids]].
+  /** The K-row centroid table as a driver array — tiny by contract, and
+    * cached per `centroids/` directory (see [[geometry]]): a warm call
+    * costs one directory listing and no Spark job, whichever route,
+    * encoder or serving layer asks. Callers share the arrays and must not
+    * mutate them.
     */
-  def loadPqCodebook(s: SparkSession, path: String): Array[Array[Double]] = {
-    import s.implicits._
-    s.read.parquet(s"$path/codebook")
-      .orderBy("j").select(col("j"), col("e")).as[(Int, Seq[Double])]
-      .collect().map(_._2.toArray)
-  }
+  def loadIvfCentroids(s: SparkSession, path: String): Array[(Long, Array[Double])] =
+    cachedGeometry(s, s"$path/centroids") {
+      import s.implicits._
+      centroidRows(s, path).as[(Long, Seq[Double])]
+        .collect().map { case (i, e) => (i, e.toArray) }
+    }
+
+  /** The PqKs-row codebook as a driver array in codeword order — cached
+    * per `codebook/` directory exactly like [[loadIvfCentroids]].
+    */
+  def loadPqCodebook(s: SparkSession, path: String): Array[Array[Double]] =
+    cachedGeometry(s, s"$path/codebook") {
+      import s.implicits._
+      s.read.schema(CodebookSchema).parquet(s"$path/codebook")
+        .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
+    }
 
   /** Collect a (vec_id, embedding) query set to the driver in the exact
     * form every planned search consumes: double-cast, id-sorted. Bounded
@@ -2942,8 +3050,11 @@ object VectorOps {
     *   - `"auto"`   — the route the root's layout supports best: rerank
     *                  when both flat tiers exist, otherwise the one tier.
     *
-    * Each route is its planned variant fed the driver-side inputs this
-    * call collects (query batch, centroids, codebook). Output: (q_id,
+    * Each route is its planned variant fed the query batch this call
+    * collects and the cached geometry ([[loadIvfCentroids]],
+    * [[loadPqCodebook]]); every data and tombstone read passes its
+    * declared schema, so with a local query batch a warm call builds its
+    * DataFrame without a Spark job. Output: (q_id,
     * neighbor_id, cos) for ivf/rerank; (q_id, neighbor_id, adc) for
     * pq/ivfpq — native scores per route, each oracle-gated
     * (serve_vec_search / _pq / _rerank, v44) with a recall eval next to
@@ -2986,11 +3097,11 @@ object VectorOps {
     * inputs are tiny by contract — K centroids and the broadcastable
     * query set — so ranking cells in Scala (cosArr == graft_cosine ==
     * list_cosine_similarity, ties to smallest k_id: the exact v2 rule)
-    * replaces a join + window + checkpoint + collect chain, and a caller
-    * caching `cents`/`qsArr` (QueryService) pays ONE Spark job per poll:
-    * the pruned postings scan. The probed cell ids — bounded by #queries
-    * × probes — become a STATIC `IN` partition filter on the postings
-    * scan, so only the probed directories are read (VectorOpsSpec pins
+    * replaces a join + window + checkpoint + collect chain, and a poll
+    * with cached `cents`/`qsArr` pays ONE Spark job: the pruned postings
+    * scan. The probed cell ids — bounded by #queries × probes — become a
+    * STATIC `IN` partition filter on the postings scan, so only the
+    * probed directories are read (VectorOpsSpec pins
     * the PartitionFilters). The probed rows re-enter the plan as a
     * broadcast local relation.
     */
@@ -3009,12 +3120,9 @@ object VectorOps {
     // partition filter on the postings scan = file-level pruning
     val cellIds = probedRows.map(_._3).distinct.toArray
     // `postings` lets a serving layer reuse one resolved relation across
-    // polls (file listing + footer schema are cached inside the
-    // DataFrame) — valid ONLY for an immutable root; None re-lists.
-    val postingsRaw = postings.getOrElse {
-      recoverAside(s, s"$path/postings")
-      s.read.parquet(s"$path/postings")
-    }
+    // polls (the file listing is cached inside the DataFrame) — valid ONLY
+    // for an immutable root; None re-lists.
+    val postingsRaw = postings.getOrElse(tierRows(s, path, IvfTier))
     val pruned = postingsRaw.filter(col("cluster").isInCollection(
       cellLiterals(postingsRaw, cellIds.toSeq)))
     val scoredRows = aliveRows(s, path, pruned, "c_id")
@@ -3074,17 +3182,16 @@ object VectorOps {
     */
   private def cellLiterals(rel: DataFrame, cellIds: Seq[Long]): Seq[Any] =
     rel.schema("cluster").dataType match {
-      case org.apache.spark.sql.types.IntegerType => cellIds.map(_.toInt)
+      case IntegerType => cellIds.map(_.toInt)
       case _ => cellIds
     }
 
-  /** The rerank route with caller-supplied planning inputs (cached
-    * codebook + query batch — see [[loadIvfCentroids]]'s serving
-    * contract): PQ codes nominate `rerankCandidates` ids per query
-    * (stage 1), raw vectors are fetched BY ID from the postings tier for
-    * exact cosine rerank (stage 2). The query vectors re-enter stage 2 as
-    * a broadcast local relation — same doubles [[withNorm]] would
-    * produce.
+  /** The rerank route with caller-supplied planning inputs (the cached
+    * codebook + query batch): PQ codes nominate `rerankCandidates` ids
+    * per query (stage 1), raw vectors are fetched BY ID from the postings
+    * tier for exact cosine rerank (stage 2). The query vectors re-enter
+    * stage 2 as a broadcast local relation — same doubles [[withNorm]]
+    * would produce.
     */
   def searchRerankPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cb: Array[Array[Double]],
@@ -3100,10 +3207,7 @@ object VectorOps {
     // stage 2: fetch raw vectors for candidate ids only — a broadcast
     // id join against the alive postings, then exact cosine + per-query
     // rank
-    val postingsDf = postings.getOrElse {
-      recoverAside(s, s"$path/postings")
-      s.read.parquet(s"$path/postings")
-    }
+    val postingsDf = postings.getOrElse(tierRows(s, path, IvfTier))
     val qLocal = s.createDataset(qsArr.toSeq.map { case (id, e) => (id, e.toSeq) })
       .toDF("q_id", "q_e")
     val fetched = broadcast(cand)
@@ -3178,8 +3282,7 @@ object VectorOps {
         (qid, kid, pqTable(Array.tabulate(qa.length)(i => qa(i) - ke(i)), cb, pqM))
       }
     }
-    recoverAside(s, s"$path/codes")
-    val codesRaw = s.read.parquet(s"$path/codes")
+    val codesRaw = tierRows(s, path, ResidualTier)
     val byCell: Map[Long, Seq[(Long, Array[Array[Double]])]] =
       qcell.groupBy(_._2).map { case (cell, rows) =>
         cell -> rows.map(r => (r._1, r._3))
@@ -3246,7 +3349,7 @@ object VectorOps {
     * persisted centroids — the residual tier's encode input.
     */
   private def residualsOf(batch: DataFrame, path: String): DataFrame = {
-    val cents = batch.sparkSession.read.parquet(s"$path/centroids")
+    val cents = centroidRows(batch.sparkSession, path)
     assign(withNorm(batch, "c"), cents)
       .join(cents.select(col("k_id").as("cluster"), col("k_e")), "cluster")
       .select(col("c_id"), col("cluster"),
@@ -3266,10 +3369,7 @@ object VectorOps {
     */
   private def aliveCodes(s: SparkSession, path: String,
       base: Option[DataFrame] = None): DataFrame = {
-    val codes = base.getOrElse {
-      recoverAside(s, s"$path/codes")
-      s.read.parquet(s"$path/codes")
-    }.select("vec_id", "codes")
+    val codes = base.getOrElse(tierRows(s, path, PqTier)).select("vec_id", "codes")
     aliveRows(s, path, codes, "vec_id")
   }
 
@@ -3963,11 +4063,10 @@ object VectorOps {
       s"rebuildAdvisor: $path has neither a raw postings tier nor " +
         "cluster-partitioned codes — a flat PQ-only root carries no cell " +
         "geometry to audit; run annPqDriftAudit with the source corpus instead"))
-    val posts = aliveRows(s, path, s.read.parquet(s"$path/${cells.data}")
+    val posts = aliveRows(s, path, tierRows(s, path, cells)
         .select(col(cells.key).as("c_id"), col("cluster")), "c_id")
       .dropDuplicates("c_id")
-    val cents = s.read.parquet(s"$path/centroids")
-      .select(col("k_id").as("cluster"))
+    val cents = centroidRows(s, path).select(col("k_id").as("cluster"))
     val occ = cents
       .join(posts.groupBy("cluster").agg(count(lit(1)).as("n")),
         Seq("cluster"), "left")

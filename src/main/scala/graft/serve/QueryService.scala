@@ -430,18 +430,17 @@ object QueryService {
   /** WARM-PATH driver caches (VERDICT r11 task 2): the serving index
     * root is immutable once built — its identity is a content
     * fingerprint ([[scratchIdent]]), so a changed corpus re-keys the
-    * root and these caches miss by construction. Caching the tiny
-    * planning inputs (K centroids, PqKs codebook rows, the fixed demo
-    * query batch, the BM25 top page) turns each poll from 3-4 Spark
-    * jobs into ONE — the route's own data scan — while serving
-    * bit-identical results (the planned searches consume the exact
-    * arrays the unplanned ones collect per request; the same oracles
-    * gate both).
+    * root and these caches miss by construction. The index geometry (K
+    * centroids, PqKs codebook rows) is not cached here: the
+    * [[graft.operators.VectorOps.loadIvfCentroids]] /
+    * [[graft.operators.VectorOps.loadPqCodebook]] loaders keep the one
+    * geometry cache every search route shares, keyed by each geometry
+    * directory's file listing. On top of it this service caches the
+    * fixed demo query batch, the BM25 top page, resolved relations and
+    * constructed plans, so a warm poll runs only the route's own data
+    * scan — bit-identical to the facade routes (the same planned
+    * searches over the same arrays; the same oracles gate both).
     */
-  private val servedCents =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Array[Double])]]
-  private val servedCodebooks =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Array[Double]]]
   private val servedQueryVecs =
     scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Array[Double])]]
   private val servedLexPages =
@@ -467,14 +466,13 @@ object QueryService {
   private def epoched(dir: String): String =
     s"$dir@${graft.operators.VectorOps.mutationEpochOf(dir)}"
 
-  /** Backstop bound on every driver cache: a serving JVM touches a
-    * handful of roots, so these maps stay tiny; if an unusual workload
-    * (a test harness minting hundreds of corpora in one JVM) grows one
-    * past the cap, drop it wholesale — a refill costs one poll's
-    * planning reads, a leak costs the JVM.
+  /** Backstop bound on every driver cache: past
+    * [[graft.operators.VectorOps.DriverCacheEntries]] entries a map is
+    * dropped wholesale — a refill costs one poll's planning reads, a leak
+    * costs the JVM.
     */
   private def capped[M <: scala.collection.concurrent.TrieMap[_, _]](m: M): M = {
-    if (m.size > 64) m.clear()
+    if (m.size > graft.operators.VectorOps.DriverCacheEntries) m.clear()
     m
   }
 
@@ -488,17 +486,6 @@ object QueryService {
       s.read.parquet(dir))
   }
 
-  // centroids/codebook keys fold the mutation epoch like the relation and
-  // plan caches: an in-place geometry rewrite (rebuildVecIndex's swap)
-  // must not leave polls scoring new postings against stale centroids
-  private def centsOf(s: SparkSession, path: String) =
-    capped(servedCents).getOrElseUpdate(epoched(path),
-      graft.operators.VectorOps.loadIvfCentroids(s, path))
-
-  private def codebookOf(s: SparkSession, path: String) =
-    capped(servedCodebooks).getOrElseUpdate(epoched(path),
-      graft.operators.VectorOps.loadPqCodebook(s, path))
-
   private def demoQueriesOf(s: SparkSession, d: String, path: String,
       maxId: Long) =
     capped(servedQueryVecs).getOrElseUpdate(s"$path#lt$maxId",
@@ -510,10 +497,10 @@ object QueryService {
     * the persisted index through the planned variants of the
     * [[graft.operators.VectorOps.searchVecIndex]] routes — `tier` picks
     * the route per query budget (ivf = raw probed cells, pq = code-only
-    * ADC, rerank = codes nominate + raw rerank), the driver caches above
-    * supply the planning inputs. The build-once/query-many serving shape
-    * next to [[docSearch]]'s text arm (a production deployment fuses the
-    * two with x62's RRF).
+    * ADC, rerank = codes nominate + raw rerank), the cached demo queries
+    * and the shared geometry cache supply the planning inputs. The
+    * build-once/query-many serving shape next to [[docSearch]]'s text arm
+    * (a production deployment fuses the two with x62's RRF).
     */
   // the constructed serving DataFrames themselves — a poll re-EXECUTES
   // the plan (data is never cached), but the driver-side construction
@@ -546,15 +533,15 @@ object QueryService {
     val V = graft.operators.VectorOps
     tier match {
       case "ivf" =>
-        V.searchIvfIndexPlanned(s, path, qs, centsOf(s, path), k, probes = 2,
-          postings = Some(relationOf(s, path, "postings")),
+        V.searchIvfIndexPlanned(s, path, qs, V.loadIvfCentroids(s, path), k,
+          probes = 2, postings = Some(relationOf(s, path, "postings")),
           compactForServe = true)
       case "pq" =>
-        V.searchPqIndexPlanned(s, path, qs, codebookOf(s, path), k,
+        V.searchPqIndexPlanned(s, path, qs, V.loadPqCodebook(s, path), k,
           codes = Some(relationOf(s, path, "codes")),
           compactForServe = true)
       case "rerank" =>
-        V.searchRerankPlanned(s, path, qs, codebookOf(s, path), k,
+        V.searchRerankPlanned(s, path, qs, V.loadPqCodebook(s, path), k,
           codes = Some(relationOf(s, path, "codes")),
           postings = Some(relationOf(s, path, "postings")),
           compactForServe = true)
@@ -804,9 +791,9 @@ object QueryService {
     val lex = s.createDataset(lexPage.zipWithIndex
         .map { case ((id, _), i) => (id, i + 1) })
       .toDF("doc_id", "lex_rank").coalesce(1)
-    val vtop = graft.operators.VectorOps
-      .searchIvfIndexPlanned(s, path, demoQueriesOf(s, d, path, 1L),
-        centsOf(s, path), k = cand, probes = 2,
+    val V = graft.operators.VectorOps
+    val vtop = V.searchIvfIndexPlanned(s, path, demoQueriesOf(s, d, path, 1L),
+        V.loadIvfCentroids(s, path), k = cand, probes = 2,
         postings = Some(relationOf(s, path, "postings")),
         compactForServe = true)
       .withColumn("vec_rank", row_number().over(

@@ -273,6 +273,45 @@ class ServeSpec extends SparkSpec {
     assert(page.toSeq === oracle.toSeq)
   }
 
+  test("refreshDocIndex publishes a new BM25 version; doc and hybrid " +
+    "pages serve the oracle pages from it and cached plans re-key") {
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq
+    val root = QueryService.docIndexRootOf(sf)
+    val docPlan = QueryService.docSearch(spark, sf) // warms the plan cache
+    val hybPlan = QueryService.hybridSearch(spark, sf)
+    assert(QueryService.docSearch(spark, sf) eq docPlan, "the doc plan must be cached")
+    val (docBefore, hybBefore) = (rows(docPlan), rows(hybPlan))
+    val v = graft.core.VersionedStore.currentVersion(spark, root).get
+    val dir = QueryService.refreshDocIndex(spark, sf)
+    assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(v + 1),
+      "the refresh must publish a successor version")
+    assert(dir === QueryService.resolveDocIndexRoot(spark, root))
+    // the cached plans were keyed by the old version directory
+    val (docAfter, hybAfter) =
+      (QueryService.docSearch(spark, sf), QueryService.hybridSearch(spark, sf))
+    assert(!(docAfter eq docPlan) && !(hybAfter eq hybPlan),
+      "plans cached before the refresh must re-key")
+    assert(docAfter.inputFiles.nonEmpty && docAfter.inputFiles.forall(_.contains(dir)),
+      s"the doc page must read the new version $dir")
+    // serve_doc_search's page: the x31 ranking's head
+    val oracleDoc = graft.operators.TextOps.x31.build(spark, sf).collect()
+      .sortBy(r => (-r.getAs[Double]("bm25"), r.getAs[Long]("doc_id")))
+      .take(10).map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("bm25"))).toSeq
+    assert(docAfter.collect().map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[Double]("bm25"))).toSeq === oracleDoc)
+    assert(rows(docAfter) === docBefore)
+    // serve_hybrid_search's page: the same corpus re-scored fuses the same
+    // page as a from-scratch materialization of it
+    val scratch = java.nio.file.Files
+      .createTempDirectory("graft-sdoc-refresh").toString + "/bm25"
+    QueryService.initVersionedDocIndex(graft.core.Tables.documents(spark, sf), scratch)
+    assert(rows(hybAfter) === rows(QueryService.hybridSearchPlan(spark, sf,
+      QueryService.vecIndexRoot(spark, sf),
+      QueryService.resolveDocIndexRoot(spark, scratch), 10, 20)))
+    assert(rows(hybAfter) === hybBefore)
+  }
+
   test("doc search serves the exact BM25 top-10, score-descending") {
     val hits = QueryService.docSearch(spark, sf).collect()
     assert(hits.length == 10)

@@ -109,4 +109,12 @@ class SessionStagingSpec extends SparkSpec {
     val i2 = SessionStaging.datasetIdent(d, "embeddings.parquet")
     assert(i1 != i2)
   }
+
+  test("datasetIdent refuses a missing source file") {
+    val d = java.nio.file.Files.createTempDirectory("graft-ident-missing").toString
+    val e = intercept[IllegalArgumentException] {
+      SessionStaging.datasetIdent(d, "embeddings.parquet")
+    }
+    assert(e.getMessage.contains("does not exist"))
+  }
 }

@@ -1018,6 +1018,206 @@ class VectorOpsSpec extends SparkSpec {
     assert(noPq.getMessage.contains("pq route"))
   }
 
+  /** Jobs submitted while `body` runs, counted from the listener bus: a
+    * marker job submitted after `body` is awaited, and the bus delivers in
+    * order, so every job of `body` has been seen by then.
+    */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"probe-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == tag) seen.incrementAndGet()
+        else if (g == s"$tag-marker") marker.countDown()
+      }
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(tag, "jobsDuring")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$tag-marker", "jobsDuring marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      (out, seen.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  /** Every layout with the routes it serves ("auto" included). */
+  private val layoutRoutes = Seq("ivf" -> Seq("ivf"), "pq" -> Seq("pq"),
+    "both" -> Seq("ivf", "pq", "rerank"), "ivfpq" -> Seq("ivfpq"))
+    .map { case (l, rs) => l -> (rs :+ "auto") }
+
+  test("a warm searchVecIndex builds its DataFrame without a Spark job on " +
+    "every layout and route: geometry is cached, reads pass declared schemas") {
+    import org.apache.spark.sql.functions.col
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    // a local query batch, as a serving request carries it
+    val qs = emb.filter(vid < 3).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("vec_id", "embedding")
+    for ((layout, routes) <- layoutRoutes) {
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft-warm-$layout").toString + "/idx"
+      // several data files and a tombstone table: every read is exercised
+      VectorOps.buildVecIndex(emb.filter(vid >= 20), path, layout)
+      VectorOps.appendToVecIndex(emb.filter(vid < 20), path)
+      VectorOps.deleteFromVecIndex(spark, path, emb.filter(vid === 7).select(vid))
+      for (t <- routes) {
+        def search() = VectorOps.searchVecIndex(spark, path, qs, 3, tier = t)
+        val want = search().collect().toSeq
+        val (df, jobs) = jobsDuring(search())
+        assert(jobs === 0, s"$layout/$t: a warm call submitted $jobs jobs while planning")
+        assert(df.collect().toSeq === want, s"$layout/$t: warm results moved")
+      }
+    }
+  }
+
+  test("files another process adds (plain parquet writes, no epoch bump) " +
+    "are served or filtered at the next search") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    val qs = emb.filter(vid === 0)
+    val clone = 9000000L
+    for ((layout, routes) <- layoutRoutes) {
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft-foreign-$layout").toString + "/idx"
+      VectorOps.buildVecIndex(emb, path, layout)
+      def served(t: String): Set[Long] =
+        // k and the rerank budget cover the probed cells: the clone ties
+        // its source's score and ranks after it, behind any code-equal mates
+        VectorOps.searchVecIndex(spark, path, qs, k = 100, tier = t,
+          rerankCandidates = 200, excludeSelf = false)
+          .collect().map(_.getLong(1)).toSet
+      routes.foreach(t => assert(!served(t).contains(clone)))
+      // the other process's append: a copy of vector 0's stored rows under
+      // a fresh id, written straight into each data directory
+      for (data <- Seq("postings", "codes")
+          if new java.io.File(s"$path/$data").exists()) {
+        val key = if (data == "postings") "c_id" else "vec_id"
+        val rows = spark.read.parquet(s"$path/$data").filter(col(key) === 0L)
+          .withColumn(key, lit(clone))
+        val w = rows.write.mode("append")
+        (if (rows.columns.contains("cluster")) w.partitionBy("cluster") else w)
+          .parquet(s"$path/$data")
+      }
+      routes.foreach(t => assert(served(t).contains(clone),
+        s"$layout/$t: a row another process appended is not served"))
+      // ... and its delete: one more tombstone file
+      Seq(clone).toDF("vec_id").write.mode("append").parquet(s"$path/tombstones")
+      routes.foreach(t => assert(!served(t).contains(clone),
+        s"$layout/$t: an id another process tombstoned is still served"))
+    }
+  }
+
+  test("geometry directories replaced by a filesystem rename serve the " +
+    "donor's results at the next search") {
+    import org.apache.spark.sql.functions.col
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    val qs = emb.filter(vid < 10)
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for ((layout, routes) <- layoutRoutes) {
+      val tmp = java.nio.file.Files.createTempDirectory(s"graft-swap-$layout").toString
+      val (live, donor) = (s"$tmp/live", s"$tmp/donor")
+      // different corpora -> different md5 samples -> different geometry
+      VectorOps.buildVecIndex(emb.filter(vid % 3 =!= 0), live, layout)
+      VectorOps.buildVecIndex(emb, donor, layout)
+      def serve(root: String, t: String): Set[(Long, Long, Double)] =
+        VectorOps.searchVecIndex(spark, root, qs, 3, tier = t).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val before = routes.map(t => t -> serve(live, t)).toMap // warms the cache
+      val want = routes.map(t => t -> serve(donor, t)).toMap
+      assert(routes.exists(t => before(t) != want(t)),
+        s"$layout: the two roots must serve differently for the swap to show")
+      for (d <- new java.io.File(donor).list()) {
+        fs.delete(new org.apache.hadoop.fs.Path(s"$live/$d"), true)
+        assert(fs.rename(new org.apache.hadoop.fs.Path(s"$donor/$d"),
+          new org.apache.hadoop.fs.Path(s"$live/$d")))
+      }
+      routes.foreach(t => assert(serve(live, t) === want(t),
+        s"$layout/$t: a renamed-in geometry did not re-key the cache"))
+    }
+  }
+
+  test("each tier's declared schema is the schema parquet infers, after a " +
+    "build and after an append, for small and BIGINT-range ids") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    for (offset <- Seq(0L, 3000000000L); layout <- Seq("ivf", "pq", "both", "ivfpq")) {
+      val ids = emb.withColumn("vec_id", vid + lit(offset))
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft-schema-$layout").toString + "/idx"
+      def check(stage: String): Unit =
+        VectorOps.declaredSchemas(spark, path).foreach { case (d, declared) =>
+          assert(declared === spark.read.parquet(s"$path/$d").schema,
+            s"$layout ($stage, ids +$offset): $d/ declares $declared")
+        }
+      VectorOps.buildVecIndex(ids.filter(vid >= offset + 50), path, layout)
+      check("build")
+      VectorOps.appendToVecIndex(ids.filter(vid < offset + 50), path)
+      VectorOps.deleteFromVecIndex(spark, path, ids.filter(vid === offset + 7))
+      check("append")
+      assert(VectorOps.declaredSchemas(spark, path).contains("tombstones"))
+    }
+  }
+
+  test("int- and long-typed ids mix freely: appends and deletes in either " +
+    "order serve identically on every route and through compaction") {
+    import org.apache.spark.sql.functions.col
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    val asInt = (df: org.apache.spark.sql.DataFrame) =>
+      df.withColumn("vec_id", col("vec_id").cast("int"))
+    val asLong = (df: org.apache.spark.sql.DataFrame) => df
+    val qIds = Seq(0L, 1L, 480L, 495L) // base, base, first and second append
+    val qs = emb.filter(vid.isin(qIds: _*))
+    val victims = Seq(Seq(3L, 4L), Seq(485L, 5L))
+    for (layout <- Seq("both", "ivfpq")) {
+      val routes = layoutRoutes.toMap.apply(layout)
+      def run(first: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+          second: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+          : Seq[Map[String, Set[(Long, Long, Double)]]] = {
+        val path = java.nio.file.Files
+          .createTempDirectory(s"graft-mixed-$layout").toString + "/idx"
+        // k covers both probed cells whole: a residual code can tie across
+        // data clusters sharing a cell, and ties rank by id
+        def serveAll() = routes.map(t => t -> VectorOps.searchVecIndex(spark, path,
+            qs, k = 150, tier = t, rerankCandidates = 300, excludeSelf = false)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet).toMap
+        VectorOps.buildVecIndex(emb.filter(vid < 480), path, layout)
+        VectorOps.appendToVecIndex(first(emb.filter(vid >= 480 && vid < 490)), path)
+        VectorOps.appendToVecIndex(second(emb.filter(vid >= 490)), path)
+        VectorOps.deleteFromVecIndex(spark, path, first(victims(0).toDF("vec_id")))
+        VectorOps.deleteFromVecIndex(spark, path, second(victims(1).toDF("vec_id")))
+        val served = serveAll()
+        for ((t, rows) <- served) {
+          assert(Seq(480L, 495L).forall(q => rows.exists(r => r._1 == q && r._2 == q)),
+            s"$layout/$t: an appended id is not served")
+          assert(!rows.exists(r => victims.flatten.contains(r._2)),
+            s"$layout/$t: a deleted id is served")
+        }
+        VectorOps.compactVecIndex(spark, path)
+        Seq(served, serveAll())
+      }
+      val allLong = run(asLong, asLong)
+      assert(allLong(0) === allLong(1), s"$layout: compaction changed results")
+      assert(run(asInt, asLong) === allLong, s"$layout: int then long ids diverged")
+      assert(run(asLong, asInt) === allLong, s"$layout: long then int ids diverged")
+    }
+  }
+
   test("versioned compaction publishes a successor: a search resolved " +
     "before it still reads the pre-compaction files") {
     val dir = clusteredDir()
