@@ -1,13 +1,16 @@
 package graft
 
 import graft.core.Sessions
-import org.apache.spark.sql.SparkSession
+import graft.tools.Sampler._
 
 /** Benchmark harness: times every bench-tagged query at SPARK_GRAFT_SF_DIR,
   * forcing full execution with a noop-format write (count() would let
   * Catalyst collapse scan-only plans to metadata reads and under-measure).
+  * Each query gets a fixed number of samples ([[samplesPerQuery]]); the
+  * JSON carries medians, and `value_min` the total of per-query minima.
   * Failures are reported per-query instead of being timed as if they ran.
-  * Prints exactly one JSON line for the driver.
+  * Prints exactly one JSON line for the driver and reads no file of the
+  * repository.
   *
   * The driver keeps only a bounded tail of stdout, and sbt appends its own
   * `[success]` line after ours — so the machine-readable line must stay well
@@ -49,15 +52,13 @@ object Bench {
   private def calibrate(threads: Int): (Double, Double) = {
     val n = 100_000_000L
     spin(n / 10, 1) // JIT warm
-    val t1 = System.nanoTime()
-    spin(n, 2)
-    val oneT = n / ((System.nanoTime() - t1) / 1e9) / 1e6
-    val t2 = System.nanoTime()
-    val ws = (0 until threads).map { i =>
-      val t = new Thread(() => { spin(n, i + 3L); () }); t.start(); t
+    val oneT = n / seconds(spin(n, 2)) / 1e6
+    val parT = n.toDouble * threads / 1e6 / seconds {
+      val ws = (0 until threads).map { i =>
+        val t = new Thread(() => { spin(n, i + 3L); () }); t.start(); t
+      }
+      ws.foreach(_.join())
     }
-    ws.foreach(_.join())
-    val parT = n.toDouble * threads / ((System.nanoTime() - t2) / 1e9) / 1e6
     (oneT, parT)
   }
 
@@ -78,102 +79,26 @@ object Bench {
     "x15_contamination_check", "v1_ann_bruteforce_topk", "v2_ann_ivf_topk",
     "v4_ann_kmeans_topk", "mm2_decode_features",
     // round-10 flagships: quality-aware keeper election and the persisted
-    // IVF index (build + partition-pruned search). New names have no
-    // r5-era prior — the cold-floor/arbitration logic skips them until a
-    // prior lands in a future artifact.
+    // IVF index (build + partition-pruned search).
     "x77_quality_keeper", "v37_persisted_ivf_index",
     // round-11 flagships: the three serving routes through the vector-
     // index facade — one golden plan fingerprint per tier (ivf raw /
     // pq codes / two-stage rerank), per VERDICT r10 #2.
     "serve_vec_search", "serve_vec_search_pq", "serve_vec_search_rerank")
 
-  /** Warm single-query times measured at sf0.1 on a healthy host (round 5
-    * best-of-2 sweep, calib ~244 mops/thread). Used purely as an outlier
-    * guard: a recorded time far above these is a throttle artifact, not a
-    * regression, and earns a re-run before being stored. Only consulted when
-    * benching sf0.1 (the values are SF-specific).
-    *
-    * This hand-maintained seed is merged with priors auto-derived from every
-    * historical BENCH_r*.json in the repo (see derivedPriorsSf01): round 5
-    * showed the hand map alone has holes — j9_lateral_explode60 had no entry,
-    * so a 22.3 s throttle artifact (real: 0.5–2 s) shipped unguarded.
-    */
-  private val warmPriorSeedSf01: Map[String, Double] = {
-    val entries = Seq(
-      "a19_recursive_cte_fold" -> 2.5, "stage_minute_spread_conservation" -> 2.1,
-      "d1_quality_audit" -> 2.0,
-      "j4_feature_ctas_left_joins" -> 1.6, "x11_dupset_components" -> 1.5,
-      "j1_composite_2key_join" -> 1.5, "x17_dedup_keep_best" -> 1.4,
-      "m2_gap_fill_linear" -> 1.3, "s18_merge_upsert" -> 1.3,
-      "m3_forecast_xreg" -> 1.2, "s17_bucketed_colocated_join" -> 1.2,
-      "m3b_forecast_xreg_holiday" -> 1.1, "s21_snapshot_diff" -> 1.1,
-      "m4b_holdout_eval" -> 1.0, "x5_minhash_lsh_dupsets" -> 0.9,
-      "v4_ann_kmeans_topk" -> 0.8, "x7_ngram_jaccard_neardup" -> 0.7,
-      "x9_tfidf_topterm" -> 0.6, "x18_boilerplate_df" -> 0.6,
-      "sim_bus_rides" -> 0.5, "x27_triangle_count" -> 2.3,
-      "x28_leakage_safe_split" -> 2.0, "s22_compaction" -> 2.1,
-      "s23_cdc_apply" -> 1.9, "t11_throughput" -> 5.4,
-      "j9_lateral_explode60" -> 2.0)
-    require(entries.map(_._1).distinct.size == entries.size,
-      "duplicate key in warmPriorSeedSf01 — the literal silently keeps the " +
-        "last value and masks the intended prior")
-    entries.toMap
-  }
-
-  /** Cold-measurement floors for queries whose r1–r5 artifact minima were
-    * recorded with shared state warm across queries (the sim family ran
-    * after sim_bus_rides had already cached the ride table; round 6's
-    * per-attempt `spark.catalog.clearCache()` made every later measurement
-    * a full cold pipeline). Mining takes the historical MINIMUM, so those
-    * stale warm lows are sticky and guard (b) would flag every honest cold
-    * time as a >4x "regression" and burn retries forever. Applied as a
-    * max() AFTER the seed ∪ mined merge: the floor is round 7's first
-    * honest cold number; a future genuinely-faster cold run only leaves
-    * the guard marginally conservative, never wrong.
-    */
-  private val coldFloorSf01: Map[String, Double] = Map(
-    "sim_bus_rides" -> 0.9, "sim_ride_features" -> 1.75,
-    "sim_demand_rollup" -> 1.3)
-
-  /** Priors mined from every historical sf0.1 BENCH_r*.json artifact in the
-    * repo root: for each known bench-query name, the MINIMUM recorded time
-    * across rounds. The minimum is the right statistic because every inflated
-    * sample is a host-throttle artifact (fixed plan, fixed data — the true
-    * cost is the infimum), so one clean round anywhere in history caps the
-    * guard threshold forever. Name matches are restricted to `names` so the
-    * regex cannot pick up calib/total/sf fields, and the r1–r3 artifacts'
-    * escaped-tail encoding (`\"q\":1.2`) matches the same pattern.
-    */
-  private def derivedPriorsSf01(names: Set[String]): Map[String, Double] = {
-    // Two encodings coexist in one artifact: the pretty-printed `parsed`
-    // section (`"q": 1.2`) and the raw stdout tail with escaped quotes
-    // (`\"q\":1.2`) — the optional backslash and whitespace cover both.
-    val pair = """"([A-Za-z0-9_]+)\\?":\s*([0-9]+(?:\.[0-9]+)?)""".r
-    val files = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
-    val mined = files.flatMap { f =>
-      val txt = try scala.io.Source.fromFile(f)(scala.io.Codec.UTF8).mkString
-                catch { case _: Throwable => "" }
-      if (!txt.contains("sf0.1")) Nil // priors are SF-specific
-      else pair.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble)
-        .filter { case (n, v) => names(n) && v > 0.0 }.toList
-    }
-    mined.groupBy(_._1).map { case (n, vs) => n -> vs.map(_._2).min }
-  }
+  /** Timed samples per bench query; the JSON records their median. */
+  val samplesPerQuery = 3
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup on the smallest SF so per-query timings measure the
     // engine, not JIT compilation of the first query to run.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    try noop(SparkEntry.entry(spark)) catch { case _: Throwable => () }
 
     // The benchmark host's effective CPU budget fluctuates (hypervisor
     // neighbors): observed single-query swings of 10x between back-to-back
@@ -189,165 +114,66 @@ object Bench {
     require(orphaned.isEmpty,
       s"headline names missing from benchQueries (rename drift): $orphaned")
 
-    // Throttle-proof timing: the host's effective CPU fluctuates mid-run
-    // (hypervisor neighbors; round 4 recorded a 116x artifact on unchanged
-    // code). Each query is timed best-of-2 — the first pass doubles as
-    // cache/codegen warm — and re-run (up to 4 attempts) while either
-    //   (a) the attempts disagree by >3x (one of them straddled a throttle
-    //       window), or
-    //   (b) the best time still exceeds 4x the stored prior-round warm time
-    //       for this query (sf0.1 only — the prior table is SF-specific).
-    // The minimum across attempts is recorded: for a fixed plan on fixed
-    // data the true cost is the infimum, and any slower sample is host noise.
-    // Seed map ∪ mined artifact history, min where both speak. After round 5
-    // every headline name (all are historical artifact keys) has a prior, so
-    // guard (b) can no longer silently skip a query the hand map forgot.
-    val priors: Map[String, Double] =
-      if (sfDir.contains("sf0.1")) {
-        val mined = derivedPriorsSf01(benchNames)
-        val merged0 = (warmPriorSeedSf01.keySet ++ mined.keySet).map { n =>
-          n -> (warmPriorSeedSf01.get(n).toList ++ mined.get(n).toList).min
-        }.toMap
-        // Cold floors trump stale warm-cache artifact minima (see
-        // coldFloorSf01) so guard (b) measures against honest cold runs.
-        val merged = merged0 ++ coldFloorSf01.map { case (n, f) =>
-          n -> math.max(merged0.getOrElse(n, f), f)
-        }
-        val uncovered = headline.diff(merged.keySet)
-        if (uncovered.nonEmpty)
-          System.err.println(s"[bench] headline names with NO prior " +
-            s"(guard (b) inactive for these): $uncovered")
-        merged
-      } else Map.empty
-    def runOnce(q: graft.api.GraftQuery): Option[Double] = {
-      // drop cached intermediates (e.g. the shared sim rides cache) so a
-      // repeat attempt measures the pipeline, not a cache read
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      try {
-        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-        Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] ${q.name} FAILED: ${e.getMessage}"); None
-      }
-    }
-    // Committed plan fingerprints for the noise arbitration below; missing
-    // file (or names outside the golden set) just disables the arbitration.
-    val planGolden: Map[String, Map[String, Int]] =
-      try graft.tools.PlanFingerprint.readGolden() catch { case _: Throwable => Map.empty }
+    // Fixed protocol: every query gets exactly `samplesPerQuery` timed
+    // samples, and the median is recorded (min and max go to stderr and
+    // the min total to `value_min`). A slow sample — host throttle or
+    // real regression — moves the spread; it never earns extra draws.
     var sinceCalib = 0
     val results = SparkEntry.benchQueries.map { q =>
-      var times = List.empty[Double]
-      var failed = false
-      def attempt(): Unit = runOnce(q) match {
-        case Some(s) => times = s :: times
-        case None    => failed = true
+      val samples = sample(samplesPerQuery) { () =>
+        // drop cached intermediates (e.g. the shared sim rides cache) so
+        // every sample measures the pipeline, not a cache read
+        spark.catalog.clearCache()
+        seconds(noop(q.build(spark, sfDir)))
       }
-      attempt(); if (!failed) attempt()
-      // Best-of-3 for SHORT headline queries: at best-of-2 a sub-1.5 s
-      // measurement sits entirely inside one scheduler hiccup (r7/r8
-      // adjudicated 4x swings on unchanged w1/w2 plans). One extra sample
-      // is cheap exactly when the query is cheap and collapses that
-      // round-over-round variance; long queries keep best-of-2 (a throttle
-      // that long shows in the calib stamps instead).
-      if (!failed && headline(q.name) && times.min < 1.5) attempt()
-      def disagree = times.size >= 2 && times.max / times.min > 3.0
-      def overPrior = priors.get(q.name).exists(p => times.min > 4.0 * p)
-      while (!failed && times.size < 4 && (disagree || overPrior)) attempt()
-      // Plan-aware noise arbitration (r9 verdict: m3 shipped a 2.0 s sample
-      // on an unchanged plan): a headline query landing >1.8x its prior
-      // whose plan fingerprint is IDENTICAL to the committed golden cannot
-      // be a plan regression — the fingerprint IS the cost model — so the
-      // slow sample is host noise: spend up to 2 extra attempts and keep
-      // the min. A fingerprint that differs (including legitimately, e.g.
-      // a stats-driven broadcast flip between the golden's SF and this
-      // run's) leaves the time as measured for the round artifact to
-      // adjudicate. Fingerprinting clears the session cache
-      // (PlanFingerprint scaladoc) — safe mid-sweep because every
-      // attempt() starts from clearCache() anyway.
-      if (!failed && headline(q.name) &&
-          priors.get(q.name).exists(p => times.min > 1.8 * p)) {
-        planGolden.get(q.name).foreach { g =>
-          val now =
-            try Some(graft.tools.PlanFingerprint.fingerprint(q.build(spark, sfDir)))
-            catch { case _: Throwable => None }
-          if (now.contains(g)) {
-            System.err.println(f"[bench] ${q.name} ${times.min}%.2fs > 1.8x " +
-              f"prior ${priors(q.name)}%.2fs with plan == golden: host noise, re-running")
-            var extra = 0
-            while (!failed && extra < 2 &&
-                priors.get(q.name).exists(p => times.min > 1.8 * p)) {
-              attempt(); extra += 1
-            }
-          }
-        }
-      }
-      val sec = if (times.nonEmpty) times.min else 0.0
-      System.err.println(
-        f"[bench] ${q.name} $sec%.2fs ok=${!failed} attempts=${times.size}" +
-          times.reverse.map(t => f"$t%.2f").mkString(" [", ",", "]"))
+      System.err.println(samples.error.fold(
+        f"[bench] ${q.name} median=${samples.median}%.2fs min=${samples.min}%.2fs " +
+          f"max=${samples.max}%.2fs" + samples.seconds.map(t => f"$t%.2f").mkString(" [", ",", "]"))(
+        e => s"[bench] ${q.name} FAILED: ${e.getMessage}"))
       // Interleaved calibration stamps localize a throttle window to a
       // query neighborhood instead of only bracketing the whole sweep.
       sinceCalib += 1
       if (sinceCalib >= 10) {
         sinceCalib = 0
-        val t0 = System.nanoTime(); spin(100_000_000L, 17)
-        val mops = 100.0 / ((System.nanoTime() - t0) / 1e9)
+        val mops = 100.0 / seconds(spin(100_000_000L, 17))
         System.err.println(f"[bench] calib-stamp after ${q.name}: $mops%.0f mops")
       }
-      (q.name, sec, !failed)
+      (q.name, samples)
     }
     // Warm-poll latency of the serving endpoints (VERDICT r10 #4): the
     // reference dashboard polls every 3 s (index.html:140), so the number
     // that matters operationally is the WARM path — the materialized ride
     // snapshot / persisted vector index, with no sim or index-build
     // lineage re-executing per poll (ServeSpec pins that invariant; this
-    // measures it). N sequential polls with NO cache clearing — warm
-    // serving is the thing under test — reported as p50/p95 entries in
-    // the round artifact.
-    val pollEntries: Seq[(String, Double)] = {
-      def percentiles(name: String,
-          mk: () => org.apache.spark.sql.DataFrame): Seq[(String, Double)] =
-        try {
-          mk().write.format("noop").mode("overwrite").save() // seed + warm
-          val n = 20
-          val times = (1 to n).map { _ =>
-            val t0 = System.nanoTime()
-            mk().write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }.sorted
-          Seq(s"${name}_p50" -> times(n / 2 - 1), s"${name}_p95" -> times(n - 2))
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] poll $name FAILED: ${e.getMessage}"); Nil
+    // measures it). Reported as p50/p95 entries in the round artifact.
+    val pollEntries: Seq[(String, Double)] =
+      pollArms(spark, sfDir).flatMap { case (name, arm) =>
+        val Polled(s, c) = poll(spark, 20, arm)
+        s.error match {
+          case Some(e) =>
+            System.err.println(s"[bench] poll $name FAILED: ${e.getMessage}"); Nil
+          case None =>
+            System.err.println(f"[bench] ${name}_p50 ${s.percentile(50)}%.3fs " +
+              f"p95 ${s.percentile(95)}%.3fs; 20 polls ran ${c.jobs} jobs, " +
+              f"${c.stages} stages, ${c.tasks} tasks")
+            Seq(s"${name}_p50" -> s.percentile(50), s"${name}_p95" -> s.percentile(95))
         }
-      val entries =
-        percentiles("serve_poll_rides", () => graft.serve.QueryService
-          .ridesWindow(spark, sfDir, "2024-01-02 06:00:00",
-            "2024-01-02 12:00:00", 365)) ++
-        percentiles("serve_poll_vec", () => graft.serve.QueryService
-          .vecSearch(spark, sfDir)) ++
-        percentiles("serve_poll_docs", () => graft.serve.QueryService
-          .docSearch(spark, sfDir)) ++
-        percentiles("serve_poll_hybrid", () => graft.serve.QueryService
-          .hybridSearch(spark, sfDir))
-      entries.foreach { case (k, v) =>
-        System.err.println(f"[bench] $k $v%.3fs")
       }
-      entries
-    }
-    val okResults = results.filter(_._3)
-    val fullMap = okResults.map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" }
+    val okResults = results.filterNot(_._2.failed)
+    def entry(k: String, v: Double) = "\"" + k + "\":" + f"$v%.3f"
+    val fullMap = okResults.map { case (k, s) => entry(k, s.median) }
       .mkString("{", ",", "}")
-    System.err.println(s"[bench] full per-query timings: $fullMap")
+    System.err.println(s"[bench] full per-query medians: $fullMap")
     val qs = (okResults.filter(r => headline(r._1))
-      .map { case (k, v, _) => "\"" + k + "\":" + f"$v%.3f" } ++
-      pollEntries.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" })
+      .map { case (k, s) => entry(k, s.median) } ++
+      pollEntries.map { case (k, v) => entry(k, v) })
       .mkString("{", ",", "}")
-    val failed = results.filterNot(_._3).map("\"" + _._1 + "\"").mkString("[", ",", "]")
-    val total = okResults.map(_._2).sum
+    val failed = results.filter(_._2.failed).map("\"" + _._1 + "\"").mkString("[", ",", "]")
+    val total = okResults.map(_._2.median).sum
+    val totalMin = okResults.map(_._2.min).sum
     val (post1, postPar) = calibrate(cpus)
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size}%d,"calib_mops_1t":$pre1%.0f,"calib_mops_par":$prePar%.0f,"calib_post_1t":$post1%.0f,"calib_post_par":$postPar%.0f,"queries":$qs%s,"failed":$failed%s,"sf":"$sfDir%s"}""")
+      f"""{"metric":"total","value":$total%.3f,"value_min":$totalMin%.3f,"unit":"sec","n_queries":${results.size}%d,"calib_mops_1t":$pre1%.0f,"calib_mops_par":$prePar%.0f,"calib_post_1t":$post1%.0f,"calib_post_par":$postPar%.0f,"queries":$qs%s,"failed":$failed%s,"sf":"$sfDir%s"}""")
     spark.stop()
   }
 }

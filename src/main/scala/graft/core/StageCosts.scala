@@ -2,17 +2,15 @@ package graft.core
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-stage cost observability for multi-stage pipelines (VERDICT r10
   * #8): a pipeline that only reports counts cannot tell a 100-TB operator
-  * WHICH stage dominates. The recorder wraps each stage's materialization
-  * in a Spark job group, a [[SparkListener]] attributes task metrics
-  * (shuffle read + write bytes) back to the group, and wall time is
-  * clocked around the materializing action — yielding a
-  * (stage, wall_ms, shuffle_bytes) table to join onto the funnel's count
-  * rows.
+  * WHICH stage dominates. The recorder materializes each stage inside a
+  * [[QueryMetrics]] scope, which attributes shuffle read + write bytes
+  * back to the stage, and wall time is clocked around the materializing
+  * action — yielding a (stage, wall_ms, shuffle_bytes) table to join onto
+  * the funnel's count rows.
   *
   * Determinism note: wall_ms and shuffle_bytes are MEASUREMENTS, not
   * query results — they vary run to run (wall with host load, shuffle
@@ -23,83 +21,39 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final class StageCosts(s: SparkSession) {
 
-  private val sc = s.sparkContext
-  private val prefix = s"graft-stagecost-${java.util.UUID.randomUUID()}:"
-  private val stageToGroup = TrieMap.empty[Int, String]
-  private val shuffleBytes = TrieMap.empty[String, Long]
+  private val metrics = QueryMetrics(s)
   private val wallMs = TrieMap.empty[String, Long]
-
-  private val listener = new SparkListener {
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      val g = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .getOrElse("")
-      if (g.startsWith(prefix)) {
-        val stage = g.stripPrefix(prefix)
-        js.stageIds.foreach(sid => stageToGroup.put(sid, stage))
-      }
-    }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      stageToGroup.get(te.stageId).foreach { stage =>
-        val m = te.taskMetrics
-        if (m != null) {
-          val b = m.shuffleWriteMetrics.bytesWritten +
-            m.shuffleReadMetrics.totalBytesRead
-          shuffleBytes.updateWith(stage) {
-            case Some(prev) => Some(prev + b)
-            case None       => Some(b)
-          }: Unit
-        }
-      }
-  }
-  sc.addSparkListener(listener)
 
   /** Run `f` attributed to `stage` and MATERIALIZE its result (local
     * checkpoint — the same eager pin the funnel stages already use), so
-    * every job the stage triggers lands inside the group. Calling the
+    * every job the stage triggers lands inside the scope. Calling the
     * same stage name twice ACCUMULATES (a stage may materialize several
     * frames — e.g. a score table plus its filtered survivors).
     */
   def staged(stage: String)(f: => DataFrame): DataFrame = {
-    sc.setJobGroup(s"$prefix$stage", stage, interruptOnCancel = false)
     val t0 = System.nanoTime()
-    try f.localCheckpoint()
+    try metrics.scoped(stage)(f.localCheckpoint())
     finally {
       val el = math.max(1L, (System.nanoTime() - t0) / 1000000L)
-      wallMs.updateWith(stage) {
-        case Some(prev) => Some(prev + el)
-        case None       => Some(el)
-      }: Unit
-      sc.clearJobGroup()
+      wallMs.updateWith(stage)(prev => Some(prev.getOrElse(0L) + el)): Unit
     }
   }
 
-  /** Detach the listener WITHOUT reading results — the failure path:
+  /** Detach the recorder WITHOUT reading results — the failure path:
     * callers must invoke this (or [[table]]) on every exit, or the
     * listener stays registered on the shared session for its lifetime,
     * accumulating bus work run after run.
     */
-  def abort(): Unit = sc.removeSparkListener(listener)
+  def abort(): Unit = metrics.close()
 
-  /** The (stage, wall_ms, shuffle_bytes) table. The listener bus is
-    * asynchronous, so drain first: poll until the attributed byte counts
-    * are stable (two identical sightings 50 ms apart) or 3 s pass —
-    * metrics can only be UNDER-counted by an early read, never wrong.
+  /** The (stage, wall_ms, shuffle_bytes) table, exact once the recorder
+    * has drained the listener bus.
     */
   def table(): DataFrame = {
-    var prev: Option[Map[String, Long]] = None
-    var stable = false
-    val deadline = System.nanoTime() + 3000000000L
-    while (!stable && System.nanoTime() < deadline) {
-      Thread.sleep(50)
-      val now = shuffleBytes.toMap
-      stable = prev.contains(now)
-      prev = Some(now)
-    }
-    sc.removeSparkListener(listener)
+    try metrics.drain() finally metrics.close()
     import s.implicits._
     wallMs.toSeq
-      .map { case (stage, w) => (stage, w, shuffleBytes.getOrElse(stage, 0L)) }
+      .map { case (stage, w) => (stage, w, metrics.counts(stage).shuffleBytes) }
       .toDF("stage", "wall_ms", "shuffle_bytes")
   }
 }

@@ -1,42 +1,38 @@
 package graft.tools
 
-import graft.core.Sessions
-import org.apache.spark.Success
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import graft.core.{QueryMetrics, Sessions}
+import graft.tools.Sampler._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev measurement tool for the optimization rounds: per-query wall time
   * split into build() vs noop-execute, with Spark job/stage/task counts and
-  * shuffle bytes from a listener — pinpoints whether a slow query is paying
-  * for eager driver work inside build, too many jobs, or genuine task time.
+  * shuffle bytes from [[QueryMetrics]] — pinpoints whether a slow query is
+  * paying for eager driver work inside build, too many jobs, or genuine
+  * task time.
   *
   * Usage: runMain graft.tools.OptProbe <sfDir> <queryName...>
   *        runMain graft.tools.OptProbe <sfDir> --stages   (x66 stage costs)
+  *        runMain graft.tools.OptProbe <sfDir> --cc       (connected components)
+  *        runMain graft.tools.OptProbe <sfDir> --polls [nBenchQueries]
+  *        runMain graft.tools.OptProbe <sfDir> --jobs <queryName>
   */
 object OptProbe {
 
-  private[graft] class Counts extends SparkListener {
-    @volatile var jobs = 0
-    @volatile var stages = 0
-    @volatile var tasks = 0
-    @volatile var retried = 0
-    @volatile var shuffleRead = 0L
-    @volatile var shuffleWrite = 0L
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs += 1
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      stages += 1
-      shuffleRead += s.stageInfo.taskMetrics.shuffleReadMetrics.totalBytesRead
-      shuffleWrite += s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
+  /** Clock one run of `mk` — build seconds, execute seconds and the Spark
+    * work of both — and print it as one line; returns the total seconds
+    * and the counts.
+    */
+  private def probe(spark: SparkSession, label: String, mk: () => DataFrame)
+      : (Double, QueryMetrics.Counts) = {
+    val ((b, e), c) = QueryMetrics.measure(spark) {
+      var df: DataFrame = null
+      val b = seconds { df = mk() }
+      (b, seconds(noop(df)))
     }
-    // `tasks` = SUCCESSFUL task ends, so the evidence tables count
-    // completed work once however it was scheduled (accumulating
-    // stageInfo.numTasks would double-count retried stages, and counting
-    // first attempts would count failures while missing work a retry
-    // finished); `retried` = task ends of retry attempts, whatever their
-    // outcome — the scheduling noise beside the work
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      if (t.reason == Success) tasks += 1
-      if (t.taskInfo != null && t.taskInfo.attemptNumber > 0) retried += 1
-    }
+    println(f"[probe] $label%-34s build=$b%6.2fs exec=$e%6.2fs " +
+      f"jobs=${c.jobs}%3d stages=${c.stages}%3d tasks=${c.tasks}%4d retried=${c.retried}%d " +
+      f"shufR=${c.shuffleReadBytes / 1024}%7dKB shufW=${c.shuffleWriteBytes / 1024}%7dKB")
+    (b + e, c)
   }
 
   def main(args: Array[String]): Unit = {
@@ -45,172 +41,70 @@ object OptProbe {
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    if (args.length > 1 && args(1) == "--stages") {
-      val t0 = System.nanoTime()
-      val costs = graft.operators.Pretrain
-        .pretrainCorpusCosts(graft.core.Tables.documents(spark, sfDir))
-      costs.show(20, truncate = false)
-      println(f"x66-with-costs total ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      spark.stop(); return
-    }
+    args.lift(1) match {
+      case Some("--stages") =>
+        val t = seconds(graft.operators.Pretrain
+          .pretrainCorpusCosts(graft.core.Tables.documents(spark, sfDir))
+          .show(20, truncate = false))
+        println(f"x66-with-costs total $t%.2fs")
 
-    if (args.length > 1 && args(1) == "--cc") {
-      // isolate the connected-components loop: a 200-node random graph
-      import spark.implicits._
-      val rnd = new scala.util.Random(7)
-      val edges = Seq.fill(400)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
-        .toDF("u", "v")
-      for (i <- 1 to 3) {
-        val c = new Counts
-        spark.sparkContext.addSparkListener(c)
-        val t0 = System.nanoTime()
-        graft.operators.GraphOps.connectedComponents(edges)
-          .write.format("noop").mode("overwrite").save()
-        val t1 = System.nanoTime()
-        Thread.sleep(300)
-        spark.sparkContext.removeSparkListener(c)
-        println(f"[probe] cc pass$i ${(t1 - t0) / 1e9}%6.2fs jobs=${c.jobs} stages=${c.stages}")
-      }
-      spark.stop(); return
-    }
+      case Some("--cc") =>
+        // isolate the connected-components loop: a 200-node random graph
+        import spark.implicits._
+        val rnd = new scala.util.Random(7)
+        val edges = Seq.fill(400)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+          .toDF("u", "v")
+        sample(3)(() => probe(spark, "cc", () =>
+          graft.operators.GraphOps.connectedComponents(edges))._1).orThrow
 
-    if (args.length > 1 && args(1) == "--polls") {
-      // Reproduce the bench's END-OF-RUN poll state: replay the first N
-      // bench queries (bench attempt loop: clearCache + noop, twice), then
-      // run the four poll arms exactly as Bench's poll section does —
-      // per-poll seconds plus job/stage/task counts from a listener, so a
-      // warm-poll degradation shows up as either higher counts (plan-shape
-      // problem) or same-counts-slower (accumulated fixed overhead).
-      val preN = if (args.length > 2) args(2).toInt else 0
-      val pre = graft.SparkEntry.benchQueries.take(
-        if (preN < 0) Int.MaxValue else preN)
-      val t0s = System.nanoTime()
-      pre.foreach { q =>
-        for (_ <- 1 to 2) {
-          spark.catalog.clearCache()
-          try q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
+      case Some("--polls") =>
+        // Reproduce the bench's END-OF-RUN poll state: replay the first N
+        // bench queries as Bench samples them (clearCache + noop), then run
+        // Bench's poll loop over the four arms — per-arm seconds plus the
+        // Spark work per poll, so a warm-poll degradation shows up as
+        // either higher counts (plan-shape problem) or same-counts-slower
+        // (accumulated fixed overhead).
+        val preN = args.lift(2).fold(0)(_.toInt)
+        val pre = graft.SparkEntry.benchQueries.take(if (preN < 0) Int.MaxValue else preN)
+        val replay = seconds(pre.foreach { q =>
+          sample(graft.Bench.samplesPerQuery) { () =>
+            spark.catalog.clearCache(); seconds(noop(q.build(spark, sfDir)))
+          }.error.foreach(e => println(s"${q.name} FAILED: ${e.getMessage}"))
+        })
+        println(f"[polls] replayed ${pre.size} bench queries in $replay%.1fs")
+        val n = 20
+        pollArms(spark, sfDir).foreach { case (name, arm) =>
+          val Polled(polled, c) = poll(spark, n, arm)
+          val s = polled.orThrow
+          println(f"[polls] $name%-18s p50=${s.percentile(50)}%.3fs " +
+            f"p95=${s.percentile(95)}%.3fs min=${s.min}%.3fs max=${s.max}%.3fs " +
+            f"jobs/poll=${c.jobs.toDouble / n}%.1f stages/poll=${c.stages.toDouble / n}%.1f " +
+            f"tasks/poll=${c.tasks.toDouble / n}%.1f retried=${c.retried}%d")
+        }
+
+      case Some("--jobs") =>
+        // per-job breakdown of one query: description + wall per job, so a
+        // job-count-bound pipeline shows WHICH actions own the micro-jobs
+        require(args.length > 2, "usage: OptProbe <sfDir> --jobs <queryName>")
+        val q = graft.SparkEntry.registry.find(_.name == args(2))
+          .getOrElse(sys.error(s"unknown query ${args(2)}"))
+        try noop(q.build(spark, sfDir)) // warm once
+        catch { case e: Throwable => println(s"warm FAILED: ${e.getMessage}") }
+        spark.catalog.clearCache()
+        probe(spark, q.name, () => q.build(spark, sfDir))._2.jobRuns.sortBy(_.id).foreach(r =>
+          println(f"[job] ${r.id}%4d ${r.millis}%8dms  ${r.description}"))
+
+      case _ =>
+        val names = args.drop(1).toSet
+        graft.SparkEntry.registry.filter(q => names(q.name)).foreach { q =>
+          // warm once (codegen + file listing), then three cold-cache runs
+          try { spark.catalog.clearCache(); noop(q.build(spark, sfDir)) }
           catch { case e: Throwable => println(s"${q.name} FAILED: ${e.getMessage}") }
+          sample(3) { () =>
+            spark.catalog.clearCache()
+            probe(spark, q.name, () => q.build(spark, sfDir))._1
+          }.error.foreach(e => println(s"${q.name} FAILED: ${e.getMessage}"))
         }
-      }
-      println(f"[polls] replayed ${pre.size} bench queries in ${(System.nanoTime() - t0s) / 1e9}%.1fs")
-      def pollArm(name: String, mk: () => org.apache.spark.sql.DataFrame): Unit = {
-        mk().write.format("noop").mode("overwrite").save() // seed + warm
-        val samples = (1 to 20).map { _ =>
-          val c = new Counts
-          spark.sparkContext.addSparkListener(c)
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(120)
-          spark.sparkContext.removeSparkListener(c)
-          (sec, c.jobs, c.stages, c.tasks, c.retried)
-        }
-        val ts = samples.map(_._1).sorted
-        println(f"[polls] $name%-18s p50=${ts(9)}%.3fs p95=${ts(18)}%.3fs " +
-          f"min=${ts.head}%.3fs max=${ts.last}%.3fs " +
-          f"jobs=${samples.map(_._2).max}%d stages=${samples.map(_._3).max}%d " +
-          f"tasks=${samples.map(_._4).max}%d retried=${samples.map(_._5).max}%d")
-      }
-      pollArm("rides", () => graft.serve.QueryService.ridesWindow(spark, sfDir,
-        "2024-01-02 06:00:00", "2024-01-02 12:00:00", 365))
-      pollArm("vec", () => graft.serve.QueryService.vecSearch(spark, sfDir))
-      pollArm("docs", () => graft.serve.QueryService.docSearch(spark, sfDir))
-      pollArm("hybrid", () => graft.serve.QueryService.hybridSearch(spark, sfDir))
-      spark.stop(); return
-    }
-
-    if (args.length > 1 && args(1) == "--jobs") {
-      // per-job breakdown of one query: description + wall per job, so a
-      // job-count-bound pipeline shows WHICH actions own the micro-jobs
-      require(args.length > 2, "usage: OptProbe <sfDir> --jobs <queryName>")
-      val q = graft.SparkEntry.registry.find(_.name == args(2)).getOrElse(
-        sys.error(s"unknown query ${args(2)}"))
-      // warm once
-      try q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => println(s"warm FAILED: ${e.getMessage}") }
-      val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]
-      val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-      val l = new SparkListener {
-        override def onJobStart(j: SparkListenerJobStart): Unit = {
-          val site = j.stageInfos.lastOption.map(si =>
-            s"${si.name} [${j.stageInfos.map(_.numTasks).sum}t]").getOrElse("?")
-          val d = Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .map(desc => s"$desc | $site").getOrElse(site)
-          starts.put(j.jobId, (System.nanoTime(), d))
-        }
-        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val st = starts.remove(e.jobId)
-          if (st != null)
-            lines.add(f"[job] ${e.jobId}%4d ${(System.nanoTime() - st._1) / 1e6}%8.1fms  ${st._2}")
-        }
-      }
-      spark.sparkContext.addSparkListener(l)
-      spark.catalog.clearCache()
-      val t0 = System.nanoTime()
-      q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-      println(f"[jobs-total] ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(l)
-      lines.forEach(println(_))
-      spark.stop(); return
-    }
-
-    if (args.length > 1 && args(1) == "--sweep") {
-      // replicate Bench's attempt loop over the first N bench queries, then
-      // report the late slow set — reproduces cumulative-session effects
-      require(args.length > 2,
-        "usage: OptProbe <sfDir> --sweep <nQueries>  (ADVICE r13 arity guard)")
-      val n = args(2).toInt
-      val qs2 = graft.SparkEntry.benchQueries.take(n)
-      qs2.foreach { q =>
-        var times = List.empty[Double]
-        for (_ <- 1 to 2) {
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          try {
-            q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-            times = (System.nanoTime() - t0) / 1e9 :: times
-          } catch { case e: Throwable => println(s"${q.name} FAILED: ${e.getMessage}") }
-        }
-        if (times.nonEmpty)
-          println(f"[sweep] ${q.name}%-34s ${times.min}%6.2fs" +
-            times.reverse.map(t => f"$t%.2f").mkString(" [", ",", "]"))
-      }
-      spark.stop(); return
-    }
-
-    val names = args.drop(1).toSet
-    val qs = graft.SparkEntry.registry.filter(q => names(q.name))
-    qs.foreach { q =>
-      // warm once (codegen + file listing), as Bench's min-of-2 does
-      try {
-        spark.catalog.clearCache()
-        q.build(spark, sfDir).write.format("noop").mode("overwrite").save()
-      } catch { case e: Throwable => println(s"${q.name} FAILED: ${e.getMessage}") }
-      var best = Double.MaxValue
-      var bestLine = ""
-      for (_ <- 1 to 3) {
-        spark.catalog.clearCache()
-        val c = new Counts
-        spark.sparkContext.addSparkListener(c)
-        val t0 = System.nanoTime()
-        val df = q.build(spark, sfDir)
-        val t1 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val t2 = System.nanoTime()
-        // listener bus is async; give it a beat to drain before reading counts
-        Thread.sleep(300)
-        spark.sparkContext.removeSparkListener(c)
-        val tot = (t2 - t0) / 1e9
-        if (tot < best) {
-          best = tot
-          bestLine = f"[probe] ${q.name}%-34s build=${(t1 - t0) / 1e9}%6.2fs exec=${(t2 - t1) / 1e9}%6.2fs " +
-            f"jobs=${c.jobs}%3d stages=${c.stages}%3d tasks=${c.tasks}%4d retried=${c.retried}%d " +
-            f"shufR=${c.shuffleRead / 1024}%7dKB shufW=${c.shuffleWrite / 1024}%7dKB"
-        }
-      }
-      println(bestLine)
     }
     spark.stop()
   }

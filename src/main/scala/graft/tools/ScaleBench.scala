@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.core.Sessions
-import org.apache.spark.sql.SparkSession
 
 /** The measured answer to "would this plan survive a 10x scale-up?" for
   * the WHOLE bench headline set (VERDICT r8 next-round #3) — SCALE.md's
@@ -28,40 +27,29 @@ object ScaleBench {
   final case class Row(name: String, t1: Double, tf: Double, exp: Double,
       gated: Boolean)
 
-  private def time(s: SparkSession, name: String, dir: String): Double = {
-    def once(): Double = {
-      s.catalog.clearCache()
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(s, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(once(), once())
-  }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-scale/x$factor"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     ScaleProbe.replicate(spark, base, out, factor)
 
-    try graft.SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
+    try Sampler.noop(graft.SparkEntry.entry(spark))
     catch { case _: Throwable => () }
 
-    val rows = graft.Bench.headline.toSeq.sorted.map { name =>
-      val t1 = time(spark, name, base)
-      val tf = time(spark, name, out)
+    /** One exponent row from the 1x and factor-x best-of-2 times. */
+    def row(label: String, name: String, t1: Double, tf: Double): Row = {
       val exp = math.log(tf / t1) / math.log(factor.toDouble)
       val gated = tf >= 2.0 && t1 >= 0.3
       System.err.println(
-        f"[scalebench] $name 1x=$t1%.2fs ${factor}x=$tf%.2fs exp=$exp%.2f gated=$gated")
+        f"[scalebench] $label$name 1x=$t1%.2fs ${factor}x=$tf%.2fs exp=$exp%.2f gated=$gated")
       Row(name, t1, tf, exp, gated)
     }
+    val rows = graft.Bench.headline.toSeq.sorted.map(name =>
+      row("", name, ScaleProbe.time(spark, name, base), ScaleProbe.time(spark, name, out)))
     val violations = rows.filter(r => r.gated && r.exp > 1.15)
 
     // ---- skewed section (r9 verdict #5) -----------------------------------
@@ -100,41 +88,25 @@ object ScaleBench {
       // query term since the r13a replica recipe); the absolute 3 s
       // ceiling below is the binding gate, as for the other serve rows
       "serve_hybrid_search")
-    val skewRows = skewOps.map { name =>
-      val t1 = time(spark, name, base)
-      val tf = time(spark, name, skewOut)
-      val exp = math.log(tf / t1) / math.log(factor.toDouble)
-      val gated = tf >= 2.0 && t1 >= 0.3
-      System.err.println(
-        f"[scalebench] SKEW $name 1x=$t1%.2fs ${factor}x=$tf%.2fs exp=$exp%.2f gated=$gated")
-      Row(name, t1, tf, exp, gated)
-    } :+ {
+    val skewRows = skewOps.map(name => row("SKEW ", name,
+      ScaleProbe.time(spark, name, base), ScaleProbe.time(spark, name, skewOut))) :+ {
       // Direct closure probe: a planted mega STAR component (hub 0 owns 20%
       // of all nodes; the rest sit in fixed 64-node blocks so the round
       // count stays constant across sizes). This times exactly the
       // GraphOps hub scenario — the per-round neighborhood-minimum of a
       // component-dominating node — that the corpus replicas only reach
       // indirectly through LSH.
-      def ccTime(n: Long): Double = {
-        def once(): Double = {
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
+      def ccTime(n: Long): Double = Sampler.sample(2) { () =>
+        spark.catalog.clearCache()
+        Sampler.seconds {
           val e = spark.range(1L, n).selectExpr(
             s"CASE WHEN id % 5 = 0 THEN 0L ELSE (id DIV 64) * 64 END AS u",
             "id AS v")
-          graft.operators.GraphOps.connectedComponents(e)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+          Sampler.noop(graft.operators.GraphOps.connectedComponents(e))
         }
-        math.min(once(), once())
-      }
+      }.orThrow.min
       val n1 = 300000L
-      val t1 = ccTime(n1)
-      val tf = ccTime(n1 * factor)
-      val exp = math.log(tf / t1) / math.log(factor.toDouble)
-      System.err.println(
-        f"[scalebench] SKEW cc_mega_star 1x=$t1%.2fs ${factor}x=$tf%.2fs exp=$exp%.2f")
-      Row("cc_mega_star", t1, tf, exp, gated = tf >= 2.0 && t1 >= 0.3)
+      row("SKEW ", "cc_mega_star", ccTime(n1), ccTime(n1 * factor))
     }
     // serve rows: exponents on sub-0.3 s polls measure jitter, so the
     // binding gate is ABSOLUTE — the 30x hot-cell poll must stay inside

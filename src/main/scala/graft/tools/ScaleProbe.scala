@@ -160,16 +160,14 @@ object ScaleProbe {
     done.createNewFile(); ()
   }
 
-  private def time(s: SparkSession, name: String, dir: String): Double = {
-    def once(): Double = {
+  /** Best of 2 cold-cache runs of registry query `name` at `dir`; shared
+    * with [[ScaleBench]].
+    */
+  private[tools] def time(s: SparkSession, name: String, dir: String): Double =
+    Sampler.sample(2) { () =>
       s.catalog.clearCache()
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(s, dir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(once(), once())
-  }
+      Sampler.seconds(Sampler.noop(graft.SparkEntry.queries(name)(s, dir)))
+    }.orThrow.min
 
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -177,8 +175,7 @@ object ScaleProbe {
     val out = s"${System.getProperty("java.io.tmpdir")}/graft-scale/x$factor"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = Sessions.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     replicate(spark, base, out, factor)
 

@@ -1,7 +1,7 @@
 package graft
 
+import graft.core.QueryMetrics
 import graft.serve.QueryService
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 
 /** Serving-layer contract: the dashboard-poll queries read a MATERIALIZED
   * rides snapshot; only the first call pays for the simulation. The
@@ -11,22 +11,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
   */
 class ServeSpec extends SparkSpec {
 
-  private def countStages(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // listener events are posted asynchronously; a short settle beats
-      // reaching into the private listener bus
-      Thread.sleep(500)
-    } finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
+  /** Stages submitted while `body` runs, exact when this returns. */
+  private def countStages(body: => Unit): Int =
+    QueryMetrics.measure(spark)(body)._2.stages
 
   test("poll queries serve from the materialized snapshot, not the sim DAG") {
     // first call materializes (sim runs once, snapshot written)
@@ -63,19 +50,9 @@ class ServeSpec extends SparkSpec {
     assert(servedRows.toSeq === live.toSeq)
   }
 
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; Thread.sleep(500) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get()
-  }
+  /** Jobs submitted while `body` runs, exact when this returns. */
+  private def countJobs(body: => Unit): Int =
+    QueryMetrics.measure(spark)(body)._2.jobs
 
   test("warm vector/hybrid polls serve from driver caches: bit-identical " +
     "to the facade routes, no planning jobs on the warm path") {

@@ -1018,32 +1018,10 @@ class VectorOpsSpec extends SparkSpec {
     assert(noPq.getMessage.contains("pq route"))
   }
 
-  /** Jobs submitted while `body` runs, counted from the listener bus: a
-    * marker job submitted after `body` is awaited, and the bus delivers in
-    * order, so every job of `body` has been seen by then.
-    */
+  /** Jobs submitted while `body` runs, exact when this returns. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"probe-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
-    val marker = new java.util.concurrent.CountDownLatch(1)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == tag) seen.incrementAndGet()
-        else if (g == s"$tag-marker") marker.countDown()
-      }
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(tag, "jobsDuring")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$tag-marker", "jobsDuring marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (out, seen.get)
-    } finally sc.removeSparkListener(l)
+    val (out, c) = graft.core.QueryMetrics.measure(spark)(body)
+    (out, c.jobs)
   }
 
   /** Every layout with the routes it serves ("auto" included). */
