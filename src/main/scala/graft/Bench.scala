@@ -1,13 +1,15 @@
 package graft
 
-import graft.core.Sessions
+import graft.core.{QueryMetrics, Sessions}
 import graft.tools.Sampler._
 
 /** Benchmark harness: times every bench-tagged query at SPARK_GRAFT_SF_DIR,
   * forcing full execution with a noop-format write (count() would let
   * Catalyst collapse scan-only plans to metadata reads and under-measure).
   * Each query gets a fixed number of samples ([[samplesPerQuery]]); the
-  * JSON carries medians, and `value_min` the total of per-query minima.
+  * JSON carries medians, `value_min` the total of per-query minima and
+  * `codegen_compiles` the generated classes compiled across the timed
+  * samples (per query on stderr).
   * Failures are reported per-query instead of being timed as if they ran.
   * Prints exactly one JSON line for the driver and reads no file of the
   * repository.
@@ -119,16 +121,23 @@ object Bench {
     // the min total to `value_min`). A slow sample — host throttle or
     // real regression — moves the spread; it never earns extra draws.
     var sinceCalib = 0
+    var compiled = 0L
     val results = SparkEntry.benchQueries.map { q =>
+      val before = QueryMetrics.compiles()
       val samples = sample(samplesPerQuery) { () =>
         // drop cached intermediates (e.g. the shared sim rides cache) so
         // every sample measures the pipeline, not a cache read
         spark.catalog.clearCache()
         seconds(noop(q.build(spark, sfDir)))
       }
+      // generated classes compiled across this query's samples: a warm
+      // query whose code is cached compiles none
+      val c = QueryMetrics.compiles() - before
+      compiled += c.classes
       System.err.println(samples.error.fold(
         f"[bench] ${q.name} median=${samples.median}%.2fs min=${samples.min}%.2fs " +
-          f"max=${samples.max}%.2fs" + samples.seconds.map(t => f"$t%.2f").mkString(" [", ",", "]"))(
+          f"max=${samples.max}%.2fs" + samples.seconds.map(t => f"$t%.2f").mkString(" [", ",", "]") +
+          f" compiles=${c.classes}%d (${c.millis}%.0fms)")(
         e => s"[bench] ${q.name} FAILED: ${e.getMessage}"))
       // Interleaved calibration stamps localize a throttle window to a
       // query neighborhood instead of only bracketing the whole sweep.
@@ -155,7 +164,7 @@ object Bench {
           case None =>
             System.err.println(f"[bench] ${name}_p50 ${s.percentile(50)}%.3fs " +
               f"p95 ${s.percentile(95)}%.3fs; 20 polls ran ${c.jobs} jobs, " +
-              f"${c.stages} stages, ${c.tasks} tasks")
+              f"${c.stages} stages, ${c.tasks} tasks, ${c.compiles.classes} compiles")
             Seq(s"${name}_p50" -> s.percentile(50), s"${name}_p95" -> s.percentile(95))
         }
       }
@@ -173,7 +182,7 @@ object Bench {
     val totalMin = okResults.map(_._2.min).sum
     val (post1, postPar) = calibrate(cpus)
     println(
-      f"""{"metric":"total","value":$total%.3f,"value_min":$totalMin%.3f,"unit":"sec","n_queries":${results.size}%d,"calib_mops_1t":$pre1%.0f,"calib_mops_par":$prePar%.0f,"calib_post_1t":$post1%.0f,"calib_post_par":$postPar%.0f,"queries":$qs%s,"failed":$failed%s,"sf":"$sfDir%s"}""")
+      f"""{"metric":"total","value":$total%.3f,"value_min":$totalMin%.3f,"unit":"sec","n_queries":${results.size}%d,"calib_mops_1t":$pre1%.0f,"calib_mops_par":$prePar%.0f,"calib_post_1t":$post1%.0f,"calib_post_par":$postPar%.0f,"codegen_compiles":$compiled%d,"queries":$qs%s,"failed":$failed%s,"sf":"$sfDir%s"}""")
     spark.stop()
   }
 }

@@ -5,8 +5,10 @@ import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.{SparkContext, Success}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The one Spark listener in graft: per-scope job, stage and task counts
   * plus shuffle bytes, for every tool that measures what a query ran
@@ -124,10 +126,34 @@ object QueryMetrics {
   /** A finished job: id, description, wall ms between its scheduler stamps. */
   final case class JobRun(id: Int, description: String, millis: Long)
 
+  /** `compiles` is filled by [[measure]] only; a bare scope's counts
+    * leave it empty.
+    */
   final case class Counts(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
       retried: Int = 0, shuffleReadBytes: Long = 0L,
-      shuffleWriteBytes: Long = 0L, jobRuns: Vector[JobRun] = Vector.empty) {
+      shuffleWriteBytes: Long = 0L, jobRuns: Vector[JobRun] = Vector.empty,
+      compiles: Compiles = Compiles()) {
     def shuffleBytes: Long = shuffleReadBytes + shuffleWriteBytes
+  }
+
+  /** Generated classes Janino compiled and the milliseconds it took: the
+    * misses of Spark's generated-class cache.
+    */
+  final case class Compiles(classes: Long = 0L, millis: Double = 0.0) {
+    def -(earlier: Compiles): Compiles =
+      Compiles(classes - earlier.classes, millis - earlier.millis)
+  }
+
+  /** Compiles so far. Spark counts them per JVM, so the difference of two
+    * readings covers the whole process over that interval, not one scope:
+    * a compile on another thread or by another session counts too.
+    */
+  def compiles(): Compiles = {
+    val classes = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // CodeGenerator sizes its cache from the conf current when it loads:
+    // touched before any session exists, it would pin Spark's default of
+    // 100 entries. Until a first compile there is no time to read.
+    Compiles(classes, if (classes == 0L) 0.0 else CodeGenerator.compileTime / 1e6)
   }
 
   /** Every recorder skips jobs tagged with this prefix: drain markers. */
@@ -141,14 +167,16 @@ object QueryMetrics {
   }
 
   /** `body`'s result and the counts of every Spark job it ran, exact when
-    * this returns.
+    * this returns, with the process's [[compiles]] over `body`.
     */
   def measure[T](spark: SparkSession)(body: => T): (T, Counts) = {
     val m = QueryMetrics(spark)
     try {
+      val before = compiles()
       val out = m.scoped("measure")(body)
+      val compiled = compiles() - before
       m.drain()
-      (out, m.counts("measure"))
+      (out, m.counts("measure").copy(compiles = compiled))
     } finally m.close()
   }
 }

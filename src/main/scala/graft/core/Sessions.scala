@@ -10,8 +10,37 @@ import org.apache.spark.sql.SparkSession
   * cluster deployment would size this to 2-3x total cores. Session time zone
   * is pinned to UTC so timestamp functions are reproducible against the
   * DuckDB oracle.
+  *
+  * Generated code is compiled once per JVM, not once per pass. Spark keeps
+  * every class Janino compiles in one process-wide LRU cache keyed by
+  * (classloader, source):
+  *
+  *  - `spark.sql.codegen.cache.maxEntries` sizes that cache. Spark's
+  *    default of 100 is smaller than one pass of graft's own pipelines:
+  *    the benchmark's five-op lakehouse pass compiles ~136 distinct
+  *    classes and a 12 s serve run ~335, so each pass's cyclic access
+  *    evicted almost every class before its next use and compiled ~100 of
+  *    them again. [[CodegenCacheEntries]] holds a few whole working sets.
+  *    The trade: up to that many generated classes stay held (the
+  *    lakehouse run retains about the same heap; a serve run ~+4 MB).
+  *  - `spark.sql.artifact.isolation.enabled=false` lets every session
+  *    share the application classloader. With it on, each StreamingQuery's
+  *    cloned session gets fresh artifact state and, on the executors, a
+  *    classloader of its own, so the cache key never repeats and every run
+  *    of a streaming query compiled all its classes again (t11_throughput:
+  *    14 per run). Isolation exists for `addArtifact` (jars and classes
+  *    added to one session only), which graft never calls.
+  *
+  * Neither can change later: the cache size is static (read once per JVM)
+  * and isolation is fixed when a session is created; a StreamingQuery's
+  * clone inherits it.
   */
 object Sessions {
+
+  /** Entries of Spark's generated-class cache: ~3x the largest measured
+    * working set (a whole serve run, ~335 classes).
+    */
+  private val CodegenCacheEntries = 1000
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     configure(SparkSession.builder().master(s"local[$cores]"), cores).getOrCreate()
@@ -34,4 +63,6 @@ object Sessions {
       // consumers that depend on cached output partitioning, which this
       // engine never does.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
 }

@@ -14,8 +14,9 @@ import org.apache.spark.sql.streaming.Trigger
   * latest-per-key branch (T5/U3), and foreachBatch epoch overwrite (T6/S11).
   *
   * Each query runs a real StreamingQuery with Trigger.AvailableNow and a
-  * fresh checkpoint, then returns the sink table — so the driver's oracle
-  * compares true streaming output against batch SQL.
+  * fresh checkpoint (removed when the build ends: [[StreamingOps.checkpointed]]),
+  * then returns the sink table — so the driver's oracle compares true
+  * streaming output against batch SQL.
   */
 /** Per-user funnel state for [[StreamingOps.t24]]: the step reached so
   * far, the first-step anchor (micros), and the time of the last step
@@ -46,15 +47,38 @@ object StreamingOps {
       .withColumn("ts", graft.core.Tables.normalizedTs(schema("ts").dataType))
   }
 
-  private def checkpoint(): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-ckpt/${java.util.UUID.randomUUID()}"
+  /** A build whose streaming queries checkpoint under one directory of its
+    * own, `graft-ckpt/<build>/`, handed out as fresh paths by the
+    * `checkpoint` argument. The directory is removed when the build
+    * returns or throws. By then its queries have terminated (each build
+    * awaits them); a query the build left running because it threw is
+    * stopped first.
+    */
+  private[graft] def checkpointed(
+      build: (SparkSession, String, () => String) => DataFrame): (SparkSession, String) => DataFrame =
+    (s, d) => {
+      val root = new org.apache.hadoop.fs.Path(
+        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt/${java.util.UUID.randomUUID()}")
+      try build(s, d, () => s"$root/${java.util.UUID.randomUUID()}")
+      finally {
+        // a query's checkpoint root is not public API; the classic
+        // engine's query handle exposes it
+        s.streams.active.foreach {
+          case q: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+              if q.streamingQuery.resolvedCheckpointRoot.contains(root.toUri.getPath) =>
+            q.stop()
+          case _ =>
+        }
+        root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true): Unit
+      }
+    }
 
   /** T1+T2+T3+F14+T9: stateless alert branch — filter, JSON payload, append
     * sink, checkpointed (pyspark-job.py:142-168).
     */
   val t3: GraftQuery = GraftQuery(
     "t3_stream_alert_filter",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .filter(col("event_type") === "error" && col("value") > 150)
         .select(col("event_id"),
@@ -77,7 +101,7 @@ object StreamingOps {
     */
   val t5: GraftQuery = GraftQuery(
     "t5_stream_latest_state",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .withWatermark("ts", "10 minutes")
         .groupBy("user_id")
@@ -105,7 +129,7 @@ object StreamingOps {
     */
   val t6: GraftQuery = GraftQuery(
     "t6_foreachbatch_overwrite",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t6_state"
       val q = eventsStream(s, d)
         .groupBy("event_type").agg(count(lit(1)).as("n"), decSum(col("value")).as("total"))
@@ -129,7 +153,7 @@ object StreamingOps {
     */
   val t13: GraftQuery = GraftQuery(
     "t13_stream_table_mirror",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t13_mirror_${java.util.UUID.randomUUID()}"
       val q = eventsStream(s, d)
         .select("event_id", "ts", "user_id", "event_type", "value")
@@ -154,7 +178,7 @@ object StreamingOps {
     */
   val t11: GraftQuery = GraftQuery(
     "t11_stream_windowed_agg",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
@@ -182,7 +206,7 @@ object StreamingOps {
     */
   val t11b: GraftQuery = GraftQuery(
     "t11_throughput",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
@@ -209,7 +233,7 @@ object StreamingOps {
     */
   val t12: GraftQuery = GraftQuery(
     "t12_stream_dedup",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .select("user_id", "event_type")
         .dropDuplicates("user_id", "event_type")
@@ -234,7 +258,7 @@ object StreamingOps {
     */
   val t20: GraftQuery = GraftQuery(
     "t20_stream_dedup_within_watermark",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .withWatermark("ts", "10 minutes")
         .select(col("user_id"), col("event_type"), col("ts"))
@@ -272,7 +296,7 @@ object StreamingOps {
     */
   val t21: GraftQuery = GraftQuery(
     "t21_stream_static_enrich",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val dim = graft.core.Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"))
       val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t21_enrich_${java.util.UUID.randomUUID()}"
@@ -305,7 +329,7 @@ object StreamingOps {
     */
   val t22: GraftQuery = GraftQuery(
     "t22_stream_session_window",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .groupBy(col("user_id"), session_window(col("ts"), "6 hours"))
         .agg(count(lit(1)).as("n_events"))
@@ -333,7 +357,7 @@ object StreamingOps {
 
   val t14: GraftQuery = GraftQuery(
     "t14_stream_stream_join",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val clicks = eventsStream(s, d)
         .filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -373,7 +397,7 @@ object StreamingOps {
     */
   val t15: GraftQuery = GraftQuery(
     "t15_stream_merge_upsert",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       import graft.core.Snapshots
       val t = "t15_state"
       Snapshots.reset(t)
@@ -433,7 +457,7 @@ object StreamingOps {
     */
   val t16: GraftQuery = GraftQuery(
     "t16_stream_session_window",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .withWatermark("ts", "10 minutes")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
@@ -479,7 +503,7 @@ object StreamingOps {
     */
   val t17: GraftQuery = GraftQuery(
     "t17_stream_append_eviction",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
@@ -515,7 +539,7 @@ object StreamingOps {
     */
   val t18: GraftQuery = GraftQuery(
     "t18_stream_outer_join",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val clicks = eventsStream(s, d)
         .filter(col("event_type") === "click")
         .select(col("event_id").as("click_id"), col("user_id"),
@@ -567,7 +591,7 @@ object StreamingOps {
     */
   val t19: GraftQuery = GraftQuery(
     "t19_transform_with_state",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       import s.implicits._
       withConf(s, "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
@@ -608,7 +632,7 @@ object StreamingOps {
     */
   val t23: GraftQuery = GraftQuery(
     "t23_stream_drift_monitor",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       import org.apache.spark.sql.expressions.Window
       val e = graft.core.Tables.events(s, d)
         .select(col("value"), unix_micros(col("ts")).as("us"))
@@ -711,7 +735,7 @@ object StreamingOps {
 
   val t24: GraftQuery = GraftQuery(
     "t24_stream_funnel",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       import s.implicits._
       val q = funnelStateful(
         eventsStream(s, d)
@@ -769,7 +793,7 @@ object StreamingOps {
     */
   val t25: GraftQuery = GraftQuery(
     "t25_stream_topk",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .groupBy("user_id").agg(count(lit(1)).as("n_events"))
         .orderBy(desc("n_events"), asc("user_id")).limit(10)
@@ -799,7 +823,7 @@ object StreamingOps {
     */
   val t26: GraftQuery = GraftQuery(
     "t26_stream_msprt",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       def armed(df: org.apache.spark.sql.DataFrame) = df.select(
         expr(s"unix_micros(ts) div ${graft.operators.StatOps.BucketUs}").as("bucket"),
         (col("user_id") % 2 === 0).as("isa"), col("value"))
@@ -832,7 +856,7 @@ object StreamingOps {
     */
   val t27: GraftQuery = GraftQuery(
     "t27_stream_constraints",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val cs: Seq[Quality.Constraint] = Seq(
         Quality.NotNull("user_id"),
         Quality.InRange("value", 0.0, 1e6),
@@ -874,7 +898,7 @@ object StreamingOps {
     */
   val t28: GraftQuery = GraftQuery(
     "t28_stream_srm",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = eventsStream(s, d)
         .select(expr("unix_micros(ts) div 86400000000").as("day"),
           (col("user_id") % 2 === 0).as("isa"), col("user_id"))
@@ -904,7 +928,7 @@ object StreamingOps {
     */
   val t29: GraftQuery = GraftQuery(
     "t29_stream_ewma",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = graft.operators.StatOps.ewmaBucketAgg(eventsStream(s, d))
         .writeStream.format("memory").queryName("graft_t29")
         .outputMode("complete")
@@ -925,7 +949,7 @@ object StreamingOps {
     */
   val t30: GraftQuery = GraftQuery(
     "t30_stream_page_hinkley",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val q = graft.operators.StatOps.ewmaBucketAgg(eventsStream(s, d))
         .writeStream.format("memory").queryName("graft_t30")
         .outputMode("complete")
@@ -960,7 +984,7 @@ object StreamingOps {
     */
   val t31: GraftQuery = GraftQuery(
     "t31_streaming_capstone",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val id = java.util.UUID.randomUUID()
       val alertPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t31_alerts_$id"
       val statePath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t31_state_$id"
@@ -1057,7 +1081,7 @@ object StreamingOps {
     */
   val t32: GraftQuery = GraftQuery(
     "t32_stream_incremental_dedup",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val id = java.util.UUID.randomUUID()
       val seenPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t32_seen_$id"
       val corpusPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t32_new_$id"
@@ -1095,7 +1119,7 @@ object StreamingOps {
     */
   val t33: GraftQuery = GraftQuery(
     "t33_stream_blocklist",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val docsStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1173,7 +1197,7 @@ object StreamingOps {
     */
   val t34: GraftQuery = GraftQuery(
     "t34_stream_domain_cap",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val id = java.util.UUID.randomUUID()
       val countsPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t34_counts_$id"
       val outPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t34_kept_$id"
@@ -1210,7 +1234,7 @@ object StreamingOps {
     */
   val t35: GraftQuery = GraftQuery(
     "t35_stream_pii_scrub",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val docsStream = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1306,7 +1330,7 @@ object StreamingOps {
     */
   val t36: GraftQuery = GraftQuery(
     "t36_stream_keeper_election",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val id = java.util.UUID.randomUUID()
       val statePath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t36_state_$id"
       val membersPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t36_members_$id"
@@ -1376,7 +1400,7 @@ object StreamingOps {
     */
   val t37: GraftQuery = GraftQuery(
     "t37_stream_ingest_pipeline",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val id = java.util.UUID.randomUUID()
       val seenPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t37_seen_$id"
       val outPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t37_out_$id"
@@ -1425,8 +1449,8 @@ object StreamingOps {
     * in and appended per micro-batch against the FROZEN geometry
     * ([[VectorOps.appendToVecIndex]]). Returns the index root.
     */
-  private def streamGrownIndex(s: SparkSession, d: String, name: String,
-      tiers: String): String = {
+  private def streamGrownIndex(s: SparkSession, d: String,
+      checkpoint: () => String, name: String, tiers: String): String = {
     val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/${name}_${java.util.UUID.randomUUID()}"
     VectorOps.buildVecIndex(
       graft.core.Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 0), path, tiers)
@@ -1458,9 +1482,9 @@ object StreamingOps {
     */
   val t38: GraftQuery = GraftQuery(
     "t38_stream_index_append",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val emb = graft.core.Tables.embeddings(s, d)
-      VectorOps.searchVecIndex(s, streamGrownIndex(s, d, "t38_index", "ivf"),
+      VectorOps.searchVecIndex(s, streamGrownIndex(s, d, checkpoint, "t38_index", "ivf"),
         emb.filter(col("vec_id") < 10), k = 3, tier = "ivf")
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -1495,7 +1519,7 @@ object StreamingOps {
     */
   val t39: GraftQuery = GraftQuery(
     "t39_stream_neardup_index",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val id = java.util.UUID.randomUUID()
       val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t39_ndidx_$id"
       val outPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t39_out_$id"
@@ -1531,9 +1555,9 @@ object StreamingOps {
     */
   val t40: GraftQuery = GraftQuery(
     "t40_stream_pq_append",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val emb = graft.core.Tables.embeddings(s, d)
-      VectorOps.searchVecIndex(s, streamGrownIndex(s, d, "t40_pqidx", "pq"),
+      VectorOps.searchVecIndex(s, streamGrownIndex(s, d, checkpoint, "t40_pqidx", "pq"),
         emb.filter(col("vec_id") < 10), k = 3, tier = "pq")
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -1573,9 +1597,9 @@ object StreamingOps {
     */
   val t41: GraftQuery = GraftQuery(
     "t41_stream_drift_audit",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val emb = graft.core.Tables.embeddings(s, d)
-      VectorOps.pqDriftAudit(s, streamGrownIndex(s, d, "t41_pqidx", "pq"), emb)
+      VectorOps.pqDriftAudit(s, streamGrownIndex(s, d, checkpoint, "t41_pqidx", "pq"), emb)
     },
     VectorOps.v42.oracle,
     bench = false)
@@ -1589,9 +1613,9 @@ object StreamingOps {
     */
   val t42: GraftQuery = GraftQuery(
     "t42_stream_ivfpq_append",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val emb = graft.core.Tables.embeddings(s, d)
-      VectorOps.searchVecIndex(s, streamGrownIndex(s, d, "t42_ivfpq", "ivfpq"),
+      VectorOps.searchVecIndex(s, streamGrownIndex(s, d, checkpoint, "t42_ivfpq", "ivfpq"),
         emb.filter(col("vec_id") < 10), k = 3, tier = "ivfpq")
     },
     Some(VectorOps.ivfPqOracle(Some("vec_id % 10 != 0"), None)),
@@ -1613,7 +1637,7 @@ object StreamingOps {
     */
   val t43: GraftQuery = GraftQuery(
     "t43_stream_embedding_drift",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val id = java.util.UUID.randomUUID()
       val statePath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t43_sigs_$id"
       val schema = s.read.parquet(s"$d/embeddings.parquet").schema
@@ -1744,7 +1768,7 @@ object StreamingOps {
     */
   val t45: GraftQuery = GraftQuery(
     "t45_stream_drift_retrain",
-    (s, d) => {
+    checkpointed { (s, d, checkpoint) =>
       val id = java.util.UUID.randomUUID()
       val base = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t45_$id"
       val root = s"$base/vidx"

@@ -5,10 +5,10 @@ import graft.tools.Sampler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev measurement tool for the optimization rounds: per-query wall time
-  * split into build() vs noop-execute, with Spark job/stage/task counts and
-  * shuffle bytes from [[QueryMetrics]] — pinpoints whether a slow query is
-  * paying for eager driver work inside build, too many jobs, or genuine
-  * task time.
+  * split into build() vs noop-execute, with Spark job/stage/task counts,
+  * shuffle bytes and Janino compiles from [[QueryMetrics]] — pinpoints
+  * whether a slow query is paying for eager driver work inside build, too
+  * many jobs, code generation, or genuine task time.
   *
   * Usage: runMain graft.tools.OptProbe <sfDir> <queryName...>
   *        runMain graft.tools.OptProbe <sfDir> --stages   (x66 stage costs)
@@ -31,7 +31,8 @@ object OptProbe {
     }
     println(f"[probe] $label%-34s build=$b%6.2fs exec=$e%6.2fs " +
       f"jobs=${c.jobs}%3d stages=${c.stages}%3d tasks=${c.tasks}%4d retried=${c.retried}%d " +
-      f"shufR=${c.shuffleReadBytes / 1024}%7dKB shufW=${c.shuffleWriteBytes / 1024}%7dKB")
+      f"shufR=${c.shuffleReadBytes / 1024}%7dKB shufW=${c.shuffleWriteBytes / 1024}%7dKB " +
+      f"compiles=${c.compiles.classes}%d (${c.compiles.millis}%.0fms)")
     (b + e, c)
   }
 
@@ -79,7 +80,8 @@ object OptProbe {
           println(f"[polls] $name%-18s p50=${s.percentile(50)}%.3fs " +
             f"p95=${s.percentile(95)}%.3fs min=${s.min}%.3fs max=${s.max}%.3fs " +
             f"jobs/poll=${c.jobs.toDouble / n}%.1f stages/poll=${c.stages.toDouble / n}%.1f " +
-            f"tasks/poll=${c.tasks.toDouble / n}%.1f retried=${c.retried}%d")
+            f"tasks/poll=${c.tasks.toDouble / n}%.1f retried=${c.retried}%d " +
+            f"compiles=${c.compiles.classes}%d (${c.compiles.millis}%.0fms)")
         }
 
       case Some("--jobs") =>

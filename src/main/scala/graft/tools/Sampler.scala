@@ -65,7 +65,9 @@ object Sampler {
     "serve_poll_docs" -> (() => QueryService.docSearch(spark, sfDir)),
     "serve_poll_hybrid" -> (() => QueryService.hybridSearch(spark, sfDir)))
 
-  /** `n` warm polls' timings and the Spark work they ran in total. */
+  /** `n` warm polls' timings and the Spark work they ran in total,
+    * compiles included.
+    */
   final case class Polled(samples: Samples, counts: QueryMetrics.Counts)
 
   /** The poll loop. One untimed call seeds and warms the arm (snapshot,
@@ -74,19 +76,16 @@ object Sampler {
     * path is what is under test. Each poll's duration feeds the serving
     * layer's vacuum grace window ([[QueryService.notePollMillis]]).
     */
-  def poll(spark: SparkSession, n: Int, arm: () => DataFrame): Polled = {
-    val metrics = QueryMetrics(spark)
+  def poll(spark: SparkSession, n: Int, arm: () => DataFrame): Polled =
     try {
       noop(arm())
-      val samples = metrics.scoped("polls")(sample(n) { () =>
+      val (samples, counts) = QueryMetrics.measure(spark)(sample(n) { () =>
         val s = seconds(noop(arm()))
         QueryService.notePollMillis((s * 1000).toLong)
         s
       })
-      metrics.drain()
-      Polled(samples, metrics.counts("polls"))
+      Polled(samples, counts)
     } catch { case e: Throwable =>
       Polled(Samples(Vector.empty, Some(e)), QueryMetrics.Counts())
-    } finally metrics.close()
-  }
+    }
 }

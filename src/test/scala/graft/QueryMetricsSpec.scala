@@ -61,4 +61,16 @@ class QueryMetricsSpec extends SparkSpec {
     assert(c.shuffleWriteBytes > 0L, c)
     assert(c.shuffleReadBytes > 0L, c)
   }
+
+  test("a query with a new expression compiles at least one class; its identical re-run none") {
+    // a literal no earlier query used: its source is new to the cache
+    val k = java.util.UUID.randomUUID().getMostSignificantBits & 0xffffffL
+    def query() = QueryMetrics.measure(spark) {
+      spark.range(0, 100, 1, 2).select((col("id") * k + 7).as("x")).collect()
+    }._2.compiles
+    val first = query()
+    assert(first.classes >= 1L, first)
+    assert(first.millis > 0.0, first)
+    assert(query().classes === 0L)
+  }
 }

@@ -622,4 +622,38 @@ class StreamingSpec extends SparkSpec {
     assert(streamed === batchMode,
       "stop/restart across the checkpoint diverged from the batch ladder")
   }
+
+  /** The names under `${java.io.tmpdir}/graft-ckpt`. */
+  private def checkpointDirs(): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir"), "graft-ckpt").list())
+      .fold(Set.empty[String])(_.toSet)
+
+  test("t11_throughput and the t31 two-query supervisor leave no checkpoint directory") {
+    val before = checkpointDirs()
+    Seq(graft.operators.StreamingOps.t11b, graft.operators.StreamingOps.t31).foreach { q =>
+      // the result outlives its checkpoints: the memory sink and the
+      // parquet sinks hold the rows
+      assert(q.build(spark, sf).count() > 0, q.name)
+      assert(checkpointDirs() === before, s"${q.name} left a checkpoint behind")
+    }
+  }
+
+  test("a build that throws with its query still running stops it and removes its checkpoint") {
+    val before = checkpointDirs()
+    val active = spark.streams.active.map(_.id).toSet
+    val build = graft.operators.StreamingOps.checkpointed { (s, _, checkpoint) =>
+      // a rate source never runs out: only a stop ends this query
+      val q = s.readStream.format("rate").option("rowsPerSecond", "10").load()
+        .writeStream.format("noop").option("checkpointLocation", checkpoint())
+        .trigger(Trigger.ProcessingTime("100 milliseconds")).start()
+      while (q.lastProgress == null && q.isActive) Thread.sleep(20)
+      assert(checkpointDirs() !== before, "the running query has a checkpoint")
+      throw new IllegalStateException("build failed mid-stream")
+    }
+    val e = intercept[IllegalStateException](build(spark, sf))
+    assert(e.getMessage === "build failed mid-stream")
+    assert(spark.streams.active.filterNot(q => active(q.id)).isEmpty,
+      "the failed build's query is still running")
+    assert(checkpointDirs() === before, "the failed build left its checkpoint behind")
+  }
 }
