@@ -449,15 +449,6 @@ object Graft {
       excludeSelf: Boolean = true): DataFrame =
     VectorOps.filteredIvfTopK(corpus, queries, pred, k, probes, excludeSelf)
 
-  /** Recall@k of [[annFilteredTopK]] against the predicate-filtered exact
-    * baseline: (q_id, k, hits, recall) — measures the probes-vs-recall
-    * trade under filtering.
-    */
-  def annFilteredRecall(corpus: DataFrame, queries: DataFrame,
-      pred: org.apache.spark.sql.Column, k: Int = 3, probes: Int = 2,
-      excludeSelf: Boolean = true): DataFrame =
-    VectorOps.filteredRecallEval(corpus, queries, pred, k, probes, excludeSelf)
-
   /** Per-cell match density of `pred` over the IVF cells — the planning
     * signal for filtered search (probed cells thinner than k starve the
     * query): (cluster, n_vectors, n_matching, match_ppm).
@@ -466,140 +457,125 @@ object Graft {
       pred: org.apache.spark.sql.Column): DataFrame =
     VectorOps.filterSelectivityAudit(corpus, pred)
 
-  /** Persist a vector index under `path` — build once, query many with
+  // The persisted index lifecycle. Every verb takes an index ROOT — a
+  // versioned store: build publishes version 1, compaction and rebuild
+  // publish version N+1 behind one atomic pointer, and every other verb
+  // resolves that pointer once, so a running search keeps reading the
+  // version it started on. Old versions stay until [[annVacuumIndex]].
+
+  /** Persist a vector index at `root` — build once, query many with
     * [[annSearchIndex]]. `tiers`: "ivf" (centroids + cluster-partitioned
     * raw posting lists), "pq" (codebook + 8 small codes per vector, the
     * RAM-resident compressed tier), "both" (ivf + pq under one root, the
     * input to the rerank route) or "ivfpq" (residual IVF-PQ, the FAISS
-    * IndexIVFPQ shape: cell pruning AND code compression).
+    * IndexIVFPQ shape: cell pruning AND code compression). Returns the
+    * published version-1 directory.
     */
-  def annBuildIndex(corpus: DataFrame, path: String,
-      tiers: String = "ivf"): Unit =
-    VectorOps.buildVecIndex(corpus, path, tiers)
+  def annBuildIndex(corpus: DataFrame, root: String,
+      tiers: String = "ivf"): String =
+    VectorOps.buildVecIndex(corpus, root, tiers)
 
-  /** The serving planner: search a persisted index without touching the
-    * corpus, routed by `tier` — "ivf" (raw probed cells, bit-identical to
-    * [[annIvfTopK]]), "pq" (code-only ADC), "rerank" (codes nominate, raw
-    * vectors rerank), "ivfpq" (residual ADC) or "auto" (best the root's
-    * layout supports). Probed cell ids become a static partition filter,
-    * so only those directories are read.
+  /** The serving planner: search the current version of an index without
+    * touching the corpus, routed by `tier` — "ivf" (raw probed cells,
+    * bit-identical to [[annIvfTopK]]), "pq" (code-only ADC), "rerank"
+    * (codes nominate, raw vectors rerank), "ivfpq" (residual ADC) or
+    * "auto" (best the root's layout supports). Probed cell ids become a
+    * static partition filter, so only those directories are read.
     */
-  def annSearchIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+  def annSearchIndex(spark: org.apache.spark.sql.SparkSession, root: String,
       queries: DataFrame, k: Int = 3, probes: Int = 2, tier: String = "auto",
       rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame =
-    VectorOps.searchVecIndex(spark, path, queries, k, probes, tier,
+    VectorOps.searchVecIndex(spark, root, queries, k, probes, tier,
       rerankCandidates, excludeSelf)
 
-  /** Append new vectors to every tier of a persisted index, each encoded
+  /** Append new vectors to every tier of the current version, each encoded
     * against its FROZEN geometry (stream-safe, order-independent; rebuild
-    * offline when [[annRebuildAdvisor]] says retrain).
+    * when [[annRebuildAdvisor]] says retrain).
     */
-  def annAppendIndex(batch: DataFrame, path: String): Unit =
-    VectorOps.appendToVecIndex(batch, path)
+  def annAppendIndex(batch: DataFrame, root: String): Unit =
+    VectorOps.appendToVecIndex(batch, root)
 
   /** Logical delete (right-to-be-forgotten): tombstoned ids stop being
-    * served on every route at the next query; reclaim space with
-    * [[annCompactIndex]].
+    * served on every route at the next query; [[annCompactIndex]] drops
+    * them physically.
     */
   def annDeleteFromIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame): Unit =
-    VectorOps.deleteFromVecIndex(spark, path, ids)
+      root: String, ids: DataFrame): Unit =
+    VectorOps.deleteFromVecIndex(spark, root, ids)
 
-  /** Offline compaction of every tier: rewrite minus tombstones and swap —
-    * search results are identical before and after.
+  /** Compact every tier minus tombstones into version N+1 — search results
+    * are identical before and after; no tombstones, no new version.
     */
   def annCompactIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit =
-    VectorOps.compactVecIndex(spark, path)
+      root: String): Unit =
+    VectorOps.compactVecIndex(spark, root)
 
-  /** Offline recenter/rebuild of every tier from the current alive corpus
-    * (the root's own raw vectors, or the source-of-truth `corpus` a lossy
-    * codes-only root needs); the result is bit-indistinguishable from a
-    * fresh build on the current data.
+  /** Recenter/rebuild every tier into version N+1 from the current alive
+    * corpus (the root's own raw vectors, or the source-of-truth `corpus` a
+    * lossy codes-only root needs; tombstones honored, so deleted ids never
+    * resurrect); the result is bit-indistinguishable from a fresh build on
+    * the current data. Returns the new version directory.
     */
   def annRebuildIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: Option[DataFrame] = None): Unit =
-    VectorOps.rebuildVecIndex(spark, path, corpus)
-
-  /** Codebook-drift report for a persisted PQ tier: build-time
-    * reconstruction distortion vs the corpus served now; one row with
-    * needs_retrain = the drop in mean reconstruction cosine exceeding
-    * `margin` — the offline-retrain trigger for the frozen codebook.
-    */
-  def annPqDriftAudit(spark: org.apache.spark.sql.SparkSession,
-      path: String, corpus: DataFrame, margin: Double = 0.05): DataFrame =
-    VectorOps.pqDriftAudit(spark, path, corpus, margin)
-
-  /** Drift-to-action decision table over a persisted index root: one row
-    * per (tier, metric) — v18's 2x occupancy rule on the stored cells,
-    * v42's codebook-drift audit on the PQ tier — with integer-exact
-    * value/threshold and a keep/retrain verdict.
-    */
-  def annRebuildAdvisor(spark: org.apache.spark.sql.SparkSession,
-      path: String, margin: Double = 0.05): DataFrame =
-    VectorOps.rebuildAdvisor(spark, path, margin)
-
-  /** Create a VERSIONED index: version 1 built under `roots/`, published
-    * by an atomic manifest pointer. Readers resolve the pointer once per
-    * request, so rebuilds and compactions can never serve empty or
-    * mixed-geometry results. `tiers` as on [[annBuildIndex]].
-    */
-  def annInitVersionedVecIndex(corpus: DataFrame, root: String,
-      tiers: String = "ivf"): String =
-    VectorOps.initVersionedVecIndex(corpus, root, tiers)
-
-  /** Serve through the version pointer (resolved once per request), then
-    * route tiers exactly like [[annSearchIndex]].
-    */
-  def annSearchVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String, queries: DataFrame, k: Int, probes: Int = 2,
-      tier: String = "auto", rerankCandidates: Int = 32,
-      excludeSelf: Boolean = true): DataFrame =
-    VectorOps.searchVersionedVecIndex(spark, root, queries, k, probes,
-      tier, rerankCandidates, excludeSelf)
-
-  /** Append to / delete from the CURRENT version (same frozen-geometry
-    * contracts as the unversioned verbs).
-    */
-  def annAppendVersionedVecIndex(batch: DataFrame, root: String): Unit =
-    VectorOps.appendToVersionedVecIndex(batch, root)
-
-  def annDeleteFromVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String, ids: DataFrame): Unit =
-    VectorOps.deleteFromVersionedVecIndex(spark, root, ids)
-
-  /** Compact by publishing version N+1 (pinned readers keep the old one). */
-  def annCompactVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
-      root: String): Unit =
-    VectorOps.compactVersionedVecIndex(spark, root)
-
-  /** Rebuild into version N+1 and atomically flip the pointer; concurrent
-    * reads stay fully-old, the next resolution is fully-new. Source: the
-    * current version's alive rows, or the source-of-truth `corpus` (the
-    * FAISS retrain posture, and the only rebuild a lossy residual root can
-    * have); tombstones are honored so deleted ids never resurrect. Returns
-    * the new version directory.
-    */
-  def annRebuildVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, corpus: Option[DataFrame] = None): String =
-    VectorOps.rebuildVersionedVecIndex(spark, root, corpus)
+    VectorOps.rebuildVecIndex(spark, root, corpus)
 
   /** Reclaim versions older than the newest `keepLast` (the grace window
     * for readers pinned to a predecessor). Returns removed versions.
     */
-  def annVacuumVecIndexVersions(spark: org.apache.spark.sql.SparkSession,
+  def annVacuumIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, keepLast: Int = 2): Seq[Long] =
-    VectorOps.vacuumVecIndexVersions(spark, root, keepLast)
+    VectorOps.vacuumVecIndex(spark, root, keepLast)
 
-  /** Advisor-gated versioned rebuild: publishes a successor version only
-    * when a tier's verdict is retrain; Some(newVersionDir) when it acted.
-    * Residual (codes-only) roots retrain from `corpus` (required there —
-    * their codes are lossy).
+  /** Advisor-gated rebuild: publishes version N+1 only when a
+    * [[annRebuildAdvisor]] verdict is retrain; Some(newVersionDir) when it
+    * acted. Residual (codes-only) roots retrain from `corpus` (required
+    * there — their codes are lossy).
     */
-  def annRebuildVersionedIfAdvised(spark: org.apache.spark.sql.SparkSession,
+  def annRebuildIfAdvised(spark: org.apache.spark.sql.SparkSession,
       root: String, margin: Double = 0.05,
       corpus: Option[DataFrame] = None): Option[String] =
-    VectorOps.rebuildVersionedIfAdvised(spark, root, margin, corpus)
+    VectorOps.rebuildVecIndexIfAdvised(spark, root, margin, corpus)
+
+  /** Codebook-drift report for a persisted PQ tier: build-time
+    * reconstruction distortion vs the corpus served now; one row with
+    * needs_retrain = the drop in mean reconstruction cosine exceeding
+    * `margin` — the retrain trigger for the frozen codebook.
+    */
+  def annPqDriftAudit(spark: org.apache.spark.sql.SparkSession,
+      root: String, corpus: DataFrame, margin: Double = 0.05): DataFrame =
+    VectorOps.pqDriftAudit(spark, root, corpus, margin)
+
+  /** Drift-to-action decision table over an index root: one row per
+    * (tier, metric) — v18's 2x occupancy rule on the stored cells, v42's
+    * codebook-drift audit on the PQ tier — with integer-exact
+    * value/threshold and a keep/retrain verdict.
+    */
+  def annRebuildAdvisor(spark: org.apache.spark.sql.SparkSession,
+      root: String, margin: Double = 0.05): DataFrame =
+    VectorOps.rebuildAdvisor(spark, root, margin)
+
+  // Earlier names of four lifecycle verbs, kept with their signatures for
+  // the callers written against them (perfbench's serve workload).
+
+  /** [[annBuildIndex]]. */
+  def annInitVersionedVecIndex(corpus: DataFrame, root: String,
+      tiers: String = "ivf"): String = annBuildIndex(corpus, root, tiers)
+
+  /** [[annSearchIndex]]. */
+  def annSearchVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
+      root: String, queries: DataFrame, k: Int, probes: Int = 2,
+      tier: String = "auto", rerankCandidates: Int = 32,
+      excludeSelf: Boolean = true): DataFrame =
+    annSearchIndex(spark, root, queries, k, probes, tier, rerankCandidates, excludeSelf)
+
+  /** [[annAppendIndex]]. */
+  def annAppendVersionedVecIndex(batch: DataFrame, root: String): Unit =
+    annAppendIndex(batch, root)
+
+  /** [[annDeleteFromIndex]]. */
+  def annDeleteFromVersionedVecIndex(spark: org.apache.spark.sql.SparkSession,
+      root: String, ids: DataFrame): Unit = annDeleteFromIndex(spark, root, ids)
 
   /** Position-aware retrieval metrics of the IVF index vs the exact
     * baseline: (q_id, first_hit_rank, dcg_num, idcg_num, ndcg, mrr) per
@@ -611,26 +587,12 @@ object Graft {
       probes: Int = 2, excludeSelf: Boolean = true): DataFrame =
     VectorOps.rankingEval(corpus, queries, k, probes, excludeSelf)
 
-  /** Per-vector simplified silhouette of the IVF cell assignment:
-    * (vec_id, cluster, a_dist, b_dist, sil) — the cluster-separability
-    * complement of [[annRecallEval]]. O(n·K), aggregation-free.
-    */
-  def annSilhouette(corpus: DataFrame): DataFrame =
-    VectorOps.silhouette(corpus)
-
   /** SemDeDup cluster-scoped semantic pruning (Abbas et al. 2023):
     * (vec_id, cluster, pruned) — pruned rows have a lower-id in-cluster
     * neighbor at cosine >= `tau`.
     */
   def semDedupPrune(corpus: DataFrame, tau: Double = 0.95): DataFrame =
     VectorOps.semDedupPrune(corpus, tau)
-
-  /** IVF ANN with k-means-refined cells (2 Lloyd rounds) — tighter cells
-    * than [[annIvfTopK]], the variant that holds recall on clustered data.
-    */
-  def annKmeansTopK(corpus: DataFrame, queries: DataFrame, k: Int = 3,
-      probes: Int = 2, excludeSelf: Boolean = true): DataFrame =
-    VectorOps.kmeansTopK(corpus, queries, k, probes, excludeSelf)
 
   /** Exact maximum-inner-product top-k (ranking by raw dot product, the
     * scoring rule for unnormalized embeddings): (q_id, neighbor_id, dot).

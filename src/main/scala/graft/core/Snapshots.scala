@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Minimal snapshot/time-travel surface at the [[Tables]] seam — the shape
@@ -8,47 +9,69 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * reading an older snapshot after a delete) without the Iceberg runtime
   * (jar absent in this environment; see DIVERGENCES #6).
   *
-  * Every write is a NEW immutable version directory `v1, v2, ...`; readers
-  * address a version explicitly or take the latest. Deletes are
-  * copy-on-write: filter + write-next-version, the old version stays
-  * readable. At 100 TB this is exactly Iceberg's model (immutable
-  * snapshots + metadata pointer), so swapping the directory listing for
-  * the Iceberg catalog keeps every call site.
+  * A table is a [[VersionedStore]] root on the Hadoop filesystem: every
+  * write builds a NEW immutable version directory and publishes it with
+  * one atomic manifest pointer, under the store's single-writer lease.
+  * Versions are numbered `1, 2, ...`; readers address one explicitly or
+  * take the latest. A writer that fails mid-write leaves only unpublished
+  * debris that no reader resolves and the next write overwrites. Deletes
+  * are copy-on-write: filter + write-next-version, the old version stays
+  * readable until [[vacuum]] reclaims it. At 100 TB this is exactly
+  * Iceberg's model (immutable snapshots + metadata pointer), so swapping
+  * the manifest for the Iceberg catalog keeps every call site.
   */
 object Snapshots {
 
-  private def root(table: String): java.io.File =
-    new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft-scratch/snapshots/$table")
+  private def root(table: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft-scratch/snapshots/$table"
+
+  // the verbs without a session argument reach the filesystem through the
+  // session their caller runs under
+  private def session: SparkSession = SparkSession.active
+
+  private def fsOf(p: Path): FileSystem =
+    p.getFileSystem(session.sparkContext.hadoopConfiguration)
 
   /** Snapshot ids, ascending (empty when the table does not exist). */
-  def versions(table: String): Seq[Int] = {
-    val fs = root(table).listFiles()
-    if (fs == null) Seq.empty
-    else fs.toSeq.map(_.getName).filter(_.startsWith("v")).map(_.drop(1).toInt).sorted
-  }
+  def versions(table: String): Seq[Int] =
+    VersionedStore.versions(session, root(table)).map(_.toInt)
 
-  /** Write `df` as the next snapshot; returns the new version id.
-    *
-    * Crash-safe publish (the discipline every serving store now shares —
-    * see [[VersionedStore]]): the data lands in an UNPUBLISHED `stage-*`
-    * directory that [[versions]] never lists, and `v{N}` appears via one
-    * atomic rename — a writer crashing mid-write leaves only staging
-    * debris readers cannot resolve, never a half-written snapshot that
-    * [[latest]] would trust. The version number is taken AFTER the data
-    * write, so a concurrent writer racing to the same number fails the
-    * rename loudly instead of interleaving files.
-    */
+  /** Build the next version with `build` and publish it; returns its id. */
+  private def commit(s: SparkSession, table: String)(build: String => Unit): Int =
+    new Path(VersionedStore.buildNext(s, root(table),
+      VersionedStore.DefaultLeaseTtlMs)(build)).getName.drop(1).toInt
+
+  /** Write `df` as the next snapshot; returns the new version id. */
   def write(s: SparkSession, table: String, df: DataFrame): Int =
-    publishStaged(table, stage(s, table, df))
+    commit(s, table)(df.write.mode(SaveMode.Overwrite).parquet(_))
+
+  private case object Rejected extends RuntimeException("audit rejected the batch")
+
+  /** Write-audit-publish (Iceberg `write.wap.enabled` / Delta's
+    * un-committed files at this seam): `df` is written into the next,
+    * UNPUBLISHED version directory, `audit` judges exactly those staged
+    * files, and only a passing audit publishes them — the commit itself
+    * is one O(1) pointer write. A rejected batch is deleted before the
+    * lease is released, so neither what readers see nor the next version
+    * number moves. Returns the published version id, None on rejection.
+    */
+  def writeAudited(s: SparkSession, table: String, df: DataFrame)
+      (audit: DataFrame => Boolean): Option[Int] =
+    try Some(commit(s, table) { dir =>
+      df.write.mode(SaveMode.Overwrite).parquet(dir)
+      if (!audit(s.read.parquet(dir))) {
+        fsOf(new Path(dir)).delete(new Path(dir), true)
+        throw Rejected
+      }
+    }) catch { case Rejected => None }
 
   /** Time-travel read of snapshot `v`. */
   def read(s: SparkSession, table: String, v: Int): DataFrame =
-    s.read.parquet(s"${root(table)}/v$v")
+    s.read.parquet(VersionedStore.versionDir(root(table), v))
 
   /** Read the current snapshot. */
   def latest(s: SparkSession, table: String): DataFrame =
-    read(s, table, versions(table).last)
+    s.read.parquet(VersionedStore.resolve(s, root(table)))
 
   /** MERGE (upsert) of `source` into the latest snapshot on `key` —
     * Iceberg/Delta `MERGE INTO` with the update-all / insert-all branches:
@@ -144,22 +167,23 @@ object Snapshots {
     require(name.matches("[A-Za-z0-9_.-]+"), s"bad tag name: $name")
     // "." / ".." pass the character class but resolve to the tags dir /
     // table root — reject dots-only names here so the caller gets the
-    // validation error, not an opaque IOException from Files.write.
+    // validation error, not an opaque IOException from the create.
     require(!name.forall(_ == '.'), s"bad tag name: $name")
-    val dir = new java.io.File(root(table), "tags")
-    dir.mkdirs()
-    java.nio.file.Files.write(new java.io.File(dir, name).toPath,
-      v.toString.getBytes("UTF-8")): Unit
+    val p = new Path(s"${root(table)}/tags/$name")
+    val out = fsOf(p).create(p, true)
+    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
   }
 
   /** All tags of a table, name -> version. */
   def tags(table: String): Map[String, Int] = {
-    val dir = new java.io.File(root(table), "tags")
-    val fs = dir.listFiles()
-    if (fs == null) Map.empty
-    else fs.map(f => f.getName ->
-      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim.toInt)
-      .toMap
+    val dir = new Path(s"${root(table)}/tags")
+    val fs = fsOf(dir)
+    if (!fs.exists(dir)) Map.empty
+    else fs.listStatus(dir).map { f =>
+      val in = fs.open(f.getPath)
+      try f.getPath.getName -> new String(in.readAllBytes(), "UTF-8").trim.toInt
+      finally in.close()
+    }.toMap
   }
 
   /** Time-travel read at a named tag. */
@@ -169,69 +193,19 @@ object Snapshots {
     read(s, table, v)
   }
 
-  /** WAP stage: write `df` as an UNPUBLISHED candidate under the table
-    * root. The data files land on storage, but no reader resolves them —
-    * [[versions]] lists only `v*` directories, so [[latest]]/[[read]]
-    * cannot see a staged candidate. Returns the staging path. (Iceberg's
-    * `write.wap.enabled` branch write / Delta's un-committed files at
-    * this seam.)
-    */
-  def stage(s: SparkSession, table: String, df: DataFrame): String = {
-    root(table).mkdirs()
-    val p = java.nio.file.Files
-      .createTempDirectory(root(table).toPath, "stage-").toFile
-    df.write.mode(SaveMode.Overwrite).parquet(p.toString)
-    p.toString
-  }
-
-  /** WAP publish: promote a staged candidate to the next version. A
-    * metadata-only atomic rename — zero data rewrite, which is the whole
-    * point of write-audit-publish at 100 TB: the audit scans the staged
-    * files once and the commit itself is O(1).
-    */
-  def publishStaged(table: String, staged: String): Int = {
-    val v = versions(table).lastOption.getOrElse(0) + 1
-    val ok = new java.io.File(staged).renameTo(new java.io.File(root(table), s"v$v"))
-    require(ok, s"publishStaged: atomic rename failed for $staged")
-    v
-  }
-
-  /** WAP reject: drop a staged candidate that failed its audit. The
-    * published table never saw it.
-    */
-  def discardStaged(staged: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rec)
-      f.delete(): Unit
-    }
-    val f = new java.io.File(staged)
-    require(f.getName.startsWith("stage-"), s"not a staging dir: $staged")
-    if (f.exists()) rec(f)
-  }
-
-  /** Drop the whole table (all snapshots) — test/setup hygiene. */
+  /** Drop the whole table (all snapshots and tags) — test/setup hygiene. */
   def reset(table: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rec)
-      f.delete(): Unit
-    }
-    if (root(table).exists()) rec(root(table))
+    val p = new Path(root(table))
+    fsOf(p).delete(p, true): Unit
   }
 
   /** VACUUM / snapshot expiry: drop all but the newest `keep` snapshots
-    * (Iceberg `expireSnapshots` / Delta `VACUUM` semantics at this seam).
-    * Returns the dropped version ids, ascending. Time travel to a dropped
-    * version fails afterwards — that loss is the contract; callers keep
-    * enough history for their audit window.
+    * (Iceberg `expireSnapshots` / Delta `VACUUM` semantics at this seam)
+    * through [[VersionedStore.vacuum]]. Returns the dropped version ids,
+    * ascending. Time travel to a dropped version fails afterwards — that
+    * loss is the contract; callers keep enough history for their audit
+    * window.
     */
-  def vacuum(table: String, keep: Int): Seq[Int] = {
-    require(keep >= 1, s"vacuum must keep at least 1 snapshot, got $keep")
-    def rec(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rec)
-      f.delete(): Unit
-    }
-    val drop = versions(table).dropRight(keep)
-    drop.foreach(v => rec(new java.io.File(s"${root(table)}/v$v")))
-    drop
-  }
+  def vacuum(table: String, keep: Int): Seq[Int] =
+    VersionedStore.vacuum(session, root(table), keep).map(_.toInt)
 }

@@ -3,10 +3,10 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Generic versioned-snapshot root — the manifest/roots layout the vector
-  * index introduced (see VectorOps' versioned-roots section for the full
-  * design rationale), factored out so EVERY serving store shares one
-  * atomicity story (reference: the dashboard polls stable BigQuery tables,
+/** The one versioned store under every persisted artifact — vector index
+  * roots (VectorOps' versioned-roots section), the serving BM25 snapshot
+  * and [[Snapshots]] tables — so they all share one atomicity story
+  * (reference: the dashboard polls stable BigQuery tables,
   * webapp/buses-dashboard/bq_service.py:33-50 — a store must never serve a
   * half-written snapshot):
   *
@@ -52,18 +52,28 @@ object VersionedStore {
   private def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Published version numbers under `root`, ascending. */
-  private def publishedVersions(fs: FileSystem, man: Path): Seq[Long] =
+  /** Writers that crash mid-build hold their version lease until this TTL
+    * passes; a successor build then takes the lease over (see [[claim]]).
+    * Generous next to any real build duration so a SLOW build is never
+    * mistaken for a dead one.
+    */
+  val DefaultLeaseTtlMs: Long = 15L * 60 * 1000
+
+  /** Published version numbers under `root`, ascending (empty when the
+    * root does not exist).
+    */
+  def versions(s: SparkSession, root: String): Seq[Long] = {
+    val man = manifest(root)
+    val fs = fsOf(s, man)
     if (!fs.exists(man)) Nil
     else fs.listStatus(man).map(_.getPath.getName).toSeq
       .collect { case n if n.matches("v\\d{8,}") => n.drop(1).toLong }
       .sorted
+  }
 
   /** Highest published version under `root`, if any. */
-  def currentVersion(s: SparkSession, root: String): Option[Long] = {
-    val man = manifest(root)
-    publishedVersions(fsOf(s, man), man).lastOption
-  }
+  def currentVersion(s: SparkSession, root: String): Option[Long] =
+    versions(s, root).lastOption
 
   /** The version directory for `n` (published or not). */
   def versionDir(root: String, n: Long): String =
@@ -252,50 +262,46 @@ object VersionedStore {
         Thread.sleep(100)
       return resolve(s, root)
     }
-    try {
-      val dir = versionDir(root, 1L)
-      build(dir)
-      requireStillHeld(s, root, 1L)
-      publish(s, root, 1L)
-      dir
-    } finally release(s, root, 1L)
+    buildClaimed(s, root, 1L)(build)
   }
-
-  /** Abort loudly if the lease this process claimed was stolen while it
-    * built — publishing anyway would bless a directory another writer may
-    * have interleaved into (the residual takeover window [[claim]]
-    * documents).
-    */
-  private def requireStillHeld(s: SparkSession, root: String, n: Long): Unit =
-    require(holdsLease(s, root, n),
-      s"VersionedStore: the build lease on ${versionName(n)} under $root " +
-        "was lost mid-build (a takeover mis-fire or manual intervention) — " +
-        "refusing to publish a possibly multi-writer directory; retry the " +
-        "build")
 
   /** Publish the successor version: claim v{N+1} (single-writer — a
     * concurrent builder is refused loudly), run `build` into its version
-    * directory, flip the pointer. Concurrent reads pinned to v{N} stay
-    * fully-old; the next resolution is fully-new. Returns the new
+    * directory, flip the pointer. On a root with no published version
+    * this publishes v1 ([[init]] is the variant that waits for a racing
+    * first builder instead of failing). Concurrent reads pinned to v{N}
+    * stay fully-old; the next resolution is fully-new. Returns the new
     * version directory.
     */
   def buildNext(s: SparkSession, root: String, ttlMs: Long)
       (build: String => Unit): String = {
-    val cur = currentVersion(s, root).getOrElse(
-      sys.error(s"VersionedStore.buildNext: no published version under $root"))
-    val n = cur + 1
+    val n = currentVersion(s, root).getOrElse(0L) + 1
     require(claim(s, root, n, ttlMs),
       s"VersionedStore.buildNext: another writer holds the build lease on " +
         s"${versionName(n)} under $root — exactly one build may target a " +
         "version; retry after it publishes or after its lease expires")
+    buildClaimed(s, root, n)(build)
+  }
+
+  /** Run `build` into version `n`'s directory under the lease this process
+    * just claimed, then publish — aborting loudly if the lease was stolen
+    * while it built (publishing anyway would bless a directory another
+    * writer may have interleaved into: the residual takeover window
+    * [[claim]] documents). The lease is released however `build` ends.
+    */
+  private def buildClaimed(s: SparkSession, root: String, n: Long)
+      (build: String => Unit): String =
     try {
       val dir = versionDir(root, n)
       build(dir)
-      requireStillHeld(s, root, n)
+      require(holdsLease(s, root, n),
+        s"VersionedStore: the build lease on ${versionName(n)} under $root " +
+          "was lost mid-build (a takeover mis-fire or manual intervention) — " +
+          "refusing to publish a possibly multi-writer directory; retry the " +
+          "build")
       publish(s, root, n)
       dir
     } finally release(s, root, n)
-  }
 
   // ---------------------------------------------------------- retention
 
@@ -316,15 +322,14 @@ object VersionedStore {
     require(keepLast >= 1, "VersionedStore.vacuum: keepLast must be >= 1")
     val man = manifest(root)
     val fs = fsOf(s, man)
-    if (!fs.exists(man)) return Nil
-    val versions = publishedVersions(fs, man)
+    val published = versions(s, root)
     val now = System.currentTimeMillis()
-    def supersededLongAgo(v: Long): Boolean = versions.find(_ > v).forall { nxt =>
+    def supersededLongAgo(v: Long): Boolean = published.find(_ > v).forall { nxt =>
       try now - fs.getFileStatus(new Path(man, versionName(nxt)))
         .getModificationTime >= minAgeMs
       catch { case _: java.io.FileNotFoundException => false }
     }
-    val victims = versions.dropRight(keepLast)
+    val victims = published.dropRight(keepLast)
       .filter(v => minAgeMs <= 0L || supersededLongAgo(v))
     victims.foreach { v =>
       fs.delete(new Path(versionDir(root, v)), true)

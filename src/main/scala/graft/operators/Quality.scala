@@ -122,13 +122,14 @@ object Quality {
   final case class WapResult(checksFailed: Int, published: Boolean, versionAfter: Int)
 
   /** Public DataFrame-in API (see graft.api.Graft): write-audit-publish
-    * (the Netflix WAP pattern; Iceberg `write.wap.enabled`): stage `df`
-    * as an unpublished candidate, audit the STAGED FILES with the
-    * constraint suite (one scan, [[checkConstraints]]), then publish —
-    * an O(1) metadata rename — only if every check passed; a failed
-    * audit discards the candidate and the table's visible state is
-    * untouched. Auditing what was staged (not the input plan) is the
-    * contract: it validates exactly the bytes a reader would see.
+    * (the Netflix WAP pattern; Iceberg `write.wap.enabled`) through
+    * [[graft.core.Snapshots.writeAudited]]: `df` lands as the table's
+    * next, unpublished version, the constraint suite audits the STAGED
+    * FILES (one scan, [[checkConstraints]]), and only a clean audit
+    * publishes them — an O(1) pointer write; a failed audit deletes the
+    * candidate and the table's visible state and version are untouched.
+    * Auditing what was staged (not the input plan) is the contract: it
+    * validates exactly the bytes a reader would see.
     *
     * The only driver-side materialization is the verdict table — one row
     * per constraint, bounded by the suite, never by the data.
@@ -136,15 +137,14 @@ object Quality {
   def writeAuditPublish(s: org.apache.spark.sql.SparkSession, table: String,
       df: DataFrame, cs: Seq[Constraint]): WapResult = {
     import graft.core.Snapshots
-    val staged = Snapshots.stage(s, table, df)
-    val verdicts = checkConstraints(s.read.parquet(staged), cs).collect()
-    val failed = verdicts.count(r => !r.getAs[Boolean]("passed"))
-    if (failed == 0) WapResult(0, published = true, Snapshots.publishStaged(table, staged))
-    else {
-      Snapshots.discardStaged(staged)
-      WapResult(failed, published = false,
-        Snapshots.versions(table).lastOption.getOrElse(0))
+    var failed = 0
+    val published = Snapshots.writeAudited(s, table, df) { staged =>
+      failed = checkConstraints(staged, cs).collect()
+        .count(r => !r.getAs[Boolean]("passed"))
+      failed == 0
     }
+    WapResult(failed, published.isDefined,
+      published.getOrElse(Snapshots.versions(table).lastOption.getOrElse(0)))
   }
 
   /** S35 (beyond reference): WAP gate in action — a clean batch publishes

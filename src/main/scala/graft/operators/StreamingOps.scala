@@ -1446,8 +1446,9 @@ object StreamingOps {
 
   /** The t38/t40/t41/t42 ingest shape: a persisted `tiers` index built
     * once on the base corpus (vec_id % 10 != 0), then the rest streamed
-    * in and appended per micro-batch against the FROZEN geometry
-    * ([[VectorOps.appendToVecIndex]]). Returns the index root.
+    * in and appended per micro-batch to its current version against the
+    * FROZEN geometry ([[VectorOps.appendToVecIndex]]). Returns the index
+    * root.
     */
   private def streamGrownIndex(s: SparkSession, d: String,
       checkpoint: () => String, name: String, tiers: String): String = {
@@ -1774,10 +1775,8 @@ object StreamingOps {
       val root = s"$base/vidx"
       val sigPath = s"$base/sigs"
       val emb = graft.core.Tables.embeddings(s, d)
-      VectorOps.initVersionedVecIndex(
-        emb.filter(col("vec_id") % 10 =!= 0), root)
-      VectorOps.appendToVersionedVecIndex(
-        emb.filter(col("vec_id") % 10 === 0), root)
+      VectorOps.buildVecIndex(emb.filter(col("vec_id") % 10 =!= 0), root)
+      VectorOps.appendToVecIndex(emb.filter(col("vec_id") % 10 === 0), root)
       val schema = s.read.parquet(s"$d/embeddings.parquet").schema
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet")
@@ -1798,13 +1797,13 @@ object StreamingOps {
       // the maintenance hook DECIDES and ACTS: the streamed PSI trips the
       // 0.2 rule, the versioned rebuild re-derives full-corpus geometry
       // and publishes v2 under any concurrent reader
-      val acted = VectorOps.rebuildVersionedIfAdvised(s, root,
+      val acted = VectorOps.rebuildVecIndexIfAdvised(s, root,
         sigStore = Some(sigPath))
       require(acted.isDefined,
         "t45: the streamed embedding-drift verdict must trigger the retrain")
       require(VectorOps.currentVecIndexVersion(s, root) == Some(2L),
         "t45: exactly v2 must be published by the advisor-gated retrain")
-      VectorOps.searchVersionedVecIndex(s, root,
+      VectorOps.searchVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2, tier = "ivf")
     },
     VectorOps.v2.oracle,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.api.GraftQuery
-import graft.core.Tables
+import graft.core.{Tables, VersionedStore}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2551,14 +2551,14 @@ object VectorOps {
   /** Public DataFrame-in API (see graft.api.Graft): PERSIST a vector index
     * — the build-once / query-many shape every production vector store
     * has, which none of the in-memory ops (v2/v4/v8/v9) demonstrate. An
-    * index ROOT holds one or more [[Tier]]s next to ONE `tombstones/`
-    * table (vec_id), and every lifecycle verb is written once over them:
-    * [[buildVecIndex]], [[appendToVecIndex]], [[deleteFromVecIndex]],
-    * [[compactVecIndex]], [[rebuildVecIndex]] and the route planner
+    * index ROOT is a [[graft.core.VersionedStore]] root (see the
+    * versioned-roots section); each published version directory holds
+    * one or more [[Tier]]s next to ONE `tombstones/` table (vec_id), and
+    * every lifecycle verb is written once over them: [[buildVecIndex]],
+    * [[appendToVecIndex]], [[deleteFromVecIndex]], [[compactVecIndex]],
+    * [[rebuildVecIndex]], [[vacuumVecIndex]] and the route planner
     * [[searchVecIndex]]. Layouts (`tiers`): "ivf", "pq", "both" (ivf + pq
     * under one root — the rerank route's input) and "ivfpq" (residual).
-    * The versioned-root verbs further down publish the same builds
-    * through [[graft.core.VersionedStore]].
     */
   private sealed abstract class Tier(val name: String, val dirs: Seq[String],
       val data: String, val key: String, val payload: String,
@@ -2676,13 +2676,11 @@ object VectorOps {
     StructType(Seq(StructField("j", IntegerType), StructField("e", Doubles)))
 
   /** Tier `t`'s data rows under `path`, read with its declared schema. The
-    * file listing is taken fresh, so files any process added since the
-    * last read (appends, compaction output) are served.
+    * file listing is taken fresh, so files any process appended since the
+    * last read are served.
     */
-  private def tierRows(s: SparkSession, path: String, t: Tier): DataFrame = {
-    recoverAside(s, s"$path/${t.data}")
+  private def tierRows(s: SparkSession, path: String, t: Tier): DataFrame =
     s.read.schema(t.schema(s, path)).parquet(s"$path/${t.data}")
-  }
 
   /** The persisted centroid table (k_id, k_e) — the assignment input of
     * the IVF and residual encoders.
@@ -2719,20 +2717,15 @@ object VectorOps {
   private def exists(s: SparkSession, dir: String): Boolean =
     fsOf(s, dir).exists(new org.apache.hadoop.fs.Path(dir))
 
-  /** The tiers present under an index root — THE layout probe every verb
-    * routes on, so maintenance and serving can never disagree about what
-    * a root is. Self-heals first: a crash between [[swapAside]]'s two
-    * renames leaves a directory at `<dir>_old`, and without recovery the
-    * probe would see that tier as absent ("auto" silently rerouting
-    * rerank -> pq, ADC scores instead of exact cosine). Raw `postings/`
-    * mark the IVF tier; `codes/` are the residual tier when `centroids/`
-    * sit next to them without postings, the flat PQ tier otherwise.
+  /** The tiers present in an index version directory — THE layout probe
+    * every verb routes on, so maintenance and serving can never disagree
+    * about what a root is. Raw `postings/` mark the IVF tier; `codes/`
+    * are the residual tier when `centroids/` sit next to them without
+    * postings, the flat PQ tier otherwise.
     */
   private def layoutOf(s: SparkSession, path: String): Seq[Tier] = {
-    val has = Seq("postings", "codes", "centroids").map { d =>
-      recoverAside(s, s"$path/$d")
-      d -> exists(s, s"$path/$d")
-    }.toMap
+    val has = Seq("postings", "codes", "centroids")
+      .map(d => d -> exists(s, s"$path/$d")).toMap
     if (has("postings")) IvfTier +: (if (has("codes")) Seq(PqTier) else Nil)
     else if (!has("codes")) Nil
     else if (has("centroids")) Seq(ResidualTier)
@@ -2750,7 +2743,7 @@ object VectorOps {
     * anti-join against the root's `tombstones/` table (vec_id), matched
     * on `key` (postings carry c_id, codes vec_id). Deleted ids stop being
     * served at the NEXT query with zero data-file rewrites on the serving
-    * path; [[compactVecIndex]] reclaims the space offline.
+    * path; [[compactVecIndex]] reclaims the space in the next version.
     */
   private def aliveRows(s: SparkSession, path: String, rows: DataFrame,
       key: String): DataFrame =
@@ -2772,42 +2765,59 @@ object VectorOps {
     tiers.foreach(_.build(rows, path))
   }
 
-  /** Persist `corpus` as an index root of layout `tiers` ("ivf" | "pq" |
-    * "both" | "ivfpq"). Index build cost (one corpus scan + one write per
-    * tier) is paid once; every [[searchVecIndex]] call then pays only the
-    * tiny geometry reads plus probed-partition / code scans. Use a fresh
-    * root per layout.
+  /** Persist `corpus` as a new index root of layout `tiers` ("ivf" | "pq"
+    * | "both" | "ivfpq"): version 1 is built under `roots/v00000001`, then
+    * the manifest pointer is published. Index build cost (one corpus scan
+    * + one write per tier) is paid once; every [[searchVecIndex]] call then
+    * pays only the tiny geometry reads plus probed-partition / code scans.
+    * A crash before publish leaves only unpublished debris (readers see
+    * "no version") that the retry builds over. The first build is
+    * single-writer like every other version: a cross-process double-init
+    * (two pollers cold-starting the same scratch root) builds once — the
+    * loser waits for the winner's publish. A root that already has a
+    * version is refused; [[rebuildVecIndex]] publishes its successors.
+    * `stageKey` as on [[buildVersion]]. Returns the version directory.
     */
-  def buildVecIndex(corpus: DataFrame, path: String, tiers: String): Unit =
-    buildTiers(corpus, path, tiersNamed(tiers))
+  def buildVecIndex(corpus: DataFrame, root: String, tiers: String = "ivf",
+      leaseTtlMs: Long = VersionedStore.DefaultLeaseTtlMs,
+      stageKey: Option[String] = None): String = {
+    val ts = tiersNamed(tiers)
+    VersionedStore.init(corpus.sparkSession, root, leaseTtlMs)(
+      buildVersion(corpus, _, ts, stageKey))
+  }
 
-  /** Append new vectors to EVERY tier of the root, each encoded against
-    * its PERSISTED geometry — centroids and codebooks never move under
-    * running queries; recentering/retraining is an offline rebuild that
-    * [[rebuildAdvisor]] decides. Stream-safe and order-independent (t38,
-    * t40, t42 gate it on the ingest stream). A REDELIVERED batch
-    * (foreachBatch at-least-once) duplicates deterministic rows, which
-    * serving collapses (see [[searchIvfIndexPlanned]]) and compaction
-    * physically reclaims.
+  /** Append new vectors to EVERY tier of the root's current version, each
+    * encoded against its PERSISTED geometry — centroids and codebooks
+    * never move under running queries; recentering/retraining is a
+    * rebuild that [[rebuildAdvisor]] decides. Appends add files and remove
+    * none, so a reader pinned to the version keeps its files. Stream-safe
+    * and order-independent (t38, t40, t42 gate it on the ingest stream). A
+    * REDELIVERED batch (foreachBatch at-least-once) duplicates
+    * deterministic rows, which serving collapses (see
+    * [[searchIvfIndexPlanned]]) and compaction physically reclaims.
     */
-  def appendToVecIndex(batch: DataFrame, path: String): Unit = {
-    graft.plans.GraftExtensions.register(batch.sparkSession)
-    requireLayout(batch.sparkSession, path, "appendToVecIndex").foreach(t =>
-      t.write(t.encode(longIds(batch), path), s"$path/${t.data}", "append"))
-    noteMutation(path)
+  def appendToVecIndex(batch: DataFrame, root: String): Unit = {
+    val s = batch.sparkSession
+    graft.plans.GraftExtensions.register(s)
+    val dir = resolveVecIndexRoot(s, root)
+    requireLayout(s, dir, "appendToVecIndex").foreach(t =>
+      t.write(t.encode(longIds(batch), dir), s"$dir/${t.data}", "append"))
+    noteMutation(dir)
   }
 
   /** LOGICAL delete — the right-to-be-forgotten path: `ids` (a vec_id
-    * column) land in the root's one tombstone table and every route stops
-    * serving them at the NEXT query, with zero interruption and zero
-    * data-file rewrites. Geometry is not data: a deleted centroid- or
-    * codeword-source vector still anchors its cell/codeword. Space is
-    * reclaimed by [[compactVecIndex]].
+    * column) land in the current version's one tombstone table and every
+    * route stops serving them at the NEXT query, with zero interruption
+    * and zero data-file rewrites. Geometry is not data: a deleted
+    * centroid- or codeword-source vector still anchors its cell/codeword.
+    * [[compactVecIndex]] and [[rebuildVecIndex]] drop the rows physically
+    * in the successor version.
     */
-  def deleteFromVecIndex(s: SparkSession, path: String, ids: DataFrame): Unit = {
-    requireLayout(s, path, "deleteFromVecIndex")
-    longIds(ids.select(col("vec_id"))).write.mode("append").parquet(s"$path/tombstones")
-    noteMutation(path)
+  def deleteFromVecIndex(s: SparkSession, root: String, ids: DataFrame): Unit = {
+    val dir = resolveVecIndexRoot(s, root)
+    requireLayout(s, dir, "deleteFromVecIndex")
+    longIds(ids.select(col("vec_id"))).write.mode("append").parquet(s"$dir/tombstones")
+    noteMutation(dir)
   }
 
   /** Tier `t`'s data rows minus tombstones and minus the rows a
@@ -2833,65 +2843,39 @@ object VectorOps {
     alive.dropDuplicates(t.key)
   }
 
-  /** OFFLINE compaction of an unversioned root: rewrite every tier's data
-    * directory via [[compacted]] into a fresh directory, [[swapAside]] it
-    * in, then drop the tombstones — the production rewrite-and-swap shape
-    * (never an in-place overwrite of a table being read; at scale one
-    * index scan + one write per tier, amortized across many deletes). A
-    * partitioned tier keeps `partitionBy("cluster")`, the layout serving
-    * prunes on. Results on every route are IDENTICAL before and after
-    * (VectorOpsSpec pins it). Versioned roots compact through
-    * [[compactVersionedVecIndex]], which never rewrites a published
-    * version.
+  /** Compact by publishing v{N+1}: the current version's geometry
+    * directories are byte-copied and each tier's data is rewritten via
+    * [[compacted]] (a partitioned tier keeps `partitionBy("cluster")`, the
+    * layout serving prunes on) under the single-writer lease — at scale
+    * one index scan + one write per tier, amortized across many deletes.
+    * The current version is never rewritten, so a search resolved before
+    * the compaction still reads its files, and results on every route are
+    * IDENTICAL after the flip (VectorOpsSpec pins it). A failure leaves vN
+    * serving and unpublished debris the retry builds over. No tombstones =
+    * nothing to reclaim = no new version.
     */
-  def compactVecIndex(s: SparkSession, path: String): Unit = {
-    val tiers = layoutOf(s, path)
-    noteMutation(path) // aside recovery and the rewrite both reshape files
-    if (!exists(s, s"$path/tombstones")) return // no-op stays one probe cheap
-    tiers.foreach { t =>
-      t.write(compacted(s, path, t), s"$path/${t.data}_compacting", "overwrite")
-      swapAside(s, s"$path/${t.data}_compacting", s"$path/${t.data}")
+  def compactVecIndex(s: SparkSession, root: String): Unit = {
+    val cur = resolveVecIndexRoot(s, root)
+    if (!exists(s, s"$cur/tombstones")) return
+    val tiers = requireLayout(s, cur, "compactVecIndex")
+    VersionedStore.buildNext(s, root, VersionedStore.DefaultLeaseTtlMs) { dir =>
+      val fs = fsOf(s, dir)
+      remove(s, dir)
+      tiers.flatMap(_.dirs).distinct.filterNot(d => tiers.exists(_.data == d))
+        .foreach { d =>
+          require(org.apache.hadoop.fs.FileUtil.copy(
+              fs, new org.apache.hadoop.fs.Path(s"$cur/$d"),
+              fs, new org.apache.hadoop.fs.Path(s"$dir/$d"),
+              false, true, s.sparkContext.hadoopConfiguration),
+            s"compactVecIndex: copy of $cur/$d failed")
+        }
+      tiers.foreach(t => t.write(compacted(s, cur, t), s"$dir/${t.data}", "overwrite"))
     }
-    remove(s, s"$path/tombstones")
-  }
-
-  /** Crash-safe directory swap for UNVERSIONED roots: `live` is renamed
-    * ASIDE before `fresh` moves in, so no failure ordering ever leaves
-    * the DATA missing — a delete-then-rename (the naive swap) destroys
-    * the serving copy the instant the delete lands. A failure between the
-    * two renames leaves the old data intact at `live_old`;
-    * [[recoverAside]] (called by every reader and maintenance entry
-    * point) renames it back, so the index self-heals at the next touch.
-    * Only after `fresh` is fully in place does the old copy get dropped.
-    */
-  private def swapAside(s: SparkSession, fresh: String, live: String): Unit = {
-    val fs = fsOf(s, live)
-    val Seq(freshP, liveP, aside) =
-      Seq(fresh, live, live + "_old").map(new org.apache.hadoop.fs.Path(_))
-    if (fs.exists(aside)) fs.delete(aside, true) // leftover of a prior crash
-    require(fs.rename(liveP, aside), s"swap step 1 (aside) failed for $live")
-    require(fs.rename(freshP, liveP),
-      s"swap step 2 failed for $live — previous data preserved at $aside")
-    fs.delete(aside, true): Unit
+    (): Unit
   }
 
   private def remove(s: SparkSession, dir: String): Unit =
     fsOf(s, dir).delete(new org.apache.hadoop.fs.Path(dir), true): Unit
-
-  /** Self-heal after a crash BETWEEN [[swapAside]]'s two renames: if the
-    * live directory is missing but its `_old` aside copy exists, restore
-    * it. Idempotent, one exists() probe on the healthy path — cheap
-    * enough for every reader to call.
-    */
-  private def recoverAside(s: SparkSession, live: String): Unit = {
-    val livePath = new org.apache.hadoop.fs.Path(live)
-    val fs = fsOf(s, live)
-    val aside = new org.apache.hadoop.fs.Path(live + "_old")
-    if (!fs.exists(livePath) && fs.exists(aside)) {
-      require(fs.rename(aside, livePath), s"aside recovery failed for $live")
-      (): Unit
-    }
-  }
 
   /** The corpus a rebuild re-derives geometry from, tombstones applied so
     * a deleted id never resurrects: the external source-of-truth
@@ -2915,46 +2899,54 @@ object VectorOps {
         .select(col("c_id").as("vec_id"), col("c_e").as("embedding"))
   }
 
-  /** OFFLINE recenter/rebuild of an unversioned root — the consumer of
-    * the drift diagnostics (v18's needs_split, [[pqDriftAudit]],
-    * [[rebuildAdvisor]]): re-derive every tier's geometry from the
-    * [[aliveCorpus]], re-encode every vector into `_rebuilding/`, then
-    * [[swapAside]] each directory in. Tombstoned rows are dropped as a
-    * side effect.
+  /** OFFLINE recenter/rebuild into version N+1 — the consumer of the
+    * drift diagnostics (v18's needs_split, [[pqDriftAudit]],
+    * [[rebuildAdvisor]]): derive the [[aliveCorpus]] of the CURRENT
+    * version (its own raw postings, or the source-of-truth `corpus` — the
+    * only source a lossy codes-only root has; tombstones honored either
+    * way, so a deleted id never resurrects), run the ordinary fresh build
+    * of the same tier layout into `roots/v{N+1}`, publish. Tombstoned rows
+    * are gone from the new version by construction. Returns the new
+    * version directory.
     *
-    * Contract (v43's oracle pins it): after rebuild the index is
-    * BIT-INDISTINGUISHABLE from one freshly built on the current corpus —
-    * same centroid rule, same assignment, same serving results — so
-    * recall can only move toward the fresh-index recall, never below it
-    * (VectorOpsSpec gates non-regression under planted cluster drift).
+    * Contract (v43's oracle pins it): the new version is
+    * BIT-INDISTINGUISHABLE from an index freshly built on the current
+    * corpus — same centroid rule, same assignment, same serving results —
+    * so recall can only move toward the fresh-index recall, never below it
+    * (VectorOpsSpec gates non-regression under planted cluster drift). The
+    * current version is never touched: a search running concurrently
+    * serves fully-old results, the next request fully-new, never mixed
+    * geometry.
     *
-    * The directory swaps are individually crash-safe, but a query racing
-    * BETWEEN them sees mixed geometry: old centroids probing NEW cell
-    * directories (valid exact scores over whatever it scanned, recall
-    * may shift). The versioned-root layout ([[rebuildVersionedVecIndex]])
-    * closes this window structurally; here production serializes
-    * rebuilds behind the scheduler that triggers them. A CRASH between
-    * swaps leaves mixed geometry durably, and the standard retry repairs
-    * it completely, because the rebuild derives everything from the
-    * alive data, which every mixed state preserves in full.
+    * SINGLE-WRITER: the rebuild claims an exclusive lease on v{N+1} before
+    * touching roots/ — a concurrent rebuild (a second maintenance job, or
+    * a retry racing its zombie) fails loudly instead of interleaving tier
+    * overwrites inside the same unpublished directory. A lease left by a
+    * crashed writer expires after `leaseTtlMs` and the retry takes over.
+    * `stageKey` is honored only for an external corpus no tombstones
+    * filtered — anything else depends on mutable root state, which
+    * staging keys must never encode, so the staged route switches itself
+    * off rather than trusting the caller.
     */
-  def rebuildVecIndex(s: SparkSession, path: String,
-      corpus: Option[DataFrame] = None): Unit = {
-    val tiers = requireLayout(s, path, "rebuildVecIndex")
-    val stage = s"$path/_rebuilding"
-    remove(s, stage)
-    buildTiers(aliveCorpus(s, path, tiers, corpus), stage, tiers)
-    tiers.flatMap(_.dirs).distinct.foreach(d => swapAside(s, s"$stage/$d", s"$path/$d"))
-    Seq(stage, s"$path/tombstones").foreach(remove(s, _))
-    noteMutation(path)
+  def rebuildVecIndex(s: SparkSession, root: String,
+      corpus: Option[DataFrame] = None,
+      leaseTtlMs: Long = VersionedStore.DefaultLeaseTtlMs,
+      stageKey: Option[String] = None): String = {
+    val cur = resolveVecIndexRoot(s, root)
+    val tiers = requireLayout(s, cur, "rebuildVecIndex")
+    val alive = aliveCorpus(s, cur, tiers, corpus)
+    val key = stageKey.filter(_ =>
+      corpus.isDefined && !exists(s, s"$cur/tombstones"))
+    VersionedStore.buildNext(s, root, leaseTtlMs)(
+      buildVersion(alive, _, tiers, key))
   }
 
   /** Frozen index geometry (centroid tables, codebooks) as driver arrays,
     * one entry per geometry directory, stamped with the directory's
     * [[listingOf]]. Geometry is written once per build and never touched
-    * by appends or deletes; every rewrite ([[swapAside]], an overwrite, a
-    * rebuild in another process) replaces the part files, whose names
-    * carry a per-write UUID, so a stale stamp cannot match. Bounded by
+    * by appends or deletes; a directory rewritten in place anyway (an
+    * overwrite, a rename by another process) gets new part files, whose
+    * names carry a per-write UUID, so a stale stamp cannot match. Bounded by
     * [[DriverCacheEntries]] like the serving layer's caches.
     */
   private val geometry = scala.collection.concurrent.TrieMap
@@ -2981,8 +2973,7 @@ object VectorOps {
     * misses at the next call. A missing directory is never cached — the
     * loader raises its usual error.
     */
-  private def cachedGeometry[T <: AnyRef](s: SparkSession, dir: String)(load: => T): T = {
-    recoverAside(s, dir)
+  private def cachedGeometry[T <: AnyRef](s: SparkSession, dir: String)(load: => T): T =
     listingOf(s, dir) match {
       case None => load
       case Some(stamp) => geometry.get(dir) match {
@@ -2994,7 +2985,6 @@ object VectorOps {
           fresh
       }
     }
-  }
 
   /** The K-row centroid table as a driver array — tiny by contract, and
     * cached per `centroids/` directory (see [[geometry]]): a warm call
@@ -3002,7 +2992,7 @@ object VectorOps {
     * encoder or serving layer asks. Callers share the arrays and must not
     * mutate them.
     */
-  def loadIvfCentroids(s: SparkSession, path: String): Array[(Long, Array[Double])] =
+  private[graft] def loadIvfCentroids(s: SparkSession, path: String): Array[(Long, Array[Double])] =
     cachedGeometry(s, s"$path/centroids") {
       import s.implicits._
       centroidRows(s, path).as[(Long, Seq[Double])]
@@ -3012,7 +3002,7 @@ object VectorOps {
   /** The PqKs-row codebook as a driver array in codeword order — cached
     * per `codebook/` directory exactly like [[loadIvfCentroids]].
     */
-  def loadPqCodebook(s: SparkSession, path: String): Array[Array[Double]] =
+  private[graft] def loadPqCodebook(s: SparkSession, path: String): Array[Array[Double]] =
     cachedGeometry(s, s"$path/codebook") {
       import s.implicits._
       s.read.schema(CodebookSchema).parquet(s"$path/codebook")
@@ -3050,6 +3040,9 @@ object VectorOps {
     *   - `"auto"`   — the route the root's layout supports best: rerank
     *                  when both flat tiers exist, otherwise the one tier.
     *
+    * The pointer is resolved ONCE, here: the returned plan reads only the
+    * version current at this call, so a compaction or rebuild publishing
+    * a successor before it executes cannot reshape or vanish its files.
     * Each route is its planned variant fed the query batch this call
     * collects and the cached geometry ([[loadIvfCentroids]],
     * [[loadPqCodebook]]); every data and tombstone read passes its
@@ -3060,8 +3053,17 @@ object VectorOps {
     * (serve_vec_search / _pq / _rerank, v44) with a recall eval next to
     * them (serve_vec_recall).
     */
-  def searchVecIndex(s: SparkSession, path: String, queries: DataFrame,
+  def searchVecIndex(s: SparkSession, root: String, queries: DataFrame,
       k: Int, probes: Int = 2, tier: String = "auto",
+      rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame =
+    searchPinned(s, resolveVecIndexRoot(s, root), queries, k, probes, tier,
+      rerankCandidates, excludeSelf)
+
+  /** [[searchVecIndex]] over an already-resolved version directory `path`
+    * — the seam a serving layer that pins the version itself calls.
+    */
+  private[graft] def searchPinned(s: SparkSession, path: String,
+      queries: DataFrame, k: Int, probes: Int, tier: String,
       rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame = {
     graft.plans.GraftExtensions.register(s)
     val tiers = layoutOf(s, path)
@@ -3105,7 +3107,7 @@ object VectorOps {
     * the PartitionFilters). The probed rows re-enter the plan as a
     * broadcast local relation.
     */
-  def searchIvfIndexPlanned(s: SparkSession, path: String,
+  private[graft] def searchIvfIndexPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cents: Array[(Long, Array[Double])],
       k: Int, probes: Int = 2, excludeSelf: Boolean = true,
       postings: Option[DataFrame] = None,
@@ -3193,7 +3195,7 @@ object VectorOps {
     * stage 2 as a broadcast local relation — same doubles [[withNorm]]
     * would produce.
     */
-  def searchRerankPlanned(s: SparkSession, path: String,
+  private[graft] def searchRerankPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cb: Array[Array[Double]],
       k: Int, rerankCandidates: Int = 32, excludeSelf: Boolean = true,
       codes: Option[DataFrame] = None,
@@ -3225,7 +3227,7 @@ object VectorOps {
     * no float vectors, no shuffle before the per-query top-k; one
     * code-scan Spark job per poll, bit-identical to the in-memory v8 path.
     */
-  def searchPqIndexPlanned(s: SparkSession, path: String,
+  private[graft] def searchPqIndexPlanned(s: SparkSession, path: String,
       qs: Array[(Long, Array[Double])], cb: Array[Array[Double]],
       k: Int, excludeSelf: Boolean = true,
       codes: Option[DataFrame] = None,
@@ -3428,8 +3430,12 @@ object VectorOps {
     * expression in both engines (sum/n/1e9 then subtract), so the flag is
     * cross-engine exact.
     */
-  def pqDriftAudit(s: SparkSession, path: String, corpus: DataFrame,
-      margin: Double = 0.05): DataFrame = {
+  def pqDriftAudit(s: SparkSession, root: String, corpus: DataFrame,
+      margin: Double = 0.05): DataFrame =
+    driftAuditAt(s, resolveVecIndexRoot(s, root), corpus, margin)
+
+  private def driftAuditAt(s: SparkSession, path: String, corpus: DataFrame,
+      margin: Double): DataFrame = {
     val build = s.read.parquet(s"$path/stats")
       .select(col("n").as("build_n"), col("sum_q").as("bs"))
     val cur = pqReconStats(s, path, corpus)
@@ -3472,27 +3478,24 @@ object VectorOps {
   private def stageKeyOf(d: String, tiers: String, slice: String): String =
     s"$tiers:$slice:${stagedEmbIdent(d)}"
 
-  /** A private copy of the staged `tiers` index over `slice`, at a fresh
-    * scratch root `name_<uuid>`.
+  /** A fresh index root at `name_<uuid>` whose v1 is a private copy of
+    * the staged `tiers` index over `slice`.
     */
   private def stagedIndex(s: SparkSession, d: String, name: String,
       tiers: String, slice: String): String = {
-    val path = scratchRoot(name)
-    graft.core.SessionStaging.into(s, stageKeyOf(d, tiers, slice), path)(
-      buildVecIndex(Tables.embeddings(s, d).filter(slices(slice)), _, tiers))
-    path
+    val root = scratchRoot(name)
+    buildVecIndex(Tables.embeddings(s, d).filter(slices(slice)), root, tiers,
+      stageKey = Some(stageKeyOf(d, tiers, slice)))
+    root
   }
 
-  /** A fresh versioned root: v1 = the staged `tiers` build over the 90%
+  /** A fresh index root: v1 = the staged `tiers` build over the 90%
     * slice, then the other 10% appended against v1's frozen geometry.
     */
-  private def grownVersionedRoot(s: SparkSession, d: String, name: String,
+  private def grownRoot(s: SparkSession, d: String, name: String,
       tiers: String): String = {
-    val root = scratchRoot(name)
-    val emb = Tables.embeddings(s, d)
-    initVersionedVecIndex(emb.filter(slices("sub90")), root, tiers,
-      stageKey = Some(stageKeyOf(d, tiers, "sub90")))
-    appendToVersionedVecIndex(emb.filter(col("vec_id") % 10 === 0), root)
+    val root = stagedIndex(s, d, name, tiers, "sub90")
+    appendToVecIndex(Tables.embeddings(s, d).filter(col("vec_id") % 10 === 0), root)
     root
   }
 
@@ -3597,8 +3600,8 @@ object VectorOps {
            |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc ASC, neighbor_id) <= 3""".stripMargin))
 
   /** V41 (beyond reference): right-to-be-forgotten on the PQ tier —
-    * tombstone every 7th vector, COMPACT (rewrite-and-swap minus
-    * tombstones, crash-safe), then serve: deleted codes are gone from
+    * tombstone every 7th vector, COMPACT (the rewrite minus tombstones,
+    * published as version 2), then serve: deleted codes are gone from
     * storage, results identical to serving through the tombstone
     * anti-join (VectorOpsSpec pins pre == post). The codebook, like v38's
     * centroids, is geometry — deleting a codebook-source vector does not
@@ -3652,8 +3655,7 @@ object VectorOps {
     "v42_pq_drift_audit",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val path = stagedIndex(s, d, "v42_pqidx", "pq", "sub90")
-      appendToVecIndex(emb.filter(col("vec_id") % 10 === 0), path)
+      val path = grownRoot(s, d, "v42_pqidx", "pq")
       pqDriftAudit(s, path, emb)
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -3688,7 +3690,7 @@ object VectorOps {
   /** V43 (beyond reference): the offline RECENTER consuming v18's signal
     * — build on "yesterday's" corpus, append "today's" batch against the
     * frozen geometry (occupancy drifts; v18 reports it), then
-    * [[rebuildVecIndex]]: the index must come out BIT-INDISTINGUISHABLE
+    * [[rebuildVecIndex]]: version 2 must come out BIT-INDISTINGUISHABLE
     * from a fresh build on the current corpus, which is why v2's oracle
     * (fresh-index search over the full table) gates it verbatim.
     */
@@ -3696,8 +3698,7 @@ object VectorOps {
     "v43_ivf_rebuild",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val path = stagedIndex(s, d, "v43_index", "ivf", "sub90")
-      appendToVecIndex(emb.filter(col("vec_id") % 10 === 0), path)
+      val path = grownRoot(s, d, "v43_index", "ivf")
       rebuildVecIndex(s, path)
       searchVecIndex(s, path, emb.filter(col("vec_id") < 10), k = 3, tier = "ivf")
     },
@@ -3791,7 +3792,7 @@ object VectorOps {
     Some(ivfPqOracle(Some("vec_id % 3 != 0"), None)))
 
   /** V46 (beyond reference): right-to-be-forgotten on the residual tier
-    * — tombstone every 7th vector, compact (crash-safe swap of the
+    * — tombstone every 7th vector, compact (version 2 rewrites the
     * cluster-partitioned codes), serve. The oracle replays the
     * full-corpus geometry with the deleted rows absent from the codes.
     */
@@ -3808,68 +3809,59 @@ object VectorOps {
 
   // ---------------------------------------------------- versioned roots
 
-  /* Versioned index layout — the structural close of the rebuild race
-    * [[rebuildVecIndex]] documents (and handles only by offline policy).
-    * The manifest/roots mechanics (atomic pointer publish, numeric
-    * resolution, single-writer claims, grace-window vacuum) live in
-    * [[graft.core.VersionedStore]], shared with the BM25 serving snapshot;
-    * this section binds them to the index tiers:
+  /* Every index root is a versioned root. The manifest/roots mechanics
+    * (atomic pointer publish, numeric resolution, single-writer claims,
+    * grace-window vacuum) live in [[graft.core.VersionedStore]], shared
+    * with the BM25 serving snapshot and the [[graft.core.Snapshots]]
+    * tables; this section binds them to the index tiers:
     *
     * {{{
     *   $root/manifest/v00000001     <- pointer files, one per published
     *   $root/manifest/v00000002        version; readers take the max
     *   $root/roots/v00000001/...    <- each a complete, IMMUTABLE-geometry
-    *   $root/roots/v00000002/...       index root (centroids/postings/...)
+    *   $root/roots/v00000002/...       index (centroids/postings/...)
     * }}}
     *
-    * A reader resolves the pointer ONCE per request and pins that
-    * version's directory for its whole plan, so a rebuild or compaction
+    * Every public verb takes the root and resolves the pointer ONCE; the
+    * tier code below it works on that pinned version directory. A reader
+    * pins the version for its whole plan, so a rebuild or compaction
     * publishing v{N+1} mid-query cannot reshape or vanish the files the
     * plan reads: concurrent searches return fully-old or fully-new
     * results, never empty and never mixed-geometry. Only appends and
     * tombstones land inside a published version (new files, none
-    * removed); every rewrite goes through a new version — [[swapAside]]
-    * serves unversioned roots only. Old versions are reclaimed AFTER a
-    * grace window by [[vacuumVecIndexVersions]] — the s32 retention
-    * discipline: in-flight readers pinned to the previous version stay
-    * valid until the vacuum horizon passes them.
+    * removed); every rewrite — [[compactVecIndex]], [[rebuildVecIndex]] —
+    * publishes a new version. Old versions are reclaimed only by an
+    * explicit [[vacuumVecIndex]] AFTER a grace window — the s32
+    * retention discipline: in-flight readers pinned to the previous
+    * version stay valid until the vacuum horizon passes them.
     *
     * Scale: the manifest is O(versions) tiny files and one list call per
     * request; version roots share nothing, so a rebuild is the same
-    * one-scan job as [[rebuildVecIndex]] writing to a fresh directory —
-    * no serving-path cost moves at 100 TB.
+    * one-scan job as a first build writing to a fresh directory — no
+    * serving-path cost moves at 100 TB.
     */
-
-  /** Writers that crash mid-rebuild hold their version lease until this
-    * TTL passes; a successor rebuild then takes the lease over (see
-    * [[graft.core.VersionedStore.claim]]). Generous next to any real
-    * rebuild duration so a SLOW build is never mistaken for a dead one.
-    */
-  val DefaultRebuildLeaseMs: Long = 15L * 60 * 1000
 
   /** Highest published version under `$root/manifest`, if any. */
   def currentVecIndexVersion(s: SparkSession, root: String): Option[Long] =
-    graft.core.VersionedStore.currentVersion(s, root)
+    VersionedStore.currentVersion(s, root)
 
   /** The pinned directory of the current version — resolve ONCE per
     * request; every read of the returned path is immune to later flips.
     * Fails when `root` has no published version.
     */
   def resolveVecIndexRoot(s: SparkSession, root: String): String =
-    graft.core.VersionedStore.resolve(s, root)
+    VersionedStore.resolve(s, root)
 
   // ------------------------------------------------------ mutation epochs
 
-  /** In-JVM mutation counter per index directory, bumped by every verb
-    * that changes files INSIDE an existing directory — the bump lives in
-    * the unversioned verbs, so both the versioned wrappers and a direct
-    * unversioned call on a served directory re-key. Serving layers that
+  /** In-JVM mutation counter per version directory, bumped by the two
+    * verbs that change files INSIDE a published version
+    * ([[appendToVecIndex]], [[deleteFromVecIndex]]). Serving layers that
     * cache resolved relations or constructed plans fold
     * [[mutationEpochOf]] into their cache keys, so a same-process
-    * mutation through any entry point invalidates them — closing the gap
-    * where "immutable once built" roots are in fact appended to or
-    * compacted by maintenance code in the same JVM (cross-process
-    * mutations are covered by the versioned flip re-keying the path
+    * mutation invalidates them — closing the gap where "immutable once
+    * built" versions are in fact appended to by maintenance code in the
+    * same JVM (rewrites publish a new version, which re-keys the path
     * itself). Reads cost one TrieMap lookup.
     */
   private val mutationEpochs =
@@ -3907,110 +3899,6 @@ object VectorOps {
     }
   }
 
-  /** Create a versioned index at `root`: build version 1 under
-    * `roots/v00000001`, then publish the pointer. A crash before publish
-    * leaves only unpublished debris (readers see "no version"); the retry
-    * rebuilds over it. First-build is single-writer like every other
-    * version: the claim makes a cross-process double-init (two pollers
-    * cold-starting the same scratch root) build once — the loser waits
-    * for the winner's publish instead of interleaving writes under the
-    * same roots/v1. `stageKey` as on [[buildVersion]].
-    */
-  def initVersionedVecIndex(corpus: DataFrame, root: String,
-      tiers: String = "ivf",
-      leaseTtlMs: Long = DefaultRebuildLeaseMs,
-      stageKey: Option[String] = None): String = {
-    val ts = tiersNamed(tiers)
-    graft.core.VersionedStore.init(corpus.sparkSession, root, leaseTtlMs)(
-      buildVersion(corpus, _, ts, stageKey))
-  }
-
-  /** Rebuild into version N+1 and flip the pointer — [[rebuildVecIndex]]'s
-    * build, published instead of swapped: derive the [[aliveCorpus]] of
-    * the CURRENT version (its own raw postings, or the source-of-truth
-    * `corpus` — the only source a lossy codes-only root has; tombstones
-    * honored either way, so a deleted id never resurrects), run the
-    * ordinary fresh build of the same tier layout into `roots/v{N+1}`,
-    * publish. The current version is never touched, so a search running
-    * concurrently serves fully-old results; the publish is atomic, so the
-    * next request serves fully-new. Tombstoned rows are gone from the new
-    * version by construction. Returns the new version directory.
-    *
-    * SINGLE-WRITER: the rebuild claims an exclusive lease on v{N+1} before
-    * touching roots/ — a concurrent rebuild (a second maintenance job, or
-    * a retry racing its zombie) fails loudly instead of interleaving tier
-    * overwrites inside the same unpublished directory. A lease left by a
-    * crashed writer expires after `leaseTtlMs` and the retry takes over.
-    * `stageKey` is honored only for an external corpus no tombstones
-    * filtered — anything else depends on mutable root state, which
-    * staging keys must never encode, so the staged route switches itself
-    * off rather than trusting the caller.
-    */
-  def rebuildVersionedVecIndex(s: SparkSession, root: String,
-      corpus: Option[DataFrame] = None,
-      leaseTtlMs: Long = DefaultRebuildLeaseMs,
-      stageKey: Option[String] = None): String = {
-    val cur = resolveVecIndexRoot(s, root)
-    val tiers = requireLayout(s, cur, "rebuildVersionedVecIndex")
-    val alive = aliveCorpus(s, cur, tiers, corpus)
-    val key = stageKey.filter(_ =>
-      corpus.isDefined && !exists(s, s"$cur/tombstones"))
-    graft.core.VersionedStore.buildNext(s, root, leaseTtlMs)(
-      buildVersion(alive, _, tiers, key))
-  }
-
-  /** Serve through the versioned pointer: resolve once, then route via
-    * [[searchVecIndex]] against the pinned version directory.
-    */
-  def searchVersionedVecIndex(s: SparkSession, root: String,
-      queries: DataFrame, k: Int, probes: Int = 2, tier: String = "auto",
-      rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame =
-    searchVecIndex(s, resolveVecIndexRoot(s, root), queries, k, probes,
-      tier, rerankCandidates, excludeSelf)
-
-  /** Append to the CURRENT version's tiers ([[appendToVecIndex]]: per-row,
-    * frozen geometry — new files only, so pinned readers are unaffected).
-    */
-  def appendToVersionedVecIndex(batch: DataFrame, root: String): Unit =
-    appendToVecIndex(batch, resolveVecIndexRoot(batch.sparkSession, root))
-
-  /** Tombstone in the current version ([[deleteFromVecIndex]]); a later
-    * compaction or rebuild drops the rows physically in the successor
-    * version.
-    */
-  def deleteFromVersionedVecIndex(s: SparkSession, root: String,
-      ids: DataFrame): Unit =
-    deleteFromVecIndex(s, resolveVecIndexRoot(s, root), ids)
-
-  /** Compact by publishing v{N+1}: the current version's geometry
-    * directories are byte-copied and each tier's data is rewritten via
-    * [[compacted]] — the same rows [[compactVecIndex]] keeps — under the
-    * single-writer lease. The pinned version is never rewritten, so a
-    * search resolved before the compaction still reads its files (an
-    * in-place swap would pull them from under it), and results after the
-    * flip are identical. No tombstones = nothing to reclaim = no new
-    * version.
-    */
-  def compactVersionedVecIndex(s: SparkSession, root: String): Unit = {
-    val cur = resolveVecIndexRoot(s, root)
-    if (!exists(s, s"$cur/tombstones")) return
-    val tiers = requireLayout(s, cur, "compactVersionedVecIndex")
-    graft.core.VersionedStore.buildNext(s, root, DefaultRebuildLeaseMs) { dir =>
-      val fs = fsOf(s, dir)
-      remove(s, dir)
-      tiers.flatMap(_.dirs).distinct.filterNot(d => tiers.exists(_.data == d))
-        .foreach { d =>
-          require(org.apache.hadoop.fs.FileUtil.copy(
-              fs, new org.apache.hadoop.fs.Path(s"$cur/$d"),
-              fs, new org.apache.hadoop.fs.Path(s"$dir/$d"),
-              false, true, s.sparkContext.hadoopConfiguration),
-            s"compactVersionedVecIndex: copy of $cur/$d failed")
-        }
-      tiers.foreach(t => t.write(compacted(s, cur, t), s"$dir/${t.data}", "overwrite"))
-    }
-    (): Unit
-  }
-
   /** Reclaim versions older than the newest `keepLast` (grace window for
     * in-flight readers pinned to a predecessor — keepLast >= 2 keeps the
     * immediate fallback alive), optionally never touching a version
@@ -4020,9 +3908,9 @@ object VectorOps {
     * holds. Mechanics in [[graft.core.VersionedStore.vacuum]]. Returns
     * the removed version numbers.
     */
-  def vacuumVecIndexVersions(s: SparkSession, root: String,
+  def vacuumVecIndex(s: SparkSession, root: String,
       keepLast: Int = 2, minAgeMs: Long = 0L): Seq[Long] =
-    graft.core.VersionedStore.vacuum(s, root, keepLast, minAgeMs)
+    VersionedStore.vacuum(s, root, keepLast, minAgeMs)
 
   /** Drift-to-ACTION policy over a persisted index root — the decision
     * layer the measuring diagnostics (v18 occupancy, v42 codebook drift)
@@ -4047,16 +3935,20 @@ object VectorOps {
     *     (value = round(sum(psi_term) x 1e9), threshold = psiMargin x
     *     1e9; 0.2 is the standard "significant shift" PSI rule).
     *
-    * Consumed by [[rebuildVersionedIfAdvised]] — advisor says retrain,
-    * the versioned rebuild publishes the successor. Scale: occupancy is
+    * Consumed by [[rebuildVecIndexIfAdvised]] — advisor says retrain,
+    * the rebuild publishes the successor version. Scale: occupancy is
     * one cluster-keyed count over the data (map-side combinable, K rows
     * out); the pq row re-scans codes once (the v42 cost); the embedding
     * row reduces the signature store to 2^bits cells — all off the
     * serving path.
     */
-  def rebuildAdvisor(s: SparkSession, path: String,
+  def rebuildAdvisor(s: SparkSession, root: String,
       margin: Double = 0.05, sigStore: Option[String] = None,
-      psiMargin: Double = 0.2): DataFrame = {
+      psiMargin: Double = 0.2): DataFrame =
+    adviseAt(s, resolveVecIndexRoot(s, root), margin, sigStore, psiMargin)
+
+  private def adviseAt(s: SparkSession, path: String, margin: Double,
+      sigStore: Option[String], psiMargin: Double): DataFrame = {
     graft.plans.GraftExtensions.register(s)
     val tiers = layoutOf(s, path)
     val cells = tiers.find(_.partitioned).getOrElse(sys.error(
@@ -4081,7 +3973,7 @@ object VectorOps {
     val tiersOut =
       if (!tiers.contains(PqTier)) ivfRow
       else {
-        val pqRow = pqDriftAudit(s, path, aliveCorpus(s, path, tiers, None), margin)
+        val pqRow = driftAuditAt(s, path, aliveCorpus(s, path, tiers, None), margin)
           .select(lit("pq").as("tier"), lit("codebook_drift_x1e9").as("metric"),
             floor(col("drift") * 1e9 + 0.5).cast("long").as("value"),
             lit(math.round(margin * 1e9)).as("threshold"),
@@ -4114,25 +4006,25 @@ object VectorOps {
     }
   }
 
-  /** Advisor-gated versioned rebuild: publish a successor version only
-    * when some tier's verdict is `retrain`; returns the new version
-    * directory when it acted. The measured diagnostics now DECIDE. A root
-    * with raw postings retrains from its own alive vectors; a lossy
-    * codes-only root only from the source-of-truth `corpus` — omitting
-    * it there fails loudly BEFORE any rebuild starts, naming the fix.
+  /** Advisor-gated rebuild: publish a successor version only when some
+    * tier's verdict is `retrain`; returns the new version directory when
+    * it acted. The measured diagnostics now DECIDE. A root with raw
+    * postings retrains from its own alive vectors; a lossy codes-only root
+    * only from the source-of-truth `corpus` — omitting it there fails
+    * loudly BEFORE any rebuild starts, naming the fix.
     */
-  def rebuildVersionedIfAdvised(s: SparkSession, root: String,
+  def rebuildVecIndexIfAdvised(s: SparkSession, root: String,
       margin: Double = 0.05,
       corpus: Option[DataFrame] = None,
       sigStore: Option[String] = None,
       psiMargin: Double = 0.2): Option[String] = {
     val cur = resolveVecIndexRoot(s, root)
-    val verdicts = rebuildAdvisor(s, cur, margin, sigStore, psiMargin)
+    val verdicts = adviseAt(s, cur, margin, sigStore, psiMargin)
       .select("verdict").collect().map(_.getString(0))
     if (!verdicts.contains("retrain")) None
     else {
       val lossy = !layoutOf(s, cur).contains(IvfTier)
-      Some(rebuildVersionedVecIndex(s, root, corpus.filter(_ => lossy)))
+      Some(rebuildVecIndex(s, root, corpus.filter(_ => lossy)))
     }
   }
 
@@ -4143,12 +4035,7 @@ object VectorOps {
     */
   val v49: GraftQuery = GraftQuery(
     "v49_rebuild_advisor",
-    (s, d) => {
-      val emb = Tables.embeddings(s, d)
-      val path = stagedIndex(s, d, "v49_advidx", "ivf", "sub90")
-      appendToVecIndex(emb.filter(col("vec_id") % 10 === 0), path)
-      rebuildAdvisor(s, path)
-    },
+    (s, d) => rebuildAdvisor(s, grownRoot(s, d, "v49_advidx", "ivf")),
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
            |base AS (SELECT * FROM v WHERE vec_id % 10 != 0),
            |cents AS (SELECT vec_id AS k_id, e AS ke FROM base
@@ -4178,12 +4065,12 @@ object VectorOps {
     "v47_versioned_pinned_read",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val root = grownVersionedRoot(s, d, "v47_vroot", "ivf")
+      val root = grownRoot(s, d, "v47_vroot", "ivf")
       // the concurrent reader: pointer resolved NOW (v1)...
-      val pinned = searchVersionedVecIndex(s, root,
+      val pinned = searchVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2, tier = "ivf")
       // ...rebuild publishes v2 before the read executes
-      rebuildVersionedVecIndex(s, root)
+      rebuildVecIndex(s, root)
       pinned
     },
     Some("""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -4214,18 +4101,18 @@ object VectorOps {
     "v48_versioned_flip_vacuum",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val root = grownVersionedRoot(s, d, "v48_vroot", "ivf")
-      rebuildVersionedVecIndex(s, root)
-      val removed = vacuumVecIndexVersions(s, root, keepLast = 1)
+      val root = grownRoot(s, d, "v48_vroot", "ivf")
+      rebuildVecIndex(s, root)
+      val removed = vacuumVecIndex(s, root, keepLast = 1)
       require(removed == Seq(1L), s"vacuum must reclaim exactly v1, got $removed")
-      searchVersionedVecIndex(s, root,
+      searchVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2, tier = "ivf")
     },
     v2.oracle)
 
   /** V50 (beyond reference): the versioned RESIDUAL root's retrain path —
     * codes are lossy, so the rebuild retrains from the source-of-truth
-    * corpus ([[rebuildVersionedVecIndex]] with `corpus`, the FAISS posture) behind
+    * corpus ([[rebuildVecIndex]] with `corpus`, the FAISS posture) behind
     * the same atomic pointer flip. After init-on-subset, append, and
     * retrain-from-source, serving equals a fresh residual build on the
     * full corpus — v44's oracle verbatim.
@@ -4234,13 +4121,13 @@ object VectorOps {
     "v50_versioned_ivfpq_retrain",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val root = grownVersionedRoot(s, d, "v50_vroot", "ivfpq")
+      val root = grownRoot(s, d, "v50_vroot", "ivfpq")
       // the retrain kernel is the ivfpq build over the FULL external
       // corpus (no tombstones here) — the exact artifact v44/v46 stage,
       // so the staged route reuses it; the lease/publish stays live
-      rebuildVersionedVecIndex(s, root, corpus = Some(emb),
+      rebuildVecIndex(s, root, corpus = Some(emb),
         stageKey = Some(stageKeyOf(d, "ivfpq", "full")))
-      searchVersionedVecIndex(s, root,
+      searchVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2)
     },
     v44.oracle)
@@ -4248,7 +4135,7 @@ object VectorOps {
   /** V51 (beyond reference): SINGLE-WRITER rebuild discipline — while a
     * writer holds the build lease on v2 (here: a simulated in-flight
     * rebuild that then crashes without releasing), a concurrent
-    * [[rebuildVersionedVecIndex]] must refuse loudly rather than
+    * [[rebuildVecIndex]] must refuse loudly rather than
     * interleave tier overwrites inside the same unpublished roots/v2; the
     * crashed lease is then TAKEN OVER once expired, and exactly one v2 is
     * published. The served result equals a fresh build on the full corpus
@@ -4258,13 +4145,13 @@ object VectorOps {
     "v51_rebuild_lease_takeover",
     (s, d) => {
       val emb = Tables.embeddings(s, d)
-      val root = grownVersionedRoot(s, d, "v51_vroot", "ivf")
+      val root = grownRoot(s, d, "v51_vroot", "ivf")
       // writer A claims v2 and "crashes" (never builds, never releases)
-      require(graft.core.VersionedStore.claim(s, root, 2L,
+      require(VersionedStore.claim(s, root, 2L,
         ttlMs = 60L * 60 * 1000), "test setup: claim on v2 must succeed")
       // writer B races A's live lease: must refuse, must not publish
       val denied =
-        try { rebuildVersionedVecIndex(s, root); false }
+        try { rebuildVecIndex(s, root); false }
         catch { case e: IllegalArgumentException =>
           e.getMessage.contains("build lease") }
       require(denied, "a concurrent rebuild must be refused by a live lease")
@@ -4272,11 +4159,11 @@ object VectorOps {
         "a denied rebuild must not publish")
       // A's lease is now stale (ttl 0): the retry takes it over and is
       // the ONE writer of v2
-      val nextDir = rebuildVersionedVecIndex(s, root, leaseTtlMs = 0L)
-      require(nextDir.endsWith(graft.core.VersionedStore.versionName(2L)) &&
+      val nextDir = rebuildVecIndex(s, root, leaseTtlMs = 0L)
+      require(nextDir.endsWith(VersionedStore.versionName(2L)) &&
         currentVecIndexVersion(s, root) == Some(2L),
         "takeover must publish exactly v2")
-      searchVersionedVecIndex(s, root,
+      searchVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2, tier = "ivf")
     },
     v2.oracle,

@@ -198,7 +198,7 @@ object QueryService {
     * fingerprint, never mutable state.
     */
   def initVersionedDocIndex(docs: DataFrame, root: String,
-      leaseTtlMs: Long = graft.operators.VectorOps.DefaultRebuildLeaseMs,
+      leaseTtlMs: Long = graft.core.VersionedStore.DefaultLeaseTtlMs,
       stageKey: Option[String] = None): String =
     graft.core.VersionedStore.init(docs.sparkSession, root, leaseTtlMs)(
       dir => stageKey match {
@@ -215,7 +215,7 @@ object QueryService {
     * [[initVersionedDocIndex]].
     */
   def rematerializeDocIndex(s: SparkSession, root: String, docs: DataFrame,
-      leaseTtlMs: Long = graft.operators.VectorOps.DefaultRebuildLeaseMs,
+      leaseTtlMs: Long = graft.core.VersionedStore.DefaultLeaseTtlMs,
       stageKey: Option[String] = None): String =
     graft.core.VersionedStore.buildNext(s, root, leaseTtlMs)(
       dir => stageKey match {
@@ -380,8 +380,7 @@ object QueryService {
     // overwrite each other's in-flight build of the same version dir)
     root.intern.synchronized {
       if (V.currentVecIndexVersion(s, root).isEmpty)
-        V.initVersionedVecIndex(
-          graft.core.Tables.embeddings(s, d), root, tiers = "both")
+        V.buildVecIndex(graft.core.Tables.embeddings(s, d), root, tiers = "both")
     }
     V.resolveVecIndexRoot(s, root)
   }
@@ -398,11 +397,11 @@ object QueryService {
       sigStore: Option[String] = None,
       psiMargin: Double = 0.2): Option[String] = {
     val root = serveRootOf(d)
-    val acted = graft.operators.VectorOps.rebuildVersionedIfAdvised(
+    val acted = graft.operators.VectorOps.rebuildVecIndexIfAdvised(
       s, root, margin, corpus = Some(graft.core.Tables.embeddings(s, d)),
       sigStore = sigStore, psiMargin = psiMargin)
     acted.foreach { _ =>
-      graft.operators.VectorOps.vacuumVecIndexVersions(s, root,
+      graft.operators.VectorOps.vacuumVecIndex(s, root,
         keepLast = 2, minAgeMs = vacuumGraceMs)
       ()
     }
@@ -447,21 +446,21 @@ object QueryService {
     scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[(Long, Double)]]
   // resolved base relations (file listing + footer schema live inside the
   // DataFrame) — reusable per poll because version directories are
-  // immutable under SERVING; the maintenance entry points that do mutate
-  // one in place (versioned append/delete) bump the directory's
-  // mutation epoch, which [[epoched]] folds into every relation and plan
-  // key, so a same-JVM mutation re-keys these caches instead of serving
-  // stale file listings (ADVICE r12)
+  // immutable under SERVING; the maintenance verbs that do change one in
+  // place (append/delete) bump the directory's mutation epoch, which
+  // [[epoched]] folds into every relation and plan key, so a same-JVM
+  // mutation re-keys these caches instead of serving stale file listings
+  // (ADVICE r12)
   private val servedRelations = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String), DataFrame]
 
   /** The cache-key form of an index version directory: the path plus its
     * in-JVM mutation epoch (see
     * [[graft.operators.VectorOps.mutationEpochOf]]). Cross-process
-    * mutations are covered by the versioned flip re-keying the path
-    * itself; tombstone visibility additionally gets the [[tombstoned]]
-    * bypass because deletes must land at the NEXT query even when issued
-    * through the unversioned entry points.
+    * rewrites are covered by the version flip re-keying the path itself;
+    * tombstone visibility additionally gets the [[tombstoned]] bypass
+    * because deletes land inside the current version and must show at the
+    * NEXT query even when another process issued them.
     */
   private def epoched(dir: String): String =
     s"$dir@${graft.operators.VectorOps.mutationEpochOf(dir)}"
@@ -514,7 +513,7 @@ object QueryService {
     * see deletes, but if one ever does (vecIndexRoot is visible inside
     * the package), bypass the cache so the delete contract — gone at
     * the NEXT query — holds. One File.exists per poll: every route reads
-    * the root's one tombstone table.
+    * the pinned version's one tombstone table.
     */
   private def tombstoned(path: String): Boolean =
     new java.io.File(s"$path/tombstones").exists()
@@ -546,7 +545,7 @@ object QueryService {
           postings = Some(relationOf(s, path, "postings")),
           compactForServe = true)
       case other =>
-        V.searchVecIndex(s, path,
+        V.searchPinned(s, path,
           graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 5),
           k = k, probes = 2, tier = other)
     }
@@ -565,7 +564,7 @@ object QueryService {
       .select("q_id", "neighbor_id")
     def recallOf(tier: String): DataFrame = {
       val r = graft.operators.VectorOps
-        .searchVecIndex(s, path, qs, k = 3, probes = 2, tier = tier)
+        .searchPinned(s, path, qs, k = 3, probes = 2, tier = tier)
         .select(col("q_id").as("iq"), col("neighbor_id").as("inb"))
       bf.join(r, bf("q_id") === col("iq") && bf("neighbor_id") === col("inb"),
           "left")

@@ -129,7 +129,7 @@ class BucketingSpec extends SparkSpec {
       (df.getDouble(0) / ckRange, df.getDouble(1) / dyRange)
     }
 
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val tmp = tempDir("graft-zorder")
     // same 16-bit min-max grid normalization as s19 — raw-value
     // interleave lets the wider-ranged dimension own every high z bit
     val st = base.agg(min("o_custkey").as("cmin"), max("o_custkey").as("cmax"),

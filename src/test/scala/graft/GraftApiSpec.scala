@@ -581,4 +581,30 @@ class GraftApiSpec extends SparkSpec {
       assert(r.getAs[Double]("lo") == lo && r.getAs[Double]("hi") == hi)
     }
   }
+
+  test("the ann* facade is one index lifecycle plus four earlier names, " +
+    "with no parallel plain/versioned family") {
+    val annMethods = Graft.getClass.getMethods.toSeq
+      .filter(m => m.getName.startsWith("ann") && !m.getName.contains("$"))
+    val search = Set("annBruteForceTopK", "annIvfTopK", "annRecallEval",
+      "annRankingEval", "annFilteredTopK", "annFilterSelectivity")
+    val lifecycle = Set("annBuildIndex", "annSearchIndex", "annAppendIndex",
+      "annDeleteFromIndex", "annCompactIndex", "annRebuildIndex",
+      "annVacuumIndex", "annRebuildIfAdvised", "annRebuildAdvisor",
+      "annPqDriftAudit")
+    // the names perfbench's serve workload calls, with those calls' shapes
+    val aliases = Map(
+      "annInitVersionedVecIndex" -> Seq("Dataset", "String", "String"),
+      "annSearchVersionedVecIndex" -> Seq("SparkSession", "String", "Dataset",
+        "int", "int", "String", "int", "boolean"),
+      "annAppendVersionedVecIndex" -> Seq("Dataset", "String"),
+      "annDeleteFromVersionedVecIndex" -> Seq("SparkSession", "String", "Dataset"))
+    assert(annMethods.map(_.getName).toSet === search ++ lifecycle ++ aliases.keySet)
+    assert(annMethods.size === annMethods.map(_.getName).distinct.size,
+      "an ann* member is overloaded")
+    for ((name, params) <- aliases) {
+      val m = annMethods.find(_.getName == name).get
+      assert(m.getParameterTypes.map(_.getSimpleName).toSeq === params, name)
+    }
+  }
 }

@@ -78,7 +78,7 @@ class GraftTourSpec extends SparkSpec {
   test("tour 5: bring-your-own schema — withContract adapts a foreign " +
     "parquet end-to-end through curate and forecast") {
     import SparkSpec.spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-byod").toString
+    val dir = tempDir("graft-byod")
 
     // a crawl table that looks nothing like the registry contract:
     // int page ids, 'body' text, per-site metadata
@@ -133,7 +133,7 @@ class GraftTourSpec extends SparkSpec {
     "delete, compact, serve") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val vid = col("vec_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft-tour-idx").toString
+    val dir = tempDir("graft-tour-idx")
     val path = s"$dir/idx"
     Graft.annBuildIndex(emb.filter(vid % 10 =!= 0), path)
     Graft.annAppendIndex(emb.filter(vid % 10 === 0), path)
@@ -168,7 +168,7 @@ class GraftTourSpec extends SparkSpec {
     "parity on both tiers, drift-triggered rebuild") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
     val vid = col("vec_id")
-    val dir = java.nio.file.Files.createTempDirectory("graft-tour-srv").toString
+    val dir = tempDir("graft-tour-srv")
     val path = s"$dir/idx"
     // one root, both tiers; the facade routes per query budget
     Graft.annBuildIndex(emb.filter(vid % 10 =!= 0), path, tiers = "both")
@@ -195,6 +195,11 @@ class GraftTourSpec extends SparkSpec {
     // the raw tier is indistinguishable from a fresh build
     Graft.annRebuildIndex(spark, path)
     assert(Graft.annSearchIndex(spark, path, qs, k = 3, tier = "ivf")
+      .select("q_id").distinct().count() == 5)
+    // compaction and rebuild each published a version; vacuum keeps the
+    // newest two and the current one still serves
+    assert(Graft.annVacuumIndex(spark, path) === Seq(1L))
+    assert(Graft.annSearchIndex(spark, path, qs, k = 3, tier = "rerank")
       .select("q_id").distinct().count() == 5)
     // the fused residual tier lives in its own root (cluster-partitioned
     // codes) — the facade's auto detection routes it without being told

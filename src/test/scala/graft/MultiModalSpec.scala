@@ -69,7 +69,7 @@ class MultiModalSpec extends SparkSpec {
       (1L, shared + blob(1024)),  // frames 0-3 shared, 4-7 unique
       (2L, shared + blob(1024)),  // same prefix, different tail
       (3L, blob(2048)))           // disjoint
-    val dir = java.nio.file.Files.createTempDirectory("graft-mm6").toString
+    val dir = tempDir("graft-mm6")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length($"text").cast("long"))

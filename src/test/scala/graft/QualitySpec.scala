@@ -61,11 +61,13 @@ class QualitySpec extends SparkSpec {
     val r2 = Quality.writeAuditPublish(spark, t, dirty, suite)
     assert(r2 == Quality.WapResult(1, published = false, 1))
     assert(Snapshots.versions(t) == Seq(1))
-    // rejected candidate fully cleaned up: only v1 remains on disk
-    val left = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft-scratch/snapshots/$t")
-      .listFiles().map(_.getName).toSeq
-    assert(left == Seq("v1"), s"unexpected residue: $left")
+    // rejected candidate fully cleaned up: only v1 remains on disk, and
+    // no build lease is left behind
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/snapshots/$t"
+    val left = new java.io.File(s"$root/roots").list().toSeq
+    assert(left == Seq("v00000001"), s"unexpected residue: $left")
+    val pointers = new java.io.File(s"$root/manifest").list().filterNot(_.startsWith(".")).toSeq
+    assert(pointers == Seq("v00000001"), s"unexpected manifest entries: $pointers")
     // visible data unchanged by the rejected write
     assert(Snapshots.latest(spark, t).count() == 2)
   }

@@ -68,7 +68,7 @@ class ServeSpec extends SparkSpec {
     val qs = emb.filter(col("vec_id") < 5)
     for (t <- Seq("ivf", "pq", "rerank")) {
       val viaFacade = graft.operators.VectorOps.searchVecIndex(
-        spark, QueryService.vecIndexRoot(spark, sf), qs, 3, 2, tier = t)
+        spark, QueryService.serveRootOf(sf), qs, 3, 2, tier = t)
       assert(ids(QueryService.vecSearch(spark, sf, tier = t)) === ids(viaFacade),
         s"cached $t route diverged from the facade route")
     }
@@ -80,7 +80,7 @@ class ServeSpec extends SparkSpec {
     // collects every call.
     val vecJobs = countJobs(QueryService.vecSearch(spark, sf).collect())
     val facadeJobs = countJobs(graft.operators.VectorOps.searchVecIndex(
-      spark, QueryService.vecIndexRoot(spark, sf), qs, 3, 2, tier = "ivf")
+      spark, QueryService.serveRootOf(sf), qs, 3, 2, tier = "ivf")
       .collect())
     System.err.println(s"[serve] warm ivf poll jobs=$vecJobs facade=$facadeJobs")
     assert(vecJobs < facadeJobs,
@@ -108,7 +108,7 @@ class ServeSpec extends SparkSpec {
     // flip must be invisible in results while the pointer advances
     val root = QueryService.serveRootOf(sf)
     val v2 = graft.operators.VectorOps
-      .rebuildVersionedVecIndex(spark, root, corpus = Some(emb))
+      .rebuildVecIndex(spark, root, corpus = Some(emb))
     assert(QueryService.vecIndexRoot(spark, sf) === v2)
     assert(v2 !== v1)
     assert(rows() === before,
@@ -124,8 +124,7 @@ class ServeSpec extends SparkSpec {
     "re-materialization serves the fully-old arm; a fresh resolution " +
     "serves the fully-new one") {
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sdoc").toString + "/bm25"
+    val root = tempDir("graft-sdoc") + "/bm25"
     val docs = graft.core.Tables.documents(spark, sf)
     QueryService.initVersionedDocIndex(docs.filter(col("doc_id") % 10 =!= 0), root)
     val v1 = QueryService.resolveDocIndexRoot(spark, root)
@@ -145,8 +144,7 @@ class ServeSpec extends SparkSpec {
       QueryService.vecIndexRoot(spark, sf),
       QueryService.resolveDocIndexRoot(spark, root), 10, 20)
       .collect().map(_.toString).toSeq
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-sdoc-fresh").toString + "/bm25"
+    val scratch = tempDir("graft-sdoc-fresh") + "/bm25"
     QueryService.initVersionedDocIndex(docs, scratch)
     val expect = QueryService.hybridSearchPlan(spark, sf,
       QueryService.vecIndexRoot(spark, sf),
@@ -174,28 +172,17 @@ class ServeSpec extends SparkSpec {
     val clones = graft.core.Tables.embeddings(spark, sf)
       .filter(col("vec_id") === 0)
       .select((col("vec_id") + lit(9000000L)).as("vec_id"), col("embedding"))
-    graft.operators.VectorOps.appendToVersionedVecIndex(clones, root)
+    graft.operators.VectorOps.appendToVecIndex(clones, root)
     val appended = rows()
     assert(appended.exists(_.contains("9000000")),
-      s"a warm poll after an in-place append must serve the appended row")
+      s"a warm poll after an append into the current version must serve the appended row")
     // delete them again: the tombstone contract (gone at the NEXT query)
-    graft.operators.VectorOps.deleteFromVersionedVecIndex(spark, root,
+    graft.operators.VectorOps.deleteFromVecIndex(spark, root,
       clones.select("vec_id"))
     assert(rows() === baseline)
-    // compaction rewrites the postings files in place; the epoch bump
-    // must drop the cached listing (or polls throw FileNotFoundException
-    // on the deleted part files) and results must not move a bit
-    graft.operators.VectorOps.compactVersionedVecIndex(spark, root)
-    assert(rows() === baseline)
-    // the bump lives in the LOW-LEVEL entry points, so a direct
-    // UNVERSIONED append on the resolved version directory re-keys too
-    val dir = graft.operators.VectorOps.resolveVecIndexRoot(spark, root)
-    graft.operators.VectorOps.appendToVecIndex(clones, dir)
-    assert(rows().exists(_.contains("9000000")),
-      "a direct unversioned append must also surface at the next poll")
-    graft.operators.VectorOps.deleteFromVecIndex(spark, dir,
-      clones.select("vec_id"))
-    graft.operators.VectorOps.compactVecIndex(spark, dir)
+    // compaction publishes the rewritten postings as the next version;
+    // polls re-key to it and results must not move a bit
+    graft.operators.VectorOps.compactVecIndex(spark, root)
     assert(rows() === baseline)
   }
 
@@ -203,22 +190,21 @@ class ServeSpec extends SparkSpec {
     "inside the grace window; past it the version is reclaimed") {
     import org.apache.spark.sql.functions.col
     val emb = graft.core.Tables.embeddings(spark, sf)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-grace").toString + "/vidx"
-    graft.operators.VectorOps.initVersionedVecIndex(
+    val root = tempDir("graft-grace") + "/vidx"
+    graft.operators.VectorOps.buildVecIndex(
       emb.filter(col("vec_id") % 10 =!= 0), root)
     // the artificially slow reader: pinned to v1, executes much later
-    val pinned = graft.operators.VectorOps.searchVersionedVecIndex(
+    val pinned = graft.operators.VectorOps.searchVecIndex(
       spark, root, emb.filter(col("vec_id") < 5), k = 3)
-    graft.operators.VectorOps.rebuildVersionedVecIndex(spark, root) // v2
+    graft.operators.VectorOps.rebuildVecIndex(spark, root) // v2
     // inside the grace window (v1 superseded milliseconds ago): vacuum
     // must keep v1 alive even at keepLast=1, so the pinned read finishes
-    assert(graft.operators.VectorOps.vacuumVecIndexVersions(spark, root,
+    assert(graft.operators.VectorOps.vacuumVecIndex(spark, root,
       keepLast = 1, minAgeMs = 10L * 60 * 1000) === Nil)
     assert(pinned.collect().nonEmpty,
       "the pinned reader must survive a vacuum inside the grace window")
     // past the window it goes
-    assert(graft.operators.VectorOps.vacuumVecIndexVersions(spark, root,
+    assert(graft.operators.VectorOps.vacuumVecIndex(spark, root,
       keepLast = 1, minAgeMs = 0L) === Seq(1L))
     // the serving refresh derives the window from observed polls
     QueryService.notePollMillis(20000L)
@@ -228,8 +214,7 @@ class ServeSpec extends SparkSpec {
   test("a crashed first build's debris under an unpublished BM25 root does " +
     "not block the staged init: it is replaced and the oracle page serves") {
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-sdoc-debris").toString + "/bm25"
+    val root = tempDir("graft-sdoc-debris") + "/bm25"
     // a crash mid-copy of roots/v1: partial files, nothing published
     val debris = new java.io.File(s"$root/roots/v00000001/scores")
     assert(debris.mkdirs())
@@ -280,8 +265,7 @@ class ServeSpec extends SparkSpec {
     assert(rows(docAfter) === docBefore)
     // serve_hybrid_search's page: the same corpus re-scored fuses the same
     // page as a from-scratch materialization of it
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-sdoc-refresh").toString + "/bm25"
+    val scratch = tempDir("graft-sdoc-refresh") + "/bm25"
     QueryService.initVersionedDocIndex(graft.core.Tables.documents(spark, sf), scratch)
     assert(rows(hybAfter) === rows(QueryService.hybridSearchPlan(spark, sf,
       QueryService.vecIndexRoot(spark, sf),

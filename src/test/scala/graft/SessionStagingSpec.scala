@@ -11,8 +11,7 @@ import graft.core.SessionStaging
 class SessionStagingSpec extends SparkSpec {
 
   private def fresh(name: String): String =
-    java.nio.file.Files.createTempDirectory("graft-staging-spec")
-      .toString + s"/$name"
+    tempDir("graft-staging-spec") + s"/$name"
 
   private def writeRows(dir: String, rows: Seq[Long]): Unit = {
     import SparkSpec.spark.implicits._
@@ -101,7 +100,7 @@ class SessionStagingSpec extends SparkSpec {
   }
 
   test("datasetIdent re-keys when the source file changes") {
-    val d = java.nio.file.Files.createTempDirectory("graft-ident").toString
+    val d = tempDir("graft-ident")
     val f = new java.io.File(d, "embeddings.parquet")
     java.nio.file.Files.write(f.toPath, "aa".getBytes)
     val i1 = SessionStaging.datasetIdent(d, "embeddings.parquet")
@@ -111,7 +110,7 @@ class SessionStagingSpec extends SparkSpec {
   }
 
   test("datasetIdent refuses a missing source file") {
-    val d = java.nio.file.Files.createTempDirectory("graft-ident-missing").toString
+    val d = tempDir("graft-ident-missing")
     val e = intercept[IllegalArgumentException] {
       SessionStaging.datasetIdent(d, "embeddings.parquet")
     }

@@ -158,23 +158,23 @@ class SnapshotsSpec extends SparkSpec {
     val t = "snap_crash_spec"
     Snapshots.reset(t)
     assert(Snapshots.write(spark, t, Seq((1, "a")).toDF("k", "v")) == 1)
-    // a writer that crashed mid-write: staging debris with partial data
-    val root = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft-scratch/snapshots/$t")
-    val dead = java.nio.file.Files
-      .createTempDirectory(root.toPath, "stage-").toFile
+    // a writer that crashed mid-write: partial data in the next,
+    // unpublished version directory
+    val dead = new java.io.File(
+      s"${System.getProperty("java.io.tmpdir")}/graft-scratch/snapshots/$t/roots/v00000002")
+    dead.mkdirs()
     java.nio.file.Files.write(new java.io.File(dead, "part-00000.parquet")
       .toPath, Array[Byte](0, 1, 2))
     // readers resolve neither the debris nor any phantom version
     assert(Snapshots.versions(t) == Seq(1))
     assert(Snapshots.latest(spark, t).collect().map(_.getString(1)).toSeq
       == Seq("a"))
-    // the next real write publishes OVER the debris era without picking
-    // up its files: v2 holds exactly the new rows
+    // the next real write publishes OVER the debris without picking up
+    // its files: v2 holds exactly the new rows
     assert(Snapshots.write(spark, t, Seq((2, "b")).toDF("k", "v")) == 2)
     assert(Snapshots.read(spark, t, 2).collect().map(_.getString(1)).toSeq
       == Seq("b"))
-    // and the published v2 directory contains no trace of the dead stage
-    assert(dead.exists(), "debris stays until a vacuum/discard, unpublished")
+    assert(!new java.io.File(dead, "part-00000.parquet").exists(),
+      "the published v2 must not keep the dead writer's files")
   }
 }

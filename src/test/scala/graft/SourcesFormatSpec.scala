@@ -11,7 +11,7 @@ class SourcesFormatSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
 
   private def tmp(leaf: String): String =
-    java.nio.file.Files.createTempDirectory(leaf).toString
+    tempDir(leaf)
 
   /** Doubles chosen to break sloppy serializers: repeating binary
     * fractions, denormal-adjacent magnitudes, negative zero, and a value

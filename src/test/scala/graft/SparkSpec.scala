@@ -23,7 +23,7 @@ object SparkSpec {
     try { Class.forName(className); true } catch { case _: Throwable => false }
 }
 
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with TempDirs {
   def spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.Sf0001
 }

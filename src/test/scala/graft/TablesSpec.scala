@@ -18,11 +18,7 @@ class TablesSpec extends SparkSpec {
   /** 2021-03-04 05:06:07.123456 UTC, in epoch micros. */
   private val micros = 1614834367123456L
 
-  private def tmpDir(tag: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"tables-$tag").toFile
-    d.deleteOnExit()
-    d.getAbsolutePath
-  }
+  private def tmpDir(tag: String): String = tempDir(s"tables-$tag")
 
   private def loadedMicros(dir: String): Long = {
     val df = Tables.events(spark, dir)

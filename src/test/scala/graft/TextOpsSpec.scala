@@ -31,7 +31,7 @@ class TextOpsSpec extends SparkSpec {
   }
 
   private def withCrafted[T](f: String => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-text").toString
+    val dir = tempDir("graft-text")
     crafted.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     f(dir)
   }
@@ -160,7 +160,7 @@ class TextOpsSpec extends SparkSpec {
     val rows = Seq(
       (0L, benchText, "src0"), (1L, mk(), "src0"),
       (200L, benchText, "web"), (201L, "zq " * 39 + "zq", "web"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-cont").toString
+    val dir = tempDir("graft-cont")
     rows.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length($"text").cast("long"))
@@ -182,7 +182,7 @@ class TextOpsSpec extends SparkSpec {
       (0L, benchText, "src0"), (1L, mk(), "src0"),
       (200L, benchText, "web"), (201L, cleanText, "web"),
       (300L, mk(), "books"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-decon").toString
+    val dir = tempDir("graft-decon")
     rows.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length($"text").cast("long"))
@@ -517,7 +517,7 @@ class TextOpsSpec extends SparkSpec {
       (1L, longWords.mkString(" "), "src"),
       (2L, span.mkString(" "), "src"),
       (3L, Seq.fill(60)("qq" + rng.nextInt(9)).mkString(" "), "src"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-cont2").toString
+    val dir = tempDir("graft-cont2")
     rows.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length($"text").cast("long"))
@@ -1043,7 +1043,7 @@ class TextOpsSpec extends SparkSpec {
     // back to the last tier's 0.1 (the oracle's ELSE branch), because a
     // NULL target_frac would turn downstream `keep = draw < NULL` into
     // silently dropping the whole tier.
-    val dir = java.nio.file.Files.createTempDirectory("graft-tier").toString
+    val dir = tempDir("graft-tier")
     (0 until 20).map { i =>
       (i.toLong, (0 until 8).map(j => s"t${i}x$j").mkString(" "), "en",
         if (i < 10) "src0" else "src25")
@@ -1240,8 +1240,7 @@ class TextOpsSpec extends SparkSpec {
     "is gated against earlier acceptances") {
     val corpus = crafted.filter($"doc_id" < 20)
     val batch = crafted.filter($"doc_id" >= 20)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ndidx").toString + "/idx"
+    val path = tempDir("graft-ndidx") + "/idx"
     TextOps.buildNearDupIndex(corpus, path)
     def key(r: org.apache.spark.sql.Row) =
       r.getLong(0) -> (r.getAs[Long]("n_corpus_neardups"),

@@ -21,10 +21,23 @@ class VectorOpsSpec extends SparkSpec {
       val noise = new scala.util.Random(1000 + id)
       (id.toLong, c.map(x => x + noise.nextGaussian().toFloat * 0.01f).toSeq, id / 25)
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-vec").toString
+    val dir = tempDir("graft-vec")
     vecs.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     dir
+  }
+
+  /** The current version directory of the index root `root`. */
+  private def cur(root: String): String = VectorOps.resolveVecIndexRoot(spark, root)
+
+  /** `root` publishes exactly versions 1..n and holds no other version
+    * directory and no build lease: the verbs left nothing behind.
+    */
+  private def assertPublishedOnly(root: String, n: Long): Unit = {
+    val names = (1L to n).map(graft.core.VersionedStore.versionName)
+    assert(graft.core.VersionedStore.versions(spark, root) === (1L to n))
+    assert(new java.io.File(s"$root/roots").list().sorted.toSeq === names)
+    assert(!new java.io.File(s"$root/manifest").list().exists(_.startsWith("claim_")))
   }
 
   test("v2 IVF recall@3 vs v1 brute force is >= 0.9 on clustered data") {
@@ -428,7 +441,7 @@ class VectorOpsSpec extends SparkSpec {
       (if (i % 2 == base) 1.0f else 0.0f) + rng.nextFloat() * 0.01f)
     val rows = (0L until 500L).map(i => (i, around((i % 2).toInt), 0)) :+
       ((999L, Seq.fill(64)(-1.0f), 0))
-    val dir = java.nio.file.Files.createTempDirectory("graft-v28").toString
+    val dir = tempDir("graft-v28")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     val rows2 = VectorOps.v28.build(spark, dir).collect()
@@ -592,7 +605,7 @@ class VectorOpsSpec extends SparkSpec {
     val dir = clusteredDir()
     val emb = graft.core.Tables.embeddings(spark, dir)
     val qs = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10)
-    val path = java.nio.file.Files.createTempDirectory("graft-ivf").toString + "/idx"
+    val path = tempDir("graft-ivf") + "/idx"
     VectorOps.buildVecIndex(emb, path, "ivf")
     val fromIndex = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf")
     val got = fromIndex.collect()
@@ -626,8 +639,7 @@ class VectorOpsSpec extends SparkSpec {
     val rest = emb.filter(vid % 10 === 0)
     val qs = emb.filter(vid < 10)
     def searchAfter(chunks: Seq[org.apache.spark.sql.DataFrame]) = {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivf-app").toString + "/idx"
+      val path = tempDir("graft-ivf-app") + "/idx"
       VectorOps.buildVecIndex(base, path, "ivf")
       chunks.foreach(VectorOps.appendToVecIndex(_, path))
       VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
@@ -652,8 +664,7 @@ class VectorOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
     val qs = emb.filter(vid < 10)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivf-del").toString + "/idx"
+    val path = tempDir("graft-ivf-del") + "/idx"
     VectorOps.buildVecIndex(emb, path, "ivf")
     val before = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -668,16 +679,16 @@ class VectorOpsSpec extends SparkSpec {
     assert(after.map(_._1).toSeq.distinct.length === 10,
       "every query still gets answers (k refills from the cell)")
     // compaction: identical results, tombstones gone, postings shrunk
-    val rowsBefore = spark.read.parquet(s"$path/postings").count()
+    val rowsBefore = spark.read.parquet(s"${cur(path)}/postings").count()
     VectorOps.compactVecIndex(spark, path)
     val compacted = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(compacted === after, "compaction must not change a single bit")
-    assert(!new java.io.File(s"$path/tombstones").exists())
-    assert(spark.read.parquet(s"$path/postings").count() === rowsBefore - 2)
+    assert(!new java.io.File(s"${cur(path)}/tombstones").exists())
+    assert(spark.read.parquet(s"${cur(path)}/postings").count() === rowsBefore - 2)
     // compacting an index with no tombstones is a no-op
     VectorOps.compactVecIndex(spark, path)
-    assert(spark.read.parquet(s"$path/postings").count() === rowsBefore - 2)
+    assert(spark.read.parquet(s"${cur(path)}/postings").count() === rowsBefore - 2)
   }
 
   test("v39 persisted PQ index: code-only serving is bit-identical to the " +
@@ -685,8 +696,7 @@ class VectorOpsSpec extends SparkSpec {
     val dir = clusteredDir()
     val emb = graft.core.Tables.embeddings(spark, dir)
     val qs = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-pqidx").toString + "/idx"
+    val path = tempDir("graft-pqidx") + "/idx"
     VectorOps.buildVecIndex(emb, path, "pq")
     val fromIndex = VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -696,7 +706,7 @@ class VectorOpsSpec extends SparkSpec {
       "stored-code ADC must reproduce the in-memory PQ search exactly")
     // the compression contract: (vec_id: long, codes: array<int>), 2 codes
     // per 16 dims here (M = dim/8), one codes row per corpus vector
-    val codes = spark.read.parquet(s"$path/codes")
+    val codes = spark.read.parquet(s"${cur(path)}/codes")
     assert(codes.count() === 500L)
     assert(codes.schema("codes").dataType.simpleString === "array<int>")
     import SparkSpec.spark.implicits._
@@ -712,8 +722,7 @@ class VectorOpsSpec extends SparkSpec {
     val rest = emb.filter(vid % 3 === 0)
     val qs = emb.filter(vid < 10)
     def searchAfter(chunks: Seq[org.apache.spark.sql.DataFrame]): Set[(Long, Long, Double)] = {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-pq-app").toString + "/idx"
+      val path = tempDir("graft-pq-app") + "/idx"
       VectorOps.buildVecIndex(base, path, "pq")
       chunks.foreach(VectorOps.appendToVecIndex(_, path))
       VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq").collect()
@@ -742,8 +751,7 @@ class VectorOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
     val qs = emb.filter(vid < 10)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-pq-del").toString + "/idx"
+    val path = tempDir("graft-pq-del") + "/idx"
     VectorOps.buildVecIndex(emb, path, "pq")
     val before = VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -754,24 +762,22 @@ class VectorOpsSpec extends SparkSpec {
     assert(victims.forall(v => !after.exists(_._2 == v)),
       "tombstoned ids must stop being served immediately")
     assert(after.map(_._1).toSeq.distinct.length === 10)
-    val rowsBefore = spark.read.parquet(s"$path/codes").count()
+    val rowsBefore = spark.read.parquet(s"${cur(path)}/codes").count()
     VectorOps.compactVecIndex(spark, path)
     val compacted = VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(compacted === after, "compaction must not change a single bit")
-    assert(!new java.io.File(s"$path/tombstones").exists())
-    assert(!new java.io.File(s"$path/codes_old").exists(),
-      "swap-aside must clean up after itself")
-    assert(!new java.io.File(s"$path/codes_compacting").exists())
-    assert(spark.read.parquet(s"$path/codes").count() === rowsBefore - 2)
+    assert(!new java.io.File(s"${cur(path)}/tombstones").exists())
+    assertPublishedOnly(path, 2L)
+    assert(spark.read.parquet(s"${cur(path)}/codes").count() === rowsBefore - 2)
     // compacting with no tombstones is a no-op
     VectorOps.compactVecIndex(spark, path)
-    assert(spark.read.parquet(s"$path/codes").count() === rowsBefore - 2)
+    assert(spark.read.parquet(s"${cur(path)}/codes").count() === rowsBefore - 2)
   }
 
   test("buildPqIndex input guards: short corpus and indivisible dim fail " +
     "loudly at the API edge instead of crashing in an executor") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pq-guard").toString
+    val dir = tempDir("graft-pq-guard")
     val tiny = (0 until 5)
       .map(i => (i.toLong, Seq.fill(16)(i.toFloat)))
       .toDF("vec_id", "embedding")
@@ -792,8 +798,7 @@ class VectorOpsSpec extends SparkSpec {
     "same-distribution append, needs_retrain fires on a shifted batch") {
     val dir = clusteredDir()
     val emb = graft.core.Tables.embeddings(spark, dir)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-pq-drift").toString + "/idx"
+    val path = tempDir("graft-pq-drift") + "/idx"
     VectorOps.buildVecIndex(emb, path, "pq")
     // no appends: current corpus == build corpus, drift is exactly 0.0
     val same = VectorOps.pqDriftAudit(spark, path, emb).collect()(0)
@@ -825,8 +830,7 @@ class VectorOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
     val qs = emb.filter(vid < 10)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-facade").toString + "/idx"
+    val path = tempDir("graft-facade") + "/idx"
     VectorOps.buildVecIndex(emb, path, "both")
     def ids(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -834,12 +838,12 @@ class VectorOpsSpec extends SparkSpec {
     val qArr = VectorOps.collectQueryVectors(qs)
     assert(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "ivf")
       .collect().toSeq ===
-      VectorOps.searchIvfIndexPlanned(spark, path, qArr,
-        VectorOps.loadIvfCentroids(spark, path), 3, 2).collect().toSeq)
+      VectorOps.searchIvfIndexPlanned(spark, cur(path), qArr,
+        VectorOps.loadIvfCentroids(spark, cur(path)), 3, 2).collect().toSeq)
     assert(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq")
       .collect().toSeq ===
-      VectorOps.searchPqIndexPlanned(spark, path, qArr,
-        VectorOps.loadPqCodebook(spark, path), 3).collect().toSeq)
+      VectorOps.searchPqIndexPlanned(spark, cur(path), qArr,
+        VectorOps.loadPqCodebook(spark, cur(path)), 3).collect().toSeq)
     // auto = rerank when both tiers exist
     val auto = ids(VectorOps.searchVecIndex(spark, path, qs, 3))
     val rr = ids(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "rerank"))
@@ -876,8 +880,8 @@ class VectorOpsSpec extends SparkSpec {
       assert(ids(VectorOps.searchVecIndex(spark, path, qs, 3, tier = t)) === want,
         s"tier $t changed across compaction")
     }
-    assert(!new java.io.File(s"$path/tombstones").exists())
-    assert(!new java.io.File(path).list().exists(_.contains("tombstones")),
+    assert(!new java.io.File(s"${cur(path)}/tombstones").exists())
+    assert(!new java.io.File(cur(path)).list().exists(_.contains("tombstones")),
       "compaction must leave no tombstone table of any name")
     // unknown tier fails loudly
     val bad = intercept[RuntimeException] {
@@ -893,8 +897,7 @@ class VectorOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
     val qs = emb.filter(vid < 10)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-facade-ivfpq").toString + "/idx"
+    val path = tempDir("graft-facade-ivfpq") + "/idx"
     VectorOps.buildVecIndex(emb, path, "ivfpq")
     def serve(): Set[(Long, Long, Double)] =
       VectorOps.searchVecIndex(spark, path, qs, 3, tier = "auto").collect()
@@ -905,53 +908,27 @@ class VectorOpsSpec extends SparkSpec {
     // anti-joins — the route "auto" itself picks for this root
     val victims = before.filter(_._1 == 0L).map(_._2).toSeq.take(2)
     VectorOps.deleteFromVecIndex(spark, path, emb.filter(vid.isin(victims: _*)))
-    assert(new java.io.File(s"$path/tombstones").exists(),
+    assert(new java.io.File(s"${cur(path)}/tombstones").exists(),
       "residual root must tombstone into the root's one tombstones/ table")
-    assert(new java.io.File(path).list().filter(_.contains("tombstones")).toSeq ===
+    assert(new java.io.File(cur(path)).list().filter(_.contains("tombstones")).toSeq ===
       Seq("tombstones"), "one tombstone table per root")
     val afterDel = serve()
     assert(victims.forall(v => !afterDel.exists(_._2 == v)),
       "facade delete must stop serving victims on the auto (ivfpq) route")
     // unified compaction must keep the cluster-partitioned codes layout
     VectorOps.compactVecIndex(spark, path)
-    val clusterDirs = new java.io.File(s"$path/codes")
+    val clusterDirs = new java.io.File(s"${cur(path)}/codes")
       .listFiles().filter(f => f.isDirectory && f.getName.startsWith("cluster="))
     assert(clusterDirs.nonEmpty,
       "compaction must preserve the partition-pruned codes layout")
     assert(serve() === afterDel, "compaction must not change served results")
-    assert(!new java.io.File(s"$path/tombstones").exists())
+    assert(!new java.io.File(s"${cur(path)}/tombstones").exists())
     // the pruned serving plan survives compaction too
     val plan = VectorOps.searchVecIndex(spark, path, qs, 3, tier = "auto")
       .queryExecution.executedPlan.toString
     assert("PartitionFilters: \\[[^\\]]*cluster#\\d+ IN \\(".r
       .findFirstIn(plan).isDefined,
       s"post-compaction scan lost the probed-cell partition filter:\n$plan")
-  }
-
-  test("searchVecIndex self-heals aside tiers before routing: a crash " +
-    "mid-swap must not silently reroute auto to a weaker tier") {
-    val dir = clusteredDir()
-    val emb = graft.core.Tables.embeddings(spark, dir)
-    val vid = org.apache.spark.sql.functions.col("vec_id")
-    val qs = emb.filter(vid < 10)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-facade-heal").toString + "/idx"
-    VectorOps.buildVecIndex(emb, root, "both")
-    val want = VectorOps.searchVecIndex(spark, root, qs, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    // simulate the crash window between swapAside's two renames: the live
-    // postings tier sits at postings_old
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$root/postings"),
-      new org.apache.hadoop.fs.Path(s"$root/postings_old")))
-    val healed = VectorOps.searchVecIndex(spark, root, qs, 3).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(healed === want,
-      "auto after a mid-swap crash must serve the exact rerank results, " +
-        "not silently fall back to ADC scores")
-    assert(new java.io.File(s"$root/postings").exists())
-    assert(!new java.io.File(s"$root/postings_old").exists())
   }
 
   test("every verb over every layout: appends and deletes reach every " +
@@ -975,8 +952,7 @@ class VectorOpsSpec extends SparkSpec {
       "ivf" -> Seq("ivf"), "both" -> Seq("ivf", "pq", "rerank"),
       "ivfpq" -> Seq("ivfpq"))
     for ((layout, routes) <- routesOf) {
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft-verbs-$layout").toString + "/idx"
+      val path = tempDir(s"graft-verbs-$layout") + "/idx"
       // self-inclusive queries: an appended vector must find ITSELF on
       // every route (k and the rerank budget cover a whole cluster, so
       // ADC ties inside a cluster cannot crowd it out)
@@ -1006,11 +982,10 @@ class VectorOpsSpec extends SparkSpec {
       VectorOps.rebuildVecIndex(spark, path,
         if (layout == "ivfpq") Some(emb.filter(!vid.isin(victims: _*))) else None)
       assert(serveAll() === afterDel, s"$layout: rebuild changed results")
-      assert(!new java.io.File(path).list().exists(_.contains("tombstones")))
+      assert(!new java.io.File(cur(path)).list().exists(_.contains("tombstones")))
     }
     // the search-route contract: a route the layout lacks fails loudly
-    val ivfOnly = java.nio.file.Files
-      .createTempDirectory("graft-verbs-route").toString + "/idx"
+    val ivfOnly = tempDir("graft-verbs-route") + "/idx"
     VectorOps.buildVecIndex(emb, ivfOnly, "ivf")
     val noPq = intercept[IllegalArgumentException] {
       VectorOps.searchVecIndex(spark, ivfOnly, qs, 3, tier = "pq")
@@ -1039,8 +1014,7 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(vid < 3).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("vec_id", "embedding")
     for ((layout, routes) <- layoutRoutes) {
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft-warm-$layout").toString + "/idx"
+      val path = tempDir(s"graft-warm-$layout") + "/idx"
       // several data files and a tombstone table: every read is exercised
       VectorOps.buildVecIndex(emb.filter(vid >= 20), path, layout)
       VectorOps.appendToVecIndex(emb.filter(vid < 20), path)
@@ -1064,8 +1038,7 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(vid === 0)
     val clone = 9000000L
     for ((layout, routes) <- layoutRoutes) {
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft-foreign-$layout").toString + "/idx"
+      val path = tempDir(s"graft-foreign-$layout") + "/idx"
       VectorOps.buildVecIndex(emb, path, layout)
       def served(t: String): Set[Long] =
         // k and the rerank budget cover the probed cells: the clone ties
@@ -1077,18 +1050,18 @@ class VectorOpsSpec extends SparkSpec {
       // the other process's append: a copy of vector 0's stored rows under
       // a fresh id, written straight into each data directory
       for (data <- Seq("postings", "codes")
-          if new java.io.File(s"$path/$data").exists()) {
+          if new java.io.File(s"${cur(path)}/$data").exists()) {
         val key = if (data == "postings") "c_id" else "vec_id"
-        val rows = spark.read.parquet(s"$path/$data").filter(col(key) === 0L)
+        val rows = spark.read.parquet(s"${cur(path)}/$data").filter(col(key) === 0L)
           .withColumn(key, lit(clone))
         val w = rows.write.mode("append")
         (if (rows.columns.contains("cluster")) w.partitionBy("cluster") else w)
-          .parquet(s"$path/$data")
+          .parquet(s"${cur(path)}/$data")
       }
       routes.foreach(t => assert(served(t).contains(clone),
         s"$layout/$t: a row another process appended is not served"))
       // ... and its delete: one more tombstone file
-      Seq(clone).toDF("vec_id").write.mode("append").parquet(s"$path/tombstones")
+      Seq(clone).toDF("vec_id").write.mode("append").parquet(s"${cur(path)}/tombstones")
       routes.foreach(t => assert(!served(t).contains(clone),
         s"$layout/$t: an id another process tombstoned is still served"))
     }
@@ -1104,7 +1077,7 @@ class VectorOpsSpec extends SparkSpec {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     for ((layout, routes) <- layoutRoutes) {
-      val tmp = java.nio.file.Files.createTempDirectory(s"graft-swap-$layout").toString
+      val tmp = tempDir(s"graft-swap-$layout")
       val (live, donor) = (s"$tmp/live", s"$tmp/donor")
       // different corpora -> different md5 samples -> different geometry
       VectorOps.buildVecIndex(emb.filter(vid % 3 =!= 0), live, layout)
@@ -1134,11 +1107,10 @@ class VectorOpsSpec extends SparkSpec {
     val vid = col("vec_id")
     for (offset <- Seq(0L, 3000000000L); layout <- Seq("ivf", "pq", "both", "ivfpq")) {
       val ids = emb.withColumn("vec_id", vid + lit(offset))
-      val path = java.nio.file.Files
-        .createTempDirectory(s"graft-schema-$layout").toString + "/idx"
+      val path = tempDir(s"graft-schema-$layout") + "/idx"
       def check(stage: String): Unit =
-        VectorOps.declaredSchemas(spark, path).foreach { case (d, declared) =>
-          assert(declared === spark.read.parquet(s"$path/$d").schema,
+        VectorOps.declaredSchemas(spark, cur(path)).foreach { case (d, declared) =>
+          assert(declared === spark.read.parquet(s"${cur(path)}/$d").schema,
             s"$layout ($stage, ids +$offset): $d/ declares $declared")
         }
       VectorOps.buildVecIndex(ids.filter(vid >= offset + 50), path, layout)
@@ -1146,7 +1118,127 @@ class VectorOpsSpec extends SparkSpec {
       VectorOps.appendToVecIndex(ids.filter(vid < offset + 50), path)
       VectorOps.deleteFromVecIndex(spark, path, ids.filter(vid === offset + 7))
       check("append")
-      assert(VectorOps.declaredSchemas(spark, path).contains("tombstones"))
+      assert(VectorOps.declaredSchemas(spark, cur(path)).contains("tombstones"))
+    }
+  }
+
+  /** Every route's (q_id, neighbor_id, score) rows for `qs` on `root`. */
+  private def serveRoutes(root: String, routes: Seq[String],
+      qs: org.apache.spark.sql.DataFrame): Map[String, Set[(Long, Long, Double)]] =
+    routes.map(t => t -> VectorOps.searchVecIndex(spark, root, qs, 3, tier = t)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet).toMap
+
+  test("searches racing compaction and then rebuild never fail and serve " +
+    "the answer from before or after the maintenance, on every layout") {
+    import org.apache.spark.sql.functions.col
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    val qs = emb.filter(vid < 3).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("vec_id", "embedding")
+    val alive = emb.filter(vid % 7 =!= 0)
+    for ((layout, routes) <- layoutRoutes) {
+      val root = tempDir(s"graft-race-$layout") + "/idx"
+      VectorOps.buildVecIndex(emb.filter(vid < 450), root, layout)
+      VectorOps.appendToVecIndex(emb.filter(vid >= 450), root)
+      VectorOps.deleteFromVecIndex(spark, root, emb.filter(vid % 7 === 0))
+      val before = serveRoutes(root, routes, qs)
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Set[(Long, Long, Double)])]()
+      val failed = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val readers = (0 until 4).map { i =>
+        val t = new Thread(() => {
+          var n = i
+          try do {
+            val route = routes(n % routes.size)
+            seen.add(route -> serveRoutes(root, Seq(route), qs)(route))
+            n += 1
+          } while (!done.get)
+          catch { case e: Throwable => failed.add(e) }
+        })
+        t.start(); t
+      }
+      VectorOps.compactVecIndex(spark, root)
+      VectorOps.rebuildVecIndex(spark, root,
+        if (routes.contains("ivf")) None else Some(alive))
+      done.set(true)
+      readers.foreach(_.join())
+      assert(failed.isEmpty, s"$layout: a racing search failed: ${failed.peek()}")
+      assert(VectorOps.currentVecIndexVersion(spark, root) === Some(3L))
+      val after = serveRoutes(root, routes, qs)
+      assert(seen.size >= readers.size)
+      seen.forEach { case (route, got) =>
+        assert(got == before(route) || got == after(route),
+          s"$layout/$route served an answer from neither side of the maintenance")
+      }
+    }
+  }
+
+  test("fault injection: a compaction or rebuild that throws inside its " +
+    "build leaves the current version serving, unchanged and unleased, and " +
+    "the retry over its debris equals a clean run on every layout") {
+    import org.apache.spark.sql.functions.{assert_true, col, expr, lit, when}
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    val qs = emb.filter(vid < 10)
+    val mutated = 3L
+    val alive = emb.filter(vid % 7 =!= 0 && vid =!= mutated)
+    for ((layout, routes) <- layoutRoutes) {
+      val base = tempDir(s"graft-fault-$layout")
+      val Seq(clean, faulty) = Seq(s"$base/clean", s"$base/faulty")
+      Seq(clean, faulty).foreach { root =>
+        VectorOps.buildVecIndex(emb, root, layout)
+        VectorOps.deleteFromVecIndex(spark, root, emb.filter(vid % 7 === 0))
+      }
+      def assertUntouched(root: String, version: Long,
+          want: Map[String, Set[(Long, Long, Double)]]): Unit = {
+        assert(VectorOps.currentVecIndexVersion(spark, root) === Some(version))
+        assert(serveRoutes(root, routes, qs) === want, s"$layout: results moved")
+        assert(!new java.io.File(s"$root/manifest").list().exists(_.startsWith("claim_")),
+          s"$layout: a failed build left its lease behind")
+      }
+      // compaction: a writer re-appends an id with a CHANGED payload (its
+      // stored rows copied with the payload altered), which breaks the
+      // immutable-id contract, and compaction throws while v2 is
+      // half-written (its geometry is already copied)
+      val v1 = cur(faulty)
+      for ((data, key, payload, altered) <- Seq(
+          ("postings", "c_id", "c_e", "transform(c_e, x -> -x)"),
+          ("codes", "vec_id", "codes", "transform(codes, c -> (c + 1) % 16)"))
+          if new java.io.File(s"$v1/$data").exists()) {
+        val rows = spark.read.parquet(s"$v1/$data").filter(col(key) === mutated)
+          .withColumn(payload, expr(altered))
+        val w = rows.write.mode("append")
+        (if (rows.columns.contains("cluster")) w.partitionBy("cluster") else w)
+          .parquet(s"$v1/$data")
+      }
+      val beforeCompact = serveRoutes(faulty, routes, qs)
+      val broken = withClue(s"$layout: ")(
+        intercept[IllegalArgumentException](VectorOps.compactVecIndex(spark, faulty)))
+      assert(broken.getMessage.contains("CHANGED payloads"))
+      assert(new java.io.File(s"$faulty/roots/v00000002").exists(), "no debris to retry over")
+      assertUntouched(faulty, 1L, beforeCompact)
+      // fix the input (delete the mutated id) and retry over the debris
+      Seq(clean, faulty).foreach { root =>
+        VectorOps.deleteFromVecIndex(spark, root, emb.filter(vid === mutated))
+        VectorOps.compactVecIndex(spark, root)
+      }
+      val compacted = serveRoutes(clean, routes, qs)
+      assert(serveRoutes(faulty, routes, qs) === compacted,
+        s"$layout: the retried compaction differs from a clean one")
+      // rebuild: the source corpus fails its assert partway through the scan
+      val bad = alive.withColumn("embedding",
+        when(assert_true(vid < 480, lit("planted corpus fault")).isNull, col("embedding")))
+      val failedRebuild = intercept[Exception](
+        VectorOps.rebuildVecIndex(spark, faulty, Some(bad)))
+      assert(Iterator.iterate[Throwable](failedRebuild)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("planted corpus fault")))
+      assertUntouched(faulty, 2L, compacted)
+      Seq(clean, faulty).foreach(VectorOps.rebuildVecIndex(spark, _, Some(alive)))
+      assert(serveRoutes(faulty, routes, qs) === serveRoutes(clean, routes, qs),
+        s"$layout: the retried rebuild differs from a clean one")
+      assertPublishedOnly(faulty, 3L)
     }
   }
 
@@ -1167,8 +1259,7 @@ class VectorOpsSpec extends SparkSpec {
       def run(first: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
           second: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
           : Seq[Map[String, Set[(Long, Long, Double)]]] = {
-        val path = java.nio.file.Files
-          .createTempDirectory(s"graft-mixed-$layout").toString + "/idx"
+        val path = tempDir(s"graft-mixed-$layout") + "/idx"
         // k covers both probed cells whole: a residual code can tie across
         // data clusters sharing a cell, and ties rank by id
         def serveAll() = routes.map(t => t -> VectorOps.searchVecIndex(spark, path,
@@ -1202,18 +1293,17 @@ class VectorOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
     val qs = emb.filter(vid < 10)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-vcompact").toString + "/vidx"
+    val root = tempDir("graft-vcompact") + "/vidx"
     def ids(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    VectorOps.initVersionedVecIndex(emb, root, tiers = "both")
-    VectorOps.deleteFromVersionedVecIndex(spark, root, emb.filter(vid % 7 === 0))
+    VectorOps.buildVecIndex(emb, root, tiers = "both")
+    VectorOps.deleteFromVecIndex(spark, root, emb.filter(vid % 7 === 0))
     val want = Seq("ivf", "pq", "rerank").map(t =>
-      t -> ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3, tier = t))).toMap
+      t -> ids(VectorOps.searchVecIndex(spark, root, qs, 3, tier = t))).toMap
     // the in-flight reader: resolved (file listing taken) before compaction
     val pinned = Seq("ivf", "pq", "rerank").map(t =>
-      t -> VectorOps.searchVersionedVecIndex(spark, root, qs, 3, tier = t)).toMap
-    VectorOps.compactVersionedVecIndex(spark, root)
+      t -> VectorOps.searchVecIndex(spark, root, qs, 3, tier = t)).toMap
+    VectorOps.compactVecIndex(spark, root)
     assert(VectorOps.currentVecIndexVersion(spark, root) === Some(2L),
       "compaction must publish the compacted tiers as a new version")
     pinned.foreach { case (t, df) =>
@@ -1224,12 +1314,12 @@ class VectorOpsSpec extends SparkSpec {
     assert(spark.read.parquet(s"$v2/postings").count() ===
       emb.filter(vid % 7 =!= 0).count())
     Seq("ivf", "pq", "rerank").foreach(t =>
-      assert(ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3, tier = t)) ===
+      assert(ids(VectorOps.searchVecIndex(spark, root, qs, 3, tier = t)) ===
         want(t), s"compacted $t results moved"))
     // the published v1 was never rewritten
     assert(new java.io.File(s"$root/roots/v00000001/tombstones").exists())
     // nothing to reclaim -> no new version
-    VectorOps.compactVersionedVecIndex(spark, root)
+    VectorOps.compactVecIndex(spark, root)
     assert(VectorOps.currentVecIndexVersion(spark, root) === Some(2L))
   }
 
@@ -1242,8 +1332,7 @@ class VectorOpsSpec extends SparkSpec {
     // arrive later through appends against the frozen geometry
     val base = emb.filter(vid < 250)
     val drifted = emb.filter(vid >= 250)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivf-reb").toString + "/idx"
+    val path = tempDir("graft-ivf-reb") + "/idx"
     VectorOps.buildVecIndex(base, path, "ivf")
     VectorOps.appendToVecIndex(drifted, path)
     // v18's signal: half the corpus crowded into cells sampled from the
@@ -1268,19 +1357,14 @@ class VectorOpsSpec extends SparkSpec {
     assert(after >= 0.9, s"post-rebuild recall too low: $after")
     // the rebuild contract: bit-indistinguishable from a fresh build on
     // the current corpus
-    val freshPath = java.nio.file.Files
-      .createTempDirectory("graft-ivf-fresh").toString + "/idx"
+    val freshPath = tempDir("graft-ivf-fresh") + "/idx"
     VectorOps.buildVecIndex(emb, freshPath, "ivf")
     val rebuilt = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val fresh = VectorOps.searchVecIndex(spark, freshPath, qs, 3, 2, tier = "ivf").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(rebuilt === fresh)
-    assert(!new java.io.File(s"$path/_rebuilding").exists())
-    assert(!new java.io.File(s"$path/postings_rebuilding").exists())
-    assert(!new java.io.File(s"$path/centroids_rebuilding").exists())
-    assert(!new java.io.File(s"$path/postings_old").exists())
-    assert(!new java.io.File(s"$path/centroids_old").exists())
+    assertPublishedOnly(path, 2L)
   }
 
   test("v44/v45 residual IVF-PQ: probed-cell partition pruning, neighbors " +
@@ -1289,8 +1373,7 @@ class VectorOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
     val qs = emb.filter(vid < 10)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq").toString + "/idx"
+    val path = tempDir("graft-ivfpq") + "/idx"
     VectorOps.buildVecIndex(emb, path, "ivfpq")
     val got = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivfpq")
     // the code scan must be partition-pruned to the probed cells (the
@@ -1311,11 +1394,11 @@ class VectorOpsSpec extends SparkSpec {
     }
     // neighbors only come from the query's probed cells: recompute the
     // cell map from the stored index the same way the search does
-    val codesCells = spark.read.parquet(s"$path/codes")
+    val codesCells = spark.read.parquet(s"${cur(path)}/codes")
       .select("vec_id", "cluster").collect()
       .map(r => r.getLong(0) -> r.getAs[Number]("cluster").longValue()).toMap
     import SparkSpec.spark.implicits._
-    val cents = spark.read.parquet(s"$path/centroids")
+    val cents = spark.read.parquet(s"${cur(path)}/centroids")
       .select("k_id", "k_e").as[(Long, Seq[Double])].collect()
     val toD = org.apache.spark.sql.functions
       .expr("transform(embedding, x -> CAST(x AS DOUBLE))")
@@ -1337,8 +1420,7 @@ class VectorOpsSpec extends SparkSpec {
     val base = emb.filter(vid % 3 =!= 0)
     val rest = emb.filter(vid % 3 === 0)
     def searchAfter(chunks: Seq[org.apache.spark.sql.DataFrame]): Set[(Long, Long, Double)] = {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-ivfpq-app").toString + "/idx"
+      val p = tempDir("graft-ivfpq-app") + "/idx"
       VectorOps.buildVecIndex(base, p, "ivfpq")
       chunks.foreach(VectorOps.appendToVecIndex(_, p))
       VectorOps.searchVecIndex(spark, p, qs, 3, 2, tier = "ivfpq").collect()
@@ -1362,8 +1444,8 @@ class VectorOpsSpec extends SparkSpec {
     val afterCompact = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivfpq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(afterCompact === afterDel, "compaction must not change a bit")
-    assert(!new java.io.File(s"$path/tombstones").exists())
-    assert(!new java.io.File(s"$path/codes_old").exists())
+    assert(!new java.io.File(s"${cur(path)}/tombstones").exists())
+    assertPublishedOnly(path, 2L)
   }
 
   test("versioned roots: pinned reads serve fully-old results across a " +
@@ -1372,56 +1454,54 @@ class VectorOpsSpec extends SparkSpec {
     val dir = clusteredDir()
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-vroot").toString + "/vidx"
+    val root = tempDir("graft-vroot") + "/vidx"
     val qs = emb.filter(vid >= 250 && vid < 260)
     def ids(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // v1 geometry only ever saw clusters 0-9; the rest arrive by append
-    VectorOps.initVersionedVecIndex(emb.filter(vid < 250), root)
+    VectorOps.buildVecIndex(emb.filter(vid < 250), root)
     assert(VectorOps.currentVecIndexVersion(spark, root) === Some(1L))
-    VectorOps.appendToVersionedVecIndex(emb.filter(vid >= 250), root)
-    val oldResults = ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3))
+    VectorOps.appendToVecIndex(emb.filter(vid >= 250), root)
+    val oldResults = ids(VectorOps.searchVecIndex(spark, root, qs, 3))
     assert(oldResults.nonEmpty)
     // unpublished debris from a "crashed rebuild" must be invisible
     val debris = new java.io.File(s"$root/roots/v00000002/centroids")
     debris.mkdirs()
     assert(VectorOps.currentVecIndexVersion(spark, root) === Some(1L))
-    assert(ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3)) === oldResults)
+    assert(ids(VectorOps.searchVecIndex(spark, root, qs, 3)) === oldResults)
     // the concurrent reader: resolved BEFORE the flip, executed after —
     // must serve the fully-old geometry, never empty/mixed
-    val pinned = VectorOps.searchVersionedVecIndex(spark, root, qs, 3)
-    val nextDir = VectorOps.rebuildVersionedVecIndex(spark, root)
+    val pinned = VectorOps.searchVecIndex(spark, root, qs, 3)
+    val nextDir = VectorOps.rebuildVecIndex(spark, root)
     assert(nextDir.endsWith("v00000002"))
     assert(VectorOps.currentVecIndexVersion(spark, root) === Some(2L))
     assert(ids(pinned) === oldResults,
       "a read pinned before the flip must serve the old version untouched")
     // a fresh resolution = fully-new geometry = a fresh build, bit for bit
-    val freshPath = java.nio.file.Files
-      .createTempDirectory("graft-vroot-fresh").toString + "/idx"
+    val freshPath = tempDir("graft-vroot-fresh") + "/idx"
     VectorOps.buildVecIndex(emb, freshPath, "ivf")
-    val newResults = ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3))
+    val newResults = ids(VectorOps.searchVecIndex(spark, root, qs, 3))
     assert(newResults === ids(VectorOps.searchVecIndex(spark, freshPath, qs, 3, 2, tier = "ivf")))
     // tombstones flow into the successor version physically
     val victims = newResults.filter(_._1 == 250L).map(_._2).toSeq.take(2)
-    VectorOps.deleteFromVersionedVecIndex(spark, root,
+    VectorOps.deleteFromVecIndex(spark, root,
       emb.filter(vid.isin(victims: _*)))
-    VectorOps.rebuildVersionedVecIndex(spark, root) // v3
+    VectorOps.rebuildVecIndex(spark, root) // v3
     val v3Dir = s"$root/roots/v00000003"
     assert(!new java.io.File(s"$v3Dir/tombstones").exists(),
       "the successor version must not carry tombstones — rows are dropped physically")
-    val afterDel = ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3))
+    val afterDel = ids(VectorOps.searchVecIndex(spark, root, qs, 3))
     assert(victims.forall(v => !afterDel.exists(_._2 == v)))
     // vacuum: grace window keeps the newest keepLast versions only
-    assert(VectorOps.vacuumVecIndexVersions(spark, root, keepLast = 3) === Nil)
-    assert(VectorOps.vacuumVecIndexVersions(spark, root, keepLast = 2) === Seq(1L))
+    assert(VectorOps.vacuumVecIndex(spark, root, keepLast = 3) === Nil)
+    assert(VectorOps.vacuumVecIndex(spark, root, keepLast = 2) === Seq(1L))
     assert(!new java.io.File(s"$root/roots/v00000001").exists())
     assert(new java.io.File(s"$root/roots/v00000002").exists())
-    assert(ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3)) === afterDel,
+    assert(ids(VectorOps.searchVecIndex(spark, root, qs, 3)) === afterDel,
       "vacuum must never touch the serving version")
     // init refuses to stomp a published root
     val dup = intercept[IllegalArgumentException] {
-      VectorOps.initVersionedVecIndex(emb, root)
+      VectorOps.buildVecIndex(emb, root)
     }
     assert(dup.getMessage.contains("already has a published version"))
   }
@@ -1431,18 +1511,17 @@ class VectorOpsSpec extends SparkSpec {
     val dir = clusteredDir()
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-lease").toString + "/vidx"
-    VectorOps.initVersionedVecIndex(emb.filter(vid < 250), root)
-    VectorOps.appendToVersionedVecIndex(emb.filter(vid >= 250), root)
+    val root = tempDir("graft-lease") + "/vidx"
+    VectorOps.buildVecIndex(emb.filter(vid < 250), root)
+    VectorOps.appendToVecIndex(emb.filter(vid >= 250), root)
     // a REAL race: both writers target v2 concurrently — exactly one may
     // build; the loser must refuse without touching roots/v00000002
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val attempts = Seq(
-      Future(scala.util.Try(VectorOps.rebuildVersionedVecIndex(spark, root))),
-      Future(scala.util.Try(VectorOps.rebuildVersionedVecIndex(spark, root))))
+      Future(scala.util.Try(VectorOps.rebuildVecIndex(spark, root))),
+      Future(scala.util.Try(VectorOps.rebuildVecIndex(spark, root))))
       .map(Await.result(_, 5.minutes))
     val (won, lost) = attempts.partition(_.isSuccess)
     assert(won.size === 1 && lost.size === 1,
@@ -1452,22 +1531,21 @@ class VectorOpsSpec extends SparkSpec {
     // single-writer geometry: the published v2 is bit-equal to a fresh
     // build on the same corpus (an interleaved double-build would not be)
     val qs = emb.filter(vid >= 250 && vid < 260)
-    val freshPath = java.nio.file.Files
-      .createTempDirectory("graft-lease-fresh").toString + "/idx"
+    val freshPath = tempDir("graft-lease-fresh") + "/idx"
     VectorOps.buildVecIndex(emb, freshPath, "ivf")
     def ids(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(ids(VectorOps.searchVersionedVecIndex(spark, root, qs, 3)) ===
+    assert(ids(VectorOps.searchVecIndex(spark, root, qs, 3)) ===
       ids(VectorOps.searchVecIndex(spark, freshPath, qs, 3, 2, tier = "ivf")))
     // crashed-lease takeover: a zombie claim on v3 blocks a fresh-lease
     // rebuild but not one whose TTL has passed
     assert(graft.core.VersionedStore.claim(spark, root, 3L,
       ttlMs = 60L * 60 * 1000))
     val denied = intercept[IllegalArgumentException] {
-      VectorOps.rebuildVersionedVecIndex(spark, root)
+      VectorOps.rebuildVecIndex(spark, root)
     }
     assert(denied.getMessage.contains("build lease"))
-    val v3 = VectorOps.rebuildVersionedVecIndex(spark, root, leaseTtlMs = 0L)
+    val v3 = VectorOps.rebuildVecIndex(spark, root, leaseTtlMs = 0L)
     assert(v3.endsWith("v00000003"))
     assert(VectorOps.currentVecIndexVersion(spark, root) === Some(3L))
   }
@@ -1478,14 +1556,12 @@ class VectorOpsSpec extends SparkSpec {
     val dir = clusteredDir()
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-advisor").toString + "/vidx"
+    val root = tempDir("graft-advisor") + "/vidx"
     // v1 geometry trained on clusters 0-9 only; 10-19 arrive by append —
     // the v43 fixture, where the 2x occupancy rule must fire
-    VectorOps.initVersionedVecIndex(emb.filter(vid < 250), root)
-    VectorOps.appendToVersionedVecIndex(emb.filter(vid >= 250), root)
-    val table = VectorOps.rebuildAdvisor(
-      spark, VectorOps.resolveVecIndexRoot(spark, root)).collect()
+    VectorOps.buildVecIndex(emb.filter(vid < 250), root)
+    VectorOps.appendToVecIndex(emb.filter(vid >= 250), root)
+    val table = VectorOps.rebuildAdvisor(spark, root).collect()
     val ivfRow = table.find(_.getString(0) == "ivf").get
     assert(ivfRow.getAs[String]("verdict") === "retrain",
       s"planted drift must flip the ivf verdict: $ivfRow")
@@ -1495,12 +1571,12 @@ class VectorOpsSpec extends SparkSpec {
     val truth = VectorOps.bruteForceTopK(emb, qs, 3).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     def recallNow(): Double = {
-      val got = VectorOps.searchVersionedVecIndex(spark, root, qs, 3).collect()
+      val got = VectorOps.searchVecIndex(spark, root, qs, 3).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       truth.count(got.contains).toDouble / truth.size
     }
     val before = recallNow()
-    val acted = VectorOps.rebuildVersionedIfAdvised(spark, root)
+    val acted = VectorOps.rebuildVecIndexIfAdvised(spark, root)
     assert(acted.exists(_.endsWith("v00000002")),
       s"retrain verdict must trigger the versioned rebuild, got $acted")
     val after = recallNow()
@@ -1513,17 +1589,16 @@ class VectorOpsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, expr, lit, when}
     val dir = clusteredDir()
     val emb = graft.core.Tables.embeddings(spark, dir)
-    val base = java.nio.file.Files.createTempDirectory("graft-embdrift").toString
+    val base = tempDir("graft-embdrift")
     val root = s"$base/vidx"
     // fresh full-corpus build: the occupancy rule has nothing to flag
-    VectorOps.initVersionedVecIndex(emb, root)
-    val idxDir = VectorOps.resolveVecIndexRoot(spark, root)
+    VectorOps.buildVecIndex(emb, root)
     val sigs = VectorOps.embeddingSignatures(
       emb.withColumn("is_ref", expr("vec_id % 2 = 0")), "vec_id", "is_ref")
     // natural even/odd split: same distribution on both sides -> keep
     val calm = s"$base/sigs_calm"
     sigs.write.mode("overwrite").parquet(calm)
-    val calmRows = VectorOps.rebuildAdvisor(spark, idxDir,
+    val calmRows = VectorOps.rebuildAdvisor(spark, root,
       sigStore = Some(calm)).collect()
     val calmByTier = calmRows.map(r => r.getString(0) -> r.getString(4)).toMap
     assert(calmByTier("embedding") === "keep",
@@ -1535,7 +1610,7 @@ class VectorOpsSpec extends SparkSpec {
     sigs.withColumn("sig",
         when(col("is_ref"), col("sig")).otherwise(lit(0)))
       .write.mode("overwrite").parquet(planted)
-    val driftRows = VectorOps.rebuildAdvisor(spark, idxDir,
+    val driftRows = VectorOps.rebuildAdvisor(spark, root,
       sigStore = Some(planted)).collect()
     val driftByTier = driftRows.map(r => r.getString(0) -> r.getString(4)).toMap
     assert(driftByTier("embedding") === "retrain",
@@ -1544,18 +1619,17 @@ class VectorOpsSpec extends SparkSpec {
       calmByTier.filter(_._1 != "embedding"),
       "only the embedding verdict may move")
     // the wiring decides: with the drifted store the versioned rebuild acts
-    val acted = VectorOps.rebuildVersionedIfAdvised(spark, root,
+    val acted = VectorOps.rebuildVecIndexIfAdvised(spark, root,
       sigStore = Some(planted))
     assert(acted.exists(_.endsWith("v00000002")),
       s"an embedding retrain verdict must trigger the rebuild, got $acted")
     // and stays faithful to the table: it acts exactly when SOME verdict
     // says retrain (on this fixture the occupancy row may legitimately
     // flag the 20-clusters-into-16-cells geometry on its own)
-    val v2rows = VectorOps.rebuildAdvisor(spark,
-      VectorOps.resolveVecIndexRoot(spark, root), sigStore = Some(calm))
+    val v2rows = VectorOps.rebuildAdvisor(spark, root, sigStore = Some(calm))
       .collect()
     val expectAct = v2rows.exists(_.getString(4) == "retrain")
-    val acted2 = VectorOps.rebuildVersionedIfAdvised(spark, root,
+    val acted2 = VectorOps.rebuildVecIndexIfAdvised(spark, root,
       sigStore = Some(calm))
     assert(acted2.isDefined === expectAct,
       s"advisor table ${v2rows.toSeq} vs action $acted2")
@@ -1567,26 +1641,24 @@ class VectorOpsSpec extends SparkSpec {
     val dir = clusteredDir()
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = org.apache.spark.sql.functions.col("vec_id")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-vroot-ivfpq").toString + "/vidx"
+    val root = tempDir("graft-vroot-ivfpq") + "/vidx"
     // v1 geometry trained on clusters 0-9 only; 10-19 arrive by append —
     // the occupancy rule must fire from the codes layout alone
-    VectorOps.initVersionedVecIndex(emb.filter(vid < 250), root, tiers = "ivfpq")
-    VectorOps.appendToVersionedVecIndex(emb.filter(vid >= 250), root)
+    VectorOps.buildVecIndex(emb.filter(vid < 250), root, tiers = "ivfpq")
+    VectorOps.appendToVecIndex(emb.filter(vid >= 250), root)
     val qs = emb.filter(vid < 10)
     def serve(): Set[(Long, Long)] =
-      VectorOps.searchVersionedVecIndex(spark, root, qs, 3).collect()
+      VectorOps.searchVecIndex(spark, root, qs, 3).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val before = serve()
     assert(before.nonEmpty)
-    // lossy root: the in-place rebuild path must refuse loudly
+    // lossy root: a rebuild from its own rows must refuse loudly
     val noRaw = intercept[IllegalArgumentException] {
-      VectorOps.rebuildVersionedVecIndex(spark, root)
+      VectorOps.rebuildVecIndex(spark, root)
     }
     assert(noRaw.getMessage.contains("corpus = Some"))
     // advisor on a residual root: occupancy row from the codes layout
-    val adv = VectorOps.rebuildAdvisor(
-      spark, VectorOps.resolveVecIndexRoot(spark, root)).collect()
+    val adv = VectorOps.rebuildAdvisor(spark, root).collect()
     assert(adv.map(_.getString(0)).toSeq === Seq("ivf"),
       "residual advisor = one occupancy row (drift needs the raw corpus)")
     assert(adv(0).getAs[String]("verdict") === "retrain",
@@ -1594,18 +1666,18 @@ class VectorOpsSpec extends SparkSpec {
     // the advisor-gated retrain on a lossy root: refuses without a
     // source corpus (naming the fix), acts with one
     val noCorpus = intercept[RuntimeException] {
-      VectorOps.rebuildVersionedIfAdvised(spark, root)
+      VectorOps.rebuildVecIndexIfAdvised(spark, root)
     }
     assert(noCorpus.getMessage.contains("corpus"))
-    val acted = VectorOps.rebuildVersionedIfAdvised(spark, root,
+    val acted = VectorOps.rebuildVecIndexIfAdvised(spark, root,
       corpus = Some(emb))
     assert(acted.exists(_.endsWith("v00000002")))
     // delete, then RETRAIN FROM SOURCE (which still contains the victims)
     // — tombstones must carry into the successor version
     val victims = serve().filter(_._1 == 0L).map(_._2).toSeq.take(2)
-    VectorOps.deleteFromVersionedVecIndex(spark, root,
+    VectorOps.deleteFromVecIndex(spark, root,
       emb.filter(vid.isin(victims: _*)))
-    val v3dir = VectorOps.rebuildVersionedVecIndex(spark, root, corpus = Some(emb))
+    val v3dir = VectorOps.rebuildVecIndex(spark, root, corpus = Some(emb))
     assert(v3dir.endsWith("v00000003"))
     val after = serve()
     assert(victims.forall(v => !after.exists(_._2 == v)),

@@ -12,7 +12,7 @@ import org.apache.hadoop.fs.Path
 class VersionedStoreSpec extends SparkSpec {
 
   private def freshRoot(): String =
-    java.nio.file.Files.createTempDirectory("graft-vstore").toString + "/store"
+    tempDir("graft-vstore") + "/store"
 
   test("claim is exclusive under a 16-thread race; release reopens it") {
     val root = freshRoot()
