@@ -23,7 +23,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 object Snapshots {
 
   private def root(table: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-scratch/snapshots/$table"
+    Scratch.durable(s"snapshots/$table")
 
   // the verbs without a session argument reach the filesystem through the
   // session their caller runs under
@@ -65,9 +65,15 @@ object Snapshots {
       }
     }) catch { case Rejected => None }
 
-  /** Time-travel read of snapshot `v`. */
-  def read(s: SparkSession, table: String, v: Int): DataFrame =
+  /** Time-travel read of snapshot `v`. Only a published version is
+    * readable: a directory under `roots/` that the manifest does not list
+    * (a writer mid-build, or debris a failed writer left) is refused.
+    */
+  def read(s: SparkSession, table: String, v: Int): DataFrame = {
+    require(VersionedStore.versions(s, root(table)).contains(v.toLong),
+      s"time travel to $table v$v: no such published snapshot")
     s.read.parquet(VersionedStore.versionDir(root(table), v))
+  }
 
   /** Read the current snapshot. */
   def latest(s: SparkSession, table: String): DataFrame =

@@ -180,7 +180,7 @@ object Relational {
       .join(broadcast(Tables.supplier(s, d)), col("l_suppkey") === col("s_suppkey"), "left")
       .select(col("p_brand"), col("s_acctbal"),
         (col("l_extendedprice") - col("p_retailprice") * col("l_quantity")).as("margin"))
-    val path = s"${tmpDir(s)}/j4_features"
+    val path = graft.core.Scratch.run("j4_features")
     features.write.mode("overwrite").parquet(path)
     s.read.parquet(path).groupBy("p_brand")
       .agg(count(lit(1)).as("n"), decSum(col("margin")).as("total_margin"),
@@ -672,13 +672,6 @@ object Relational {
       Tables.events(s, d).createOrReplaceTempView("events_u3b")
       s.sql("""SELECT user_id, graft_latest_by_seq(value, event_id, event_type = 'error') AS last_value
               |FROM events_u3b GROUP BY user_id HAVING last_value IS NOT NULL""".stripMargin)
-  }
-
-  /** Scratch dir for queries that materialize intermediates. */
-  def tmpDir(s: SparkSession): String = {
-    val d = s"${System.getProperty("java.io.tmpdir")}/graft-scratch"
-    new java.io.File(d).mkdirs()
-    d
   }
 
   /** J11 (beyond reference): AS-OF join — each 'click' event picks up the

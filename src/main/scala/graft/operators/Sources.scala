@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.api.GraftQuery
-import graft.core.Tables
+import graft.core.{Scratch, SessionStaging, Tables}
 import graft.functions.Funcs._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,19 +16,13 @@ import org.apache.spark.sql.types._
   */
 object Sources {
 
-  private def scratch(s: SparkSession, leaf: String): String = {
-    val d = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/$leaf"
-    new java.io.File(d).getParentFile.mkdirs()
-    d
-  }
-
   /** S1: CSV batch load with declared schema + header (part0:223-236).
     * Round-trips the nation dim through CSV to prove the reader path.
     */
   val s1: GraftQuery = GraftQuery(
     "s1_csv_load",
     (s, d) => {
-      val path = scratch(s, "s1_nation_csv")
+      val path = Scratch.run("s1_nation_csv")
       Tables.nation(s, d).write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
       val schema = StructType(Seq(
         StructField("n_nationkey", IntegerType),
@@ -42,7 +36,7 @@ object Sources {
   val s2: GraftQuery = GraftQuery(
     "s2_ndjson_load",
     (s, d) => {
-      val path = scratch(s, "s2_documents_json")
+      val path = Scratch.run("s2_documents_json")
       Tables.documents(s, d).write.mode(SaveMode.Overwrite).json(path)
       val schema = StructType(Seq(
         StructField("doc_id", LongType),
@@ -73,7 +67,7 @@ object Sources {
   val s4: GraftQuery = GraftQuery(
     "s4_parquet_sink_partitioned",
     (s, d) => {
-      val path = scratch(s, "s4_orders_parquet")
+      val path = Scratch.run("s4_orders_parquet")
       Tables.orders(s, d).write.mode(SaveMode.Overwrite)
         .partitionBy("o_orderstatus").parquet(path)
       s.read.parquet(path).groupBy("o_orderstatus")
@@ -89,7 +83,7 @@ object Sources {
   val s8: GraftQuery = GraftQuery(
     "s8_overwrite_sink",
     (s, d) => {
-      val path = scratch(s, "s8_overwrite")
+      val path = Scratch.run("s8_overwrite")
       // first write: garbage subset that must NOT survive
       Tables.orders(s, d).limit(7).write.mode(SaveMode.Overwrite).parquet(path)
       Tables.orders(s, d).filter(col("o_orderstatus") =!= "X")
@@ -106,8 +100,7 @@ object Sources {
   val s14: GraftQuery = GraftQuery(
     "s14_ddl_ctas",
     (s, d) => {
-      val path = scratch(s, "s14_ctas")
-      deleteRecursively(new java.io.File(path)) // CTAS requires an empty location
+      val path = Scratch.run("s14_ctas")
       Tables.customer(s, d).createOrReplaceTempView("customer_s14")
       s.sql("CREATE NAMESPACE IF NOT EXISTS graft_ns")
       s.sql("USE graft_ns")
@@ -133,8 +126,8 @@ object Sources {
   val s15: GraftQuery = GraftQuery(
     "s15_dml_delete",
     (s, d) => {
-      val v1 = scratch(s, "s15_orders_v1")
-      val v2 = scratch(s, "s15_orders_v2")
+      val v1 = Scratch.run("s15_orders_v1")
+      val v2 = Scratch.run("s15_orders_v2")
       Tables.orders(s, d).write.mode(SaveMode.Overwrite).parquet(v1)
       // DELETE FROM orders WHERE o_orderstatus = 'F'  (copy-on-write)
       s.read.parquet(v1).filter(!(col("o_orderstatus") === "F"))
@@ -292,7 +285,7 @@ object Sources {
   val s19: GraftQuery = GraftQuery(
     "s19_zorder_layout",
     (s, d) => {
-      val path = scratch(s, "s19_zorders")
+      val path = Scratch.run("s19_zorders")
       val days = datediff(col("o_orderdate").cast("date"),
         lit("1970-01-01").cast("date")).cast("long")
       // Each dimension is min-max-normalized onto a 16-bit grid BEFORE
@@ -351,8 +344,7 @@ object Sources {
   val s20: GraftQuery = GraftQuery(
     "s20_schema_evolution",
     (s, d) => {
-      val path = scratch(s, "s20_evolved")
-      deleteRecursively(new java.io.File(path))
+      val path = Scratch.run("s20_evolved")
       val cust = Tables.customer(s, d)
       cust.filter(col("c_custkey") % 2 === 0)
         .select(col("c_custkey"), col("c_acctbal"))
@@ -448,8 +440,8 @@ object Sources {
   val s22: GraftQuery = GraftQuery(
     "s22_compaction",
     (s, d) => {
-      val frag = scratch(s, "s22_fragmented")
-      val comp = scratch(s, "s22_compacted")
+      val frag = Scratch.run("s22_fragmented")
+      val comp = Scratch.run("s22_compacted")
       Tables.orders(s, d).repartition(64)
         .write.mode(SaveMode.Overwrite).parquet(frag)
       s.read.parquet(frag).coalesce(4)
@@ -481,8 +473,7 @@ object Sources {
   val s24: GraftQuery = GraftQuery(
     "s24_dynamic_partition_overwrite",
     (s, d) => {
-      val path = scratch(s, "s24_dyn")
-      deleteRecursively(new java.io.File(path)) // fresh seed per build
+      val path = Scratch.run("s24_dyn")
       // dynamic throughout: on the wiped (empty) target the seed write is
       // identical under either mode; only the sentinel write's
       // replace-one-partition behavior depends on it
@@ -550,25 +541,28 @@ object Sources {
            |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
            |FROM events WHERE event_type IN ('error', 'purchase') GROUP BY event_type""".stripMargin))
 
+  /** dataset fingerprint -> the run directory holding s26's seeded fact
+    * and dim; an entry is recorded only after both writes returned.
+    */
+  private val dppSeeds = scala.collection.concurrent.TrieMap.empty[String, String]
+
   /** The DPP join behind [[s26]], exposed for the plan assertion. */
   def dppJoin(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // path keyed by the source dir: a cached fact from another SF would
-    // silently serve the wrong data to this build
-    val sfLeaf = new java.io.File(d).getName
-    val factPath = scratch(s, s"s26_fact_$sfLeaf")
-    val dimPath = scratch(s, s"s26_dim_$sfLeaf")
-    // gate the seed on BOTH success markers: a run that wrote the fact but
-    // died before the dim write must re-seed, not trust a half-built scratch
-    if (!(new java.io.File(s"$factPath/_SUCCESS").exists() &&
-          new java.io.File(s"$dimPath/_SUCCESS").exists())) {
+    // one seed per dataset fingerprint and run: a different or regenerated
+    // dataset never reads another's fact rows
+    val seed = dppSeeds.getOrElseUpdate(SessionStaging.datasetIdent(d, "events.parquet"), {
+      val dir = Scratch.run("s26_seed")
       Tables.events(s, d).write.mode(SaveMode.Overwrite)
-        .partitionBy("event_type").parquet(factPath)
+        .partitionBy("event_type").parquet(s"$dir/fact")
       Seq(("error", "alert"), ("purchase", "alert"), ("click", "noise"),
         ("view", "noise"), ("signup", "noise"))
         .toDF("event_type", "tier")
-        .write.mode(SaveMode.Overwrite).parquet(dimPath)
-    }
+        .write.mode(SaveMode.Overwrite).parquet(s"$dir/dim")
+      dir
+    })
+    val factPath = s"$seed/fact"
+    val dimPath = s"$seed/dim"
     val fact = s.read.parquet(factPath)
     // the dim predicate must be one DPP's isLikelySelective recognizes
     // (string equality qualifies; a bare boolean attribute does not)
@@ -795,7 +789,7 @@ object Sources {
           timestamp_micros(col("us")).as("effective_from"),
           timestamp_micros(col("to_us")).as("effective_to"),
           col("to_us").isNull.as("is_current"))
-      val path = scratch(s, "s30_scd2")
+      val path = Scratch.run("s30_scd2")
       scd.write.mode(SaveMode.Overwrite).parquet(path)
       val dim = s.read.parquet(path)
       val dup = dim.filter(col("is_current")).groupBy("user_id")
@@ -1045,7 +1039,7 @@ object Sources {
   val s37: GraftQuery = GraftQuery(
     "s37_orc_roundtrip",
     (s, d) => {
-      val path = scratch(s, "s37_lineitem_orc")
+      val path = Scratch.run("s37_lineitem_orc")
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice",
           "l_returnflag", "l_linestatus")
@@ -1076,7 +1070,7 @@ object Sources {
   val s38: GraftQuery = GraftQuery(
     "s38_json_sink_roundtrip",
     (s, d) => {
-      val path = scratch(s, "s38_orders_json")
+      val path = Scratch.run("s38_orders_json")
       val proj = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderpriority")

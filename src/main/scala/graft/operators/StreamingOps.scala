@@ -47,29 +47,26 @@ object StreamingOps {
       .withColumn("ts", graft.core.Tables.normalizedTs(schema("ts").dataType))
   }
 
-  /** A build whose streaming queries checkpoint under one directory of its
-    * own, `graft-ckpt/<build>/`, handed out as fresh paths by the
-    * `checkpoint` argument. The directory is removed when the build
-    * returns or throws. By then its queries have terminated (each build
-    * awaits them); a query the build left running because it threw is
-    * stopped first.
+  /** A build whose streaming queries checkpoint under one
+    * [[graft.core.Scratch.scoped]] directory of its own, handed out as fresh
+    * paths by the `checkpoint` argument, so the checkpoints are deleted
+    * when the build returns or throws. By then its queries have terminated
+    * (each build awaits them); a query the build left running because it
+    * threw is stopped before its checkpoint is deleted.
     */
   private[graft] def checkpointed(
       build: (SparkSession, String, () => String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, d) => {
-      val root = new org.apache.hadoop.fs.Path(
-        s"${System.getProperty("java.io.tmpdir")}/graft-ckpt/${java.util.UUID.randomUUID()}")
+    (s, d) => graft.core.Scratch.scoped("ckpt") { root =>
       try build(s, d, () => s"$root/${java.util.UUID.randomUUID()}")
       finally {
         // a query's checkpoint root is not public API; the classic
         // engine's query handle exposes it
         s.streams.active.foreach {
           case q: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
-              if q.streamingQuery.resolvedCheckpointRoot.contains(root.toUri.getPath) =>
+              if q.streamingQuery.resolvedCheckpointRoot.contains(root) =>
             q.stop()
           case _ =>
         }
-        root.getFileSystem(s.sparkContext.hadoopConfiguration).delete(root, true): Unit
       }
     }
 
@@ -130,7 +127,7 @@ object StreamingOps {
   val t6: GraftQuery = GraftQuery(
     "t6_foreachbatch_overwrite",
     checkpointed { (s, d, checkpoint) =>
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t6_state"
+      val path = graft.core.Scratch.run("t6_state")
       val q = eventsStream(s, d)
         .groupBy("event_type").agg(count(lit(1)).as("n"), decSum(col("value")).as("total"))
         .writeStream
@@ -154,7 +151,7 @@ object StreamingOps {
   val t13: GraftQuery = GraftQuery(
     "t13_stream_table_mirror",
     checkpointed { (s, d, checkpoint) =>
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t13_mirror_${java.util.UUID.randomUUID()}"
+      val path = graft.core.Scratch.run("t13_mirror")
       val q = eventsStream(s, d)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .writeStream.format("parquet")
@@ -299,7 +296,7 @@ object StreamingOps {
     checkpointed { (s, d, checkpoint) =>
       val dim = graft.core.Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t21_enrich_${java.util.UUID.randomUUID()}"
+      val path = graft.core.Scratch.run("t21_enrich")
       val q = eventsStream(s, d)
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("user_id"),
@@ -985,9 +982,9 @@ object StreamingOps {
   val t31: GraftQuery = GraftQuery(
     "t31_streaming_capstone",
     checkpointed { (s, d, checkpoint) =>
-      val id = java.util.UUID.randomUUID()
-      val alertPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t31_alerts_$id"
-      val statePath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t31_state_$id"
+      val base = graft.core.Scratch.run("t31")
+      val alertPath = s"$base/alerts"
+      val statePath = s"$base/state"
       val src = eventsStream(s, d)
       // T8: the graceful-shutdown/schema confs must be live on this session
       require(s.conf.get("spark.streaming.stopGracefullyOnShutdown") == "true" &&
@@ -1082,9 +1079,9 @@ object StreamingOps {
   val t32: GraftQuery = GraftQuery(
     "t32_stream_incremental_dedup",
     checkpointed { (s, d, checkpoint) =>
-      val id = java.util.UUID.randomUUID()
-      val seenPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t32_seen_$id"
-      val corpusPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t32_new_$id"
+      val base = graft.core.Scratch.run("t32")
+      val seenPath = s"$base/seen"
+      val corpusPath = s"$base/new"
       s.read.parquet(s"$d/documents.parquet")
         .filter(col("doc_id") % 3 === 0)
         .select(md5(col("text")).as("h")).distinct()
@@ -1198,9 +1195,9 @@ object StreamingOps {
   val t34: GraftQuery = GraftQuery(
     "t34_stream_domain_cap",
     checkpointed { (s, d, checkpoint) =>
-      val id = java.util.UUID.randomUUID()
-      val countsPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t34_counts_$id"
-      val outPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t34_kept_$id"
+      val base = graft.core.Scratch.run("t34")
+      val countsPath = s"$base/counts"
+      val outPath = s"$base/kept"
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1331,9 +1328,9 @@ object StreamingOps {
   val t36: GraftQuery = GraftQuery(
     "t36_stream_keeper_election",
     checkpointed { (s, d, checkpoint) =>
-      val id = java.util.UUID.randomUUID()
-      val statePath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t36_state_$id"
-      val membersPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t36_members_$id"
+      val base = graft.core.Scratch.run("t36")
+      val statePath = s"$base/state"
+      val membersPath = s"$base/members"
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1401,9 +1398,9 @@ object StreamingOps {
   val t37: GraftQuery = GraftQuery(
     "t37_stream_ingest_pipeline",
     checkpointed { (s, d, checkpoint) =>
-      val id = java.util.UUID.randomUUID()
-      val seenPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t37_seen_$id"
-      val outPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t37_out_$id"
+      val base = graft.core.Scratch.run("t37")
+      val seenPath = s"$base/seen"
+      val outPath = s"$base/out"
       val schema = s.read.parquet(s"$d/documents.parquet").schema
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -1452,7 +1449,7 @@ object StreamingOps {
     */
   private def streamGrownIndex(s: SparkSession, d: String,
       checkpoint: () => String, name: String, tiers: String): String = {
-    val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/${name}_${java.util.UUID.randomUUID()}"
+    val path = graft.core.Scratch.run(name)
     VectorOps.buildVecIndex(
       graft.core.Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 0), path, tiers)
     val schema = s.read.parquet(s"$d/embeddings.parquet").schema
@@ -1521,9 +1518,9 @@ object StreamingOps {
   val t39: GraftQuery = GraftQuery(
     "t39_stream_neardup_index",
     checkpointed { (s, d, checkpoint) =>
-      val id = java.util.UUID.randomUUID()
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t39_ndidx_$id"
-      val outPath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t39_out_$id"
+      val base = graft.core.Scratch.run("t39")
+      val path = s"$base/ndidx"
+      val outPath = s"$base/out"
       val docs = graft.core.Tables.documents(s, d)
       TextOps.buildNearDupIndex(docs.filter(col("doc_id") % 3 === 0), path)
       val schema = s.read.parquet(s"$d/documents.parquet").schema
@@ -1639,8 +1636,7 @@ object StreamingOps {
   val t43: GraftQuery = GraftQuery(
     "t43_stream_embedding_drift",
     checkpointed { (s, d, checkpoint) =>
-      val id = java.util.UUID.randomUUID()
-      val statePath = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t43_sigs_$id"
+      val statePath = graft.core.Scratch.run("t43_sigs")
       val schema = s.read.parquet(s"$d/embeddings.parquet").schema
       val q = s.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet")
@@ -1680,8 +1676,7 @@ object StreamingOps {
   val t44: GraftQuery = GraftQuery(
     "t44_stream_checkpoint_recovery",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t44_$id"
+      val base = graft.core.Scratch.run("t44")
       val stage = s"$base/stage"
       val seenPath = s"$base/seen"
       val outPath = s"$base/out"
@@ -1770,8 +1765,7 @@ object StreamingOps {
   val t45: GraftQuery = GraftQuery(
     "t45_stream_drift_retrain",
     checkpointed { (s, d, checkpoint) =>
-      val id = java.util.UUID.randomUUID()
-      val base = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/t45_$id"
+      val base = graft.core.Scratch.run("t45")
       val root = s"$base/vidx"
       val sigPath = s"$base/sigs"
       val emb = graft.core.Tables.embeddings(s, d)

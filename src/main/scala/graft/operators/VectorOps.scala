@@ -2714,7 +2714,7 @@ object VectorOps {
   private def fsOf(s: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private def exists(s: SparkSession, dir: String): Boolean =
+  private[graft] def exists(s: SparkSession, dir: String): Boolean =
     fsOf(s, dir).exists(new org.apache.hadoop.fs.Path(dir))
 
   /** The tiers present in an index version directory — THE layout probe
@@ -2776,14 +2776,13 @@ object VectorOps {
     * (two pollers cold-starting the same scratch root) builds once — the
     * loser waits for the winner's publish. A root that already has a
     * version is refused; [[rebuildVecIndex]] publishes its successors.
-    * `stageKey` as on [[buildVersion]]. Returns the version directory.
+    * Returns the version directory.
     */
   def buildVecIndex(corpus: DataFrame, root: String, tiers: String = "ivf",
-      leaseTtlMs: Long = VersionedStore.DefaultLeaseTtlMs,
-      stageKey: Option[String] = None): String = {
+      leaseTtlMs: Long = VersionedStore.DefaultLeaseTtlMs): String = {
     val ts = tiersNamed(tiers)
     VersionedStore.init(corpus.sparkSession, root, leaseTtlMs)(
-      buildVersion(corpus, _, ts, stageKey))
+      buildVersion(corpus, _, ts))
   }
 
   /** Append new vectors to EVERY tier of the root's current version, each
@@ -2923,22 +2922,14 @@ object VectorOps {
     * a retry racing its zombie) fails loudly instead of interleaving tier
     * overwrites inside the same unpublished directory. A lease left by a
     * crashed writer expires after `leaseTtlMs` and the retry takes over.
-    * `stageKey` is honored only for an external corpus no tombstones
-    * filtered — anything else depends on mutable root state, which
-    * staging keys must never encode, so the staged route switches itself
-    * off rather than trusting the caller.
     */
   def rebuildVecIndex(s: SparkSession, root: String,
       corpus: Option[DataFrame] = None,
-      leaseTtlMs: Long = VersionedStore.DefaultLeaseTtlMs,
-      stageKey: Option[String] = None): String = {
+      leaseTtlMs: Long = VersionedStore.DefaultLeaseTtlMs): String = {
     val cur = resolveVecIndexRoot(s, root)
     val tiers = requireLayout(s, cur, "rebuildVecIndex")
-    val alive = aliveCorpus(s, cur, tiers, corpus)
-    val key = stageKey.filter(_ =>
-      corpus.isDefined && !exists(s, s"$cur/tombstones"))
     VersionedStore.buildNext(s, root, leaseTtlMs)(
-      buildVersion(alive, _, tiers, key))
+      buildVersion(aliveCorpus(s, cur, tiers, corpus), _, tiers))
   }
 
   /** Frozen index geometry (centroid tables, codebooks) as driver arrays,
@@ -3449,43 +3440,35 @@ object VectorOps {
         (bMean - cMean > margin).as("needs_retrain"))
   }
 
-  /** The lifecycle queries' staged-build seam (optimization round 14,
-    * VERDICT r13 #3): each v37–v52 query used to rebuild the SAME
-    * deterministic index-of-a-fixed-corpus-slice from scratch into its
-    * private UUID directory — ~15 mostly-identical full builds per
-    * bench/verify sweep. [[graft.core.SessionStaging]] builds each
-    * distinct (kind, slice, dataset) artifact once per JVM and byte-copies
-    * it into every query's private root; everything a query DISTINCTIVELY
-    * exercises — appends, tombstones, compaction swaps, rebuilds,
-    * advisors, version pointers, leases, vacuum, every search — still
-    * runs live against its own copy, and keys never encode mutable root
-    * state. Nothing survives the JVM (the staging root is deleted on
-    * exit), so every bench/oracle invocation still computes the artifact
-    * from the parquet inputs.
-    */
-  private def stagedEmbIdent(d: String): String =
-    graft.core.SessionStaging.datasetIdent(d, "embeddings.parquet")
-
-  /** A fresh private scratch root for one lifecycle query run. */
-  private def scratchRoot(name: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft-scratch/${name}_${java.util.UUID.randomUUID()}"
-
   /** The corpus slices the lifecycle queries build on, by staging-key name. */
   private val slices: Map[String, Column] = Map("full" -> lit(true),
     "sub23" -> (col("vec_id") % 3 =!= 0), "sub90" -> (col("vec_id") % 10 =!= 0))
 
-  /** Staging key of the `tiers` index over `slice` of `d`'s embeddings. */
-  private def stageKeyOf(d: String, tiers: String, slice: String): String =
-    s"$tiers:$slice:${stagedEmbIdent(d)}"
+  /** The lifecycle queries' staged build: publish the `tiers` index over
+    * `slice` of `d`'s embeddings as v1 of a fresh root (`first`) or as the
+    * successor version of `root`. Each v37–v52 query starts from one of a
+    * few deterministic index-of-a-fixed-slice artifacts, so
+    * [[graft.core.SessionStaging]] builds each distinct (tiers, slice,
+    * dataset) once per JVM and byte-copies it into the query's version
+    * directory. The claim/publish mechanics and everything a query
+    * distinctively exercises (appends, tombstones, compaction, rebuilds,
+    * advisors, leases, vacuum, every search) still run live against its
+    * own copy. Returns the version directory.
+    */
+  private def stagedVersion(s: SparkSession, d: String, root: String,
+      tiers: String, slice: String, first: Boolean): String = {
+    val key = s"$tiers:$slice:${graft.core.SessionStaging.datasetIdent(d, "embeddings.parquet")}"
+    graft.core.SessionStaging.version(s, root, key, first)(
+      buildTiers(Tables.embeddings(s, d).filter(slices(slice)), _, tiersNamed(tiers)))
+  }
 
-  /** A fresh index root at `name_<uuid>` whose v1 is a private copy of
-    * the staged `tiers` index over `slice`.
+  /** A fresh [[graft.core.Scratch.run]] index root at `name_<uuid>` whose
+    * v1 is a private copy of the staged `tiers` index over `slice`.
     */
   private def stagedIndex(s: SparkSession, d: String, name: String,
       tiers: String, slice: String): String = {
-    val root = scratchRoot(name)
-    buildVecIndex(Tables.embeddings(s, d).filter(slices(slice)), root, tiers,
-      stageKey = Some(stageKeyOf(d, tiers, slice)))
+    val root = graft.core.Scratch.run(name)
+    stagedVersion(s, d, root, tiers, slice, first = true)
     root
   }
 
@@ -3881,22 +3864,10 @@ object VectorOps {
   /** Build `tiers` for `corpus` into an unpublished version directory the
     * caller holds the lease on. Debris a crashed predecessor left there is
     * cleared first (the lease makes this caller its only writer).
-    * `stageKey` (lifecycle-query callers only) routes the build through
-    * [[graft.core.SessionStaging]]: the deterministic artifact is built
-    * once per JVM and byte-copied in, while the claim/publish mechanics
-    * stay live. The key must name the corpus slice, the tier layout AND
-    * the dataset fingerprint — never mutable root state.
     */
-  private def buildVersion(corpus: DataFrame, dir: String, tiers: Seq[Tier],
-      stageKey: Option[String]): Unit = {
-    val s = corpus.sparkSession
-    stageKey match {
-      case Some(k) =>
-        graft.core.SessionStaging.into(s, k, dir)(buildTiers(corpus, _, tiers))
-      case None =>
-        remove(s, dir)
-        buildTiers(corpus, dir, tiers)
-    }
+  private def buildVersion(corpus: DataFrame, dir: String, tiers: Seq[Tier]): Unit = {
+    remove(corpus.sparkSession, dir)
+    buildTiers(corpus, dir, tiers)
   }
 
   /** Reclaim versions older than the newest `keepLast` (grace window for
@@ -4122,11 +4093,10 @@ object VectorOps {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val root = grownRoot(s, d, "v50_vroot", "ivfpq")
-      // the retrain kernel is the ivfpq build over the FULL external
+      // the retrain kernel is the ivfpq build over the FULL source
       // corpus (no tombstones here) — the exact artifact v44/v46 stage,
-      // so the staged route reuses it; the lease/publish stays live
-      rebuildVecIndex(s, root, corpus = Some(emb),
-        stageKey = Some(stageKeyOf(d, "ivfpq", "full")))
+      // so the staged successor reuses it; the lease/publish stays live
+      stagedVersion(s, d, root, "ivfpq", "full", first = false)
       searchVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2)
     },
@@ -4181,7 +4151,7 @@ object VectorOps {
     (s, d) => {
       val emb = Tables.embeddings(s, d)
       val path = stagedIndex(s, d, "v52_advidx", "ivf", "full")
-      val sigPath = scratchRoot("v52_sigs")
+      val sigPath = graft.core.Scratch.run("v52_sigs")
       embeddingSignatures(
           emb.withColumn("is_ref", expr("vec_id % 2 = 0")), "vec_id", "is_ref")
         .write.mode("overwrite").parquet(sigPath)

@@ -131,22 +131,20 @@ object QueryService {
     * exactly (doubles), so the snapshot serves bit-identical results to
     * live scoring and the same oracles gate both.
     */
-  /** Scratch snapshots outlive the JVM (shared tmpdir), so their identity
-    * must change whenever their CONTENT would: the fingerprint folds the
-    * dataset (absolute path + source file size + mtime — a regenerated
-    * corpus at the same path re-keys) with a CODE-VERSION salt. Bump the
-    * salt with any change to the scoring/index-build semantics, or a
-    * snapshot built by the old code keeps serving under the new oracle.
+  /** The serving roots are [[graft.core.Scratch.durable]]: they outlive
+    * the JVM, so their name must change whenever their CONTENT would. It
+    * folds the dataset fingerprint
+    * ([[graft.core.SessionStaging.datasetIdent]] of the source file — a
+    * regenerated corpus at the same path re-keys) and a CODE-VERSION salt.
+    * Bump the salt with any change to the scoring/index-build semantics,
+    * or a snapshot built by the old code keeps serving under the new
+    * oracle.
     */
   private val ServeScratchSalt = "r14a"
 
-  private def scratchIdent(src: java.io.File): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(
-        s"$ServeScratchSalt:${src.getAbsolutePath}:${src.length}:${src.lastModified}"
-          .getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(16)
-  }
+  private def serveRoot(kind: String, d: String, file: String): String =
+    graft.core.Scratch.durable(
+      s"${kind}_${ServeScratchSalt}_${graft.core.SessionStaging.datasetIdent(d, file)}")
 
   /** The BM25 snapshot is a VERSIONED root (VERDICT r12 #1 — the same
     * manifest-pointer discipline as [[vecIndexRoot]]): a crashed
@@ -157,10 +155,8 @@ object QueryService {
     * mixed, mirroring the stable store the reference dashboard polls
     * (webapp/buses-dashboard/bq_service.py:33-50).
     */
-  private[graft] def docIndexRootOf(d: String): String = {
-    val ident = scratchIdent(new java.io.File(d, "documents.parquet"))
-    s"${System.getProperty("java.io.tmpdir")}/graft-scratch/serve_bm25_$ident"
-  }
+  private[graft] def docIndexRootOf(d: String): String =
+    serveRoot("serve_bm25", d, "documents.parquet")
 
   /** How many top rows the snapshot's `head/` tier holds — the largest
     * page the serving routes may answer from the head alone (docSearch
@@ -191,45 +187,39 @@ object QueryService {
 
   /** First materialization of the versioned BM25 store: score `docs`
     * into roots/v1 and publish the pointer (single-writer; a racing
-    * initializer waits for the winner's publish). `stageKey` routes the
-    * deterministic scoring through [[graft.core.SessionStaging]]
-    * (built once per JVM, byte-copied per caller) — the claim/publish
-    * mechanics stay live; keys must name the corpus slice and dataset
-    * fingerprint, never mutable state.
+    * initializer waits for the winner's publish).
     */
   def initVersionedDocIndex(docs: DataFrame, root: String,
-      leaseTtlMs: Long = graft.core.VersionedStore.DefaultLeaseTtlMs,
-      stageKey: Option[String] = None): String =
+      leaseTtlMs: Long = graft.core.VersionedStore.DefaultLeaseTtlMs): String =
     graft.core.VersionedStore.init(docs.sparkSession, root, leaseTtlMs)(
-      dir => stageKey match {
-        case Some(k) => graft.core.SessionStaging.into(
-          docs.sparkSession, k, dir)(buildDocSnapshot(docs, _))
-        case None => buildDocSnapshot(docs, dir)
-      })
+      buildDocSnapshot(docs, _))
 
   /** Re-materialize the BM25 store from `docs` into version N+1 and flip
     * the pointer — pinned in-flight pages stay fully-old, the next
     * resolution is fully-new, and two concurrent re-materializations
     * cannot interleave (the [[graft.core.VersionedStore.buildNext]]
-    * lease). Returns the new version directory. `stageKey` as on
-    * [[initVersionedDocIndex]].
+    * lease). Returns the new version directory.
     */
   def rematerializeDocIndex(s: SparkSession, root: String, docs: DataFrame,
-      leaseTtlMs: Long = graft.core.VersionedStore.DefaultLeaseTtlMs,
-      stageKey: Option[String] = None): String =
+      leaseTtlMs: Long = graft.core.VersionedStore.DefaultLeaseTtlMs): String =
     graft.core.VersionedStore.buildNext(s, root, leaseTtlMs)(
-      dir => stageKey match {
-        case Some(k) => graft.core.SessionStaging.into(s, k, dir)(
-          buildDocSnapshot(docs, _))
-        case None => buildDocSnapshot(docs, dir)
-      })
+      buildDocSnapshot(docs, _))
 
-  /** Staging-key fingerprint of the doc corpus (same identity components
-    * as [[scratchIdent]]; no code salt — staged artifacts never outlive
-    * the JVM that built them).
+  /** The staged BM25 build behind the serving root and the doc-arm
+    * lifecycle gates: publish the snapshot of `d`'s corpus (`sub90`: the
+    * doc_id % 10 != 0 slice) as v1 of a fresh `root` (`first`) or as its
+    * successor version. The deterministic scoring runs once per JVM
+    * through [[graft.core.SessionStaging]] and is byte-copied into the
+    * version directory; the claim/publish mechanics stay live. Returns the
+    * version directory.
     */
-  private def stagedDocIdent(d: String): String =
-    graft.core.SessionStaging.datasetIdent(d, "documents.parquet")
+  private[graft] def stagedDocVersion(s: SparkSession, d: String, root: String,
+      slice: String, first: Boolean): String = {
+    val docs = Tables.documents(s, d)
+    val sliced = if (slice == "sub90") docs.filter(col("doc_id") % 10 =!= 0) else docs
+    val key = s"bm25:$slice:${graft.core.SessionStaging.datasetIdent(d, "documents.parquet")}"
+    graft.core.SessionStaging.version(s, root, key, first)(buildDocSnapshot(sliced, _))
+  }
 
   /** The pinned current BM25 snapshot directory (resolve once per
     * request — the [[vecIndexRoot]] contract).
@@ -247,8 +237,7 @@ object QueryService {
     */
   def refreshDocIndex(s: SparkSession, d: String): String = {
     val root = docIndexRootOf(d)
-    val dir = rematerializeDocIndex(s, root, graft.core.Tables.documents(s, d),
-      stageKey = Some(s"bm25:full:${stagedDocIdent(d)}"))
+    val dir = stagedDocVersion(s, d, root, "full", first = false)
     vacuumDocIndexVersions(s, root, keepLast = 2, minAgeMs = vacuumGraceMs)
     dir
   }
@@ -258,8 +247,7 @@ object QueryService {
     // serialize first-build within the JVM (same contract as vecIndexRoot)
     root.intern.synchronized {
       if (graft.core.VersionedStore.currentVersion(s, root).isEmpty)
-        initVersionedDocIndex(graft.core.Tables.documents(s, d), root,
-          stageKey = Some(s"bm25:full:${stagedDocIdent(d)}"))
+        stagedDocVersion(s, d, root, "full", first = true)
     }
     resolveDocIndexRoot(s, root)
   }
@@ -317,16 +305,12 @@ object QueryService {
   val serveDocPinnedRead: graft.api.GraftQuery = graft.api.GraftQuery(
     "serve_doc_pinned_read",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/sdoc_pin_$id"
-      val docs = graft.core.Tables.documents(s, d)
-      initVersionedDocIndex(docs.filter(col("doc_id") % 10 =!= 0), root,
-        stageKey = Some(s"bm25:sub90:${stagedDocIdent(d)}"))
+      val root = graft.core.Scratch.run("sdoc_pin")
+      stagedDocVersion(s, d, root, "sub90", first = true)
       // the concurrent poller: pointer resolved NOW (v1)...
       val pinned = docPage(s, resolveDocIndexRoot(s, root), 10)
       // ...re-materialization publishes v2 before the page executes
-      rematerializeDocIndex(s, root, docs,
-        stageKey = Some(s"bm25:full:${stagedDocIdent(d)}"))
+      stagedDocVersion(s, d, root, "full", first = false)
       pinned
     },
     Some(s"""SELECT doc_id, bm25 FROM (${bm25SubsetSql("WHERE doc_id % 10 != 0")})
@@ -341,13 +325,9 @@ object QueryService {
   val serveDocFlipVacuum: graft.api.GraftQuery = graft.api.GraftQuery(
     "serve_doc_flip_vacuum",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/sdoc_flip_$id"
-      val docs = graft.core.Tables.documents(s, d)
-      initVersionedDocIndex(docs.filter(col("doc_id") % 10 =!= 0), root,
-        stageKey = Some(s"bm25:sub90:${stagedDocIdent(d)}"))
-      rematerializeDocIndex(s, root, docs,
-        stageKey = Some(s"bm25:full:${stagedDocIdent(d)}"))
+      val root = graft.core.Scratch.run("sdoc_flip")
+      stagedDocVersion(s, d, root, "sub90", first = true)
+      stagedDocVersion(s, d, root, "full", first = false)
       val removed = vacuumDocIndexVersions(s, root, keepLast = 1)
       require(removed == Seq(1L), s"vacuum must reclaim exactly v1, got $removed")
       docPage(s, resolveDocIndexRoot(s, root), 10)
@@ -368,10 +348,8 @@ object QueryService {
     * size + mtime + code salt), so a regenerated corpus at the same
     * path re-keys and re-builds.
     */
-  private[graft] def serveRootOf(d: String): String = {
-    val ident = scratchIdent(new java.io.File(d, "embeddings.parquet"))
-    s"${System.getProperty("java.io.tmpdir")}/graft-scratch/serve_vecidx_$ident"
-  }
+  private[graft] def serveRootOf(d: String): String =
+    serveRoot("serve_vecidx", d, "embeddings.parquet")
 
   private[graft] def vecIndexRoot(s: SparkSession, d: String): String = {
     val root = serveRootOf(d)
@@ -428,7 +406,7 @@ object QueryService {
 
   /** WARM-PATH driver caches (VERDICT r11 task 2): the serving index
     * root is immutable once built — its identity is a content
-    * fingerprint ([[scratchIdent]]), so a changed corpus re-keys the
+    * fingerprint ([[serveRoot]]), so a changed corpus re-keys the
     * root and these caches miss by construction. The index geometry (K
     * centroids, PqKs codebook rows) is not cached here: the
     * [[graft.operators.VectorOps.loadIvfCentroids]] /
@@ -512,16 +490,17 @@ object QueryService {
     * planned searches make at construction; serving scratch roots never
     * see deletes, but if one ever does (vecIndexRoot is visible inside
     * the package), bypass the cache so the delete contract — gone at
-    * the NEXT query — holds. One File.exists per poll: every route reads
-    * the pinned version's one tombstone table.
+    * the NEXT query — holds. One existence probe per poll, through the
+    * path's Hadoop filesystem like every other index read: every route
+    * reads the pinned version's one tombstone table.
     */
-  private def tombstoned(path: String): Boolean =
-    new java.io.File(s"$path/tombstones").exists()
+  private[graft] def tombstoned(s: SparkSession, path: String): Boolean =
+    graft.operators.VectorOps.exists(s, s"$path/tombstones")
 
   def vecSearch(s: SparkSession, d: String, k: Int = 3,
       tier: String = "ivf"): DataFrame = {
     val path = vecIndexRoot(s, d)
-    if (tombstoned(path)) vecSearchPlan(s, d, path, k, tier)
+    if (tombstoned(s, path)) vecSearchPlan(s, d, path, k, tier)
     else capped(servedPlans).getOrElseUpdate((s, s"vec:${epoched(path)}", k, tier),
       vecSearchPlan(s, d, path, k, tier))
   }
@@ -764,7 +743,7 @@ object QueryService {
     // documents-only re-materialization (new lex version, same
     // embeddings) re-keys instead of serving the stale lexical arm
     val lexDir = bm25Root(s, d)
-    if (tombstoned(path)) hybridSearchPlan(s, d, path, lexDir, k, cand)
+    if (tombstoned(s, path)) hybridSearchPlan(s, d, path, lexDir, k, cand)
     else capped(servedPlans).getOrElseUpdate(
       (s, s"hybrid:${epoched(path)}:$lexDir:$cand", k, ""),
       hybridSearchPlan(s, d, path, lexDir, k, cand))
@@ -876,13 +855,9 @@ object QueryService {
   val serveHybridRemat: graft.api.GraftQuery = graft.api.GraftQuery(
     "serve_hybrid_remat",
     (s, d) => {
-      val id = java.util.UUID.randomUUID()
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/sdoc_remat_$id"
-      val docs = graft.core.Tables.documents(s, d)
-      initVersionedDocIndex(docs.filter(col("doc_id") % 10 =!= 0), root,
-        stageKey = Some(s"bm25:sub90:${stagedDocIdent(d)}"))
-      rematerializeDocIndex(s, root, docs,
-        stageKey = Some(s"bm25:full:${stagedDocIdent(d)}"))
+      val root = graft.core.Scratch.run("sdoc_remat")
+      stagedDocVersion(s, d, root, "sub90", first = true)
+      stagedDocVersion(s, d, root, "full", first = false)
       hybridSearchPlan(s, d, vecIndexRoot(s, d),
         resolveDocIndexRoot(s, root), 10, 20)
     },

@@ -30,7 +30,7 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 10
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft-scale/x$factor"
+    val out = graft.core.Scratch.durable(s"scale/x$factor")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString).toInt
     val spark = Sessions.local(cpus)
@@ -61,7 +61,7 @@ object ScaleBench {
     // is deliberately absent: its PAIR output is Θ(g²) by semantics on an
     // identical cluster (see TextOps.dupSetPairs) — the group/component
     // forms below are the scale path, and they must stay ≤ linear.
-    val skewOut = s"${System.getProperty("java.io.tmpdir")}/graft-scale/skew$factor"
+    val skewOut = graft.core.Scratch.durable(s"scale/skew$factor")
     ScaleProbe.replicate(spark, base, skewOut, factor, skewed = true)
     val skewOps = Seq("x1_exact_dedup_md5", "x5_minhash_lsh_dupsets",
       "x11_dupset_components", "x26_span_dedup", "x36_curate_pipeline",

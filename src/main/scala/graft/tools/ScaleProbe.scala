@@ -172,7 +172,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = if (args.length > 1) args(1).toInt else 8
-    val out = s"${System.getProperty("java.io.tmpdir")}/graft-scale/x$factor"
+    val out = graft.core.Scratch.durable(s"scale/x$factor")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString).toInt
     val spark = Sessions.local(cpus)

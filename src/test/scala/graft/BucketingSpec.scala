@@ -24,6 +24,27 @@ class BucketingSpec extends SparkSpec {
       s"fact scan must carry a runtime partition filter from the dim side:\n$plan")
   }
 
+  test("s26 seeds per dataset fingerprint: two datasets with the same leaf " +
+    "name each match their own oracle in one JVM") {
+    val events = graft.core.Tables.events(spark, sf)
+    def dataset(parent: String, rows: org.apache.spark.sql.DataFrame): String = {
+      val d = s"${tempDir(parent)}/sf"
+      rows.write.parquet(s"$d/events.parquet")
+      d
+    }
+    val a = dataset("graft-s26-a", events)
+    val b = dataset("graft-s26-b", events.filter(col("event_id") % 3 =!= 0))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sortBy(_._1).toSeq
+    def oracle(d: String) = rows(graft.core.Tables.events(spark, d)
+      .filter(col("event_type").isin("error", "purchase"))
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("n"), graft.functions.Funcs.decSum(col("value")).as("total")))
+    assert(oracle(a) !== oracle(b), "the two datasets must differ")
+    for (d <- Seq(a, b, a))
+      assert(rows(Sources.dppJoin(spark, d)) === oracle(d), d)
+  }
+
   test("s27 dim filter becomes a runtime bloom filter on the fact side") {
     val plan = Sources.bloomJoin(spark, sf).queryExecution.executedPlan.toString
     // Spark 4.1 renders the injected pair as might_contain (fact side) fed

@@ -63,7 +63,7 @@ class QualitySpec extends SparkSpec {
     assert(Snapshots.versions(t) == Seq(1))
     // rejected candidate fully cleaned up: only v1 remains on disk, and
     // no build lease is left behind
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft-scratch/snapshots/$t"
+    val root = graft.core.Scratch.durable(s"snapshots/$t")
     val left = new java.io.File(s"$root/roots").list().toSeq
     assert(left == Seq("v00000001"), s"unexpected residue: $left")
     val pointers = new java.io.File(s"$root/manifest").list().filterNot(_.startsWith(".")).toSeq

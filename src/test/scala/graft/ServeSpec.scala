@@ -211,6 +211,17 @@ class ServeSpec extends SparkSpec {
     assert(QueryService.vacuumGraceMs === 80000L)
   }
 
+  test("the tombstone probe goes through the path's filesystem, so a " +
+    "file: URI answers like a plain path") {
+    val dir = tempDir("graft-tomb")
+    val uri = new java.io.File(dir).toURI.toString
+    assert(uri.startsWith("file:"))
+    assert(!QueryService.tombstoned(spark, uri))
+    assert(new java.io.File(dir, "tombstones").mkdirs())
+    assert(QueryService.tombstoned(spark, uri))
+    assert(QueryService.tombstoned(spark, dir))
+  }
+
   test("a crashed first build's debris under an unpublished BM25 root does " +
     "not block the staged init: it is replaced and the oracle page serves") {
     import org.apache.spark.sql.functions.col
@@ -220,10 +231,7 @@ class ServeSpec extends SparkSpec {
     assert(debris.mkdirs())
     java.nio.file.Files.write(new java.io.File(debris, "part-0.parquet").toPath,
       "torn".getBytes)
-    val dir = QueryService.initVersionedDocIndex(
-      graft.core.Tables.documents(spark, sf), root,
-      stageKey = Some("bm25:full:" +
-        graft.core.SessionStaging.datasetIdent(sf, "documents.parquet")))
+    val dir = QueryService.stagedDocVersion(spark, sf, root, "full", first = true)
     assert(dir === QueryService.resolveDocIndexRoot(spark, root))
     assert(!new java.io.File(debris, "part-0.parquet").exists())
     val page = spark.read.parquet(s"$dir/head")

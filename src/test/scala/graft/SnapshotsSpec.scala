@@ -161,7 +161,7 @@ class SnapshotsSpec extends SparkSpec {
     // a writer that crashed mid-write: partial data in the next,
     // unpublished version directory
     val dead = new java.io.File(
-      s"${System.getProperty("java.io.tmpdir")}/graft-scratch/snapshots/$t/roots/v00000002")
+      graft.core.Scratch.durable(s"snapshots/$t/roots/v00000002"))
     dead.mkdirs()
     java.nio.file.Files.write(new java.io.File(dead, "part-00000.parquet")
       .toPath, Array[Byte](0, 1, 2))
@@ -169,6 +169,8 @@ class SnapshotsSpec extends SparkSpec {
     assert(Snapshots.versions(t) == Seq(1))
     assert(Snapshots.latest(spark, t).collect().map(_.getString(1)).toSeq
       == Seq("a"))
+    // time travel refuses the unpublished version number
+    intercept[IllegalArgumentException](Snapshots.read(spark, t, 2))
     // the next real write publishes OVER the debris without picking up
     // its files: v2 holds exactly the new rows
     assert(Snapshots.write(spark, t, Seq((2, "b")).toDF("k", "v")) == 2)

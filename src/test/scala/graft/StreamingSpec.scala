@@ -423,10 +423,8 @@ class StreamingSpec extends SparkSpec {
 
   test("t32 incremental dedup replay-twice gate: re-running the whole stream " +
     "over the grown seen table ingests ZERO docs, and seen grows by distinct-new only") {
-    val id = java.util.UUID.randomUUID()
-    val tmp = System.getProperty("java.io.tmpdir")
-    val seenPath = s"$tmp/graft-scratch/t32spec_seen_$id"
-    val corpusPath = s"$tmp/graft-scratch/t32spec_new_$id"
+    val seenPath = graft.core.Scratch.run("t32spec_seen")
+    val corpusPath = graft.core.Scratch.run("t32spec_new")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.filter($"doc_id" % 3 === 0)
       .select(md5($"text").as("h")).distinct()
@@ -455,10 +453,8 @@ class StreamingSpec extends SparkSpec {
 
   test("t34 stream domain cap: quotas survive micro-batches, cold counts " +
     "bootstrap, and the two-batch election equals a greedy hash replay") {
-    val id = java.util.UUID.randomUUID()
-    val tmp = System.getProperty("java.io.tmpdir")
-    val countsPath = s"$tmp/graft-scratch/t34spec_counts_$id" // never created
-    val outPath = s"$tmp/graft-scratch/t34spec_kept_$id"
+    val countsPath = graft.core.Scratch.run("t34spec_counts") // never created
+    val outPath = graft.core.Scratch.run("t34spec_kept")
     val docs = (0 until 120).map { i =>
       (i.toLong, "t", if (i < 100) "mega" else "tiny")
     }.toDF("doc_id", "text", "source")
@@ -494,10 +490,8 @@ class StreamingSpec extends SparkSpec {
 
   test("t32 cold start: the first batch against a nonexistent seen store " +
     "bootstraps an empty table and ingests every distinct doc") {
-    val id = java.util.UUID.randomUUID()
-    val tmp = System.getProperty("java.io.tmpdir")
-    val seenPath = s"$tmp/graft-scratch/t32cold_seen_$id" // never created
-    val corpusPath = s"$tmp/graft-scratch/t32cold_new_$id"
+    val seenPath = graft.core.Scratch.run("t32cold_seen") // never created
+    val corpusPath = graft.core.Scratch.run("t32cold_new")
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val distinctHashes = docs.select(md5($"text")).distinct().count()
     graft.operators.StreamingOps.incrementalDedupBatch(docs, seenPath, corpusPath)
@@ -514,10 +508,8 @@ class StreamingSpec extends SparkSpec {
   test("t36 keeper election: a better member in a LATER batch dethrones " +
     "the keeper; a worse one does not; counts accumulate") {
     import SparkSpec.spark.implicits._
-    val id = java.util.UUID.randomUUID()
-    val tmp = System.getProperty("java.io.tmpdir")
-    val statePath = s"$tmp/graft-scratch/t36_state_$id" // never created
-    val membersPath = s"$tmp/graft-scratch/t36_members_$id"
+    val statePath = graft.core.Scratch.run("t36_state") // never created
+    val membersPath = graft.core.Scratch.run("t36_members")
     def verdicts() = graft.operators.StreamingOps
       .keeperElectionVerdicts(spark, statePath, membersPath)
       .collect().map(r => r.getLong(0) ->
@@ -556,10 +548,8 @@ class StreamingSpec extends SparkSpec {
   test("t37 ingest hygiene: blocklisted docs never land, PII is scrubbed " +
     "before the dedup key, and replays ingest zero") {
     import SparkSpec.spark.implicits._
-    val id = java.util.UUID.randomUUID()
-    val tmp = System.getProperty("java.io.tmpdir")
-    val seenPath = s"$tmp/graft-scratch/t37_seen_$id" // cold
-    val outPath = s"$tmp/graft-scratch/t37_out_$id"
+    val seenPath = graft.core.Scratch.run("t37_seen") // cold
+    val outPath = graft.core.Scratch.run("t37_out")
     def out() = spark.read.parquet(outPath).collect()
       .map(r => r.getLong(0) -> (r.getAs[String]("h"),
         r.getAs[Int]("n_emails"), r.getAs[Int]("n_phones"))).toMap
@@ -600,10 +590,8 @@ class StreamingSpec extends SparkSpec {
     // the restarted two-file run equals the SAME ladder run in plain
     // batch mode (A then B through ingestHygieneBatch, fresh stores) —
     // checkpoint recovery changed nothing about the semantics
-    val id = java.util.UUID.randomUUID()
-    val tmp = System.getProperty("java.io.tmpdir")
-    val seenPath = s"$tmp/graft-scratch/t44spec_seen_$id"
-    val outPath = s"$tmp/graft-scratch/t44spec_out_$id"
+    val seenPath = graft.core.Scratch.run("t44spec_seen")
+    val outPath = graft.core.Scratch.run("t44spec_out")
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     def injected(half: org.apache.spark.sql.DataFrame) =
@@ -623,10 +611,10 @@ class StreamingSpec extends SparkSpec {
       "stop/restart across the checkpoint diverged from the batch ladder")
   }
 
-  /** The names under `${java.io.tmpdir}/graft-ckpt`. */
+  /** The checkpoint roots (`ckpt_*`) under this JVM's scratch run root. */
   private def checkpointDirs(): Set[String] =
-    Option(new java.io.File(System.getProperty("java.io.tmpdir"), "graft-ckpt").list())
-      .fold(Set.empty[String])(_.toSet)
+    Option(new java.io.File(graft.core.Scratch.run("probe")).getParentFile.list())
+      .fold(Set.empty[String])(_.filter(_.startsWith("ckpt_")).toSet)
 
   test("t11_throughput and the t31 two-query supervisor leave no checkpoint directory") {
     val before = checkpointDirs()
