@@ -93,9 +93,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
-    val spark = Sessions.local(cpus)
+    val cpus = Sessions.defaultCores
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
 
     // JVM/codegen warmup on the smallest SF so per-query timings measure the

@@ -11,8 +11,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     // the session Bench and the serving layer run (graft.core.Sessions):
     // the oracle gate checks the configuration that actually ships
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    val spark = graft.core.Sessions.local(cpus)
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Failed queries must stay visible in the artifact: r6 lost 75 entries

@@ -8,9 +8,11 @@ import java.util.UUID
   * lifetimes.
   *
   *   - [[durable]]: a named root under `${tmpdir}/graft-scratch` that other
-  *     processes share on purpose (the serving indexes, the snapshot
-  *     tables, the scaled datasets). It outlives the JVM, so its name must
-  *     change whenever its content would.
+  *     processes share on purpose: the serving indexes (`serve/`), the
+  *     snapshot tables (`snapshots/`) and the scaled datasets (`scale/`).
+  *     It outlives the JVM, so its name must change whenever its content
+  *     would. Anything else directly under `graft-scratch` was left by
+  *     earlier code and is deleted by this JVM's first durable call.
   *   - [[run]]: a fresh directory under this JVM's run root,
   *     `${tmpdir}/graft-run/<pid>-<token>`, for outputs that a returned
   *     DataFrame reads lazily. One shutdown hook deletes the run root; a
@@ -26,8 +28,22 @@ class Scratch private[graft] (tmp: String) {
   private val runs = new File(tmp, "graft-run")
   private val pid = ProcessHandle.current().pid()
 
-  /** `${tmpdir}/graft-scratch/<name>`, shared across processes and runs. */
-  def durable(name: String): String = s"$tmp/graft-scratch/$name"
+  private val durableKinds = Set("serve", "snapshots", "scale")
+
+  private lazy val sweptLegacy: Unit =
+    Option(new File(tmp, "graft-scratch").listFiles()).getOrElse(Array.empty[File])
+      .filterNot(f => durableKinds(f.getName)).foreach(delete)
+
+  /** `${tmpdir}/graft-scratch/<name>`, shared across processes and runs;
+    * `name` starts with one of the durable kinds (`serve/`, `snapshots/`,
+    * `scale/`).
+    */
+  def durable(name: String): String = {
+    require(durableKinds(name.takeWhile(_ != '/')),
+      s"durable root '$name' is outside ${durableKinds.mkString("/, ")}/")
+    sweptLegacy
+    s"$tmp/graft-scratch/$name"
+  }
 
   private lazy val runRoot: File = {
     // a live pid owns one root; any other root under its number was left

@@ -42,7 +42,13 @@ object Sessions {
     */
   private val CodegenCacheEntries = 1000
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+  /** The core count of every tool main: `SPARK_GRAFT_CPUS` when set, the
+    * host's processor count otherwise.
+    */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = defaultCores): SparkSession =
     configure(SparkSession.builder().master(s"local[$cores]"), cores).getOrCreate()
 
   def configure(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =

@@ -3052,10 +3052,14 @@ object VectorOps {
 
   /** [[searchVecIndex]] over an already-resolved version directory `path`
     * — the seam a serving layer that pins the version itself calls.
+    * `compactForServe` picks the serving posture of the ivf, pq and rerank
+    * routes (see [[searchIvfIndexPlanned]]): QueryService's arms pass
+    * true; the facade keeps the parallel plan.
     */
   private[graft] def searchPinned(s: SparkSession, path: String,
       queries: DataFrame, k: Int, probes: Int, tier: String,
-      rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame = {
+      rerankCandidates: Int = 32, excludeSelf: Boolean = true,
+      compactForServe: Boolean = false): DataFrame = {
     graft.plans.GraftExtensions.register(s)
     val tiers = layoutOf(s, path)
     val route = tier match {
@@ -3075,11 +3079,11 @@ object VectorOps {
     val qs = collectQueryVectors(queries)
     route match {
       case "ivf" => searchIvfIndexPlanned(s, path, qs, loadIvfCentroids(s, path),
-        k, probes, excludeSelf)
+        k, probes, excludeSelf, compactForServe)
       case "pq" => searchPqIndexPlanned(s, path, qs, loadPqCodebook(s, path),
-        k, excludeSelf)
+        k, excludeSelf, compactForServe)
       case "rerank" => searchRerankPlanned(s, path, qs, loadPqCodebook(s, path),
-        k, rerankCandidates, excludeSelf)
+        k, rerankCandidates, excludeSelf, compactForServe)
       case _ => searchIvfPqPlanned(s, path, qs, loadIvfCentroids(s, path),
         loadPqCodebook(s, path), k, probes, excludeSelf)
     }
@@ -3101,7 +3105,6 @@ object VectorOps {
   private[graft] def searchIvfIndexPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cents: Array[(Long, Array[Double])],
       k: Int, probes: Int = 2, excludeSelf: Boolean = true,
-      postings: Option[DataFrame] = None,
       compactForServe: Boolean = false): DataFrame = {
     graft.plans.GraftExtensions.register(s)
     import s.implicits._
@@ -3112,10 +3115,7 @@ object VectorOps {
     // the probed cell ids (bounded by #queries × probes) become a static
     // partition filter on the postings scan = file-level pruning
     val cellIds = probedRows.map(_._3).distinct.toArray
-    // `postings` lets a serving layer reuse one resolved relation across
-    // polls (the file listing is cached inside the DataFrame) — valid ONLY
-    // for an immutable root; None re-lists.
-    val postingsRaw = postings.getOrElse(tierRows(s, path, IvfTier))
+    val postingsRaw = tierRows(s, path, IvfTier)
     val pruned = postingsRaw.filter(col("cluster").isInCollection(
       cellLiterals(postingsRaw, cellIds.toSeq)))
     val scoredRows = aliveRows(s, path, pruned, "c_id")
@@ -3189,22 +3189,20 @@ object VectorOps {
   private[graft] def searchRerankPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cb: Array[Array[Double]],
       k: Int, rerankCandidates: Int = 32, excludeSelf: Boolean = true,
-      codes: Option[DataFrame] = None,
-      postings: Option[DataFrame] = None,
       compactForServe: Boolean = false): DataFrame = {
     import s.implicits._
     graft.plans.GraftExtensions.register(s)
     // stage 1: code-only candidate generation
     val cand = searchPqIndexPlanned(s, path, qsArr, cb, rerankCandidates,
-      excludeSelf, codes, compactForServe).select("q_id", "neighbor_id")
+      excludeSelf, compactForServe).select("q_id", "neighbor_id")
     // stage 2: fetch raw vectors for candidate ids only — a broadcast
     // id join against the alive postings, then exact cosine + per-query
     // rank
-    val postingsDf = postings.getOrElse(tierRows(s, path, IvfTier))
     val qLocal = s.createDataset(qsArr.toSeq.map { case (id, e) => (id, e.toSeq) })
       .toDF("q_id", "q_e")
     val fetched = broadcast(cand)
-      .join(aliveRows(s, path, postingsDf, "c_id"), col("neighbor_id") === col("c_id"))
+      .join(aliveRows(s, path, tierRows(s, path, IvfTier), "c_id"),
+        col("neighbor_id") === col("c_id"))
       .join(broadcast(qLocal), "q_id")
       .withColumn("cos", cosine("q_e", "c_e"))
     // the serving posture: see searchIvfIndexPlanned's compactForServe
@@ -3221,11 +3219,10 @@ object VectorOps {
   private[graft] def searchPqIndexPlanned(s: SparkSession, path: String,
       qs: Array[(Long, Array[Double])], cb: Array[Array[Double]],
       k: Int, excludeSelf: Boolean = true,
-      codes: Option[DataFrame] = None,
       compactForServe: Boolean = false): DataFrame = {
     import s.implicits._
     val bc = s.sparkContext.broadcast((cb, qs, excludeSelf))
-    val scored0 = aliveCodes(s, path, codes).as[(Long, Seq[Int])]
+    val scored0 = aliveCodes(s, path).as[(Long, Seq[Int])]
       .mapPartitions { it =>
         val (cbL, qL, exclSelf) = bc.value
         val pqM = cbL(0).length / PqS
@@ -3357,14 +3354,9 @@ object VectorOps {
       col("cluster").cast("long").as("cluster"),
       pqCodes(res.sparkSession, cb)(col("r")).as("codes"))
 
-  /** Alive (vec_id, codes) rows of a flat PQ tier — `base` lets a serving
-    * layer pass its cached relation.
-    */
-  private def aliveCodes(s: SparkSession, path: String,
-      base: Option[DataFrame] = None): DataFrame = {
-    val codes = base.getOrElse(tierRows(s, path, PqTier)).select("vec_id", "codes")
-    aliveRows(s, path, codes, "vec_id")
-  }
+  /** Alive (vec_id, codes) rows of a flat PQ tier. */
+  private def aliveCodes(s: SparkSession, path: String): DataFrame =
+    aliveRows(s, path, tierRows(s, path, PqTier).select("vec_id", "codes"), "vec_id")
 
   /** Index-order cosine — bit-identical to DuckDB's
     * list_cosine_similarity and the fused graft_cosine Expression (the

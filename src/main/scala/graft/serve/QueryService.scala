@@ -131,9 +131,9 @@ object QueryService {
     * exactly (doubles), so the snapshot serves bit-identical results to
     * live scoring and the same oracles gate both.
     */
-  /** The serving roots are [[graft.core.Scratch.durable]]: they outlive
-    * the JVM, so their name must change whenever their CONTENT would. It
-    * folds the dataset fingerprint
+  /** The serving roots are [[graft.core.Scratch.durable]] roots under
+    * `serve/`: they outlive the JVM, so their name must change whenever
+    * their CONTENT would. It folds the dataset fingerprint
     * ([[graft.core.SessionStaging.datasetIdent]] of the source file — a
     * regenerated corpus at the same path re-keys) and a CODE-VERSION salt.
     * Bump the salt with any change to the scoring/index-build semantics,
@@ -144,7 +144,7 @@ object QueryService {
 
   private def serveRoot(kind: String, d: String, file: String): String =
     graft.core.Scratch.durable(
-      s"${kind}_${ServeScratchSalt}_${graft.core.SessionStaging.datasetIdent(d, file)}")
+      s"serve/${kind}_${ServeScratchSalt}_${graft.core.SessionStaging.datasetIdent(d, file)}")
 
   /** The BM25 snapshot is a VERSIONED root (VERDICT r12 #1 — the same
     * manifest-pointer discipline as [[vecIndexRoot]]): a crashed
@@ -244,12 +244,19 @@ object QueryService {
 
   private def bm25Root(s: SparkSession, d: String): String = {
     val root = docIndexRootOf(d)
-    // serialize first-build within the JVM (same contract as vecIndexRoot)
+    builtRoot(s, root)(stagedDocVersion(s, d, root, "full", first = true))
+  }
+
+  /** The pinned current version of a serving root, building v1 first if
+    * nothing is published yet. The first build is serialized within the
+    * JVM, so concurrent pollers never overwrite each other's in-flight
+    * build of the same version directory.
+    */
+  private def builtRoot(s: SparkSession, root: String)(build: => Unit): String = {
     root.intern.synchronized {
-      if (graft.core.VersionedStore.currentVersion(s, root).isEmpty)
-        stagedDocVersion(s, d, root, "full", first = true)
+      if (graft.core.VersionedStore.currentVersion(s, root).isEmpty) build
     }
-    resolveDocIndexRoot(s, root)
+    graft.core.VersionedStore.resolve(s, root)
   }
 
   /** The pointer is still resolved per poll (a flip must land at the
@@ -259,8 +266,7 @@ object QueryService {
     */
   def docSearch(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val dir = bm25Root(s, d)
-    capped(servedPlans).getOrElseUpdate((s, s"doc:${epoched(dir)}", k, ""),
-      docPage(s, dir, k))
+    cachedPlan((s, s"doc:${epoched(dir)}", k, ""))(docPage(s, dir, k))
   }
 
   /** The search endpoint as a driver-checked query: the x31 scoring SQL
@@ -284,6 +290,12 @@ object QueryService {
   private def bm25SubsetSql(where: String): String =
     graft.operators.TextOps.bm25OracleSql(where)
 
+  /** The snapshot tiers' schema. Reads pass it, so building a page runs no
+    * footer-inference job.
+    */
+  private val DocScoreSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id BIGINT, bm25 DOUBLE")
+
   /** The deterministic top-k page over a pinned snapshot directory — the
     * exact [[docSearch]] serving shape, parameterized by version dir.
     */
@@ -291,9 +303,9 @@ object QueryService {
     // any page inside the head tier is answered from the one-file head
     // (it holds the global top-ServeHeadK by construction); larger pages
     // fall back to the full score table
-    val src = if (k <= ServeHeadK) relationOf(s, dir, "head")
-              else relationOf(s, dir, "scores")
-    src.orderBy(col("bm25").desc, col("doc_id")).limit(k)
+    s.read.schema(DocScoreSchema)
+      .parquet(s"$dir/${if (k <= ServeHeadK) "head" else "scores"}")
+      .orderBy(col("bm25").desc, col("doc_id")).limit(k)
   }
 
   /** The v47-style race gate on the DOC arm: a page RESOLVED against the
@@ -353,14 +365,8 @@ object QueryService {
 
   private[graft] def vecIndexRoot(s: SparkSession, d: String): String = {
     val root = serveRootOf(d)
-    val V = graft.operators.VectorOps
-    // serialize first-build within the JVM (concurrent pollers must not
-    // overwrite each other's in-flight build of the same version dir)
-    root.intern.synchronized {
-      if (V.currentVecIndexVersion(s, root).isEmpty)
-        V.buildVecIndex(graft.core.Tables.embeddings(s, d), root, tiers = "both")
-    }
-    V.resolveVecIndexRoot(s, root)
+    builtRoot(s, root)(graft.operators.VectorOps.buildVecIndex(
+      graft.core.Tables.embeddings(s, d), root, tiers = "both"))
   }
 
   /** Operator maintenance hook: advisor-gated retrain of the serving
@@ -404,33 +410,22 @@ object QueryService {
   private[graft] def vacuumGraceMs: Long =
     math.max(30000L, 4L * longestPollMs.get)
 
-  /** WARM-PATH driver caches (VERDICT r11 task 2): the serving index
-    * root is immutable once built — its identity is a content
-    * fingerprint ([[serveRoot]]), so a changed corpus re-keys the
-    * root and these caches miss by construction. The index geometry (K
-    * centroids, PqKs codebook rows) is not cached here: the
-    * [[graft.operators.VectorOps.loadIvfCentroids]] /
-    * [[graft.operators.VectorOps.loadPqCodebook]] loaders keep the one
-    * geometry cache every search route shares, keyed by each geometry
-    * directory's file listing. On top of it this service caches the
-    * fixed demo query batch, the BM25 top page, resolved relations and
-    * constructed plans, so a warm poll runs only the route's own data
-    * scan — bit-identical to the facade routes (the same planned
-    * searches over the same arrays; the same oracles gate both).
+  /** THE warm-path driver cache: constructed serving plans, plus the
+    * k-independent parts of a hybrid plan ([[hybridSearch]]). A poll
+    * re-EXECUTES a cached plan (data is never cached), so the driver-side
+    * construction and analysis of an identical request is paid once. The
+    * key folds every pinned input the plan reads (the [[epoched]] version
+    * directories, k and the tier), and serving roots are named by a
+    * content fingerprint ([[serveRoot]]), so a changed corpus, a version
+    * flip or a same-JVM mutation re-keys it. A miss builds through the
+    * same route planner as the facade
+    * ([[graft.operators.VectorOps.searchPinned]]), which reads the index
+    * geometry from the one geometry cache every search route shares; the
+    * results are therefore bit-identical to the facade routes, and the
+    * same oracles gate both.
     */
-  private val servedQueryVecs =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Array[Double])]]
-  private val servedLexPages =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), Seq[(Long, Double)]]
-  // resolved base relations (file listing + footer schema live inside the
-  // DataFrame) — reusable per poll because version directories are
-  // immutable under SERVING; the maintenance verbs that do change one in
-  // place (append/delete) bump the directory's mutation epoch, which
-  // [[epoched]] folds into every relation and plan key, so a same-JVM
-  // mutation re-keys these caches instead of serving stale file listings
-  // (ADVICE r12)
-  private val servedRelations = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
+  private val servedPlans = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, Int, String), DataFrame]
 
   /** The cache-key form of an index version directory: the path plus its
     * in-JVM mutation epoch (see
@@ -443,48 +438,17 @@ object QueryService {
   private def epoched(dir: String): String =
     s"$dir@${graft.operators.VectorOps.mutationEpochOf(dir)}"
 
-  /** Backstop bound on every driver cache: past
-    * [[graft.operators.VectorOps.DriverCacheEntries]] entries a map is
-    * dropped wholesale — a refill costs one poll's planning reads, a leak
-    * costs the JVM.
+  /** The cached plan under `key`, built on a miss. Past
+    * [[graft.operators.VectorOps.DriverCacheEntries]] entries the map is
+    * dropped wholesale — a refill costs one poll's planning, a leak costs
+    * the JVM.
     */
-  private def capped[M <: scala.collection.concurrent.TrieMap[_, _]](m: M): M = {
-    if (m.size > graft.operators.VectorOps.DriverCacheEntries) m.clear()
-    m
+  private def cachedPlan(key: (SparkSession, String, Int, String))(
+      plan: => DataFrame): DataFrame = {
+    if (servedPlans.size > graft.operators.VectorOps.DriverCacheEntries)
+      servedPlans.clear()
+    servedPlans.getOrElseUpdate(key, plan)
   }
-
-  /** Cached parquet relation for a tier under `root` (or the root itself
-    * with `sub` empty), keyed by the root's mutation epoch.
-    */
-  private def relationOf(s: SparkSession, root: String,
-      sub: String = ""): DataFrame = {
-    val dir = if (sub.isEmpty) root else s"$root/$sub"
-    capped(servedRelations).getOrElseUpdate((s, s"${epoched(root)}#$sub"),
-      s.read.parquet(dir))
-  }
-
-  private def demoQueriesOf(s: SparkSession, d: String, path: String,
-      maxId: Long) =
-    capped(servedQueryVecs).getOrElseUpdate(s"$path#lt$maxId",
-      graft.operators.VectorOps.collectQueryVectors(
-        graft.core.Tables.embeddings(s, d).filter(col("vec_id") < maxId)))
-
-  /** Vector-search endpoint: top-k neighbors of the demo query vectors
-    * (vec_id < 5 — the per-request parameterization seam), served from
-    * the persisted index through the planned variants of the
-    * [[graft.operators.VectorOps.searchVecIndex]] routes — `tier` picks
-    * the route per query budget (ivf = raw probed cells, pq = code-only
-    * ADC, rerank = codes nominate + raw rerank), the cached demo queries
-    * and the shared geometry cache supply the planning inputs. The
-    * build-once/query-many serving shape next to [[docSearch]]'s text arm
-    * (a production deployment fuses the two with x62's RRF).
-    */
-  // the constructed serving DataFrames themselves — a poll re-EXECUTES
-  // the plan (data is never cached), but the driver-side construction
-  // and analysis of an identical request is paid once; keyed by EVERY
-  // fingerprinted input the plan reads, so a changed corpus re-keys
-  private val servedPlans = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, String), DataFrame]
 
   /** A cached serving plan freezes the tombstone-existence decision the
     * planned searches make at construction; serving scratch roots never
@@ -497,37 +461,24 @@ object QueryService {
   private[graft] def tombstoned(s: SparkSession, path: String): Boolean =
     graft.operators.VectorOps.exists(s, s"$path/tombstones")
 
+  /** Vector-search endpoint: top-k neighbors of the demo query vectors
+    * (vec_id < 5 — the per-request parameterization seam), served from
+    * the persisted index through the facade's route planner
+    * ([[graft.operators.VectorOps.searchPinned]]) in its compact serving
+    * posture — `tier` picks the route per query budget (ivf = raw probed
+    * cells, pq = code-only ADC, rerank = codes nominate + raw rerank,
+    * auto = the best the layout supports). The build-once/query-many
+    * serving shape next to [[docSearch]]'s text arm (a production
+    * deployment fuses the two with x62's RRF).
+    */
   def vecSearch(s: SparkSession, d: String, k: Int = 3,
       tier: String = "ivf"): DataFrame = {
     val path = vecIndexRoot(s, d)
-    if (tombstoned(s, path)) vecSearchPlan(s, d, path, k, tier)
-    else capped(servedPlans).getOrElseUpdate((s, s"vec:${epoched(path)}", k, tier),
-      vecSearchPlan(s, d, path, k, tier))
-  }
-
-  private def vecSearchPlan(s: SparkSession, d: String, path: String,
-      k: Int, tier: String): DataFrame = {
-    val qs = demoQueriesOf(s, d, path, 5L)
-    val V = graft.operators.VectorOps
-    tier match {
-      case "ivf" =>
-        V.searchIvfIndexPlanned(s, path, qs, V.loadIvfCentroids(s, path), k,
-          probes = 2, postings = Some(relationOf(s, path, "postings")),
-          compactForServe = true)
-      case "pq" =>
-        V.searchPqIndexPlanned(s, path, qs, V.loadPqCodebook(s, path), k,
-          codes = Some(relationOf(s, path, "codes")),
-          compactForServe = true)
-      case "rerank" =>
-        V.searchRerankPlanned(s, path, qs, V.loadPqCodebook(s, path), k,
-          codes = Some(relationOf(s, path, "codes")),
-          postings = Some(relationOf(s, path, "postings")),
-          compactForServe = true)
-      case other =>
-        V.searchPinned(s, path,
-          graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 5),
-          k = k, probes = 2, tier = other)
-    }
+    def plan = graft.operators.VectorOps.searchPinned(s, path,
+      graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 5), k,
+      probes = 2, tier = tier, compactForServe = true)
+    if (tombstoned(s, path)) plan
+    else cachedPlan((s, s"vec:${epoched(path)}", k, tier))(plan)
   }
 
   /** Recall@3 of every serving route against the exact baseline — the
@@ -744,24 +695,51 @@ object QueryService {
     // embeddings) re-keys instead of serving the stale lexical arm
     val lexDir = bm25Root(s, d)
     if (tombstoned(s, path)) hybridSearchPlan(s, d, path, lexDir, k, cand)
-    else capped(servedPlans).getOrElseUpdate(
-      (s, s"hybrid:${epoched(path)}:$lexDir:$cand", k, ""),
-      hybridSearchPlan(s, d, path, lexDir, k, cand))
+    else {
+      val vecKey = s"hybrid:${epoched(path)}"
+      val key = s"$vecKey:$lexDir:$cand"
+      // a plan for a new k cuts the cached fused ranking of its version
+      // pair, and a new lex version fuses its page with the cached vector
+      // arm, so neither collects anything the cached plans already hold
+      cachedPlan((s, key, k, ""))(
+        cachedPlan((s, key, cand, "fused"))(fusedRanking(s, lexDir, cand,
+          cachedPlan((s, vecKey, cand, "vec"))(vectorArm(s, d, path, cand))))
+          .filter(col("fused_rank") <= k))
+    }
   }
 
   private[graft] def hybridSearchPlan(s: SparkSession, d: String, path: String,
-      lexDir: String, k: Int, cand: Int): DataFrame = {
+      lexDir: String, k: Int, cand: Int): DataFrame =
+    fusedRanking(s, lexDir, cand, vectorArm(s, d, path, cand))
+      .filter(col("fused_rank") <= k)
+
+  /** (doc_id, vec_rank) of the demo query vector's top-`cand` neighbors
+    * on the persisted index's ivf route.
+    */
+  private def vectorArm(s: SparkSession, d: String, path: String,
+      cand: Int): DataFrame =
+    graft.operators.VectorOps.searchPinned(s, path,
+        graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 1), k = cand,
+        probes = 2, tier = "ivf", compactForServe = true)
+      .withColumn("vec_rank", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))))
+      .select(col("neighbor_id").as("doc_id"), col("vec_rank"))
+
+  /** Every doc of the lexical top-`cand` and the vector arm `vtop`, with
+    * both ranks, the RRF score and the fused rank.
+    */
+  private def fusedRanking(s: SparkSession, lexDir: String, cand: Int,
+      vtop: DataFrame): DataFrame = {
     import s.implicits._
-    // the lexical top page is a driver-cached TakeOrdered over the PINNED
-    // immutable BM25 snapshot version: sorted (bm25 desc, doc_id)
-    // driver-side — the identical total order the window rank would
-    // assign — and re-entered as a local relation, so a warm poll runs no
-    // lex scan
-    val lexPage = capped(servedLexPages).getOrElseUpdate((lexDir, cand),
-      docPage(s, lexDir, cand)
-        .select("doc_id", "bm25").collect()
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        .sortBy { case (id, bm) => (-bm, id) })
+    // the lexical top page is collected once per plan, a TakeOrdered over
+    // the PINNED immutable BM25 snapshot version: sorted (bm25 desc,
+    // doc_id) driver-side — the identical total order the window rank
+    // would assign — and re-entered as a local relation, so a warm poll
+    // runs no lex scan
+    val lexPage = docPage(s, lexDir, cand)
+      .select("doc_id", "bm25").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      .sortBy { case (id, bm) => (-bm, id) }
     // single partition on BOTH fusion inputs: SinglePartition satisfies
     // the join's and the fused window's clustering requirements, so the
     // whole fusion runs exchange-free (the vec arm is already compacted
@@ -769,21 +747,12 @@ object QueryService {
     val lex = s.createDataset(lexPage.zipWithIndex
         .map { case ((id, _), i) => (id, i + 1) })
       .toDF("doc_id", "lex_rank").coalesce(1)
-    val V = graft.operators.VectorOps
-    val vtop = V.searchIvfIndexPlanned(s, path, demoQueriesOf(s, d, path, 1L),
-        V.loadIvfCentroids(s, path), k = cand, probes = 2,
-        postings = Some(relationOf(s, path, "postings")),
-        compactForServe = true)
-      .withColumn("vec_rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))))
-      .select(col("neighbor_id").as("doc_id"), col("vec_rank"))
     lex.join(vtop, Seq("doc_id"), "full_outer")
       .withColumn("rrf",
         coalesce(lit(1.0) / (lit(60.0) + col("lex_rank").cast("double")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(60.0) + col("vec_rank").cast("double")), lit(0.0)))
       .withColumn("fused_rank",
         row_number().over(Window.orderBy(col("rrf").desc, col("doc_id"))))
-      .filter(col("fused_rank") <= k)
   }
 
   /** The hybrid endpoint as a driver-checked query: x62's lexical arm and
@@ -878,7 +847,7 @@ object ServeCli {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val cmd = if (args.length > 1) args(1) else "bus_lines"
-    val spark = graft.core.Sessions.local(8)
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val df = cmd match {
       case "bus_lines" => QueryService.busLines(spark, sfDir)

@@ -38,8 +38,7 @@ object OptProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Sessions.local(cpus)
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     args.lift(1) match {

@@ -9,7 +9,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val names = if (args.length > 1) args.drop(1).toSet else Set.empty[String]
-    val spark = Sessions.local(8)
+    val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     graft.SparkEntry.registry
       .filter(q => names.isEmpty || names(q.name))

@@ -132,7 +132,7 @@ object PlanFingerprint {
 object PlanSnapshot {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.core.Sessions.local(8)
+    val spark = graft.core.Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
     val lines = graft.SparkEntry.registry
       .filter(q => graft.Bench.headline(q.name))

@@ -4,8 +4,8 @@ import graft.core.QueryMetrics
 import graft.serve.QueryService
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The one timing path of graft's tools: Bench, OptProbe, ScaleProbe and
-  * ScaleBench take their samples here, and the serving poll loop and its
+/** The one timing path of graft's tools: Bench, OptProbe and ScaleBench
+  * take their samples here, and the serving poll loop and its
   * four arms are defined here once.
   *
   * The sample count is fixed, whatever the samples say: a slow sample —

@@ -34,6 +34,21 @@ class ScratchSpec extends SparkSpec {
     assert(fresh.getParentFile.getParentFile === runs)
   }
 
+  test("the first durable call deletes legacy entries and keeps the durable roots") {
+    val base = tempDir("graft-scratch-legacy")
+    val scratch = new File(base, "graft-scratch")
+    val legacy = Seq("s1_nation_csv", s"sdoc_x_${java.util.UUID.randomUUID()}",
+      "serve_vecidx_0cc175b9c0f1b6a831c399e269772661")
+      .map(n => new File(scratch, n))
+    val roots = Seq("serve", "snapshots", "scale").map(n => new File(scratch, s"$n/r"))
+    (legacy ++ roots).foreach(d => assert(new File(d, "part-0").mkdirs()))
+    val dir = new Scratch(base).durable("serve/idx")
+    assert(dir === s"$base/graft-scratch/serve/idx")
+    legacy.foreach(d => assert(!d.exists(), s"legacy entry ${d.getName} must be swept"))
+    roots.foreach(d => assert(new File(d, "part-0").isDirectory, s"$d must stay"))
+    intercept[IllegalArgumentException](new Scratch(base).durable("s1_nation_csv"))
+  }
+
   test("scoped deletes its directory when the body returns or throws") {
     var seen = ""
     assert(Scratch.scoped("spec") { dir =>

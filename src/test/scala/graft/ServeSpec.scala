@@ -66,7 +66,7 @@ class ServeSpec extends SparkSpec {
     // cached planned routes == the uncached facade routes, bit for bit
     val emb = graft.core.Tables.embeddings(spark, sf)
     val qs = emb.filter(col("vec_id") < 5)
-    for (t <- Seq("ivf", "pq", "rerank")) {
+    for (t <- Seq("ivf", "pq", "rerank", "auto")) {
       val viaFacade = graft.operators.VectorOps.searchVecIndex(
         spark, QueryService.serveRootOf(sf), qs, 3, 2, tier = t)
       assert(ids(QueryService.vecSearch(spark, sf, tier = t)) === ids(viaFacade),
@@ -165,7 +165,16 @@ class ServeSpec extends SparkSpec {
     val root = QueryService.serveRootOf(sf)
     def rows(): Set[String] =
       QueryService.vecSearch(spark, sf).collect().map(_.toString).toSet
+    // the hybrid arm reads the same vector root; each page is checked
+    // against a plan built from scratch over the same pinned versions
+    def page(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def hybrid(): Seq[String] = page(QueryService.hybridSearch(spark, sf))
+    def freshHybrid(): Seq[String] = page(QueryService.hybridSearchPlan(spark, sf,
+      QueryService.vecIndexRoot(spark, sf),
+      QueryService.resolveDocIndexRoot(spark, QueryService.docIndexRootOf(sf)), 10, 20))
     val baseline = rows() // warms relation + plan caches
+    val hybBaseline = hybrid()
     // append clones of query 0's vector under fresh ids INTO the current
     // version directory — without the epoch bump the cached plan would
     // keep serving the stale file listing and never surface them
@@ -176,14 +185,21 @@ class ServeSpec extends SparkSpec {
     val appended = rows()
     assert(appended.exists(_.contains("9000000")),
       s"a warm poll after an append into the current version must serve the appended row")
+    val hybAppended = hybrid()
+    assert(hybAppended === freshHybrid(),
+      "a hybrid poll after an append must equal a freshly built plan")
+    assert(hybAppended !== hybBaseline,
+      "the appended clone of the hybrid query vector must move the vector arm")
     // delete them again: the tombstone contract (gone at the NEXT query)
     graft.operators.VectorOps.deleteFromVecIndex(spark, root,
       clones.select("vec_id"))
     assert(rows() === baseline)
+    assert(hybrid() === hybBaseline, "deleted ids must leave the hybrid page")
     // compaction publishes the rewritten postings as the next version;
     // polls re-key to it and results must not move a bit
     graft.operators.VectorOps.compactVecIndex(spark, root)
     assert(rows() === baseline)
+    assert(hybrid() === hybBaseline)
   }
 
   test("poll-derived vacuum grace: a slow pinned reader survives a vacuum " +
