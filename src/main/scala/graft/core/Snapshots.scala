@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal snapshot/time-travel surface at the [[Tables]] seam — the shape
   * of Iceberg's metadata inspection and `VERSION AS OF` reads (reference
@@ -19,6 +20,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * readable until [[vacuum]] reclaims it. At 100 TB this is exactly
   * Iceberg's model (immutable snapshots + metadata pointer), so swapping
   * the manifest for the Iceberg catalog keeps every call site.
+  *
+  * Each version also records its schema, as Iceberg's metadata does: a
+  * read passes the recorded schema to the scan instead of inferring it
+  * from the data files' footers, so reading a snapshot runs no Spark job
+  * of its own.
   */
 object Snapshots {
 
@@ -41,9 +47,43 @@ object Snapshots {
     new Path(VersionedStore.buildNext(s, root(table),
       VersionedStore.DefaultLeaseTtlMs)(build)).getName.drop(1).toInt
 
+  /** The schema a version records next to its data files. The `_` prefix
+    * hides it from Spark's file index, so a scan of the version directory
+    * reads only the data.
+    */
+  private val SchemaFile = "_schema.json"
+
+  /** Write `df`'s rows into the version directory `dir`, then its schema.
+    * The schema recorded is the one a reader of `dir` sees for `df`'s
+    * schema (parquet reads every column back nullable), taken from a scan
+    * that lists `dir` without inferring anything. A write that fails
+    * leaves no schema file: Overwrite empties `dir` before writing.
+    */
+  private def writeVersion(s: SparkSession, df: DataFrame, dir: String): Unit = {
+    df.write.mode(SaveMode.Overwrite).parquet(dir)
+    val p = new Path(dir, SchemaFile)
+    val out = fsOf(p).create(p, true)
+    try out.write(s.read.schema(df.schema).parquet(dir).schema.json.getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** Scan the version directory `dir` with its recorded schema. A version
+    * written without one (by older code) falls back to footer inference.
+    */
+  private def readVersion(s: SparkSession, dir: String): DataFrame = {
+    val p = new Path(dir, SchemaFile)
+    val recorded =
+      try {
+        val in = fsOf(p).open(p)
+        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    recorded.fold(s.read)(json =>
+      s.read.schema(DataType.fromJson(json).asInstanceOf[StructType])).parquet(dir)
+  }
+
   /** Write `df` as the next snapshot; returns the new version id. */
   def write(s: SparkSession, table: String, df: DataFrame): Int =
-    commit(s, table)(df.write.mode(SaveMode.Overwrite).parquet(_))
+    commit(s, table)(writeVersion(s, df, _))
 
   private case object Rejected extends RuntimeException("audit rejected the batch")
 
@@ -58,8 +98,8 @@ object Snapshots {
   def writeAudited(s: SparkSession, table: String, df: DataFrame)
       (audit: DataFrame => Boolean): Option[Int] =
     try Some(commit(s, table) { dir =>
-      df.write.mode(SaveMode.Overwrite).parquet(dir)
-      if (!audit(s.read.parquet(dir))) {
+      writeVersion(s, df, dir)
+      if (!audit(readVersion(s, dir))) {
         fsOf(new Path(dir)).delete(new Path(dir), true)
         throw Rejected
       }
@@ -72,12 +112,12 @@ object Snapshots {
   def read(s: SparkSession, table: String, v: Int): DataFrame = {
     require(VersionedStore.versions(s, root(table)).contains(v.toLong),
       s"time travel to $table v$v: no such published snapshot")
-    s.read.parquet(VersionedStore.versionDir(root(table), v))
+    readVersion(s, VersionedStore.versionDir(root(table), v))
   }
 
   /** Read the current snapshot. */
   def latest(s: SparkSession, table: String): DataFrame =
-    s.read.parquet(VersionedStore.resolve(s, root(table)))
+    readVersion(s, VersionedStore.resolve(s, root(table)))
 
   /** MERGE (upsert) of `source` into the latest snapshot on `key` —
     * Iceberg/Delta `MERGE INTO` with the update-all / insert-all branches:
@@ -87,23 +127,46 @@ object Snapshots {
     *
     * Faithful to the MERGE cardinality rule: a source with duplicate keys
     * would update one target row twice nondeterministically, so it is
-    * rejected (Iceberg raises the same error). Copy-on-write: one
-    * anti-join + union written as the next snapshot. At 100 TB the
-    * anti-join shuffles on the merge key — or needs no exchange at all if
-    * the table is bucketed on it — and a real table format would rewrite
-    * only the files containing matches; this seam is unchanged either way.
+    * rejected (Iceberg raises the same error) with an
+    * IllegalArgumentException, and no version is published. The check
+    * runs inside the merge write ([[merged]]), not as a query of its own.
+    * Copy-on-write: one anti-join + union written as the next snapshot.
+    * At 100 TB the anti-join shuffles on the merge key — or needs no
+    * exchange at all if the table is bucketed on it — and a real table
+    * format would rewrite only the files containing matches; this seam is
+    * unchanged either way.
     */
   def merge(s: SparkSession, table: String, source: DataFrame, key: Seq[String]): Int = {
+    val duplicates = s"MERGE source has duplicate rows on key ${key.mkString(",")}"
+    try write(s, table, merged(latest(s, table), source, key, duplicates))
+    catch {
+      case e: Exception if Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).exists(c => Option(c.getMessage).exists(_.contains(duplicates))) =>
+        throw new IllegalArgumentException(s"requirement failed: $duplicates", e)
+    }
+  }
+
+  /** The rows of a MERGE of `source` into `target` on `key`, with the
+    * cardinality rule checked as they are computed: each source row's
+    * first column is woven through an `assert_true` that its key occurs
+    * once in `source` (a window count, so null keys group together as in
+    * the rule), raising `duplicates` otherwise — the [[applyChangelog]]
+    * pattern, the assert inside a VALUE that is written, so it runs for
+    * every source row. It is not woven into the anti-join's key side: a
+    * sort-merge anti-join need not read every right-side row. The
+    * target is only anti-joined against the source keys, so with keys
+    * small enough to broadcast the target is never shuffled.
+    */
+  private[graft] def merged(target: DataFrame, source: DataFrame, key: Seq[String],
+      duplicates: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    // one pass over source for the cardinality check (countDistinct over a
-    // struct so null key fields still count), instead of distinct+count twice
-    val r = source.agg(count(lit(1)),
-      countDistinct(struct(key.map(col): _*))).head()
-    require(r.getLong(0) == r.getLong(1),
-      s"MERGE source has duplicate rows on key ${key.mkString(",")}")
-    val untouched = latest(s, table)
-      .join(source.select(key.map(col): _*), key, "left_anti")
-    write(s, table, untouched.unionByName(source))
+    val first = source.columns.head
+    val once = count(lit(1)).over(Window.partitionBy(key.map(col): _*)) === 1L
+    val checked = source.withColumn(first,
+      when(assert_true(once, lit(duplicates)).isNull, col(first)))
+    target.join(source.select(key.map(col): _*), key, "left_anti")
+      .unionByName(checked)
   }
 
   /** Changelog between two snapshots — the CDC read (Iceberg changelog /

@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Table IO layer over the driver-generated test data (TESTDATA.md): one
   * Parquet file per table at `sfDir`.
@@ -12,14 +13,36 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the query layer only ever sees a DataFrame, so swapping the loader is
   * enough. Scans stay declarative (`spark.read.parquet`) so Catalyst keeps
   * predicate pushdown + column pruning.
+  *
+  * A table's schema is table metadata, as in Iceberg: a read never opens
+  * data-file footers to learn it. The footers are read once per file
+  * ([[schemaOf]], cached per listing stamp) and every load passes the
+  * schema explicitly, so a load plans without a Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  private val schemas = new ListingCache[StructType]
+
+  /** The schema parquet inference gives `path`, inferred once (a one-task
+    * Spark job reading the footers) and then served from a
+    * [[ListingCache]] while the path's files are unchanged. Inference
+    * depends on `spark.sql.legacy.parquet.nanosAsLong` (nanos timestamps
+    * surface as BIGINT under it), so its value is part of the key; a file
+    * rewritten in place misses and is inferred again.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    schemas(spark, path,
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")) {
+      spark.read.parquet(path).schema
+    }
 
   /** The events table's `ts` column has shipped in three physical layouts
     * across testdata regenerations: parquet TIMESTAMP(NANOS) (which the

@@ -32,7 +32,9 @@ final case class FunnelEv(user_id: Long, event_type: String, us: Long)
 object StreamingOps {
 
   /** Kafka-envelope-shaped stream over the events table: file source with
-    * declared schema (streaming requires one), ts normalized to engine-grain
+    * declared schema (streaming requires one; it is the batch loader's
+    * cached [[graft.core.Tables.schemaOf]], so a warm build infers
+    * nothing), ts normalized to engine-grain
     * TimestampType by the same schema-adaptive rule as the batch loader
     * ([[graft.core.Tables.normalizedTs]] — nanos-as-long, NTZ, and plain
     * timestamp layouts all supported).
@@ -40,7 +42,7 @@ object StreamingOps {
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     graft.streaming.KafkaIO.applyStreamingConfs(s) // T8 session confs
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$d/events.parquet").schema
+    val schema = graft.core.Tables.schemaOf(s, s"$d/events.parquet")
     s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(d)

@@ -2934,48 +2934,16 @@ object VectorOps {
 
   /** Frozen index geometry (centroid tables, codebooks) as driver arrays,
     * one entry per geometry directory, stamped with the directory's
-    * [[listingOf]]. Geometry is written once per build and never touched
-    * by appends or deletes; a directory rewritten in place anyway (an
-    * overwrite, a rename by another process) gets new part files, whose
-    * names carry a per-write UUID, so a stale stamp cannot match. Bounded by
-    * [[DriverCacheEntries]] like the serving layer's caches.
+    * listing ([[graft.core.ListingCache]]). Geometry is written once per
+    * build and never touched by appends or deletes; a directory rewritten
+    * in place anyway (an overwrite, a rename by another process) gets new
+    * part files, whose names carry a per-write UUID, so a stale stamp
+    * cannot match.
     */
-  private val geometry = scala.collection.concurrent.TrieMap
-    .empty[String, (Seq[(String, Long, Long)], AnyRef)]
+  private val geometry = new graft.core.ListingCache[AnyRef]
 
-  /** Backstop bound on every driver-side cache: a serving JVM touches a
-    * handful of roots, so the caches stay tiny; one grown past this (a
-    * test harness minting hundreds of roots in one JVM) is dropped
-    * wholesale — a refill costs one read, a leak costs the JVM.
-    */
-  private[graft] val DriverCacheEntries = 64
-
-  /** (name, size, mtime) of every file directly under `dir`, sorted — one
-    * filesystem call, no Spark job. None when `dir` does not exist.
-    */
-  private def listingOf(s: SparkSession, dir: String): Option[Seq[(String, Long, Long)]] =
-    try Some(fsOf(s, dir).listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
-    catch { case _: java.io.FileNotFoundException => None }
-
-  /** `load` of the geometry under `dir`, served from [[geometry]] while the
-    * directory's listing is unchanged. The listing is taken before the
-    * load, so a rewrite racing the load can only leave an entry that
-    * misses at the next call. A missing directory is never cached — the
-    * loader raises its usual error.
-    */
   private def cachedGeometry[T <: AnyRef](s: SparkSession, dir: String)(load: => T): T =
-    listingOf(s, dir) match {
-      case None => load
-      case Some(stamp) => geometry.get(dir) match {
-        case Some((`stamp`, hit)) => hit.asInstanceOf[T]
-        case _ =>
-          val fresh = load
-          if (geometry.size > DriverCacheEntries) geometry.clear()
-          geometry.put(dir, (stamp, fresh))
-          fresh
-      }
-    }
+    geometry(s, dir)(load).asInstanceOf[T]
 
   /** The K-row centroid table as a driver array — tiny by contract, and
     * cached per `centroids/` directory (see [[geometry]]): a warm call

@@ -439,13 +439,13 @@ object QueryService {
     s"$dir@${graft.operators.VectorOps.mutationEpochOf(dir)}"
 
   /** The cached plan under `key`, built on a miss. Past
-    * [[graft.operators.VectorOps.DriverCacheEntries]] entries the map is
+    * [[graft.core.ListingCache.DriverCacheEntries]] entries the map is
     * dropped wholesale — a refill costs one poll's planning, a leak costs
     * the JVM.
     */
   private def cachedPlan(key: (SparkSession, String, Int, String))(
       plan: => DataFrame): DataFrame = {
-    if (servedPlans.size > graft.operators.VectorOps.DriverCacheEntries)
+    if (servedPlans.size > graft.core.ListingCache.DriverCacheEntries)
       servedPlans.clear()
     servedPlans.getOrElseUpdate(key, plan)
   }

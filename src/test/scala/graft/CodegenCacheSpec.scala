@@ -10,17 +10,9 @@ import graft.tools.Sampler.noop
   */
 class CodegenCacheSpec extends SparkSpec {
 
-  /** The benchmark's lakehouse pass: five ops through the registry, Spark's
-    * cache cleared at the start of the pass, each op forced with a noop
-    * write.
-    */
-  private val lakehouse = Seq("sim_bus_rides", "m2_gap_fill_linear",
-    "t11_throughput", "j1_composite_2key_join", "s18_merge_upsert")
-
   private def pass(): QueryMetrics.Compiles = {
     val before = QueryMetrics.compiles()
-    spark.catalog.clearCache()
-    lakehouse.foreach(op => noop(SparkEntry.queries(op)(spark, sf)))
+    LakehousePass.run(spark, sf)
     QueryMetrics.compiles() - before
   }
 

@@ -179,4 +179,102 @@ class SnapshotsSpec extends SparkSpec {
     assert(!new java.io.File(dead, "part-00000.parquet").exists(),
       "the published v2 must not keep the dead writer's files")
   }
+
+  test("merge rejects two source rows with null keys") {
+    val t = "spec_merge_null_dup"
+    Snapshots.reset(t)
+    Snapshots.write(spark, t, Seq((1L, "a")).toDF("id", "tag"))
+    val dup = Seq[(Option[Long], String)]((None, "x"), (None, "y")).toDF("id", "tag")
+    val ex = intercept[IllegalArgumentException] {
+      Snapshots.merge(spark, t, dup, Seq("id"))
+    }
+    assert(ex.getMessage === "requirement failed: MERGE source has duplicate rows on key id")
+    assert(Snapshots.versions(t) === Seq(1))
+  }
+
+  test("merge inserts a single null-key source row and carries null-key " +
+    "target rows over") {
+    val t = "spec_merge_null"
+    Snapshots.reset(t)
+    Snapshots.write(spark, t, Seq[(Option[Long], String)](
+      (Some(1L), "a"), (None, "t0"), (None, "t1")).toDF("id", "tag"))
+    val src = Seq[(Option[Long], String)]((Some(1L), "a2"), (None, "s")).toDF("id", "tag")
+    assert(Snapshots.merge(spark, t, src, Seq("id")) === 2)
+    val got = Snapshots.latest(spark, t).as[(Option[Long], String)].collect()
+    assert(got.sortBy(_._2).toSeq ===
+      Seq((Some(1L), "a2"), (None, "s"), (None, "t0"), (None, "t1")))
+  }
+
+  test("a merge retried after a rejected one publishes v2 over the debris") {
+    val t = "spec_merge_retry"
+    Snapshots.reset(t)
+    Snapshots.write(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+    intercept[IllegalArgumentException] {
+      Snapshots.merge(spark, t, Seq((2L, "x"), (2L, "y")).toDF("id", "tag"), Seq("id"))
+    }
+    assert(Snapshots.versions(t) === Seq(1))
+    assert(Snapshots.merge(spark, t, Seq((2L, "b2"), (3L, "c")).toDF("id", "tag"),
+      Seq("id")) === 2)
+    assert(Snapshots.versions(t) === Seq(1, 2))
+    assert(Snapshots.read(spark, t, 2).as[(Long, String)].collect().sorted.toSeq ===
+      Seq((1L, "a"), (2L, "b2"), (3L, "c")))
+  }
+
+  test("a merge whose source keys fit a broadcast does not shuffle the target") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val target = spark.range(0, 20000).select($"id", ($"id" % 7).as("x"))
+    val source = Seq((3L, 30L), (20001L, 1L)).toDF("id", "x")
+    val df = Snapshots.merged(target, source, Seq("id"), "dup")
+    assert(df.count() === 20001L)
+    val plan = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+      case p => p
+    }
+    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size === 1, plan.treeString)
+    assert(joins.head.left.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      plan.treeString)
+  }
+
+  /** The schema file of version `v` of `table`, if it has one. */
+  private def recorded(table: String, v: Int): Option[String] = {
+    val f = new java.io.File(graft.core.Scratch.durable(
+      s"snapshots/$table/roots/${graft.core.VersionedStore.versionName(v)}"), "_schema.json")
+    if (f.exists) Some(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    else None
+  }
+
+  test("a version directory with no schema file still reads") {
+    val t = "spec_no_schema"
+    Snapshots.reset(t)
+    Snapshots.write(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
+    assert(recorded(t, 1).isDefined)
+    new java.io.File(graft.core.Scratch.durable(
+      s"snapshots/$t/roots/${graft.core.VersionedStore.versionName(1)}"), "_schema.json").delete()
+    assert(recorded(t, 1).isEmpty)
+    assert(Snapshots.latest(spark, t).as[(Long, String)].collect().sorted.toSeq ===
+      Seq((1L, "a"), (2L, "b")))
+    assert(Snapshots.read(spark, t, 1).count() === 2)
+  }
+
+  test("the recorded schema equals footer inference for every snapshot the " +
+    "registry's snapshot writers publish") {
+    import graft.operators.{Quality, Sources, StreamingOps}
+    val writers = Seq(Sources.s16 -> "orders_tt", Sources.s18 -> "orders_merge",
+      Sources.s21 -> "orders_cdc", Sources.s33 -> "orders_mv",
+      Quality.s35 -> "orders_wap", StreamingOps.t15 -> "t15_state")
+    writers.foreach { case (q, t) =>
+      q.build(spark, sf).collect()
+      assert(Snapshots.versions(t).nonEmpty, s"${q.name} published nothing")
+      Snapshots.versions(t).foreach { v =>
+        val dir = graft.core.VersionedStore.versionDir(
+          graft.core.Scratch.durable(s"snapshots/$t"), v)
+        val json = recorded(t, v).getOrElse(fail(s"${q.name}: $t v$v has no schema file"))
+        assert(org.apache.spark.sql.types.DataType.fromJson(json) ===
+          spark.read.parquet(dir).schema, s"${q.name}: $t v$v")
+      }
+    }
+  }
 }
