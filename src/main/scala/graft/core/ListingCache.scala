@@ -1,37 +1,64 @@
 package graft.core
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 
-/** A driver-side cache of values derived from files — vector-index
-  * geometry, table schemas — one entry per path, stamped with the path's
-  * [[ListingCache.listingOf]]. A hit costs one filesystem call and no
-  * Spark job. A rewrite of the path changes the stamp (new part files
-  * carry a per-write UUID; a file rewritten in place gets a new size or
-  * mtime), so a stale entry is never served. The stamp is taken before
-  * the load, so a rewrite racing the load can only leave an entry that
-  * misses at the next call. A missing path is never cached — the loader
-  * raises its usual error.
+/** The one owner of "derived from these files": every driver-side cache of
+  * a value derived from a dataset — table schemas, vector-index geometry,
+  * the station count, the sim rides, the served rides snapshot, s26's
+  * seed — is a `ListingCache`, and [[SessionStaging.datasetIdent]], a
+  * digest of the same stamp, names the artifacts that outlive a cache
+  * (staging keys, serving roots). The identity rule, as an Iceberg
+  * snapshot id names a table state:
+  *
+  *   - '''What a stamp covers.''' An entry is stamped with
+  *     [[ListingCache.listingOf]] of the path it derives from: (name,
+  *     size, mtime) of every file directly under it, or of the file
+  *     itself. A dataset directory's stamp covers all of its tables (one
+  *     file each), so regenerating any of them re-keys the entry.
+  *   - '''Precision.''' The mtime is the finest the filesystem records:
+  *     nanoseconds through `java.nio` on `file://` paths, FileStatus
+  *     milliseconds elsewhere. New part files carry a per-write UUID, so a
+  *     rewrite is always seen; a file rewritten in place is seen unless it
+  *     keeps its size and its mtime to the filesystem's precision.
+  *   - '''When the stamp is taken.''' Before the load, so a rewrite racing
+  *     the load can only leave an entry that misses at the next call. A
+  *     missing path is never cached — the loader raises its usual error.
+  *   - '''Hits.''' A hit costs one listing (one call, plus one stat per
+  *     file on `file://`) and no Spark job. A stale entry is never served.
+  *   - '''The bound.''' Every cache holds at most
+  *     [[ListingCache.DriverCacheEntries]] entries.
+  *   - '''Session-bound entries.''' A cache built `sessionBound` keys each
+  *     entry by its session as well (a DataFrame belongs to the session
+  *     that made it). A DataFrame entry that is replaced or dropped is
+  *     unpersisted, so a `.cache()`d frame does not outlive its entry.
   *
   * `variant` names a setting the value depends on besides the files (a
-  * reader conf): entries under different variants never serve each other.
+  * reader conf, a sim size): entries under different variants never serve
+  * each other.
   */
-final class ListingCache[V <: AnyRef] {
+final class ListingCache[V](sessionBound: Boolean = false) {
   private val entries = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Seq[(String, Long, Long)], V)]
+    .empty[(SparkSession, String, String), (Seq[(String, Long, Long)], V)]
 
   def apply(s: SparkSession, path: String, variant: String = "")(load: => V): V =
-    ListingCache.listingOf(s, path) match {
-      case None => load
-      case Some(stamp) => entries.get((path, variant)) match {
+    ListingCache.listingOf(s, path).fold(load) { stamp =>
+      val key = (if (sessionBound) s else null, path, variant)
+      entries.get(key) match {
         case Some((`stamp`, hit)) => hit
         case _ =>
           val fresh = load
-          if (entries.size > ListingCache.DriverCacheEntries) entries.clear()
-          entries.put((path, variant), (stamp, fresh))
+          if (entries.size > ListingCache.DriverCacheEntries)
+            entries.keys.foreach(k => entries.remove(k).foreach(release))
+          entries.put(key, (stamp, fresh)).foreach(release)
           fresh
       }
     }
+
+  private def release(entry: (_, V)): Unit = entry._2 match {
+    case df: Dataset[_] => df.unpersist(blocking = false): Unit
+    case _ =>
+  }
 }
 
 object ListingCache {
@@ -45,12 +72,24 @@ object ListingCache {
 
   /** (name, size, mtime) of every file directly under `path` (of the file
     * itself when `path` is a file), sorted — one filesystem call, no
-    * Spark job. None when `path` does not exist.
+    * Spark job; the mtime at the precision the class doc states. None
+    * when `path` does not exist.
     */
   def listingOf(s: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
     val p = new Path(path)
-    try Some(p.getFileSystem(s.sparkContext.hadoopConfiguration).listStatus(p).toSeq
-      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sorted)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    try Some(fs.listStatus(p).toSeq.map(f => (f.getPath.getName, f.getLen,
+        if (fs.getScheme == "file") localMtimeNanos(f.getPath) else f.getModificationTime)).sorted)
     catch { case _: java.io.FileNotFoundException => None }
   }
+
+  /** The local filesystem's own mtime, in nanoseconds: Hadoop's FileStatus
+    * rounds it to milliseconds. A file deleted since the listing reads as
+    * a missing path.
+    */
+  private def localMtimeNanos(p: Path): Long =
+    try java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(p.toUri))
+      .to(java.util.concurrent.TimeUnit.NANOSECONDS)
+    catch { case e: java.nio.file.NoSuchFileException =>
+      throw new java.io.FileNotFoundException(e.getMessage) }
 }

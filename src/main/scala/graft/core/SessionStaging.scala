@@ -19,9 +19,9 @@ import org.apache.spark.sql.SparkSession
   *   - the staging directory is a [[Scratch.run]] directory, deleted with
   *     the JVM's run root, so every run computes every artifact from the
   *     parquet inputs;
-  *   - keys fold [[datasetIdent]] of the source (path, size, mtime), never
-  *     the state of a mutable directory, so a regenerated corpus re-keys and
-  *     a mutated index root cannot poison a key;
+  *   - keys fold [[datasetIdent]] of the source (its [[ListingCache]]
+  *     stamp), never the state of a mutable directory, so a regenerated
+  *     corpus re-keys and a mutated index root cannot poison a key;
   *   - a staged artifact is an index or snapshot directory, never a query
   *     result.
   *
@@ -44,20 +44,20 @@ object SessionStaging {
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
-  /** Content fingerprint of one source file of dataset `d`: path, size and
-    * the modification time in nanoseconds (as fine as the filesystem
-    * records it). It is the one dataset identity of the engine: staging
-    * keys, the serving roots' names and s26's seed all fold it, so a
-    * regenerated or different dataset never meets another's artifact. A
-    * missing file fails here: fingerprinting it as "0:0" would key every
-    * missing dataset alike.
+  /** The one dataset identity: a digest of the qualified path of `d`'s
+    * source `file` and its [[ListingCache.listingOf]] stamp (the identity
+    * rule [[ListingCache]] states). Staging keys, the serving roots' names
+    * and every artifact that outlives a cache fold it, so a regenerated
+    * or different dataset never meets another's artifact. A missing file
+    * fails here: fingerprinting it as absent would key every missing
+    * dataset alike.
     */
-  def datasetIdent(d: String, file: String): String = {
-    val f = new java.io.File(d, file)
-    require(f.exists(), s"datasetIdent: ${f.getAbsolutePath} does not exist")
-    val mtime = java.nio.file.Files.getLastModifiedTime(f.toPath)
-      .to(java.util.concurrent.TimeUnit.NANOSECONDS)
-    md5hex(s"${f.getAbsolutePath}:${f.length}:$mtime").take(16)
+  def datasetIdent(s: SparkSession, d: String, file: String): String = {
+    val p = new Path(d, file)
+    val path = p.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(p).toString
+    val stamp = ListingCache.listingOf(s, path)
+    require(stamp.isDefined, s"datasetIdent: $path does not exist")
+    md5hex(s"$path:${stamp.get.mkString(",")}").take(16)
   }
 
   /** Publish the staged artifact `key` as v1 of a fresh [[VersionedStore]]

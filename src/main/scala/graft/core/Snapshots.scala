@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -31,16 +31,9 @@ object Snapshots {
   private def root(table: String): String =
     Scratch.durable(s"snapshots/$table")
 
-  // the verbs without a session argument reach the filesystem through the
-  // session their caller runs under
-  private def session: SparkSession = SparkSession.active
-
-  private def fsOf(p: Path): FileSystem =
-    p.getFileSystem(session.sparkContext.hadoopConfiguration)
-
   /** Snapshot ids, ascending (empty when the table does not exist). */
-  def versions(table: String): Seq[Int] =
-    VersionedStore.versions(session, root(table)).map(_.toInt)
+  def versions(s: SparkSession, table: String): Seq[Int] =
+    VersionedStore.versions(s, root(table)).map(_.toInt)
 
   /** Build the next version with `build` and publish it; returns its id. */
   private def commit(s: SparkSession, table: String)(build: String => Unit): Int =
@@ -62,7 +55,7 @@ object Snapshots {
   private def writeVersion(s: SparkSession, df: DataFrame, dir: String): Unit = {
     df.write.mode(SaveMode.Overwrite).parquet(dir)
     val p = new Path(dir, SchemaFile)
-    val out = fsOf(p).create(p, true)
+    val out = VersionedStore.fsOf(s, p).create(p, true)
     try out.write(s.read.schema(df.schema).parquet(dir).schema.json.getBytes("UTF-8"))
     finally out.close()
   }
@@ -74,7 +67,7 @@ object Snapshots {
     val p = new Path(dir, SchemaFile)
     val recorded =
       try {
-        val in = fsOf(p).open(p)
+        val in = VersionedStore.fsOf(s, p).open(p)
         try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
       } catch { case _: java.io.FileNotFoundException => None }
     recorded.fold(s.read)(json =>
@@ -100,7 +93,7 @@ object Snapshots {
     try Some(commit(s, table) { dir =>
       writeVersion(s, df, dir)
       if (!audit(readVersion(s, dir))) {
-        fsOf(new Path(dir)).delete(new Path(dir), true)
+        VersionedStore.fsOf(s, new Path(dir)).delete(new Path(dir), true)
         throw Rejected
       }
     }) catch { case Rejected => None }
@@ -231,22 +224,22 @@ object Snapshots {
     * at this seam): a reader can pin "the audited state" instead of a
     * version number that moves. Metadata-only — one tiny ref file.
     */
-  def tag(table: String, name: String, v: Int): Unit = {
-    require(versions(table).contains(v), s"tag $name: no snapshot v$v")
+  def tag(s: SparkSession, table: String, name: String, v: Int): Unit = {
+    require(versions(s, table).contains(v), s"tag $name: no snapshot v$v")
     require(name.matches("[A-Za-z0-9_.-]+"), s"bad tag name: $name")
     // "." / ".." pass the character class but resolve to the tags dir /
     // table root — reject dots-only names here so the caller gets the
     // validation error, not an opaque IOException from the create.
     require(!name.forall(_ == '.'), s"bad tag name: $name")
     val p = new Path(s"${root(table)}/tags/$name")
-    val out = fsOf(p).create(p, true)
+    val out = VersionedStore.fsOf(s, p).create(p, true)
     try out.write(v.toString.getBytes("UTF-8")) finally out.close()
   }
 
   /** All tags of a table, name -> version. */
-  def tags(table: String): Map[String, Int] = {
+  def tags(s: SparkSession, table: String): Map[String, Int] = {
     val dir = new Path(s"${root(table)}/tags")
-    val fs = fsOf(dir)
+    val fs = VersionedStore.fsOf(s, dir)
     if (!fs.exists(dir)) Map.empty
     else fs.listStatus(dir).map { f =>
       val in = fs.open(f.getPath)
@@ -257,15 +250,15 @@ object Snapshots {
 
   /** Time-travel read at a named tag. */
   def readTag(s: SparkSession, table: String, name: String): DataFrame = {
-    val v = tags(table).getOrElse(name,
+    val v = tags(s, table).getOrElse(name,
       throw new IllegalArgumentException(s"unknown tag: $name"))
     read(s, table, v)
   }
 
   /** Drop the whole table (all snapshots and tags) — test/setup hygiene. */
-  def reset(table: String): Unit = {
+  def reset(s: SparkSession, table: String): Unit = {
     val p = new Path(root(table))
-    fsOf(p).delete(p, true): Unit
+    VersionedStore.fsOf(s, p).delete(p, true): Unit
   }
 
   /** VACUUM / snapshot expiry: drop all but the newest `keep` snapshots
@@ -275,6 +268,6 @@ object Snapshots {
     * loss is the contract; callers keep enough history for their audit
     * window.
     */
-  def vacuum(table: String, keep: Int): Seq[Int] =
-    VersionedStore.vacuum(session, root(table), keep).map(_.toInt)
+  def vacuum(s: SparkSession, table: String, keep: Int): Seq[Int] =
+    VersionedStore.vacuum(s, root(table), keep).map(_.toInt)
 }

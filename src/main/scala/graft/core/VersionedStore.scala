@@ -49,7 +49,7 @@ object VersionedStore {
 
   private def manifest(root: String) = new Path(s"$root/manifest")
 
-  private def fsOf(s: SparkSession, p: Path): FileSystem =
+  private[core] def fsOf(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
   /** Writers that crash mid-build hold their version lease until this TTL

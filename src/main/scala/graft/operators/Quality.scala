@@ -144,7 +144,7 @@ object Quality {
       failed == 0
     }
     WapResult(failed, published.isDefined,
-      published.getOrElse(Snapshots.versions(table).lastOption.getOrElse(0)))
+      published.getOrElse(Snapshots.versions(s, table).lastOption.getOrElse(0)))
   }
 
   /** S35 (beyond reference): WAP gate in action — a clean batch publishes
@@ -159,7 +159,7 @@ object Quality {
     (s, d) => {
       import graft.core.Snapshots
       val t = "orders_wap"
-      Snapshots.reset(t)
+      Snapshots.reset(s, t)
       val orders = Tables.orders(s, d)
       val suite = Seq(NotNull("o_custkey"), Unique(Seq("o_orderkey")),
         InRange("o_totalprice", 0.0, 1e7))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.api.GraftQuery
-import graft.core.{Scratch, SessionStaging, Tables}
+import graft.core.{ListingCache, Scratch, Tables}
 import graft.functions.Funcs._
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -150,9 +150,7 @@ object Sources {
       // a static conf — the default ./spark-warehouse is gitignored). The
       // in-memory catalog forgets tables across sessions but the warehouse
       // dir persists, so clear the stale location first.
-      s.sql("DROP TABLE IF EXISTS graft_s5_nation")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") + "/graft_s5_nation"))
+      dropWarehouseTable(s, "graft_s5_nation")
       Tables.nation(s, d).write.mode(SaveMode.Overwrite)
         .format("parquet").saveAsTable("graft_s5_nation")
       s.table("graft_s5_nation")
@@ -170,11 +168,11 @@ object Sources {
     (s, d) => {
       import graft.core.Snapshots
       val t = "orders_tt"
-      Snapshots.reset(t)
+      Snapshots.reset(s, t)
       Snapshots.write(s, t, Tables.orders(s, d))
       Snapshots.write(s, t,
         Snapshots.latest(s, t).filter(col("o_orderstatus") =!= "F"))
-      require(Snapshots.versions(t) == Seq(1, 2), "snapshot listing broken")
+      require(Snapshots.versions(s, t) == Seq(1, 2), "snapshot listing broken")
       val v1 = Snapshots.read(s, t, 1).groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_v1"))
       val v2 = Snapshots.read(s, t, 2).groupBy("o_orderstatus")
@@ -185,14 +183,21 @@ object Sources {
            |CASE WHEN o_orderstatus <> 'F' THEN count(*) END AS n_v2
            |FROM orders GROUP BY o_orderstatus""".stripMargin))
 
-  /** Write `df` as a bucketed+sorted catalog table (drops any stale copy —
-    * the in-memory catalog forgets tables across sessions but the warehouse
-    * dir persists).
+  /** Drop the catalog table `name` and delete its warehouse location: the
+    * in-memory catalog forgets tables across sessions but the warehouse
+    * dir persists.
+    */
+  private def dropWarehouseTable(s: SparkSession, name: String): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $name")
+    val p = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), name)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true): Unit
+  }
+
+  /** Write `df` as a bucketed+sorted catalog table (drops any stale copy
+    * first).
     */
   private def writeBucketed(s: SparkSession, name: String, df: DataFrame, key: String): Unit = {
-    s.sql(s"DROP TABLE IF EXISTS $name")
-    deleteRecursively(new java.io.File(
-      s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") + s"/$name"))
+    dropWarehouseTable(s, name)
     df.write.mode(SaveMode.Overwrite).format("parquet")
       .bucketBy(8, key).sortBy(key).saveAsTable(name)
   }
@@ -227,11 +232,6 @@ object Sources {
            |FROM orders JOIN customer ON o_custkey = c_custkey
            |GROUP BY c_nationkey""".stripMargin))
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** S18 (beyond reference): MERGE INTO upsert at the snapshot seam
     * ([[graft.core.Snapshots.merge]]) — the third DML verb after DELETE
     * (s15) and time-travel reads (s16). Updates bump every open order's
@@ -244,7 +244,7 @@ object Sources {
     (s, d) => {
       import graft.core.Snapshots
       val t = "orders_merge"
-      Snapshots.reset(t)
+      Snapshots.reset(s, t)
       Snapshots.write(s, t, Tables.orders(s, d))
       val base = Tables.orders(s, d)
       val updates = base.filter(col("o_orderstatus") === "O")
@@ -253,7 +253,7 @@ object Sources {
         .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
         .withColumn("o_orderstatus", lit("N"))
       Snapshots.merge(s, t, updates.unionByName(inserts), Seq("o_orderkey"))
-      require(Snapshots.versions(t) == Seq(1, 2),
+      require(Snapshots.versions(s, t) == Seq(1, 2),
         "merge must produce exactly one new snapshot")
       Snapshots.latest(s, t).groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), decSum(col("o_totalprice")).as("total"))
@@ -371,7 +371,7 @@ object Sources {
     (s, d) => {
       import graft.core.Snapshots
       val t = "orders_cdc"
-      Snapshots.reset(t)
+      Snapshots.reset(s, t)
       Snapshots.write(s, t, Tables.orders(s, d))
       Snapshots.write(s, t,
         Snapshots.latest(s, t).filter(col("o_orderstatus") =!= "F")
@@ -406,7 +406,7 @@ object Sources {
     (s, d) => {
       import graft.core.Snapshots
       val t = "orders_cdc_apply"
-      Snapshots.reset(t)
+      Snapshots.reset(s, t)
       Snapshots.write(s, t, Tables.orders(s, d))
       Snapshots.write(s, t,
         Snapshots.latest(s, t).filter(col("o_orderstatus") =!= "F")
@@ -447,7 +447,7 @@ object Sources {
       s.read.parquet(frag).coalesce(4)
         .write.mode(SaveMode.Overwrite).parquet(comp)
       def nFiles(p: String) =
-        new java.io.File(p).listFiles().count(_.getName.endsWith(".parquet"))
+        ListingCache.listingOf(s, p).get.count(_._1.endsWith(".parquet"))
       require(nFiles(frag) == 64 && nFiles(comp) <= 4,
         s"compaction did not shrink the file count: ${nFiles(frag)} -> ${nFiles(comp)}")
       s.read.parquet(comp)
@@ -541,17 +541,18 @@ object Sources {
            |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
            |FROM events WHERE event_type IN ('error', 'purchase') GROUP BY event_type""".stripMargin))
 
-  /** dataset fingerprint -> the run directory holding s26's seeded fact
-    * and dim; an entry is recorded only after both writes returned.
+  /** The run directory holding s26's seeded fact and dim, one per events
+    * file ([[ListingCache]]: a regenerated events file is seeded again);
+    * an entry is recorded only after both writes returned.
     */
-  private val dppSeeds = scala.collection.concurrent.TrieMap.empty[String, String]
+  private val dppSeeds = new ListingCache[String]
 
   /** The DPP join behind [[s26]], exposed for the plan assertion. */
   def dppJoin(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // one seed per dataset fingerprint and run: a different or regenerated
-    // dataset never reads another's fact rows
-    val seed = dppSeeds.getOrElseUpdate(SessionStaging.datasetIdent(d, "events.parquet"), {
+    // one seed per events file and run: a different or regenerated dataset
+    // never reads another's fact rows
+    val seed = dppSeeds(s, s"$d/events.parquet") {
       val dir = Scratch.run("s26_seed")
       Tables.events(s, d).write.mode(SaveMode.Overwrite)
         .partitionBy("event_type").parquet(s"$dir/fact")
@@ -560,7 +561,7 @@ object Sources {
         .toDF("event_type", "tier")
         .write.mode(SaveMode.Overwrite).parquet(s"$dir/dim")
       dir
-    })
+    }
     val factPath = s"$seed/fact"
     val dimPath = s"$seed/dim"
     val fact = s.read.parquet(factPath)
@@ -644,9 +645,7 @@ object Sources {
   val s28: GraftQuery = GraftQuery(
     "s28_table_stats_cbo",
     (s, d) => {
-      s.sql("DROP TABLE IF EXISTS graft_s28_stats")
-      deleteRecursively(new java.io.File(
-        s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") + "/graft_s28_stats"))
+      dropWarehouseTable(s, "graft_s28_stats")
       Tables.lineitem(s, d).select("l_partkey", "l_returnflag")
         .write.mode(SaveMode.Overwrite).format("parquet").saveAsTable("graft_s28_stats")
       s.sql("ANALYZE TABLE graft_s28_stats COMPUTE STATISTICS FOR COLUMNS l_partkey, l_returnflag")
@@ -907,16 +906,16 @@ object Sources {
     (s, d) => {
       import graft.core.Snapshots
       val t = "orders_vac"
-      Snapshots.reset(t)
+      Snapshots.reset(s, t)
       Snapshots.write(s, t, Tables.orders(s, d))
       Snapshots.write(s, t,
         Snapshots.latest(s, t).filter(expr("o_orderkey % 2 = 0")))
       Snapshots.write(s, t,
         Snapshots.latest(s, t).filter(expr("o_orderkey % 4 = 0")))
-      val counts = Snapshots.versions(t)
+      val counts = Snapshots.versions(s, t)
         .map(v => v -> Snapshots.read(s, t, v).count())
-      val dropped = Snapshots.vacuum(t, keep = 1)
-      require(dropped == Seq(1, 2) && Snapshots.versions(t) == Seq(3),
+      val dropped = Snapshots.vacuum(s, t, keep = 1)
+      require(dropped == Seq(1, 2) && Snapshots.versions(s, t) == Seq(3),
         s"retention arithmetic broken: dropped=$dropped")
       import s.implicits._
       counts.map { case (v, n) =>
@@ -953,7 +952,7 @@ object Sources {
       import graft.core.Snapshots
       val t = "orders_mv"
       val dp = org.apache.spark.sql.types.DecimalType(18, 4)
-      Snapshots.reset(t)
+      Snapshots.reset(s, t)
       val base = Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").as("p"))
@@ -1001,13 +1000,13 @@ object Sources {
     (s, d) => {
       import graft.core.Snapshots
       val t = "orders_tag"
-      Snapshots.reset(t)
+      Snapshots.reset(s, t)
       Snapshots.write(s, t, Tables.orders(s, d))
-      Snapshots.tag(t, "audited", 1)
+      Snapshots.tag(s, t, "audited", 1)
       Snapshots.write(s, t,
         Snapshots.latest(s, t).filter(col("o_orderstatus") =!= "F")
           .withColumn("o_totalprice", col("o_totalprice") + 1.0))
-      require(Snapshots.tags(t) == Map("audited" -> 1), "tag listing broken")
+      require(Snapshots.tags(s, t) == Map("audited" -> 1), "tag listing broken")
       val tagged = Snapshots.readTag(s, t, "audited").groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n_tagged"), decSum(col("o_totalprice")).as("total_tagged"))
       val latest = Snapshots.latest(s, t).groupBy("o_orderstatus")

@@ -399,7 +399,7 @@ object StreamingOps {
     checkpointed { (s, d, checkpoint) =>
       import graft.core.Snapshots
       val t = "t15_state"
-      Snapshots.reset(t)
+      Snapshots.reset(s, t)
       val q = eventsStream(s, d)
         .writeStream
         .option("checkpointLocation", checkpoint())
@@ -407,7 +407,7 @@ object StreamingOps {
           val agg = batch.groupBy("event_type")
             .agg(count(lit(1)).as("n"), decSum(col("value")).as("total"))
           val next =
-            if (Snapshots.versions(t).isEmpty) agg
+            if (Snapshots.versions(s, t).isEmpty) agg
             else Snapshots.latest(s, t).unionByName(agg)
               .groupBy("event_type")
               .agg(sum(col("n")).as("n"), decSum(col("total")).as("total"))

@@ -3417,7 +3417,7 @@ object VectorOps {
     */
   private def stagedVersion(s: SparkSession, d: String, root: String,
       tiers: String, slice: String, first: Boolean): String = {
-    val key = s"$tiers:$slice:${graft.core.SessionStaging.datasetIdent(d, "embeddings.parquet")}"
+    val key = s"$tiers:$slice:${graft.core.SessionStaging.datasetIdent(s, d, "embeddings.parquet")}"
     graft.core.SessionStaging.version(s, root, key, first)(
       buildTiers(Tables.embeddings(s, d).filter(slices(slice)), _, tiersNamed(tiers)))
   }

@@ -21,17 +21,19 @@ object QueryService {
     * poll after that is a parquet scan whose lineage contains no sim
     * kernel at all, so dashboard QPS costs a scan + small agg, not a
     * simulation. ServeSpec asserts the second call re-executes nothing.
+    * The snapshot is a [[graft.core.ListingCache]] entry stamped with the
+    * dataset directory's listing, so a dataset regenerated in place is
+    * simulated and written again.
     */
   def servedRides(s: SparkSession, d: String): DataFrame =
-    served.getOrElseUpdate((s, d), {
+    served(s, d) {
       val table = "serve_rides_" + Integer.toHexString(d.hashCode)
-      graft.core.Snapshots.reset(table)
+      graft.core.Snapshots.reset(s, table)
       graft.core.Snapshots.write(s, table, BusSim.rides(s, d))
       graft.core.Snapshots.latest(s, table)
-    })
+    }
 
-  private val served =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  private val served = new graft.core.ListingCache[DataFrame](sessionBound = true)
 
   /** GET /bus_lines — the dimension table (main.py:74-88 shape). */
   def busLines(s: SparkSession, d: String): DataFrame =
@@ -134,17 +136,18 @@ object QueryService {
   /** The serving roots are [[graft.core.Scratch.durable]] roots under
     * `serve/`: they outlive the JVM, so their name must change whenever
     * their CONTENT would. It folds the dataset fingerprint
-    * ([[graft.core.SessionStaging.datasetIdent]] of the source file — a
-    * regenerated corpus at the same path re-keys) and a CODE-VERSION salt.
+    * ([[graft.core.SessionStaging.datasetIdent]] of the source file, the
+    * [[graft.core.ListingCache]] stamp — a regenerated corpus at the same
+    * path re-keys) and a CODE-VERSION salt.
     * Bump the salt with any change to the scoring/index-build semantics,
     * or a snapshot built by the old code keeps serving under the new
     * oracle.
     */
   private val ServeScratchSalt = "r14a"
 
-  private def serveRoot(kind: String, d: String, file: String): String =
+  private def serveRoot(s: SparkSession, kind: String, d: String, file: String): String =
     graft.core.Scratch.durable(
-      s"serve/${kind}_${ServeScratchSalt}_${graft.core.SessionStaging.datasetIdent(d, file)}")
+      s"serve/${kind}_${ServeScratchSalt}_${graft.core.SessionStaging.datasetIdent(s, d, file)}")
 
   /** The BM25 snapshot is a VERSIONED root (VERDICT r12 #1 — the same
     * manifest-pointer discipline as [[vecIndexRoot]]): a crashed
@@ -155,8 +158,8 @@ object QueryService {
     * mixed, mirroring the stable store the reference dashboard polls
     * (webapp/buses-dashboard/bq_service.py:33-50).
     */
-  private[graft] def docIndexRootOf(d: String): String =
-    serveRoot("serve_bm25", d, "documents.parquet")
+  private[graft] def docIndexRootOf(s: SparkSession, d: String): String =
+    serveRoot(s, "serve_bm25", d, "documents.parquet")
 
   /** How many top rows the snapshot's `head/` tier holds — the largest
     * page the serving routes may answer from the head alone (docSearch
@@ -174,13 +177,13 @@ object QueryService {
     * keeps per-poll cost O(k) when the score table is corpus-sized.
     * The head is derived by reading `scores/` back (doubles round-trip
     * parquet exactly), so the two tiers are bit-consistent by
-    * construction.
+    * construction; the read-back passes the written schema, so it infers
+    * nothing from the footers (the [[graft.core.Snapshots]] rule).
     */
   private def buildDocSnapshot(docs: DataFrame, dir: String): Unit = {
-    val s = docs.sparkSession
-    graft.operators.TextOps.bm25Score(docs)
-      .write.mode("overwrite").parquet(s"$dir/scores")
-    s.read.parquet(s"$dir/scores")
+    val scores = graft.operators.TextOps.bm25Score(docs)
+    scores.write.mode("overwrite").parquet(s"$dir/scores")
+    docs.sparkSession.read.schema(scores.schema).parquet(s"$dir/scores")
       .orderBy(col("bm25").desc, col("doc_id")).limit(ServeHeadK)
       .write.mode("overwrite").parquet(s"$dir/head")
   }
@@ -217,7 +220,7 @@ object QueryService {
       slice: String, first: Boolean): String = {
     val docs = Tables.documents(s, d)
     val sliced = if (slice == "sub90") docs.filter(col("doc_id") % 10 =!= 0) else docs
-    val key = s"bm25:$slice:${graft.core.SessionStaging.datasetIdent(d, "documents.parquet")}"
+    val key = s"bm25:$slice:${graft.core.SessionStaging.datasetIdent(s, d, "documents.parquet")}"
     graft.core.SessionStaging.version(s, root, key, first)(buildDocSnapshot(sliced, _))
   }
 
@@ -236,14 +239,14 @@ object QueryService {
     * current corpus, flip, vacuum past the poll-derived grace window.
     */
   def refreshDocIndex(s: SparkSession, d: String): String = {
-    val root = docIndexRootOf(d)
+    val root = docIndexRootOf(s, d)
     val dir = stagedDocVersion(s, d, root, "full", first = false)
     vacuumDocIndexVersions(s, root, keepLast = 2, minAgeMs = vacuumGraceMs)
     dir
   }
 
   private def bm25Root(s: SparkSession, d: String): String = {
-    val root = docIndexRootOf(d)
+    val root = docIndexRootOf(s, d)
     builtRoot(s, root)(stagedDocVersion(s, d, root, "full", first = true))
   }
 
@@ -360,11 +363,11 @@ object QueryService {
     * size + mtime + code salt), so a regenerated corpus at the same
     * path re-keys and re-builds.
     */
-  private[graft] def serveRootOf(d: String): String =
-    serveRoot("serve_vecidx", d, "embeddings.parquet")
+  private[graft] def serveRootOf(s: SparkSession, d: String): String =
+    serveRoot(s, "serve_vecidx", d, "embeddings.parquet")
 
   private[graft] def vecIndexRoot(s: SparkSession, d: String): String = {
-    val root = serveRootOf(d)
+    val root = serveRootOf(s, d)
     builtRoot(s, root)(graft.operators.VectorOps.buildVecIndex(
       graft.core.Tables.embeddings(s, d), root, tiers = "both"))
   }
@@ -380,7 +383,7 @@ object QueryService {
       margin: Double = 0.05,
       sigStore: Option[String] = None,
       psiMargin: Double = 0.2): Option[String] = {
-    val root = serveRootOf(d)
+    val root = serveRootOf(s, d)
     val acted = graft.operators.VectorOps.rebuildVecIndexIfAdvised(
       s, root, margin, corpus = Some(graft.core.Tables.embeddings(s, d)),
       sigStore = sigStore, psiMargin = psiMargin)

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.{QueryMetrics, Tables}
+import graft.serve.QueryService
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{IntegerType, StringType}
 
@@ -35,6 +36,15 @@ class JobCountSpec extends SparkSpec {
     val n = jobs(build("s18_merge_upsert"))
     info(s"s18 build ran $n jobs")
     assert(n <= 5)
+  }
+
+  test("a BM25 snapshot build reads its written scores back without a " +
+    "schema-inference job") {
+    val docs = Tables.documents(spark, sf)
+    val n = jobs(QueryService.initVersionedDocIndex(docs, tempDir("jobs-bm25") + "/idx"))
+    info(s"initVersionedDocIndex ran $n jobs")
+    // a schema-less read-back of scores/ adds one footer-inference job
+    assert(n === 9)
   }
 
   test("a table file rewritten in place with a changed column type loads " +

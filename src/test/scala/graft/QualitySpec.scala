@@ -49,18 +49,18 @@ class QualitySpec extends SparkSpec {
     import SparkSpec.spark.implicits._
     import graft.core.Snapshots
     val t = "wap_spec"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     val suite = Seq(NotNull("name"), InRange("price", 0.0, 10.0))
     val clean = Seq((1L, "a", 5.0), (2L, "b", 6.0)).toDF("id", "name", "price")
     val r1 = Quality.writeAuditPublish(spark, t, clean, suite)
     assert(r1 == Quality.WapResult(0, published = true, 1))
-    assert(Snapshots.versions(t) == Seq(1))
+    assert(Snapshots.versions(spark, t) == Seq(1))
     assert(Snapshots.latest(spark, t).orderBy("id").collect().map(_.getLong(0)).toSeq
       == Seq(1L, 2L))
     val dirty = Seq((3L, "c", -1.0)).toDF("id", "name", "price")
     val r2 = Quality.writeAuditPublish(spark, t, dirty, suite)
     assert(r2 == Quality.WapResult(1, published = false, 1))
-    assert(Snapshots.versions(t) == Seq(1))
+    assert(Snapshots.versions(spark, t) == Seq(1))
     // rejected candidate fully cleaned up: only v1 remains on disk, and
     // no build lease is left behind
     val root = graft.core.Scratch.durable(s"snapshots/$t")

@@ -62,15 +62,47 @@ class ScratchSpec extends SparkSpec {
     assert(!new File(seen).exists(), "a scoped body that throws left its directory")
   }
 
-  test("only core/Scratch.scala names the JVM temp directory") {
+  private def sources(dir: String): Seq[File] = {
     def files(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-    val main = files(new File("src/main")).filter(_.getName.endsWith(".scala"))
+    files(new File(dir)).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def text(f: File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
+  test("only core/Scratch.scala names the JVM temp directory") {
+    val main = sources("src/main")
     assert(main.size > 40, s"the scan must see the main sources, saw ${main.size}")
-    val naming = main.filter(f => new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").contains("java.io.tmpdir"))
+    val naming = main.filter(f => text(f).contains("java.io.tmpdir"))
       .map(_.getPath.replace(File.separatorChar, '/'))
     assert(naming === Seq("src/main/scala/graft/core/Scratch.scala"))
+  }
+
+  test("in core, operators, serve and sim only Scratch, the O_EXCL create and " +
+    "the stamp's local mtime read name java.io.File or java.nio.file") {
+    // file -> the one method allowed to name them (None: the whole file)
+    val allowed = Map(
+      "core/Scratch.scala" -> None,
+      "core/VersionedStore.scala" -> Some("atomicCreate"),
+      "core/ListingCache.scala" -> Some("localMtimeNanos"))
+    val naming = """java\.io\.File\b|java\.nio\.file\b|java\.io\.\{[^}]*\bFile\b""".r
+    val defn = """\bdef\s+(\w+)""".r
+    val base = "src/main/scala/graft/"
+    val scanned = Seq("core", "operators", "serve", "sim").flatMap(l => sources(base + l))
+    assert(scanned.size > 20, s"the scan must see the layers' sources, saw ${scanned.size}")
+    val hits = for {
+      f <- scanned
+      rel = f.getPath.replace(File.separatorChar, '/').stripPrefix(base)
+      lines = text(f).split("\n").toSeq
+      defs = lines.zipWithIndex.flatMap { case (l, i) => defn.findFirstMatchIn(l).map(i -> _.group(1)) }
+      (line, i) <- lines.zipWithIndex if naming.findFirstIn(line).isDefined
+      // a comment names the method it documents, code the method it is in
+      owner = if (line.trim.startsWith("*") || line.trim.startsWith("/")) defs.find(_._1 >= i)
+        else defs.takeWhile(_._1 <= i).lastOption
+      if !allowed.get(rel).exists(_.forall(m => owner.exists(_._2 == m)))
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("no public method of VectorOps or QueryService takes a stageKey") {

@@ -68,7 +68,7 @@ class ServeSpec extends SparkSpec {
     val qs = emb.filter(col("vec_id") < 5)
     for (t <- Seq("ivf", "pq", "rerank", "auto")) {
       val viaFacade = graft.operators.VectorOps.searchVecIndex(
-        spark, QueryService.serveRootOf(sf), qs, 3, 2, tier = t)
+        spark, QueryService.serveRootOf(spark, sf), qs, 3, 2, tier = t)
       assert(ids(QueryService.vecSearch(spark, sf, tier = t)) === ids(viaFacade),
         s"cached $t route diverged from the facade route")
     }
@@ -80,7 +80,7 @@ class ServeSpec extends SparkSpec {
     // collects every call.
     val vecJobs = countJobs(QueryService.vecSearch(spark, sf).collect())
     val facadeJobs = countJobs(graft.operators.VectorOps.searchVecIndex(
-      spark, QueryService.serveRootOf(sf), qs, 3, 2, tier = "ivf")
+      spark, QueryService.serveRootOf(spark, sf), qs, 3, 2, tier = "ivf")
       .collect())
     System.err.println(s"[serve] warm ivf poll jobs=$vecJobs facade=$facadeJobs")
     assert(vecJobs < facadeJobs,
@@ -106,7 +106,7 @@ class ServeSpec extends SparkSpec {
     // an offline retrain from the same corpus publishes a successor;
     // the deterministic build rule makes its content identical, so the
     // flip must be invisible in results while the pointer advances
-    val root = QueryService.serveRootOf(sf)
+    val root = QueryService.serveRootOf(spark, sf)
     val v2 = graft.operators.VectorOps
       .rebuildVecIndex(spark, root, corpus = Some(emb))
     assert(QueryService.vecIndexRoot(spark, sf) === v2)
@@ -162,7 +162,7 @@ class ServeSpec extends SparkSpec {
   test("same-JVM maintenance mutations (versioned append/delete/compact) " +
     "re-key the warm-path caches: polls see appends, survive compaction") {
     import org.apache.spark.sql.functions.{col, lit}
-    val root = QueryService.serveRootOf(sf)
+    val root = QueryService.serveRootOf(spark, sf)
     def rows(): Set[String] =
       QueryService.vecSearch(spark, sf).collect().map(_.toString).toSet
     // the hybrid arm reads the same vector root; each page is checked
@@ -172,7 +172,7 @@ class ServeSpec extends SparkSpec {
     def hybrid(): Seq[String] = page(QueryService.hybridSearch(spark, sf))
     def freshHybrid(): Seq[String] = page(QueryService.hybridSearchPlan(spark, sf,
       QueryService.vecIndexRoot(spark, sf),
-      QueryService.resolveDocIndexRoot(spark, QueryService.docIndexRootOf(sf)), 10, 20))
+      QueryService.resolveDocIndexRoot(spark, QueryService.docIndexRootOf(spark, sf)), 10, 20))
     val baseline = rows() // warms relation + plan caches
     val hybBaseline = hybrid()
     // append clones of query 0's vector under fresh ids INTO the current
@@ -263,7 +263,7 @@ class ServeSpec extends SparkSpec {
     "pages serve the oracle pages from it and cached plans re-key") {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
-    val root = QueryService.docIndexRootOf(sf)
+    val root = QueryService.docIndexRootOf(spark, sf)
     val docPlan = QueryService.docSearch(spark, sf) // warms the plan cache
     val hybPlan = QueryService.hybridSearch(spark, sf)
     assert(QueryService.docSearch(spark, sf) eq docPlan, "the doc plan must be cached")

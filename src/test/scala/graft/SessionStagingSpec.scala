@@ -101,18 +101,37 @@ class SessionStagingSpec extends SparkSpec {
 
   test("datasetIdent re-keys when the source file changes") {
     val d = tempDir("graft-ident")
-    val f = new java.io.File(d, "embeddings.parquet")
-    java.nio.file.Files.write(f.toPath, "aa".getBytes)
-    val i1 = SessionStaging.datasetIdent(d, "embeddings.parquet")
-    java.nio.file.Files.write(f.toPath, "bbb".getBytes) // size changes
-    val i2 = SessionStaging.datasetIdent(d, "embeddings.parquet")
+    val f = java.nio.file.Paths.get(d, "embeddings.parquet")
+    java.nio.file.Files.write(f, "aa".getBytes)
+    val i1 = SessionStaging.datasetIdent(spark, d, "embeddings.parquet")
+    java.nio.file.Files.write(f, "bbb".getBytes) // size changes
+    val i2 = SessionStaging.datasetIdent(spark, d, "embeddings.parquet")
+    assert(i1 != i2)
+  }
+
+  test("datasetIdent re-keys on a same-size rewrite less than 1 ms apart") {
+    import java.nio.file.Files
+    import java.nio.file.attribute.FileTime
+    import java.util.concurrent.TimeUnit.NANOSECONDS
+    val d = tempDir("graft-ident-mtime")
+    val f = java.nio.file.Paths.get(d, "embeddings.parquet")
+    // both mtimes fall in the same millisecond, 500 µs apart
+    val t0 = 1700000000000L * 1000000L + 100000L
+    Files.write(f, "aa".getBytes)
+    Files.setLastModifiedTime(f, FileTime.from(t0, NANOSECONDS))
+    val i1 = SessionStaging.datasetIdent(spark, d, "embeddings.parquet")
+    Files.write(f, "bb".getBytes)
+    Files.setLastModifiedTime(f, FileTime.from(t0 + 500000L, NANOSECONDS))
+    assume(Files.getLastModifiedTime(f).to(NANOSECONDS) === t0 + 500000L,
+      "the filesystem records no sub-millisecond mtimes")
+    val i2 = SessionStaging.datasetIdent(spark, d, "embeddings.parquet")
     assert(i1 != i2)
   }
 
   test("datasetIdent refuses a missing source file") {
     val d = tempDir("graft-ident-missing")
     val e = intercept[IllegalArgumentException] {
-      SessionStaging.datasetIdent(d, "embeddings.parquet")
+      SessionStaging.datasetIdent(spark, d, "embeddings.parquet")
     }
     assert(e.getMessage.contains("does not exist"))
   }

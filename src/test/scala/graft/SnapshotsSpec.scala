@@ -13,7 +13,7 @@ class SnapshotsSpec extends SparkSpec {
 
   test("merge updates matched, inserts unmatched, carries the rest; v1 intact") {
     val t = "spec_merge"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     Snapshots.write(spark, t,
       Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0)).toDF("id", "tag", "x"))
     val src = Seq((2L, "b2", 99.0), (4L, "d", 40.0)).toDF("id", "tag", "x")
@@ -30,7 +30,7 @@ class SnapshotsSpec extends SparkSpec {
 
   test("applyChangelog(v1, diff(1,2)) reconstructs v2, duplicates included") {
     val t = "spec_cdc_apply"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     // v1 carries a duplicate row (multiset semantics are the contract)
     Snapshots.write(spark, t,
       Seq((1L, "a"), (1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "tag"))
@@ -46,7 +46,7 @@ class SnapshotsSpec extends SparkSpec {
 
   test("applyChangelog raises on a delete of a row the snapshot lacks") {
     val t = "spec_cdc_bad"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     Snapshots.write(spark, t, Seq((1L, "a")).toDF("id", "tag"))
     val bogus = Seq((9L, "zz", "delete")).toDF("id", "tag", "_change_type")
     val ex = intercept[Exception] {
@@ -57,31 +57,31 @@ class SnapshotsSpec extends SparkSpec {
 
   test("merge rejects a source with duplicate keys") {
     val t = "spec_merge_dup"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     Snapshots.write(spark, t, Seq((1L, "a")).toDF("id", "tag"))
     val dup = Seq((2L, "x"), (2L, "y")).toDF("id", "tag")
     intercept[IllegalArgumentException] {
       Snapshots.merge(spark, t, dup, Seq("id"))
     }
     // the failed merge must not have produced a snapshot
-    assert(Snapshots.versions(t) === Seq(1))
+    assert(Snapshots.versions(spark, t) === Seq(1))
   }
 
   test("vacuum drops old versions for real: listing shrinks, reads fail, latest survives") {
     import graft.core.Snapshots
     val t = "vac_spec"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
     Snapshots.write(spark, t, df)
     Snapshots.write(spark, t, df.filter($"k" > 1))
     Snapshots.write(spark, t, df.filter($"k" > 2))
-    assert(Snapshots.vacuum(t, keep = 2) == Seq(1))
-    assert(Snapshots.versions(t) == Seq(2, 3))
+    assert(Snapshots.vacuum(spark, t, keep = 2) == Seq(1))
+    assert(Snapshots.versions(spark, t) == Seq(2, 3))
     intercept[Exception](Snapshots.read(spark, t, 1).count())
     assert(Snapshots.latest(spark, t).count() == 1)
     // keep >= current count is a no-op; keep < 1 rejected
-    assert(Snapshots.vacuum(t, keep = 5).isEmpty)
-    intercept[IllegalArgumentException](Snapshots.vacuum(t, keep = 0))
+    assert(Snapshots.vacuum(spark, t, keep = 5).isEmpty)
+    intercept[IllegalArgumentException](Snapshots.vacuum(spark, t, keep = 0))
   }
 
   test("s33 incremental MV equals a direct recompute of the v2 aggregate") {
@@ -129,34 +129,34 @@ class SnapshotsSpec extends SparkSpec {
     "the tag's target to vacuum exactly like any time travel") {
     import SparkSpec.spark.implicits._
     val t = "tags_spec"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     Snapshots.write(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "s"))
     Snapshots.write(spark, t, Seq((1L, "a2")).toDF("id", "s"))
-    intercept[IllegalArgumentException](Snapshots.tag(t, "nope", 9))
-    intercept[IllegalArgumentException](Snapshots.tag(t, "bad name!", 1))
+    intercept[IllegalArgumentException](Snapshots.tag(spark, t, "nope", 9))
+    intercept[IllegalArgumentException](Snapshots.tag(spark, t, "bad name!", 1))
     // dots-only names pass the character class but resolve to the tags
     // dir / table root — must be a validation error, not an IOException
-    intercept[IllegalArgumentException](Snapshots.tag(t, ".", 1))
-    intercept[IllegalArgumentException](Snapshots.tag(t, "..", 1))
-    Snapshots.tag(t, "audited", 1)
-    assert(Snapshots.tags(t) == Map("audited" -> 1))
+    intercept[IllegalArgumentException](Snapshots.tag(spark, t, ".", 1))
+    intercept[IllegalArgumentException](Snapshots.tag(spark, t, "..", 1))
+    Snapshots.tag(spark, t, "audited", 1)
+    assert(Snapshots.tags(spark, t) == Map("audited" -> 1))
     assert(Snapshots.readTag(spark, t, "audited").count() == 2)
     assert(Snapshots.latest(spark, t).count() == 1)
     // retagging moves the pin
-    Snapshots.tag(t, "audited", 2)
+    Snapshots.tag(spark, t, "audited", 2)
     assert(Snapshots.readTag(spark, t, "audited").count() == 1)
     intercept[IllegalArgumentException](Snapshots.readTag(spark, t, "missing"))
     // vacuum drops v1; a tag still pointing there fails on read like any
     // expired time travel (the documented retention contract)
-    Snapshots.tag(t, "old", 1)
-    assert(Snapshots.vacuum(t, keep = 1) == Seq(1))
+    Snapshots.tag(spark, t, "old", 1)
+    assert(Snapshots.vacuum(spark, t, keep = 1) == Seq(1))
     intercept[Exception](Snapshots.readTag(spark, t, "old").collect())
   }
 
   test("crash-safe write: a half-written stage is invisible to readers; " +
     "v{N} appears only via the atomic publish rename") {
     val t = "snap_crash_spec"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     assert(Snapshots.write(spark, t, Seq((1, "a")).toDF("k", "v")) == 1)
     // a writer that crashed mid-write: partial data in the next,
     // unpublished version directory
@@ -166,7 +166,7 @@ class SnapshotsSpec extends SparkSpec {
     java.nio.file.Files.write(new java.io.File(dead, "part-00000.parquet")
       .toPath, Array[Byte](0, 1, 2))
     // readers resolve neither the debris nor any phantom version
-    assert(Snapshots.versions(t) == Seq(1))
+    assert(Snapshots.versions(spark, t) == Seq(1))
     assert(Snapshots.latest(spark, t).collect().map(_.getString(1)).toSeq
       == Seq("a"))
     // time travel refuses the unpublished version number
@@ -182,20 +182,20 @@ class SnapshotsSpec extends SparkSpec {
 
   test("merge rejects two source rows with null keys") {
     val t = "spec_merge_null_dup"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     Snapshots.write(spark, t, Seq((1L, "a")).toDF("id", "tag"))
     val dup = Seq[(Option[Long], String)]((None, "x"), (None, "y")).toDF("id", "tag")
     val ex = intercept[IllegalArgumentException] {
       Snapshots.merge(spark, t, dup, Seq("id"))
     }
     assert(ex.getMessage === "requirement failed: MERGE source has duplicate rows on key id")
-    assert(Snapshots.versions(t) === Seq(1))
+    assert(Snapshots.versions(spark, t) === Seq(1))
   }
 
   test("merge inserts a single null-key source row and carries null-key " +
     "target rows over") {
     val t = "spec_merge_null"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     Snapshots.write(spark, t, Seq[(Option[Long], String)](
       (Some(1L), "a"), (None, "t0"), (None, "t1")).toDF("id", "tag"))
     val src = Seq[(Option[Long], String)]((Some(1L), "a2"), (None, "s")).toDF("id", "tag")
@@ -207,15 +207,15 @@ class SnapshotsSpec extends SparkSpec {
 
   test("a merge retried after a rejected one publishes v2 over the debris") {
     val t = "spec_merge_retry"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     Snapshots.write(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
     intercept[IllegalArgumentException] {
       Snapshots.merge(spark, t, Seq((2L, "x"), (2L, "y")).toDF("id", "tag"), Seq("id"))
     }
-    assert(Snapshots.versions(t) === Seq(1))
+    assert(Snapshots.versions(spark, t) === Seq(1))
     assert(Snapshots.merge(spark, t, Seq((2L, "b2"), (3L, "c")).toDF("id", "tag"),
       Seq("id")) === 2)
-    assert(Snapshots.versions(t) === Seq(1, 2))
+    assert(Snapshots.versions(spark, t) === Seq(1, 2))
     assert(Snapshots.read(spark, t, 2).as[(Long, String)].collect().sorted.toSeq ===
       Seq((1L, "a"), (2L, "b2"), (3L, "c")))
   }
@@ -248,7 +248,7 @@ class SnapshotsSpec extends SparkSpec {
 
   test("a version directory with no schema file still reads") {
     val t = "spec_no_schema"
-    Snapshots.reset(t)
+    Snapshots.reset(spark, t)
     Snapshots.write(spark, t, Seq((1L, "a"), (2L, "b")).toDF("id", "tag"))
     assert(recorded(t, 1).isDefined)
     new java.io.File(graft.core.Scratch.durable(
@@ -267,8 +267,8 @@ class SnapshotsSpec extends SparkSpec {
       Quality.s35 -> "orders_wap", StreamingOps.t15 -> "t15_state")
     writers.foreach { case (q, t) =>
       q.build(spark, sf).collect()
-      assert(Snapshots.versions(t).nonEmpty, s"${q.name} published nothing")
-      Snapshots.versions(t).foreach { v =>
+      assert(Snapshots.versions(spark, t).nonEmpty, s"${q.name} published nothing")
+      Snapshots.versions(spark, t).foreach { v =>
         val dir = graft.core.VersionedStore.versionDir(
           graft.core.Scratch.durable(s"snapshots/$t"), v)
         val json = recorded(t, v).getOrElse(fail(s"${q.name}: $t v$v has no schema file"))
