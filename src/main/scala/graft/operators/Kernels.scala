@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.api.GraftQuery
 import graft.core.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Rows of the driver `events` table, typed for Dataset kernels. */
 final case class Event(

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.api.GraftQuery
 import graft.core.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -1716,7 +1716,6 @@ object StatOps {
   val d23: GraftQuery = GraftQuery(
     "d23_isotonic_calibration",
     (s, d) => {
-      import s.implicits._
       val ev = Tables.events(s, d)
       val bounds = ev.agg(min("value").as("vmin"), max("value").as("vmax"))
       val agg = ev.crossJoin(broadcast(bounds))

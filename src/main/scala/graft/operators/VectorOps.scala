@@ -2739,17 +2739,41 @@ object VectorOps {
   }
 
   /** `rows` minus tombstoned ids — the ONE alive filter every read path
-    * (serving routes, compaction, rebuild, audits) applies: a keyed
-    * anti-join against the root's `tombstones/` table (vec_id), matched
-    * on `key` (postings carry c_id, codes vec_id). Deleted ids stop being
-    * served at the NEXT query with zero data-file rewrites on the serving
-    * path; [[compactVecIndex]] reclaims the space in the next version.
+    * (serving routes, compaction, rebuild, audits) applies: `NOT IN` on
+    * `key` (postings carry c_id, codes vec_id) against the root's
+    * tombstoned ids, which the driver holds ([[tombstoneIds]]). The ids
+    * enter the plan as a literal set, so the filter runs inside the scan's
+    * own stage: no join, no broadcast, no job of its own. Deleted ids stop
+    * being served at the NEXT query with zero data-file rewrites on the
+    * serving path; [[compactVecIndex]] reclaims the space in the next
+    * version.
     */
   private def aliveRows(s: SparkSession, path: String, rows: DataFrame,
-      key: String): DataFrame =
-    if (!exists(s, s"$path/tombstones")) rows
-    else rows.join(s.read.schema(TombstoneSchema).parquet(s"$path/tombstones")
-      .withColumnRenamed("vec_id", key), Seq(key), "left_anti")
+      key: String): DataFrame = {
+    val dead = tombstoneIds(s, path)
+    if (dead.isEmpty) rows else rows.filter(!col(key).isInCollection(dead.toSeq))
+  }
+
+  private val tombstones = new graft.core.ListingCache[Array[Long]]
+
+  /** The distinct vec_ids of the root's `tombstones/` table, sorted, as a
+    * driver array — one [[graft.core.ListingCache]] entry per directory.
+    * A delete appends a file and so re-stamps the entry: the next read
+    * pays one collect job, every read after it none. A root without
+    * tombstones costs one existence probe. The set is bounded by the
+    * compaction cadence: [[compactVecIndex]] publishes a successor version
+    * without tombstones.
+    */
+  private def tombstoneIds(s: SparkSession, path: String): Array[Long] = {
+    val dir = s"$path/tombstones"
+    tombstones(s, dir) {
+      if (!exists(s, dir)) Array.empty[Long]
+      else {
+        import s.implicits._
+        s.read.schema(TombstoneSchema).parquet(dir).as[Long].collect().distinct.sorted
+      }
+    }
+  }
 
   /** `df` with its vec_id as BIGINT — every id a tier or the tombstone
     * table persists goes through this, so the files of one directory never
@@ -3004,9 +3028,9 @@ object VectorOps {
     * a successor before it executes cannot reshape or vanish its files.
     * Each route is its planned variant fed the query batch this call
     * collects and the cached geometry ([[loadIvfCentroids]],
-    * [[loadPqCodebook]]); every data and tombstone read passes its
-    * declared schema, so with a local query batch a warm call builds its
-    * DataFrame without a Spark job. Output: (q_id,
+    * [[loadPqCodebook]]) and tombstoned ids ([[tombstoneIds]]); every
+    * data read passes its declared schema, so with a local query batch a
+    * warm call builds its DataFrame without a Spark job. Output: (q_id,
     * neighbor_id, cos) for ivf/rerank; (q_id, neighbor_id, adc) for
     * pq/ivfpq — native scores per route, each oracle-gated
     * (serve_vec_search / _pq / _rerank, v44) with a recall eval next to
@@ -3063,44 +3087,53 @@ object VectorOps {
     * query set — so ranking cells in Scala (cosArr == graft_cosine ==
     * list_cosine_similarity, ties to smallest k_id: the exact v2 rule)
     * replaces a join + window + checkpoint + collect chain, and a poll
-    * with cached `cents`/`qsArr` pays ONE Spark job: the pruned postings
-    * scan. The probed cell ids — bounded by #queries × probes — become a
-    * STATIC `IN` partition filter on the postings scan, so only the
-    * probed directories are read (VectorOpsSpec pins
-    * the PartitionFilters). The probed rows re-enter the plan as a
-    * broadcast local relation.
+    * with cached `cents`/`qsArr` pays only the pruned postings scan. The
+    * probed cell ids — bounded by #queries × probes — become a STATIC `IN`
+    * partition filter on the postings scan, so only the probed directories
+    * are read (VectorOpsSpec pins the PartitionFilters). The queries of
+    * each probed cell reach the scan through `sc.broadcast`, and each
+    * posting row is scored in `mapPartitions` with cosArr against the
+    * queries that probe its cell — no join, so no exchange of the query
+    * side and no job to build one.
     */
   private[graft] def searchIvfIndexPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cents: Array[(Long, Array[Double])],
       k: Int, probes: Int = 2, excludeSelf: Boolean = true,
       compactForServe: Boolean = false): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     import s.implicits._
-    val probedRows: Seq[(Long, Seq[Double], Long)] = qsArr.toSeq.flatMap {
-      case (qid, qa) => probedCells(qa, cents, probes).map(c => (qid, qa.toSeq, c._1))
+    val probed: Seq[(Long, (Long, Array[Double]))] = qsArr.toSeq.flatMap { q =>
+      probedCells(q._2, cents, probes).map(c => (c._1, q))
     }
-    val probed = s.createDataset(probedRows).toDF("q_id", "q_e", "cluster")
+    val byCell: Map[Long, Array[(Long, Array[Double])]] =
+      probed.groupBy(_._1).map { case (cell, qs) => cell -> qs.map(_._2).toArray }
+    val bc = s.sparkContext.broadcast((byCell, excludeSelf))
     // the probed cell ids (bounded by #queries × probes) become a static
     // partition filter on the postings scan = file-level pruning
-    val cellIds = probedRows.map(_._3).distinct.toArray
     val postingsRaw = tierRows(s, path, IvfTier)
     val pruned = postingsRaw.filter(col("cluster").isInCollection(
-      cellLiterals(postingsRaw, cellIds.toSeq)))
+      cellLiterals(postingsRaw, probed.map(_._1).distinct)))
     val scoredRows = aliveRows(s, path, pruned, "c_id")
-      .join(broadcast(probed), Seq("cluster"))
-      .filter(if (excludeSelf) col("c_id") =!= col("q_id") else lit(true))
-      .withColumn("cos", cosine("q_e", "c_e"))
+      .select(col("c_id"), col("c_e"), col("cluster").cast("long"))
+      .as[(Long, Array[Double], Long)]
+      .mapPartitions { it =>
+        val (m, exclSelf) = bc.value
+        it.flatMap { case (cid, ce, cell) =>
+          m.getOrElse(cell, Array.empty[(Long, Array[Double])]).iterator
+            .filter(q => !exclSelf || q._1 != cid)
+            .map { case (qid, qa) => (qid, cid, cosArr(qa, ce)) }
+        }
+      }.toDF("q_id", "c_id", "cos")
     // compactForServe: a SERVING caller's per-poll work is bounded by
     // contract (probes x cell size candidates), so coalesce(1) collapses
-    // the WHOLE narrow chain — pruned scan, broadcast join, scoring,
-    // ranking window (SinglePartition satisfies its clustering
-    // requirement) — into one task and zero exchanges: the lowest-latency
-    // posture for a poll, at the deliberate price of a serial scan.
-    // SCALEBENCH's skewed serve rows measure exactly this posture under
-    // a planted 50%-hot cell and gate it by an ABSOLUTE ceiling (a 30x
-    // hot-cell poll must stay inside the dashboard's 3 s budget — the
-    // exponent rule can't bind on sub-0.3 s polls). NEVER the default:
-    // at pipeline scale the parallel scan + shuffle is the right plan.
+    // the WHOLE narrow chain — pruned scan, scoring, ranking window
+    // (SinglePartition satisfies its clustering requirement) — into one
+    // task and zero exchanges: the lowest-latency posture for a poll, at
+    // the deliberate price of a serial scan. SCALEBENCH's skewed serve
+    // rows measure exactly this posture under a planted 50%-hot cell and
+    // gate it by an ABSOLUTE ceiling (a 30x hot-cell poll must stay inside
+    // the dashboard's 3 s budget — the exponent rule can't bind on
+    // sub-0.3 s polls). NEVER the default: at pipeline scale the parallel
+    // scan + shuffle is the right plan.
     rankCos(if (compactForServe) scoredRows.coalesce(1) else scoredRows, k)
   }
 
@@ -3150,29 +3183,32 @@ object VectorOps {
   /** The rerank route with caller-supplied planning inputs (the cached
     * codebook + query batch): PQ codes nominate `rerankCandidates` ids
     * per query (stage 1), raw vectors are fetched BY ID from the postings
-    * tier for exact cosine rerank (stage 2). The query vectors re-enter
-    * stage 2 as a broadcast local relation — same doubles [[withNorm]]
-    * would produce.
+    * tier for exact cosine rerank (stage 2). The query vectors reach
+    * stage 2 through `sc.broadcast` and each fetched row is scored in
+    * `mapPartitions` with cosArr — the same doubles [[withNorm]] would
+    * produce, and no query-side join.
     */
   private[graft] def searchRerankPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cb: Array[Array[Double]],
       k: Int, rerankCandidates: Int = 32, excludeSelf: Boolean = true,
       compactForServe: Boolean = false): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExtensions.register(s)
     // stage 1: code-only candidate generation
     val cand = searchPqIndexPlanned(s, path, qsArr, cb, rerankCandidates,
       excludeSelf, compactForServe).select("q_id", "neighbor_id")
     // stage 2: fetch raw vectors for candidate ids only — a broadcast
     // id join against the alive postings, then exact cosine + per-query
     // rank
-    val qLocal = s.createDataset(qsArr.toSeq.map { case (id, e) => (id, e.toSeq) })
-      .toDF("q_id", "q_e")
+    val bc = s.sparkContext.broadcast(qsArr.toMap)
     val fetched = broadcast(cand)
       .join(aliveRows(s, path, tierRows(s, path, IvfTier), "c_id"),
         col("neighbor_id") === col("c_id"))
-      .join(broadcast(qLocal), "q_id")
-      .withColumn("cos", cosine("q_e", "c_e"))
+      .select(col("q_id"), col("c_id"), col("c_e"))
+      .as[(Long, Long, Array[Double])]
+      .mapPartitions { it =>
+        val qs = bc.value
+        it.map { case (qid, cid, ce) => (qid, cid, cosArr(qs(qid), ce)) }
+      }.toDF("q_id", "c_id", "cos")
     // the serving posture: see searchIvfIndexPlanned's compactForServe
     rankCos(if (compactForServe) fetched.coalesce(1) else fetched, k)
   }
@@ -3546,7 +3582,7 @@ object VectorOps {
     * tombstone every 7th vector, COMPACT (the rewrite minus tombstones,
     * published as version 2), then serve: deleted codes are gone from
     * storage, results identical to serving through the tombstone
-    * anti-join (VectorOpsSpec pins pre == post). The codebook, like v38's
+    * filter (VectorOpsSpec pins pre == post). The codebook, like v38's
     * centroids, is geometry — deleting a codebook-source vector does not
     * move its codeword.
     */

@@ -77,7 +77,6 @@ class GraftTourSpec extends SparkSpec {
 
   test("tour 5: bring-your-own schema — withContract adapts a foreign " +
     "parquet end-to-end through curate and forecast") {
-    import SparkSpec.spark.implicits._
     val dir = tempDir("graft-byod")
 
     // a crawl table that looks nothing like the registry contract:

@@ -1,14 +1,20 @@
 package graft
 
+import graft.api.Graft
 import graft.core.{QueryMetrics, Tables}
+import graft.operators.VectorOps
 import graft.serve.QueryService
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{IntegerType, StringType}
 
 /** A warm lakehouse pass launches no Spark job that does no query work:
   * table schemas come from metadata (core/Tables caches each file's
   * inferred schema per listing stamp), and MERGE checks its cardinality
-  * rule inside its own write (core/Snapshots.merge).
+  * rule inside its own write (core/Snapshots.merge). A warm serving read
+  * runs only its own scan: the ANN routes take tombstones and query
+  * vectors from the driver, and the state and demand arms read
+  * per-snapshot views.
   */
 class JobCountSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
@@ -64,5 +70,68 @@ class JobCountSpec extends SparkSpec {
     val again = Tables.load(spark, dir, "t")
     assert(again.schema("x").dataType === StringType)
     assert(again.as[String].collect().toSet === Set("a", "bb"))
+  }
+
+  /** A versioned "both" root (ivf + pq tiers) over the embeddings, with
+    * every 7th vector deleted.
+    */
+  private lazy val annRoot: String = {
+    val root = tempDir("jobs-ann") + "/idx"
+    val emb = Tables.embeddings(spark, sf)
+    Graft.annInitVersionedVecIndex(emb, root, tiers = "both")
+    Graft.annDeleteFromVersionedVecIndex(spark, root,
+      emb.filter(col("vec_id") % 7 === 0).select("vec_id"))
+    root
+  }
+
+  /** Two query vectors as a local batch, the form a request carries. */
+  private lazy val queries: DataFrame = Tables.embeddings(spark, sf)
+    .filter(col("vec_id").isin(1L, 2L)).collect()
+    .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("vec_id", "embedding")
+
+  private def facade(tier: String): Int = {
+    def read() = Graft.annSearchVersionedVecIndex(spark, annRoot, queries, 5, tier = tier)
+      .collect()
+    read()
+    jobs(read())
+  }
+
+  private def serving(tier: String): Int = {
+    def read() = VectorOps.searchPinned(spark, VectorOps.resolveVecIndexRoot(spark, annRoot),
+      queries, 5, 2, tier, compactForServe = true).collect()
+    read()
+    jobs(read())
+  }
+
+  test("warm facade ANN reads on a root with tombstones take at most " +
+    "2/2/4 jobs (ivf/pq/rerank)") {
+    val n = Seq("ivf", "pq", "rerank").map(t => t -> facade(t)).toMap
+    info(s"facade jobs $n")
+    assert(n("ivf") <= 2 && n("pq") <= 2 && n("rerank") <= 4, n.toString)
+  }
+
+  test("warm ANN reads in the serving posture take at most 1/1/2 jobs " +
+    "(ivf/pq/rerank)") {
+    val n = Seq("ivf", "pq", "rerank").map(t => t -> serving(t)).toMap
+    info(s"serving jobs $n")
+    assert(n("ivf") <= 1 && n("pq") <= 1 && n("rerank") <= 2, n.toString)
+  }
+
+  test("a delete between two warm searches adds exactly one job at the " +
+    "next search, and none after it") {
+    val warm = facade("ivf")
+    Graft.annDeleteFromVersionedVecIndex(spark, annRoot,
+      Seq(3L, 4L).toDF("vec_id"))
+    val next = jobs(Graft.annSearchVersionedVecIndex(spark, annRoot, queries, 5,
+      tier = "ivf").collect())
+    assert(next === warm + 1)
+    assert(facade("ivf") === warm)
+  }
+
+  test("warm busState and demandByLine polls take one job each") {
+    QueryService.busState(spark, sf).collect()
+    QueryService.demandByLine(spark, sf, "NATION_3").collect()
+    assert(jobs(QueryService.busState(spark, sf).collect()) === 1)
+    assert(jobs(QueryService.demandByLine(spark, sf, "NATION_3").collect()) === 1)
   }
 }

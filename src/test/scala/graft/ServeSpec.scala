@@ -35,12 +35,42 @@ class ServeSpec extends SparkSpec {
     assert(second <= 4, s"second poll submitted $second stages — sim re-ran?")
 
     // demand + window fetch reuse the same snapshot
+    var series = Array.empty[org.apache.spark.sql.Row]
     val d = countStages {
-      QueryService.demandByLine(spark, sf, "ALGERIA").collect()
+      series = QueryService.demandByLine(spark, sf, "NATION_3").collect()
       QueryService.ridesWindow(spark, sf,
         "2024-01-02 06:00:00", "2024-01-02 12:00:00", 365).collect()
     }
+    assert(series.nonEmpty, "the demand poll of a served line returned no series")
     assert(d <= 6, s"poll pair submitted $d stages — sim re-ran?")
+  }
+
+  test("the state and demand views equal the live aggregation over the " +
+    "served rides, for every line") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, max, max_by, struct}
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+    val rides = QueryService.servedRides(spark, sf)
+    val latest = struct(col("timestamp_at_stop"), col("bus_ride_id"))
+    val liveState = rides.groupBy("bus_line_id", "bus_line")
+      .agg(
+        max_by(col("remaining_at_stop"), latest).as("remaining_at_stop"),
+        max_by(col("passengers_on_bus"), latest).as("total_passengers"),
+        max_by(col("total_capacity"), latest).as("total_capacity"),
+        max(col("timestamp_at_stop")).as("update_timestamp"))
+    val state = QueryService.busState(spark, sf)
+    assert(state.columns.toSeq === liveState.columns.toSeq)
+    assert(rows(state).sorted === rows(liveState).sorted)
+    val liveDemand = sim.BusSim.demandRollup(rides)
+    val lines = rows(QueryService.busLines(spark, sf).select("bus_line"))
+    assert(lines.size === 25)
+    for (line <- lines.map(_.stripPrefix("[").stripSuffix("]"))) {
+      val got = QueryService.demandByLine(spark, sf, line)
+      assert(got.columns.toSeq === liveDemand.columns.toSeq)
+      val want = rows(liveDemand.filter(col("bus_line") === line).orderBy("bucket_ts"))
+      assert(want.nonEmpty, s"$line has no demand series")
+      assert(rows(got) === want, s"$line: the demand view diverged from the live rollup")
+    }
   }
 
   test("served snapshot equals the live simulation result") {

@@ -101,7 +101,6 @@ class SnapshotsSpec extends SparkSpec {
   }
 
   test("s30 SCD2: versions tile per user, one open row each, no same-state repeats") {
-    import org.apache.spark.sql.functions._
     val dim = graft.operators.Sources.s30.build(spark, sf).collect()
     val byUser = dim.groupBy(_.getAs[Long]("user_id"))
     byUser.values.foreach { rows =>

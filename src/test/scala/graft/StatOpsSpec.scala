@@ -1359,7 +1359,6 @@ class StatOpsSpec extends SparkSpec {
     assert(r.getAs[Long]("n_b") == ks.getAs[Long]("n_b"))
     // a population compared against itself must score exactly zero: both
     // ECDFs are identical at every pooled point
-    import SparkSpec.spark.implicits._
     val self = Tables.events(spark, sf)
       .select(col("event_id"), col("value"))
       .withColumn("event_type",

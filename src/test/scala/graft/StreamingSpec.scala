@@ -273,7 +273,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("t17 append mode emits exactly the watermark-closed windows of t11") {
-    import org.apache.spark.sql.functions.{col, expr, max}
+    import org.apache.spark.sql.functions.{expr, max}
     // t11 (complete mode) is the full window set; t17 (append) must emit
     // precisely the subset whose end the final watermark passed, and hold
     // back every window within the 10-minute delay of the stream head.

@@ -363,7 +363,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("v19 hard negatives: 3 wrong-label items per query, each beats every unpicked wrong-label cosine") {
-    import org.apache.spark.sql.functions._
     val out = VectorOps.v19.build(spark, sf).collect()
     val byQ = out.groupBy(_.getAs[Long]("q_id"))
     assert(byQ.size == 10 && byQ.values.forall(_.length == 3))
@@ -426,7 +425,6 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   test("v28 OOD: one row per vector, scores in [0,2], a planted outlier ranks worst") {
-    import org.apache.spark.sql.functions._
     val out = VectorOps.v28.build(spark, sf).collect()
     val n = graft.core.Tables.embeddings(spark, sf).count()
     assert(out.length == n)
@@ -1025,6 +1023,68 @@ class VectorOpsSpec extends SparkSpec {
         val (df, jobs) = jobsDuring(search())
         assert(jobs === 0, s"$layout/$t: a warm call submitted $jobs jobs while planning")
         assert(df.collect().toSeq === want, s"$layout/$t: warm results moved")
+      }
+    }
+  }
+
+  /** A copy of the version directory `dir` whose data directories hold
+    * their rows left-anti joined against `dir`'s tombstones, with no
+    * tombstone table: the alive rows as a join computes them.
+    */
+  private def antiJoinedCopy(dir: String): String = {
+    import org.apache.spark.sql.functions.col
+    val out = tempDir("graft-antijoin")
+    val dead = spark.read.parquet(s"$dir/tombstones")
+    new java.io.File(dir).listFiles().filter(_.isDirectory).foreach { f =>
+      f.getName match {
+        case "tombstones" =>
+        case data @ ("postings" | "codes") =>
+          val key = if (data == "postings") "c_id" else "vec_id"
+          val rows = spark.read.parquet(f.getPath)
+          val w = rows.join(dead.withColumnRenamed("vec_id", key), Seq(key), "left_anti")
+            .select(rows.columns.map(col).toIndexedSeq: _*).write
+          (if (rows.columns.contains("cluster")) w.partitionBy("cluster") else w)
+            .parquet(s"$out/$data")
+        case _ =>
+          org.apache.commons.io.FileUtils.copyDirectory(f, new java.io.File(out, f.getName))
+      }
+    }
+    out
+  }
+
+  test("tombstones on the ivf, pq, rerank and ivfpq routes: a delete inside " +
+    "the current version is gone at the next query, and results equal a " +
+    "left-anti join against the tombstones, duplicated appends included") {
+    import org.apache.spark.sql.functions.col
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    val qs = emb.filter(vid < 3)
+    def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.collect().map(_.toString).toSet
+    for ((layout, routes) <- Seq("both" -> Seq("ivf", "pq", "rerank"),
+        "ivfpq" -> Seq("ivfpq"))) {
+      val root = tempDir(s"graft-tomb-$layout") + "/idx"
+      VectorOps.buildVecIndex(emb.filter(vid >= 50), root, layout)
+      // a redelivered append: the batch holding the queries' cluster, twice
+      VectorOps.appendToVecIndex(emb.filter(vid < 50), root)
+      VectorOps.appendToVecIndex(emb.filter(vid < 50), root)
+      def served(t: String): Set[(Long, Long)] =
+        VectorOps.searchVecIndex(spark, root, qs, 5, tier = t).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+      for (t <- routes) {
+        // two of query 0's neighbors, both appended twice
+        val victims = served(t).filter(_._1 == 0L).map(_._2).toSeq.sorted.take(2)
+        assert(victims.size === 2 && victims.forall(_ < 50))
+        VectorOps.deleteFromVecIndex(spark, root, emb.filter(vid.isin(victims: _*)))
+        val after = served(t)
+        assert(victims.forall(v => !after.exists(_._2 == v)),
+          s"$layout/$t: a tombstoned id is still served at the next query")
+        assert(after.count(_._1 == 0L) === 5, s"$layout/$t: k must refill")
+        val joined = antiJoinedCopy(cur(root))
+        assert(rows(VectorOps.searchVecIndex(spark, root, qs, 5, tier = t)) ===
+          rows(VectorOps.searchPinned(spark, joined, qs, 5, 2, t)),
+          s"$layout/$t: the alive filter diverged from the left-anti join")
       }
     }
   }
