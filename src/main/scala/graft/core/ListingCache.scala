@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** The one owner of "derived from these files": every driver-side cache of
@@ -13,9 +13,14 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   *   - '''What a stamp covers.''' An entry is stamped with
   *     [[ListingCache.listingOf]] of the path it derives from: (name,
-  *     size, mtime) of every file directly under it, or of the file
-  *     itself. A dataset directory's stamp covers all of its tables (one
-  *     file each), so regenerating any of them re-keys the entry.
+  *     size, mtime) of every file and directory under it, recursively, or
+  *     of the file itself — the file listing a Spark scan of the path
+  *     takes. A dataset directory's stamp covers all of its tables, and an
+  *     index version directory's covers every tier and its tombstones, so
+  *     a file any writer adds, replaces or removes under the path re-keys
+  *     the entry.
+  *   - '''Keys.''' The path is qualified through its filesystem, so a
+  *     `file:` URI and the plain path it names share one entry.
   *   - '''Precision.''' The mtime is the finest the filesystem records:
   *     nanoseconds through `java.nio` on `file://` paths, FileStatus
   *     milliseconds elsewhere. New part files carry a per-write UUID, so a
@@ -24,8 +29,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *   - '''When the stamp is taken.''' Before the load, so a rewrite racing
   *     the load can only leave an entry that misses at the next call. A
   *     missing path is never cached — the loader raises its usual error.
-  *   - '''Hits.''' A hit costs one listing (one call, plus one stat per
-  *     file on `file://`) and no Spark job. A stale entry is never served.
+  *   - '''Hits.''' A hit costs one listing (one call per directory, plus
+  *     one stat per file on `file://`) and no Spark job. A stale entry is
+  *     never served.
   *   - '''The bound.''' Every cache holds at most
   *     [[ListingCache.DriverCacheEntries]] entries.
   *   - '''Session-bound entries.''' A cache built `sessionBound` keys each
@@ -41,9 +47,11 @@ final class ListingCache[V](sessionBound: Boolean = false) {
   private val entries = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), (Seq[(String, Long, Long)], V)]
 
-  def apply(s: SparkSession, path: String, variant: String = "")(load: => V): V =
-    ListingCache.listingOf(s, path).fold(load) { stamp =>
-      val key = (if (sessionBound) s else null, path, variant)
+  def apply(s: SparkSession, path: String, variant: String = "")(load: => V): V = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    ListingCache.listing(fs, p).fold(load) { stamp =>
+      val key = (if (sessionBound) s else null, fs.makeQualified(p).toString, variant)
       entries.get(key) match {
         case Some((`stamp`, hit)) => hit
         case _ =>
@@ -54,6 +62,7 @@ final class ListingCache[V](sessionBound: Boolean = false) {
           fresh
       }
     }
+  }
 
   private def release(entry: (_, V)): Unit = entry._2 match {
     case df: Dataset[_] => df.unpersist(blocking = false): Unit
@@ -70,16 +79,28 @@ object ListingCache {
     */
   val DriverCacheEntries = 64
 
-  /** (name, size, mtime) of every file directly under `path` (of the file
-    * itself when `path` is a file), sorted — one filesystem call, no
-    * Spark job; the mtime at the precision the class doc states. None
-    * when `path` does not exist.
+  /** (name, size, mtime) of every file and directory under `path`,
+    * recursively (of the file itself when `path` is a file), sorted — one
+    * filesystem call per directory, no Spark job; the mtime at the
+    * precision the class doc states. A nested entry is named by its path
+    * below `path` (`postings/part-0.parquet`), so the stamp of a file or
+    * of a directory without subdirectories lists bare names. None when
+    * `path` does not exist.
     */
   def listingOf(s: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
     val p = new Path(path)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    try Some(fs.listStatus(p).toSeq.map(f => (f.getPath.getName, f.getLen,
-        if (fs.getScheme == "file") localMtimeNanos(f.getPath) else f.getModificationTime)).sorted)
+    listing(p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+  }
+
+  private def listing(fs: FileSystem, p: Path): Option[Seq[(String, Long, Long)]] = {
+    def under(dir: Path, prefix: String): Seq[(String, Long, Long)] =
+      fs.listStatus(dir).toSeq.flatMap { f =>
+        val name = prefix + f.getPath.getName
+        (name, f.getLen,
+          if (fs.getScheme == "file") localMtimeNanos(f.getPath) else f.getModificationTime) +:
+          (if (f.isDirectory) under(f.getPath, s"$name/") else Nil)
+      }
+    try Some(under(p, "").sorted)
     catch { case _: java.io.FileNotFoundException => None }
   }
 

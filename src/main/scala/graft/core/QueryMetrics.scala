@@ -7,20 +7,21 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.{SparkContext, Success}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
-/** The one Spark listener in graft: per-scope job, stage and task counts
-  * plus shuffle bytes, for every tool that measures what a query ran
-  * (StageCosts, OptProbe, the serving poll loop, the specs' bounds).
+/** The one Spark listener in graft: per-scope job, stage and task counts,
+  * shuffle bytes and wall time, for every tool that measures what a query
+  * ran (the x81/x82 stage-cost tables, OptProbe, the serving poll loop,
+  * the specs' bounds).
   *
   * [[scoped]] runs its body under a Spark job tag derived from the scope
   * name, and every job, stage and task carrying the tag counts toward the
   * scope. Tags rather than job groups: tags are additive, so a scope keeps
   * counting through bodies that set their own job group (x50's and x66's
-  * cancellation groups, StageCosts inside an OptProbe-measured query), and
-  * threads the body starts inherit them. Two scopes on two threads never
-  * mix.
+  * cancellation groups, a stage-cost table inside an OptProbe-measured
+  * query), and threads the body starts inherit them. Two scopes on two
+  * threads never mix.
   *
   * The listener bus is asynchronous. [[drain]] submits a marker job and
   * waits for the bus to deliver its start: the bus delivers in order, and
@@ -38,14 +39,20 @@ final class QueryMetrics private[graft] (sc: SparkContext) extends SparkListener
 
   private def tagOf(scope: String): String = s"graft-qm-$id-$scope"
 
-  /** Run `body` counting every Spark job it submits under `scope`;
-    * calling a scope again accumulates.
+  /** Run `body` counting every Spark job it submits under `scope`, and
+    * its wall time on the calling thread (at least 1 ms per call, so a
+    * scope that ran shows); calling a scope again accumulates.
     */
   def scoped[T](scope: String)(body: => T): T = {
     val tag = tagOf(scope)
     scopes.putIfAbsent(tag, Counts())
     sc.addJobTag(tag)
-    try body finally sc.removeJobTag(tag)
+    val t0 = System.nanoTime()
+    try body finally {
+      sc.removeJobTag(tag)
+      val ms = math.max(1L, (System.nanoTime() - t0) / 1000000L)
+      bump(Seq(tag))(c => c.copy(wallMs = c.wallMs + ms))
+    }
   }
 
   /** Return once every event of the work already returned from [[scoped]]
@@ -62,6 +69,19 @@ final class QueryMetrics private[graft] (sc: SparkContext) extends SparkListener
   }
 
   def counts(scope: String): Counts = scopes.getOrElse(tagOf(scope), Counts())
+
+  /** The (stage, wall_ms, shuffle_bytes) table of every scope, exact:
+    * drains the bus, then detaches. Wall and shuffle bytes are
+    * measurements that vary run to run, so a registry output that joins
+    * this table keeps it out of its oracle compare (x81, x82).
+    */
+  def costTable(s: SparkSession): DataFrame = {
+    try drain() finally close()
+    import s.implicits._
+    scopes.toSeq
+      .map { case (tag, c) => (tag.stripPrefix(tagOf("")), c.wallMs, c.shuffleBytes) }
+      .toDF("stage", "wall_ms", "shuffle_bytes")
+  }
 
   /** Detach from the listener bus; call on every exit path. */
   def close(): Unit = sc.removeSparkListener(this)
@@ -132,7 +152,7 @@ object QueryMetrics {
   final case class Counts(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
       retried: Int = 0, shuffleReadBytes: Long = 0L,
       shuffleWriteBytes: Long = 0L, jobRuns: Vector[JobRun] = Vector.empty,
-      compiles: Compiles = Compiles()) {
+      compiles: Compiles = Compiles(), wallMs: Long = 0L) {
     def shuffleBytes: Long = shuffleReadBytes + shuffleWriteBytes
   }
 

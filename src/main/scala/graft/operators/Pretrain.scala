@@ -133,7 +133,7 @@ object Pretrain {
 
   /** [[pretrainCorpus]] with per-stage COST columns — the x81 recorder
     * applied to the 13-stage capstone: every stage materializes inside a
-    * [[graft.core.StageCosts]] job group, and the funnel gains
+    * [[graft.core.QueryMetrics]] scope, and the funnel gains
     * (wall_ms, shuffle_bytes) per stage so the dominating stage is a
     * table lookup, not a UI dig. Counts are bit-identical to
     * [[pretrainCorpus]] (x82 gates them against x66's oracle); stages
@@ -142,7 +142,8 @@ object Pretrain {
     * raw scan is paid inside stage 1's first consumer).
     */
   def pretrainCorpusCosts(docs0: DataFrame): DataFrame = {
-    val rec = new graft.core.StageCosts(docs0.sparkSession)
+    val s = docs0.sparkSession
+    val m = graft.core.QueryMetrics(s)
     // detach the listener on the failure path too (fail-fast contract:
     // stage 3 throws on degenerate inputs) — a leaked listener would
     // accumulate bus work on the shared session across retries
@@ -150,10 +151,10 @@ object Pretrain {
       // sequential tail: overlapped stage walls would overlap in time and
       // the recorder's per-stage wall_ms attribution would stop meaning
       // "this stage's cost" — the costs entry keeps the honest layout
-      try pretrainCorpusStaged(docs0, (n, f) => rec.staged(n)(f()),
+      try pretrainCorpusStaged(docs0, (n, f) => m.scoped(n)(f().localCheckpoint()),
         overlapTail = false)
-      catch { case t: Throwable => rec.abort(); throw t }
-    funnel.join(broadcast(rec.table()), Seq("stage"), "left")
+      catch { case t: Throwable => m.close(); throw t }
+    funnel.join(broadcast(m.costTable(s)), Seq("stage"), "left")
       .na.fill(0L, Seq("wall_ms", "shuffle_bytes"))
       .select("stage_idx", "stage", "n_units", "n_docs", "n_tokens",
         "wall_ms", "shuffle_bytes")

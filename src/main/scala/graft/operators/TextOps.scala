@@ -2148,8 +2148,8 @@ object TextOps {
   }
 
   /** [[curationReport]] with per-stage COST columns (VERDICT r10 #8):
-    * each stage materializes inside a [[graft.core.StageCosts]] job
-    * group, so the report says not only what each stage removed but what
+    * each stage materializes inside a [[graft.core.QueryMetrics]] scope,
+    * so the report says not only what each stage removed but what
     * it COST — (stage, n_docs, n_tokens, wall_ms, shuffle_bytes), the
     * table a 100-TB operator reads to find the dominating stage. Counts
     * are bit-identical to [[curationReport]] (x81 gates that against
@@ -2159,7 +2159,9 @@ object TextOps {
     */
   def curationReportCosts(docs: DataFrame, threshold: Double = 0.9): DataFrame = {
     val s = docs.sparkSession
-    val rec = new graft.core.StageCosts(s)
+    val m = graft.core.QueryMetrics(s)
+    def staged(stage: String)(f: => DataFrame): DataFrame =
+      m.scoped(stage)(f.localCheckpoint())
     def stat(df: DataFrame, stage: String): DataFrame =
       df.agg(
         count(lit(1)).as("n_docs"),
@@ -2171,16 +2173,16 @@ object TextOps {
     // footprint at scale) — `input` carries zero cost by construction,
     // the x82 convention; the listener detaches on every exit path
     try {
-      val clean = rec.staged("quality_pass") {
+      val clean = staged("quality_pass") {
         qualityRules(docs).filter(col("keep")).select("doc_id")
           .join(docs, "doc_id")
       }
-      val surv = rec.staged("exact_deduped") {
+      val surv = staged("exact_deduped") {
         clean.groupBy(md5(col("text")).as("h"))
           .agg(min("doc_id").as("doc_id")).select("doc_id")
           .join(clean, "doc_id")
       }
-      val kept = rec.staged("kept") {
+      val kept = staged("kept") {
         dupComponents(surv, threshold)
           .filter(col("doc_id") === col("component"))
           .select("doc_id").join(surv, "doc_id")
@@ -2189,10 +2191,10 @@ object TextOps {
         .unionByName(stat(clean, "quality_pass"))
         .unionByName(stat(surv, "exact_deduped"))
         .unionByName(stat(kept, "kept"))
-        .join(broadcast(rec.table()), Seq("stage"), "left")
+        .join(broadcast(m.costTable(s)), Seq("stage"), "left")
         .na.fill(0L, Seq("wall_ms", "shuffle_bytes"))
         .select("stage", "n_docs", "n_tokens", "wall_ms", "shuffle_bytes")
-    } catch { case t: Throwable => rec.abort(); throw t }
+    } catch { case t: Throwable => m.close(); throw t }
   }
 
   /** X37 (beyond reference): curation funnel report — see

@@ -2675,9 +2675,12 @@ object VectorOps {
   private val CodebookSchema =
     StructType(Seq(StructField("j", IntegerType), StructField("e", Doubles)))
 
-  /** Tier `t`'s data rows under `path`, read with its declared schema. The
-    * file listing is taken fresh, so files any process appended since the
-    * last read are served.
+  /** Tier `t`'s data rows under `path`, read with its declared schema.
+    * The frame lists the tier's files when it is built and keeps that
+    * listing: a search built after an append by any process serves the
+    * appended files, and a serving layer that caches a built plan stamps
+    * it on the version directory's listing ([[graft.core.ListingCache]]),
+    * so the append re-keys it.
     */
   private def tierRows(s: SparkSession, path: String, t: Tier): DataFrame =
     s.read.schema(t.schema(s, path)).parquet(s"$path/${t.data}")
@@ -2714,7 +2717,7 @@ object VectorOps {
   private def fsOf(s: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private[graft] def exists(s: SparkSession, dir: String): Boolean =
+  private def exists(s: SparkSession, dir: String): Boolean =
     fsOf(s, dir).exists(new org.apache.hadoop.fs.Path(dir))
 
   /** The tiers present in an index version directory — THE layout probe
@@ -2825,7 +2828,6 @@ object VectorOps {
     val dir = resolveVecIndexRoot(s, root)
     requireLayout(s, dir, "appendToVecIndex").foreach(t =>
       t.write(t.encode(longIds(batch), dir), s"$dir/${t.data}", "append"))
-    noteMutation(dir)
   }
 
   /** LOGICAL delete — the right-to-be-forgotten path: `ids` (a vec_id
@@ -2840,7 +2842,6 @@ object VectorOps {
     val dir = resolveVecIndexRoot(s, root)
     requireLayout(s, dir, "deleteFromVecIndex")
     longIds(ids.select(col("vec_id"))).write.mode("append").parquet(s"$dir/tombstones")
-    noteMutation(dir)
   }
 
   /** Tier `t`'s data rows minus tombstones and minus the rows a
@@ -3808,8 +3809,10 @@ object VectorOps {
     * plan reads: concurrent searches return fully-old or fully-new
     * results, never empty and never mixed-geometry. Only appends and
     * tombstones land inside a published version (new files, none
-    * removed); every rewrite — [[compactVecIndex]], [[rebuildVecIndex]] —
-    * publishes a new version. Old versions are reclaimed only by an
+    * removed), so they change the listing every driver cache over the
+    * version is stamped with ([[graft.core.ListingCache]]); every
+    * rewrite — [[compactVecIndex]], [[rebuildVecIndex]] — publishes a
+    * new version. Old versions are reclaimed only by an
     * explicit [[vacuumVecIndex]] AFTER a grace window — the s32
     * retention discipline: in-flight readers pinned to the previous
     * version stay valid until the vacuum horizon passes them.
@@ -3830,32 +3833,6 @@ object VectorOps {
     */
   def resolveVecIndexRoot(s: SparkSession, root: String): String =
     VersionedStore.resolve(s, root)
-
-  // ------------------------------------------------------ mutation epochs
-
-  /** In-JVM mutation counter per version directory, bumped by the two
-    * verbs that change files INSIDE a published version
-    * ([[appendToVecIndex]], [[deleteFromVecIndex]]). Serving layers that
-    * cache resolved relations or constructed plans fold
-    * [[mutationEpochOf]] into their cache keys, so a same-process
-    * mutation invalidates them — closing the gap where "immutable once
-    * built" versions are in fact appended to by maintenance code in the
-    * same JVM (rewrites publish a new version, which re-keys the path
-    * itself). Reads cost one TrieMap lookup.
-    */
-  private val mutationEpochs =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private[graft] def mutationEpochOf(dir: String): Long =
-    mutationEpochs.getOrElse(dir, 0L)
-
-  private def noteMutation(dir: String): Unit = {
-    mutationEpochs.updateWith(dir) {
-      case Some(n) => Some(n + 1)
-      case None    => Some(1L)
-    }
-    (): Unit
-  }
 
   /** Build `tiers` for `corpus` into an unpublished version directory the
     * caller holds the lease on. Debris a crashed predecessor left there is

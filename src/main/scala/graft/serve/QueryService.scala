@@ -146,23 +146,6 @@ object QueryService {
         |WHERE timestamp_at_stop BETWEEN TIMESTAMP '2024-01-02 06:00:00'
         |  AND TIMESTAMP '2024-01-02 12:00:00'""".stripMargin))
 
-  /** Search endpoint: top-k documents by Okapi BM25 against the engine's
-    * fixed demo query terms (see [[graft.operators.TextOps.bm25Score]] —
-    * the term list is the per-request parameterization seam). Serving
-    * shape at scale: scoring (one scan + broadcast df/stats joins) is
-    * MATERIALIZED once per dataset ([[bm25Root]]); every request is then
-    * a TakeOrdered page over the stored scores (per-partition heads, no
-    * global sort) — the build-once/query-many shape shared with
-    * [[vecSearch]].
-    */
-  /** The materialized BM25 score snapshot for `d` — the inverted-index
-    * stand-in the [[docSearch]] scaladoc promises: scoring is one corpus
-    * scan paid ONCE per dataset fingerprint (same identity rule as
-    * [[vecIndexRoot]]), and every poll afterwards is a TakeOrdered page
-    * over the tiny stored (doc_id, bm25) table. Values round-trip parquet
-    * exactly (doubles), so the snapshot serves bit-identical results to
-    * live scoring and the same oracles gate both.
-    */
   /** The serving roots are [[graft.core.Scratch.durable]] roots under
     * `serve/`: they outlive the JVM, so their name must change whenever
     * their CONTENT would. It folds the dataset fingerprint
@@ -275,6 +258,14 @@ object QueryService {
     dir
   }
 
+  /** The materialized BM25 score snapshot for `d` — the inverted-index
+    * stand-in the [[docSearch]] scaladoc promises: scoring is one corpus
+    * scan paid ONCE per dataset fingerprint (same identity rule as
+    * [[vecIndexRoot]]), and every poll afterwards is a TakeOrdered page
+    * over the tiny stored (doc_id, bm25) table. Values round-trip parquet
+    * exactly (doubles), so the snapshot serves bit-identical results to
+    * live scoring and the same oracles gate both.
+    */
   private def bm25Root(s: SparkSession, d: String): String = {
     val root = docIndexRootOf(s, d)
     builtRoot(s, root)(stagedDocVersion(s, d, root, "full", first = true))
@@ -292,14 +283,20 @@ object QueryService {
     graft.core.VersionedStore.resolve(s, root)
   }
 
-  /** The pointer is still resolved per poll (a flip must land at the
-    * next request), but the constructed page plan is driver-cached per
-    * pinned version directory — the vecSearch discipline: a warm poll
-    * re-EXECUTES the plan, it does not re-analyze it.
+  /** Search endpoint: top-k documents by Okapi BM25 against the engine's
+    * fixed demo query terms (see [[graft.operators.TextOps.bm25Score]] —
+    * the term list is the per-request parameterization seam). Serving
+    * shape at scale: scoring (one scan + broadcast df/stats joins) is
+    * MATERIALIZED once per dataset ([[bm25Root]]); every request is then
+    * a TakeOrdered page over the stored scores (per-partition heads, no
+    * global sort) — the build-once/query-many shape shared with
+    * [[vecSearch]]. The pointer is still resolved per poll (a flip must
+    * land at the next request), and the page plan is one [[plans]] entry
+    * stamped on the pinned version directory.
     */
   def docSearch(s: SparkSession, d: String, k: Int = 10): DataFrame = {
     val dir = bm25Root(s, d)
-    cachedPlan((s, s"doc:${epoched(dir)}", k, ""))(docPage(s, dir, k))
+    plans(s, dir, s"doc:$k")(docPage(s, dir, k))
   }
 
   /** The search endpoint as a driver-checked query: the x31 scoring SQL
@@ -446,53 +443,21 @@ object QueryService {
   /** THE warm-path driver cache: constructed serving plans, plus the
     * k-independent parts of a hybrid plan ([[hybridSearch]]). A poll
     * re-EXECUTES a cached plan (data is never cached), so the driver-side
-    * construction and analysis of an identical request is paid once. The
-    * key folds every pinned input the plan reads (the [[epoched]] version
-    * directories, k and the tier), and serving roots are named by a
-    * content fingerprint ([[serveRoot]]), so a changed corpus, a version
-    * flip or a same-JVM mutation re-keys it. A miss builds through the
-    * same route planner as the facade
+    * construction and analysis of an identical request is paid once. Each
+    * plan is one [[graft.core.ListingCache]] entry stamped on the pinned
+    * version directory it scans, under a variant naming everything else
+    * it depends on (arm, k, tier, cand, the lex version). A plan freezes
+    * the file listing and the tombstoned ids of that directory, and the
+    * stamp covers every one of those files, so a version flip and an
+    * append or delete by any writer inside the pinned version are served
+    * at the next poll. A miss builds through the same route planner as the
+    * facade
     * ([[graft.operators.VectorOps.searchPinned]]), which reads the index
     * geometry from the one geometry cache every search route shares; the
     * results are therefore bit-identical to the facade routes, and the
     * same oracles gate both.
     */
-  private val servedPlans = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, String), DataFrame]
-
-  /** The cache-key form of an index version directory: the path plus its
-    * in-JVM mutation epoch (see
-    * [[graft.operators.VectorOps.mutationEpochOf]]). Cross-process
-    * rewrites are covered by the version flip re-keying the path itself;
-    * tombstone visibility additionally gets the [[tombstoned]] bypass
-    * because deletes land inside the current version and must show at the
-    * NEXT query even when another process issued them.
-    */
-  private def epoched(dir: String): String =
-    s"$dir@${graft.operators.VectorOps.mutationEpochOf(dir)}"
-
-  /** The cached plan under `key`, built on a miss. Past
-    * [[graft.core.ListingCache.DriverCacheEntries]] entries the map is
-    * dropped wholesale — a refill costs one poll's planning, a leak costs
-    * the JVM.
-    */
-  private def cachedPlan(key: (SparkSession, String, Int, String))(
-      plan: => DataFrame): DataFrame = {
-    if (servedPlans.size > graft.core.ListingCache.DriverCacheEntries)
-      servedPlans.clear()
-    servedPlans.getOrElseUpdate(key, plan)
-  }
-
-  /** A cached serving plan freezes the tombstoned ids the planned
-    * searches read at construction; serving scratch roots never see
-    * deletes, but if one ever does (vecIndexRoot is visible inside the
-    * package), bypass the cache so the delete contract — gone at the NEXT
-    * query — holds. One existence probe per poll, through the path's
-    * Hadoop filesystem like every other index read: every route reads the
-    * pinned version's one tombstone table.
-    */
-  private[graft] def tombstoned(s: SparkSession, path: String): Boolean =
-    graft.operators.VectorOps.exists(s, s"$path/tombstones")
+  private[graft] val plans = new graft.core.ListingCache[DataFrame](sessionBound = true)
 
   /** Vector-search endpoint: top-k neighbors of the demo query vectors
     * (vec_id < 5 — the per-request parameterization seam), served from
@@ -507,11 +472,9 @@ object QueryService {
   def vecSearch(s: SparkSession, d: String, k: Int = 3,
       tier: String = "ivf"): DataFrame = {
     val path = vecIndexRoot(s, d)
-    def plan = graft.operators.VectorOps.searchPinned(s, path,
+    plans(s, path, s"vec:$k:$tier")(graft.operators.VectorOps.searchPinned(s, path,
       graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 5), k,
-      probes = 2, tier = tier, compactForServe = true)
-    if (tombstoned(s, path)) plan
-    else cachedPlan((s, s"vec:${epoched(path)}", k, tier))(plan)
+      probes = 2, tier = tier, compactForServe = true))
   }
 
   /** Recall@3 of every serving route against the exact baseline — the
@@ -722,23 +685,18 @@ object QueryService {
   def hybridSearch(s: SparkSession, d: String, k: Int = 10,
       cand: Int = 20): DataFrame = {
     val path = vecIndexRoot(s, d)
-    // the key folds BOTH pinned snapshots the plan reads — the vector
-    // version directory AND the BM25 version directory — so a
-    // documents-only re-materialization (new lex version, same
-    // embeddings) re-keys instead of serving the stale lexical arm
+    // every entry is stamped on the vector version directory; the BM25
+    // version directory is immutable once published, so naming it in the
+    // variant re-keys a documents-only re-materialization (new lex
+    // version, same embeddings) instead of serving the stale lexical arm
     val lexDir = bm25Root(s, d)
-    if (tombstoned(s, path)) hybridSearchPlan(s, d, path, lexDir, k, cand)
-    else {
-      val vecKey = s"hybrid:${epoched(path)}"
-      val key = s"$vecKey:$lexDir:$cand"
-      // a plan for a new k cuts the cached fused ranking of its version
-      // pair, and a new lex version fuses its page with the cached vector
-      // arm, so neither collects anything the cached plans already hold
-      cachedPlan((s, key, k, ""))(
-        cachedPlan((s, key, cand, "fused"))(fusedRanking(s, lexDir, cand,
-          cachedPlan((s, vecKey, cand, "vec"))(vectorArm(s, d, path, cand))))
-          .filter(col("fused_rank") <= k))
-    }
+    // a plan for a new k cuts the cached fused ranking of its version
+    // pair, and a new lex version fuses its page with the cached vector
+    // arm, so neither collects anything the cached plans already hold
+    plans(s, path, s"hybrid:$k:$cand:$lexDir")(
+      plans(s, path, s"hybrid-fused:$cand:$lexDir")(fusedRanking(s, lexDir, cand,
+        plans(s, path, s"hybrid-vec:$cand")(vectorArm(s, d, path, cand))))
+        .filter(col("fused_rank") <= k))
   }
 
   private[graft] def hybridSearchPlan(s: SparkSession, d: String, path: String,

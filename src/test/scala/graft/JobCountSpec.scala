@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
   * inferred schema per listing stamp), and MERGE checks its cardinality
   * rule inside its own write (core/Snapshots.merge). A warm serving read
   * runs only its own scan: the ANN routes take tombstones and query
-  * vectors from the driver, and the state and demand arms read
-  * per-snapshot views.
+  * vectors from the driver, the state and demand arms read per-snapshot
+  * views, and a served root with tombstones keeps its cached plans.
   */
 class JobCountSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
@@ -126,6 +126,31 @@ class JobCountSpec extends SparkSpec {
       tier = "ivf").collect())
     assert(next === warm + 1)
     assert(facade("ivf") === warm)
+  }
+
+  test("after a delete on the served root, warm vecSearch (ivf/pq/rerank) " +
+    "and hybridSearch polls run no more jobs than before it") {
+    def poll(arm: String): Unit = arm match {
+      case "hybrid" => QueryService.hybridSearch(spark, sf).collect()
+      case tier => QueryService.vecSearch(spark, sf, tier = tier).collect()
+    }
+    def warmJobs(): Map[String, Int] = {
+      val arms = Seq("ivf", "pq", "rerank", "hybrid")
+      arms.foreach(poll)
+      arms.map(a => a -> jobs(poll(a))).toMap
+    }
+    val clean = warmJobs()
+    val root = QueryService.serveRootOf(spark, sf)
+    // the serving root is durable, so the delete names an id the corpus
+    // does not hold (results stay as they were) and compaction afterwards
+    // publishes a version without the tombstone table
+    VectorOps.deleteFromVecIndex(spark, root, Seq(9200000L).toDF("vec_id"))
+    try {
+      val tombstoned = warmJobs()
+      info(s"warm poll jobs: no tombstones $clean, after a delete $tombstoned")
+      assert(tombstoned.forall { case (arm, n) => n <= clean(arm) },
+        s"after a delete $tombstoned, without tombstones $clean")
+    } finally VectorOps.compactVecIndex(spark, root)
   }
 
   test("warm busState and demandByLine polls take one job each") {

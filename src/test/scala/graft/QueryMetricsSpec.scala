@@ -54,6 +54,21 @@ class QueryMetricsSpec extends SparkSpec {
     } finally m.close()
   }
 
+  test("a scope records its wall time, accumulated over its calls") {
+    val m = QueryMetrics(spark)
+    try {
+      m.scoped("slow")(Thread.sleep(30))
+      m.scoped("slow")(Thread.sleep(30))
+      m.scoped("fast")(())
+      assert(m.counts("slow").wallMs >= 60L)
+      assert(m.counts("fast").wallMs >= 1L)
+      val table = m.costTable(spark).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(table.keySet === Set("slow", "fast"))
+      assert(table("slow") === m.counts("slow").wallMs)
+    } finally m.close()
+  }
+
   test("the shuffle bytes of a one-shuffle query are > 0") {
     val (_, c) = QueryMetrics.measure(spark) {
       spark.range(0, 10000, 1, 4).groupBy((col("id") % 7).as("k")).count().collect()

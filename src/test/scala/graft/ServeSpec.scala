@@ -206,8 +206,9 @@ class ServeSpec extends SparkSpec {
     val baseline = rows() // warms relation + plan caches
     val hybBaseline = hybrid()
     // append clones of query 0's vector under fresh ids INTO the current
-    // version directory — without the epoch bump the cached plan would
-    // keep serving the stale file listing and never surface them
+    // version directory — the append changes the version's listing, so the
+    // cached plan's stamp no longer matches; a plan kept past it would
+    // serve its construction-time file listing and never surface them
     val clones = graft.core.Tables.embeddings(spark, sf)
       .filter(col("vec_id") === 0)
       .select((col("vec_id") + lit(9000000L)).as("vec_id"), col("embedding"))
@@ -257,15 +258,108 @@ class ServeSpec extends SparkSpec {
     assert(QueryService.vacuumGraceMs === 80000L)
   }
 
-  test("the tombstone probe goes through the path's filesystem, so a " +
-    "file: URI answers like a plain path") {
-    val dir = tempDir("graft-tomb")
+  test("a version directory's stamp covers its nested files, is the same " +
+    "for a file: URI and the plain path, and the served plan hits for both; " +
+    "file and flat-directory stamps are the bare listing") {
+    import graft.core.ListingCache
+    val dir = QueryService.vecIndexRoot(spark, sf)
     val uri = new java.io.File(dir).toURI.toString
     assert(uri.startsWith("file:"))
-    assert(!QueryService.tombstoned(spark, uri))
-    assert(new java.io.File(dir, "tombstones").mkdirs())
-    assert(QueryService.tombstoned(spark, uri))
-    assert(QueryService.tombstoned(spark, dir))
+    val stamp = ListingCache.listingOf(spark, dir)
+    assert(stamp.exists(_.exists(_._1.startsWith("postings/cluster="))),
+      s"the stamp of $dir must list the files inside its tiers: $stamp")
+    assert(ListingCache.listingOf(spark, uri) === stamp)
+    val plan = QueryService.vecSearch(spark, sf)
+    assert(QueryService.vecSearch(spark, sf) eq plan, "a warm poll must hit")
+    assert(QueryService.plans(spark, uri, "vec:3:ivf")(
+      fail("the served plan must hit when its version is named by a file: URI")) eq plan)
+    assert(QueryService.plans(spark, dir, "vec:3:ivf")(
+      fail("the served plan must hit when its version is named by its path")) eq plan)
+    // a file, and a directory without subdirectories, list as one
+    // filesystem call over their own entries would: bare names, so every
+    // datasetIdent digest and serving-root name derived from them stays put
+    def bare(path: String): Seq[(String, Long, Long)] = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+        .map(f => (f.getPath.getName, f.getLen,
+          java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(f.getPath.toUri))
+            .to(java.util.concurrent.TimeUnit.NANOSECONDS)))
+        .sorted
+    }
+    val files = new java.io.File(sf).listFiles().map(_.getPath).toSeq
+    assert(files.size === 10)
+    for (f <- files) assert(ListingCache.listingOf(spark, f) === Some(bare(f)), f)
+    assert(ListingCache.listingOf(spark, sf) === Some(bare(sf)))
+    val flat = tempDir("graft-flat")
+    spark.range(4).repartition(2).write.mode("overwrite").parquet(flat)
+    assert(bare(flat).size >= 3)
+    assert(ListingCache.listingOf(spark, flat) === Some(bare(flat)))
+  }
+
+  test("rows a plain parquet append writes into the pinned version's " +
+    "postings/ are served by the next vecSearch and hybridSearch") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val root = QueryService.serveRootOf(spark, sf)
+    def rows(): Set[String] =
+      QueryService.vecSearch(spark, sf).collect().map(_.toString).toSet
+    def hybrid(): Seq[String] =
+      QueryService.hybridSearch(spark, sf).collect().map(_.toString).toSeq.sorted
+    val (baseline, hybBaseline) = (rows(), hybrid()) // warm plans
+    val dir = QueryService.vecIndexRoot(spark, sf)
+    // a writer that knows only the parquet layout: query 0's posting row
+    // again under a fresh id, appended into its cluster's partition
+    val clone = 9100000L
+    spark.read.parquet(s"$dir/postings").filter(col("c_id") === 0L)
+      .withColumn("c_id", lit(clone))
+      .write.mode("append").partitionBy("cluster").parquet(s"$dir/postings")
+    try {
+      assert(QueryService.vecIndexRoot(spark, sf) === dir)
+      assert(rows().exists(_.contains(clone.toString)),
+        "the next vecSearch must serve a row appended into the pinned version")
+      // the clone takes vec_rank 1 and moves every other vector rank
+      val hyb = hybrid()
+      assert(hyb !== hybBaseline,
+        "the next hybridSearch must fuse the appended row into its vector arm")
+      assert(hyb === QueryService.hybridSearchPlan(spark, sf, dir,
+        QueryService.resolveDocIndexRoot(spark, QueryService.docIndexRootOf(spark, sf)), 10, 20)
+        .collect().map(_.toString).toSeq.sorted)
+    } finally {
+      // the serving root is durable: delete the clone and compact, so the
+      // next version serves what it did before
+      graft.operators.VectorOps.deleteFromVecIndex(spark, root,
+        spark.range(1).select(lit(clone).as("vec_id")))
+      graft.operators.VectorOps.compactVecIndex(spark, root)
+    }
+    assert(rows() === baseline)
+    assert(hybrid() === hybBaseline)
+  }
+
+  test("warm polls of every arm write nothing under the run root") {
+    def arms(): Unit = {
+      QueryService.ridesWindow(spark, sf,
+        "2024-01-02 06:00:00", "2024-01-02 12:00:00", 365).collect()
+      QueryService.busState(spark, sf).collect()
+      QueryService.demandByLine(spark, sf, "NATION_3").collect()
+      Seq("ivf", "pq", "rerank").foreach(t =>
+        QueryService.vecSearch(spark, sf, tier = t).collect())
+      QueryService.docSearch(spark, sf).collect()
+      QueryService.hybridSearch(spark, sf).collect()
+    }
+    val runRoot = new java.io.File(graft.core.Scratch.run("probe")).getParentFile
+    def written(): Seq[String] =
+      if (!runRoot.exists()) Nil
+      else {
+        val base = runRoot.toPath
+        val walk = java.nio.file.Files.walk(base)
+        try { import scala.jdk.CollectionConverters._
+          walk.iterator().asScala.map(p => base.relativize(p).toString).toList.sorted }
+        finally walk.close()
+      }
+    arms()
+    val before = written().toSet
+    for (_ <- 1 to 3) arms()
+    val added = written().filterNot(before)
+    assert(added.isEmpty, s"warm polls wrote under the run root: ${added.take(5)}")
   }
 
   test("a crashed first build's debris under an unpublished BM25 root does " +
