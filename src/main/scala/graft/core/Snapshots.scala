@@ -46,17 +46,16 @@ object Snapshots {
     */
   private val SchemaFile = "_schema.json"
 
-  /** Write `df`'s rows into the version directory `dir`, then its schema.
-    * The schema recorded is the one a reader of `dir` sees for `df`'s
-    * schema (parquet reads every column back nullable), taken from a scan
-    * that lists `dir` without inferring anything. A write that fails
-    * leaves no schema file: Overwrite empties `dir` before writing.
+  /** Write `df`'s rows into the version directory `dir`, then its schema:
+    * the one [[Tables.readBack]] gives a reader of `dir` for `df`. A write
+    * that fails leaves no schema file: Overwrite empties `dir` before
+    * writing.
     */
   private def writeVersion(s: SparkSession, df: DataFrame, dir: String): Unit = {
     df.write.mode(SaveMode.Overwrite).parquet(dir)
     val p = new Path(dir, SchemaFile)
     val out = VersionedStore.fsOf(s, p).create(p, true)
-    try out.write(s.read.schema(df.schema).parquet(dir).schema.json.getBytes("UTF-8"))
+    try out.write(Tables.readBack(df, dir).schema.json.getBytes("UTF-8"))
     finally out.close()
   }
 

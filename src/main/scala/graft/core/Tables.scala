@@ -18,6 +18,20 @@ import org.apache.spark.sql.types.StructType
   * data-file footers to learn it. The footers are read once per file
   * ([[schemaOf]], cached per listing stamp) and every load passes the
   * schema explicitly, so a load plans without a Spark job.
+  *
+  * The same rule holds for every output graft writes and reads back, batch
+  * or stream, and it lives here:
+  *   - source tables are read only through [[load]] and its named
+  *     loaders, and streamed only through [[stream]];
+  *   - an output written and read back is read through [[readBack]], with
+  *     the schema it was written with;
+  *   - a persisted root read back by a later call declares its schema next
+  *     to its writer and passes it to the read (the vector-index tiers,
+  *     the BM25 snapshot, the near-dup index, the signature store, the
+  *     ingest streams' state tables).
+  * Only [[schemaOf]] and the s20 schema-evolution query (whose subject is
+  * footer merging) infer a schema from the footers; SourceScanSpec fails
+  * on any other schema-less parquet read in the sources.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -28,6 +42,26 @@ object Tables {
     val path = s"$dir/$name.parquet"
     spark.read.schema(schemaOf(spark, path)).parquet(path)
   }
+
+  /** The file stream of table `name` under `dir`: the directory watched
+    * for files named like the table, read with the table's [[schemaOf]]
+    * schema (a stream needs one; a warm build infers nothing).
+    */
+  def stream(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.readStream.schema(schemaOf(spark, s"$dir/$name.parquet"))
+      .option("pathGlobFilter", s"$name.parquet")
+      .parquet(dir)
+
+  /** The parquet output at `path` read back with the schema a reader sees
+    * for `written`, the frame that was written there: every column
+    * nullable, and a partitioned write's partition columns last, with the
+    * types `written` gave them. Nothing is inferred from the footers, so
+    * the read plans without a Spark job. The writer keeps its own write
+    * (mode, partitioning, sort); a stream's sink is read back with the
+    * streaming frame's schema.
+    */
+  def readBack(written: DataFrame, path: String): DataFrame =
+    written.sparkSession.read.schema(written.schema).parquet(path)
 
   private val schemas = new ListingCache[StructType]
 

@@ -182,7 +182,7 @@ object Relational {
         (col("l_extendedprice") - col("p_retailprice") * col("l_quantity")).as("margin"))
     val path = graft.core.Scratch.run("j4_features")
     features.write.mode("overwrite").parquet(path)
-    s.read.parquet(path).groupBy("p_brand")
+    Tables.readBack(features, path).groupBy("p_brand")
       .agg(count(lit(1)).as("n"), decSum(col("margin")).as("total_margin"),
         max(col("s_acctbal")).as("max_supp_bal"))
   }

@@ -68,9 +68,9 @@ object Sources {
     "s4_parquet_sink_partitioned",
     (s, d) => {
       val path = Scratch.run("s4_orders_parquet")
-      Tables.orders(s, d).write.mode(SaveMode.Overwrite)
-        .partitionBy("o_orderstatus").parquet(path)
-      s.read.parquet(path).groupBy("o_orderstatus")
+      val orders = Tables.orders(s, d)
+      orders.write.mode(SaveMode.Overwrite).partitionBy("o_orderstatus").parquet(path)
+      Tables.readBack(orders, path).groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), decSum(col("o_totalprice")).as("total"))
     },
     Some("""SELECT o_orderstatus, count(*) AS n,
@@ -86,9 +86,9 @@ object Sources {
       val path = Scratch.run("s8_overwrite")
       // first write: garbage subset that must NOT survive
       Tables.orders(s, d).limit(7).write.mode(SaveMode.Overwrite).parquet(path)
-      Tables.orders(s, d).filter(col("o_orderstatus") =!= "X")
-        .write.mode(SaveMode.Overwrite).parquet(path)
-      s.read.parquet(path).groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
+      val kept = Tables.orders(s, d).filter(col("o_orderstatus") =!= "X")
+      kept.write.mode(SaveMode.Overwrite).parquet(path)
+      Tables.readBack(kept, path).groupBy("o_orderpriority").agg(count(lit(1)).as("n"))
     },
     Some("SELECT o_orderpriority, count(*) AS n FROM orders WHERE o_orderstatus <> 'X' GROUP BY o_orderpriority"))
 
@@ -128,11 +128,12 @@ object Sources {
     (s, d) => {
       val v1 = Scratch.run("s15_orders_v1")
       val v2 = Scratch.run("s15_orders_v2")
-      Tables.orders(s, d).write.mode(SaveMode.Overwrite).parquet(v1)
+      val orders = Tables.orders(s, d)
+      orders.write.mode(SaveMode.Overwrite).parquet(v1)
       // DELETE FROM orders WHERE o_orderstatus = 'F'  (copy-on-write)
-      s.read.parquet(v1).filter(!(col("o_orderstatus") === "F"))
-        .write.mode(SaveMode.Overwrite).parquet(v2)
-      s.read.parquet(v2).groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
+      val kept = Tables.readBack(orders, v1).filter(!(col("o_orderstatus") === "F"))
+      kept.write.mode(SaveMode.Overwrite).parquet(v2)
+      Tables.readBack(kept, v2).groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
     },
     Some("SELECT o_orderstatus, count(*) AS n FROM orders WHERE o_orderstatus <> 'F' GROUP BY o_orderstatus"))
 
@@ -299,14 +300,14 @@ object Sources {
         min(days).as("dmin"), max(days).as("dmax"))
       def grid(x: Column, lo: Column, hi: Column): Column =
         floor((x - lo) * 65536 / (hi - lo + 1)).cast("long")
-      Tables.orders(s, d).crossJoin(broadcast(stats))
+      val zordered = Tables.orders(s, d).crossJoin(broadcast(stats))
         .withColumn("z", interleaveBits(
           grid(col("o_custkey"), col("cmin"), col("cmax")),
           grid(days, col("dmin"), col("dmax"))))
         .drop("cmin", "cmax", "dmin", "dmax")
         .repartitionByRange(8, col("z")).sortWithinPartitions("z")
-        .write.mode(SaveMode.Overwrite).parquet(path)
-      s.read.parquet(path)
+      zordered.write.mode(SaveMode.Overwrite).parquet(path)
+      Tables.readBack(zordered, path)
         .filter(col("o_custkey").between(100, 300) &&
           col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
           col("o_orderdate") < lit("1998-01-01").cast("timestamp"))
@@ -442,15 +443,15 @@ object Sources {
     (s, d) => {
       val frag = Scratch.run("s22_fragmented")
       val comp = Scratch.run("s22_compacted")
-      Tables.orders(s, d).repartition(64)
-        .write.mode(SaveMode.Overwrite).parquet(frag)
-      s.read.parquet(frag).coalesce(4)
-        .write.mode(SaveMode.Overwrite).parquet(comp)
+      val orders = Tables.orders(s, d).repartition(64)
+      orders.write.mode(SaveMode.Overwrite).parquet(frag)
+      val compacted = Tables.readBack(orders, frag).coalesce(4)
+      compacted.write.mode(SaveMode.Overwrite).parquet(comp)
       def nFiles(p: String) =
         ListingCache.listingOf(s, p).get.count(_._1.endsWith(".parquet"))
       require(nFiles(frag) == 64 && nFiles(comp) <= 4,
         s"compaction did not shrink the file count: ${nFiles(frag)} -> ${nFiles(comp)}")
-      s.read.parquet(comp)
+      Tables.readBack(compacted, comp)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"), countDistinct(col("o_orderkey")).as("n_keys"),
           decSum(col("o_totalprice")).as("total"))
@@ -478,14 +479,13 @@ object Sources {
       // identical under either mode; only the sentinel write's
       // replace-one-partition behavior depends on it
       withConf(s, "spark.sql.sources.partitionOverwriteMode", "dynamic") {
-        Tables.events(s, d).groupBy("event_type")
-          .agg(count(lit(1)).as("n"))
-          .write.partitionBy("event_type").mode(SaveMode.Overwrite).parquet(path)
+        val counts = Tables.events(s, d).groupBy("event_type").agg(count(lit(1)).as("n"))
+        counts.write.partitionBy("event_type").mode(SaveMode.Overwrite).parquet(path)
         import s.implicits._
         Seq(("error", -1L)).toDF("event_type", "n")
           .select(col("n"), col("event_type")) // partition col order-free
           .write.partitionBy("event_type").mode(SaveMode.Overwrite).parquet(path)
-        s.read.parquet(path).select("event_type", "n")
+        Tables.readBack(counts, path).select("event_type", "n")
       }
     },
     Some("""SELECT event_type,
@@ -550,24 +550,21 @@ object Sources {
   /** The DPP join behind [[s26]], exposed for the plan assertion. */
   def dppJoin(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
+    val events = Tables.events(s, d)
+    val tiers = Seq(("error", "alert"), ("purchase", "alert"), ("click", "noise"),
+      ("view", "noise"), ("signup", "noise")).toDF("event_type", "tier")
     // one seed per events file and run: a different or regenerated dataset
     // never reads another's fact rows
     val seed = dppSeeds(s, s"$d/events.parquet") {
       val dir = Scratch.run("s26_seed")
-      Tables.events(s, d).write.mode(SaveMode.Overwrite)
-        .partitionBy("event_type").parquet(s"$dir/fact")
-      Seq(("error", "alert"), ("purchase", "alert"), ("click", "noise"),
-        ("view", "noise"), ("signup", "noise"))
-        .toDF("event_type", "tier")
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/dim")
+      events.write.mode(SaveMode.Overwrite).partitionBy("event_type").parquet(s"$dir/fact")
+      tiers.write.mode(SaveMode.Overwrite).parquet(s"$dir/dim")
       dir
     }
-    val factPath = s"$seed/fact"
-    val dimPath = s"$seed/dim"
-    val fact = s.read.parquet(factPath)
+    val fact = Tables.readBack(events, s"$seed/fact")
     // the dim predicate must be one DPP's isLikelySelective recognizes
     // (string equality qualifies; a bare boolean attribute does not)
-    val dim = s.read.parquet(dimPath).filter(col("tier") === "alert")
+    val dim = Tables.readBack(tiers, s"$seed/dim").filter(col("tier") === "alert")
     // DPP's stats-based benefit estimate correctly concludes a KB-scale
     // fact isn't worth pruning — the exact opposite holds at production
     // scale. The fallback-ratio estimate (useStats=false) applies the rule
@@ -790,7 +787,7 @@ object Sources {
           col("to_us").isNull.as("is_current"))
       val path = Scratch.run("s30_scd2")
       scd.write.mode(SaveMode.Overwrite).parquet(path)
-      val dim = s.read.parquet(path)
+      val dim = Tables.readBack(scd, path)
       val dup = dim.filter(col("is_current")).groupBy("user_id")
         .agg(count(lit(1)).as("n")).filter(col("n") =!= 1).count()
       require(dup == 0, s"SCD2 invariant broken: $dup users with != 1 current row")

@@ -1,10 +1,12 @@
 package graft.operators
 
 import graft.api.GraftQuery
+import graft.core.Tables
 import graft.functions.Funcs._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface (SURVEY.md §2.10, reference
   * assets/code/pyspark-job.py): file source standing in for Kafka (T1/S9 —
@@ -31,22 +33,17 @@ final case class FunnelEv(user_id: Long, event_type: String, us: Long)
 
 object StreamingOps {
 
-  /** Kafka-envelope-shaped stream over the events table: file source with
-    * declared schema (streaming requires one; it is the batch loader's
-    * cached [[graft.core.Tables.schemaOf]], so a warm build infers
-    * nothing), ts normalized to engine-grain
+  /** Kafka-envelope-shaped stream over the events table: the
+    * [[Tables.stream]] file source, ts normalized to engine-grain
     * TimestampType by the same schema-adaptive rule as the batch loader
-    * ([[graft.core.Tables.normalizedTs]] — nanos-as-long, NTZ, and plain
-    * timestamp layouts all supported).
+    * ([[Tables.normalizedTs]] — nanos-as-long, NTZ, and plain timestamp
+    * layouts all supported).
     */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     graft.streaming.KafkaIO.applyStreamingConfs(s) // T8 session confs
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = graft.core.Tables.schemaOf(s, s"$d/events.parquet")
-    s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(d)
-      .withColumn("ts", graft.core.Tables.normalizedTs(schema("ts").dataType))
+    val raw = Tables.stream(s, d, "events")
+    raw.withColumn("ts", Tables.normalizedTs(raw.schema("ts").dataType))
   }
 
   /** A build whose streaming queries checkpoint under one
@@ -72,6 +69,24 @@ object StreamingOps {
       }
     }
 
+  /** Start the stream `writer` describes — Trigger.AvailableNow, so it
+    * reads the input there is, checkpointed at a fresh `checkpoint()`
+    * path — and wait until it has drained it. The writer names the sink
+    * and the output mode.
+    */
+  private def runToEnd(writer: DataStreamWriter[_], checkpoint: () => String): Unit =
+    writer.option("checkpointLocation", checkpoint())
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** `query` run to its end ([[runToEnd]]) into the memory sink `name` in
+    * output `mode`; returns the sink table.
+    */
+  private def drain(query: Dataset[_], name: String, mode: String,
+      checkpoint: () => String): DataFrame = {
+    runToEnd(query.writeStream.format("memory").queryName(name).outputMode(mode), checkpoint)
+    query.sparkSession.table(name)
+  }
+
   /** T1+T2+T3+F14+T9: stateless alert branch — filter, JSON payload, append
     * sink, checkpointed (pyspark-job.py:142-168).
     */
@@ -82,12 +97,7 @@ object StreamingOps {
         .filter(col("event_type") === "error" && col("value") > 150)
         .select(col("event_id"),
           to_json(struct(col("event_id"), col("user_id"), col("value"))).as("payload"))
-        .writeStream.format("memory").queryName("graft_t3")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t3")
+      drain(q, "graft_t3", "append", checkpoint)
     },
     Some("""SELECT event_id, to_json(struct_pack(event_id := event_id, user_id := user_id, value := value)) AS payload
            |FROM events WHERE event_type = 'error' AND value > 150""".stripMargin),
@@ -108,12 +118,7 @@ object StreamingOps {
           max_by(col("value"), col("event_id")).as("last_value"),
           max(col("event_id")).as("last_event_id"))
         .filter(col("last_type") =!= "error")
-        .writeStream.format("memory").queryName("graft_t5")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t5")
+      drain(q, "graft_t5", "complete", checkpoint)
     },
     Some("""WITH latest AS (SELECT user_id, arg_max(event_type, event_id) AS last_type,
            |arg_max(value, event_id) AS last_value, max(event_id) AS last_event_id
@@ -130,17 +135,13 @@ object StreamingOps {
     "t6_foreachbatch_overwrite",
     checkpointed { (s, d, checkpoint) =>
       val path = graft.core.Scratch.run("t6_state")
-      val q = eventsStream(s, d)
+      val totals = eventsStream(s, d)
         .groupBy("event_type").agg(count(lit(1)).as("n"), decSum(col("value")).as("total"))
-        .writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
+      runToEnd(totals.writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("overwrite").parquet(path)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(path)
+        }, checkpoint)
+      Tables.readBack(totals, path)
     },
     Some("""SELECT event_type, count(*) AS n,
            |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
@@ -154,47 +155,43 @@ object StreamingOps {
     "t13_stream_table_mirror",
     checkpointed { (s, d, checkpoint) =>
       val path = graft.core.Scratch.run("t13_mirror")
-      val q = eventsStream(s, d)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint())
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(path)
+      val mirror = eventsStream(s, d).select("event_id", "ts", "user_id", "event_type", "value")
+      runToEnd(mirror.writeStream.format("parquet").option("path", path).outputMode("append"),
+        checkpoint)
+      Tables.readBack(mirror, path)
     },
     Some("SELECT event_id, ts, user_id, event_type, value FROM events"),
     bench = false)
 
-  /** T11 (beyond reference): event-time tumbling-window aggregation with a
-    * watermark — the canonical streaming shape the reference's complete-mode
-    * latest-state query is NOT. Complete mode here emits every window on
-    * bounded input (append would hold the final window open forever waiting
-    * for the watermark to pass it — the classic bounded-replay gotcha), and
-    * the oracle is the batch bucketing of the same events: streaming and
-    * batch must agree exactly on bounded input.
+  /** Event-time tumbling-window aggregation with a watermark: per 5-minute
+    * window and event type, the count and the exact total (t11, t11b, t17).
     */
-  val t11: GraftQuery = GraftQuery(
-    "t11_stream_windowed_agg",
-    checkpointed { (s, d, checkpoint) =>
-      val q = eventsStream(s, d)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"), decSum(col("value")).as("total"))
-        .select(col("window.start").as("bucket_ts"), col("event_type"),
-          col("n"), col("total"))
-        .writeStream.format("memory").queryName("graft_t11")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t11")
-    },
+  private def fiveMinuteWindows(s: SparkSession, d: String): DataFrame =
+    eventsStream(s, d)
+      .withWatermark("ts", "10 minutes")
+      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("n"), decSum(col("value")).as("total"))
+      .select(col("window.start").as("bucket_ts"), col("event_type"),
+        col("n"), col("total"))
+
+  /** T11 (beyond reference): [[fiveMinuteWindows]] — the canonical
+    * streaming shape the reference's complete-mode latest-state query is
+    * NOT — run to its end into the memory sink `sink`. Complete mode emits
+    * every window on bounded input (append would hold the final window
+    * open forever waiting for the watermark to pass it — the classic
+    * bounded-replay gotcha), and the oracle is the batch bucketing of the
+    * same events: streaming and batch must agree exactly on bounded input.
+    */
+  private def windowedAgg(sink: String): (SparkSession, String) => DataFrame =
+    checkpointed((s, d, checkpoint) => drain(fiveMinuteWindows(s, d), sink, "complete", checkpoint))
+
+  private val windowedAggOracle =
     Some("""SELECT time_bucket(INTERVAL '5 minutes', ts) AS bucket_ts, event_type,
            |count(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-           |FROM events GROUP BY 1, 2""".stripMargin),
-    bench = false)
+           |FROM events GROUP BY 1, 2""".stripMargin)
+
+  val t11: GraftQuery = GraftQuery(
+    "t11_stream_windowed_agg", windowedAgg("graft_t11"), windowedAggOracle, bench = false)
 
   /** T11 at bench scale: the identical AvailableNow windowed aggregation,
     * registered as the ONE timed streaming entry (every other t-query is
@@ -203,25 +200,7 @@ object StreamingOps {
     * this entry's recorded seconds. Same oracle as t11 — AvailableNow over
     * bounded input must equal the batch aggregate exactly.
     */
-  val t11b: GraftQuery = GraftQuery(
-    "t11_throughput",
-    checkpointed { (s, d, checkpoint) =>
-      val q = eventsStream(s, d)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"), decSum(col("value")).as("total"))
-        .select(col("window.start").as("bucket_ts"), col("event_type"),
-          col("n"), col("total"))
-        .writeStream.format("memory").queryName("graft_t11b")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t11b")
-    },
-    Some("""SELECT time_bucket(INTERVAL '5 minutes', ts) AS bucket_ts, event_type,
-           |count(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-           |FROM events GROUP BY 1, 2""".stripMargin))
+  val t11b: GraftQuery = GraftQuery("t11_throughput", windowedAgg("graft_t11b"), windowedAggOracle)
 
   /** T12 (beyond reference): streaming deduplication — `dropDuplicates` on
     * the business key holds one state entry per (user, event_type) and
@@ -236,12 +215,7 @@ object StreamingOps {
       val q = eventsStream(s, d)
         .select("user_id", "event_type")
         .dropDuplicates("user_id", "event_type")
-        .writeStream.format("memory").queryName("graft_t12")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t12")
+      drain(q, "graft_t12", "append", checkpoint)
     },
     Some("SELECT DISTINCT user_id, event_type FROM events"),
     bench = false)
@@ -263,12 +237,7 @@ object StreamingOps {
         .select(col("user_id"), col("event_type"), col("ts"))
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select("user_id", "event_type")
-        .writeStream.format("memory").queryName("graft_t20")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t20")
+      drain(q, "graft_t20", "append", checkpoint)
     },
     Some("SELECT DISTINCT user_id, event_type FROM events"),
     bench = false)
@@ -296,20 +265,16 @@ object StreamingOps {
   val t21: GraftQuery = GraftQuery(
     "t21_stream_static_enrich",
     checkpointed { (s, d, checkpoint) =>
-      val dim = graft.core.Tables.customer(s, d)
+      val dim = Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"))
       val path = graft.core.Scratch.run("t21_enrich")
-      val q = eventsStream(s, d)
+      val enriched = eventsStream(s, d)
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("user_id"),
           col("c_mktsegment").as("segment"), col("value"))
-        .writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint())
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(path)
+      runToEnd(enriched.writeStream.format("parquet").option("path", path).outputMode("append"),
+        checkpoint)
+      Tables.readBack(enriched, path)
     },
     Some("""SELECT e.event_id, e.user_id, c.c_mktsegment AS segment, e.value
            |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin),
@@ -334,12 +299,7 @@ object StreamingOps {
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), col("session_window.start").as("session_start"),
           col("session_window.end").as("session_end"), col("n_events"))
-        .writeStream.format("memory").queryName("graft_t22")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t22")
+      drain(q, "graft_t22", "complete", checkpoint)
     },
     Some(s"""WITH o AS (SELECT user_id, event_id, ts, epoch_us(ts) AS us FROM events),
            |d AS (SELECT *, CASE WHEN lag(us) OVER w IS NULL
@@ -372,12 +332,7 @@ object StreamingOps {
             col("purchase_ts") >= col("click_ts") &&
             col("purchase_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"))
         .select(col("click_id"), col("purchase_id"), col("user_id"), col("value"))
-        .writeStream.format("memory").queryName("graft_t14")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t14")
+      drain(q, "graft_t14", "append", checkpoint)
     },
     Some("""SELECT c.event_id AS click_id, p.event_id AS purchase_id, c.user_id, p.value
            |FROM events c JOIN events p ON c.user_id = p.user_id
@@ -400,9 +355,7 @@ object StreamingOps {
       import graft.core.Snapshots
       val t = "t15_state"
       Snapshots.reset(s, t)
-      val q = eventsStream(s, d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
+      runToEnd(eventsStream(s, d).writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val agg = batch.groupBy("event_type")
             .agg(count(lit(1)).as("n"), decSum(col("value")).as("total"))
@@ -412,9 +365,7 @@ object StreamingOps {
               .groupBy("event_type")
               .agg(sum(col("n")).as("n"), decSum(col("total")).as("total"))
           Snapshots.write(s, t, next): Unit
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        }, checkpoint)
       Snapshots.latest(s, t)
     },
     Some("""SELECT event_type, count(*) AS n,
@@ -431,7 +382,7 @@ object StreamingOps {
   val t10: GraftQuery = GraftQuery(
     "t10_replay_timestamp_shift",
     (s, d) => {
-      graft.core.Tables.events(s, d).createOrReplaceTempView("events_t10")
+      Tables.events(s, d).createOrReplaceTempView("events_t10")
       s.sql("""SELECT event_id,
               |ts + (TIMESTAMP '2025-06-01 00:00:00' - (SELECT max(ts) FROM events_t10)) AS shifted_ts,
               |to_json(struct(event_id, user_id, value)) AS payload
@@ -465,12 +416,7 @@ object StreamingOps {
           col("session_window.start").as("session_start"),
           col("session_window.end").as("session_end"),
           col("n_events"), col("total"))
-        .writeStream.format("memory").queryName("graft_t16")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t16")
+      drain(q, "graft_t16", "complete", checkpoint)
     },
     Some("""WITH o AS (SELECT user_id, ts, value, event_id,
            |  lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts FROM events),
@@ -502,20 +448,8 @@ object StreamingOps {
     */
   val t17: GraftQuery = GraftQuery(
     "t17_stream_append_eviction",
-    checkpointed { (s, d, checkpoint) =>
-      val q = eventsStream(s, d)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"), decSum(col("value")).as("total"))
-        .select(col("window.start").as("bucket_ts"), col("event_type"),
-          col("n"), col("total"))
-        .writeStream.format("memory").queryName("graft_t17")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t17")
-    },
+    checkpointed((s, d, checkpoint) =>
+      drain(fiveMinuteWindows(s, d), "graft_t17", "append", checkpoint)),
     Some("""WITH wm AS (SELECT date_trunc('millisecond', max(ts)) - INTERVAL '10 minutes' AS w FROM events)
            |SELECT time_bucket(INTERVAL '5 minutes', ts) AS bucket_ts, event_type,
            |count(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
@@ -555,12 +489,7 @@ object StreamingOps {
             col("purchase_ts") <= col("click_ts") + expr("INTERVAL 10 MINUTES"),
           "leftOuter")
         .select(col("click_id"), col("purchase_id"), col("user_id"), col("value"))
-        .writeStream.format("memory").queryName("graft_t18")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t18")
+      drain(q, "graft_t18", "append", checkpoint)
     },
     Some("""WITH wm AS (SELECT least(
            |    (SELECT date_trunc('millisecond', max(ts)) FROM events WHERE event_type = 'click'),
@@ -598,14 +527,10 @@ object StreamingOps {
           eventsStream(s, d)
             .select(col("user_id"), col("event_id"), col("value"))
             .as[graft.streaming.EventIn])
-          .writeStream.format("memory").queryName("graft_t19")
-          .outputMode("update")
-          .option("checkpointLocation", checkpoint())
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+        val sink = drain(q, "graft_t19", "update", checkpoint)
         // update-mode memory sink appends every batch's emissions; the
         // final state per key is the row with the highest running count
-        s.table("graft_t19").groupBy("user_id")
+        sink.groupBy("user_id")
           .agg(max(struct(col("n_events"), col("max_value"), col("last_event_id"))).as("f"))
           .select(col("user_id"), col("f.n_events"), col("f.max_value"),
             col("f.last_event_id"))
@@ -633,7 +558,7 @@ object StreamingOps {
     "t23_stream_drift_monitor",
     checkpointed { (s, d, checkpoint) =>
       import org.apache.spark.sql.expressions.Window
-      val e = graft.core.Tables.events(s, d)
+      val e = Tables.events(s, d)
         .select(col("value"), unix_micros(col("ts")).as("us"))
       val bounds = e.agg(
         min("value").as("vmin"), max("value").as("vmax"),
@@ -648,15 +573,11 @@ object StreamingOps {
         .join(broadcast(bounds.withColumn("one", lit(1))), "one")
         .filter(!(col("us") < col("mid_us")))
         .groupBy(binExpr.as("bin")).agg(count(lit(1)).as("cur_n"))
-        .writeStream.format("memory").queryName("graft_t23")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+      val sink = drain(q, "graft_t23", "complete", checkpoint)
       val spine = s.range(0, 10).select(col("id").cast("int").as("bin"))
       val f = spine
         .join(ref, Seq("bin"), "left")
-        .join(s.table("graft_t23"), Seq("bin"), "left")
+        .join(sink, Seq("bin"), "left")
         .na.fill(0L, Seq("ref_n", "cur_n"))
         .withColumn("rt", sum("ref_n").over(Window.partitionBy()))
         .withColumn("ct", sum("cur_n").over(Window.partitionBy()))
@@ -741,12 +662,8 @@ object StreamingOps {
           .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("us"))
           .as[FunnelEv],
         Seq("view", "click", "purchase"), 24L * 3600 * 1000000L)
-        .writeStream.format("memory").queryName("graft_t24")
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val last = s.table("graft_t24").groupBy("user_id")
+      val sink = drain(q, "graft_t24", "update", checkpoint)
+      val last = sink.groupBy("user_id")
         .agg(max("step_reached").as("sr"))
       val agg = last.agg(
         count(when(col("sr") >= 1, 1)).as("n1"),
@@ -796,12 +713,7 @@ object StreamingOps {
       val q = eventsStream(s, d)
         .groupBy("user_id").agg(count(lit(1)).as("n_events"))
         .orderBy(desc("n_events"), asc("user_id")).limit(10)
-        .writeStream.format("memory").queryName("graft_t25")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t25")
+      drain(q, "graft_t25", "complete", checkpoint)
     },
     Some("""SELECT user_id, count(*) AS n_events FROM events
            |GROUP BY 1 ORDER BY n_events DESC, user_id LIMIT 10""".stripMargin),
@@ -827,17 +739,13 @@ object StreamingOps {
         expr(s"unix_micros(ts) div ${graft.operators.StatOps.BucketUs}").as("bucket"),
         (col("user_id") % 2 === 0).as("isa"), col("value"))
       val q = graft.operators.StatOps.msprtArmAgg(armed(eventsStream(s, d)))
-        .writeStream.format("memory").queryName("graft_t26")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val moments = armed(graft.core.Tables.events(s, d)).agg(
+      val sink = drain(q, "graft_t26", "complete", checkpoint)
+      val moments = armed(Tables.events(s, d)).agg(
         count(lit(1)).as("n"),
         sum(col("value").cast("decimal(18,4)")).cast("double").as("s1"),
         sum(col("value").cast("decimal(18,4)") * col("value").cast("decimal(18,4)"))
           .cast("double").as("s2"))
-      graft.operators.StatOps.msprtCompose(s.table("graft_t26"), moments)
+      graft.operators.StatOps.msprtCompose(sink, moments)
     },
     graft.operators.StatOps.d24.oracle,
     bench = false)
@@ -865,12 +773,8 @@ object StreamingOps {
       val aggs = Quality.constraintAggs(cs)
       val q = eventsStream(s, d)
         .agg(aggs.head, aggs.tail: _*)
-        .writeStream.format("memory").queryName("graft_t27")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      Quality.constraintMelt(s.table("graft_t27"), cs)
+      val sink = drain(q, "graft_t27", "complete", checkpoint)
+      Quality.constraintMelt(sink, cs)
     },
     Some("""WITH m AS (SELECT
            |  CAST(count(*) FILTER (WHERE user_id IS NULL) AS DOUBLE) AS m0,
@@ -905,12 +809,8 @@ object StreamingOps {
         .groupBy("day").agg(
           count(when(col("isa"), 1)).as("n_a"),
           count(when(!col("isa"), 1)).as("n_b"))
-        .writeStream.format("memory").queryName("graft_t28")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.operators.StatOps.srmCompose(s.table("graft_t28"))
+      val sink = drain(q, "graft_t28", "complete", checkpoint)
+      graft.operators.StatOps.srmCompose(sink)
     },
     graft.operators.StatOps.d26.oracle,
     bench = false)
@@ -929,12 +829,8 @@ object StreamingOps {
     "t29_stream_ewma",
     checkpointed { (s, d, checkpoint) =>
       val q = graft.operators.StatOps.ewmaBucketAgg(eventsStream(s, d))
-        .writeStream.format("memory").queryName("graft_t29")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.operators.StatOps.ewmaCompose(s.table("graft_t29"))
+      val sink = drain(q, "graft_t29", "complete", checkpoint)
+      graft.operators.StatOps.ewmaCompose(sink)
     },
     graft.operators.StatOps.m23.oracle,
     bench = false)
@@ -950,12 +846,8 @@ object StreamingOps {
     "t30_stream_page_hinkley",
     checkpointed { (s, d, checkpoint) =>
       val q = graft.operators.StatOps.ewmaBucketAgg(eventsStream(s, d))
-        .writeStream.format("memory").queryName("graft_t30")
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.operators.StatOps.pageHinkleyCompose(s.table("graft_t30"))
+      val sink = drain(q, "graft_t30", "complete", checkpoint)
+      graft.operators.StatOps.pageHinkleyCompose(sink)
     },
     graft.operators.StatOps.d35.oracle,
     bench = false)
@@ -993,27 +885,28 @@ object StreamingOps {
         s.conf.get("spark.sql.streaming.schemaInference") == "true",
         "T8 streaming confs missing — KafkaIO.applyStreamingConfs not applied")
       s.streams.resetTerminated()
-      val qAlert = src
+      val alerts = src
         .filter(col("event_type") === "error" && col("value") > 150)
         .select(lit("alert").as("branch"),
           col("event_id").cast("string").as("k"),
           col("user_id").cast("long").as("n"),
           (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
+      val qAlert = alerts
         .writeStream.format("parquet").option("path", alertPath)
         .option("checkpointLocation", checkpoint())
         .outputMode("append")
         .trigger(Trigger.AvailableNow()).start()
-      val qState = src
+      val state = src
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           (sum(col("value").cast("decimal(18,2)")) * 100).cast("long").as("cents"))
+        .select(lit("state").as("branch"), col("event_type").as("k"), col("n"), col("cents"))
+      val qState = state
         .writeStream
         .outputMode("complete")
         .option("checkpointLocation", checkpoint())
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch.select(lit("state").as("branch"), col("event_type").as("k"),
-              col("n"), col("cents"))
-            .write.mode("overwrite").parquet(statePath)
+          batch.write.mode("overwrite").parquet(statePath)
         }
         .trigger(Trigger.AvailableNow()).start()
       // T7: supervise the PAIR the way the reference does — block on ANY
@@ -1022,7 +915,7 @@ object StreamingOps {
         s.streams.awaitAnyTermination()
         s.streams.resetTerminated()
       }
-      s.read.parquet(alertPath).unionByName(s.read.parquet(statePath))
+      Tables.readBack(alerts, alertPath).unionByName(Tables.readBack(state, statePath))
     },
     Some("""SELECT 'alert' AS branch, CAST(event_id AS VARCHAR) AS k,
            |  CAST(user_id AS BIGINT) AS n,
@@ -1056,11 +949,14 @@ object StreamingOps {
     val fs = seenHadoopPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(seenHadoopPath))
       cand.select("h").limit(0).write.mode("overwrite").parquet(seenPath)
-    val seen = s.read.parquet(seenPath)
+    val seen = Tables.readBack(cand.select("h"), seenPath)
     val fresh = cand.join(seen, Seq("h"), "left_anti").localCheckpoint()
     fresh.select("doc_id", "h").write.mode("append").parquet(corpusPath)
     fresh.select("h").write.mode("append").parquet(seenPath)
   }
+
+  /** The accepted corpus [[incrementalDedupBatch]] appends. */
+  private val DedupCorpusSchema = StructType.fromDDL("doc_id BIGINT, h STRING")
 
   /** T-series mirror of the x21 incremental-dedup pipeline (beyond
     * reference): CONTINUOUS corpus refresh — the LLM-ingest op a real
@@ -1084,22 +980,15 @@ object StreamingOps {
       val base = graft.core.Scratch.run("t32")
       val seenPath = s"$base/seen"
       val corpusPath = s"$base/new"
-      s.read.parquet(s"$d/documents.parquet")
+      Tables.documents(s, d)
         .filter(col("doc_id") % 3 === 0)
         .select(md5(col("text")).as("h")).distinct()
         .write.mode("overwrite").parquet(seenPath)
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
+      runToEnd(Tables.stream(s, d, "documents").writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           incrementalDedupBatch(batch, seenPath, corpusPath)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(corpusPath)
+        }, checkpoint)
+      s.read.schema(DedupCorpusSchema).parquet(corpusPath)
     },
     Some("""WITH seen AS (SELECT DISTINCT md5(text) AS h FROM documents WHERE doc_id % 3 = 0),
            |cand AS (SELECT md5(text) AS h, min(doc_id) AS doc_id FROM documents GROUP BY 1)
@@ -1119,17 +1008,8 @@ object StreamingOps {
   val t33: GraftQuery = GraftQuery(
     "t33_stream_blocklist",
     checkpointed { (s, d, checkpoint) =>
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(d)
-      val q = TextOps.blocklistFilter(docsStream)
-        .writeStream.format("memory").queryName("graft_t33")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t33")
+      drain(TextOps.blocklistFilter(Tables.stream(s, d, "documents")), "graft_t33", "append",
+        checkpoint)
     },
     TextOps.x71.oracle,
     bench = false)
@@ -1155,10 +1035,10 @@ object StreamingOps {
       expr(TextOps.CapKeySql).as("rk"))
     val countsHadoop = new org.apache.hadoop.fs.Path(countsPath)
     val fs = countsHadoop.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val noneUsed = keyed.select(col(domainCol), lit(0L).as("used")).limit(0)
     if (!fs.exists(countsHadoop)) // cold start: nothing accepted yet (t32 rule)
-      keyed.select(col(domainCol), lit(0L).as("used")).limit(0)
-        .write.mode("overwrite").parquet(countsPath)
-    val used = s.read.parquet(countsPath)
+      noneUsed.write.mode("overwrite").parquet(countsPath)
+    val used = Tables.readBack(noneUsed, countsPath)
     // per-domain election: the bottom-cap sketch always suffices because
     // the remaining quota is <= cap; the cutoff is the rem-th smallest key
     // (or everything when the batch is smaller than the quota)
@@ -1200,18 +1080,13 @@ object StreamingOps {
       val base = graft.core.Scratch.run("t34")
       val countsPath = s"$base/counts"
       val outPath = s"$base/kept"
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
+      val docs = Tables.stream(s, d, "documents")
+      runToEnd(docs.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           domainCapBatch(batch, "source", 50, countsPath, outPath)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(outPath)
+        }, checkpoint)
+      // the kept rows are the batches' (doc_id, source) columns
+      Tables.readBack(docs.select("doc_id", "source"), outPath)
     },
     Some("""WITH k AS (SELECT doc_id, source,
            |  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':cap'), 1, 15) AS BIGINT) AS rk
@@ -1234,17 +1109,7 @@ object StreamingOps {
   val t35: GraftQuery = GraftQuery(
     "t35_stream_pii_scrub",
     checkpointed { (s, d, checkpoint) =>
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val docsStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(d)
-      val q = TextOps.piiQuery(docsStream)
-        .writeStream.format("memory").queryName("graft_t35")
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint())
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table("graft_t35")
+      drain(TextOps.piiQuery(Tables.stream(s, d, "documents")), "graft_t35", "append", checkpoint)
     },
     TextOps.x22.oracle,
     bench = false)
@@ -1273,6 +1138,8 @@ object StreamingOps {
     * + one h-keyed merge against the state table (t32 seen-table pattern:
     * membership state in partitioned storage, never executor memory).
     * best_neg stores the NEGATED id so the merge stays a plain struct-max.
+    * Both tables are read with their declared schemas ([[KeeperStateSchema]],
+    * [[KeeperMembersSchema]]).
     */
   def keeperElectionBatch(batch: DataFrame, statePath: String,
       membersPath: String): Unit = {
@@ -1289,7 +1156,7 @@ object StreamingOps {
     val fs = stateHadoop.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(stateHadoop)) // cold start: no clusters yet (t32 rule)
       bsum.limit(0).write.mode("overwrite").parquet(statePath)
-    val state = s.read.parquet(statePath)
+    val state = s.read.schema(KeeperStateSchema).parquet(statePath)
     // pin BEFORE the overwrite so the lazy plan never reads its own write
     val merged = state.unionByName(bsum)
       .groupBy("h").agg(
@@ -1298,6 +1165,12 @@ object StreamingOps {
       .localCheckpoint()
     merged.write.mode("overwrite").parquet(statePath)
   }
+
+  /** [[keeperElectionBatch]]'s tables: the per-cluster state and the
+    * appended members.
+    */
+  private val KeeperStateSchema = StructType.fromDDL("h STRING, best_score DOUBLE, best_neg BIGINT")
+  private val KeeperMembersSchema = StructType.fromDDL("doc_id BIGINT, h STRING, score DOUBLE")
 
   /** Read the per-doc verdicts out of t36's state + members tables —
     * x77's exact output shape (doc_id, h, n_members, keeper, keep).
@@ -1308,11 +1181,11 @@ object StreamingOps {
     */
   def keeperElectionVerdicts(s: SparkSession, statePath: String,
       membersPath: String): DataFrame = {
-    val members = s.read.parquet(membersPath)
+    val members = s.read.schema(KeeperMembersSchema).parquet(membersPath)
       .groupBy("doc_id").agg(max(struct(col("score"), col("h"))).as("m"))
       .select(col("doc_id"), col("m.h").as("h"))
     val counts = members.groupBy("h").agg(count(lit(1)).as("n_members"))
-    val st = s.read.parquet(statePath).select(col("h"),
+    val st = s.read.schema(KeeperStateSchema).parquet(statePath).select(col("h"),
       (col("best_neg") * -1).as("keeper"))
     members.join(counts, "h").join(st, "h")
       .select(col("doc_id"), col("h"), col("n_members"), col("keeper"),
@@ -1333,18 +1206,11 @@ object StreamingOps {
       val base = graft.core.Scratch.run("t36")
       val statePath = s"$base/state"
       val membersPath = s"$base/members"
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
+      runToEnd(Tables.stream(s, d, "documents").writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           keeperElectionBatch(batch.withColumn("score", col("n_chars")),
             statePath, membersPath)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        }, checkpoint)
       keeperElectionVerdicts(s, statePath, membersPath)
     },
     TextOps.x77.oracle,
@@ -1363,6 +1229,7 @@ object StreamingOps {
     * regex scrub fused in codegen), one batch-keyed keep-min agg + join
     * (no window), one h-keyed anti-join against storage-backed seen
     * state. Nothing rescans accepted history except the keyed anti-join.
+    * The survivors table is read with its declared [[HygieneOutSchema]].
     */
   def ingestHygieneBatch(batch: DataFrame, seenPath: String,
       outPath: String): Unit = {
@@ -1381,13 +1248,17 @@ object StreamingOps {
     val fs = seenHadoopPath.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(seenHadoopPath)) // cold start (t32 rule)
       firsts.select("h").limit(0).write.mode("overwrite").parquet(seenPath)
-    val seen = s.read.parquet(seenPath)
+    val seen = Tables.readBack(firsts.select("h"), seenPath)
     // pinned BEFORE the seen append so the anti-join never reads its write
     val fresh = firsts.join(seen, Seq("h"), "left_anti").localCheckpoint()
     fresh.select("doc_id", "h", "n_emails", "n_phones", "clean_md5")
       .write.mode("append").parquet(outPath)
     fresh.select("h").write.mode("append").parquet(seenPath)
   }
+
+  /** The survivors [[ingestHygieneBatch]] appends. */
+  private val HygieneOutSchema =
+    StructType.fromDDL("doc_id BIGINT, h STRING, n_emails INT, n_phones INT, clean_md5 STRING")
 
   /** T37 (beyond reference): the streaming ingest-hygiene capstone —
     * t33's blocklist, t35's PII scrub and t32's incremental dedup chained
@@ -1403,25 +1274,11 @@ object StreamingOps {
       val base = graft.core.Scratch.run("t37")
       val seenPath = s"$base/seen"
       val outPath = s"$base/out"
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
+      runToEnd(Tables.stream(s, d, "documents").writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          // x22's deterministic PII injection (the driver corpus has none)
-          val injected = batch.select(col("doc_id"),
-            when(col("doc_id") % 10 === 0,
-              concat(col("text"), lit(" contact user"),
-                col("doc_id").cast("string"),
-                lit("@example.com or call 555-0142")))
-              .otherwise(col("text")).as("text"))
-          ingestHygieneBatch(injected, seenPath, outPath)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(outPath)
+          ingestHygieneBatch(TextOps.withPii(batch), seenPath, outPath)
+        }, checkpoint)
+      s.read.schema(HygieneOutSchema).parquet(outPath)
     },
     Some("""WITH inj AS (SELECT doc_id, CASE WHEN doc_id % 10 = 0
            |  THEN text || ' contact user' || doc_id || '@example.com or call 555-0142'
@@ -1453,18 +1310,11 @@ object StreamingOps {
       checkpoint: () => String, name: String, tiers: String): String = {
     val path = graft.core.Scratch.run(name)
     VectorOps.buildVecIndex(
-      graft.core.Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 0), path, tiers)
-    val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-    s.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet")
-      .parquet(d)
-      .writeStream
-      .option("checkpointLocation", checkpoint())
+      Tables.embeddings(s, d).filter(col("vec_id") % 10 =!= 0), path, tiers)
+    runToEnd(Tables.stream(s, d, "embeddings").writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         VectorOps.appendToVecIndex(batch.filter(col("vec_id") % 10 === 0), path)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-      .awaitTermination()
+      }, checkpoint)
     path
   }
 
@@ -1483,7 +1333,7 @@ object StreamingOps {
   val t38: GraftQuery = GraftQuery(
     "t38_stream_index_append",
     checkpointed { (s, d, checkpoint) =>
-      val emb = graft.core.Tables.embeddings(s, d)
+      val emb = Tables.embeddings(s, d)
       VectorOps.searchVecIndex(s, streamGrownIndex(s, d, checkpoint, "t38_index", "ivf"),
         emb.filter(col("vec_id") < 10), k = 3, tier = "ivf")
     },
@@ -1506,6 +1356,10 @@ object StreamingOps {
            |QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, neighbor_id) <= 3""".stripMargin),
     bench = false)
 
+  /** The verdicts [[TextOps.nearDupIndexIngest]] returns, which t39 appends. */
+  private val NearDupVerdictSchema =
+    StructType.fromDDL("doc_id BIGINT, n_corpus_neardups BIGINT, batch_first BOOLEAN, keep BOOLEAN")
+
   /** T39 (beyond reference): CONTINUOUS near-dup gating against a
     * persisted, GROWING LSH index — the similarity-aware upgrade of t32
     * and the text twin of t38's index ingestion: the corpus signatures are
@@ -1523,22 +1377,15 @@ object StreamingOps {
       val base = graft.core.Scratch.run("t39")
       val path = s"$base/ndidx"
       val outPath = s"$base/out"
-      val docs = graft.core.Tables.documents(s, d)
+      val docs = Tables.documents(s, d)
       TextOps.buildNearDupIndex(docs.filter(col("doc_id") % 3 === 0), path)
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
+      runToEnd(Tables.stream(s, d, "documents").writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           TextOps.nearDupIndexIngest(
               batch.filter(col("doc_id") % 3 =!= 0), path)
             .write.mode("append").parquet(outPath)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(outPath)
+        }, checkpoint)
+      s.read.schema(NearDupVerdictSchema).parquet(outPath)
     },
     TextOps.x75.oracle,
     bench = false)
@@ -1556,7 +1403,7 @@ object StreamingOps {
   val t40: GraftQuery = GraftQuery(
     "t40_stream_pq_append",
     checkpointed { (s, d, checkpoint) =>
-      val emb = graft.core.Tables.embeddings(s, d)
+      val emb = Tables.embeddings(s, d)
       VectorOps.searchVecIndex(s, streamGrownIndex(s, d, checkpoint, "t40_pqidx", "pq"),
         emb.filter(col("vec_id") < 10), k = 3, tier = "pq")
     },
@@ -1598,7 +1445,7 @@ object StreamingOps {
   val t41: GraftQuery = GraftQuery(
     "t41_stream_drift_audit",
     checkpointed { (s, d, checkpoint) =>
-      val emb = graft.core.Tables.embeddings(s, d)
+      val emb = Tables.embeddings(s, d)
       VectorOps.pqDriftAudit(s, streamGrownIndex(s, d, checkpoint, "t41_pqidx", "pq"), emb)
     },
     VectorOps.v42.oracle,
@@ -1614,7 +1461,7 @@ object StreamingOps {
   val t42: GraftQuery = GraftQuery(
     "t42_stream_ivfpq_append",
     checkpointed { (s, d, checkpoint) =>
-      val emb = graft.core.Tables.embeddings(s, d)
+      val emb = Tables.embeddings(s, d)
       VectorOps.searchVecIndex(s, streamGrownIndex(s, d, checkpoint, "t42_ivfpq", "ivfpq"),
         emb.filter(col("vec_id") < 10), k = 3, tier = "ivfpq")
     },
@@ -1639,24 +1486,14 @@ object StreamingOps {
     "t43_stream_embedding_drift",
     checkpointed { (s, d, checkpoint) =>
       val statePath = graft.core.Scratch.run("t43_sigs")
-      val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
+      runToEnd(Tables.stream(s, d, "embeddings").writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           VectorOps.embeddingSignatures(
               batch.withColumn("is_ref", expr("vec_id % 2 = 0")),
               "vec_id", "is_ref")
             .write.mode("append").parquet(statePath)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val sigs = s.read.parquet(statePath)
-        .groupBy("key").agg(max(struct(col("is_ref"), col("sig"))).as("m"))
-        .select(col("m.is_ref").as("is_ref"), col("m.sig").as("sig"))
-      VectorOps.embeddingDriftFromSigs(sigs)
+        }, checkpoint)
+      VectorOps.embeddingDriftFromSigs(VectorOps.storedSignatures(s, statePath))
     },
     VectorOps.v27.oracle,
     bench = false)
@@ -1683,7 +1520,7 @@ object StreamingOps {
       val seenPath = s"$base/seen"
       val outPath = s"$base/out"
       val cp = s"$base/ckpt"
-      val docs = s.read.parquet(s"$d/documents.parquet")
+      val docs = Tables.documents(s, d)
       val fs = new org.apache.hadoop.fs.Path(base)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       // land a half-corpus as ONE parquet file in the watched directory
@@ -1696,28 +1533,17 @@ object StreamingOps {
         require(fs.rename(part, new org.apache.hadoop.fs.Path(s"$stage/$name.parquet")))
         fs.delete(new org.apache.hadoop.fs.Path(tmp), true): Unit
       }
-      def runPass(): Unit = {
-        val q = s.readStream.schema(docs.schema).parquet(stage)
-          .writeStream
-          .option("checkpointLocation", cp)
+      // the landed files are docs rows, so the stream takes docs' schema
+      def runPass(): Unit =
+        runToEnd(s.readStream.schema(docs.schema).parquet(stage).writeStream
           .foreachBatch { (batch: DataFrame, _: Long) =>
-            // x22's deterministic PII injection (t37's rule)
-            val injected = batch.select(col("doc_id"),
-              when(col("doc_id") % 10 === 0,
-                concat(col("text"), lit(" contact user"),
-                  col("doc_id").cast("string"),
-                  lit("@example.com or call 555-0142")))
-                .otherwise(col("text")).as("text"))
-            ingestHygieneBatch(injected, seenPath, outPath)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-      }
+            ingestHygieneBatch(TextOps.withPii(batch), seenPath, outPath) // t37's rule
+          }, () => cp)
       land(docs.filter(col("doc_id") % 2 === 0), "a")
       runPass() // processes A, then stops — the crash stand-in
       land(docs.filter(col("doc_id") % 2 === 1), "b")
       runPass() // NEW query instance, SAME checkpoint: resumes at file B
-      s.read.parquet(outPath)
+      s.read.schema(HygieneOutSchema).parquet(outPath)
     },
     Some("""WITH inj AS (SELECT doc_id, CASE WHEN doc_id % 10 = 0
            |  THEN text || ' contact user' || doc_id || '@example.com or call 555-0142'
@@ -1770,15 +1596,10 @@ object StreamingOps {
       val base = graft.core.Scratch.run("t45")
       val root = s"$base/vidx"
       val sigPath = s"$base/sigs"
-      val emb = graft.core.Tables.embeddings(s, d)
+      val emb = Tables.embeddings(s, d)
       VectorOps.buildVecIndex(emb.filter(col("vec_id") % 10 =!= 0), root)
       VectorOps.appendToVecIndex(emb.filter(col("vec_id") % 10 === 0), root)
-      val schema = s.read.parquet(s"$d/embeddings.parquet").schema
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(d)
-        .writeStream
-        .option("checkpointLocation", checkpoint())
+      runToEnd(Tables.stream(s, d, "embeddings").writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           VectorOps.embeddingSignatures(
               batch.withColumn("is_ref", expr("vec_id % 2 = 0")),
@@ -1787,9 +1608,7 @@ object StreamingOps {
             .withColumn("sig",
               when(col("is_ref"), col("sig")).otherwise(lit(0)))
             .write.mode("append").parquet(sigPath)
-        }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+        }, checkpoint)
       // the maintenance hook DECIDES and ACTS: the streamed PSI trips the
       // 0.2 rule, the versioned rebuild re-derives full-corpus geometry
       // and publishes v2 under any concurrent reader

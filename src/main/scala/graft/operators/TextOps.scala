@@ -1688,17 +1688,23 @@ object TextOps {
       regexp_replace(regexp_replace(col("text"), EmailPat, "[EMAIL]"),
         PhonePat, "[PHONE]").as("clean_text"))
 
-  /** The x22/t35 shared projection: deterministic PII injection (the driver
-    * corpus is synthetic words with none) + [[piiRedact]], with the scrub
-    * output pinned by md5. Stateless, so it runs unchanged on a stream.
+  /** (doc_id, text) with x22's deterministic PII injection: every tenth
+    * doc gets an email and a phone number (the driver corpus is synthetic
+    * words with none), so a scrub genuinely fires (x22, t35, t37, t44).
+    */
+  private[operators] def withPii(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      when(col("doc_id") % 10 === 0,
+        concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
+          lit("@example.com or call 555-0142")))
+        .otherwise(col("text")).as("text"))
+
+  /** The x22/t35 shared projection: [[withPii]] + [[piiRedact]], with the
+    * scrub output pinned by md5. Stateless, so it runs unchanged on a
+    * stream.
     */
   private[operators] def piiQuery(docs: DataFrame): DataFrame =
-    piiRedact(
-      docs.select(col("doc_id"),
-        when(col("doc_id") % 10 === 0,
-          concat(col("text"), lit(" contact user"), col("doc_id").cast("string"),
-            lit("@example.com or call 555-0142")))
-          .otherwise(col("text")).as("text")))
+    piiRedact(withPii(docs))
       .select(col("doc_id"), col("n_emails"), col("n_phones"),
         md5(col("clean_text")).as("clean_md5"))
 
@@ -4717,6 +4723,16 @@ object TextOps {
            |  array_to_string(kept, ' ') AS clean_text
            |FROM k""".stripMargin))
 
+  /** The near-dup index's `reps/` table, as [[buildNearDupIndex]] and
+    * [[nearDupIndexIngest]] write it.
+    */
+  private val NearDupRepsSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("rep_id BIGINT, weight BIGINT, sh ARRAY<STRING>")
+
+  /** The near-dup index's `bands/` table: the [[lshBands]] keys. */
+  private val NearDupBandsSchema =
+    org.apache.spark.sql.types.StructType.fromDDL("band INT, bh BIGINT, rep_id BIGINT")
+
   /** Public DataFrame-in API (see graft.api.Graft): PERSIST the near-dup
     * index — the text twin of the persisted IVF index: the corpus
     * collapses to exact-dup representatives whose shingle sets land in
@@ -4725,7 +4741,9 @@ object TextOps {
     * ([[nearDupIndexIngest]]) then join batches against this index
     * instead of re-scanning and re-signing the corpus on every call —
     * at 100 TB the signatures are the expensive artifact and they are
-    * computed exactly once per accepted doc.
+    * computed exactly once per accepted doc. Every read of the two
+    * tables passes its declared schema ([[NearDupRepsSchema]],
+    * [[NearDupBandsSchema]]), so a gate infers nothing from the footers.
     */
   def buildNearDupIndex(corpus: DataFrame, path: String,
       threshold: Double = 0.9): Unit = {
@@ -4773,8 +4791,8 @@ object TextOps {
       .localCheckpoint()
     val bBands = lshBands(bSets, numHashes = 64, bands = bands, rows = rows)
       .select(col("band"), col("bh"), col("doc_id").as("b_id"))
-    val reps = s.read.parquet(s"$path/reps")
-    val idxBands = s.read.parquet(s"$path/bands")
+    val reps = s.read.schema(NearDupRepsSchema).parquet(s"$path/reps")
+    val idxBands = s.read.schema(NearDupBandsSchema).parquet(s"$path/bands")
     val bcVerified = bBands.join(idxBands, Seq("band", "bh"))
       .select(col("b_id"), col("rep_id")).distinct()
       .join(bSets.select(col("doc_id").as("b_id"), col("sh").as("b_sh")), "b_id")

@@ -1935,6 +1935,20 @@ object VectorOps {
       .toDF("key", "is_ref", "sig")
   }
 
+  /** A signature store's declared schema: the rows [[embeddingSignatures]]
+    * emits, which a store appends.
+    */
+  private val SignatureSchema = StructType.fromDDL("key BIGINT, is_ref BOOLEAN, sig INT")
+
+  /** The (is_ref, sig) rows of the signature store at `store`, one per key:
+    * appends are at-least-once and a key's rows are deterministic, so the
+    * max(struct) collapses redeliveries.
+    */
+  private[graft] def storedSignatures(s: SparkSession, store: String): DataFrame =
+    s.read.schema(SignatureSchema).parquet(store)
+      .groupBy("key").agg(max(struct(col("is_ref"), col("sig"))).as("m"))
+      .select(col("m.is_ref").as("is_ref"), col("m.sig").as("sig"))
+
   /** The reduce half of [[embeddingDrift]]: (is_ref, sig) rows → the
     * 2^bits-cell PSI report (sig, ref_n, cur_n, psi_term).
     */
@@ -2675,6 +2689,9 @@ object VectorOps {
   private val CodebookSchema =
     StructType(Seq(StructField("j", IntegerType), StructField("e", Doubles)))
 
+  /** `stats/`, the PQ tier's build-time [[pqReconStats]] row. */
+  private val StatsSchema = StructType(Seq("n", "sum_q", "min_q").map(StructField(_, LongType)))
+
   /** Tier `t`'s data rows under `path`, read with its declared schema.
     * The frame lists the tier's files when it is built and keeps that
     * listing: a search built after an append by any process serves the
@@ -2698,7 +2715,8 @@ object VectorOps {
   private[graft] def declaredSchemas(s: SparkSession, path: String): Map[String, StructType] =
     (layoutOf(s, path).map(t => t.data -> t.schema(s, path)) ++
       Seq("centroids" -> CentroidSchema, "codebook" -> CodebookSchema,
-        "tombstones" -> TombstoneSchema).filter(d => exists(s, s"$path/${d._1}"))).toMap
+        "stats" -> StatsSchema, "tombstones" -> TombstoneSchema)
+        .filter(d => exists(s, s"$path/${d._1}"))).toMap
 
   private val layouts: Map[String, Seq[Tier]] = Map(
     "ivf" -> Seq(IvfTier), "pq" -> Seq(PqTier),
@@ -3424,7 +3442,7 @@ object VectorOps {
 
   private def driftAuditAt(s: SparkSession, path: String, corpus: DataFrame,
       margin: Double): DataFrame = {
-    val build = s.read.parquet(s"$path/stats")
+    val build = s.read.schema(StatsSchema).parquet(s"$path/stats")
       .select(col("n").as("build_n"), col("sum_q").as("bs"))
     val cur = pqReconStats(s, path, corpus)
       .select(col("n").as("cur_n"), col("sum_q").as("cs"))
@@ -3936,9 +3954,7 @@ object VectorOps {
       .listStatus(new org.apache.hadoop.fs.Path(store))
       .exists(_.getPath.getName.endsWith(".parquet"))
     ).fold(tiersOut) { store =>
-      val sigs = s.read.parquet(store)
-        .groupBy("key").agg(max(struct(col("is_ref"), col("sig"))).as("m"))
-        .select(col("m.is_ref").as("is_ref"), col("m.sig").as("sig"))
+      val sigs = storedSignatures(s, store)
       val psiThreshold = math.round(psiMargin * 1e9)
       val embRow = embeddingDriftFromSigs(sigs)
         .agg(floor(sum("psi_term") * 1e9 + 0.5).cast("long").as("value"))

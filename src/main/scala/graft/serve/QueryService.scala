@@ -181,6 +181,13 @@ object QueryService {
     */
   private[graft] val ServeHeadK = 64
 
+  /** The snapshot tiers' declared schema, which [[buildDocSnapshot]]
+    * writes. Page reads pass it, so building a page runs no
+    * footer-inference job.
+    */
+  private val DocScoreSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "doc_id BIGINT, bm25 DOUBLE")
+
   /** BM25 snapshot layout (guide §6 — lay the store out for its
     * readers): `scores/` holds the full (doc_id, bm25) table; `head/`
     * holds its top-[[ServeHeadK]] page (bm25 desc, doc_id tie-break) as
@@ -190,13 +197,13 @@ object QueryService {
     * keeps per-poll cost O(k) when the score table is corpus-sized.
     * The head is derived by reading `scores/` back (doubles round-trip
     * parquet exactly), so the two tiers are bit-consistent by
-    * construction; the read-back passes the written schema, so it infers
-    * nothing from the footers (the [[graft.core.Snapshots]] rule).
+    * construction; the read-back is [[graft.core.Tables.readBack]], so it
+    * infers nothing from the footers.
     */
   private def buildDocSnapshot(docs: DataFrame, dir: String): Unit = {
     val scores = graft.operators.TextOps.bm25Score(docs)
     scores.write.mode("overwrite").parquet(s"$dir/scores")
-    docs.sparkSession.read.schema(scores.schema).parquet(s"$dir/scores")
+    graft.core.Tables.readBack(scores, s"$dir/scores")
       .orderBy(col("bm25").desc, col("doc_id")).limit(ServeHeadK)
       .write.mode("overwrite").parquet(s"$dir/head")
   }
@@ -319,12 +326,6 @@ object QueryService {
     */
   private def bm25SubsetSql(where: String): String =
     graft.operators.TextOps.bm25OracleSql(where)
-
-  /** The snapshot tiers' schema. Reads pass it, so building a page runs no
-    * footer-inference job.
-    */
-  private val DocScoreSchema = org.apache.spark.sql.types.StructType.fromDDL(
-    "doc_id BIGINT, bm25 DOUBLE")
 
   /** The deterministic top-k page over a pinned snapshot directory — the
     * exact [[docSearch]] serving shape, parameterized by version dir.

@@ -14,10 +14,18 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
   * rule inside its own write (core/Snapshots.merge). A warm serving read
   * runs only its own scan: the ANN routes take tombstones and query
   * vectors from the driver, the state and demand arms read per-snapshot
-  * views, and a served root with tombstones keeps its cached plans.
+  * views, and a served root with tombstones keeps its cached plans. An
+  * output a build writes and reads back is read with the schema it was
+  * written with (core/Tables.readBack), never by footer inference.
   */
 class JobCountSpec extends SparkSpec {
   import SparkSpec.spark.implicits._
+
+  // the served vector root is durable and shared with other runs: reclaim
+  // the versions this suite's delete and compaction publish
+  override def afterAll(): Unit =
+    try VectorOps.vacuumVecIndex(spark, QueryService.serveRootOf(spark, sf), keepLast = 1): Unit
+    finally super.afterAll()
 
   private lazy val warm: Unit = LakehousePass.run(spark, sf)
 
@@ -42,6 +50,16 @@ class JobCountSpec extends SparkSpec {
     val n = jobs(build("s18_merge_upsert"))
     info(s"s18 build ran $n jobs")
     assert(n <= 5)
+  }
+
+  test("after a warm pass, the s15 and t13 builds run only their own " +
+    "jobs: no read-back infers a schema") {
+    warm
+    Seq("s15_dml_delete", "t13_stream_table_mirror").foreach(build)
+    // s15 writes v1 and v2 and reads each back (two inference jobs before);
+    // t13 runs its stream's one batch and reads the sink back (one before)
+    assert(jobs(build("s15_dml_delete")) === 2)
+    assert(jobs(build("t13_stream_table_mirror")) === 1)
   }
 
   test("a BM25 snapshot build reads its written scores back without a " +

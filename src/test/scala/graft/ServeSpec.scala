@@ -11,6 +11,13 @@ import graft.serve.QueryService
   */
 class ServeSpec extends SparkSpec {
 
+  // the served vector root is durable and shared with other runs: reclaim
+  // the versions this suite's rebuild, compactions and refresh publish
+  override def afterAll(): Unit =
+    try graft.operators.VectorOps.vacuumVecIndex(
+      spark, QueryService.serveRootOf(spark, sf), keepLast = 1): Unit
+    finally super.afterAll()
+
   /** Stages submitted while `body` runs, exact when this returns. */
   private def countStages(body: => Unit): Int =
     QueryMetrics.measure(spark)(body)._2.stages
