@@ -525,7 +525,7 @@ object Graft {
     */
   def annVacuumIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, keepLast: Int = 2): Seq[Long] =
-    VectorOps.vacuumVecIndex(spark, root, keepLast)
+    graft.core.VersionedStore.vacuum(spark, root, keepLast)
 
   /** Advisor-gated rebuild: publishes version N+1 only when a
     * [[annRebuildAdvisor]] verdict is retrain; Some(newVersionDir) when it

@@ -33,7 +33,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * Single-writer discipline: [[claim]] takes an exclusive per-version lease
   * (an O_EXCL manifest file) so two concurrent rebuilders cannot interleave
   * writes inside the same unpublished roots/v{N+1} directory. A crashed
-  * claimant's lease is taken over once it is older than `ttlMs` and its
+  * claimant's lease is taken over once it is `ttlMs` old and its
   * version is still unpublished; takeover renames the stale lease aside
   * before re-claiming, so concurrent takeover attempts still funnel through
   * exactly one exclusive create.
@@ -154,9 +154,11 @@ object VersionedStore {
   /** Take the exclusive build lease on version `n` of `root`. Returns
     * true iff THIS caller now holds it — exactly one concurrent claimant
     * wins; the rest must not write under roots/v{n}. A lease left by a
-    * crashed claimant (older than `ttlMs` with `n` still unpublished) is
-    * taken over. Release with [[release]] (a finally block — a claimant
-    * that dies without releasing is recovered by the TTL takeover).
+    * crashed claimant (at least `ttlMs` old with `n` still unpublished) is
+    * taken over, so `ttlMs = 0` takes over any lease, even one made in
+    * the same millisecond. Release with [[release]] (a finally block — a
+    * claimant that dies without releasing is recovered by the TTL
+    * takeover).
     *
     * Takeover is TOCTOU-hardened: the stale lease is renamed aside and
     * the MOVED file's mtime is compared against the stat that judged it
@@ -185,7 +187,7 @@ object VersionedStore {
             // holder vanished between our create attempt and the stat
             atomicCreate(fs, cl, token) && won()
           case Some(x)
-              if System.currentTimeMillis() - x.getModificationTime > ttlMs =>
+              if System.currentTimeMillis() - x.getModificationTime >= ttlMs =>
             // crashed-lease takeover: move the SPECIFIC stale file aside
             // (two racing takeovers — only one rename of it can succeed)
             val dead = new Path(man,

@@ -5,7 +5,7 @@ import graft.core.Tables
 import graft.functions.Funcs._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface (SURVEY.md §2.10, reference
@@ -71,12 +71,15 @@ object StreamingOps {
 
   /** Start the stream `writer` describes — Trigger.AvailableNow, so it
     * reads the input there is, checkpointed at a fresh `checkpoint()`
-    * path — and wait until it has drained it. The writer names the sink
-    * and the output mode.
+    * path. The writer names the sink and the output mode.
     */
-  private def runToEnd(writer: DataStreamWriter[_], checkpoint: () => String): Unit =
+  private def start(writer: DataStreamWriter[_], checkpoint: () => String): StreamingQuery =
     writer.option("checkpointLocation", checkpoint())
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      .trigger(Trigger.AvailableNow()).start()
+
+  /** [[start]] the stream and wait until it has drained its input. */
+  private def runToEnd(writer: DataStreamWriter[_], checkpoint: () => String): Unit =
+    start(writer, checkpoint).awaitTermination()
 
   /** `query` run to its end ([[runToEnd]]) into the memory sink `name` in
     * output `mode`; returns the sink table.
@@ -891,24 +894,17 @@ object StreamingOps {
           col("event_id").cast("string").as("k"),
           col("user_id").cast("long").as("n"),
           (col("value").cast("decimal(18,2)") * 100).cast("long").as("cents"))
-      val qAlert = alerts
-        .writeStream.format("parquet").option("path", alertPath)
-        .option("checkpointLocation", checkpoint())
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow()).start()
+      val qAlert = start(alerts.writeStream.format("parquet")
+        .option("path", alertPath).outputMode("append"), checkpoint)
       val state = src
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           (sum(col("value").cast("decimal(18,2)")) * 100).cast("long").as("cents"))
         .select(lit("state").as("branch"), col("event_type").as("k"), col("n"), col("cents"))
-      val qState = state
-        .writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint())
+      val qState = start(state.writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.write.mode("overwrite").parquet(statePath)
-        }
-        .trigger(Trigger.AvailableNow()).start()
+        }, checkpoint)
       // T7: supervise the PAIR the way the reference does — block on ANY
       // termination, clear it, repeat until no query of ours is active
       while (qAlert.isActive || qState.isActive) {
@@ -1616,7 +1612,7 @@ object StreamingOps {
         sigStore = Some(sigPath))
       require(acted.isDefined,
         "t45: the streamed embedding-drift verdict must trigger the retrain")
-      require(VectorOps.currentVecIndexVersion(s, root) == Some(2L),
+      require(graft.core.VersionedStore.currentVersion(s, root) == Some(2L),
         "t45: exactly v2 must be published by the advisor-gated retrain")
       VectorOps.searchVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2, tier = "ivf")

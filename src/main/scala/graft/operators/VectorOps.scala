@@ -2570,8 +2570,8 @@ object VectorOps {
     * one or more [[Tier]]s next to ONE `tombstones/` table (vec_id), and
     * every lifecycle verb is written once over them: [[buildVecIndex]],
     * [[appendToVecIndex]], [[deleteFromVecIndex]], [[compactVecIndex]],
-    * [[rebuildVecIndex]], [[vacuumVecIndex]] and the route planner
-    * [[searchVecIndex]]. Layouts (`tiers`): "ivf", "pq", "both" (ivf + pq
+    * [[rebuildVecIndex]], [[graft.core.VersionedStore.vacuum]] and the
+    * route planner [[searchVecIndex]]. Layouts (`tiers`): "ivf", "pq", "both" (ivf + pq
     * under one root — the rerank route's input) and "ivfpq" (residual).
     */
   private sealed abstract class Tier(val name: String, val dirs: Seq[String],
@@ -2843,7 +2843,7 @@ object VectorOps {
   def appendToVecIndex(batch: DataFrame, root: String): Unit = {
     val s = batch.sparkSession
     graft.plans.GraftExtensions.register(s)
-    val dir = resolveVecIndexRoot(s, root)
+    val dir = VersionedStore.resolve(s, root)
     requireLayout(s, dir, "appendToVecIndex").foreach(t =>
       t.write(t.encode(longIds(batch), dir), s"$dir/${t.data}", "append"))
   }
@@ -2857,7 +2857,7 @@ object VectorOps {
     * in the successor version.
     */
   def deleteFromVecIndex(s: SparkSession, root: String, ids: DataFrame): Unit = {
-    val dir = resolveVecIndexRoot(s, root)
+    val dir = VersionedStore.resolve(s, root)
     requireLayout(s, dir, "deleteFromVecIndex")
     longIds(ids.select(col("vec_id"))).write.mode("append").parquet(s"$dir/tombstones")
   }
@@ -2897,7 +2897,7 @@ object VectorOps {
     * nothing to reclaim = no new version.
     */
   def compactVecIndex(s: SparkSession, root: String): Unit = {
-    val cur = resolveVecIndexRoot(s, root)
+    val cur = VersionedStore.resolve(s, root)
     if (!exists(s, s"$cur/tombstones")) return
     val tiers = requireLayout(s, cur, "compactVecIndex")
     VersionedStore.buildNext(s, root, VersionedStore.DefaultLeaseTtlMs) { dir =>
@@ -2969,7 +2969,7 @@ object VectorOps {
   def rebuildVecIndex(s: SparkSession, root: String,
       corpus: Option[DataFrame] = None,
       leaseTtlMs: Long = VersionedStore.DefaultLeaseTtlMs): String = {
-    val cur = resolveVecIndexRoot(s, root)
+    val cur = VersionedStore.resolve(s, root)
     val tiers = requireLayout(s, cur, "rebuildVecIndex")
     VersionedStore.buildNext(s, root, leaseTtlMs)(
       buildVersion(aliveCorpus(s, cur, tiers, corpus), _, tiers))
@@ -3058,19 +3058,16 @@ object VectorOps {
   def searchVecIndex(s: SparkSession, root: String, queries: DataFrame,
       k: Int, probes: Int = 2, tier: String = "auto",
       rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame =
-    searchPinned(s, resolveVecIndexRoot(s, root), queries, k, probes, tier,
-      rerankCandidates, excludeSelf)
+    searchPinned(s, VersionedStore.resolve(s, root), queries, k, probes, tier,
+      rerankCandidates, excludeSelf).drop("rank")
 
   /** [[searchVecIndex]] over an already-resolved version directory `path`
-    * — the seam a serving layer that pins the version itself calls.
-    * `compactForServe` picks the serving posture of the ivf, pq and rerank
-    * routes (see [[searchIvfIndexPlanned]]): QueryService's arms pass
-    * true; the facade keeps the parallel plan.
+    * — the seam a serving layer that pins the version itself calls. Each
+    * row keeps its per-query `rank` (1..k) next to the route's score.
     */
   private[graft] def searchPinned(s: SparkSession, path: String,
       queries: DataFrame, k: Int, probes: Int, tier: String,
-      rerankCandidates: Int = 32, excludeSelf: Boolean = true,
-      compactForServe: Boolean = false): DataFrame = {
+      rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame = {
     graft.plans.GraftExtensions.register(s)
     val tiers = layoutOf(s, path)
     val route = tier match {
@@ -3090,11 +3087,11 @@ object VectorOps {
     val qs = collectQueryVectors(queries)
     route match {
       case "ivf" => searchIvfIndexPlanned(s, path, qs, loadIvfCentroids(s, path),
-        k, probes, excludeSelf, compactForServe)
+        k, probes, excludeSelf)
       case "pq" => searchPqIndexPlanned(s, path, qs, loadPqCodebook(s, path),
-        k, excludeSelf, compactForServe)
+        k, excludeSelf)
       case "rerank" => searchRerankPlanned(s, path, qs, loadPqCodebook(s, path),
-        k, rerankCandidates, excludeSelf, compactForServe)
+        k, rerankCandidates, excludeSelf)
       case _ => searchIvfPqPlanned(s, path, qs, loadIvfCentroids(s, path),
         loadPqCodebook(s, path), k, probes, excludeSelf)
     }
@@ -3117,8 +3114,7 @@ object VectorOps {
     */
   private[graft] def searchIvfIndexPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cents: Array[(Long, Array[Double])],
-      k: Int, probes: Int = 2, excludeSelf: Boolean = true,
-      compactForServe: Boolean = false): DataFrame = {
+      k: Int, probes: Int = 2, excludeSelf: Boolean = true): DataFrame = {
     import s.implicits._
     val probed: Seq[(Long, (Long, Array[Double]))] = qsArr.toSeq.flatMap { q =>
       probedCells(q._2, cents, probes).map(c => (c._1, q))
@@ -3141,41 +3137,64 @@ object VectorOps {
             .filter(q => !exclSelf || q._1 != cid)
             .map { case (qid, qa) => (qid, cid, cosArr(qa, ce)) }
         }
-      }.toDF("q_id", "c_id", "cos")
-    // compactForServe: a SERVING caller's per-poll work is bounded by
-    // contract (probes x cell size candidates), so coalesce(1) collapses
-    // the WHOLE narrow chain — pruned scan, scoring, ranking window
-    // (SinglePartition satisfies its clustering requirement) — into one
-    // task and zero exchanges: the lowest-latency posture for a poll, at
-    // the deliberate price of a serial scan. SCALEBENCH's skewed serve
-    // rows measure exactly this posture under a planted 50%-hot cell and
-    // gate it by an ABSOLUTE ceiling (a 30x hot-cell poll must stay inside
-    // the dashboard's 3 s budget — the exponent rule can't bind on
-    // sub-0.3 s polls). NEVER the default: at pipeline scale the parallel
-    // scan + shuffle is the right plan.
-    rankCos(if (compactForServe) scoredRows.coalesce(1) else scoredRows, k)
+      }.toDF("q_id", "neighbor_id", "cos")
+    topK(scoredRows, col("cos").desc, k)
   }
 
-  /** Per-query exact-cosine top-k over scored (q_id, c_id, cos) rows. A
-    * neighbor counts once: an at-least-once APPEND redelivery (t38) can
-    * leave physically duplicated posting rows until the next compaction
-    * (and the rerank route's id join multiplies them); rows are
-    * deterministic per c_id, so duplicated scored pairs are BIT-IDENTICAL
-    * and ADJACENT in the window order (cos, then c_id) — a lag comparison
-    * inside the ranking window collapses them without the extra (q_id,
-    * c_id) shuffle dropDuplicates would add (one exchange per serve
-    * query, and per 100-TB candidate set). CONTRACT this leans on: vec_id
-    * is an immutable key — a vector is never re-appended with CHANGED
-    * values (mutation = delete + new id), so equal ids always carry equal
-    * scores; out-of-contract mutated duplicates would not be adjacent and
-    * would not collapse.
+  /** Per-query top-k of scored (q_id, neighbor_id, score) rows in
+    * `order`, ties to the smaller neighbor_id, with each kept row's
+    * `rank` (1..k) — the ONE ranker every route ends in. A neighbor counts
+    * once: an at-least-once APPEND redelivery (t38) can leave physically
+    * duplicated posting rows until the next compaction (and the rerank
+    * route's id join multiplies them); rows are deterministic per id, so
+    * duplicated scored pairs are BIT-IDENTICAL and ADJACENT in the window
+    * order — a lag comparison inside the ranking window collapses them
+    * without the extra (q_id, neighbor_id) shuffle dropDuplicates would
+    * add (one exchange per serve query, and per 100-TB candidate set).
+    * CONTRACT this leans on: vec_id is an immutable key — a vector is
+    * never re-appended with CHANGED values (mutation = delete + new id),
+    * so equal ids always carry equal scores; out-of-contract mutated
+    * duplicates would not be adjacent and would not collapse.
     */
-  private def rankCos(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("q_id").orderBy(col("cos").desc, col("c_id"))
-    scored.withColumn("prev_c", lag("c_id", 1).over(w))
-      .filter(col("prev_c").isNull || col("prev_c") =!= col("c_id"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("c_id").as("neighbor_id"), col("cos"))
+  private def topK(scored: DataFrame, order: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id").orderBy(order, col("neighbor_id"))
+    postured(scored).withColumn("prev", lag("neighbor_id", 1).over(w))
+      .filter(col("prev").isNull || col("prev") =!= col("neighbor_id"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .drop("prev")
+  }
+
+  /** `scored` in the plan shape the size of its scan picks — the ONE place
+    * a search route's posture is decided. The bytes are those of the
+    * parquet files under `scored`, each scan pruned by the partition
+    * filters above it: the probed cells' files for ivf and ivfpq, the code
+    * tier for pq, the code tier plus the postings the fetch stage reads
+    * for rerank. When they fit in one
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` partition — the
+    * size AQE would coalesce the ranking window's shuffle down to anyway
+    * — coalesce(1) collapses the whole narrow chain (scan, scoring,
+    * ranking window: SinglePartition satisfies its clustering) into one
+    * task with no exchange, giving up no parallelism AQE would have kept.
+    * A larger scan keeps the parallel scan and the window's shuffle. The
+    * sizes come from the file listings the scans took when they were
+    * built: no Spark job, no second listing. SCALEBENCH's skewed serve
+    * rows measure the compact posture under a planted 50%-hot cell.
+    */
+  private def postured(scored: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeSet
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val plan = scored.queryExecution.analyzed
+    val conditions = plan.collect { case f: Filter => f.condition }
+    val bytes = plan.collect { case l: LogicalRelation => (l.relation, l.output) }.collect {
+      case (r: HadoopFsRelation, out) =>
+        val parts = AttributeSet(out.filter(a => r.partitionSchema.fieldNames.contains(a.name)))
+        r.location.listFiles(conditions.filter(_.references.subsetOf(parts)), Nil)
+          .flatMap(_.files).map(_.getLen).sum
+    }.sum
+    val advisory = scored.sparkSession.sessionState.conf
+      .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    if (bytes <= advisory) scored.coalesce(1) else scored
   }
 
   /** The `probes` cells query `qa` probes: centroids ranked by cosArr
@@ -3209,12 +3228,11 @@ object VectorOps {
     */
   private[graft] def searchRerankPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cb: Array[Array[Double]],
-      k: Int, rerankCandidates: Int = 32, excludeSelf: Boolean = true,
-      compactForServe: Boolean = false): DataFrame = {
+      k: Int, rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame = {
     import s.implicits._
     // stage 1: code-only candidate generation
     val cand = searchPqIndexPlanned(s, path, qsArr, cb, rerankCandidates,
-      excludeSelf, compactForServe).select("q_id", "neighbor_id")
+      excludeSelf).select("q_id", "neighbor_id")
     // stage 2: fetch raw vectors for candidate ids only — a broadcast
     // id join against the alive postings, then exact cosine + per-query
     // rank
@@ -3227,9 +3245,8 @@ object VectorOps {
       .mapPartitions { it =>
         val qs = bc.value
         it.map { case (qid, cid, ce) => (qid, cid, cosArr(qs(qid), ce)) }
-      }.toDF("q_id", "c_id", "cos")
-    // the serving posture: see searchIvfIndexPlanned's compactForServe
-    rankCos(if (compactForServe) fetched.coalesce(1) else fetched, k)
+      }.toDF("q_id", "neighbor_id", "cos")
+    topK(fetched, col("cos").desc, k)
   }
 
   /** The pq route with caller-supplied planning inputs (cached codebook +
@@ -3241,11 +3258,10 @@ object VectorOps {
     */
   private[graft] def searchPqIndexPlanned(s: SparkSession, path: String,
       qs: Array[(Long, Array[Double])], cb: Array[Array[Double]],
-      k: Int, excludeSelf: Boolean = true,
-      compactForServe: Boolean = false): DataFrame = {
+      k: Int, excludeSelf: Boolean = true): DataFrame = {
     import s.implicits._
     val bc = s.sparkContext.broadcast((cb, qs, excludeSelf))
-    val scored0 = aliveCodes(s, path).as[(Long, Seq[Int])]
+    val scored = aliveCodes(s, path).as[(Long, Seq[Int])]
       .mapPartitions { it =>
         val (cbL, qL, exclSelf) = bc.value
         val pqM = cbL(0).length / PqS
@@ -3257,22 +3273,7 @@ object VectorOps {
           }
         }
       }.toDF("q_id", "neighbor_id", "adc")
-    // the serving posture: see searchIvfIndexPlanned's compactForServe
-    val scored = if (compactForServe) scored0.coalesce(1) else scored0
-    rankAdc(scored, k)
-  }
-
-  /** Per-query ADC top-k. Exactly-once serving over at-least-once
-    * appends (see [[searchIvfIndexPlanned]]): duplicated scored pairs are
-    * bit-identical and adjacent in the ranking order — collapse them
-    * inside the window instead of paying a second exchange.
-    */
-  private def rankAdc(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("q_id").orderBy(col("adc").asc, col("neighbor_id"))
-    scored.withColumn("prev_n", lag("neighbor_id", 1).over(w))
-      .filter(col("prev_n").isNull || col("prev_n") =!= col("neighbor_id"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select("q_id", "neighbor_id", "adc")
+    topK(scored, col("adc").asc, k)
   }
 
   /** The ivfpq route — both scale levers at once: per query, rank cells
@@ -3315,7 +3316,7 @@ object VectorOps {
             .map { case (qid, tab) => (qid, cid, pqAdc(tab, ca)) }
         }
       }.toDF("q_id", "neighbor_id", "adc")
-    rankAdc(scored, k)
+    topK(scored, col("adc").asc, k)
   }
 
   /** Sample, guard and persist a PQ codebook from `rows` (id, e): the
@@ -3438,7 +3439,7 @@ object VectorOps {
     */
   def pqDriftAudit(s: SparkSession, root: String, corpus: DataFrame,
       margin: Double = 0.05): DataFrame =
-    driftAuditAt(s, resolveVecIndexRoot(s, root), corpus, margin)
+    driftAuditAt(s, VersionedStore.resolve(s, root), corpus, margin)
 
   private def driftAuditAt(s: SparkSession, path: String, corpus: DataFrame,
       margin: Double): DataFrame = {
@@ -3831,7 +3832,7 @@ object VectorOps {
     * version is stamped with ([[graft.core.ListingCache]]); every
     * rewrite — [[compactVecIndex]], [[rebuildVecIndex]] — publishes a
     * new version. Old versions are reclaimed only by an
-    * explicit [[vacuumVecIndex]] AFTER a grace window — the s32
+    * explicit [[graft.core.VersionedStore.vacuum]] AFTER a grace window — the s32
     * retention discipline: in-flight readers pinned to the previous
     * version stay valid until the vacuum horizon passes them.
     *
@@ -3841,17 +3842,6 @@ object VectorOps {
     * serving-path cost moves at 100 TB.
     */
 
-  /** Highest published version under `$root/manifest`, if any. */
-  def currentVecIndexVersion(s: SparkSession, root: String): Option[Long] =
-    VersionedStore.currentVersion(s, root)
-
-  /** The pinned directory of the current version — resolve ONCE per
-    * request; every read of the returned path is immune to later flips.
-    * Fails when `root` has no published version.
-    */
-  def resolveVecIndexRoot(s: SparkSession, root: String): String =
-    VersionedStore.resolve(s, root)
-
   /** Build `tiers` for `corpus` into an unpublished version directory the
     * caller holds the lease on. Debris a crashed predecessor left there is
     * cleared first (the lease makes this caller its only writer).
@@ -3860,19 +3850,6 @@ object VectorOps {
     remove(corpus.sparkSession, dir)
     buildTiers(corpus, dir, tiers)
   }
-
-  /** Reclaim versions older than the newest `keepLast` (grace window for
-    * in-flight readers pinned to a predecessor — keepLast >= 2 keeps the
-    * immediate fallback alive), optionally never touching a version
-    * superseded less than `minAgeMs` ago — the time-based grace window a
-    * serving deployment derives from its poll cadence, so a vacuum can
-    * never delete the version an in-flight (slow) pinned read still
-    * holds. Mechanics in [[graft.core.VersionedStore.vacuum]]. Returns
-    * the removed version numbers.
-    */
-  def vacuumVecIndex(s: SparkSession, root: String,
-      keepLast: Int = 2, minAgeMs: Long = 0L): Seq[Long] =
-    VersionedStore.vacuum(s, root, keepLast, minAgeMs)
 
   /** Drift-to-ACTION policy over a persisted index root — the decision
     * layer the measuring diagnostics (v18 occupancy, v42 codebook drift)
@@ -3907,7 +3884,7 @@ object VectorOps {
   def rebuildAdvisor(s: SparkSession, root: String,
       margin: Double = 0.05, sigStore: Option[String] = None,
       psiMargin: Double = 0.2): DataFrame =
-    adviseAt(s, resolveVecIndexRoot(s, root), margin, sigStore, psiMargin)
+    adviseAt(s, VersionedStore.resolve(s, root), margin, sigStore, psiMargin)
 
   private def adviseAt(s: SparkSession, path: String, margin: Double,
       sigStore: Option[String], psiMargin: Double): DataFrame = {
@@ -3978,7 +3955,7 @@ object VectorOps {
       corpus: Option[DataFrame] = None,
       sigStore: Option[String] = None,
       psiMargin: Double = 0.2): Option[String] = {
-    val cur = resolveVecIndexRoot(s, root)
+    val cur = VersionedStore.resolve(s, root)
     val verdicts = adviseAt(s, cur, margin, sigStore, psiMargin)
       .select("verdict").collect().map(_.getString(0))
     if (!verdicts.contains("retrain")) None
@@ -4063,7 +4040,7 @@ object VectorOps {
       val emb = Tables.embeddings(s, d)
       val root = grownRoot(s, d, "v48_vroot", "ivf")
       rebuildVecIndex(s, root)
-      val removed = vacuumVecIndex(s, root, keepLast = 1)
+      val removed = VersionedStore.vacuum(s, root, keepLast = 1)
       require(removed == Seq(1L), s"vacuum must reclaim exactly v1, got $removed")
       searchVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2, tier = "ivf")
@@ -4114,13 +4091,13 @@ object VectorOps {
         catch { case e: IllegalArgumentException =>
           e.getMessage.contains("build lease") }
       require(denied, "a concurrent rebuild must be refused by a live lease")
-      require(currentVecIndexVersion(s, root) == Some(1L),
+      require(VersionedStore.currentVersion(s, root) == Some(1L),
         "a denied rebuild must not publish")
       // A's lease is now stale (ttl 0): the retry takes it over and is
       // the ONE writer of v2
       val nextDir = rebuildVecIndex(s, root, leaseTtlMs = 0L)
       require(nextDir.endsWith(VersionedStore.versionName(2L)) &&
-        currentVecIndexVersion(s, root) == Some(2L),
+        VersionedStore.currentVersion(s, root) == Some(2L),
         "takeover must publish exactly v2")
       searchVecIndex(s, root,
         emb.filter(col("vec_id") < 10), k = 3, probes = 2, tier = "ivf")

@@ -1,6 +1,6 @@
 package graft.serve
 
-import graft.core.Tables
+import graft.core.{Tables, VersionedStore}
 import graft.sim.BusSim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -193,8 +193,8 @@ object QueryService {
     * holds its top-[[ServeHeadK]] page (bm25 desc, doc_id tie-break) as
     * ONE small file, so every poll's TakeOrdered reads k rows from one
     * file instead of re-scanning every score shard — the doc-arm twin
-    * of the vector arm's compactForServe posture, and the part that
-    * keeps per-poll cost O(k) when the score table is corpus-sized.
+    * of the vector arm's compact posture, and the part that keeps
+    * per-poll cost O(k) when the score table is corpus-sized.
     * The head is derived by reading `scores/` back (doubles round-trip
     * parquet exactly), so the two tiers are bit-consistent by
     * construction; the read-back is [[graft.core.Tables.readBack]], so it
@@ -213,8 +213,8 @@ object QueryService {
     * initializer waits for the winner's publish).
     */
   def initVersionedDocIndex(docs: DataFrame, root: String,
-      leaseTtlMs: Long = graft.core.VersionedStore.DefaultLeaseTtlMs): String =
-    graft.core.VersionedStore.init(docs.sparkSession, root, leaseTtlMs)(
+      leaseTtlMs: Long = VersionedStore.DefaultLeaseTtlMs): String =
+    VersionedStore.init(docs.sparkSession, root, leaseTtlMs)(
       buildDocSnapshot(docs, _))
 
   /** Re-materialize the BM25 store from `docs` into version N+1 and flip
@@ -224,8 +224,8 @@ object QueryService {
     * lease). Returns the new version directory.
     */
   def rematerializeDocIndex(s: SparkSession, root: String, docs: DataFrame,
-      leaseTtlMs: Long = graft.core.VersionedStore.DefaultLeaseTtlMs): String =
-    graft.core.VersionedStore.buildNext(s, root, leaseTtlMs)(
+      leaseTtlMs: Long = VersionedStore.DefaultLeaseTtlMs): String =
+    VersionedStore.buildNext(s, root, leaseTtlMs)(
       buildDocSnapshot(docs, _))
 
   /** The staged BM25 build behind the serving root and the doc-arm
@@ -244,24 +244,13 @@ object QueryService {
     graft.core.SessionStaging.version(s, root, key, first)(buildDocSnapshot(sliced, _))
   }
 
-  /** The pinned current BM25 snapshot directory (resolve once per
-    * request — the [[vecIndexRoot]] contract).
-    */
-  def resolveDocIndexRoot(s: SparkSession, root: String): String =
-    graft.core.VersionedStore.resolve(s, root)
-
-  /** Reclaim superseded BM25 snapshot versions past the grace window. */
-  def vacuumDocIndexVersions(s: SparkSession, root: String,
-      keepLast: Int = 2, minAgeMs: Long = 0L): Seq[Long] =
-    graft.core.VersionedStore.vacuum(s, root, keepLast, minAgeMs)
-
   /** Serving maintenance hook for the doc arm — re-score from the
     * current corpus, flip, vacuum past the poll-derived grace window.
     */
   def refreshDocIndex(s: SparkSession, d: String): String = {
     val root = docIndexRootOf(s, d)
     val dir = stagedDocVersion(s, d, root, "full", first = false)
-    vacuumDocIndexVersions(s, root, keepLast = 2, minAgeMs = vacuumGraceMs)
+    VersionedStore.vacuum(s, root, keepLast = 2, minAgeMs = vacuumGraceMs)
     dir
   }
 
@@ -285,9 +274,9 @@ object QueryService {
     */
   private def builtRoot(s: SparkSession, root: String)(build: => Unit): String = {
     root.intern.synchronized {
-      if (graft.core.VersionedStore.currentVersion(s, root).isEmpty) build
+      if (VersionedStore.currentVersion(s, root).isEmpty) build
     }
-    graft.core.VersionedStore.resolve(s, root)
+    VersionedStore.resolve(s, root)
   }
 
   /** Search endpoint: top-k documents by Okapi BM25 against the engine's
@@ -351,7 +340,7 @@ object QueryService {
       val root = graft.core.Scratch.run("sdoc_pin")
       stagedDocVersion(s, d, root, "sub90", first = true)
       // the concurrent poller: pointer resolved NOW (v1)...
-      val pinned = docPage(s, resolveDocIndexRoot(s, root), 10)
+      val pinned = docPage(s, VersionedStore.resolve(s, root), 10)
       // ...re-materialization publishes v2 before the page executes
       stagedDocVersion(s, d, root, "full", first = false)
       pinned
@@ -371,9 +360,9 @@ object QueryService {
       val root = graft.core.Scratch.run("sdoc_flip")
       stagedDocVersion(s, d, root, "sub90", first = true)
       stagedDocVersion(s, d, root, "full", first = false)
-      val removed = vacuumDocIndexVersions(s, root, keepLast = 1)
+      val removed = VersionedStore.vacuum(s, root, keepLast = 1)
       require(removed == Seq(1L), s"vacuum must reclaim exactly v1, got $removed")
-      docPage(s, resolveDocIndexRoot(s, root), 10)
+      docPage(s, VersionedStore.resolve(s, root), 10)
     },
     serveDocSearch.oracle)
 
@@ -416,7 +405,7 @@ object QueryService {
       s, root, margin, corpus = Some(graft.core.Tables.embeddings(s, d)),
       sigStore = sigStore, psiMargin = psiMargin)
     acted.foreach { _ =>
-      graft.operators.VectorOps.vacuumVecIndex(s, root,
+      VersionedStore.vacuum(s, root,
         keepLast = 2, minAgeMs = vacuumGraceMs)
       ()
     }
@@ -463,8 +452,8 @@ object QueryService {
   /** Vector-search endpoint: top-k neighbors of the demo query vectors
     * (vec_id < 5 — the per-request parameterization seam), served from
     * the persisted index through the facade's route planner
-    * ([[graft.operators.VectorOps.searchPinned]]) in its compact serving
-    * posture — `tier` picks the route per query budget (ivf = raw probed
+    * ([[graft.operators.VectorOps.searchPinned]]) — `tier` picks the
+    * route per query budget (ivf = raw probed
     * cells, pq = code-only ADC, rerank = codes nominate + raw rerank,
     * auto = the best the layout supports). The build-once/query-many
     * serving shape next to [[docSearch]]'s text arm (a production
@@ -475,7 +464,7 @@ object QueryService {
     val path = vecIndexRoot(s, d)
     plans(s, path, s"vec:$k:$tier")(graft.operators.VectorOps.searchPinned(s, path,
       graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 5), k,
-      probes = 2, tier = tier, compactForServe = true))
+      probes = 2, tier = tier).drop("rank"))
   }
 
   /** Recall@3 of every serving route against the exact baseline — the
@@ -712,10 +701,8 @@ object QueryService {
       cand: Int): DataFrame =
     graft.operators.VectorOps.searchPinned(s, path,
         graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 1), k = cand,
-        probes = 2, tier = "ivf", compactForServe = true)
-      .withColumn("vec_rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))))
-      .select(col("neighbor_id").as("doc_id"), col("vec_rank"))
+        probes = 2, tier = "ivf")
+      .select(col("neighbor_id").as("doc_id"), col("rank").as("vec_rank"))
 
   /** Every doc of the lexical top-`cand` and the vector arm `vtop`, with
     * both ranks, the RRF score and the fused rank.
@@ -734,8 +721,9 @@ object QueryService {
       .sortBy { case (id, bm) => (-bm, id) }
     // single partition on BOTH fusion inputs: SinglePartition satisfies
     // the join's and the fused window's clustering requirements, so the
-    // whole fusion runs exchange-free (the vec arm is already compacted
-    // by its serving posture; the lex page is 20 local rows)
+    // whole fusion runs exchange-free (the vec arm is one partition when
+    // its probed cells fit one advisory partition; the lex page is 20
+    // local rows)
     val lex = s.createDataset(lexPage.zipWithIndex
         .map { case ((id, _), i) => (id, i + 1) })
       .toDF("doc_id", "lex_rank").coalesce(1)
@@ -820,7 +808,7 @@ object QueryService {
       stagedDocVersion(s, d, root, "sub90", first = true)
       stagedDocVersion(s, d, root, "full", first = false)
       hybridSearchPlan(s, d, vecIndexRoot(s, d),
-        resolveDocIndexRoot(s, root), 10, 20)
+        VersionedStore.resolve(s, root), 10, 20)
     },
     serveHybridSearch.oracle)
 
@@ -831,7 +819,8 @@ object QueryService {
 }
 
 /** Thin CLI over [[QueryService]]: `runMain graft.serve.ServeCli <sfDir>
-  * <bus_lines|bus_state|demand|rides|replay|doc_search|vec_search> [arg]`
+  * <bus_lines|bus_state|demand|rides|replay|doc_search|vec_search|vec_recall|hybrid_search>
+  * [arg]`
   * — prints JSON lines, the same
   * wire format the dashboard polls for.
   */

@@ -245,11 +245,12 @@ object ScaleBench {
       "j1_composite_2key_join", "s17_bucketed_colocated_join",
       // r11 verdict #7: the serve facade under a planted hot IVF cell
       // (50% of all vectors share query 0's direction — see
-      // replicate). The serving layer DELIBERATELY runs the
-      // compact single-task posture (QueryService passes
-      // compactForServe=true), so the exponent row records how that
-      // serial scan grows; because warm polls sit far below the 0.3 s
-      // jitter floor, the exponent rule alone would never gate them —
+      // replicate). Every search route runs the compact single-task
+      // posture while the bytes it scans fit one
+      // spark.sql.adaptive.advisoryPartitionSizeInBytes partition
+      // (VectorOps.postured), so until a scan outgrows it the exponent
+      // row records how that serial scan grows; because warm polls sit
+      // far below the 0.3 s jitter floor, the exponent rule alone would never gate them —
       // the serveCeiling check below adds the absolute latency gate
       // that actually binds (a poll must stay inside the reference
       // dashboard's 3 s budget even at 30x with the hot cell).

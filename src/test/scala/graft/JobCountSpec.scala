@@ -24,7 +24,7 @@ class JobCountSpec extends SparkSpec {
   // the served vector root is durable and shared with other runs: reclaim
   // the versions this suite's delete and compaction publish
   override def afterAll(): Unit =
-    try VectorOps.vacuumVecIndex(spark, QueryService.serveRootOf(spark, sf), keepLast = 1): Unit
+    try graft.core.VersionedStore.vacuum(spark, QueryService.serveRootOf(spark, sf), keepLast = 1): Unit
     finally super.afterAll()
 
   private lazy val warm: Unit = LakehousePass.run(spark, sf)
@@ -114,24 +114,10 @@ class JobCountSpec extends SparkSpec {
     jobs(read())
   }
 
-  private def serving(tier: String): Int = {
-    def read() = VectorOps.searchPinned(spark, VectorOps.resolveVecIndexRoot(spark, annRoot),
-      queries, 5, 2, tier, compactForServe = true).collect()
-    read()
-    jobs(read())
-  }
-
   test("warm facade ANN reads on a root with tombstones take at most " +
-    "2/2/4 jobs (ivf/pq/rerank)") {
+    "1/1/2 jobs (ivf/pq/rerank)") {
     val n = Seq("ivf", "pq", "rerank").map(t => t -> facade(t)).toMap
     info(s"facade jobs $n")
-    assert(n("ivf") <= 2 && n("pq") <= 2 && n("rerank") <= 4, n.toString)
-  }
-
-  test("warm ANN reads in the serving posture take at most 1/1/2 jobs " +
-    "(ivf/pq/rerank)") {
-    val n = Seq("ivf", "pq", "rerank").map(t => t -> serving(t)).toMap
-    info(s"serving jobs $n")
     assert(n("ivf") <= 1 && n("pq") <= 1 && n("rerank") <= 2, n.toString)
   }
 

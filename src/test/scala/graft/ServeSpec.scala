@@ -14,7 +14,7 @@ class ServeSpec extends SparkSpec {
   // the served vector root is durable and shared with other runs: reclaim
   // the versions this suite's rebuild, compactions and refresh publish
   override def afterAll(): Unit =
-    try graft.operators.VectorOps.vacuumVecIndex(
+    try graft.core.VersionedStore.vacuum(
       spark, QueryService.serveRootOf(spark, sf), keepLast = 1): Unit
     finally super.afterAll()
 
@@ -164,7 +164,7 @@ class ServeSpec extends SparkSpec {
     val root = tempDir("graft-sdoc") + "/bm25"
     val docs = graft.core.Tables.documents(spark, sf)
     QueryService.initVersionedDocIndex(docs.filter(col("doc_id") % 10 =!= 0), root)
-    val v1 = QueryService.resolveDocIndexRoot(spark, root)
+    val v1 = graft.core.VersionedStore.resolve(spark, root)
     assert(v1.endsWith("v00000001"))
     // the in-flight poller: hybrid plan constructed against the pinned v1
     val pinned = QueryService.hybridSearchPlan(spark, sf,
@@ -179,19 +179,19 @@ class ServeSpec extends SparkSpec {
     // full-corpus materialization, different from the subset page
     val fresh = QueryService.hybridSearchPlan(spark, sf,
       QueryService.vecIndexRoot(spark, sf),
-      QueryService.resolveDocIndexRoot(spark, root), 10, 20)
+      graft.core.VersionedStore.resolve(spark, root), 10, 20)
       .collect().map(_.toString).toSeq
     val scratch = tempDir("graft-sdoc-fresh") + "/bm25"
     QueryService.initVersionedDocIndex(docs, scratch)
     val expect = QueryService.hybridSearchPlan(spark, sf,
       QueryService.vecIndexRoot(spark, sf),
-      QueryService.resolveDocIndexRoot(spark, scratch), 10, 20)
+      graft.core.VersionedStore.resolve(spark, scratch), 10, 20)
       .collect().map(_.toString).toSeq
     assert(fresh === expect)
     assert(fresh !== before,
       "subset vs full-corpus lex arms must rank differently")
     // vacuum past the grace window reclaims v1 only
-    assert(QueryService.vacuumDocIndexVersions(spark, root, keepLast = 1)
+    assert(graft.core.VersionedStore.vacuum(spark, root, keepLast = 1)
       === Seq(1L))
     assert(!new java.io.File(s"$root/roots/v00000001").exists())
   }
@@ -209,7 +209,7 @@ class ServeSpec extends SparkSpec {
     def hybrid(): Seq[String] = page(QueryService.hybridSearch(spark, sf))
     def freshHybrid(): Seq[String] = page(QueryService.hybridSearchPlan(spark, sf,
       QueryService.vecIndexRoot(spark, sf),
-      QueryService.resolveDocIndexRoot(spark, QueryService.docIndexRootOf(spark, sf)), 10, 20))
+      graft.core.VersionedStore.resolve(spark, QueryService.docIndexRootOf(spark, sf)), 10, 20))
     val baseline = rows() // warms relation + plan caches
     val hybBaseline = hybrid()
     // append clones of query 0's vector under fresh ids INTO the current
@@ -253,12 +253,12 @@ class ServeSpec extends SparkSpec {
     graft.operators.VectorOps.rebuildVecIndex(spark, root) // v2
     // inside the grace window (v1 superseded milliseconds ago): vacuum
     // must keep v1 alive even at keepLast=1, so the pinned read finishes
-    assert(graft.operators.VectorOps.vacuumVecIndex(spark, root,
+    assert(graft.core.VersionedStore.vacuum(spark, root,
       keepLast = 1, minAgeMs = 10L * 60 * 1000) === Nil)
     assert(pinned.collect().nonEmpty,
       "the pinned reader must survive a vacuum inside the grace window")
     // past the window it goes
-    assert(graft.operators.VectorOps.vacuumVecIndex(spark, root,
+    assert(graft.core.VersionedStore.vacuum(spark, root,
       keepLast = 1, minAgeMs = 0L) === Seq(1L))
     // the serving refresh derives the window from observed polls
     QueryService.notePollMillis(20000L)
@@ -328,7 +328,7 @@ class ServeSpec extends SparkSpec {
       assert(hyb !== hybBaseline,
         "the next hybridSearch must fuse the appended row into its vector arm")
       assert(hyb === QueryService.hybridSearchPlan(spark, sf, dir,
-        QueryService.resolveDocIndexRoot(spark, QueryService.docIndexRootOf(spark, sf)), 10, 20)
+        graft.core.VersionedStore.resolve(spark, QueryService.docIndexRootOf(spark, sf)), 10, 20)
         .collect().map(_.toString).toSeq.sorted)
     } finally {
       // the serving root is durable: delete the clone and compact, so the
@@ -379,7 +379,7 @@ class ServeSpec extends SparkSpec {
     java.nio.file.Files.write(new java.io.File(debris, "part-0.parquet").toPath,
       "torn".getBytes)
     val dir = QueryService.stagedDocVersion(spark, sf, root, "full", first = true)
-    assert(dir === QueryService.resolveDocIndexRoot(spark, root))
+    assert(dir === graft.core.VersionedStore.resolve(spark, root))
     assert(!new java.io.File(debris, "part-0.parquet").exists())
     val page = spark.read.parquet(s"$dir/head")
       .orderBy(col("bm25").desc, col("doc_id")).limit(10).collect()
@@ -403,7 +403,7 @@ class ServeSpec extends SparkSpec {
     val dir = QueryService.refreshDocIndex(spark, sf)
     assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(v + 1),
       "the refresh must publish a successor version")
-    assert(dir === QueryService.resolveDocIndexRoot(spark, root))
+    assert(dir === graft.core.VersionedStore.resolve(spark, root))
     // the cached plans were keyed by the old version directory
     val (docAfter, hybAfter) =
       (QueryService.docSearch(spark, sf), QueryService.hybridSearch(spark, sf))
@@ -424,7 +424,7 @@ class ServeSpec extends SparkSpec {
     QueryService.initVersionedDocIndex(graft.core.Tables.documents(spark, sf), scratch)
     assert(rows(hybAfter) === rows(QueryService.hybridSearchPlan(spark, sf,
       QueryService.vecIndexRoot(spark, sf),
-      QueryService.resolveDocIndexRoot(spark, scratch), 10, 20)))
+      graft.core.VersionedStore.resolve(spark, scratch), 10, 20)))
     assert(rows(hybAfter) === hybBefore)
   }
 

@@ -28,7 +28,7 @@ class VectorOpsSpec extends SparkSpec {
   }
 
   /** The current version directory of the index root `root`. */
-  private def cur(root: String): String = VectorOps.resolveVecIndexRoot(spark, root)
+  private def cur(root: String): String = graft.core.VersionedStore.resolve(spark, root)
 
   /** `root` publishes exactly versions 1..n and holds no other version
     * directory and no build lease: the verbs left nothing behind.
@@ -837,11 +837,11 @@ class VectorOpsSpec extends SparkSpec {
     assert(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "ivf")
       .collect().toSeq ===
       VectorOps.searchIvfIndexPlanned(spark, cur(path), qArr,
-        VectorOps.loadIvfCentroids(spark, cur(path)), 3, 2).collect().toSeq)
+        VectorOps.loadIvfCentroids(spark, cur(path)), 3, 2).drop("rank").collect().toSeq)
     assert(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "pq")
       .collect().toSeq ===
       VectorOps.searchPqIndexPlanned(spark, cur(path), qArr,
-        VectorOps.loadPqCodebook(spark, cur(path)), 3).collect().toSeq)
+        VectorOps.loadPqCodebook(spark, cur(path)), 3).drop("rank").collect().toSeq)
     // auto = rerank when both tiers exist
     val auto = ids(VectorOps.searchVecIndex(spark, path, qs, 3))
     val rr = ids(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "rerank"))
@@ -1027,6 +1027,44 @@ class VectorOpsSpec extends SparkSpec {
     }
   }
 
+  test("the size of the scan picks the posture: a route scanning more than " +
+    "one advisory partition runs the parallel plan with the same rows and " +
+    "the same partition pruning") {
+    import org.apache.spark.sql.functions.col
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vid = col("vec_id")
+    val qs = emb.filter(vid < 3)
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    def plan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
+    val pruning = "PartitionFilters: \\[[^\\]]*cluster#\\d+ IN \\(".r
+    for ((layout, routes) <- layoutRoutes) {
+      val path = tempDir(s"graft-posture-$layout") + "/idx"
+      VectorOps.buildVecIndex(emb.filter(vid >= 20), path, layout)
+      VectorOps.appendToVecIndex(emb.filter(vid < 20), path)
+      VectorOps.deleteFromVecIndex(spark, path, emb.filter(vid === 7).select(vid))
+      for (t <- routes) {
+        def search() = VectorOps.searchVecIndex(spark, path, qs, 3, tier = t)
+        val compact = search()
+        val saved = spark.conf.getOption(advisory)
+        spark.conf.set(advisory, "1")
+        val parallel =
+          try search()
+          finally saved.fold(spark.conf.unset(advisory))(spark.conf.set(advisory, _))
+        assert(plan(compact).contains("Coalesce 1"), s"$layout/$t: not compact")
+        assert(!plan(parallel).contains("Coalesce"), s"$layout/$t: not parallel")
+        assert(rows(parallel) === rows(compact), s"$layout/$t: the postures disagree")
+        if (layout == "ivf" || layout == "ivfpq")
+          Seq(compact, parallel).foreach(df =>
+            assert(pruning.findFirstIn(plan(df)).isDefined,
+              s"$layout/$t: the scan lost the probed-cell partition filter"))
+      }
+    }
+  }
+
   /** A copy of the version directory `dir` whose data directories hold
     * their rows left-anti joined against `dir`'s tombstones, with no
     * tombstone table: the alive rows as a join computes them.
@@ -1083,7 +1121,7 @@ class VectorOpsSpec extends SparkSpec {
         assert(after.count(_._1 == 0L) === 5, s"$layout/$t: k must refill")
         val joined = antiJoinedCopy(cur(root))
         assert(rows(VectorOps.searchVecIndex(spark, root, qs, 5, tier = t)) ===
-          rows(VectorOps.searchPinned(spark, joined, qs, 5, 2, t)),
+          rows(VectorOps.searchPinned(spark, joined, qs, 5, 2, t).drop("rank")),
           s"$layout/$t: the alive filter diverged from the left-anti join")
       }
     }
@@ -1224,7 +1262,7 @@ class VectorOpsSpec extends SparkSpec {
       done.set(true)
       readers.foreach(_.join())
       assert(failed.isEmpty, s"$layout: a racing search failed: ${failed.peek()}")
-      assert(VectorOps.currentVecIndexVersion(spark, root) === Some(3L))
+      assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(3L))
       val after = serveRoutes(root, routes, qs)
       assert(seen.size >= readers.size)
       seen.forEach { case (route, got) =>
@@ -1253,7 +1291,7 @@ class VectorOpsSpec extends SparkSpec {
       }
       def assertUntouched(root: String, version: Long,
           want: Map[String, Set[(Long, Long, Double)]]): Unit = {
-        assert(VectorOps.currentVecIndexVersion(spark, root) === Some(version))
+        assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(version))
         assert(serveRoutes(root, routes, qs) === want, s"$layout: results moved")
         assert(!new java.io.File(s"$root/manifest").list().exists(_.startsWith("claim_")),
           s"$layout: a failed build left its lease behind")
@@ -1364,12 +1402,12 @@ class VectorOpsSpec extends SparkSpec {
     val pinned = Seq("ivf", "pq", "rerank").map(t =>
       t -> VectorOps.searchVecIndex(spark, root, qs, 3, tier = t)).toMap
     VectorOps.compactVecIndex(spark, root)
-    assert(VectorOps.currentVecIndexVersion(spark, root) === Some(2L),
+    assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(2L),
       "compaction must publish the compacted tiers as a new version")
     pinned.foreach { case (t, df) =>
       assert(ids(df) === want(t), s"pinned $t read changed under compaction")
     }
-    val v2 = VectorOps.resolveVecIndexRoot(spark, root)
+    val v2 = graft.core.VersionedStore.resolve(spark, root)
     assert(!new java.io.File(s"$v2/tombstones").exists())
     assert(spark.read.parquet(s"$v2/postings").count() ===
       emb.filter(vid % 7 =!= 0).count())
@@ -1380,7 +1418,7 @@ class VectorOpsSpec extends SparkSpec {
     assert(new java.io.File(s"$root/roots/v00000001/tombstones").exists())
     // nothing to reclaim -> no new version
     VectorOps.compactVecIndex(spark, root)
-    assert(VectorOps.currentVecIndexVersion(spark, root) === Some(2L))
+    assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(2L))
   }
 
   test("v43 rebuild under planted cluster drift: the diagnostic fires, " +
@@ -1520,21 +1558,21 @@ class VectorOpsSpec extends SparkSpec {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // v1 geometry only ever saw clusters 0-9; the rest arrive by append
     VectorOps.buildVecIndex(emb.filter(vid < 250), root)
-    assert(VectorOps.currentVecIndexVersion(spark, root) === Some(1L))
+    assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(1L))
     VectorOps.appendToVecIndex(emb.filter(vid >= 250), root)
     val oldResults = ids(VectorOps.searchVecIndex(spark, root, qs, 3))
     assert(oldResults.nonEmpty)
     // unpublished debris from a "crashed rebuild" must be invisible
     val debris = new java.io.File(s"$root/roots/v00000002/centroids")
     debris.mkdirs()
-    assert(VectorOps.currentVecIndexVersion(spark, root) === Some(1L))
+    assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(1L))
     assert(ids(VectorOps.searchVecIndex(spark, root, qs, 3)) === oldResults)
     // the concurrent reader: resolved BEFORE the flip, executed after —
     // must serve the fully-old geometry, never empty/mixed
     val pinned = VectorOps.searchVecIndex(spark, root, qs, 3)
     val nextDir = VectorOps.rebuildVecIndex(spark, root)
     assert(nextDir.endsWith("v00000002"))
-    assert(VectorOps.currentVecIndexVersion(spark, root) === Some(2L))
+    assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(2L))
     assert(ids(pinned) === oldResults,
       "a read pinned before the flip must serve the old version untouched")
     // a fresh resolution = fully-new geometry = a fresh build, bit for bit
@@ -1553,8 +1591,8 @@ class VectorOpsSpec extends SparkSpec {
     val afterDel = ids(VectorOps.searchVecIndex(spark, root, qs, 3))
     assert(victims.forall(v => !afterDel.exists(_._2 == v)))
     // vacuum: grace window keeps the newest keepLast versions only
-    assert(VectorOps.vacuumVecIndex(spark, root, keepLast = 3) === Nil)
-    assert(VectorOps.vacuumVecIndex(spark, root, keepLast = 2) === Seq(1L))
+    assert(graft.core.VersionedStore.vacuum(spark, root, keepLast = 3) === Nil)
+    assert(graft.core.VersionedStore.vacuum(spark, root, keepLast = 2) === Seq(1L))
     assert(!new java.io.File(s"$root/roots/v00000001").exists())
     assert(new java.io.File(s"$root/roots/v00000002").exists())
     assert(ids(VectorOps.searchVecIndex(spark, root, qs, 3)) === afterDel,
@@ -1587,7 +1625,7 @@ class VectorOpsSpec extends SparkSpec {
     assert(won.size === 1 && lost.size === 1,
       s"exactly one racing rebuild may publish: $attempts")
     assert(lost.head.failed.get.getMessage.contains("build lease"))
-    assert(VectorOps.currentVecIndexVersion(spark, root) === Some(2L))
+    assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(2L))
     // single-writer geometry: the published v2 is bit-equal to a fresh
     // build on the same corpus (an interleaved double-build would not be)
     val qs = emb.filter(vid >= 250 && vid < 260)
@@ -1607,7 +1645,7 @@ class VectorOpsSpec extends SparkSpec {
     assert(denied.getMessage.contains("build lease"))
     val v3 = VectorOps.rebuildVecIndex(spark, root, leaseTtlMs = 0L)
     assert(v3.endsWith("v00000003"))
-    assert(VectorOps.currentVecIndexVersion(spark, root) === Some(3L))
+    assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(3L))
   }
 
   test("rebuildAdvisor: planted cluster drift flips the ivf verdict to " +
