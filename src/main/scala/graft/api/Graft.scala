@@ -479,8 +479,10 @@ object Graft {
     * touching the corpus, routed by `tier` — "ivf" (raw probed cells,
     * bit-identical to [[annIvfTopK]]), "pq" (code-only ADC), "rerank"
     * (codes nominate, raw vectors rerank), "ivfpq" (residual ADC) or
-    * "auto" (best the root's layout supports). Probed cell ids become a
-    * static partition filter, so only those directories are read.
+    * "auto" (best the root's layout supports). Only the probed cells'
+    * directories are read. A search whose files fit one advisory partition
+    * runs at this call, on the driver over cached decoded tier rows, and
+    * returns a local relation; a larger one returns the parallel plan.
     */
   def annSearchIndex(spark: org.apache.spark.sql.SparkSession, root: String,
       queries: DataFrame, k: Int = 3, probes: Int = 2, tier: String = "auto",

@@ -47,15 +47,22 @@ final class ListingCache[V](sessionBound: Boolean = false) {
   private val entries = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String), (Seq[(String, Long, Long)], V)]
 
-  def apply(s: SparkSession, path: String, variant: String = "")(load: => V): V = {
+  def apply(s: SparkSession, path: String, variant: String = "")(load: => V): V =
+    stamped(s, path, variant)(_ => load)
+
+  /** [[apply]] with the stamp handed to `load` (empty when the path is
+    * missing), for a value that keeps the listing it was made under.
+    */
+  def stamped(s: SparkSession, path: String, variant: String = "")
+      (load: Seq[(String, Long, Long)] => V): V = {
     val p = new Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    ListingCache.listing(fs, p).fold(load) { stamp =>
+    ListingCache.listing(fs, p).fold(load(Nil)) { stamp =>
       val key = (if (sessionBound) s else null, fs.makeQualified(p).toString, variant)
       entries.get(key) match {
         case Some((`stamp`, hit)) => hit
         case _ =>
-          val fresh = load
+          val fresh = load(stamp)
           if (entries.size > ListingCache.DriverCacheEntries)
             entries.keys.foreach(k => entries.remove(k).foreach(release))
           entries.put(key, (stamp, fresh)).foreach(release)

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.api.GraftQuery
 import graft.core.{Tables, VersionedStore}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
@@ -3042,18 +3042,20 @@ object VectorOps {
     *   - `"auto"`   — the route the root's layout supports best: rerank
     *                  when both flat tiers exist, otherwise the one tier.
     *
-    * The pointer is resolved ONCE, here: the returned plan reads only the
+    * The pointer is resolved ONCE, here: the result reads only the
     * version current at this call, so a compaction or rebuild publishing
     * a successor before it executes cannot reshape or vanish its files.
-    * Each route is its planned variant fed the query batch this call
-    * collects and the cached geometry ([[loadIvfCentroids]],
-    * [[loadPqCodebook]]) and tombstoned ids ([[tombstoneIds]]); every
-    * data read passes its declared schema, so with a local query batch a
-    * warm call builds its DataFrame without a Spark job. Output: (q_id,
-    * neighbor_id, cos) for ivf/rerank; (q_id, neighbor_id, adc) for
-    * pq/ivfpq — native scores per route, each oracle-gated
-    * (serve_vec_search / _pq / _rerank, v44) with a recall eval next to
-    * them (serve_vec_recall).
+    * Each route is fed the query batch this call collects, the cached
+    * geometry ([[loadIvfCentroids]], [[loadPqCodebook]]) and tombstoned
+    * ids ([[tombstoneIds]]), and runs in the posture the size of its scan
+    * picks ([[onDriver]]): a search whose files fit one advisory partition
+    * is scored and ranked on the driver over cached decoded tier rows and
+    * returned as a local relation, so a warm one with a local query batch
+    * submits no Spark job and reads no file; a larger one returns the
+    * parallel plan. Output: (q_id, neighbor_id, cos) for ivf/rerank;
+    * (q_id, neighbor_id, adc) for pq/ivfpq — native scores per route,
+    * each oracle-gated (serve_vec_search / _pq / _rerank, v44) with a
+    * recall eval next to them (serve_vec_recall).
     */
   def searchVecIndex(s: SparkSession, root: String, queries: DataFrame,
       k: Int, probes: Int = 2, tier: String = "auto",
@@ -3063,7 +3065,8 @@ object VectorOps {
 
   /** [[searchVecIndex]] over an already-resolved version directory `path`
     * — the seam a serving layer that pins the version itself calls. Each
-    * row keeps its per-query `rank` (1..k) next to the route's score.
+    * row keeps its per-query `rank` (1..k) next to the route's score, and
+    * both postures return the same schema (names, types, nullability).
     */
   private[graft] def searchPinned(s: SparkSession, path: String,
       queries: DataFrame, k: Int, probes: Int, tier: String,
@@ -3097,20 +3100,273 @@ object VectorOps {
     }
   }
 
+  /** The decoded rows of one tier data directory (`postings/` or
+    * `codes/`) that driver-posture searches have loaded, made under the
+    * directory's listing `stamp`. It holds the rows of whole cells (the
+    * `cluster=<id>` directories of a partitioned tier, the one cell "" of
+    * a flat one), loaded on demand: a search loads only the cells it reads
+    * and the entry does not hold yet, in one collect. Together they never
+    * exceed `limit` bytes of parquet files — a search whose cells would
+    * push the entry past it replaces the entry's rows with its own cells.
+    * Tombstoned rows stay in (the alive filter runs at search time), and
+    * every search reads an immutable snapshot of the rows, so concurrent
+    * searches never see a half-merged entry.
+    */
+  private final class DecodedTier(stamp: Seq[(String, Long, Long)], partitioned: Boolean) {
+
+    /** Parquet bytes per cell, summed over the data files of the stamp
+      * (hidden and `_`-prefixed files are not data, as for Spark's file
+      * index).
+      */
+    val cellBytes: Map[String, Long] = stamp.flatMap { case (name, len, _) =>
+      val parts = name.split('/')
+      if (parts.last.startsWith("_") || parts.last.startsWith(".")) None
+      else if (partitioned && parts.length == 2 && parts(0).startsWith("cluster="))
+        Some(parts(0) -> len)
+      else if (!partitioned && parts.length == 1) Some("" -> len)
+      else None
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+
+    def bytes(cells: Set[String]): Long = cells.iterator.map(cellBytes.getOrElse(_, 0L)).sum
+
+    private val held =
+      new java.util.concurrent.atomic.AtomicReference((Set.empty[String], Vector.empty[Any]))
+
+    def loaded: Set[String] = held.get._1
+
+    /** The rows of (at least) `cells`; `load` reads the given cells. */
+    def rows[R](cells: Set[String], limit: Long)(load: Set[String] => Seq[R]): Vector[R] = {
+      val (have, got) = held.get
+      val missing = cells -- have
+      val snapshot =
+        if (missing.isEmpty) got
+        else {
+          val next =
+            if (bytes(have ++ missing) <= limit) (have ++ missing, got ++ load(missing))
+            else (cells, load(cells).toVector)
+          held.set(next)
+          next._2
+        }
+      snapshot.asInstanceOf[Vector[R]]
+    }
+  }
+
+  /** One [[DecodedTier]] per tier data directory, stamped on that
+    * directory's listing: an append (a new file in the directory) re-keys
+    * it, a delete (a new file in `tombstones/`) does not.
+    */
+  private val decoded = new graft.core.ListingCache[DecodedTier]
+
+  /** Per data directory of the version at `path`, the cells its
+    * decoded-rows entry holds: what driver-posture searches have loaded.
+    */
+  private[graft] def loadedCells(s: SparkSession, path: String): Map[String, Set[String]] =
+    layoutOf(s, path).map(t => t.data -> tierRead(s, path, t, None).entry.loaded).toMap
+
+  /** What one tier contributes to a search: its decoded-rows entry and
+    * the listed cells the search reads.
+    */
+  private final case class TierRead(t: Tier, entry: DecodedTier, cells: Set[String]) {
+    def bytes: Long = entry.bytes(cells)
+  }
+
+  /** Tier `t`'s share of a search over the cells `cellIds` (None = every
+    * cell of the tier).
+    */
+  private def tierRead(s: SparkSession, path: String, t: Tier,
+      cellIds: Option[Seq[Long]]): TierRead = {
+    val entry = decoded.stamped(s, s"$path/${t.data}")(new DecodedTier(_, t.partitioned))
+    val listed = entry.cellBytes.keySet
+    TierRead(t, entry, cellIds.fold(listed)(_.map(c => s"cluster=$c").toSet & listed))
+  }
+
+  private def advisoryBytes(s: SparkSession): Long = s.sessionState.conf
+    .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
+  /** The posture a search runs in — the ONE place it is decided, before
+    * any plan exists: on the driver when the parquet files its reads cover
+    * — the probed cells for ivf and ivfpq, the code tier for pq, codes
+    * plus postings for rerank — fit one
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` partition (the size
+    * AQE would coalesce the ranking window's shuffle down to anyway, so
+    * one task on an executor would have done the same serial work), and
+    * as the parallel plan otherwise. The sizes come from the listings the
+    * decoded-rows entries are stamped with: no Spark job, no second
+    * listing. SCALEBENCH's skewed serve rows measure the driver posture
+    * under a planted 50%-hot cell.
+    */
+  private def onDriver(s: SparkSession, reads: TierRead*): Boolean =
+    reads.map(_.bytes).sum <= advisoryBytes(s)
+
+  /** Tier `t`'s data rows under `path`, pruned to `cellIds` by a static
+    * `IN` partition filter when given.
+    */
+  private def cellRows(s: SparkSession, path: String, t: Tier,
+      cellIds: Option[Seq[Long]]): DataFrame = {
+    val rows = tierRows(s, path, t)
+    cellIds.fold(rows)(ids => rows.filter(col("cluster").isInCollection(cellLiterals(rows, ids))))
+  }
+
+  /** The decoded rows of `read`'s cells, alive (tombstoned ids dropped),
+    * loading the missing cells through `typed` — the same typed read the
+    * parallel plan scores.
+    */
+  private def driverRows[R](s: SparkSession, path: String, read: TierRead)
+      (typed: DataFrame => org.apache.spark.sql.Dataset[R])(id: R => Long): Iterator[R] = {
+    val rows = read.entry.rows(read.cells, advisoryBytes(s)) { missing =>
+      val ids = if (read.t.partitioned) Some(missing.toSeq.map(_.stripPrefix("cluster=").toLong))
+        else None
+      typed(cellRows(s, path, read.t, ids)).collect().toSeq
+    }
+    val dead = tombstoneIds(s, path)
+    if (dead.isEmpty) rows.iterator
+    else rows.iterator.filter(r => java.util.Arrays.binarySearch(dead, id(r)) < 0)
+  }
+
+  /** Per-query top-k of scored (q_id, neighbor_id, score) rows, `score`
+    * descending or ascending, ties to the smaller neighbor_id, with each
+    * kept row's `rank` (1..k) — the ranker of the parallel posture. A
+    * neighbor counts once: an at-least-once APPEND redelivery (t38) can
+    * leave physically duplicated posting rows until the next compaction
+    * (and the rerank route's id join multiplies them); rows are
+    * deterministic per id, so duplicated scored pairs are BIT-IDENTICAL
+    * and ADJACENT in the window order — a lag comparison inside the
+    * ranking window collapses them without the extra (q_id, neighbor_id)
+    * shuffle dropDuplicates would add (one exchange per query, and per
+    * 100-TB candidate set). CONTRACT this leans on: vec_id is an
+    * immutable key — a vector is never re-appended with CHANGED values
+    * (mutation = delete + new id), so equal ids always carry equal
+    * scores; out-of-contract mutated duplicates would not be adjacent and
+    * would not collapse. [[ranked]] is the same rule on the driver.
+    */
+  private def topK(scored: DataFrame, score: String, descending: Boolean,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy("q_id")
+      .orderBy(if (descending) col(score).desc else col(score).asc, col("neighbor_id"))
+    scored.withColumn("prev", lag("neighbor_id", 1).over(w))
+      .filter(col("prev").isNull || col("prev") =!= col("neighbor_id"))
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+      .drop("prev")
+  }
+
+  /** [[topK]]'s exact rule on the driver, as (q_id, neighbor_id, score,
+    * rank) rows ordered by q_id and rank: per query, sort by score with
+    * Spark's SQL double ordering (NaN greatest, -0.0 == 0.0), then by
+    * neighbor_id; drop a row whose neighbor_id equals the previous row's;
+    * keep ranks 1..k.
+    */
+  private def ranked(scored: Iterator[(Long, Long, Double)], descending: Boolean,
+      k: Int): Seq[(Long, Long, Double, Int)] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val order = new Ordering[(Long, Long, Double)] {
+      def compare(a: (Long, Long, Double), b: (Long, Long, Double)): Int = {
+        val c = if (descending) compareDoubles(b._3, a._3) else compareDoubles(a._3, b._3)
+        if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+      }
+    }
+    scored.toArray.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (_, rows) =>
+      val sorted = rows.sorted(order)
+      sorted.indices.iterator
+        .filter(i => i == 0 || sorted(i - 1)._2 != sorted(i)._2)
+        .take(k).zipWithIndex
+        .map { case (i, rank) => val (q, n, v) = sorted(i); (q, n, v, rank + 1) }
+    }
+  }
+
+  /** [[ranked]] rows as a local relation with the parallel plan's schema:
+    * (q_id, neighbor_id, `score`, rank), none nullable.
+    */
+  private def localResult(s: SparkSession, score: String,
+      rows: Seq[(Long, Long, Double, Int)]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(rows.map { case (q, n, v, r) => Row(q, n, v, r) }.asJava,
+      StructType(Seq(StructField("q_id", LongType, nullable = false),
+        StructField("neighbor_id", LongType, nullable = false),
+        StructField(score, DoubleType, nullable = false),
+        StructField("rank", IntegerType, nullable = false))))
+  }
+
+  // ---- the scoring kernels: each route's one body, called by the
+  // parallel plan's mapPartitions and by the driver posture alike
+
+  /** ivf: each posting row (c_id, c_e, cluster) scored with cosArr
+    * against the queries that probe its cell.
+    */
+  private def ivfScores(byCell: Map[Long, Array[(Long, Array[Double])]], excludeSelf: Boolean,
+      rows: Iterator[(Long, Array[Double], Long)]): Iterator[(Long, Long, Double)] =
+    rows.flatMap { case (cid, ce, cell) =>
+      byCell.getOrElse(cell, Array.empty[(Long, Array[Double])]).iterator
+        .filter(q => !excludeSelf || q._1 != cid)
+        .map { case (qid, qa) => (qid, cid, cosArr(qa, ce)) }
+    }
+
+  /** pq: each code row (vec_id, codes) scored by ADC against every query's
+    * lookup table.
+    */
+  private def pqScores(cb: Array[Array[Double]], qs: Array[(Long, Array[Double])],
+      excludeSelf: Boolean, rows: Iterator[(Long, Array[Int])]): Iterator[(Long, Long, Double)] = {
+    val pqM = cb(0).length / PqS
+    val qtab = qs.map { case (qid, qa) => (qid, pqTable(qa, cb, pqM)) }
+    rows.flatMap { case (cid, codes) =>
+      qtab.iterator.filter(t => !excludeSelf || t._1 != cid)
+        .map { case (qid, tab) => (qid, cid, pqAdc(tab, codes)) }
+    }
+  }
+
+  /** rerank's fetch: each (q_id, candidate id, raw vector) row scored with
+    * cosArr against its query.
+    */
+  private def rerankScores(qs: Map[Long, Array[Double]],
+      rows: Iterator[(Long, Long, Array[Double])]): Iterator[(Long, Long, Double)] =
+    rows.map { case (qid, cid, ce) => (qid, cid, cosArr(qs(qid), ce)) }
+
+  /** ivfpq: each code row (vec_id, cluster, codes) scored by ADC against
+    * the residual tables of the queries that probe its cell.
+    */
+  private def ivfPqScores(byCell: Map[Long, Seq[(Long, Array[Array[Double]])]],
+      excludeSelf: Boolean, rows: Iterator[(Long, Long, Array[Int])]): Iterator[(Long, Long, Double)] =
+    rows.flatMap { case (cid, cell, codes) =>
+      byCell.getOrElse(cell, Nil).iterator.filter(t => !excludeSelf || t._1 != cid)
+        .map { case (qid, tab) => (qid, cid, pqAdc(tab, codes)) }
+    }
+
+  /** The typed postings read of the ivf and rerank routes. */
+  private def postingRows(rows: DataFrame): org.apache.spark.sql.Dataset[(Long, Array[Double], Long)] = {
+    val s = rows.sparkSession
+    import s.implicits._
+    rows.select(col("c_id"), col("c_e"), col("cluster").cast("long"))
+      .as[(Long, Array[Double], Long)]
+  }
+
+  /** The typed flat code read of the pq and rerank routes. */
+  private def codeRows(rows: DataFrame): org.apache.spark.sql.Dataset[(Long, Array[Int])] = {
+    val s = rows.sparkSession
+    import s.implicits._
+    rows.select(col("vec_id"), col("codes")).as[(Long, Array[Int])]
+  }
+
+  /** The typed residual code read of the ivfpq route. */
+  private def residualRows(rows: DataFrame): org.apache.spark.sql.Dataset[(Long, Long, Array[Int])] = {
+    val s = rows.sparkSession
+    import s.implicits._
+    rows.select(col("vec_id"), col("cluster").cast("long"), col("codes"))
+      .as[(Long, Long, Array[Int])]
+  }
+
   /** The ivf route with the driver-side planning inputs supplied by the
     * caller — the warm serving path: probe planning is DRIVER-SIDE: both
-    * inputs are tiny by contract — K centroids and the broadcastable
-    * query set — so ranking cells in Scala (cosArr == graft_cosine ==
+    * inputs are tiny by contract — K centroids and the query set — so
+    * ranking cells in Scala (cosArr == graft_cosine ==
     * list_cosine_similarity, ties to smallest k_id: the exact v2 rule)
-    * replaces a join + window + checkpoint + collect chain, and a poll
-    * with cached `cents`/`qsArr` pays only the pruned postings scan. The
-    * probed cell ids — bounded by #queries × probes — become a STATIC `IN`
-    * partition filter on the postings scan, so only the probed directories
-    * are read (VectorOpsSpec pins the PartitionFilters). The queries of
-    * each probed cell reach the scan through `sc.broadcast`, and each
-    * posting row is scored in `mapPartitions` with cosArr against the
-    * queries that probe its cell — no join, so no exchange of the query
-    * side and no job to build one.
+    * replaces a join + window + checkpoint + collect chain. Each posting
+    * row of a probed cell is scored by [[ivfScores]] against the queries
+    * that probe its cell — no join, so no exchange of the query side. On
+    * the driver the probed cells' decoded rows come from the tier's
+    * [[DecodedTier]] entry; in the parallel plan the probed cell ids —
+    * bounded by #queries × probes — become a STATIC `IN` partition filter
+    * on the postings scan, so only the probed directories are read
+    * (VectorOpsSpec pins both), and the queries reach the scan through
+    * `sc.broadcast`.
     */
   private[graft] def searchIvfIndexPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cents: Array[(Long, Array[Double])],
@@ -3121,80 +3377,18 @@ object VectorOps {
     }
     val byCell: Map[Long, Array[(Long, Array[Double])]] =
       probed.groupBy(_._1).map { case (cell, qs) => cell -> qs.map(_._2).toArray }
-    val bc = s.sparkContext.broadcast((byCell, excludeSelf))
-    // the probed cell ids (bounded by #queries × probes) become a static
-    // partition filter on the postings scan = file-level pruning
-    val postingsRaw = tierRows(s, path, IvfTier)
-    val pruned = postingsRaw.filter(col("cluster").isInCollection(
-      cellLiterals(postingsRaw, probed.map(_._1).distinct)))
-    val scoredRows = aliveRows(s, path, pruned, "c_id")
-      .select(col("c_id"), col("c_e"), col("cluster").cast("long"))
-      .as[(Long, Array[Double], Long)]
-      .mapPartitions { it =>
-        val (m, exclSelf) = bc.value
-        it.flatMap { case (cid, ce, cell) =>
-          m.getOrElse(cell, Array.empty[(Long, Array[Double])]).iterator
-            .filter(q => !exclSelf || q._1 != cid)
-            .map { case (qid, qa) => (qid, cid, cosArr(qa, ce)) }
-        }
-      }.toDF("q_id", "neighbor_id", "cos")
-    topK(scoredRows, col("cos").desc, k)
-  }
-
-  /** Per-query top-k of scored (q_id, neighbor_id, score) rows in
-    * `order`, ties to the smaller neighbor_id, with each kept row's
-    * `rank` (1..k) — the ONE ranker every route ends in. A neighbor counts
-    * once: an at-least-once APPEND redelivery (t38) can leave physically
-    * duplicated posting rows until the next compaction (and the rerank
-    * route's id join multiplies them); rows are deterministic per id, so
-    * duplicated scored pairs are BIT-IDENTICAL and ADJACENT in the window
-    * order — a lag comparison inside the ranking window collapses them
-    * without the extra (q_id, neighbor_id) shuffle dropDuplicates would
-    * add (one exchange per serve query, and per 100-TB candidate set).
-    * CONTRACT this leans on: vec_id is an immutable key — a vector is
-    * never re-appended with CHANGED values (mutation = delete + new id),
-    * so equal ids always carry equal scores; out-of-contract mutated
-    * duplicates would not be adjacent and would not collapse.
-    */
-  private def topK(scored: DataFrame, order: Column, k: Int): DataFrame = {
-    val w = Window.partitionBy("q_id").orderBy(order, col("neighbor_id"))
-    postured(scored).withColumn("prev", lag("neighbor_id", 1).over(w))
-      .filter(col("prev").isNull || col("prev") =!= col("neighbor_id"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .drop("prev")
-  }
-
-  /** `scored` in the plan shape the size of its scan picks — the ONE place
-    * a search route's posture is decided. The bytes are those of the
-    * parquet files under `scored`, each scan pruned by the partition
-    * filters above it: the probed cells' files for ivf and ivfpq, the code
-    * tier for pq, the code tier plus the postings the fetch stage reads
-    * for rerank. When they fit in one
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` partition — the
-    * size AQE would coalesce the ranking window's shuffle down to anyway
-    * — coalesce(1) collapses the whole narrow chain (scan, scoring,
-    * ranking window: SinglePartition satisfies its clustering) into one
-    * task with no exchange, giving up no parallelism AQE would have kept.
-    * A larger scan keeps the parallel scan and the window's shuffle. The
-    * sizes come from the file listings the scans took when they were
-    * built: no Spark job, no second listing. SCALEBENCH's skewed serve
-    * rows measure the compact posture under a planted 50%-hot cell.
-    */
-  private def postured(scored: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeSet
-    import org.apache.spark.sql.catalyst.plans.logical.Filter
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val plan = scored.queryExecution.analyzed
-    val conditions = plan.collect { case f: Filter => f.condition }
-    val bytes = plan.collect { case l: LogicalRelation => (l.relation, l.output) }.collect {
-      case (r: HadoopFsRelation, out) =>
-        val parts = AttributeSet(out.filter(a => r.partitionSchema.fieldNames.contains(a.name)))
-        r.location.listFiles(conditions.filter(_.references.subsetOf(parts)), Nil)
-          .flatMap(_.files).map(_.getLen).sum
-    }.sum
-    val advisory = scored.sparkSession.sessionState.conf
-      .getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    if (bytes <= advisory) scored.coalesce(1) else scored
+    val cells = probed.map(_._1).distinct
+    val postings = tierRead(s, path, IvfTier, Some(cells))
+    if (onDriver(s, postings))
+      localResult(s, "cos", ranked(ivfScores(byCell, excludeSelf,
+        driverRows(s, path, postings)(postingRows)(_._1)), descending = true, k))
+    else {
+      val bc = s.sparkContext.broadcast((byCell, excludeSelf))
+      val scored = postingRows(aliveRows(s, path, cellRows(s, path, IvfTier, Some(cells)), "c_id"))
+        .mapPartitions { it => val (m, exclSelf) = bc.value; ivfScores(m, exclSelf, it) }
+        .toDF("q_id", "neighbor_id", "cos")
+      topK(scored, "cos", descending = true, k)
+    }
   }
 
   /** The `probes` cells query `qa` probes: centroids ranked by cosArr
@@ -3220,69 +3414,82 @@ object VectorOps {
 
   /** The rerank route with caller-supplied planning inputs (the cached
     * codebook + query batch): PQ codes nominate `rerankCandidates` ids
-    * per query (stage 1), raw vectors are fetched BY ID from the postings
-    * tier for exact cosine rerank (stage 2). The query vectors reach
-    * stage 2 through `sc.broadcast` and each fetched row is scored in
-    * `mapPartitions` with cosArr — the same doubles [[withNorm]] would
-    * produce, and no query-side join.
+    * per query (stage 1, [[pqScores]] ranked like the pq route), raw
+    * vectors are fetched BY ID from the postings tier for exact cosine
+    * rerank (stage 2, [[rerankScores]] — the same doubles [[withNorm]]
+    * would produce). On the driver the fetch looks the candidates up in
+    * the decoded postings; in the parallel plan it is a broadcast id join
+    * against the alive postings, with the query vectors reaching stage 2
+    * through `sc.broadcast`.
     */
   private[graft] def searchRerankPlanned(s: SparkSession, path: String,
       qsArr: Array[(Long, Array[Double])], cb: Array[Array[Double]],
       k: Int, rerankCandidates: Int = 32, excludeSelf: Boolean = true): DataFrame = {
     import s.implicits._
-    // stage 1: code-only candidate generation
-    val cand = searchPqIndexPlanned(s, path, qsArr, cb, rerankCandidates,
-      excludeSelf).select("q_id", "neighbor_id")
-    // stage 2: fetch raw vectors for candidate ids only — a broadcast
-    // id join against the alive postings, then exact cosine + per-query
-    // rank
-    val bc = s.sparkContext.broadcast(qsArr.toMap)
-    val fetched = broadcast(cand)
-      .join(aliveRows(s, path, tierRows(s, path, IvfTier), "c_id"),
-        col("neighbor_id") === col("c_id"))
-      .select(col("q_id"), col("c_id"), col("c_e"))
-      .as[(Long, Long, Array[Double])]
-      .mapPartitions { it =>
-        val qs = bc.value
-        it.map { case (qid, cid, ce) => (qid, cid, cosArr(qs(qid), ce)) }
-      }.toDF("q_id", "neighbor_id", "cos")
-    topK(fetched, col("cos").desc, k)
+    val codes = tierRead(s, path, PqTier, None)
+    val postings = tierRead(s, path, IvfTier, None)
+    if (onDriver(s, codes, postings)) {
+      val cand = ranked(pqScores(cb, qsArr, excludeSelf,
+        driverRows(s, path, codes)(codeRows)(_._1)), descending = false, rerankCandidates)
+      val byId = driverRows(s, path, postings)(postingRows)(_._1).toSeq.groupBy(_._1)
+      val fetched = cand.iterator.flatMap { case (qid, cid, _, _) =>
+        byId.getOrElse(cid, Nil).iterator.map(p => (qid, cid, p._2))
+      }
+      localResult(s, "cos", ranked(rerankScores(qsArr.toMap, fetched), descending = true, k))
+    } else {
+      val cand = topK(pqScored(s, path, qsArr, cb, excludeSelf), "adc", descending = false,
+        rerankCandidates).select("q_id", "neighbor_id")
+      val bc = s.sparkContext.broadcast(qsArr.toMap)
+      val fetched = broadcast(cand)
+        .join(aliveRows(s, path, tierRows(s, path, IvfTier), "c_id"),
+          col("neighbor_id") === col("c_id"))
+        .select(col("q_id"), col("c_id"), col("c_e"))
+        .as[(Long, Long, Array[Double])]
+        .mapPartitions(it => rerankScores(bc.value, it))
+        .toDF("q_id", "neighbor_id", "cos")
+      topK(fetched, "cos", descending = true, k)
+    }
   }
 
   /** The pq route with caller-supplied planning inputs (cached codebook +
     * query batch): the codebook (PqKs tiny rows) and query vectors build
-    * per-query lookup tables driver-side, and the corpus-side scan reads
-    * ONLY the alive stored codes — M table lookups per (query, vector),
-    * no float vectors, no shuffle before the per-query top-k; one
-    * code-scan Spark job per poll, bit-identical to the in-memory v8 path.
+    * per-query lookup tables, and [[pqScores]] scores ONLY the alive stored
+    * codes — M table lookups per (query, vector), no float vectors;
+    * bit-identical to the in-memory v8 path. On the driver the codes come
+    * from the tier's [[DecodedTier]] entry; the parallel plan is one code
+    * scan per search, with no shuffle before the per-query top-k.
     */
   private[graft] def searchPqIndexPlanned(s: SparkSession, path: String,
       qs: Array[(Long, Array[Double])], cb: Array[Array[Double]],
       k: Int, excludeSelf: Boolean = true): DataFrame = {
+    val codes = tierRead(s, path, PqTier, None)
+    if (onDriver(s, codes))
+      localResult(s, "adc", ranked(pqScores(cb, qs, excludeSelf,
+        driverRows(s, path, codes)(codeRows)(_._1)), descending = false, k))
+    else topK(pqScored(s, path, qs, cb, excludeSelf), "adc", descending = false, k)
+  }
+
+  /** The parallel pq scan: (q_id, neighbor_id, adc) of every alive code
+    * row, the codebook and queries broadcast.
+    */
+  private def pqScored(s: SparkSession, path: String, qs: Array[(Long, Array[Double])],
+      cb: Array[Array[Double]], excludeSelf: Boolean): DataFrame = {
     import s.implicits._
     val bc = s.sparkContext.broadcast((cb, qs, excludeSelf))
-    val scored = aliveCodes(s, path).as[(Long, Seq[Int])]
-      .mapPartitions { it =>
-        val (cbL, qL, exclSelf) = bc.value
-        val pqM = cbL(0).length / PqS
-        val qtab = qL.map { case (qid, qa) => (qid, pqTable(qa, cbL, pqM)) }
-        it.flatMap { case (cid, codes) =>
-          val ca = codes.toArray
-          qtab.iterator.filter(t => !exclSelf || t._1 != cid).map { case (qid, tab) =>
-            (qid, cid, pqAdc(tab, ca))
-          }
-        }
-      }.toDF("q_id", "neighbor_id", "adc")
-    topK(scored, col("adc").asc, k)
+    codeRows(aliveCodes(s, path))
+      .mapPartitions { it => val (cbL, qL, exclSelf) = bc.value; pqScores(cbL, qL, exclSelf, it) }
+      .toDF("q_id", "neighbor_id", "adc")
   }
 
   /** The ivfpq route — both scale levers at once: per query, rank cells
     * by centroid cosine (the v2 probe rule), build ONE residual lookup
-    * table per probed cell from q − centroid, turn the probed cell ids
+    * table per probed cell from q − centroid, and score the probed cells'
+    * alive codes with [[ivfPqScores]] — M table lookups per (query,
+    * vector). On the driver the codes come from the tier's
+    * [[DecodedTier]] entry; the parallel plan turns the probed cell ids
     * into a STATIC `IN` partition filter (the ivf route's file-pruning
-    * discipline), and score the pruned alive code scan with M table
-    * lookups per (query, vector). The driver-side state is K centroids +
-    * PqKs codewords + |Q| × probes tables — all tiny and broadcast.
+    * discipline). The driver-side state is K centroids + PqKs codewords +
+    * |Q| × probes tables — all tiny.
     */
   private def searchIvfPqPlanned(s: SparkSession, path: String,
       qs: Array[(Long, Array[Double])], cents: Array[(Long, Array[Double])],
@@ -3296,27 +3503,23 @@ object VectorOps {
         (qid, kid, pqTable(Array.tabulate(qa.length)(i => qa(i) - ke(i)), cb, pqM))
       }
     }
-    val codesRaw = tierRows(s, path, ResidualTier)
     val byCell: Map[Long, Seq[(Long, Array[Array[Double]])]] =
       qcell.groupBy(_._2).map { case (cell, rows) =>
         cell -> rows.map(r => (r._1, r._3))
       }
-    val bc = s.sparkContext.broadcast((byCell, excludeSelf))
-    val pruned = codesRaw.filter(col("cluster").isInCollection(
-      cellLiterals(codesRaw, qcell.map(_._2).distinct)))
-    val scored = aliveRows(s, path, pruned, "vec_id")
-      .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
-        col("codes"))
-      .as[(Long, Long, Seq[Int])]
-      .mapPartitions { it =>
-        val (m, exclSelf) = bc.value
-        it.flatMap { case (cid, cell, codes) =>
-          val ca = codes.toArray
-          m.getOrElse(cell, Nil).iterator.filter(t => !exclSelf || t._1 != cid)
-            .map { case (qid, tab) => (qid, cid, pqAdc(tab, ca)) }
-        }
-      }.toDF("q_id", "neighbor_id", "adc")
-    topK(scored, col("adc").asc, k)
+    val cells = qcell.map(_._2).distinct
+    val codes = tierRead(s, path, ResidualTier, Some(cells))
+    if (onDriver(s, codes))
+      localResult(s, "adc", ranked(ivfPqScores(byCell, excludeSelf,
+        driverRows(s, path, codes)(residualRows)(_._1)), descending = false, k))
+    else {
+      val bc = s.sparkContext.broadcast((byCell, excludeSelf))
+      val scored = residualRows(aliveRows(s, path,
+          cellRows(s, path, ResidualTier, Some(cells)), "vec_id"))
+        .mapPartitions { it => val (m, exclSelf) = bc.value; ivfPqScores(m, exclSelf, it) }
+        .toDF("q_id", "neighbor_id", "adc")
+      topK(scored, "adc", descending = false, k)
+    }
   }
 
   /** Sample, guard and persist a PQ codebook from `rows` (id, e): the

@@ -193,7 +193,7 @@ object QueryService {
     * holds its top-[[ServeHeadK]] page (bm25 desc, doc_id tie-break) as
     * ONE small file, so every poll's TakeOrdered reads k rows from one
     * file instead of re-scanning every score shard — the doc-arm twin
-    * of the vector arm's compact posture, and the part that keeps
+    * of the vector arm's driver posture, and the part that keeps
     * per-poll cost O(k) when the score table is corpus-sized.
     * The head is derived by reading `scores/` back (doubles round-trip
     * parquet exactly), so the two tiers are bit-consistent by
@@ -430,22 +430,24 @@ object QueryService {
   private[graft] def vacuumGraceMs: Long =
     math.max(30000L, 4L * longestPollMs.get)
 
-  /** THE warm-path driver cache: constructed serving plans, plus the
-    * k-independent parts of a hybrid plan ([[hybridSearch]]). A poll
-    * re-EXECUTES a cached plan (data is never cached), so the driver-side
-    * construction and analysis of an identical request is paid once. Each
-    * plan is one [[graft.core.ListingCache]] entry stamped on the pinned
-    * version directory it scans, under a variant naming everything else
-    * it depends on (arm, k, tier, cand, the lex version). A plan freezes
-    * the file listing and the tombstoned ids of that directory, and the
-    * stamp covers every one of those files, so a version flip and an
-    * append or delete by any writer inside the pinned version are served
-    * at the next poll. A miss builds through the same route planner as the
-    * facade
-    * ([[graft.operators.VectorOps.searchPinned]]), which reads the index
-    * geometry from the one geometry cache every search route shares; the
-    * results are therefore bit-identical to the facade routes, and the
-    * same oracles gate both.
+  /** THE warm-path driver cache: constructed serving frames, plus the
+    * k-independent parts of a hybrid plan ([[hybridSearch]]). Each frame
+    * is one [[graft.core.ListingCache]] entry stamped on the pinned
+    * version directory it reads, under a variant naming everything else
+    * it depends on (arm, k, tier, cand, the lex version). A vector search
+    * whose files fit one advisory partition is computed when its entry is
+    * made ([[graft.operators.VectorOps.searchPinned]] ranks it on the
+    * driver), so the entry holds its RESULT as a local relation and a
+    * warm poll reads no file and runs no job; a larger search's entry
+    * holds its parallel plan, which a poll re-executes. Either way the
+    * entry freezes the file listing and the tombstoned ids of that
+    * directory, and the stamp covers every one of those files, so a
+    * version flip and an append or delete by any writer inside the pinned
+    * version are served at the next poll. A miss builds through the same
+    * route planner as the facade, which reads the index geometry from the
+    * one geometry cache every search route shares; the results are
+    * therefore bit-identical to the facade routes, and the same oracles
+    * gate both.
     */
   private[graft] val plans = new graft.core.ListingCache[DataFrame](sessionBound = true)
 
@@ -721,13 +723,13 @@ object QueryService {
       .sortBy { case (id, bm) => (-bm, id) }
     // single partition on BOTH fusion inputs: SinglePartition satisfies
     // the join's and the fused window's clustering requirements, so the
-    // whole fusion runs exchange-free (the vec arm is one partition when
-    // its probed cells fit one advisory partition; the lex page is 20
-    // local rows)
+    // whole fusion runs exchange-free (the vec arm is `cand` rows, local
+    // when its probed cells fit one advisory partition; the lex page is
+    // 20 local rows)
     val lex = s.createDataset(lexPage.zipWithIndex
         .map { case ((id, _), i) => (id, i + 1) })
       .toDF("doc_id", "lex_rank").coalesce(1)
-    lex.join(vtop, Seq("doc_id"), "full_outer")
+    lex.join(vtop.coalesce(1), Seq("doc_id"), "full_outer")
       .withColumn("rrf",
         coalesce(lit(1.0) / (lit(60.0) + col("lex_rank").cast("double")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(60.0) + col("vec_rank").cast("double")), lit(0.0)))

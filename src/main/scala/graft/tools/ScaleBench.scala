@@ -245,15 +245,17 @@ object ScaleBench {
       "j1_composite_2key_join", "s17_bucketed_colocated_join",
       // r11 verdict #7: the serve facade under a planted hot IVF cell
       // (50% of all vectors share query 0's direction — see
-      // replicate). Every search route runs the compact single-task
-      // posture while the bytes it scans fit one
+      // replicate). Every search route scores and ranks on the driver,
+      // over decoded tier rows cached per tier directory, while the
+      // bytes it reads fit one
       // spark.sql.adaptive.advisoryPartitionSizeInBytes partition
-      // (VectorOps.postured), so until a scan outgrows it the exponent
-      // row records how that serial scan grows; because warm polls sit
-      // far below the 0.3 s jitter floor, the exponent rule alone would never gate them —
-      // the serveCeiling check below adds the absolute latency gate
-      // that actually binds (a poll must stay inside the reference
-      // dashboard's 3 s budget even at 30x with the hot cell).
+      // (VectorOps.onDriver), so until a scan outgrows it the exponent
+      // row records how that serial driver scoring grows; because warm
+      // polls sit far below the 0.3 s jitter floor, the exponent rule alone
+      // would never gate them — the serveCeiling check below adds the
+      // absolute latency gate that actually binds (a poll must stay
+      // inside the reference dashboard's 3 s budget even at 30x with the
+      // hot cell).
       "serve_vec_search", "serve_vec_search_pq",
       // r12 verdict #5: the fused route under BOTH planted hot spots —
       // its vector arm probes the 50%-hot IVF cell and its lexical arm
@@ -283,8 +285,8 @@ object ScaleBench {
     }
     // serve rows: exponents on sub-0.3 s polls measure jitter, so the
     // binding gate is ABSOLUTE — the 30x hot-cell poll must stay inside
-    // the dashboard's 3 s budget (index.html:140), single-task posture
-    // and all
+    // the dashboard's 3 s budget (index.html:140), driver posture and
+    // all
     val serveCeiling = skewRows
       .filter(r => r.name.startsWith("serve_") && r.tf > 3.0)
     val skewViolations =

@@ -11,10 +11,12 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
 /** A warm lakehouse pass launches no Spark job that does no query work:
   * table schemas come from metadata (core/Tables caches each file's
   * inferred schema per listing stamp), and MERGE checks its cardinality
-  * rule inside its own write (core/Snapshots.merge). A warm serving read
-  * runs only its own scan: the ANN routes take tombstones and query
-  * vectors from the driver, the state and demand arms read per-snapshot
-  * views, and a served root with tombstones keeps its cached plans. An
+  * rule inside its own write (core/Snapshots.merge). A warm ANN read
+  * runs no job: a search whose files fit one advisory partition ranks on
+  * the driver over cached decoded tier rows, so only an append (one load
+  * per tier read) or a delete (one tombstone load) costs a job at the
+  * next read. The state and demand arms read per-snapshot views, and a
+  * served root with tombstones keeps its cached results. An
   * output a build writes and reads back is read with the schema it was
   * written with (core/Tables.readBack), never by footer inference.
   */
@@ -107,18 +109,30 @@ class JobCountSpec extends SparkSpec {
     .filter(col("vec_id").isin(1L, 2L)).collect()
     .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("vec_id", "embedding")
 
+  private def read(tier: String): Unit =
+    Graft.annSearchVersionedVecIndex(spark, annRoot, queries, 5, tier = tier).collect(): Unit
+
   private def facade(tier: String): Int = {
-    def read() = Graft.annSearchVersionedVecIndex(spark, annRoot, queries, 5, tier = tier)
-      .collect()
-    read()
-    jobs(read())
+    read(tier)
+    jobs(read(tier))
   }
 
-  test("warm facade ANN reads on a root with tombstones take at most " +
-    "1/1/2 jobs (ivf/pq/rerank)") {
+  test("warm facade ANN reads on a root with tombstones take 0 jobs") {
     val n = Seq("ivf", "pq", "rerank").map(t => t -> facade(t)).toMap
     info(s"facade jobs $n")
-    assert(n("ivf") <= 1 && n("pq") <= 1 && n("rerank") <= 2, n.toString)
+    assert(n.values.forall(_ == 0), n.toString)
+  }
+
+  test("the first facade read after an append runs one job per tier the " +
+    "route reads, and none after it") {
+    val emb = Tables.embeddings(spark, sf)
+    for (((tier, tiers), i) <- Seq("ivf" -> 1, "pq" -> 1, "rerank" -> 2).zipWithIndex) {
+      facade(tier)
+      Graft.annAppendVersionedVecIndex(emb.filter(col("vec_id") < 2)
+        .withColumn("vec_id", col("vec_id") + 9100000L + 10L * i), annRoot)
+      assert(jobs(read(tier)) === tiers, s"$tier: the first read after the append")
+      assert(facade(tier) === 0, s"$tier: a warm read after the append")
+    }
   }
 
   test("a delete between two warm searches adds exactly one job at the " +
@@ -126,9 +140,7 @@ class JobCountSpec extends SparkSpec {
     val warm = facade("ivf")
     Graft.annDeleteFromVersionedVecIndex(spark, annRoot,
       Seq(3L, 4L).toDF("vec_id"))
-    val next = jobs(Graft.annSearchVersionedVecIndex(spark, annRoot, queries, 5,
-      tier = "ivf").collect())
-    assert(next === warm + 1)
+    assert(jobs(read("ivf")) === warm + 1)
     assert(facade("ivf") === warm)
   }
 
@@ -155,6 +167,15 @@ class JobCountSpec extends SparkSpec {
       assert(tombstoned.forall { case (arm, n) => n <= clean(arm) },
         s"after a delete $tombstoned, without tombstones $clean")
     } finally VectorOps.compactVecIndex(spark, root)
+  }
+
+  test("warm vecSearch polls (ivf/pq/rerank) run no job") {
+    val n = Seq("ivf", "pq", "rerank").map { t =>
+      def poll() = QueryService.vecSearch(spark, sf, tier = t).collect()
+      poll()
+      t -> jobs(poll())
+    }.toMap
+    assert(n.values.forall(_ == 0), n.toString)
   }
 
   test("warm busState and demandByLine polls take one job each") {

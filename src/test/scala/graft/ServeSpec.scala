@@ -367,6 +367,30 @@ class ServeSpec extends SparkSpec {
     for (_ <- 1 to 3) arms()
     val added = written().filterNot(before)
     assert(added.isEmpty, s"warm polls wrote under the run root: ${added.take(5)}")
+    // the serve workload's writes beside the polls: a BM25 refresh, a
+    // versioned append and a delete on an ANN root, then every arm again
+    import org.apache.spark.sql.functions.col
+    import SparkSpec.spark.implicits._
+    val emb = graft.core.Tables.embeddings(spark, sf)
+    val annRoot = tempDir("graft-serve-ann") + "/idx"
+    graft.api.Graft.annInitVersionedVecIndex(emb, annRoot, tiers = "both")
+    val queries = emb.filter(col("vec_id") < 2).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1))).toSeq.toDF("vec_id", "embedding")
+    def cycle(c: Int): Unit = {
+      QueryService.refreshDocIndex(spark, sf)
+      graft.api.Graft.annAppendVersionedVecIndex(emb.filter(col("vec_id") < 2)
+        .withColumn("vec_id", col("vec_id") + 9300000L + 10L * c), annRoot)
+      graft.api.Graft.annDeleteFromVersionedVecIndex(spark, annRoot,
+        Seq(9300000L + 10L * c).toDF("vec_id"))
+      arms()
+      Seq("ivf", "pq", "rerank").foreach(t =>
+        graft.api.Graft.annSearchVersionedVecIndex(spark, annRoot, queries, 5, tier = t).collect())
+    }
+    cycle(0)
+    val settled = written().toSet
+    for (c <- 1 to 3) cycle(c)
+    val grown = written().filterNot(settled)
+    assert(grown.isEmpty, s"serve writes grew the run root per cycle: ${grown.take(5)}")
   }
 
   test("a crashed first build's debris under an unpublished BM25 root does " +

@@ -30,6 +30,22 @@ class VectorOpsSpec extends SparkSpec {
   /** The current version directory of the index root `root`. */
   private def cur(root: String): String = graft.core.VersionedStore.resolve(spark, root)
 
+  /** `body` under a 1-byte advisory partition size, where every search
+    * scans more than one advisory partition and runs the parallel plan.
+    */
+  private def parallel[T](body: => T): T = {
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val saved = spark.conf.getOption(advisory)
+    spark.conf.set(advisory, "1")
+    try body finally saved.fold(spark.conf.unset(advisory))(spark.conf.set(advisory, _))
+  }
+
+  /** The physical plan of a parallel-posture search, built and planned
+    * under [[parallel]].
+    */
+  private def parallelPlan(search: => org.apache.spark.sql.DataFrame): String =
+    parallel(search.queryExecution.executedPlan.toString)
+
   /** `root` publishes exactly versions 1..n and holds no other version
     * directory and no build lease: the verbs left nothing behind.
     */
@@ -605,18 +621,26 @@ class VectorOpsSpec extends SparkSpec {
     val qs = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 10)
     val path = tempDir("graft-ivf") + "/idx"
     VectorOps.buildVecIndex(emb, path, "ivf")
-    val fromIndex = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf")
-    val got = fromIndex.collect()
+    def search() = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivf")
+    val got = search().collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val inMem = VectorOps.ivfTopK(emb, qs, k = 3, probes = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got === inMem, "index round-trip must not change a single bit")
-    // partition pruning evidence: the probed-cell IN list must land in the
+    // the driver posture: the cold search loaded exactly the probed cells
+    val cells = VectorOps.loadedCells(spark, cur(path))("postings")
+    assert(cells.size === 2 && cells.forall(_.startsWith("cluster=")),
+      s"10 co-located queries must load their 2 probed cells, got $cells")
+    assert(new java.io.File(s"${cur(path)}/postings").list()
+      .count(_.startsWith("cluster=")) === 16)
+    // the parallel plan: the probed-cell IN list must land in the
     // postings scan's PartitionFilters (the s26 convention — a filter there
     // IS what makes Spark skip the other cell directories; Dataset
     // .inputFiles can't see pruning, it lists the unfiltered FileIndex),
     // and the list must name strictly fewer cells than the 16 that exist.
-    val plan = fromIndex.queryExecution.executedPlan.toString
+    assert(parallel(search().collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet) === inMem)
+    val plan = parallelPlan(search())
     val inList = "PartitionFilters: \\[[^\\]]*cluster#\\d+ IN \\(([^)]*)\\)".r
       .findFirstMatchIn(plan)
     assert(inList.isDefined,
@@ -626,6 +650,8 @@ class VectorOpsSpec extends SparkSpec {
       s"probe must prune to a strict cell subset, got $nCells of 16")
     // all 10 queries sit in one data cluster -> they probe the SAME 2 cells
     assert(nCells === 2, s"10 co-located queries must probe 2 cells, got $nCells")
+    assert(inList.get.group(1).split(",").map(c => s"cluster=${c.trim}").toSet === cells,
+      "both postures must read the same cells")
   }
 
   test("t38 index append: any batch decomposition of the same vectors " +
@@ -921,9 +947,8 @@ class VectorOpsSpec extends SparkSpec {
       "compaction must preserve the partition-pruned codes layout")
     assert(serve() === afterDel, "compaction must not change served results")
     assert(!new java.io.File(s"${cur(path)}/tombstones").exists())
-    // the pruned serving plan survives compaction too
-    val plan = VectorOps.searchVecIndex(spark, path, qs, 3, tier = "auto")
-      .queryExecution.executedPlan.toString
+    // the pruned parallel plan survives compaction too
+    val plan = parallelPlan(VectorOps.searchVecIndex(spark, path, qs, 3, tier = "auto"))
     assert("PartitionFilters: \\[[^\\]]*cluster#\\d+ IN \\(".r
       .findFirstIn(plan).isDefined,
       s"post-compaction scan lost the probed-cell partition filter:\n$plan")
@@ -1035,7 +1060,6 @@ class VectorOpsSpec extends SparkSpec {
     val emb = graft.core.Tables.embeddings(spark, dir)
     val vid = col("vec_id")
     val qs = emb.filter(vid < 3)
-    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq.sorted
     def plan(df: org.apache.spark.sql.DataFrame): String =
@@ -1047,22 +1071,101 @@ class VectorOpsSpec extends SparkSpec {
       VectorOps.appendToVecIndex(emb.filter(vid < 20), path)
       VectorOps.deleteFromVecIndex(spark, path, emb.filter(vid === 7).select(vid))
       for (t <- routes) {
-        def search() = VectorOps.searchVecIndex(spark, path, qs, 3, tier = t)
-        val compact = search()
-        val saved = spark.conf.getOption(advisory)
-        spark.conf.set(advisory, "1")
-        val parallel =
-          try search()
-          finally saved.fold(spark.conf.unset(advisory))(spark.conf.set(advisory, _))
-        assert(plan(compact).contains("Coalesce 1"), s"$layout/$t: not compact")
-        assert(!plan(parallel).contains("Coalesce"), s"$layout/$t: not parallel")
-        assert(rows(parallel) === rows(compact), s"$layout/$t: the postures disagree")
+        def search() = VectorOps.searchPinned(spark, cur(path), qs, 3, 2, t)
+        val driver = search()
+        val (par, parPlan) = parallel { val df = search(); (df, plan(df)) }
+        assert(driver.queryExecution.analyzed
+          .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+          s"$layout/$t: not ranked on the driver")
+        assert(parPlan.contains("FileScan") && !parPlan.contains("Coalesce"),
+          s"$layout/$t: not parallel:\n$parPlan")
+        assert(driver.schema === par.schema, s"$layout/$t: the postures' schemas differ")
+        assert(rows(par) === rows(driver), s"$layout/$t: the postures disagree")
         if (layout == "ivf" || layout == "ivfpq")
-          Seq(compact, parallel).foreach(df =>
-            assert(pruning.findFirstIn(plan(df)).isDefined,
-              s"$layout/$t: the scan lost the probed-cell partition filter"))
+          assert(pruning.findFirstIn(parPlan).isDefined,
+            s"$layout/$t: the scan lost the probed-cell partition filter")
       }
     }
+  }
+
+  test("8 threads searching one root at once each get the rows of the same " +
+    "search run alone, and a search started after a write returns serves it") {
+    import java.util.concurrent.{Callable, Executors, TimeUnit}
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
+    val dir = clusteredDir()
+    val emb = graft.core.Tables.embeddings(spark, dir)
+    val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    val threads = 0 until 8
+    def route(i: Int): String = Seq("ivf", "pq", "rerank")(i % 3)
+    // thread i queries one vector of cluster i and one of cluster i + 8
+    val firstQuery = threads.map(i => 25L * i + 1)
+    val batches = threads.map(i => Seq(firstQuery(i), 25L * (i + 8) + 2)
+      .map(id => (id, vecs(id))).toDF("vec_id", "embedding"))
+    def search(root: String, i: Int): Array[(Long, Long, Double)] =
+      VectorOps.searchVecIndex(spark, root, batches(i), 5, tier = route(i)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    def build(): String = {
+      val root = tempDir("graft-concurrent") + "/idx"
+      VectorOps.buildVecIndex(emb, root, "both")
+      root
+    }
+    val alone = build()
+    val want = threads.map(i => search(alone, i).toSeq)
+    // an identical root, cold: the threads' first searches load their
+    // cells into the same entries at once
+    val shared = build()
+    val pool = Executors.newFixedThreadPool(threads.size)
+    def task[T](body: => T): Callable[T] = new Callable[T] { def call(): T = body }
+    try {
+      val together = threads.map(i => pool.submit(task((1 to 3).map(_ => search(shared, i).toSeq))))
+        .map(_.get(5, TimeUnit.MINUTES))
+      threads.foreach(i => assert(together(i) === Seq.fill(3)(want(i)),
+        s"thread $i (${route(i)}): concurrent results differ from the search run alone"))
+
+      // writes interleaved with the searches: after each write returns, the
+      // state below names what every later search must serve and must not
+      final case class Written(appended: Map[Int, Long], deleted: Set[Long])
+      val state = new AtomicReference(Written(Map.empty, Set.empty))
+      val stop = new AtomicBoolean(false)
+      val searches = threads.map(_ => new AtomicInteger())
+      val readers = threads.map(i => pool.submit(task {
+        val bad = Seq.newBuilder[String]
+        while (!stop.get) {
+          val w = state.get
+          val ids = search(shared, i).map(_._2).toSet
+          // an append is owed only if its delete did not start meanwhile
+          if (state.get eq w)
+            w.appended.get(i).filterNot(ids).foreach(c => bad += s"thread $i missed appended $c")
+          (ids & w.deleted).foreach(d => bad += s"thread $i served deleted $d")
+          searches(i).incrementAndGet()
+        }
+        bad.result()
+      }))
+      def published(w: Written): Unit = {
+        state.set(w)
+        // every thread completes a search that started after the publish
+        val base = searches.map(_.get)
+        val deadline = System.nanoTime() + TimeUnit.MINUTES.toNanos(2)
+        while (threads.exists(i => searches(i).get < base(i) + 2) &&
+            !readers.exists(_.isDone) && System.nanoTime() < deadline) Thread.sleep(10)
+      }
+      for (round <- 1 to 3) {
+        // a clone of each thread's first query: cosine 1 to it, so the ivf
+        // and rerank routes rank it first (pq ties it with its cluster)
+        val clones = threads.map(i => i -> (9000000L + 100L * round + i)).toMap
+        VectorOps.appendToVecIndex(clones.toSeq.map { case (i, c) => (c, vecs(firstQuery(i))) }
+          .toDF("vec_id", "embedding"), shared)
+        published(Written(clones.filter(c => route(c._1) != "pq"), state.get.deleted))
+        val deleted = state.get.deleted
+        state.set(Written(Map.empty, deleted))
+        VectorOps.deleteFromVecIndex(spark, shared, clones.values.toSeq.toDF("vec_id"))
+        published(Written(Map.empty, deleted ++ clones.values))
+      }
+      stop.set(true)
+      val bad = readers.flatMap(_.get(5, TimeUnit.MINUTES))
+      assert(bad.isEmpty, bad.take(10).mkString("\n"))
+      assert(searches.forall(_.get >= 12), searches.map(_.get).mkString(","))
+    } finally pool.shutdownNow(): Unit
   }
 
   /** A copy of the version directory `dir` whose data directories hold
@@ -1474,9 +1577,11 @@ class VectorOpsSpec extends SparkSpec {
     val path = tempDir("graft-ivfpq") + "/idx"
     VectorOps.buildVecIndex(emb, path, "ivfpq")
     val got = VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivfpq")
-    // the code scan must be partition-pruned to the probed cells (the
-    // v37/s26 convention: PartitionFilters, not inputFiles)
-    val plan = got.queryExecution.executedPlan.toString
+    // the driver posture loads only the probed cells' codes
+    val loaded = VectorOps.loadedCells(spark, cur(path))("codes")
+    // the parallel code scan must be partition-pruned to the probed cells
+    // (the v37/s26 convention: PartitionFilters, not inputFiles)
+    val plan = parallelPlan(VectorOps.searchVecIndex(spark, path, qs, 3, 2, tier = "ivfpq"))
     val inList = "PartitionFilters: \\[[^\\]]*cluster#\\d+ IN \\(([^)]*)\\)".r
       .findFirstMatchIn(plan)
     assert(inList.isDefined,
@@ -1485,6 +1590,8 @@ class VectorOpsSpec extends SparkSpec {
     assert(nCells > 0 && nCells < 16,
       s"probe must prune to a strict cell subset, got $nCells of 16")
     val rows = got.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(loaded === inList.get.group(1).split(",").map(c => s"cluster=${c.trim}").toSet,
+      s"a cold driver search must load exactly the probed cells, got $loaded")
     assert(rows.map(_._1).distinct.length === 10, "every query answered")
     rows.groupBy(_._1).values.foreach { perQ =>
       val adcs = perQ.map(_._3)
