@@ -331,7 +331,9 @@ object Graft {
 
   /** Hybrid retrieval: reciprocal-rank fusion (k=60) of a BM25 lexical
     * arm and an exact-cosine vector arm — top-`k` fused rows
-    * (doc_id, lex_rank, vec_rank, rrf, fused_rank).
+    * (doc_id, lex_rank, vec_rank, rrf, fused_rank). The two arms run when
+    * this is called (at most `cand` rows each reach the driver); the
+    * fused page comes back as a local relation.
     */
   def hybridRrf(docs: DataFrame, emb: DataFrame, qVec: Long = 0L,
       cand: Int = 20, k: Int = 10): DataFrame =

@@ -3686,35 +3686,55 @@ object TextOps {
     * on disjoint query classes. Returns the top-`k` fused rows
     * (doc_id, lex_rank, vec_rank, rrf, fused_rank).
     *
-    * Scale: each arm is its own already-scale-shaped operator (x31's
-    * one-scan scoring; v1's broadcast-query scan); the fusion joins two
-    * ≤`cand`-row rank lists — constant work however big the corpus.
-    * Determinism: ranks are integers with doc-id tie-breaks, and the RRF
-    * sum is a fixed two-term IEEE expression of them.
+    * The arms RUN when this is called: each is its own scale-shaped
+    * operator (x31's one-scan scoring cut by a TakeOrdered; v1's
+    * broadcast-query scan), each returns at most `cand` rows to the
+    * driver, and [[rrfFused]] fuses them there — constant work however
+    * big the corpus. Determinism: ranks are integers with id tie-breaks,
+    * and the RRF sum is a fixed two-term IEEE expression of them.
     */
   def hybridRrf(docs: DataFrame, emb: DataFrame, qVec: Long = 0L,
       cand: Int = 20, k: Int = 10): DataFrame = {
-    // top-`cand` by TakeOrderedAndProject (distributed partial top-k per
-    // partition, merged on the driver), THEN a rank window over the tiny
-    // survivor set — a bare global row_number window here would sort the
-    // whole scored corpus on one partition.
+    // TakeOrderedAndProject: per-partition top-`cand`, merged in order on
+    // the driver — never a global sort of the scored corpus
     val lex = bm25Score(docs)
       .orderBy(col("bm25").desc, col("doc_id")).limit(cand)
-      .withColumn("lex_rank",
-        row_number().over(Window.orderBy(col("bm25").desc, col("doc_id"))))
-      .select(col("doc_id"), col("lex_rank"))
-    val vtop = VectorOps
+      .select("doc_id").collect().map(_.getLong(0)).toSeq
+    val vec = VectorOps.ranked(VectorOps
       .bruteForceTopK(emb, emb.filter(col("vec_id") === qVec), cand)
-      .withColumn("vec_rank", row_number().over(
-        Window.partitionBy("q_id").orderBy(col("cos").desc, col("neighbor_id"))))
-      .select(col("neighbor_id").as("doc_id"), col("vec_rank"))
-    lex.join(vtop, Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60.0) + col("lex_rank").cast("double")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("vec_rank").cast("double")), lit(0.0)))
-      .withColumn("fused_rank",
-        row_number().over(Window.orderBy(col("rrf").desc, col("doc_id"))))
-      .filter(col("fused_rank") <= k)
+      .select("q_id", "neighbor_id", "cos").collect().iterator
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))), descending = true, cand)
+      .map(_._2)
+    rrfFused(docs.sparkSession, lex, vec, k)
+  }
+
+  /** Reciprocal-rank fusion of two ranked id lists on the driver — the
+    * one fusion behind x62 and the served hybrid arm. The rank of an id is
+    * its position in its list, from 1; its score is 1/(60 + lex rank) +
+    * 1/(60 + vec rank), an absent arm adding 0.0; rows are ordered by
+    * [[VectorOps.ranked]]'s rule (score descending in Spark's SQL double
+    * ordering, then doc_id) and the first `k` are returned as a local
+    * relation (doc_id, lex_rank, vec_rank, rrf, fused_rank), a rank of an
+    * absent arm null — the schema the full outer join this replaces had,
+    * nullability included.
+    */
+  private[graft] def rrfFused(s: SparkSession, lex: Seq[Long], vec: Seq[Long],
+      k: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    def ranks(ids: Seq[Long]): Map[Long, Int] = ids.zipWithIndex.map { case (id, i) => id -> (i + 1) }.toMap
+    val (lexRank, vecRank) = (ranks(lex), ranks(vec))
+    def term(rank: Option[Int]): Double = rank.fold(0.0)(r => 1.0 / (60.0 + r.toDouble))
+    val fused = VectorOps.ranked((lex ++ vec).distinct.iterator.map(id =>
+      (0L, id, term(lexRank.get(id)) + term(vecRank.get(id)))), descending = true, k)
+    def boxed(rank: Option[Int]): Any = rank.map(Int.box).orNull
+    s.createDataFrame(fused.map { case (_, id, rrf, rank) =>
+        Row(id, boxed(lexRank.get(id)), boxed(vecRank.get(id)), rrf, rank) }.asJava,
+      StructType(Seq(StructField("doc_id", LongType),
+        StructField("lex_rank", IntegerType), StructField("vec_rank", IntegerType),
+        StructField("rrf", DoubleType, nullable = false),
+        StructField("fused_rank", IntegerType, nullable = false))))
   }
 
   /** X62 (beyond reference): hybrid BM25+vector retrieval, fused top-10

@@ -3255,7 +3255,7 @@ object VectorOps {
     * neighbor_id; drop a row whose neighbor_id equals the previous row's;
     * keep ranks 1..k.
     */
-  private def ranked(scored: Iterator[(Long, Long, Double)], descending: Boolean,
+  private[graft] def ranked(scored: Iterator[(Long, Long, Double)], descending: Boolean,
       k: Int): Seq[(Long, Long, Double, Int)] = {
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
     val order = new Ordering[(Long, Long, Double)] {

@@ -3,7 +3,6 @@ package graft.serve
 import graft.core.{Tables, VersionedStore}
 import graft.sim.BusSim
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The webapp query surface (reference webapp/buses-dashboard: bq_service.py,
@@ -174,39 +173,19 @@ object QueryService {
   private[graft] def docIndexRootOf(s: SparkSession, d: String): String =
     serveRoot(s, "serve_bm25", d, "documents.parquet")
 
-  /** How many top rows the snapshot's `head/` tier holds — the largest
-    * page the serving routes may answer from the head alone (docSearch
-    * k=10, hybrid cand=20 both fit with headroom). A request past the
-    * head falls back to the full `scores/` tier.
-    */
-  private[graft] val ServeHeadK = 64
-
-  /** The snapshot tiers' declared schema, which [[buildDocSnapshot]]
-    * writes. Page reads pass it, so building a page runs no
-    * footer-inference job.
+  /** The snapshot's declared schema, which [[buildDocSnapshot]] writes.
+    * Page reads pass it, so building a page runs no footer-inference job.
     */
   private val DocScoreSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "doc_id BIGINT, bm25 DOUBLE")
 
-  /** BM25 snapshot layout (guide §6 — lay the store out for its
-    * readers): `scores/` holds the full (doc_id, bm25) table; `head/`
-    * holds its top-[[ServeHeadK]] page (bm25 desc, doc_id tie-break) as
-    * ONE small file, so every poll's TakeOrdered reads k rows from one
-    * file instead of re-scanning every score shard — the doc-arm twin
-    * of the vector arm's driver posture, and the part that keeps
-    * per-poll cost O(k) when the score table is corpus-sized.
-    * The head is derived by reading `scores/` back (doubles round-trip
-    * parquet exactly), so the two tiers are bit-consistent by
-    * construction; the read-back is [[graft.core.Tables.readBack]], so it
-    * infers nothing from the footers.
+  /** BM25 snapshot layout: `scores/` holds the full (doc_id, bm25) table
+    * (doubles round-trip parquet exactly). A page is read from it once
+    * per version and k ([[docSearch]] caches the answer), so the snapshot
+    * keeps no second, pre-cut tier for polls.
     */
-  private def buildDocSnapshot(docs: DataFrame, dir: String): Unit = {
-    val scores = graft.operators.TextOps.bm25Score(docs)
-    scores.write.mode("overwrite").parquet(s"$dir/scores")
-    graft.core.Tables.readBack(scores, s"$dir/scores")
-      .orderBy(col("bm25").desc, col("doc_id")).limit(ServeHeadK)
-      .write.mode("overwrite").parquet(s"$dir/head")
-  }
+  private def buildDocSnapshot(docs: DataFrame, dir: String): Unit =
+    graft.operators.TextOps.bm25Score(docs).write.mode("overwrite").parquet(s"$dir/scores")
 
   /** First materialization of the versioned BM25 store: score `docs`
     * into roots/v1 and publish the pointer (single-writer; a racing
@@ -283,17 +262,20 @@ object QueryService {
     * fixed demo query terms (see [[graft.operators.TextOps.bm25Score]] —
     * the term list is the per-request parameterization seam). Serving
     * shape at scale: scoring (one scan + broadcast df/stats joins) is
-    * MATERIALIZED once per dataset ([[bm25Root]]); every request is then
-    * a TakeOrdered page over the stored scores (per-partition heads, no
-    * global sort) — the build-once/query-many shape shared with
-    * [[vecSearch]]. The pointer is still resolved per poll (a flip must
-    * land at the next request), and the page plan is one [[plans]] entry
-    * stamped on the pinned version directory.
+    * MATERIALIZED once per dataset ([[bm25Root]]); the first request for
+    * a version and k runs one TakeOrdered page over the stored scores
+    * (per-partition heads, no global sort) — the build-once/query-many
+    * shape shared with [[vecSearch]]. The pointer is still resolved per
+    * poll (a flip must land at the next request); the page is one
+    * [[answers]] entry stamped on the pinned version directory, so a warm
+    * poll runs no job.
     */
-  def docSearch(s: SparkSession, d: String, k: Int = 10): DataFrame = {
-    val dir = bm25Root(s, d)
-    plans(s, dir, s"doc:$k")(docPage(s, dir, k))
-  }
+  def docSearch(s: SparkSession, d: String, k: Int = 10): DataFrame =
+    docAnswer(s, bm25Root(s, d), k)
+
+  /** [[docPage]]'s answer for `dir` and `k`, one [[answers]] entry. */
+  private def docAnswer(s: SparkSession, dir: String, k: Int): DataFrame =
+    answers(s, dir, s"doc:$k")(answer(docPage(s, dir, k)))
 
   /** The search endpoint as a driver-checked query: the x31 scoring SQL
     * wrapped with the identical deterministic top-10 (score-desc, doc-id
@@ -316,17 +298,14 @@ object QueryService {
   private def bm25SubsetSql(where: String): String =
     graft.operators.TextOps.bm25OracleSql(where)
 
-  /** The deterministic top-k page over a pinned snapshot directory — the
-    * exact [[docSearch]] serving shape, parameterized by version dir.
+  /** The deterministic top-k page over a pinned snapshot directory, as
+    * a lazy plan: one TakeOrdered over `scores/` (bm25 desc, doc_id
+    * tie-break) — the plan behind a [[docSearch]] answer, parameterized by
+    * version dir, that a pinned read executes whenever it likes.
     */
-  private def docPage(s: SparkSession, dir: String, k: Int): DataFrame = {
-    // any page inside the head tier is answered from the one-file head
-    // (it holds the global top-ServeHeadK by construction); larger pages
-    // fall back to the full score table
-    s.read.schema(DocScoreSchema)
-      .parquet(s"$dir/${if (k <= ServeHeadK) "head" else "scores"}")
+  private[graft] def docPage(s: SparkSession, dir: String, k: Int): DataFrame =
+    s.read.schema(DocScoreSchema).parquet(s"$dir/scores")
       .orderBy(col("bm25").desc, col("doc_id")).limit(k)
-  }
 
   /** The v47-style race gate on the DOC arm: a page RESOLVED against the
     * current BM25 snapshot, then EXECUTED after a re-materialization has
@@ -430,26 +409,30 @@ object QueryService {
   private[graft] def vacuumGraceMs: Long =
     math.max(30000L, 4L * longestPollMs.get)
 
-  /** THE warm-path driver cache: constructed serving frames, plus the
-    * k-independent parts of a hybrid plan ([[hybridSearch]]). Each frame
-    * is one [[graft.core.ListingCache]] entry stamped on the pinned
-    * version directory it reads, under a variant naming everything else
-    * it depends on (arm, k, tier, cand, the lex version). A vector search
-    * whose files fit one advisory partition is computed when its entry is
-    * made ([[graft.operators.VectorOps.searchPinned]] ranks it on the
-    * driver), so the entry holds its RESULT as a local relation and a
-    * warm poll reads no file and runs no job; a larger search's entry
-    * holds its parallel plan, which a poll re-executes. Either way the
-    * entry freezes the file listing and the tombstoned ids of that
-    * directory, and the stamp covers every one of those files, so a
-    * version flip and an append or delete by any writer inside the pinned
-    * version are served at the next poll. A miss builds through the same
-    * route planner as the facade, which reads the index geometry from the
-    * one geometry cache every search route shares; the results are
-    * therefore bit-identical to the facade routes, and the same oracles
-    * gate both.
+  /** THE warm-path driver cache: the answers of the served searches
+    * (vec, docs, hybrid) and of the hybrid arm's vector candidates. Each
+    * answer is the collected rows of its plan, held as a local relation
+    * with the plan's schema ([[answer]]), in one [[graft.core.ListingCache]]
+    * entry stamped on the pinned version directory the plan reads, under a
+    * variant naming everything else it depends on (arm, k, tier, cand,
+    * the lex version). A warm poll therefore reads no file and runs no
+    * job, whichever posture [[graft.operators.VectorOps.searchPinned]]
+    * picked for a vector search; the miss pays the plan once. The stamp
+    * covers every file of the directory, tombstones included, so a
+    * version flip and an append or delete by any writer inside the
+    * pinned version are served at the next poll. A miss builds through
+    * the same route planner as the facade, which reads the index geometry
+    * from the one geometry cache every search route shares; the results
+    * are therefore bit-identical to the facade routes, and the same
+    * oracles gate both.
     */
-  private[graft] val plans = new graft.core.ListingCache[DataFrame](sessionBound = true)
+  private[graft] val answers = new graft.core.ListingCache[DataFrame](sessionBound = true)
+
+  /** `plan`'s rows, collected, as a local relation with its schema. */
+  private def answer(plan: DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    plan.sparkSession.createDataFrame(plan.collect().toSeq.asJava, plan.schema)
+  }
 
   /** Vector-search endpoint: top-k neighbors of the demo query vectors
     * (vec_id < 5 — the per-request parameterization seam), served from
@@ -464,9 +447,9 @@ object QueryService {
   def vecSearch(s: SparkSession, d: String, k: Int = 3,
       tier: String = "ivf"): DataFrame = {
     val path = vecIndexRoot(s, d)
-    plans(s, path, s"vec:$k:$tier")(graft.operators.VectorOps.searchPinned(s, path,
+    answers(s, path, s"vec:$k:$tier")(answer(graft.operators.VectorOps.searchPinned(s, path,
       graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 5), k,
-      probes = 2, tier = tier).drop("rank"))
+      probes = 2, tier = tier).drop("rank")))
   }
 
   /** Recall@3 of every serving route against the exact baseline — the
@@ -667,75 +650,51 @@ object QueryService {
            |FROM bf LEFT JOIN rr r ON r.q_id = bf.q_id AND r.neighbor_id = bf.neighbor_id""".stripMargin))
 
   /** Hybrid search endpoint — the fusion the text and vector arms exist
-    * for (x62's RRF shape, served): the lexical arm is the BM25 top-`cand`
-    * (TakeOrdered page, never a global sort), the vector arm is the
-    * PERSISTED index's "ivf" route for the demo query vector (doc/vec id
-    * spaces are aligned), and reciprocal-rank fusion (1/(60+rank), the
-    * Cormack et al. constant) merges them. Integer ranks → the RRF
-    * arithmetic is cross-engine exact.
+    * for (x62's RRF, served): the lexical arm is the docs arm's own
+    * top-`cand` answer ([[docSearch]] with k = `cand`), the vector arm is
+    * the PERSISTED index's "ivf" route for the demo query vector (doc/vec
+    * id spaces are aligned), and [[graft.operators.TextOps.rrfFused]]
+    * (1/(60+rank), the Cormack et al. constant) merges them on the driver.
+    * The fused page is one [[answers]] entry, so a warm poll runs no job.
+    * Integer ranks → the RRF arithmetic is cross-engine exact.
     */
   def hybridSearch(s: SparkSession, d: String, k: Int = 10,
       cand: Int = 20): DataFrame = {
     val path = vecIndexRoot(s, d)
-    // every entry is stamped on the vector version directory; the BM25
-    // version directory is immutable once published, so naming it in the
-    // variant re-keys a documents-only re-materialization (new lex
+    // every hybrid entry is stamped on the vector version directory; the
+    // BM25 version directory is immutable once published, so naming it in
+    // the variant re-keys a documents-only re-materialization (new lex
     // version, same embeddings) instead of serving the stale lexical arm
     val lexDir = bm25Root(s, d)
-    // a plan for a new k cuts the cached fused ranking of its version
-    // pair, and a new lex version fuses its page with the cached vector
-    // arm, so neither collects anything the cached plans already hold
-    plans(s, path, s"hybrid:$k:$cand:$lexDir")(
-      plans(s, path, s"hybrid-fused:$cand:$lexDir")(fusedRanking(s, lexDir, cand,
-        plans(s, path, s"hybrid-vec:$cand")(vectorArm(s, d, path, cand))))
-        .filter(col("fused_rank") <= k))
+    answers(s, path, s"hybrid:$k:$cand:$lexDir")(fused(docAnswer(s, lexDir, cand),
+      answers(s, path, s"hybrid-vec:$cand")(answer(vectorArm(s, d, path, cand))), k))
   }
 
-  private[graft] def hybridSearchPlan(s: SparkSession, d: String, path: String,
+  /** The hybrid page over the given version directories, built from
+    * scratch when called: both arms run and the fused rows come back as a
+    * local relation. No [[answers]] entry is read or made.
+    */
+  private[graft] def hybridPage(s: SparkSession, d: String, path: String,
       lexDir: String, k: Int, cand: Int): DataFrame =
-    fusedRanking(s, lexDir, cand, vectorArm(s, d, path, cand))
-      .filter(col("fused_rank") <= k)
+    fused(docPage(s, lexDir, cand), vectorArm(s, d, path, cand), k)
 
-  /** (doc_id, vec_rank) of the demo query vector's top-`cand` neighbors
-    * on the persisted index's ivf route.
+  /** The demo query vector's top-`cand` neighbors on the persisted index's
+    * ivf route, with their ranks.
     */
   private def vectorArm(s: SparkSession, d: String, path: String,
       cand: Int): DataFrame =
     graft.operators.VectorOps.searchPinned(s, path,
-        graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 1), k = cand,
-        probes = 2, tier = "ivf")
-      .select(col("neighbor_id").as("doc_id"), col("rank").as("vec_rank"))
+      graft.core.Tables.embeddings(s, d).filter(col("vec_id") < 1), k = cand,
+      probes = 2, tier = "ivf")
 
-  /** Every doc of the lexical top-`cand` and the vector arm `vtop`, with
-    * both ranks, the RRF score and the fused rank.
+  /** The top-`k` RRF page of a lexical page (doc_id first, in page order)
+    * and a vector arm (neighbor_id, rank), fused on the driver.
     */
-  private def fusedRanking(s: SparkSession, lexDir: String, cand: Int,
-      vtop: DataFrame): DataFrame = {
-    import s.implicits._
-    // the lexical top page is collected once per plan, a TakeOrdered over
-    // the PINNED immutable BM25 snapshot version: sorted (bm25 desc,
-    // doc_id) driver-side — the identical total order the window rank
-    // would assign — and re-entered as a local relation, so a warm poll
-    // runs no lex scan
-    val lexPage = docPage(s, lexDir, cand)
-      .select("doc_id", "bm25").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      .sortBy { case (id, bm) => (-bm, id) }
-    // single partition on BOTH fusion inputs: SinglePartition satisfies
-    // the join's and the fused window's clustering requirements, so the
-    // whole fusion runs exchange-free (the vec arm is `cand` rows, local
-    // when its probed cells fit one advisory partition; the lex page is
-    // 20 local rows)
-    val lex = s.createDataset(lexPage.zipWithIndex
-        .map { case ((id, _), i) => (id, i + 1) })
-      .toDF("doc_id", "lex_rank").coalesce(1)
-    lex.join(vtop.coalesce(1), Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60.0) + col("lex_rank").cast("double")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("vec_rank").cast("double")), lit(0.0)))
-      .withColumn("fused_rank",
-        row_number().over(Window.orderBy(col("rrf").desc, col("doc_id"))))
-  }
+  private def fused(lexPage: DataFrame, vtop: DataFrame, k: Int): DataFrame =
+    graft.operators.TextOps.rrfFused(lexPage.sparkSession,
+      lexPage.collect().map(_.getLong(0)).toSeq,
+      vtop.select("neighbor_id", "rank").collect()
+        .map(r => (r.getInt(1), r.getLong(0))).sortBy(_._1).map(_._2).toSeq, k)
 
   /** The hybrid endpoint as a driver-checked query: x62's lexical arm and
     * RRF arithmetic, with the vector arm replayed as the probed-cell IVF
@@ -797,8 +756,8 @@ object QueryService {
            |FROM f QUALIFY fused_rank <= 10""".stripMargin))
 
   /** The HYBRID endpoint across a lex re-materialization: the fused page
-    * built after the flip reads the fully-new lexical arm (the plan-cache
-    * key folds the pinned lex version directory, so a flip re-keys
+    * built after the flip reads the fully-new lexical arm (the answer's
+    * cache key folds the pinned lex version directory, so a flip re-keys
     * instead of serving the stale arm) — bit-equal to serving against a
     * fresh full-corpus materialization, so [[serveHybridSearch]]'s own
     * oracle gates it verbatim.
@@ -809,7 +768,7 @@ object QueryService {
       val root = graft.core.Scratch.run("sdoc_remat")
       stagedDocVersion(s, d, root, "sub90", first = true)
       stagedDocVersion(s, d, root, "full", first = false)
-      hybridSearchPlan(s, d, vecIndexRoot(s, d),
+      hybridPage(s, d, vecIndexRoot(s, d),
         VersionedStore.resolve(s, root), 10, 20)
     },
     serveHybridSearch.oracle)

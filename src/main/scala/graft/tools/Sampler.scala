@@ -3,6 +3,7 @@ package graft.tools
 import graft.core.QueryMetrics
 import graft.serve.QueryService
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 
 /** The one timing path of graft's tools: Bench, OptProbe and ScaleBench
   * take their samples here, and the serving poll loop and its
@@ -51,9 +52,18 @@ object Sampler {
   }
 
   /** Execute `df` in full without collecting it (count() would let
-    * Catalyst collapse scan-only plans to metadata reads).
+    * Catalyst collapse scan-only plans to metadata reads). A frame that
+    * executes as a LocalTableScanExec — a local relation such as a served
+    * answer, or a projection of one such as a facade search that drops
+    * `rank`, which the optimizer folds into the relation — is collected
+    * instead, as a serving poll reads it: the noop sink would parallelize
+    * its rows into a job the poll never runs. The test reads the analyzed
+    * plan, so no other frame is planned twice.
     */
-  def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+  def noop(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case _: LocalRelation | Project(_, _: LocalRelation) => df.collect(): Unit
+    case _ => df.write.format("noop").mode("overwrite").save()
+  }
 
   /** The four warm serving arms: the materialized ride snapshot, the
     * persisted vector index, the BM25 page and the fused hybrid route.
@@ -71,7 +81,7 @@ object Sampler {
   final case class Polled(samples: Samples, counts: QueryMetrics.Counts)
 
   /** The poll loop. One untimed call seeds and warms the arm (snapshot,
-    * index, plan caches); then `n` sequential polls, each timed around
+    * index, answer caches); then `n` sequential polls, each timed around
     * building and executing its frame, with no cache clearing — the warm
     * path is what is under test. Each poll's duration feeds the serving
     * layer's vacuum grace window ([[QueryService.notePollMillis]]).

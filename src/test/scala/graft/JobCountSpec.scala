@@ -64,13 +64,14 @@ class JobCountSpec extends SparkSpec {
     assert(jobs(build("t13_stream_table_mirror")) === 1)
   }
 
-  test("a BM25 snapshot build reads its written scores back without a " +
-    "schema-inference job") {
+  test("a BM25 snapshot build runs only its scoring and its scores/ write: " +
+    "no read-back, no schema-inference job") {
     val docs = Tables.documents(spark, sf)
     val n = jobs(QueryService.initVersionedDocIndex(docs, tempDir("jobs-bm25") + "/idx"))
     info(s"initVersionedDocIndex ran $n jobs")
-    // a schema-less read-back of scores/ adds one footer-inference job
-    assert(n === 9)
+    // the snapshot is scores/ alone; a page tier cut from a read-back of
+    // it added one job, and a schema-less read-back one more
+    assert(n === 8)
   }
 
   test("a table file rewritten in place with a changed column type loads " +
@@ -169,13 +170,25 @@ class JobCountSpec extends SparkSpec {
     } finally VectorOps.compactVecIndex(spark, root)
   }
 
-  test("warm vecSearch polls (ivf/pq/rerank) run no job") {
-    val n = Seq("ivf", "pq", "rerank").map { t =>
-      def poll() = QueryService.vecSearch(spark, sf, tier = t).collect()
-      poll()
-      t -> jobs(poll())
-    }.toMap
+  test("warm vecSearch (ivf/pq/rerank), docSearch (k 5/10/20) and " +
+    "hybridSearch (k 5/10) polls run no job") {
+    val polls: Seq[(String, () => Any)] =
+      Seq("ivf", "pq", "rerank").map(t =>
+        s"vec $t" -> (() => QueryService.vecSearch(spark, sf, tier = t).collect())) ++
+        Seq(5, 10, 20).map(k => s"docs $k" -> (() => QueryService.docSearch(spark, sf, k).collect())) ++
+        Seq(5, 10).map(k => s"hybrid $k" -> (() => QueryService.hybridSearch(spark, sf, k).collect()))
+    val n = polls.map { case (arm, poll) => poll(); arm -> jobs(poll()) }.toMap
+    info(s"warm poll jobs $n")
     assert(n.values.forall(_ == 0), n.toString)
+  }
+
+  test("Sampler.noop collects a served answer without a job and runs any " +
+    "other frame") {
+    val answer = QueryService.docSearch(spark, sf)
+    assert(jobs(graft.tools.Sampler.noop(answer)) === 0)
+    // a projection of a local relation, as a facade search dropping `rank`
+    assert(jobs(graft.tools.Sampler.noop(answer.drop("bm25"))) === 0)
+    assert(jobs(graft.tools.Sampler.noop(spark.range(8).toDF("x"))) >= 1)
   }
 
   test("warm busState and demandByLine polls take one job each") {

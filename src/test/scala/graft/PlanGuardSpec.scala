@@ -172,9 +172,6 @@ class PlanGuardSpec extends SparkSpec {
     // non-equi join; the greedy stages then broadcast per-query selection
     // rows (≤ 1 row per query) — same contract as v1/v15
     "v30_mmr_diversify",
-    // hybrid RRF's vector arm is one v1-shape bruteForceTopK call with a
-    // ONE-row query side (`vec_id = 0`) — same contract as v1
-    "x62_hybrid_rrf",
     // JL recall: ground-truth arm is v1-shape; the projected arm
     // broadcasts the PROJECTED query side (32 longs per query vector)
     // under the same non-equi join — same contract as v1/v21

@@ -109,12 +109,10 @@ class ServeSpec extends SparkSpec {
       assert(ids(QueryService.vecSearch(spark, sf, tier = t)) === ids(viaFacade),
         s"cached $t route diverged from the facade route")
     }
-    // warm polls: the planning reads (centroids/codebook/query batch/lex
-    // page) are cache hits, so the only jobs left are the route's own
-    // data-scan action (AQE splits it into broadcast + shuffle + result
-    // jobs — intrinsic to the plan, not per-poll planning reads). Gate
-    // the contrast against the uncached facade, which pays the planning
-    // collects every call.
+    // warm polls: every served search entry holds its answer as a local
+    // relation, so a poll reads no file and runs no job. Gate the contrast
+    // against the uncached facade, which pays the query batch's collect
+    // every call.
     val vecJobs = countJobs(QueryService.vecSearch(spark, sf).collect())
     val facadeJobs = countJobs(graft.operators.VectorOps.searchVecIndex(
       spark, QueryService.serveRootOf(spark, sf), qs, 3, 2, tier = "ivf")
@@ -122,12 +120,11 @@ class ServeSpec extends SparkSpec {
     System.err.println(s"[serve] warm ivf poll jobs=$vecJobs facade=$facadeJobs")
     assert(vecJobs < facadeJobs,
       s"cached poll ($vecJobs jobs) must beat the uncached facade ($facadeJobs)")
-    assert(vecJobs <= 2, s"warm ivf poll submitted $vecJobs jobs " +
-      "(compact posture = one narrow action)")
+    assert(vecJobs === 0, s"warm ivf poll submitted $vecJobs jobs")
     val pqJobs = countJobs(QueryService.vecSearch(spark, sf, tier = "pq").collect())
-    assert(pqJobs <= 2, s"warm pq poll submitted $pqJobs jobs")
+    assert(pqJobs === 0, s"warm pq poll submitted $pqJobs jobs")
     val hybJobs = countJobs(QueryService.hybridSearch(spark, sf).collect())
-    assert(hybJobs <= 4, s"warm hybrid poll submitted $hybJobs jobs")
+    assert(hybJobs === 0, s"warm hybrid poll submitted $hybJobs jobs")
   }
 
   test("versioned serving index: polls resolve the manifest pointer, a " +
@@ -166,28 +163,30 @@ class ServeSpec extends SparkSpec {
     QueryService.initVersionedDocIndex(docs.filter(col("doc_id") % 10 =!= 0), root)
     val v1 = graft.core.VersionedStore.resolve(spark, root)
     assert(v1.endsWith("v00000001"))
-    // the in-flight poller: hybrid plan constructed against the pinned v1
-    val pinned = QueryService.hybridSearchPlan(spark, sf,
-      QueryService.vecIndexRoot(spark, sf), v1, 10, 20)
-    val before = pinned.collect().map(_.toString).toSeq
-    // re-materialization flips to v2 (full corpus) under the pinned page
+    def hybridOn(lexDir: String): Seq[String] = QueryService.hybridPage(spark, sf,
+      QueryService.vecIndexRoot(spark, sf), lexDir, 10, 20).collect().map(_.toString).toSeq
+    val before = hybridOn(v1)
+    // the in-flight poller resolved the pointer to v1; its lex page is a
+    // lazy plan that executes only after the flip below
+    val lexPinned = QueryService.docPage(spark, v1, 20)
+    val lexBefore = lexPinned.collect().map(_.toString).toSeq
+    // re-materialization flips to v2 (full corpus) under the poller
     val v2 = QueryService.rematerializeDocIndex(spark, root, docs)
     assert(v2.endsWith("v00000002"))
-    assert(pinned.collect().map(_.toString).toSeq === before,
+    assert(lexPinned.collect().map(_.toString).toSeq === lexBefore,
+      "a lex page planned on v1 and executed after the flip must serve v1")
+    assert(QueryService.docPage(spark, v2, 20).collect().map(_.toString).toSeq
+      !== lexBefore, "subset vs full-corpus lex pages must rank differently")
+    // the hybrid page runs its arms when built: one built on the resolved
+    // v1 after the flip still fuses the old lex arm
+    assert(hybridOn(v1) === before,
       "a hybrid page pinned to v1 must keep serving the old lex arm")
     // fresh resolution reads the new arm — equal to a from-scratch
     // full-corpus materialization, different from the subset page
-    val fresh = QueryService.hybridSearchPlan(spark, sf,
-      QueryService.vecIndexRoot(spark, sf),
-      graft.core.VersionedStore.resolve(spark, root), 10, 20)
-      .collect().map(_.toString).toSeq
+    val fresh = hybridOn(graft.core.VersionedStore.resolve(spark, root))
     val scratch = tempDir("graft-sdoc-fresh") + "/bm25"
     QueryService.initVersionedDocIndex(docs, scratch)
-    val expect = QueryService.hybridSearchPlan(spark, sf,
-      QueryService.vecIndexRoot(spark, sf),
-      graft.core.VersionedStore.resolve(spark, scratch), 10, 20)
-      .collect().map(_.toString).toSeq
-    assert(fresh === expect)
+    assert(fresh === hybridOn(graft.core.VersionedStore.resolve(spark, scratch)))
     assert(fresh !== before,
       "subset vs full-corpus lex arms must rank differently")
     // vacuum past the grace window reclaims v1 only
@@ -203,19 +202,19 @@ class ServeSpec extends SparkSpec {
     def rows(): Set[String] =
       QueryService.vecSearch(spark, sf).collect().map(_.toString).toSet
     // the hybrid arm reads the same vector root; each page is checked
-    // against a plan built from scratch over the same pinned versions
+    // against a page built from scratch over the same pinned versions
     def page(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq.sorted
     def hybrid(): Seq[String] = page(QueryService.hybridSearch(spark, sf))
-    def freshHybrid(): Seq[String] = page(QueryService.hybridSearchPlan(spark, sf,
+    def freshHybrid(): Seq[String] = page(QueryService.hybridPage(spark, sf,
       QueryService.vecIndexRoot(spark, sf),
       graft.core.VersionedStore.resolve(spark, QueryService.docIndexRootOf(spark, sf)), 10, 20))
-    val baseline = rows() // warms relation + plan caches
+    val baseline = rows() // warms relation + answer caches
     val hybBaseline = hybrid()
     // append clones of query 0's vector under fresh ids INTO the current
     // version directory — the append changes the version's listing, so the
-    // cached plan's stamp no longer matches; a plan kept past it would
-    // serve its construction-time file listing and never surface them
+    // cached answer's stamp no longer matches; an answer kept past it
+    // would serve its construction-time rows and never surface them
     val clones = graft.core.Tables.embeddings(spark, sf)
       .filter(col("vec_id") === 0)
       .select((col("vec_id") + lit(9000000L)).as("vec_id"), col("embedding"))
@@ -225,7 +224,7 @@ class ServeSpec extends SparkSpec {
       s"a warm poll after an append into the current version must serve the appended row")
     val hybAppended = hybrid()
     assert(hybAppended === freshHybrid(),
-      "a hybrid poll after an append must equal a freshly built plan")
+      "a hybrid poll after an append must equal a freshly built page")
     assert(hybAppended !== hybBaseline,
       "the appended clone of the hybrid query vector must move the vector arm")
     // delete them again: the tombstone contract (gone at the NEXT query)
@@ -276,12 +275,12 @@ class ServeSpec extends SparkSpec {
     assert(stamp.exists(_.exists(_._1.startsWith("postings/cluster="))),
       s"the stamp of $dir must list the files inside its tiers: $stamp")
     assert(ListingCache.listingOf(spark, uri) === stamp)
-    val plan = QueryService.vecSearch(spark, sf)
-    assert(QueryService.vecSearch(spark, sf) eq plan, "a warm poll must hit")
-    assert(QueryService.plans(spark, uri, "vec:3:ivf")(
-      fail("the served plan must hit when its version is named by a file: URI")) eq plan)
-    assert(QueryService.plans(spark, dir, "vec:3:ivf")(
-      fail("the served plan must hit when its version is named by its path")) eq plan)
+    val ans = QueryService.vecSearch(spark, sf)
+    assert(QueryService.vecSearch(spark, sf) eq ans, "a warm poll must hit")
+    assert(QueryService.answers(spark, uri, "vec:3:ivf")(
+      fail("the served answer must hit when its version is named by a file: URI")) eq ans)
+    assert(QueryService.answers(spark, dir, "vec:3:ivf")(
+      fail("the served answer must hit when its version is named by its path")) eq ans)
     // a file, and a directory without subdirectories, list as one
     // filesystem call over their own entries would: bare names, so every
     // datasetIdent digest and serving-root name derived from them stays put
@@ -311,7 +310,7 @@ class ServeSpec extends SparkSpec {
       QueryService.vecSearch(spark, sf).collect().map(_.toString).toSet
     def hybrid(): Seq[String] =
       QueryService.hybridSearch(spark, sf).collect().map(_.toString).toSeq.sorted
-    val (baseline, hybBaseline) = (rows(), hybrid()) // warm plans
+    val (baseline, hybBaseline) = (rows(), hybrid()) // warm answers
     val dir = QueryService.vecIndexRoot(spark, sf)
     // a writer that knows only the parquet layout: query 0's posting row
     // again under a fresh id, appended into its cluster's partition
@@ -327,7 +326,7 @@ class ServeSpec extends SparkSpec {
       val hyb = hybrid()
       assert(hyb !== hybBaseline,
         "the next hybridSearch must fuse the appended row into its vector arm")
-      assert(hyb === QueryService.hybridSearchPlan(spark, sf, dir,
+      assert(hyb === QueryService.hybridPage(spark, sf, dir,
         graft.core.VersionedStore.resolve(spark, QueryService.docIndexRootOf(spark, sf)), 10, 20)
         .collect().map(_.toString).toSeq.sorted)
     } finally {
@@ -405,7 +404,7 @@ class ServeSpec extends SparkSpec {
     val dir = QueryService.stagedDocVersion(spark, sf, root, "full", first = true)
     assert(dir === graft.core.VersionedStore.resolve(spark, root))
     assert(!new java.io.File(debris, "part-0.parquet").exists())
-    val page = spark.read.parquet(s"$dir/head")
+    val page = spark.read.parquet(s"$dir/scores")
       .orderBy(col("bm25").desc, col("doc_id")).limit(10).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[Double]("bm25")))
     val oracle = graft.operators.TextOps.x31.build(spark, sf).collect()
@@ -419,22 +418,22 @@ class ServeSpec extends SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq
     val root = QueryService.docIndexRootOf(spark, sf)
-    val docPlan = QueryService.docSearch(spark, sf) // warms the plan cache
-    val hybPlan = QueryService.hybridSearch(spark, sf)
-    assert(QueryService.docSearch(spark, sf) eq docPlan, "the doc plan must be cached")
-    val (docBefore, hybBefore) = (rows(docPlan), rows(hybPlan))
+    val docAns = QueryService.docSearch(spark, sf) // warms the answer cache
+    val hybAns = QueryService.hybridSearch(spark, sf)
+    assert(QueryService.docSearch(spark, sf) eq docAns, "the doc answer must be cached")
+    val (docBefore, hybBefore) = (rows(docAns), rows(hybAns))
     val v = graft.core.VersionedStore.currentVersion(spark, root).get
     val dir = QueryService.refreshDocIndex(spark, sf)
     assert(graft.core.VersionedStore.currentVersion(spark, root) === Some(v + 1),
       "the refresh must publish a successor version")
     assert(dir === graft.core.VersionedStore.resolve(spark, root))
-    // the cached plans were keyed by the old version directory
+    // the cached answers were keyed by the old version directory
     val (docAfter, hybAfter) =
       (QueryService.docSearch(spark, sf), QueryService.hybridSearch(spark, sf))
-    assert(!(docAfter eq docPlan) && !(hybAfter eq hybPlan),
-      "plans cached before the refresh must re-key")
-    assert(docAfter.inputFiles.nonEmpty && docAfter.inputFiles.forall(_.contains(dir)),
-      s"the doc page must read the new version $dir")
+    assert(!(docAfter eq docAns) && !(hybAfter eq hybAns),
+      "answers cached before the refresh must re-key")
+    assert(QueryService.answers(spark, dir, "doc:10")(
+      fail(s"the doc page must be the answer stamped on the new version $dir")) eq docAfter)
     // serve_doc_search's page: the x31 ranking's head
     val oracleDoc = graft.operators.TextOps.x31.build(spark, sf).collect()
       .sortBy(r => (-r.getAs[Double]("bm25"), r.getAs[Long]("doc_id")))
@@ -446,7 +445,7 @@ class ServeSpec extends SparkSpec {
     // page as a from-scratch materialization of it
     val scratch = tempDir("graft-sdoc-refresh") + "/bm25"
     QueryService.initVersionedDocIndex(graft.core.Tables.documents(spark, sf), scratch)
-    assert(rows(hybAfter) === rows(QueryService.hybridSearchPlan(spark, sf,
+    assert(rows(hybAfter) === rows(QueryService.hybridPage(spark, sf,
       QueryService.vecIndexRoot(spark, sf),
       graft.core.VersionedStore.resolve(spark, scratch), 10, 20)))
     assert(rows(hybAfter) === hybBefore)
